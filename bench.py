@@ -29,8 +29,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     t_start = time.time()
-    from steam_data_pipeline_spark.operators.caching import release_spines
-    from steam_data_pipeline_spark.plans.registry import QUERIES
+    from steam_data_pipeline_spark.plans.registry import QUERIES, run_query
     from steam_data_pipeline_spark.session import get_spark
 
     spark = get_spark("steam-data-pipeline-bench")
@@ -364,10 +363,9 @@ def main() -> None:
     # absolute floor well above the heaviest genuine query) is re-run
     # once; both numbers are reported (stall_reruns) and the MIN is
     # recorded — a stall is additive noise, so the faster run is the
-    # honest plan cost. Disable with SPARK_GRAFT_STALL_GUARD=0.
+    # honest plan cost.
     import statistics
 
-    stall_guard = os.environ.get("SPARK_GRAFT_STALL_GUARD", "1") != "0"
     stall_reruns: dict[str, dict[str, float]] = {}
 
     timings: dict[str, float] = {}
@@ -381,62 +379,27 @@ def main() -> None:
     # the code.
     canary_timeline: list[float] = []
 
-    def _run_once(q) -> float:
-        t0 = time.time()
-        force(q.spark(spark, sf_dir))
-        return time.time() - t0
+    def _run_once(name: str):
+        run = run_query(spark, name, sf_dir, force)
+        return run.build_s + run.exec_s, run.error
 
-    # Solo-adjudication mode: SPARK_GRAFT_ONLY=q1,q2 restricts the sweep
-    # to the named queries and SPARK_GRAFT_REPEAT=N records the MIN of N
-    # back-to-back runs per query (a host stall is additive noise, so
-    # the fastest run is the honest plan cost — same rationale as the
-    # stall guard). The per-SF detail artifact is NOT written in this
-    # mode (a filtered map must never clobber the full-sweep detail).
-    only_env = os.environ.get("SPARK_GRAFT_ONLY", "").strip()
-    only = {s.strip() for s in only_env.split(",") if s.strip()}
-    repeat = max(1, int(os.environ.get("SPARK_GRAFT_REPEAT", "1")))
-    run_items = [
-        (name, q) for name, q in QUERIES.items() if not only or name in only
-    ]
-    if only:
-        missing = only - {name for name, _ in run_items}
-        if missing:
-            print(f"SPARK_GRAFT_ONLY: unknown queries {sorted(missing)}",
-                  file=sys.stderr)
-            sys.exit(2)
-
-    for q_idx, (name, q) in enumerate(run_items):
+    for q_idx, name in enumerate(QUERIES):
         if q_idx and q_idx % 25 == 0:
             canary_timeline.append(round(_canary_once(), 3))
-        t0 = time.time()
-        try:
-            t = _run_once(q)
-            if repeat > 1:
-                for _ in range(repeat - 1):
-                    spark.catalog.clearCache()
-                    release_spines()
-                    t = min(t, _run_once(q))
-            trailing = list(timings.values())[-30:]
-            if (
-                stall_guard
-                and len(trailing) >= 10
-                and t > max(3 * statistics.median(trailing), 10.0)
-            ):
-                spark.catalog.clearCache()
-                t2 = _run_once(q)
-                stall_reruns[name] = {"first": round(t, 3), "rerun": round(t2, 3)}
+        t, err = _run_once(name)
+        trailing = list(timings.values())[-30:]
+        if (
+            err is None
+            and len(trailing) >= 10
+            and t > max(3 * statistics.median(trailing), 10.0)
+        ):
+            t2, err = _run_once(name)
+            stall_reruns[name] = {"first": round(t, 3), "rerun": round(t2, 3)}
+            if err is None:
                 t = min(t, t2)
-            timings[name] = round(t, 3)
-        except Exception as e:  # noqa: BLE001 - a bench must finish
-            failures[name] = f"{type(e).__name__}: {e}"
-            timings[name] = round(time.time() - t0, 3)
-        # Queries that train models / checkpoint leave cached blocks
-        # behind; drop them so later timings aren't GC-noise of earlier
-        # queries (the cleanup cost is excluded from every timing).
-        # release_spines() additionally empties the registered-spine
-        # list so its strong references don't pin the JVM-side plans.
-        release_spines()
-        spark.catalog.clearCache()
+        if err is not None:
+            failures[name] = f"{type(err).__name__}: {err}"
+        timings[name] = round(t, 3)
 
     # Second pass for queries whose registered form embeds an exact-
     # truth verification leg: time the operator leg alone so the JSON
@@ -447,8 +410,6 @@ def main() -> None:
 
     operator_sec: dict[str, float] = {}
     for name, fn in OPERATOR_ONLY.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             force(fn(spark, sf_dir))
@@ -504,10 +465,6 @@ def main() -> None:
             "warmed": warmed,
         }
     )
-    if only:
-        out["only"] = sorted(only)
-    if repeat > 1:
-        out["repeat"] = repeat
     print(json.dumps(out))
     # Committed per-query artifact: the driver archives only a stdout TAIL of
     # this run, which loses most of the per-query dict — writing the full map
@@ -516,12 +473,8 @@ def main() -> None:
     # item 8): BENCH_DETAIL.json stays the sf0.1 canonical artifact the
     # driver and judge diff; any other SF writes its own suffixed file, so
     # an sf0.01 run no longer clobbers the sf0.1 detail and the committed
-    # pair gives a 2-point per-query scaling curve. Filtered
-    # (SPARK_GRAFT_ONLY) runs never write it: a partial map must not
-    # clobber a full-sweep detail.
+    # pair gives a 2-point per-query scaling curve.
     try:
-        if only:
-            raise LookupError("filtered run")
         if sf == 0.1:
             base = "BENCH_DETAIL.json"
         elif sf is not None:

@@ -223,28 +223,27 @@ def run_one(
     sf_dir: str,
     name: str,
 ) -> DiffResult:
-    from steam_data_pipeline_spark.plans.registry import QUERIES
+    """Run one registered query and diff it against its oracle; an
+    exception becomes a failed result instead of aborting a sweep."""
+    from steam_data_pipeline_spark.plans.registry import QUERIES, run_query
 
-    q = QUERIES[name]
-    sdf = _epoch_str_spark(q.spark(spark, sf_dir))
-    spark_pdf = sdf.toPandas()
-    if q.oracle is None:
-        ok = len(spark_pdf) >= 0
-        return DiffResult(name, ok, len(spark_pdf), None, ["rows-only (no oracle)"])
-    oracle_pdf = con.execute(_epoch_str_oracle(con, q.oracle)).df()
-    return compare_frames(name, spark_pdf, oracle_pdf)
+    def diff(sdf) -> DiffResult:
+        spark_pdf = _epoch_str_spark(sdf).toPandas()
+        oracle = QUERIES[name].oracle
+        if oracle is None:
+            return DiffResult(name, True, len(spark_pdf), None, ["rows-only (no oracle)"])
+        oracle_pdf = con.execute(_epoch_str_oracle(con, oracle)).df()
+        return compare_frames(name, spark_pdf, oracle_pdf)
+
+    run = run_query(spark, name, sf_dir, diff)
+    if run.error is not None:
+        e = run.error
+        return DiffResult(name, False, -1, None, [f"EXCEPTION: {type(e).__name__}: {e}"])
+    return run.result
 
 
 def run_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> list[DiffResult]:
     from steam_data_pipeline_spark.plans.registry import QUERIES
 
     con = duckdb_connect(sf_dir)
-    results = []
-    for name in names or QUERIES:
-        try:
-            results.append(run_one(spark, con, sf_dir, name))
-        except Exception as e:  # noqa: BLE001 - report, don't abort the sweep
-            results.append(
-                DiffResult(name, False, -1, None, [f"EXCEPTION: {type(e).__name__}: {e}"])
-            )
-    return results
+    return [run_one(spark, con, sf_dir, name) for name in names or QUERIES]

@@ -125,34 +125,6 @@ def with_hashed_shingles(
     ).select(*keep, (F.array_distinct(grams) if distinct else grams).alias(out_col))
 
 
-def with_minhash_signature(
-    docs: DataFrame,
-    shingle_col: str = "shingles",
-    num_hashes: int = 32,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """MinHash signature: for seed i, min over shingles of
-    ``xxhash64(shingle, i)``. 32 seeded xxhash64 passes over the
-    shingle array — deterministic, JVM-side, no Python.
-
-    NB: the per-seed lambda must be built by a closure factory — a
-    two-parameter lambda (``lambda s, i=i``) would be interpreted by
-    ``transform`` as its (element, index) form and silently hash with
-    the array position instead of the seed.
-    """
-
-    def seeded(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col(shingle_col), seeded(i)))
-            for i in range(num_hashes)
-        ]
-    )
-    return docs.withColumn(out_col, sig)
-
-
 def _hashed_signature(docs: DataFrame, shingle_col: str, num_hashes: int, out_col: str) -> DataFrame:
     """MinHash over already-hashed (long) shingles: seed permutations
     are ``xxhash64(h, seed)`` over 8-byte ints — much cheaper than

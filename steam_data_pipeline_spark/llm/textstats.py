@@ -90,23 +90,6 @@ def fingerprint(text: str | Column) -> Column:
     )
 
 
-def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per (lang, source) corpus profile: doc counts, token totals,
-    char-length distribution (exact percentile — swap to
-    ``percentile_approx`` beyond memory scale)."""
-    enriched = docs.withColumn("n_tokens", token_count(text_col))
-    return (
-        enriched.groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-            F.expr("percentile(n_chars, 0.5)").alias("median_chars"),
-        )
-    )
-
-
 def tfidf_topk(
     docs: DataFrame,
     key: str = "doc_id",

@@ -63,18 +63,6 @@ def capped_count_per_key(
     )
 
 
-def daily_counts(df: DataFrame, ts: str = "ts") -> DataFrame:
-    """Daily ingest heartbeat (PLAN:25): records per day.
-
-    ``date_trunc`` groupBy ≡ a tumbling 1-day window; the streaming
-    twin lives in ``streaming.ingest``.
-    """
-    return (
-        df.groupBy(F.date_trunc("day", F.col(ts)).alias("day"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
 def conditional_roi(
     df: DataFrame,
     key: str,

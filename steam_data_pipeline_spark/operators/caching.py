@@ -18,11 +18,12 @@ unpersist them itself: the cached blocks must outlive the caller's
   call any time after the consumer has forced its result (a released
   spine simply recomputes if re-evaluated — lazy semantics unchanged).
 
-``bench.py`` calls ``spark.catalog.clearCache()`` after every query
-already (which drops the blocks) — ``release_spines()`` additionally
-empties this registry so the strong references don't pin the JVM-side
-plans. Library users embedding these operators in a long-lived session
-should call ``release_spines()`` at their own query boundaries.
+``plans.registry.run_query`` calls ``release_spines()`` and
+``spark.catalog.clearCache()`` after every registry query; the first
+also empties this registry so the strong references don't pin the
+JVM-side plans. Library users embedding these operators in a
+long-lived session should call ``release_spines()`` at their own query
+boundaries.
 """
 
 from __future__ import annotations

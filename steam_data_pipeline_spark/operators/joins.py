@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from steam_data_pipeline_spark.operators.windows import island_intervals, latest_per_key
+from steam_data_pipeline_spark.operators.windows import island_intervals
 
 
 def enrich_details(candidates: DataFrame, details: DataFrame, key: str) -> DataFrame:
@@ -51,26 +51,6 @@ def enrich_facts(
     for col, default in (defaults or {}).items():
         out = out.withColumn(col, F.coalesce(F.col(col), F.lit(default)))
     return out
-
-
-def dim_fact_join(
-    fact: DataFrame, dim: DataFrame, key: str, how: str = "inner", broadcast_dim: bool = True
-) -> DataFrame:
-    """The implicit FK join games_timeseries → games_metadata
-    (main.py:94; PLAN:26-28 per-game charts). Broadcast the dimension
-    when small; sort-merge on the key otherwise."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=key, how=how)
-
-
-def asof_latest_join(
-    dim: DataFrame, fact: DataFrame, key: str, ts: str, tiebreak: list | None = None
-) -> DataFrame:
-    """As-of join, latest flavor (GUIDE:185-189): attach each key's most
-    recent fact row to its dimension row. Right side reduced with
-    ``latest_per_key`` before the equi join."""
-    latest = latest_per_key(fact, key, ts, tiebreak)
-    return dim.join(latest, on=key, how="left")
 
 
 def interval_overlap_join(
@@ -153,13 +133,6 @@ def range_join_binned(
         .drop("__bin")
         .drop("__ikey")
     )
-
-
-def semi_candidates(source: DataFrame, candidates: DataFrame, key: str) -> DataFrame:
-    """Semi-join reduction (main.py:421,443 dedup-before-fetch): rows of
-    ``source`` whose key appears in the candidate pool — no columns from
-    the pool, no row multiplication."""
-    return source.join(F.broadcast(candidates), on=key, how="left_semi")
 
 
 def anti_missing(source: DataFrame, present: DataFrame, key: str) -> DataFrame:

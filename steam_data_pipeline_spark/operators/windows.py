@@ -176,15 +176,6 @@ def trailing_avg(
     return df.withColumn(out_col, F.avg(value).over(w))
 
 
-def series_deltas(
-    df: DataFrame, key: str, ts: str, value: str, delta_col: str = "delta"
-) -> DataFrame:
-    """Per-key consecutive deltas via ``lag`` (§2.6
-    ``win_price_player_align`` — aligned series / change detection)."""
-    w = Window.partitionBy(key).orderBy(ts)
-    return df.withColumn(delta_col, F.col(value) - F.lag(value).over(w))
-
-
 def scd2_history(
     df: DataFrame,
     key: str,

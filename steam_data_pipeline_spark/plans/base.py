@@ -76,11 +76,3 @@ def ops_time_domain(df: DataFrame, col: str = "ts") -> DataFrame:
         (c >= F.lit(OPS_TS_MIN).cast("timestamp"))
         & (c < F.lit(OPS_TS_MAX).cast("timestamp"))
     )
-
-
-def ops_time_domain_sql(col: str = "ts") -> str:
-    """The oracle-side mirror of :func:`ops_time_domain`."""
-    return (
-        f"{col} >= TIMESTAMP '{OPS_TS_MIN} 00:00:00' "
-        f"AND {col} < TIMESTAMP '{OPS_TS_MAX} 00:00:00'"
-    )

@@ -1455,15 +1455,6 @@ def llm_multimodal_cols(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _stream_partitions(partitions: int | None) -> str:
-    """Shuffle-partition count for a memory-sink stream run: explicit
-    per-call value > SPARK_GRAFT_STREAM_PARTITIONS env (cluster-sizes
-    the DEFAULT only) > measured local default 4."""
-    if partitions:
-        return str(partitions)
-    return os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS") or "4"
-
-
 def _join_state_partitions(spark) -> int:
     """State partitions for the stream-stream joins. Each partition
     carries FOUR state-store instances per join (left/right ×
@@ -1503,23 +1494,18 @@ def _run_stream_to_memory(
     # store commit), not per row — run with fewer state partitions.
     # The partition count is a per-checkpoint property, so this scopes
     # to this query's fresh checkpoint, it is an execution detail
-    # (results are oracle-value-exact at any setting). Precedence: an
-    # explicit per-call ``partitions`` (a measured per-query decision,
-    # e.g. stream_islands_stateful's 8) beats the
-    # SPARK_GRAFT_STREAM_PARTITIONS env override, which re-sizes only
-    # the DEFAULT to the cluster (round-13 advice: the env must not
-    # silently clobber a deliberate per-call value). Measured on the
-    # progress metrics
-    # (stream_stream_join, sf0.1): addBatch + queryPlanning scale with
-    # the state-store instance count, 4.0 s at 8 partitions → 2.3 s at
-    # 2; the 4 default keeps a multi-task exchange in every stateful
-    # stage while shedding most of that. Callers whose per-key PYTHON
-    # compute dominates (applyInPandasWithState over many keys) pass a
-    # higher ``partitions`` — for those the worker parallelism, not
-    # the store commit count, sets the wall (stream_islands_stateful
-    # interleaved A/B: 5.97 s at 8 vs 8.37 s at 4, median-of-3).
+    # (results are oracle-value-exact at any setting). Measured on the
+    # progress metrics (stream_stream_join, sf0.1): addBatch +
+    # queryPlanning scale with the state-store instance count, 4.0 s
+    # at 8 partitions → 2.3 s at 2; the 4 default keeps a multi-task
+    # exchange in every stateful stage while shedding most of that.
+    # Callers whose per-key PYTHON compute dominates
+    # (applyInPandasWithState over many keys) pass a higher
+    # ``partitions`` — for those the worker parallelism, not the store
+    # commit count, sets the wall (stream_islands_stateful interleaved
+    # A/B: 5.97 s at 8 vs 8.37 s at 4, median-of-3).
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_partitions(partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", partitions or 4)
     try:
         q = (
             sdf.writeStream.format("memory")

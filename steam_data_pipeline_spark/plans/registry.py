@@ -20,7 +20,10 @@ import glob
 import json
 import os
 import re
+import time
+from typing import Any, Callable, NamedTuple
 
+from steam_data_pipeline_spark.operators.caching import release_spines
 from steam_data_pipeline_spark.plans.analytics import ANALYTICS
 from steam_data_pipeline_spark.plans.base import Query, SparkQuery
 from steam_data_pipeline_spark.plans.core import CORE
@@ -218,6 +221,50 @@ QUERIES: dict[str, Query] = {
         PRIORITY_RECHECK,
     )
 }
+
+
+class QueryRun(NamedTuple):
+    """One registry query run: build and consume wall seconds, what
+    ``consume`` returned, and the exception that stopped the run."""
+
+    name: str
+    build_s: float
+    exec_s: float
+    result: Any
+    error: Exception | None
+
+
+def run_query(spark, name: str, sf_dir: str, consume: Callable) -> QueryRun:
+    """The one way to walk the registry: build ``QUERIES[name]`` under
+    job group ``<name>/build``, hand the DataFrame to ``consume`` (a
+    noop write, an oracle diff, a plan capture) under ``<name>/exec``,
+    and time each phase. Registered spines and cached blocks are freed
+    afterwards whatever happened, so no query's cache leaks into the
+    next one's plan or timing. Never raises: a failure is returned as
+    ``error``, with the failing phase's time so far."""
+    sc = spark.sparkContext
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    build_s = exec_s = 0.0
+    result = error = built = None
+    t0 = time.perf_counter()
+    try:
+        sc.setLocalProperty("spark.jobGroup.id", f"{name}/build")
+        df = QUERIES[name].spark(spark, sf_dir)
+        built = time.perf_counter()
+        sc.setLocalProperty("spark.jobGroup.id", f"{name}/exec")
+        result = consume(df)
+    except Exception as e:  # noqa: BLE001 - a registry walk reports, never aborts
+        error = e
+    finally:
+        end = time.perf_counter()
+        if built is None:
+            build_s = end - t0
+        else:
+            build_s, exec_s = built - t0, end - built
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        release_spines()
+        spark.catalog.clearCache()
+    return QueryRun(name, build_s, exec_s, result, error)
 
 
 def query_map() -> dict[str, SparkQuery]:

@@ -101,18 +101,29 @@ def test_memory_sink_queries_leak_no_temp_views(spark):
     assert leftover == []
 
 
-def test_stream_partition_precedence(monkeypatch):
-    """Explicit per-call partitions beat the env override; the env
-    re-sizes only the default (round-13 advice: a cluster-tuned env
-    value must not clobber stream_islands_stateful's measured 8)."""
-    from steam_data_pipeline_spark.plans.extensions import _stream_partitions
+def test_stream_partition_precedence(spark, tmp_path, monkeypatch):
+    """An explicit per-call ``partitions`` sizes the stream's shuffle;
+    without one the measured local default 4 applies."""
+    from pyspark.sql.conf import RuntimeConfig
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-    assert _stream_partitions(None) == "4"
-    assert _stream_partitions(8) == "8"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "64")
-    assert _stream_partitions(None) == "64"
-    assert _stream_partitions(8) == "8"
+    from steam_data_pipeline_spark.plans.extensions import _run_stream_to_memory
+
+    seen = []
+    orig_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        if key == "spark.sql.shuffle.partitions":
+            seen.append(str(value))
+        return orig_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    src = str(tmp_path / "src")
+    spark.range(0, 8).selectExpr("id % 2 AS k").write.parquet(src)
+    for partitions in (None, 8):
+        sdf = spark.readStream.schema("k bigint").parquet(src).groupBy("k").count()
+        _run_stream_to_memory(sdf, "precedence", spark, partitions=partitions)
+    # each run sets its count, then restores the session's value
+    assert seen[0::2] == ["4", "8"]
 
 
 class TestStreamingHoltWinters:

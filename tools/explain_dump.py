@@ -39,16 +39,20 @@ def main() -> None:
     out_dir = os.path.join(REPO, args.out)
     os.makedirs(out_dir, exist_ok=True)
 
-    from steam_data_pipeline_spark.plans.registry import QUERIES
+    from steam_data_pipeline_spark.plans.registry import run_query
     from steam_data_pipeline_spark.session import get_spark
+
+    def formatted(df) -> str:
+        return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+            df._jdf.queryExecution(), "formatted"
+        )
 
     spark = get_spark("explain-dump")
     for name in args.names:
-        q = QUERIES[name]
-        df = q.spark(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
+        run = run_query(spark, name, sf_dir, formatted)
+        if run.error is not None:
+            raise run.error
+        plan = run.result
         path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

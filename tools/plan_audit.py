@@ -291,36 +291,40 @@ def table_scan_counts(df) -> dict[str, int]:
     return counts
 
 
+def plan_row(df) -> dict:
+    """The PLAN_AUDIT.json counters of one built (never executed) plan."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("simple")
+    plan = buf.getvalue()
+    row = {k: plan.count(v) for k, v in COUNTERS.items()}
+    row["bnlj_unbounded"] = count_unbounded_bnlj(df)
+    # disambiguate substring collisions: "HashAggregate" is a
+    # suffix of "ObjectHashAggregate", "Window" a prefix of
+    # "WindowGroupLimit"
+    row["agg"] = plan.count("HashAggregate") - row["obj_agg"]
+    row["window"] = plan.count("Window") - row["wgl"]
+    row["pandas_gm"] = sum(plan.count(p) for p in PANDAS_OPS)
+    out = {k: v for k, v in row.items() if v}
+    scans = table_scan_counts(df)
+    if scans:
+        out["scans"] = dict(sorted(scans.items()))
+    return out
+
+
 def audit(sf_dir: str) -> dict:
-    from steam_data_pipeline_spark.plans.registry import QUERIES
+    from steam_data_pipeline_spark.plans.registry import QUERIES, run_query
     from steam_data_pipeline_spark.session import get_spark
 
     spark = get_spark("plan-audit")
     out: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    for name, q in sorted(QUERIES.items()):
-        try:
-            df = q.spark(spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("simple")
-            plan = buf.getvalue()
-            bnlj_unbounded = count_unbounded_bnlj(df)
-            scans = table_scan_counts(df)
-        except Exception as e:  # noqa: BLE001 - record, keep auditing
-            errors[name] = f"{type(e).__name__}: {str(e)[:160]}"
-            continue
-        row = {k: plan.count(v) for k, v in COUNTERS.items()}
-        row["bnlj_unbounded"] = bnlj_unbounded
-        # disambiguate substring collisions: "HashAggregate" is a
-        # suffix of "ObjectHashAggregate", "Window" a prefix of
-        # "WindowGroupLimit"
-        row["agg"] = plan.count("HashAggregate") - row["obj_agg"]
-        row["window"] = plan.count("Window") - row["wgl"]
-        row["pandas_gm"] = sum(plan.count(p) for p in PANDAS_OPS)
-        out[name] = {k: v for k, v in row.items() if v}
-        if scans:
-            out[name]["scans"] = dict(sorted(scans.items()))
+    for name in sorted(QUERIES):
+        run = run_query(spark, name, sf_dir, plan_row)
+        if run.error is None:
+            out[name] = run.result
+        else:
+            errors[name] = f"{type(run.error).__name__}: {str(run.error)[:160]}"
     spark.stop()
     return {"sf_dir": sf_dir, "queries": out, "errors": errors}
 

@@ -72,6 +72,24 @@ def _force(df) -> int:
     return df.count()
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _best_run(spark, name: str, sf_dir: str, repeats: int, consume=_noop):
+    """Min build+exec wall of ``repeats`` registry runs of ``name`` and
+    the last run's ``consume`` result; re-raises a run's error."""
+    from steam_data_pipeline_spark.plans.registry import run_query
+
+    walls = []
+    for _ in range(repeats):
+        run = run_query(spark, name, sf_dir, consume)
+        if run.error is not None:
+            raise run.error
+        walls.append(run.build_s + run.exec_s)
+    return min(walls), run.result
+
+
 def rehearse_ann(sf_dir: str, factors: list[int]) -> None:
     import numpy as np
     from pyspark.sql import functions as F
@@ -465,9 +483,6 @@ def rehearse_registry_heavy(
     sf_dir: str, factor: int, repeats: int, names: list[str] | None = None
 ) -> None:
     import math
-    import statistics
-
-    from steam_data_pipeline_spark.plans.registry import QUERIES
 
     spark = _spark()
     names = names or HEAVY_QUERIES
@@ -482,21 +497,12 @@ def rehearse_registry_heavy(
         f"exponent = log(t_big/t_base)/log({factor})"
     )
     print("query\tbase_s\tbig_s\texponent")
-    _ = statistics  # (median available if repeats grow)
     for name in names:
-        q = QUERIES[name]
-        walls = {}
         try:
-            for label, d in (("base", sf_dir), ("big", out_dir)):
-                runs = []
-                for _i in range(repeats):
-                    spark.catalog.clearCache()
-                    t0 = time.time()
-                    q.spark(spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(time.time() - t0)
-                walls[label] = min(runs) if repeats > 1 else runs[0]
+            walls = {
+                label: _best_run(spark, name, d, repeats)[0]
+                for label, d in (("base", sf_dir), ("big", out_dir))
+            }
         except Exception as e:  # noqa: BLE001 - rehearse every query
             print(f"{name}\tERROR\t{type(e).__name__}: {str(e)[:160]}")
             continue
@@ -525,7 +531,6 @@ def rehearse_basket_skew(sf_dir: str, repeats: int = 2) -> None:
 
     from pyspark.sql import functions as F
 
-    from steam_data_pipeline_spark.plans.registry import QUERIES
     from steam_data_pipeline_spark.sources.tables import read_table
 
     import hashlib
@@ -561,26 +566,21 @@ def rehearse_basket_skew(sf_dir: str, repeats: int = 2) -> None:
             os.path.join(out_dir, "lineitem.parquet")
         )
         open(ok, "w").write("ok")
-    q = QUERIES["agg_assoc_rules"]
     print(
         "# basket-skew rehearsal: one item appended to EVERY basket "
         f"(100% support) vs clean, best of {repeats}"
     )
     print("shape\twall_s\tn_rules\tn_hot_rules")
+
+    def hot_count(df) -> int:
+        return df.filter(
+            (F.col("item_a") == 999_999) | (F.col("item_b") == 999_999)
+        ).count()
+
     for label, d in (("clean", sf_dir), ("hot-item", out_dir)):
-        runs, rows, hot_rows = [], 0, 0
-        for _i in range(repeats):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            out = q.spark(spark, d)
-            rows = out.count()
-            runs.append(time.time() - t0)
-        hot_rows = (
-            q.spark(spark, d)
-            .filter((F.col("item_a") == 999_999) | (F.col("item_b") == 999_999))
-            .count()
-        )
-        print(f"{label}\t{min(runs):.2f}\t{rows}\t{hot_rows}")
+        wall, rows = _best_run(spark, "agg_assoc_rules", d, repeats, _force)
+        _, hot_rows = _best_run(spark, "agg_assoc_rules", d, 1, hot_count)
+        print(f"{label}\t{wall:.2f}\t{rows}\t{hot_rows}")
     spark.stop()
 
 
@@ -761,10 +761,10 @@ def rehearse_media(sf_dir: str, factors: list[int], n0: int = 2000) -> None:
         )
 
         t0 = time.time()
-        extract_features(media).write.format("noop").mode("overwrite").save()
+        _noop(extract_features(media))
         feat_s = time.time() - t0
         t0 = time.time()
-        perceptual_hash(media).write.format("noop").mode("overwrite").save()
+        _noop(perceptual_hash(media))
         ph_s = time.time() - t0
         print(f"{f}x\t{n}\t{feat_s:.2f}\t{n / feat_s:.0f}\t{ph_s:.2f}")
     spark.stop()
@@ -1184,7 +1184,6 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
 
     from steam_data_pipeline_spark.operators import caching, ranks
     from steam_data_pipeline_spark.plans import extensions as ext
-    from steam_data_pipeline_spark.plans.registry import QUERIES
     from steam_data_pipeline_spark.sources.tables import read_table
 
     spark = _spark()
@@ -1208,9 +1207,6 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
             walls.append(time.time() - t1)
         return min(walls)
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
     print("case\tcommitted_s\talternative_s\tverdict_holds")
 
     # --- kept-uncached queries: committed = re-scan, alt = cache t() ---
@@ -1220,11 +1216,10 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
         return caching.spine_cache(orig_t(spark_, d, name))
 
     for name in ("llm_dedup_editdist", "llm_graph_triangles"):
-        q = QUERIES[name]
-        committed = timed(lambda: noop(q.spark(spark, out_dir)))
+        committed, _ = _best_run(spark, name, out_dir, repeats)
         ext.t = cached_t
         try:
-            alt = timed(lambda: noop(q.spark(spark, out_dir)))
+            alt, _ = _best_run(spark, name, out_dir, repeats)
         finally:
             ext.t = orig_t
         print(
@@ -1240,7 +1235,7 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
         F.monotonically_increasing_id().alias("k"),
     ).localCheckpoint(eager=True)
     def ntile_case(cache_spine):
-        return lambda: noop(
+        return lambda: _noop(
             ranks.scalable_ntile_desc_multi(
                 axes,
                 5,
@@ -1252,7 +1247,7 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
         )
 
     def cume_case(cache_spine):
-        return lambda: noop(
+        return lambda: _noop(
             ranks.exact_cume_counts_multi(
                 axes,
                 [("cents", "le_c", "ge_c"), ("qty", "le_q", "ge_q"),
@@ -1300,8 +1295,6 @@ def rehearse_window_skew(
     import math
 
     import duckdb
-
-    from steam_data_pipeline_spark.plans.registry import QUERIES
 
     names = [
         "win_islands",
@@ -1354,15 +1347,7 @@ def rehearse_window_skew(
         ).fetchone()[0]
         con.close()
         for name in names:
-            runs = []
-            for _ in range(repeats):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                QUERIES[name].spark(spark, hot_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                runs.append(time.time() - t0)
-            walls[name][f] = min(runs)
+            walls[name][f], _ = _best_run(spark, name, hot_dir, repeats)
     print(
         "# window-skew rehearsal: ~90% of events on ONE key; exponent "
         "of wall vs HOT-KEY size between consecutive factors"
