@@ -1,5 +1,6 @@
 """Graph analytics: fixed-point integer PageRank, exact triangle
-counting / clustering coefficient, and k-core decomposition.
+counting / clustering coefficient, k-core decomposition, synchronous
+label propagation and multi-source BFS hop profiles.
 
 Why it's here: web-scale pretraining pipelines weight documents by
 link-graph centrality (PageRank over the crawl graph is a standard
@@ -17,12 +18,16 @@ leaks < 1 micro-unit of mass per node per iteration (bounded,
 one-sided, documented), which is far below any ranking-relevant
 difference after the standard 4-10 iterations.
 
-Scale shape per iteration: edges ⋈ ranks on src (one shuffle; edges
-are pre-partitioned by src once and reused every iteration), a
-map-side-combined groupBy(dst), and a left join back onto the node
-spine. The driver loop ``localCheckpoint``s every few iterations so
-the plan does not grow superlinearly — same discipline as
-``llm/dedup.py connected_components``.
+Driver cost: every iterative operator builds its static edge table
+once, behind one eager ``localCheckpoint``, and then pays as few eager
+jobs per round as its recurrence allows. PageRank's next ranks need
+two reads of the previous ranks (the contribution join and the
+dangling-mass sum), so it checkpoints the ranks every iteration and
+its plan never doubles. BFS and label propagation read the previous
+round once, so their rounds stay lazy and run inside the returned
+plan (label propagation adds a lazy checkpoint every second round);
+k-core's fixpoint test is a data-dependent exit, so it checkpoints
+and counts its active set each round.
 """
 
 from __future__ import annotations
@@ -37,7 +42,6 @@ def pagerank(
     edges: DataFrame,
     damping_pct: int = 85,
     n_iter: int = 4,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Integer PageRank over ``nodes(node)`` / ``edges(src, dst)``.
 
@@ -50,50 +54,62 @@ def pagerank(
       rank'(v)  = base + dangling + Σ share(s) over s→v edges
 
     Duplicate edges are collapsed first (unweighted graph); self-loops
-    are kept (standard PageRank semantics). Returns
-    ``(node, rank_micro)`` with Σ rank_micro ≤ SCALE (floor leakage).
+    are kept (standard PageRank semantics). An edge with a NULL
+    ``dst`` counts toward its source's out-degree but its share
+    reaches no node; an edge with a NULL ``src`` has no source node
+    and is ignored. Returns ``(node, rank_micro)`` with
+    Σ rank_micro ≤ SCALE (floor leakage).
+
+    The ``(src, dst, deg)`` adjacency and the node spine, flagged
+    ``dangling`` where a node has no out-edge, are each checkpointed
+    once. Per iteration: one join of the ranks onto the adjacency and
+    one map-side-combined ``groupBy(dst)`` of the shares; the dangling
+    mass is a global sum over the flagged rows of the ranks alone, so
+    it needs no join and no ``dst`` value — NULL included — can ever
+    reach it; a left join onto the spine adds base and dangling share.
+    An iteration reads the previous ranks twice, so they are
+    checkpointed before every iteration after the first: each
+    iteration's plan starts at checkpoint leaves instead of repeating
+    the whole previous tree twice, and the returned plan holds only
+    the last iteration.
     """
-    # materialize the dedup'd edge table once: every iteration joins it
-    # against the frontier, and without this the dropDuplicates shuffle
-    # re-runs per materialization (the same fix LPA/k-core carry)
-    e = (
-        edges.select("src", "dst")
-        .dropDuplicates(["src", "dst"])
+    e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    adj = e.join(deg, on="src").localCheckpoint(eager=True)
+    src_deg = adj.select("src", "deg").dropDuplicates(["src"])
+    spine = (
+        nodes.select(F.col("node").cast("long").alias("node"))
+        .join(src_deg, on=F.col("node") == src_deg["src"], how="left")
+        .select("node", F.col("deg").isNull().alias("dangling"))
         .localCheckpoint(eager=True)
     )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    spine = nodes.select(F.col("node").cast("long").alias("node"))
     n = spine.count()  # node count is a scalar the formula needs
     base = (SCALE * (100 - damping_pct)) // 100 // n
 
     ranks = spine.withColumn("rank", F.lit(SCALE // n).cast("long"))
     for it in range(n_iter):
-        r = ranks.join(deg, on=ranks["node"] == deg["src"], how="left").select(
-            ranks["node"], "rank", "deg"
-        )
-        share = r.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("src"),
-            F.expr(f"({damping_pct} * rank) div 100 div deg").alias("share"),
-        )
-        dang = (
-            r.filter(F.col("deg").isNull())
-            .agg(
-                F.coalesce(
-                    F.sum(F.expr(f"({damping_pct} * rank) div 100")), F.lit(0)
-                ).alias("dm")
-            )
-            .select(F.expr(f"dm div {n}").cast("long").alias("dshare"))
-        )
+        if it:
+            ranks = ranks.localCheckpoint(eager=True)
         inflow = (
-            e.join(share, on="src")
+            ranks.join(adj, on=ranks["node"] == adj["src"])
             .groupBy("dst")
-            .agg(F.sum("share").cast("long").alias("inflow"))
+            .agg(
+                F.sum(F.expr(f"({damping_pct} * rank) div 100 div deg"))
+                .cast("long")
+                .alias("inflow")
+            )
+        )
+        dshare = ranks.filter("dangling").agg(
+            F.expr(f"coalesce(sum(({damping_pct} * rank) div 100), 0) div {n}")
+            .cast("long")
+            .alias("dshare")
         )
         ranks = (
-            spine.join(inflow, on=spine["node"] == inflow["dst"], how="left")
-            .crossJoin(F.broadcast(dang))
+            spine.join(inflow, on=F.col("node") == inflow["dst"], how="left")
+            .crossJoin(F.broadcast(dshare))
             .select(
-                spine["node"],
+                "node",
+                "dangling",
                 (
                     F.lit(base)
                     + F.col("dshare")
@@ -103,8 +119,6 @@ def pagerank(
                 .alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("rank").alias("rank_micro"))
 
 
@@ -117,7 +131,9 @@ def pagerank_oracle_sql(
     """Generate the DuckDB oracle for :func:`pagerank` by unrolling
     the iterations as chained CTEs — same integer ops (``//`` is
     BIGINT floordiv in DuckDB; operands are never negative, so
-    floor == trunc == Spark's ``div``)."""
+    floor == trunc == Spark's ``div``). The dangling test skips the
+    NULL ``src`` group: ``NOT IN`` over a set holding NULL is never
+    true, which would silently zero the dangling mass."""
     pre = f"""
     WITH pr_nodes AS ({node_sql}),
     pr_e AS (SELECT DISTINCT src, dst FROM ({edge_sql})),
@@ -137,7 +153,8 @@ def pagerank_oracle_sql(
     dg{i} AS (
       SELECT CAST(COALESCE(SUM(({damping_pct} * r.rank) // 100), 0)
                   // (SELECT n FROM pr_nn) AS BIGINT) AS dshare
-      FROM {prev} r WHERE r.node NOT IN (SELECT src FROM pr_deg)
+      FROM {prev} r
+      WHERE r.node NOT IN (SELECT src FROM pr_deg WHERE src IS NOT NULL)
     ),
     inf{i} AS (
       SELECT pr_e.dst, CAST(SUM(s.share) AS BIGINT) AS inflow
@@ -489,18 +506,22 @@ def bfs_hops(
     link-graph curation pass uses to answer "how far does trusted-seed
     influence propagate" (the BFS companion to :func:`pagerank`'s
     stationary weighting). Nodes never reached within the cap report
-    hop = -1.
+    hop = -1; seeds that are not graph nodes are ignored.
 
-    Frontier expansion, one round per hop: the NEW frontier is the
-    neighbors of the previous frontier anti-joined against everything
-    already visited, so each node is claimed exactly once, at its
-    minimum hop — the textbook distributed BFS. Per round: one
-    semi-join of the (static, checkpointed) symmetric edge table
-    against the node-sized frontier + one distinct + one anti-join;
-    the visited set is node-sized and ``localCheckpoint``ed per round
-    (same bounded-plan discipline as :func:`kcore`). Termination is
-    data-dependent (an empty frontier breaks early; ``max_hops`` caps
-    the rounds).
+    Min-hop relaxation, the same dataflow shape as
+    :func:`label_propagation`: the symmetric edge table gets one
+    zero-weight self-loop per node (``step``, weight 1 on real edges)
+    and is eagerly ``localCheckpoint``ed once. The distance table
+    starts with every node: seeds at hop 0, the rest unreached (NULL,
+    which ``min`` skips). Each of the ``max_hops`` rounds is one join
+    of the distance table against ``step`` and one map-side-combined
+    ``groupBy(v).min(hop + weight)``; the self-loops keep every node
+    in the table and carry its distance into the next round, so after
+    round h every node within h hops holds its minimum hop and no
+    final join back onto the node set is needed. The rounds are lazy —
+    no per-round checkpoint or emptiness probe — so the relaxation
+    runs inside the returned plan, whose size is linear in
+    ``max_hops``.
 
     Returns ``(hop, n_nodes, sum_node_ids, min_node, max_node)``.
     """
@@ -512,36 +533,32 @@ def bfs_hops(
         )
         .dropDuplicates(["a", "b"])
     )
-    sym = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("w")))
+    sym = und.select(F.col("a").alias("v"), F.col("b").alias("w")).unionAll(
+        und.select(F.col("b").alias("v"), F.col("a").alias("w"))
+    )
+    loops = sym.select("v").distinct().select("v", F.col("v").alias("w"))
+    step = (
+        sym.withColumn("d", F.lit(1))
+        .unionAll(loops.withColumn("d", F.lit(0)))
         .localCheckpoint(eager=True)
     )
-    nodes = sym.select("v").distinct().localCheckpoint(eager=True)
-    visited = (
+    nodes = step.filter(F.col("d") == 0).select("v")
+    dist = (
         nodes.join(seeds, on="v", how="left_semi")
         .select("v", F.lit(0).alias("hop"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("v")
-    for h in range(1, max_hops + 1):
-        new = (
-            sym.join(frontier, on="v", how="left_semi")
-            .select(F.col("w").alias("v"))
-            .distinct()
-            .join(visited.select("v"), on="v", how="left_anti")
-            .select("v", F.lit(h).alias("hop"))
-            .localCheckpoint(eager=True)
-        )
-        if new.isEmpty():
-            break
-        visited = visited.unionAll(new).localCheckpoint(eager=True)
-        frontier = new.select("v")
-    tagged = visited.unionAll(
-        nodes.join(visited.select("v"), on="v", how="left_anti").select(
-            "v", F.lit(-1).alias("hop")
+        .unionAll(
+            nodes.join(seeds, on="v", how="left_anti").select(
+                "v", F.lit(None).cast("int").alias("hop")
+            )
         )
     )
+    for _ in range(max_hops):
+        dist = (
+            dist.join(step, on="v")
+            .groupBy(F.col("w").alias("v"))
+            .agg(F.min(F.col("hop") + F.col("d")).alias("hop"))
+        )
+    tagged = dist.select("v", F.coalesce(F.col("hop"), F.lit(-1)).alias("hop"))
     return (
         tagged.groupBy(F.col("hop").cast("int").alias("hop"))
         .agg(

@@ -5217,9 +5217,13 @@ def llm_graph_kcore(spark, sf_dir):
         "graph: customers as nodes, 1-URGENT orders as edges "
         "(o_custkey -> o_orderkey mod |customer|), which leaves 203 "
         "dangling nodes at sf0.01 so the dangling-mass redistribution "
-        "path is non-vacuous. Per iteration: edges-join-ranks on src, "
-        "map-side-combined groupBy(dst), left join onto the node "
-        "spine; localCheckpoint every 3 iterations bounds the plan."
+        "path is non-vacuous. The (src, dst, deg) adjacency and the "
+        "node spine with its dangling flag are checkpointed once; per "
+        "iteration: ranks joined onto the adjacency, one "
+        "map-side-combined groupBy(dst) of the shares, a global sum of "
+        "the dangling nodes' mass, and a left join back onto the "
+        "spine; the ranks are localCheckpointed every iteration, so "
+        "the plan never doubles."
     ),
     tags=("llm", "graph", "quality"),
 )
@@ -16931,11 +16935,11 @@ def _bfs_oracle():
         "dark (nodes at hop -1 are unreachable within 4 hops: "
         "isolation candidates for the quality gate, the reachability "
         "companion to llm_graph_pagerank's stationary weighting). "
-        "Iterative frontier expansion with data-dependent termination "
-        "— per round one semi-join of the checkpointed symmetric edge "
-        "table against the node-sized frontier, one distinct, one "
-        "anti-join against visited (each node claimed exactly once at "
-        "its minimum hop), early exit on an empty frontier. The "
+        "Min-hop relaxation: the symmetric edge table plus one "
+        "zero-weight self-loop per node is checkpointed once, then "
+        "each of the 4 lazy rounds joins the distance table to it and "
+        "keeps min(hop + weight) per node, so every node ends at its "
+        "minimum hop with no per-round eager job. The "
         "DuckDB oracle is a BOUNDED RECURSIVE CTE — min(hop) per node "
         "over every <=4-hop walk endpoint — a fully independent "
         "declarative formulation that must agree on every hop's "

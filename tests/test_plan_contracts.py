@@ -10,7 +10,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from steam_data_pipeline_spark.plans.registry import QUERIES
+from steam_data_pipeline_spark.plans.registry import QUERIES, run_query
 from tests.conftest import SF_SMOKE
 
 
@@ -1552,17 +1552,42 @@ class TestRound10SecondWaveContracts:
                 assert "HashAggregate" in lines[i + 1], lines[i + 1]
 
     def test_bfs_final_plan_is_checkpoint_scans(self, spark):
-        """The frontier iterations run eagerly at build time (bounded
-        localCheckpoints, kcore discipline); the returned plan must be
-        checkpoint scans + union + one map-side-combined hop rollup —
-        no residual joins replaying the expansion."""
-        plan = _plan(
-            QUERIES["llm_graph_bfs_hops"].spark(spark, SF_SMOKE), "simple"
-        )
+        """Build time pays only the one eager localCheckpoint of the
+        step table (edges plus zero-weight self-loops); the hop rounds
+        run lazily inside the returned plan, as broadcast joins against
+        that checkpoint scan and map-side-combined min-hop aggregates,
+        then one hop rollup. A per-round checkpoint or emptiness probe
+        would add several build jobs per round and break the bound."""
+        name = "llm_graph_bfs_hops"
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(f"{name}/build"))
+        run = run_query(spark, name, SF_SMOKE, lambda df: _plan(df, "simple"))
+        assert run.error is None, run.error
+        plan = run.result
         assert "Python" not in plan, plan
         assert "SortMergeJoin" not in plan, plan
         assert "Scan ExistingRDD" in plan, plan
         assert "partial_count" in plan or "partial_sum" in plan, plan
+        build_jobs = set(tracker.getJobIdsForGroup(f"{name}/build")) - before
+        assert len(build_jobs) <= 8, sorted(build_jobs)
+
+    def test_pagerank_plan_is_one_iteration_over_checkpoints(self, spark):
+        """The ranks are checkpointed before every iteration after the
+        first, so the returned plan is the last iteration alone over
+        checkpoint leaves: no file scan replayed under it, and at most
+        that iteration's three joins (ranks onto the adjacency, the
+        node-spine join and the broadcast dangling share)."""
+        plan = _plan(
+            QUERIES["llm_graph_pagerank"].spark(spark, SF_SMOKE), "simple"
+        )
+        assert "FileScan" not in plan, plan
+        assert "Scan ExistingRDD" in plan, plan
+        ops = [
+            ln.split("+- ", 1)[1].split(" ", 1)[0]
+            for ln in plan.splitlines()
+            if "+- " in ln
+        ]
+        assert sum(op.endswith("Join") for op in ops) <= 3, plan
 
     def test_delete_propagate_hash_joins_only(self, spark):
         """The cascade is semi/anti hash joins on native keys; the
