@@ -265,26 +265,28 @@ def probe_signature_index(
     Exact, never lossy: a colliding (band_idx, band_hash) always
     hashes to a touched bucket, and the directory filter is the
     IMAGE of the touched set under the group map, so every touched
-    bucket's group is read. Indexes written before the bucket-group
-    layout (one directory per bucket, no ``bucket_grp`` column) are
-    detected from the schema and probed with the legacy filter."""
+    bucket's group is read. Only the bucket-group layout written by
+    :func:`persist_signature_index` is read: an index without a
+    ``bucket_grp`` column (the older one-directory-per-bucket layout)
+    raises ``ValueError`` — rebuild the index."""
+    idx = spark.read.parquet(path)
+    if "bucket_grp" not in idx.columns:
+        raise ValueError(
+            f"probe_signature_index: {path} has no bucket_grp column — "
+            "an index layout this version does not read; rebuild it "
+            "with persist_signature_index"
+        )
     touched = [
         int(r[0])
         for r in new_sigs.select(_index_bucket(n_buckets).alias("b"))
         .distinct()
         .collect()
     ]
-    idx = spark.read.parquet(path)
-    if "bucket_grp" in idx.columns:
-        shift = _index_group_shift(n_buckets)
-        return (
-            idx.filter(
-                F.col("bucket_grp").isin(sorted({b >> shift for b in touched}))
-                & F.col("bucket").isin(touched)
-            )
-            .drop("bucket", "bucket_grp")
-        )
-    return idx.filter(F.col("bucket").isin(touched)).drop("bucket")
+    shift = _index_group_shift(n_buckets)
+    return idx.filter(
+        F.col("bucket_grp").isin(sorted({b >> shift for b in touched}))
+        & F.col("bucket").isin(touched)
+    ).drop("bucket", "bucket_grp")
 
 
 def minhash_candidate_pairs(

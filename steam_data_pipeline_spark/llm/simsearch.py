@@ -15,6 +15,14 @@ Two tiers:
   ``n_probe`` nearest centroids → cost O(|Q|·N·n_probe/C). The index
   (assignments) is a DataFrame you persist and reuse — at 100 TB this
   is the difference between a full scan and touching ~n_probe/C of it.
+Both ANN probes (``ivf_topk`` and its SRP-LSH sibling ``lsh_topk``)
+take a prebuilt index (:class:`IvfIndex` / :class:`LshIndex`) through
+``index=``. A probe prunes its index scan
+to the touched lists/buckets exactly when the index is file-backed
+(``reloaded``, set by ``load_ivf_index``/``load_lsh_index``); an
+in-memory index has no scan to cut. The persisted LSH layout is the
+bucket-group one written by :func:`save_lsh_index`; any other layout
+is rejected on load — rebuild the index.
 """
 
 from __future__ import annotations
@@ -41,13 +49,13 @@ class LshIndex:
     seed_base: int = 42
     # True only for indexes reloaded from a persisted bucket-
     # partitioned layout (load_lsh_index sets it): static touched-
-    # bucket pruning can only cut FILE reads, so lsh_topk's auto
-    # default prunes exactly when this is set — an in-memory index has
-    # no scan to prune and the probe-code collect would be pure cost.
+    # bucket pruning can only cut FILE reads, so lsh_topk prunes
+    # exactly when this is set — an in-memory index has no scan to
+    # prune and the probe-code collect would be pure cost.
     reloaded: bool = False
     # Bucket-GROUP partitioning shift of the persisted layout (None =
-    # legacy one-directory-per-bucket layout, or an in-memory index).
-    # When set, the on-disk tables are partitioned by
+    # an in-memory index; always set on a reloaded one). The on-disk
+    # tables are partitioned by
     # ``__bgrp = __bucket >> bgrp_shift`` and sorted by ``__bucket``
     # within files, so probe pruning is two-level: directory pruning on
     # the probed GROUPS plus parquet row-group/file pruning on the
@@ -71,17 +79,14 @@ class IvfIndex:
     """Prebuilt IVF index: centroid table + inverted-list assignments,
     plus the centroid count fixed at build time — so ``ivf_topk`` can
     size its probe default without running a ``count()`` job per query
-    batch. Unpacks as ``(centroids, assignments)`` for compatibility."""
+    batch."""
 
     centroids: DataFrame
     assignments: DataFrame
     n_centroids: int
     # see LshIndex.reloaded — set by load_ivf_index, gates ivf_topk's
-    # auto static-prune (file-backed assignments only)
+    # static prune (file-backed assignments only)
     reloaded: bool = False
-
-    def __iter__(self):
-        return iter((self.centroids, self.assignments))
 
 
 def dot_expr(a: str | Column, b: str | Column) -> Column:
@@ -222,9 +227,9 @@ def build_ivf_index(
     init_mode: str = "k-means||",
 ) -> IvfIndex:
     """Assign every vector to its nearest centroid (the IVF inverted
-    lists). Returns an :class:`IvfIndex` (unpacks as ``(centroids,
-    assignments)``); persist the assignments table partitioned by
-    centroid_id for reuse.
+    lists). Returns an :class:`IvfIndex`; persist it with
+    :func:`save_ivf_index` (assignments partitioned by centroid_id)
+    for reuse.
 
     ``max_iter``/``init_mode`` tune the Lloyd budget. The defaults
     (k-means||, 5 iterations) are the probe-recall posture every ANN
@@ -286,9 +291,7 @@ def build_lsh_index(
     return LshIndex(tables, n_planes=n_planes, seed_base=seed_base)
 
 
-def save_lsh_index(
-    index: LshIndex, path: str, bucket_group_shift: int | None = None
-) -> None:
+def save_lsh_index(index: LshIndex, path: str) -> None:
     """Persist an LSH index WITH its build parameters — the durable
     form of the :class:`LshIndex` contract. Layout::
 
@@ -307,22 +310,20 @@ def save_lsh_index(
     measured 2.6 s of the 2.7 s persisted-probe leg at sf0.1 (256
     dirs x 2 tables over 3 MB of data/table) was discovery + per-file
     open cost, and object stores at 100 TB charge the same way. So
-    buckets are grouped: ``bgrp_shift`` (default: n_planes - 5, i.e.
+    buckets are grouped: ``bgrp_shift`` (max(0, n_planes - 5), i.e.
     32 directories/table) coarsens the partition key while each file
     stays SORTED by ``__bucket`` — ``lsh_topk``'s probe then prunes
     directories on the probed GROUP set and parquet min/max stats
     prune row groups/files on the probed bucket IN predicate, so the
     probed-fraction read survives at near-bucket granularity with
     ~2^bgrp_shift fewer files (measured 2.63 -> 1.12 s on the probe
-    scan at sf0.1, identical rows). ``bucket_group_shift=0`` keeps
-    one-directory-per-bucket semantics (files still carry __bucket).
-    The shift travels in ``_params``, so readers never guess it.
+    scan at sf0.1, identical rows). The shift travels in ``_params``,
+    so readers never guess it.
     """
-    if bucket_group_shift is None:
-        bucket_group_shift = max(0, index.n_planes - 5)
+    shift = max(0, index.n_planes - 5)
     spark = index.tables[0].sparkSession
     spark.createDataFrame(
-        [(index.n_planes, index.seed_base, index.n_tables, bucket_group_shift)],
+        [(index.n_planes, index.seed_base, index.n_tables, shift)],
         "n_planes int, seed_base int, n_tables int, bgrp_shift int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_params")
     for i, t in enumerate(index.tables):
@@ -334,7 +335,7 @@ def save_lsh_index(
         # makes parquet stats prune at bucket granularity on reload
         (
             t.withColumn(
-                "__bgrp", F.shiftright(F.col("__bucket"), bucket_group_shift)
+                "__bgrp", F.shiftright(F.col("__bucket"), shift)
             )
             .repartition(F.col("__bgrp"))
             .sortWithinPartitions("__bucket")
@@ -348,12 +349,17 @@ def load_lsh_index(spark, path: str) -> LshIndex:
     """Reload a persisted LSH index; the build parameters travel with
     it, so ``lsh_topk`` probes with the exact planes the buckets were
     built under — the mismatch/out-of-order failure mode ADVICE r4
-    flagged cannot occur through this path. Indexes written before the
-    bucket-group layout (no ``bgrp_shift`` in ``_params``) load with
-    ``bgrp_shift=None`` and probe with the legacy per-bucket
-    partition filter."""
+    flagged cannot occur through this path. Only the bucket-group
+    layout written by :func:`save_lsh_index` loads: a ``_params``
+    without ``bgrp_shift`` (the older one-directory-per-bucket layout)
+    raises ``ValueError`` — rebuild the index."""
     p = spark.read.parquet(f"{path}/_params").first()
-    shift = p.bgrp_shift if "bgrp_shift" in p.__fields__ else None
+    if "bgrp_shift" not in p.__fields__:
+        raise ValueError(
+            f"load_lsh_index: {path}/_params has no bgrp_shift — an "
+            "index layout this version does not read; rebuild it with "
+            "build_lsh_index + save_lsh_index"
+        )
     tables = [
         spark.read.parquet(f"{path}/table_{i:03d}") for i in range(p.n_tables)
     ]
@@ -362,7 +368,7 @@ def load_lsh_index(spark, path: str) -> LshIndex:
         n_planes=p.n_planes,
         seed_base=p.seed_base,
         reloaded=True,
-        bgrp_shift=shift,
+        bgrp_shift=p.bgrp_shift,
     )
 
 
@@ -408,7 +414,6 @@ def lsh_topk(
     n_tables: int | None = None,
     probe_radius: int = 3,
     index: LshIndex | None = None,
-    prune_probed: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k via sign-random-projection LSH buckets — the
     bucketed sibling of ``ivf_topk`` (the north star names either as
@@ -441,13 +446,14 @@ def lsh_topk(
     with the probe side by construction; the parameters travel WITH
     the tables rather than being re-supplied by the caller. Passing
     ``n_tables`` alongside ``index`` raises (the table count is the
-    index's), as does a conflicting ``n_planes``.
+    index's), as does a conflicting ``n_planes``. A reloaded index
+    (:func:`load_lsh_index`) prunes its scan to the probed buckets; an
+    in-memory one is joined whole.
     """
     import itertools
 
     from steam_data_pipeline_spark.llm.dedup import _srp_bucket_udf
 
-    built_inline = index is None
     if index is None:
         index = build_lsh_index(
             corpus,
@@ -497,19 +503,12 @@ def lsh_topk(
     # IN predicate, which a __bucket-partitioned reloaded table prunes
     # at the file listing. Cost: ONE job collecting every table's base
     # codes for the bounded query batch (mask expansion is driver-side
-    # integer XOR). Skipped for in-query lineage indexes (no scan to
-    # prune). prune_probed=None (the default) resolves to
-    # ``index.reloaded`` — prune exactly when the index is file-backed;
-    # a prebuilt-but-in-memory index has no scan to cut, so the probe-
-    # code collect would be pure cost (ADVICE r9). True forces the
-    # collect+filter, False disables it — for callers whose probe set
-    # provably covers ~every bucket, and for the ann-prune rehearsal's
-    # on/off comparison (tools/scale_rehearsal.py).
-    if prune_probed is None:
-        prune_probed = index.reloaded
-    prebuilt = not built_inline and prune_probed
+    # integer XOR). Prunes exactly when the index is file-backed
+    # (``index.reloaded``); an in-memory index (built in-query or
+    # prebuilt) has no scan to cut, so the probe-code collect would be
+    # pure cost (ADVICE r9).
     blists: list[list[int] | None] = [None] * index.n_tables
-    if prebuilt:
+    if index.reloaded:
         srps = [
             _srp_bucket_udf(n_planes, seed=index.seed_base + t)
             for t in range(index.n_tables)
@@ -532,22 +531,19 @@ def lsh_topk(
                 ).alias("__bucket"),
             )
         )
-        if prebuilt:
+        if index.reloaded:
             if not blists[table]:
                 continue
-            flt = F.col("__bucket").isin(blists[table])
-            if index.bgrp_shift is not None:
-                # bucket-group layout (save_lsh_index): directory
-                # pruning on the probed groups, then the __bucket IN
-                # predicate prunes row groups/files via parquet stats
-                # (files are sorted by __bucket within each group)
-                flt = (
-                    F.col("__bgrp").isin(
-                        sorted({b >> index.bgrp_shift for b in blists[table]})
-                    )
-                    & flt
+            # bucket-group layout (save_lsh_index): directory pruning on
+            # the probed groups, then the __bucket IN predicate prunes
+            # row groups/files via parquet stats (files are sorted by
+            # __bucket within each group)
+            tagged = tagged.filter(
+                F.col("__bgrp").isin(
+                    sorted({b >> index.bgrp_shift for b in blists[table]})
                 )
-            tagged = tagged.filter(flt).select(key, "__bucket")
+                & F.col("__bucket").isin(blists[table])
+            ).select(key, "__bucket")
         pairs = tagged.join(F.broadcast(probes), on="__bucket").select(query_key, key)
         cands = pairs if cands is None else cands.union(pairs)
     if cands is None:
@@ -581,8 +577,7 @@ def ivf_topk(
     query_key: str = "query_id",
     n_centroids: int = 16,
     n_probe: int | None = None,
-    index: IvfIndex | tuple[DataFrame, DataFrame] | None = None,
-    prune_probed: bool | None = None,
+    index: IvfIndex | None = None,
 ) -> DataFrame:
     """Approximate top-k: probe only the ``n_probe`` centroids nearest
     each query, exact cosine within the probed lists.
@@ -591,11 +586,12 @@ def ivf_topk(
     :func:`build_ivf_index` — the production calling convention: the
     index is built once, persisted, and amortized across every query
     batch, so per-query cost is probe-only (the build-time centroid
-    count travels with the index, so no per-batch ``count()`` job). A
-    legacy bare ``(centroids, assignments)`` pair still works but pays
-    one ``count()`` job to size the probe default when ``n_probe`` is
-    omitted. When ``index`` is omitted entirely the index is built
-    in-query (the registered demo query's shape).
+    count travels with the index, so no per-batch ``count()`` job).
+    Anything else passed as ``index`` raises ``TypeError``. A reloaded
+    index (:func:`load_ivf_index`) prunes its assignments scan to the
+    probed lists; an in-memory one is joined whole. When ``index`` is
+    omitted the index is built in-query (the registered demo query's
+    shape).
 
     ``n_probe`` defaults to the probed FRACTION 5/16 of the index's
     actual centroid count (min 5) rather than a fixed count: a prebuilt
@@ -611,22 +607,20 @@ def ivf_topk(
     converged by ~10 iterations, so the residual gap is the data's
     geometry, not index quality. Clustered real-world embeddings
     deliver far higher recall at smaller touch."""
-    built_inline = index is None
     if index is None:
         index = build_ivf_index(corpus, key, vec_col, n_centroids)
-    if isinstance(index, IvfIndex):
-        cents, assign = index.centroids, index.assignments
-        actual_c = index.n_centroids
-    else:
-        # legacy bare (centroids, assignments) pair: the build-time
-        # centroid count was not carried, so sizing the probe default
-        # costs one count() job — last resort only; prefer IvfIndex
-        # (or pass n_probe explicitly, as scale_rehearsal.py does)
-        cents, assign = index
-        actual_c = cents.count() if n_probe is None else -1
+    elif not isinstance(index, IvfIndex):
+        raise TypeError(
+            "ivf_topk: index= takes the IvfIndex returned by "
+            "build_ivf_index or load_ivf_index (a bare (centroids, "
+            "assignments) pair does not carry the build-time centroid "
+            "count — wrap it as IvfIndex(centroids, assignments, "
+            "n_centroids))"
+        )
+    assign = index.assignments
     if n_probe is None:
-        n_probe = max(5, round(actual_c * 5 / 16))
-    c = F.broadcast(cents.select("centroid_id", "centroid"))
+        n_probe = max(5, round(index.n_centroids * 5 / 16))
+    c = F.broadcast(index.centroids.select("centroid_id", "centroid"))
     qprobe = (
         drop_null_vectors(queries, vec_col)
         .select(query_key, F.col(vec_col).alias("__qvec"))
@@ -644,21 +638,15 @@ def ivf_topk(
         .filter(F.col("__rn") <= n_probe)
         .select(query_key, "__qvec", "centroid_id")
     )
-    if prune_probed is None:
-        # auto: prune only when the assignments table is file-backed
-        # (load_ivf_index sets reloaded) — an in-memory prebuilt index
-        # (or the legacy bare pair, which cannot prove it is file-
-        # backed) has no partitioned scan to cut, so the probe collect
-        # would be pure cost (ADVICE r9); pass True to force.
-        prune_probed = isinstance(index, IvfIndex) and index.reloaded
-    if not built_inline and prune_probed:
+    if index.reloaded:
         # Static touched-list pruning, same rationale as lsh_topk:
         # dynamic partition pruning does not fire for this broadcast
         # join, so the probed centroid ids — bounded by n_centroids —
         # are collected and pushed as an IN predicate that a reloaded
         # centroid_id-partitioned assignments table prunes at the file
         # listing. One tiny job over the bounded query batch; skipped
-        # when the index was just built in-query (lineage, no scan).
+        # for an in-memory index (lineage, no partitioned scan to cut,
+        # so the collect would be pure cost — ADVICE r9).
         plist = [
             r["centroid_id"]
             for r in probes.select("centroid_id").distinct().collect()

@@ -37,8 +37,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from steam_data_pipeline_spark.operators.caching import spine_cache
-
 # Below this Catalyst-estimated input size the histogram-rank machinery
 # is pure fixed cost: the whole spine sorts comfortably inside ONE task
 # (4 MiB sorts in milliseconds), so the plain window ntile/cume is both
@@ -117,7 +115,6 @@ def scalable_ntile_desc_multi(
     key: str,
     n_bins: int = 4096,
     small_bytes: int = SMALL_SPINE_BYTES,
-    cache_spine: bool = False,
 ) -> DataFrame:
     """Add, for each ``(metric, out_col)`` pair, ``out_col`` =
     ``ntile(n_tiles) OVER (ORDER BY metric DESC, key)`` — the exact
@@ -160,24 +157,18 @@ def scalable_ntile_desc_multi(
                 f"(({m} - __mn_{m}) * {n_bins}) div (__mx_{m} - __mn_{m} + 1)"
             ).cast("long"),
         )
-    # UNCACHED by round-11 measurement: round 10 cached this frame
-    # (each histogram branch re-derives it otherwise — 8 scans for the
+    # UNCACHED by measurement: round 10 cached this frame (each
+    # histogram branch re-derives it otherwise — 8 scans for the
     # 3-metric RFM) after a 1x/10x A/B win (3.04 -> 2.21 s at 10x/6M
     # rows), but the 30x tier REVERSED it decisively (35.1 s cached vs
-    # 11.7 s uncached at 18M rows, tools/scale_rehearsal.py cache-ab):
-    # the columnar materialization of an n-ROW, extra-column-laden binned frame
+    # 11.7 s uncached at 18M rows in round 11; 33.6 vs 15.4 s and 34.2
+    # vs 13.2 s unbiased in round 12, SCALE.md): the columnar
+    # materialization of an n-ROW, extra-column-laden binned frame
     # grows with the fact while the re-scans it saves are narrow
     # pruned projections. Unlike the contingency cells (<=12 rows,
     # genuinely bounded), this spine is O(n) — the 100 TB design point
     # says re-scan. Toy inputs bypass via the small_bytes gate anyway.
-    # cache_spine=True re-enables the round-10 plan so the cache-ab
-    # rehearsal keeps measuring the same A/B every round. The per-row
-    # frame continues from the cached frame too — otherwise the B arm
-    # pays materialization AND a full uncached re-derivation, biasing
-    # the A/B (round-12 advice fix; exact_cume_counts_multi already
-    # did this via `out = binned`).
-    binned = spine_cache(out) if cache_spine else out
-    out = binned
+    binned = out
     for m, _ in metrics:
         hist = (
             binned.groupBy(f"__bin_{m}")
@@ -242,7 +233,6 @@ def exact_cume_counts_multi(
     metrics: list[tuple[str, str, str]],
     n_bins: int = 4096,
     small_bytes: int = SMALL_SPINE_BYTES,
-    cache_spine: bool = False,
 ) -> DataFrame:
     """For each ``(metric, le_col, ge_col)`` triple, add ``le_col`` =
     count of rows with ``metric`` <= this row's and ``ge_col`` = the
@@ -297,12 +287,10 @@ def exact_cume_counts_multi(
                 f"(({m} - __mn_{m}) * {n_bins}) div (__mx_{m} - __mn_{m} + 1)"
             ).cast("long"),
         )
-    # uncached — same round-11 30x reversal as
-    # scalable_ntile_desc_multi (35.4 s cached vs 15.5 s uncached at
-    # 18M rows): the O(n) binned frame's materialization cost grows
-    # with the fact; re-scanning the narrow projection does not.
-    if cache_spine:
-        binned = spine_cache(binned)
+    # uncached — same 30x reversal as scalable_ntile_desc_multi (35.4 s
+    # cached vs 15.5 s uncached at 18M rows): the O(n) binned frame's
+    # materialization cost grows with the fact; re-scanning the narrow
+    # projection does not.
     out = binned
     for m, _, _ in metrics:
         hist = (

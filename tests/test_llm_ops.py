@@ -183,11 +183,10 @@ class TestSimSearch:
             (r.query_id, r.vec_id) for r in ivf_topk(emb, queries, k=5).collect()
         )
         built = build_ivf_index(emb)
-        cents, assign = built  # IvfIndex unpacks as (centroids, assignments)
         # localCheckpoint stands in for persist-to-parquet + reload
         prebuilt = IvfIndex(
-            cents.localCheckpoint(eager=True),
-            assign.localCheckpoint(eager=True),
+            built.centroids.localCheckpoint(eager=True),
+            built.assignments.localCheckpoint(eager=True),
             built.n_centroids,
         )
         reused_ivf = sorted(
@@ -271,27 +270,22 @@ class TestSimSearch:
         plan2 = rel._jdf.queryExecution().executedPlan().toString()
         assert "__bgrp" in plan2 and "PartitionFilters" in plan2, plan2
 
-    def test_persisted_lsh_legacy_layout_backcompat(
+    def test_persisted_lsh_legacy_layout_rejected(
         self, spark, emb, tmp_path
     ):
-        """Indexes persisted BEFORE the bucket-group layout (r13) —
-        ``_params`` without ``bgrp_shift``, one directory per
-        ``__bucket`` — must still load (``bgrp_shift=None``) and probe
-        with results identical to a freshly-written grouped index."""
+        """An index in the layout written before the bucket-group one
+        — ``_params`` without ``bgrp_shift``, one directory per
+        ``__bucket`` — must fail loudly on load, naming the fix
+        (rebuild), never probe with a degraded filter."""
+        import pytest as _pytest
+
         from steam_data_pipeline_spark.llm.simsearch import (
             build_lsh_index,
             load_lsh_index,
-            lsh_topk,
-            save_lsh_index,
         )
 
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
         lidx = build_lsh_index(emb, n_planes=8, n_tables=2)
-        new_d = str(tmp_path / "new")
-        save_lsh_index(lidx, new_d)
-        # hand-write the pre-r13 layout: params without bgrp_shift,
+        # hand-write the old layout: params without bgrp_shift,
         # tables partitioned per-bucket
         old_d = str(tmp_path / "old")
         spark.createDataFrame(
@@ -302,29 +296,20 @@ class TestSimSearch:
             tab.repartition(F.col("__bucket")).write.partitionBy(
                 "__bucket"
             ).parquet(f"{old_d}/table_{i:03d}")
-        old_loaded = load_lsh_index(spark, old_d)
-        assert old_loaded.bgrp_shift is None and old_loaded.reloaded
-        new_loaded = load_lsh_index(spark, new_d)
-        assert new_loaded.bgrp_shift is not None
-        a = sorted(
-            (r.query_id, r.vec_id)
-            for r in lsh_topk(emb, queries, k=5, index=new_loaded).collect()
-        )
-        b = sorted(
-            (r.query_id, r.vec_id)
-            for r in lsh_topk(emb, queries, k=5, index=old_loaded).collect()
-        )
-        assert a == b
+        with _pytest.raises(ValueError, match="bgrp_shift.*rebuild"):
+            load_lsh_index(spark, old_d)
 
     def test_index_contract_enforced(self, spark, emb):
         """ADVICE r4: the prebuilt-index contract must be enforced, not
         documented — mismatched n_planes and redundant n_tables raise,
         a bare table list (which cannot prove its build params) raises,
-        and an empty index raises at construction."""
+        a bare (centroids, assignments) IVF pair raises, and an empty
+        index raises at construction."""
         import pytest as _pytest
 
         from steam_data_pipeline_spark.llm.simsearch import (
             LshIndex,
+            build_ivf_index,
             build_lsh_index,
             lsh_topk,
         )
@@ -339,6 +324,11 @@ class TestSimSearch:
             lsh_topk(emb, queries, n_tables=3, index=idx)
         with _pytest.raises(TypeError, match="LshIndex"):
             lsh_topk(emb, queries, index=idx.tables)
+        ivf = build_ivf_index(emb)
+        with _pytest.raises(TypeError, match="IvfIndex"):
+            ivf_topk(
+                emb, queries, n_probe=4, index=(ivf.centroids, ivf.assignments)
+            )
         with _pytest.raises(ValueError, match="at least one"):
             LshIndex([])
         # matching explicit n_planes is accepted
@@ -825,15 +815,16 @@ class TestIncrementalDedup:
         )
         assert got == want == [11]
 
-    def test_signature_index_legacy_layout_backcompat(self, spark, tmp_path):
-        """A signature index persisted BEFORE the bucket-group layout
-        (r13) — partitioned per-bucket, no ``bucket_grp`` column — is
-        detected from its schema and probed with the legacy filter,
-        returning the same rows as a freshly-written grouped index."""
+    def test_signature_index_legacy_layout_rejected(self, spark, tmp_path):
+        """A signature index in the layout written before the
+        bucket-group one — partitioned per-bucket, no ``bucket_grp``
+        column — must fail loudly on probe, naming the fix (rebuild),
+        never probe with a degraded filter."""
+        import pytest as _pytest
+
         from steam_data_pipeline_spark.llm.dedup import (
             _index_bucket,
             banded_signatures,
-            persist_signature_index,
             probe_signature_index,
         )
 
@@ -847,19 +838,14 @@ class TestIncrementalDedup:
                 "doc_id long, text string",
             )
         )
-        sigs = banded_signatures(corpus)
-        new_p = str(tmp_path / "grouped")
-        persist_signature_index(sigs, new_p)
         old_p = str(tmp_path / "legacy")
-        sigs.withColumn("bucket", _index_bucket()).repartition(
-            F.col("bucket")
-        ).write.partitionBy("bucket").parquet(old_p)
-        key = lambda df: sorted(
-            (r.doc_id, r.band_idx, r.band_hash) for r in df.collect()
+        banded_signatures(corpus).withColumn(
+            "bucket", _index_bucket()
+        ).repartition(F.col("bucket")).write.partitionBy("bucket").parquet(
+            old_p
         )
-        a = key(probe_signature_index(spark, new_p, new_sigs))
-        b = key(probe_signature_index(spark, old_p, new_sigs))
-        assert a == b and a  # identical and non-empty (self-collision)
+        with _pytest.raises(ValueError, match="bucket_grp.*rebuild"):
+            probe_signature_index(spark, old_p, new_sigs)
 
 
 class TestContainment:

@@ -10,7 +10,6 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from steam_data_pipeline_spark.operators import caching
-from steam_data_pipeline_spark.operators.ranks import scalable_ntile_desc_multi
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -19,15 +18,9 @@ def test_release_spines_unpersists_and_empties(spark):
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("m")
     )
-    # small_bytes=0 forces the histogram path and cache_spine=True the
-    # round-10 cached plan (the committed default is uncached after the
-    # round-11 30x reversal; the flag exists for the cache-ab rehearsal
-    # and registers through spine_cache exactly like any other site)
-    out = scalable_ntile_desc_multi(
-        df, 4, [("m", "tile")], key="k", small_bytes=0, cache_spine=True
-    )
+    out = caching.spine_cache(df)
     out.count()  # force — materializes the registered spine cache
-    assert caching._LIVE, "scalable_ntile should have registered a spine"
+    assert caching._LIVE, "spine_cache should have registered a spine"
     live = list(caching._LIVE)
     n = caching.release_spines()
     assert n == len(live)
@@ -37,10 +30,10 @@ def test_release_spines_unpersists_and_empties(spark):
 
 
 def test_no_unregistered_cache_in_rank_primitives():
-    """ranks.py must route every cache through spine_cache — a raw
-    .cache() there is exactly the leak ADVICE flagged."""
+    """ranks.py caches nothing (its O(n) spines re-scan, SCALE.md
+    rounds 11-12); a raw .cache() there is exactly the leak ADVICE
+    flagged."""
     src = Path(
         "steam_data_pipeline_spark/operators/ranks.py"
     ).read_text()
     assert ".cache()" not in src
-    assert "spine_cache(" in src

@@ -896,10 +896,10 @@ def rehearse_ann_prune(sf_dir: str, factor: int = 10, repeats: int = 2) -> None:
     8 planes a multi-query batch probes ~every one of 256 buckets, so
     pruning is a no-op; at 12 planes / radius 2 the probe set covers a
     small fraction of 4096 buckets and the predicate prunes the file
-    listing itself. Compares the same reloaded index probed with
-    prune_probed=True vs False (identical results — asserted) on a
-    factor-x corpus."""
-    import tempfile
+    listing itself. Compares the reloaded index (pruned probe) with
+    the same tables marked in-memory (``reloaded=False``: full-scan
+    probe), identical results asserted, on a factor-x corpus."""
+    import dataclasses
 
     import numpy as np
     from pyspark.sql import functions as F
@@ -943,21 +943,20 @@ def rehearse_ann_prune(sf_dir: str, factor: int = 10, repeats: int = 2) -> None:
     build_s = time.time() - t0
     idx = load_lsh_index(spark, d)
 
-    def probe(prune: bool) -> tuple[float, list]:
+    def probe(index) -> tuple[float, list]:
         walls = []
         rows = None
         for _ in range(repeats):
             t0 = time.time()
             out = lsh_topk(
-                corpus, queries, k=10, index=idx,
-                probe_radius=radius, prune_probed=prune,
+                corpus, queries, k=10, index=index, probe_radius=radius
             )
             rows = sorted(map(tuple, out.collect()))
             walls.append(time.time() - t0)
         return min(walls), rows
 
-    pruned_s, pruned_rows = probe(True)
-    full_s, full_rows = probe(False)
+    pruned_s, pruned_rows = probe(idx)
+    full_s, full_rows = probe(dataclasses.replace(idx, reloaded=False))
     assert pruned_rows == full_rows, "pruning changed results"
     n_masks = 1 + n_planes + n_planes * (n_planes - 1) // 2
     print(
@@ -1161,30 +1160,20 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
     corpus; the decisions extrapolate two more orders of magnitude, so
     measure at 30x+ and record whether any verdict FLIPS).
 
-    Four A/B rows at the chosen factor, exact same operation on both
+    Two A/B rows at the chosen factor, exact same operation on both
     arms (results forced through the noop sink, min of ``repeats``):
-
-    * ``llm_dedup_editdist`` / ``llm_graph_triangles`` — the round-10
-      KEPT-UNCACHED cases. B-arm applies the textbook fix that was
-      rejected: cache every source-table read (patching the query
-      module's ``t``), so all plan branches share one materialization
-      instead of pruned parallel re-scans.
-    * ``ntile-multi`` / ``cume-multi`` — run as the raw primitives on
-      scaled lineitem axes with ``small_bytes=0`` (the at-scale path).
-      Round 10 CACHED these spines on a 1x/10x win; this rehearsal's
-      30x tier REVERSED that (35 s cached vs 12-16 s uncached at 18M
-      rows), so the committed arm is now UNCACHED and the B-arm
-      (``cache_spine=True``) is the round-10 plan.
+    ``llm_dedup_editdist`` / ``llm_graph_triangles``, the round-10
+    KEPT-UNCACHED cases. B-arm applies the textbook fix that was
+    rejected: cache every source-table read (patching the query
+    module's ``t``), so all plan branches share one materialization
+    instead of pruned parallel re-scans. (The ranks-spine rows,
+    ``ntile-multi`` / ``cume-multi``, are retired: the cached arm lost
+    at 30x in rounds 11 and 12 and the library no longer has it.)
 
     A verdict flips when the committed arm is SLOWER at this tier.
     """
-    import math
-
-    from pyspark.sql import functions as F
-
-    from steam_data_pipeline_spark.operators import caching, ranks
+    from steam_data_pipeline_spark.operators import caching
     from steam_data_pipeline_spark.plans import extensions as ext
-    from steam_data_pipeline_spark.sources.tables import read_table
 
     spark = _spark()
     out_dir = os.path.join(
@@ -1196,16 +1185,6 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
         f"# cache-ab rehearsal at {factor}x ({out_dir}, build/reuse "
         f"{time.time() - t0:.1f} s), repeats={repeats}"
     )
-
-    def timed(thunk):
-        walls = []
-        for _ in range(repeats):
-            caching.release_spines()
-            spark.catalog.clearCache()
-            t1 = time.time()
-            thunk()
-            walls.append(time.time() - t1)
-        return min(walls)
 
     print("case\tcommitted_s\talternative_s\tverdict_holds")
 
@@ -1227,46 +1206,6 @@ def rehearse_cache_ab(sf_dir: str, factor: int, repeats: int = 2) -> None:
             f"{committed <= alt}"
         )
 
-    # --- cached ranks spines: committed = spine cache, alt = rescan ---
-    axes = read_table(spark, out_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.col("l_suppkey").cast("long").alias("sk"),
-        F.monotonically_increasing_id().alias("k"),
-    ).localCheckpoint(eager=True)
-    def ntile_case(cache_spine):
-        return lambda: _noop(
-            ranks.scalable_ntile_desc_multi(
-                axes,
-                5,
-                [("cents", "t_c"), ("qty", "t_q"), ("sk", "t_s")],
-                key="k",
-                small_bytes=0,
-                cache_spine=cache_spine,
-            )
-        )
-
-    def cume_case(cache_spine):
-        return lambda: _noop(
-            ranks.exact_cume_counts_multi(
-                axes,
-                [("cents", "le_c", "ge_c"), ("qty", "le_q", "ge_q"),
-                 ("sk", "le_s", "ge_s")],
-                small_bytes=0,
-                cache_spine=cache_spine,
-            )
-        )
-
-    # committed arm = UNCACHED (the round-11 30x reversal of round
-    # 10's cached adoption); alternative = cache_spine=True, the
-    # round-10 plan — kept parameterized so this A/B re-runs verbatim
-    for label, case in (("ntile-multi", ntile_case), ("cume-multi", cume_case)):
-        committed = timed(case(False))
-        alt = timed(case(True))
-        print(
-            f"{label}(uncached)\t{committed:.2f}\t{alt:.2f}\t"
-            f"{committed <= alt}"
-        )
     spark.stop()
 
 
