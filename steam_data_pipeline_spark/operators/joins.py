@@ -6,10 +6,9 @@ Strategy notes for the 100 TB posture:
   are **broadcast** — an explicit ``F.broadcast`` hint where the small
   side is known small by construction, otherwise AQE's runtime
   size-based switch handles it.
-* Fact⋈fact joins shuffle on the join key; both sides of
-  ``interval_overlap_join`` are pre-reduced (intervals are aggregated
-  islands, orders of magnitude smaller than the raw series) before the
-  range condition is applied.
+* Fact⋈fact joins shuffle on the join key; the point-in-interval join
+  (:func:`range_join_binned`) adds a time bin to the equi key so only
+  co-binned pairs reach the range condition.
 * The as-of join reduces the right side to latest-per-key *first*
   (aggregate-before-join), so the join input is |keys|, not |facts|.
 """
@@ -17,8 +16,6 @@ Strategy notes for the 100 TB posture:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-from steam_data_pipeline_spark.operators.windows import island_intervals
 
 
 def enrich_details(candidates: DataFrame, details: DataFrame, key: str) -> DataFrame:
@@ -53,33 +50,6 @@ def enrich_facts(
     return out
 
 
-def interval_overlap_join(
-    facts: DataFrame,
-    key: str,
-    ts: str,
-    flag: Column,
-) -> DataFrame:
-    """Range/interval join of a fact series against its own derived
-    flag-islands (PLAN:50-53): tag every fact row with the island
-    interval containing it, NULL when outside every interval.
-
-    Intervals are derived via ``island_intervals`` (aggregated — small)
-    and the join condition is ``key equality AND ts BETWEEN`` — Spark
-    executes the equi part as the join key and the range as a post-join
-    filter, so this stays a hash/sort-merge join, not a cartesian.
-    """
-    intervals = island_intervals(facts, key, ts, flag).select(
-        F.col(key).alias("__ikey"),
-        F.col("island_id"),
-        F.col("start_ts"),
-        F.col("end_ts"),
-    )
-    cond = (F.col(key) == F.col("__ikey")) & F.col(ts).between(
-        F.col("start_ts"), F.col("end_ts")
-    )
-    return facts.join(intervals, on=cond, how="left").drop("__ikey")
-
-
 def range_join_binned(
     points: DataFrame,
     intervals: DataFrame,
@@ -92,12 +62,12 @@ def range_join_binned(
     """Point-in-interval join via time binning — the 100 TB path for
     range joins when keys carry many points AND many intervals.
 
-    The plain strategy (equi join on ``key``, range as residual filter —
-    ``interval_overlap_join``) materializes |points_k| x |intervals_k|
-    candidate pairs per key before filtering. Here each interval row is
-    exploded to the fixed-width time bins it spans and each point maps
-    to exactly one bin, so the equi key becomes ``(key, bin)`` and only
-    co-binned pairs are ever joined; the exact BETWEEN predicate remains
+    The plain strategy (equi join on ``key``, range as residual filter)
+    materializes |points_k| x |intervals_k| candidate pairs per key
+    before filtering. Here each interval row is exploded to the
+    fixed-width time bins it spans and each point maps to exactly one
+    bin, so the equi key becomes ``(key, bin)`` and only co-binned
+    pairs are ever joined; the exact BETWEEN predicate remains
     as the residual filter, so results are identical (the oracle for
     the registered query IS the plain range join). Pick ``bin_seconds``
     near the typical interval span: wider bins → fewer duplicate

@@ -7,10 +7,10 @@ fine on a dim, a scale-killer on a million-to-billion-row entity
 spine (measured: the RFM customer-spine sort was the 0.38 10×
 exponent in SCALE.md round 9).
 
-:func:`exact_rank_desc` computes the identical total-order rank with
+:func:`scalable_ntile_desc_multi` computes the identical ntile with
 bounded shuffles only — the two-level histogram decomposition:
 
-1. one scalar-spine aggregate gives ``(min, max, n)`` of the metric
+1. one scalar-spine aggregate gives ``(min, max, n)`` of each metric
    (broadcast back — the sanctioned 1-row crossJoin);
 2. each row lands in one of ``n_bins`` fixed-width integer bins; a
    map-side-combined ``groupBy(bin)`` histogram (≤ n_bins rows) plus a
@@ -22,7 +22,9 @@ bounded shuffles only — the two-level histogram decomposition:
 rank = higher-bin count + within-bin row_number — exact, because bins
 partition the metric's order: every row in a higher bin has a strictly
 higher metric, every row ranked earlier within the bin precedes in the
-(metric desc, key asc) total order.
+(metric desc, key asc) total order. The tile follows from the rank and
+``n``. :func:`exact_cume_counts_multi` applies the same decomposition to
+the tie-aware cumulative counts an empirical CDF needs.
 
 Contracts: ``metric`` and ``key`` are non-null integral columns, the
 (metric, key) pair is unique (key is a tie-break id), and
@@ -59,53 +61,6 @@ def _plan_estimated_bytes(df: DataFrame) -> int:
         )
     except Exception:  # noqa: BLE001 - api drift -> assume big
         return 1 << 62
-
-
-def exact_rank_desc(
-    df: DataFrame,
-    metric: str,
-    key: str,
-    rank_col: str = "__rank",
-    n_bins: int = 4096,
-) -> DataFrame:
-    """Add ``rank_col`` = 1-based rank of each row under
-    (``metric`` DESC, ``key`` ASC) — bit-identical to
-    ``row_number() OVER (ORDER BY metric DESC, key)`` — with no
-    unbounded single-partition sort."""
-    spine = df.agg(
-        F.min(metric).cast("long").alias("__mn"),
-        F.max(metric).cast("long").alias("__mx"),
-    )
-    binned = df.crossJoin(F.broadcast(spine)).withColumn(
-        "__bin",
-        F.expr(
-            f"(({metric} - __mn) * {n_bins}) div (__mx - __mn + 1)"
-        ).cast("long"),
-    )
-    hist = (
-        binned.groupBy("__bin")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .withColumn(
-            "__higher",
-            F.coalesce(
-                F.sum("__cnt").over(
-                    Window.orderBy(F.col("__bin").desc()).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("__cnt")
-    )
-    w_bin = Window.partitionBy("__bin").orderBy(
-        F.col(metric).desc(), F.col(key).asc()
-    )
-    return (
-        binned.join(F.broadcast(hist), on="__bin")
-        .withColumn(rank_col, F.col("__higher") + F.row_number().over(w_bin))
-        .drop("__bin", "__mn", "__mx", "__higher")
-    )
 
 
 def scalable_ntile_desc_multi(
@@ -213,21 +168,6 @@ def scalable_ntile_desc_multi(
     return out.drop(*drops)
 
 
-def scalable_ntile_desc(
-    df: DataFrame,
-    n_tiles: int,
-    metric: str,
-    key: str,
-    out_col: str,
-    n_bins: int = 4096,
-) -> DataFrame:
-    """Single-metric convenience wrapper over
-    :func:`scalable_ntile_desc_multi`."""
-    return scalable_ntile_desc_multi(
-        df, n_tiles, [(metric, out_col)], key, n_bins=n_bins
-    )
-
-
 def exact_cume_counts_multi(
     df: DataFrame,
     metrics: list[tuple[str, str, str]],
@@ -240,9 +180,9 @@ def exact_cume_counts_multi(
     (ORDER BY metric RANGE UNBOUNDED PRECEDING)`` and its descending
     twin) — with no unbounded single-partition sort for ANY metric.
 
-    Same two-level histogram decomposition as :func:`exact_rank_desc`:
-    the <=bin / >=bin prefix counts come from the bounded n_bins
-    running sums; within a bin, two RANGE-framed windows (asc / desc
+    Same two-level histogram decomposition as
+    :func:`scalable_ntile_desc_multi`: the <=bin / >=bin prefix counts
+    come from the bounded n_bins running sums; within a bin, two RANGE-framed windows (asc / desc
     over the SAME hash partitioning) count ties inclusively. The ECOD
     outlier score and any empirical-CDF consumer need exactly these
     counts; row_number-style ranks are tie-broken and therefore wrong
@@ -252,8 +192,8 @@ def exact_cume_counts_multi(
     crossJoin, and the per-metric histogram/window passes chain on the
     same frame — the same linear-plan-growth discipline as
     :func:`scalable_ntile_desc_multi` (a naive per-metric composition
-    re-derives the upstream spine exponentially: chaining the
-    single-metric version 3x measured 42 BroadcastNestedLoopJoin
+    re-derives the upstream spine exponentially: chaining a
+    single-metric pass 3x measured 42 BroadcastNestedLoopJoin
     nodes in one plan).
 
     Same size gate as :func:`scalable_ntile_desc_multi`: under
@@ -343,18 +283,3 @@ def exact_cume_counts_multi(
             f"__above_{m}",
         ]
     return out.drop(*drops)
-
-
-def exact_cume_counts(
-    df: DataFrame,
-    metric: str,
-    le_col: str,
-    ge_col: str,
-    n_bins: int = 4096,
-    small_bytes: int = SMALL_SPINE_BYTES,
-) -> DataFrame:
-    """Single-metric convenience wrapper over
-    :func:`exact_cume_counts_multi`."""
-    return exact_cume_counts_multi(
-        df, [(metric, le_col, ge_col)], n_bins=n_bins, small_bytes=small_bytes
-    )

@@ -21,7 +21,6 @@ guarantee the reference gets from its DB lock (main.py:387-404).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -29,6 +28,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from steam_data_pipeline_spark.operators.relational import dedup_last_writer
+
+#: generations every commit leaves on disk: the current one plus the
+#: previous, so a reader that resolved the old pointer finishes its scan
+KEEP_GENERATIONS = 2
 
 
 def merge_upsert(
@@ -96,16 +99,10 @@ class ParquetTableStore:
     writer leaves the old generation intact.
 
     Old generations are garbage-collected *lazily* (the newest
-    ``keep_generations`` survive every commit), so a lazy DataFrame that
+    ``KEEP_GENERATIONS`` survive every commit), so a lazy DataFrame that
     resolved the previous pointer finishes its scan instead of hitting
     FileNotFoundException mid-flight — snapshot isolation for one
     writer + concurrent readers.
-
-    Hash-bucketed tables (``upsert(..., n_buckets=…)``) swap per-bucket
-    pointers held in one ``_MANIFEST.json``: a MERGE rewrites only the
-    buckets containing touched keys, turning the O(table) write
-    amplification of pointer-swap MERGE into O(touched buckets) — the
-    plain-parquet miniature of Delta/Iceberg partition-scoped MERGE.
     """
 
     #: test-only fault-injection point: called with the batch_id after
@@ -114,10 +111,9 @@ class ParquetTableStore:
     #: survive). Production leaves this None.
     fault_hook = None
 
-    def __init__(self, spark: SparkSession, root: str, keep_generations: int = 2):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.keep_generations = max(1, keep_generations)
         os.makedirs(root, exist_ok=True)
 
     def _tdir(self, table: str) -> str:
@@ -126,8 +122,16 @@ class ParquetTableStore:
     def _pointer(self, table: str) -> str:
         return os.path.join(self._tdir(table), "_CURRENT")
 
-    def _manifest_path(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_MANIFEST.json")
+    def _reject_manifest(self, table: str) -> None:
+        """Fail loudly on a table written by the retired bucket-manifest
+        layout: its rows live behind ``_MANIFEST.json``, which this store
+        no longer reads, so serving it would silently drop them."""
+        if os.path.exists(os.path.join(self._tdir(table), "_MANIFEST.json")):
+            raise ValueError(
+                f"table {table!r} uses the bucket-manifest layout "
+                "(_MANIFEST.json), which is no longer supported; rebuild "
+                "it as a pointer table"
+            )
 
     def _gens(self, table: str) -> list[str]:
         tdir = self._tdir(table)
@@ -155,62 +159,17 @@ class ParquetTableStore:
         return path if os.path.exists(path) else None
 
     def read(self, table: str) -> DataFrame | None:
-        if os.path.exists(self._manifest_path(table)):
-            paths = [
-                p for k, p in self._read_manifest(table).items()
-                if not k.startswith("__")
-            ]
-            if not paths:
-                return None
-            return self.spark.read.parquet(
-                *(os.path.join(self._tdir(table), p) for p in paths)
-            )
+        self._reject_manifest(table)
         path = self.current_path(table)
         if path is None:
             return None
         return self.spark.read.parquet(path)
 
-    def compact(self, table: str, target_files: int = 1) -> None:
-        """Rewrite the table into ``target_files`` files per unit (the
-        OPTIMIZE of table formats, in miniature). Streaming appends and
-        per-bucket MERGEs accrete small files; at scale every small
-        file is a task + an open + a footer parse, so periodic
-        compaction is what keeps read amplification flat. Pointer
-        tables compact to one new generation (atomic flip); bucketed
-        tables rewrite every manifest bucket into one generation with
-        ``target_files`` files per bucket (atomic manifest swap) —
-        bucket boundaries, and therefore the zero-shuffle join
-        property, are preserved.
-        """
-        if os.path.exists(self._manifest_path(table)):
-            manifest = self._read_manifest(table)
-            buckets = sorted(
-                (k for k in manifest if not k.startswith("__")), key=int
-            )
-            if not buckets:
-                return
-            gen = self._next_gen(table)
-            for b in buckets:
-                src = os.path.join(self._tdir(table), manifest[b])
-                out = os.path.join(self._tdir(table), gen, f"__bucket={b}")
-                self.spark.read.parquet(src).coalesce(target_files).write.mode(
-                    "overwrite"
-                ).parquet(out)
-                manifest[b] = os.path.join(gen, f"__bucket={b}")
-            self._write_manifest(table, manifest)
-            self._gc(table)
-            return
-        cur = self.current_path(table)
-        if cur is None:
-            return
-        df = self.spark.read.parquet(cur).coalesce(target_files)
-        self.overwrite(table, df)
-
     def generations(self, table: str) -> list[str]:
         """Retained generation names, oldest first — the time-travel
-        surface. The newest ``keep_generations`` survive every commit
-        (plus anything the pointer/manifest still references), so the
-        previous table state stays readable until GC'd."""
+        surface. The newest ``KEEP_GENERATIONS`` survive every commit
+        (plus the one the pointer names), so the previous table state
+        stays readable until GC'd."""
         return self._gens(table)
 
     def read_at(self, table: str, generation: str) -> DataFrame:
@@ -220,14 +179,8 @@ class ParquetTableStore:
         so those reads are consistent snapshots; the CURRENT generation
         of a table receiving ``append``/``append_batch`` gains files in
         place, so only superseded generations of append tables are
-        stable. Bucketed tables version per-bucket through the
-        manifest; snapshot reads there would need manifest history, so
-        they are refused rather than answered wrong."""
-        if os.path.exists(self._manifest_path(table)):
-            raise ValueError(
-                f"table {table!r} is bucket-manifested; per-table time "
-                "travel is only defined for pointer tables"
-            )
+        stable."""
+        self._reject_manifest(table)
         if generation not in self._gens(table):
             raise ValueError(
                 f"unknown generation {generation!r} for table {table!r}; "
@@ -236,33 +189,21 @@ class ParquetTableStore:
         return self.spark.read.parquet(os.path.join(self._tdir(table), generation))
 
     def _gc(self, table: str) -> None:
-        """Delete generations that are (a) not the current pointer,
-        (b) not referenced by the bucket manifest, and (c) older than
-        the newest ``keep_generations`` — deferred deletion so in-flight
-        readers of the previous generation complete."""
+        """Delete generations that are neither the current pointer nor
+        among the newest ``KEEP_GENERATIONS`` — deferred deletion so
+        in-flight readers of the previous generation complete."""
         gens = self._gens(table)
-        live: set[str] = set(gens[-self.keep_generations:])
+        live: set[str] = set(gens[-KEEP_GENERATIONS:])
         cur = self.current_path(table)
         if cur is not None:
             live.add(os.path.basename(cur))
-        if os.path.exists(self._manifest_path(table)):
-            for k, rel in self._read_manifest(table).items():
-                if not k.startswith("__"):
-                    live.add(rel.split(os.sep, 1)[0])
         for g in gens:
             if g not in live:
                 shutil.rmtree(os.path.join(self._tdir(table), g), ignore_errors=True)
 
-    def _assert_not_bucketed(self, table: str, op: str) -> None:
-        if os.path.exists(self._manifest_path(table)):
-            raise ValueError(
-                f"table {table!r} is bucket-manifested; {op} would write "
-                "data the manifest-reading path never sees — use upsert()"
-            )
-
     def overwrite(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """Write a full new generation and atomically flip the pointer."""
-        self._assert_not_bucketed(table, "overwrite")
+        self._reject_manifest(table)
         os.makedirs(self._tdir(table), exist_ok=True)
         gen = self._next_gen(table)
         out = os.path.join(self._tdir(table), gen)
@@ -282,109 +223,10 @@ class ParquetTableStore:
         new: DataFrame,
         key: str,
         version_cols: list | None = None,
-        n_buckets: int | None = None,
     ) -> None:
-        """MERGE ``new`` into the stored table (sink_upsert_metadata).
-
-        With ``n_buckets`` (or an existing bucket manifest) the MERGE is
-        partition-scoped: only buckets whose keys appear in ``new`` are
-        re-merged and rewritten; untouched buckets keep their files.
-        """
-        if n_buckets is not None or os.path.exists(self._manifest_path(table)):
-            self._upsert_bucketed(table, new, key, version_cols, n_buckets)
-            return
+        """MERGE ``new`` into the stored table (sink_upsert_metadata)."""
         merged = merge_upsert(self.read(table), new, key, version_cols)
         self.overwrite(table, merged)
-
-    # -- bucketed (partition-scoped) MERGE ---------------------------------
-
-    def _read_manifest(self, table: str) -> dict[str, str]:
-        path = self._manifest_path(table)
-        if not os.path.exists(path):
-            return {}
-        with open(path) as f:
-            return json.load(f)
-
-    def _write_manifest(self, table: str, manifest: dict[str, str]) -> None:
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=0, sort_keys=True)
-        os.replace(tmp, self._manifest_path(table))
-
-    def _upsert_bucketed(
-        self,
-        table: str,
-        new: DataFrame,
-        key: str,
-        version_cols: list | None,
-        n_buckets: int | None,
-    ) -> None:
-        manifest = self._read_manifest(table)
-        stored = manifest.get("__n_buckets")
-        if stored is not None:
-            # the stored layout's modulus is authoritative — re-hashing
-            # under a different bucket count would strand stored keys in
-            # buckets the merge never reads
-            if n_buckets is not None and int(stored) != n_buckets:
-                raise ValueError(
-                    f"table {table!r} is bucketed with n_buckets={stored}; "
-                    f"cannot upsert with n_buckets={n_buckets}"
-                )
-            n_buckets = int(stored)
-        elif n_buckets is None:
-            n_buckets = 32
-        manifest["__n_buckets"] = str(n_buckets)
-        os.makedirs(self._tdir(table), exist_ok=True)
-
-        bucket_of = F.pmod(
-            F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)
-        ).cast("int")
-        new_b = new.withColumn("__bucket", bucket_of)
-        # Converting an existing pointer-based table to bucketed: fold
-        # the current pointer generation into this first bucketed merge,
-        # otherwise its rows would silently become unreachable (the
-        # manifest-preferring read path would never see them again).
-        legacy = None
-        if stored is None and self.current_path(table) is not None:
-            legacy = self.spark.read.parquet(self.current_path(table)).withColumn(
-                "__bucket", bucket_of
-            )
-        # Touched-bucket list: ≤ n_buckets small ints — a driver-side
-        # collect by design (it IS the partition-pruning predicate).
-        touch_src = (
-            new_b if legacy is None
-            else new_b.select("__bucket").union(legacy.select("__bucket"))
-        )
-        touched = sorted(
-            r["__bucket"] for r in touch_src.select("__bucket").distinct().collect()
-        )
-        old_paths = [
-            os.path.join(self._tdir(table), manifest[str(b)])
-            for b in touched
-            if str(b) in manifest
-        ]
-        old = legacy
-        if old_paths:
-            # partitionBy stripped __bucket from the files; recompute
-            # from the key (same deterministic hash).
-            old = self.spark.read.parquet(*old_paths).withColumn(
-                "__bucket", bucket_of
-            )
-        merged = merge_upsert(old, new_b, key, version_cols)
-        gen = self._next_gen(table)
-        out = os.path.join(self._tdir(table), gen)
-        merged.write.mode("overwrite").partitionBy("__bucket").parquet(out)
-        for b in touched:
-            manifest[str(b)] = os.path.join(gen, f"__bucket={b}")
-        self._write_manifest(table, manifest)  # atomic multi-bucket commit
-        if os.path.exists(self._pointer(table)):
-            # the manifest is authoritative now; a stale pointer would
-            # pin the pre-migration generation in _gc forever. Checked
-            # unconditionally (not only on the migrating call) so a
-            # crash between manifest write and pointer removal
-            # self-heals on the next upsert.
-            os.remove(self._pointer(table))
-        self._gc(table)
 
     def append(self, table: str, df: DataFrame) -> None:
         """Append-only fact sink (sink_append_timeseries, main.py:475).
@@ -392,7 +234,7 @@ class ParquetTableStore:
         Parquet append is file-level atomic; each micro-batch adds files
         without touching existing ones.
         """
-        self._assert_not_bucketed(table, "append")
+        self._reject_manifest(table)
         cur = self.current_path(table)
         if cur is None:
             self.overwrite(table, df)
@@ -417,7 +259,7 @@ class ParquetTableStore:
         applied to this table" is a table-lifetime fact. Returns True
         if the batch was written, False if it was a skipped replay.
         """
-        self._assert_not_bucketed(table, "append_batch")
+        self._reject_manifest(table)
         if self.current_path(table) is None:
             self.overwrite(table, df.limit(0))  # schema-bearing empty gen
         gen = self.current_path(table)
@@ -512,8 +354,7 @@ def apply_cdc(
 
     Scale: one shuffle of the (small) change batch on the key for the
     latest-change window + one key-partitioned anti join against the
-    snapshot — the same cost class as merge_upsert; with the bucketed
-    store layout the snapshot side never re-shuffles.
+    snapshot — the same cost class as merge_upsert.
     """
     latest = dedup_last_writer(changes, key, [seq_col])
     data_cols = [c for c in latest.columns if c not in (op_col, seq_col)]
@@ -543,8 +384,7 @@ def cdc_diff(
     null-safe equality); unchanged keys are dropped. Output carries
     ``old_``/``new_`` images of the compared columns. At 100 TB both
     sides shuffle once on the key — same cost class as the upsert that
-    produced the generation; with the store's bucketed layout the
-    exchange is avoided entirely.
+    produced the generation.
     """
     compare_cols = compare_cols or [
         c for c in new.columns if c != key and c in old.columns

@@ -6387,7 +6387,7 @@ def sink_cdc_diff(spark, sf_dir):
         )
     )
     root = tempfile.mkdtemp(prefix="sdp_cdc_")
-    store = ParquetTableStore(spark, root, keep_generations=2)
+    store = ParquetTableStore(spark, root)
     store.overwrite("meta", v1)
     store.overwrite("meta", v2)
     g1, g2 = store.generations("meta")[-2:]
@@ -7916,8 +7916,7 @@ def qa_referential_integrity(spark, sf_dir):
         "the whole feed at once — equality proves the batch fold is "
         "associative (exactly the replay-from-checkpoint guarantee a "
         "streaming CDC consumer needs). Per batch: one window on the "
-        "small change set + one key-partitioned anti join; the "
-        "snapshot never re-shuffles under the bucketed store layout."
+        "small change set + one key-partitioned anti join."
     ),
     tags=("sink", "cdc", "upsert"),
 )
@@ -15231,8 +15230,8 @@ def win_peak_concurrency(spark, sf_dir):
         "into the <=125 (r,f,m) cells with their exact revenue. "
         "Scale: the fact table collapses to the customer SPINE first "
         "(map-side-combined agg), and the three quintile scores are "
-        "computed by operators/ranks.py::scalable_ntile_desc — the "
-        "two-level histogram rank (scalar-spine min/max broadcast, "
+        "computed by operators/ranks.py::scalable_ntile_desc_multi — "
+        "the two-level histogram rank (scalar-spine min/max broadcast, "
         "<=4096-row bin histogram with a BOUNDED one-partition "
         "running sum, then a hash-partitioned per-bin window) — "
         "bit-identical to ntile but with NO unpartitioned sort of "
@@ -16814,7 +16813,7 @@ def agg_runs_test(spark, sf_dir):
     "qa_outlier_ecod",
     oracle="""
     WITH p AS (
-      -- all three metrics non-null: the exact_cume_counts contract
+      -- all three metrics non-null: the exact_cume_counts_multi contract
       -- (non-null integral), and a NULL has no empirical tail mass
       SELECT p_partkey,
              CAST(ROUND(p_retailprice * 100) AS BIGINT) AS cents,
@@ -16862,12 +16861,12 @@ def agg_runs_test(spark, sf_dir):
         "screen before corpus stats. The tail masses are tie-AWARE "
         "cumulative counts (a row_number-style rank is wrong under "
         "ties), computed scale-safely by operators/ranks.py "
-        "exact_cume_counts: the two-level histogram decomposition — "
-        "bounded 4096-bin prefix sums + RANGE-framed within-bin "
-        "windows on hash partitions — no unbounded single-partition "
-        "sort for ANY dimension. Scores are exact-integer products "
-        "converted once to double (identical below 2^53, "
-        "deterministic above); top-20 is a TakeOrdered with the "
+        "exact_cume_counts_multi: the two-level histogram "
+        "decomposition — bounded 4096-bin prefix sums + RANGE-framed "
+        "within-bin windows on hash partitions — no unbounded "
+        "single-partition sort for ANY dimension. Scores are "
+        "exact-integer products converted once to double (identical "
+        "below 2^53, deterministic above); top-20 is a TakeOrdered with the "
         "partkey tie-break, never a global sort."
     ),
     tags=("qa", "outlier", "stats"),

@@ -826,11 +826,11 @@ def test_peak_concurrency_matches_bruteforce(spark, starts, dur):
     n_bins=st.sampled_from([1, 3, 4096]),
 )
 def test_exact_cume_counts_matches_bruteforce(spark, vals, n_bins):
-    """operators/ranks.py::exact_cume_counts must equal the tie-aware
+    """operators/ranks.py::exact_cume_counts_multi must equal the tie-aware
     empirical CDF counts (#<= v, #>= v) — heavy ties (domain -5..5)
     and degenerate bin counts (n_bins=1 puts everything in one bin)
     are exactly where a row_number-style rank would diverge."""
-    from steam_data_pipeline_spark.operators.ranks import exact_cume_counts
+    from steam_data_pipeline_spark.operators.ranks import exact_cume_counts_multi
 
     rows = [(i, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "k long, v long").repartition(3)
@@ -844,8 +844,8 @@ def test_exact_cume_counts_matches_bruteforce(spark, vals, n_bins):
     for small_bytes in (0, 1 << 62):
         got = {
             (r.k, r.le, r.ge)
-            for r in exact_cume_counts(
-                df, "v", "le", "ge", n_bins=n_bins, small_bytes=small_bytes
+            for r in exact_cume_counts_multi(
+                df, [("v", "le", "ge")], n_bins=n_bins, small_bytes=small_bytes
             ).collect()
         }
         assert got == want, (vals, n_bins, small_bytes, got, want)

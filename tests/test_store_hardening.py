@@ -1,6 +1,7 @@
 """Round-2 store/state hardening tests: version-aware MERGE across
 batches, deferred generation GC, idempotent micro-batch append,
-partition-scoped (bucketed) MERGE, and the atomic journal lock."""
+rejection of the retired bucket-manifest layout, and the atomic journal
+lock."""
 
 from __future__ import annotations
 
@@ -65,7 +66,7 @@ class TestDeferredGenerationGc:
         store.upsert("t", _df(spark, [("1", "c", 3)]), key="app_id")
         assert not os.path.exists(gen1)  # GC'd once 2 newer gens exist
 
-    def test_gc_keeps_exactly_keep_generations(self, spark, store):
+    def test_gc_keeps_exactly_two_generations(self, spark, store):
         for i in range(5):
             store.upsert("t", _df(spark, [("1", f"v{i}", i)]), key="app_id")
         gens = [d for d in os.listdir(store._tdir("t")) if d.startswith("gen=")]
@@ -109,61 +110,6 @@ class TestIdempotentBatchAppend:
         assert store.read("facts").count() == 2  # stray replaced, not added
 
 
-class TestBucketedUpsert:
-    def test_single_key_touches_single_bucket(self, spark, store):
-        """The partition-scoped MERGE contract: an upsert touching one
-        key rewrites one bucket's pointer; every other bucket keeps its
-        exact path (VERDICT item 4)."""
-        seed = _df(spark, [(str(i), f"n{i}", 1) for i in range(64)])
-        store.upsert("dim", seed, key="app_id", version_cols=["v"], n_buckets=8)
-        with open(store._manifest_path("dim")) as f:
-            before = json.load(f)
-        store.upsert(
-            "dim", _df(spark, [("3", "UPDATED", 2)]), key="app_id",
-            version_cols=["v"],
-        )
-        with open(store._manifest_path("dim")) as f:
-            after = json.load(f)
-        changed = {
-            k for k in before
-            if not k.startswith("__") and before[k] != after.get(k)
-        }
-        assert len(changed) == 1  # exactly one bucket rewritten
-        # untouched buckets' files still on disk at the same paths
-        for k, rel in before.items():
-            if k.startswith("__") or k in changed:
-                continue
-            assert os.path.exists(os.path.join(store._tdir("dim"), rel))
-
-    def test_bucketed_merge_correctness(self, spark, store):
-        seed = _df(spark, [(str(i), f"n{i}", 1) for i in range(20)])
-        store.upsert("dim", seed, key="app_id", version_cols=["v"], n_buckets=4)
-        store.upsert(
-            "dim",
-            _df(spark, [("3", "new3", 2), ("99", "inserted", 1)]),
-            key="app_id", version_cols=["v"],
-        )
-        got = {r.app_id: (r.name, r.v) for r in store.read("dim").collect()}
-        assert len(got) == 21
-        assert got["3"] == ("new3", 2)
-        assert got["99"] == ("inserted", 1)
-        assert got["7"] == ("n7", 1)
-
-    def test_bucketed_rerun_identical(self, spark, store):
-        batch = _df(spark, [(str(i), f"n{i}", 1) for i in range(10)])
-        store.upsert("dim", batch, key="app_id", version_cols=["v"], n_buckets=4)
-        first = sorted(map(tuple, store.read("dim").collect()))
-        store.upsert("dim", batch, key="app_id", version_cols=["v"])
-        assert sorted(map(tuple, store.read("dim").collect())) == first
-
-    def test_bucketed_read_drops_internal_column(self, spark, store):
-        store.upsert(
-            "dim", _df(spark, [("1", "a", 1)]), key="app_id",
-            version_cols=["v"], n_buckets=4,
-        )
-        assert store.read("dim").columns == ["app_id", "name", "v"]
-
-
 class TestAtomicJournalLock:
     def test_concurrent_acquire_single_winner(self, tmp_path):
         """N threads race acquire(); exactly one may win (ADVICE
@@ -185,21 +131,30 @@ class TestAtomicJournalLock:
         assert len(wins) == 1
 
 
-class TestBucketedGuards:
-    def test_bucket_count_mismatch_rejected(self, spark, store):
-        store.upsert("dim", _df(spark, [("1", "a", 1)]), key="app_id", n_buckets=8)
-        with pytest.raises(ValueError, match="n_buckets"):
-            store.upsert("dim", _df(spark, [("2", "b", 1)]), key="app_id", n_buckets=16)
-
-    def test_overwrite_append_on_bucketed_table_rejected(self, spark, store):
-        store.upsert("dim", _df(spark, [("1", "a", 1)]), key="app_id", n_buckets=4)
+class TestManifestLayoutRejected:
+    def test_every_method_rejects_manifest_table(self, spark, store):
+        """A table left by the retired bucket-manifest layout keeps its
+        rows behind ``_MANIFEST.json``; every method that opens it must
+        refuse it instead of serving or overwriting those rows."""
+        gen = "gen=00000001-0000abcd"
+        rel = os.path.join(gen, "__bucket=0")
+        tdir = store._tdir("dim")
+        _df(spark, [("1", "a", 1)]).write.parquet(os.path.join(tdir, rel))
+        with open(os.path.join(tdir, "_MANIFEST.json"), "w") as f:
+            json.dump({"__n_buckets": "4", "0": rel}, f)
         batch = _df(spark, [("2", "b", 1)])
-        with pytest.raises(ValueError, match="bucket-manifested"):
-            store.overwrite("dim", batch)
-        with pytest.raises(ValueError, match="bucket-manifested"):
-            store.append("dim", batch)
-        with pytest.raises(ValueError, match="bucket-manifested"):
-            store.append_batch("dim", batch, batch_id=0)
+        for call in (
+            lambda: store.read("dim"),
+            lambda: store.read_at("dim", gen),
+            lambda: store.upsert("dim", batch, key="app_id"),
+            lambda: store.overwrite("dim", batch),
+            lambda: store.append("dim", batch),
+            lambda: store.append_batch("dim", batch, batch_id=0),
+        ):
+            with pytest.raises(ValueError, match="'dim'.*bucket-manifest.*rebuild"):
+                call()
+        assert not os.path.exists(store._pointer("dim"))
+        assert store._gens("dim") == [gen]
 
 
 class TestBatchMarkersSurviveRotation:

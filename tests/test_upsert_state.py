@@ -163,29 +163,12 @@ class TestTtlCache:
         assert cache.get() == "token-2" and len(calls) == 2  # 0.9×100 reached
 
 
-class TestBucketedMigration:
-    def test_pointer_table_migrates_into_bucketed_upsert(self, spark, store):
-        """Converting a pointer-based table to bucketed must fold the
-        existing generation into the first bucketed merge — previously
-        the old rows silently became unreachable (manifest-preferring
-        read path) and were eventually GC'd."""
-        store.overwrite("t", _df(spark, [("1", "a", 1), ("2", "b", 1)]))
-        store.upsert("t", _df(spark, [("2", "B", 2), ("3", "c", 1)]),
-                     key="app_id", n_buckets=4)
-        got = {r.app_id: r.name for r in store.read("t").collect()}
-        assert got == {"1": "a", "2": "B", "3": "c"}
-        # follow-up bucketed upserts keep working against the manifest
-        store.upsert("t", _df(spark, [("1", "A", 2)]), key="app_id")
-        got = {r.app_id: r.name for r in store.read("t").collect()}
-        assert got == {"1": "A", "2": "B", "3": "c"}
-
-
 class TestTimeTravel:
     def test_previous_generation_readable(self, spark, store):
         store.overwrite("t", _df(spark, [("1", "a", 1)]))
         store.upsert("t", _df(spark, [("1", "b", 2)]), key="app_id")
         gens = store.generations("t")
-        assert len(gens) == 2  # keep_generations=2 retains the old snapshot
+        assert len(gens) == 2  # KEEP_GENERATIONS=2 retains the old snapshot
         old = {r.app_id: r.name for r in store.read_at("t", gens[0]).collect()}
         new = {r.app_id: r.name for r in store.read_at("t", gens[1]).collect()}
         assert old == {"1": "a"} and new == {"1": "b"}
@@ -195,49 +178,6 @@ class TestTimeTravel:
         store.overwrite("t", _df(spark, [("1", "a", 1)]))
         with pytest.raises(ValueError, match="unknown generation"):
             store.read_at("t", "gen=99999999-nope")
-
-    def test_bucketed_time_travel_refused(self, spark, store):
-        store.upsert("t", _df(spark, [("1", "a", 1)]), key="app_id", n_buckets=4)
-        with pytest.raises(ValueError, match="bucket-manifested"):
-            store.read_at("t", "gen=00000001-x")
-
-
-def _nfiles(path):
-    import glob as g
-    import os as o
-
-    return len([f for f in g.glob(o.path.join(path, "**", "*.parquet"), recursive=True)])
-
-
-class TestCompaction:
-    def test_pointer_table_compacts_to_one_file(self, spark, store):
-        store.overwrite("t", _df(spark, [("1", "a", 1)]))
-        for i in range(4):  # small-file accretion
-            store.append("t", _df(spark, [(str(10 + i), "x", 1)]))
-        before = _nfiles(store.current_path("t"))
-        assert before > 1
-        store.compact("t")
-        assert _nfiles(store.current_path("t")) == 1
-        got = {r.app_id for r in store.read("t").collect()}
-        assert got == {"1", "10", "11", "12", "13"}
-
-    def test_bucketed_table_compacts_per_bucket(self, spark, store, tmp_path):
-        import os as o
-
-        store.upsert("t", _df(spark, [(str(i), "a", 1) for i in range(20)]),
-                     key="app_id", n_buckets=4)
-        store.upsert("t", _df(spark, [(str(i), "b", 2) for i in range(0, 20, 2)]),
-                     key="app_id")
-        store.compact("t")
-        manifest = store._read_manifest("t")
-        buckets = [k for k in manifest if not k.startswith("__")]
-        for b in buckets:
-            assert _nfiles(o.path.join(store._tdir("t"), manifest[b])) == 1
-        got = {r.app_id: r.name for r in store.read("t").collect()}
-        assert got == {str(i): ("b" if i % 2 == 0 else "a") for i in range(20)}
-        # the store still upserts normally after compaction
-        store.upsert("t", _df(spark, [("3", "c", 3)]), key="app_id")
-        assert {r.name for r in store.read("t").filter("app_id = '3'").collect()} == {"c"}
 
 
 class TestCdcDiff:
@@ -273,7 +213,7 @@ class TestCdcDiff:
             cdc_diff,
         )
 
-        store = ParquetTableStore(spark, str(tmp_path), keep_generations=2)
+        store = ParquetTableStore(spark, str(tmp_path))
         store.overwrite("s", spark.createDataFrame([(1, 10)], "k long, v long"))
         store.overwrite(
             "s", spark.createDataFrame([(1, 11), (2, 20)], "k long, v long")
