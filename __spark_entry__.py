@@ -7,6 +7,9 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``steam_data_pipeline_spark``; this module is
 a thin adapter over its query registry (plans/registry.py).
+``queries()`` returns the registry in check-window order (see
+``plans/registry.py::query_map``); that order (correctness files, stored hashes, one fingerprint pass) is
+computed only there, never when the registry is imported.
 """
 
 from __future__ import annotations
@@ -31,7 +34,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    check-window order."""
     from steam_data_pipeline_spark.plans.registry import query_map
 
     return query_map()

@@ -383,6 +383,7 @@ def main() -> None:
         run = run_query(spark, name, sf_dir, force)
         return run.build_s + run.exec_s, run.error
 
+    # Registration order, the same whatever the correctness files say.
     for q_idx, name in enumerate(QUERIES):
         if q_idx and q_idx % 25 == 0:
             canary_timeline.append(round(_canary_once(), 3))

@@ -16,11 +16,10 @@ implicit strength (the steam analog: players × games with playtime).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from steam_data_pipeline_spark.operators.aggregates import dec_sum
+from steam_data_pipeline_spark.operators.ranks import _plan_estimated_bytes
 from steam_data_pipeline_spark.sources.tables import read_table
 
 
@@ -56,17 +55,10 @@ def _als_num_blocks(spark: SparkSession, sf_dir: str) -> int:
     fit+score; at fixture scale (600 k): 4/8/16 → 1.4/1.5/2.7 s. One
     8 MiB-of-lineitem per block tracks both optima (sf0.1 → 4 via the
     floor, 30× → ~13) and keeps growing with the input on a real
-    cluster, capped at the session's parallelism. Driver-side stat
-    walk only — no Spark job."""
-    path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(path)
-        size = st.st_size
-        if os.path.isdir(path):
-            with os.scandir(path) as it:
-                size = sum(e.stat().st_size for e in it)
-    except OSError:
-        return 4
+    cluster, capped at the session's parallelism. The size is
+    Catalyst's plan-time estimate of the lineitem scan (the bytes of
+    every file it lists, nested ones included) — no Spark job."""
+    size = _plan_estimated_bytes(read_table(spark, sf_dir, "lineitem"))
     return max(4, min(spark.sparkContext.defaultParallelism, size >> 23))
 
 
@@ -94,12 +86,15 @@ def als_recommendations(
     fixture optimum but a measured 1.7× serial cap at the 30× tier);
     on a 1000-executor cluster it would be hundreds.
 
-    Seeded for run-to-run determinism; factors are distributed block
-    matrices, so training scales with executors. Scoring is bounded
-    deliberately: ``recommendForAllUsers`` is a users×rank · rank×items
-    blocked cross product, so production calls score a user subset (or
-    an ANN index over item factors) — here the top-N users by
-    interaction count, the dashboard-shaped ask.
+    Seeded for run-to-run determinism at a fixed core count: above the
+    4-block floor the block count is capped at the session's
+    parallelism, and a different block count partitions the factors
+    differently. Factors are distributed block matrices, so training
+    scales with executors. Scoring is bounded deliberately:
+    ``recommendForAllUsers`` is a users×rank · rank×items blocked cross
+    product, so production calls score a user subset (or an ANN index
+    over item factors) — here the top-N users by interaction count, the
+    dashboard-shaped ask.
     """
     from pyspark.ml.recommendation import ALS
 

@@ -450,6 +450,16 @@ def llm_dedup_embedding(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _ann_probes(emb):
+    """The ANN probe set: searchable vectors with ``vec_id < 5``, as
+    ``(query_id, embedding)``. NULL-embedding rows are dropped by every
+    vector operator (simsearch.drop_null_vectors) and by the oracle's
+    embedding IS NOT NULL filter — counts must agree with both."""
+    return emb.filter(
+        (F.col("vec_id") < 5)
+        & F.col("embedding").isNotNull()
+        & (F.size("embedding") > 0)
+    ).select(F.col("vec_id").alias("query_id"), "embedding")
 
 
 @EXT.add(
@@ -478,15 +488,7 @@ def llm_dedup_embedding(spark, sf_dir):
 )
 def llm_sim_search(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.brute_force_topk(emb, queries, k=10)
+    return S.brute_force_topk(emb, _ann_probes(emb), k=10)
 
 
 _ANN_RECALL_ORACLE = """
@@ -503,14 +505,7 @@ def _ann_recall_invariant(spark, sf_dir, ann_fn, recall_bound: float, **ann_kwar
     agg_distinct_pool_approx pattern applied to recall@10. The approx
     path still fully executes; the oracle asserts the recall bound."""
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    queries = _ann_probes(emb)
     # materialize both top-k sets once (|Q|·k rows each): the three
     # single-row aggregates below reference them across crossJoin legs,
     # which Spark plans as independent subtrees — without the
@@ -610,13 +605,8 @@ def llm_sim_quantized(spark, sf_dir):
 )
 def llm_sim_ivf_persisted(spark, sf_dir):
     def _probe(emb, queries, k):
-        def _write(d):
-            S.save_ivf_index(S.build_ivf_index(emb), d)
-
-        path = _cached_layout("ivfidx", sf_dir, _write)
-        return S.ivf_topk(
-            emb, queries, k=k, index=S.load_ivf_index(spark, path), n_probe=6
-        )
+        idx = S.load_ivf_index(spark, _prepare_ivf_index(spark, sf_dir))
+        return S.ivf_topk(emb, queries, k=k, index=idx, n_probe=6)
 
     return _ann_recall_invariant(spark, sf_dir, _probe, recall_bound=0.70)
 
@@ -644,13 +634,8 @@ def llm_sim_ivf_persisted(spark, sf_dir):
 )
 def llm_sim_lsh_persisted(spark, sf_dir):
     def _probe(emb, queries, k):
-        def _write(d):
-            S.save_lsh_index(S.build_lsh_index(emb), d)
-
-        path = _cached_layout("lshidx", sf_dir, _write)
-        return S.lsh_topk(
-            emb, queries, k=k, index=S.load_lsh_index(spark, path)
-        )
+        idx = S.load_lsh_index(spark, _prepare_lsh_index(spark, sf_dir))
+        return S.lsh_topk(emb, queries, k=k, index=idx)
 
     return _ann_recall_invariant(spark, sf_dir, _probe, recall_bound=0.75)
 
@@ -2176,9 +2161,9 @@ def _prepare_jaccard_truth(spark, sf_dir: str) -> None:
     VERIFICATION fixture shared by every shingle-dedup composite
     (near/simhash/editdist legs all compare against it), not an
     operator under test — so its one-time ~7 s build belongs to
-    startup, not to whichever dedup query the stalest-first rotation
-    happens to run first (that accounting was the r4→r6
-    `llm_dedup_simhash` composite 'drift' the round-6 judge flagged)."""
+    startup, not to whichever dedup query happens to run first (that
+    accounting showed up as a composite-time drift in
+    `llm_dedup_simhash`)."""
     _exact_jaccard_truth(spark, sf_dir)
 
 
@@ -5988,28 +5973,14 @@ def _simhash_operator_only(spark, sf_dir):
 
 def _ivf_operator_only(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.ivf_topk(emb, queries, k=10, n_probe=6).select("query_id", "vec_id")
+    return S.ivf_topk(emb, _ann_probes(emb), k=10, n_probe=6).select(
+        "query_id", "vec_id"
+    )
 
 
 def _lsh_operator_only(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.lsh_topk(emb, queries, k=10).select("query_id", "vec_id")
+    return S.lsh_topk(emb, _ann_probes(emb), k=10).select("query_id", "vec_id")
 
 
 #: Bench-only variants for the queries whose REGISTERED form embeds an
@@ -6024,34 +5995,18 @@ def _ivf_persisted_operator_only(spark, sf_dir):
     per-query-batch production cost of llm_sim_ivf_persisted (the
     registered form adds the in-query brute-force truth leg)."""
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
     idx = S.load_ivf_index(spark, _prepare_ivf_index(spark, sf_dir))
-    return S.ivf_topk(emb, queries, k=10, index=idx, n_probe=6).select(
-        "query_id", "vec_id"
-    )
+    return S.ivf_topk(
+        emb, _ann_probes(emb), k=10, index=idx, n_probe=6
+    ).select("query_id", "vec_id")
 
 
 def _lsh_persisted_operator_only(spark, sf_dir):
     """Probe-only cost against the pre-existing persisted LSH index —
     the per-query-batch production cost of llm_sim_lsh_persisted."""
     emb = t(spark, sf_dir, "embeddings")
-    # searchable probes only: NULL-embedding rows are dropped by every
-    # vector operator (simsearch.drop_null_vectors) and by the oracle's
-    # embedding IS NOT NULL filter — counts must agree with both
-    queries = emb.filter(
-        (F.col("vec_id") < 5)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("vec_id").alias("query_id"), "embedding")
     idx = S.load_lsh_index(spark, _prepare_lsh_index(spark, sf_dir))
-    return S.lsh_topk(emb, queries, k=10, index=idx).select(
+    return S.lsh_topk(emb, _ann_probes(emb), k=10, index=idx).select(
         "query_id", "vec_id"
     )
 

@@ -5,20 +5,26 @@ staleness alone, so a query whose Spark or oracle leg was MODIFIED
 after its last driver green waited its staleness turn (up to 5 rounds)
 before the driver re-verified the changed code. The fix is a per-query
 content hash recorded at the code state the driver last greened
-(``QUERY_HASHES.json``, maintained by ``tools/query_hashes.py``); the
-registry compares it against the CURRENT fingerprint and promotes
-mismatches into a rotation tier between "never verified" and
-"stalest green".
+(``QUERY_HASHES.json``, maintained by ``tools/query_hashes.py``);
+``plans/registry.py::query_map`` compares it against the CURRENT
+fingerprint and promotes mismatches into a rotation tier between
+"never verified" and "stalest green". Nothing fingerprints at import
+time: ``query_map()`` and ``tools/query_hashes.py snapshot`` are the
+callers, and each pays one pass (about 1.7 s CPU for 298 queries on a
+4-core x86 VM; each function's source is read once per process).
 
 The fingerprint must change when the query's behavior might have:
 :func:`query_fingerprint` hashes the query function's source PLUS the
 sources of every package-local function/class it transitively
 references (through globals, closure cells, defaults, ``mod.attr``
-access, and nested code objects), plus the oracle SQL. A fix deep in
-``operators/forecast.py`` therefore re-fingerprints every forecast
-query even though the registered query functions themselves did not
-change. False positives (a comment edit re-flags a query) only cost
-one early driver recheck — the safe direction.
+access, function-local imports, and nested code objects), plus the
+oracle SQL. A fix deep in ``operators/forecast.py`` therefore
+re-fingerprints every forecast query even though the registered query
+functions themselves did not change. False positives (a comment edit
+re-flags a query) only cost one early recheck — the safe
+direction. The result does not depend on which package modules the
+process has already imported: a function-local ``from pkg import
+submod`` imports the submodule itself.
 
 STDLIB-ONLY module by design: ``tools/query_hashes.py`` loads this
 file standalone (``importlib.util.spec_from_file_location``) and
@@ -123,7 +129,7 @@ def _walk(obj, out: dict[tuple[str, str], str]) -> None:
                     out[(mod, f"<const:{name}>")] = r
                 else:
                     _resolve(v, names, out)
-        _walk_local_imports(obj, names, out)
+        _walk_local_imports(out[key], names, out)
         for cell in obj.__closure__ or ():
             try:
                 v = cell.cell_contents
@@ -177,20 +183,26 @@ def _resolve(v, names: set[str], out: dict[tuple[str, str], str]) -> None:
 
 
 def _walk_local_imports(
-    fn, names: set[str], out: dict[tuple[str, str], str]
+    src: str, names: set[str], out: dict[tuple[str, str], str]
 ) -> None:
-    """Resolve function-LOCAL package imports from the AST.
+    """Resolve function-LOCAL package imports from the AST of the
+    function's recorded source ``src``.
 
     ``from pkg.mod import helper`` inside a function body binds at call
     time, never through ``__globals__`` — so the globals walk alone
     missed those helpers entirely (round-12 gap: the
     ``operators/asof.py`` forward-asof rewrite did not re-flag
     ``join_asof_forward``, whose only reference to the operator is a
-    local import). ``inspect.getsource`` returns the whole function
-    body, so ``ast.walk`` also covers imports in nested defs."""
+    local import). The source is the whole function body, so
+    ``ast.walk`` also covers imports in nested defs.
+
+    ``from pkg import submod`` is imported as ``pkg.submod`` when the
+    package does not have it as an attribute yet, so the fingerprint
+    does not depend on which modules the process happened to import
+    before."""
     try:
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-    except (OSError, SyntaxError, TypeError, ValueError):
+        tree = ast.parse(textwrap.dedent(src))
+    except (SyntaxError, ValueError):
         return
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom):
@@ -205,7 +217,12 @@ def _walk_local_imports(
             for alias in node.names:
                 a = getattr(m, alias.name, None)
                 if a is None:
-                    continue
+                    try:
+                        a = importlib.import_module(
+                            f"{node.module}.{alias.name}"
+                        )
+                    except Exception:  # noqa: BLE001 - not a module: skip
+                        continue
                 if inspect.ismodule(a):
                     _resolve(a, names, out)
                     continue

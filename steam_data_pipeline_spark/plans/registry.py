@@ -4,14 +4,16 @@ Every SURVEY.md §2 operator ID maps here to a Spark program and (where
 SQL-expressible) a DuckDB oracle. ``__spark_entry__.py`` exposes this
 registry to the driver.
 
-Registry ORDER implements check-window rotation: the driver verifies a
-bounded prefix of the registry each round (round 1 checked the first
-50), so queries that do not yet have a green driver CORRECTNESS row —
-including every newly added query, and any query whose last check
-failed — sort FIRST, and already-verified queries fill the tail. The
-verified set is derived from the ``CORRECTNESS_r*.json`` files the
-driver leaves in the repo root, so the rotation maintains itself
-round over round with no manual bookkeeping.
+``QUERIES`` is in registration order (CORE, ANALYTICS, EXT), and
+importing this module reads no file and fingerprints nothing.
+``query_map()`` alone returns the queries in check-window order: a
+correctness run verifies a bounded prefix of the registry, so queries
+that do not yet have a green CORRECTNESS row — including every newly
+added query, and any query whose last check failed — sort FIRST, and
+already-verified queries fill the tail. The verified set is derived
+from the ``CORRECTNESS_r*.json`` files in the repo root, so the
+rotation maintains itself from one correctness run to the next with
+no manual bookkeeping.
 """
 
 from __future__ import annotations
@@ -82,14 +84,12 @@ def _driver_correctness_rows(
     return hash_green, rows_only_green
 
 
-_HASH_GREEN, _ROWS_ONLY_GREEN = _driver_correctness_rows()
-
-_ALL: dict[str, Query] = {}
+QUERIES: dict[str, Query] = {}
 for reg in (CORE, ANALYTICS, EXT):
     for name, q in reg.items():
-        if name in _ALL:
+        if name in QUERIES:
             raise ValueError(f"duplicate query {name} across registries")
-        _ALL[name] = q
+        QUERIES[name] = q
 
 
 def _stored_query_hashes(repo_root: str | None = None) -> dict[str, dict]:
@@ -131,42 +131,23 @@ def modified_since_green(
     return out
 
 
-_STORED_HASHES = _stored_query_hashes()
-_MODIFIED = modified_since_green(_ALL, _STORED_HASHES)
-
-
-def _verified_round(name: str) -> int | None:
-    """Latest round this query was satisfactorily verified, or None.
-
-    A rows-only green satisfies a query that is (still) registered
-    without an oracle; a query that has since GAINED an oracle deserves
-    an oracle-checked row, so its old rows-only green does not count."""
-    return verified_round(
-        name, _ALL[name].oracle is not None, _HASH_GREEN, _ROWS_ONLY_GREEN
-    )
-
-
 def verified_round(
     name: str,
     has_oracle: bool,
     hash_green: dict[str, int],
     rows_only_green: dict[str, int],
 ) -> int | None:
-    """Pure form of the verified-round rule (see `_verified_round`)."""
+    """Latest correctness run (the N of ``CORRECTNESS_rN.json``) that
+    satisfactorily verified this query, or None.
+
+    A rows-only green satisfies a query that is (still) registered
+    without an oracle; a query that has since GAINED an oracle deserves
+    an oracle-checked row, so its old rows-only green does not count."""
     if name in hash_green:
         return hash_green[name]
     if name in rows_only_green and not has_oracle:
         return rows_only_green[name]
     return None
-
-
-# Queries whose PLAN was rewritten after their latest driver green and
-# that the round's verdict explicitly requires at the head of the next
-# check window (they would otherwise queue behind older-green modified
-# queries). Curated per round; drained entries are removed once the
-# driver re-greens them. r13: the r12 forward-asof rewrite (see
-# operators/asof.py, asof_forward — its green predates the rewrite).
-PRIORITY_RECHECK: tuple[str, ...] = ("join_asof_forward",)
 
 
 def rotation_order(
@@ -175,26 +156,21 @@ def rotation_order(
     hash_green: dict[str, int],
     rows_only_green: dict[str, int],
     modified: dict[str, bool] | None = None,
-    priority: tuple[str, ...] = (),
 ) -> list[str]:
-    """The load-bearing driver-contract ordering, four tiers:
+    """The check-window ordering, three tiers:
 
     0. never-verified queries (registration order) — every new query
        and any query whose latest check failed;
-    1. verdict-pinned rewritten queries (``priority``, registration
-       order) — a whole-plan rewrite after a green must not wait for
-       its staleness turn behind older-green modified queries;
-    2. verified queries whose Spark/oracle source changed since their
+    1. verified queries whose Spark/oracle source changed since their
        last driver green (``modified``), stalest-green first — changed
        code deserves a fresh driver check before untouched staleness
        (round-11 verdict item 2);
-    3. verified, unmodified queries, stalest-green first — so the
+    2. verified, unmodified queries, stalest-green first — so the
        driver's bounded window re-verifies the longest-unchecked
        greens instead of rechecking a fixed prefix forever.
     """
     pos = {name: i for i, name in enumerate(names)}
     modified = modified or {}
-    pinned = set(priority)
 
     def key(name: str) -> tuple[int, int, int]:
         rnd = verified_round(
@@ -202,25 +178,10 @@ def rotation_order(
         )
         if rnd is None:
             return (0, 0, pos[name])
-        if name in pinned:
-            return (1, 0, pos[name])
-        tier = 2 if modified.get(name) else 3
+        tier = 1 if modified.get(name) else 2
         return (tier, rnd, pos[name])
 
     return sorted(names, key=key)
-
-
-QUERIES: dict[str, Query] = {
-    name: _ALL[name]
-    for name in rotation_order(
-        list(_ALL),
-        {n: q.oracle is not None for n, q in _ALL.items()},
-        _HASH_GREEN,
-        _ROWS_ONLY_GREEN,
-        _MODIFIED,
-        PRIORITY_RECHECK,
-    )
-}
 
 
 class QueryRun(NamedTuple):
@@ -268,7 +229,19 @@ def run_query(spark, name: str, sf_dir: str, consume: Callable) -> QueryRun:
 
 
 def query_map() -> dict[str, SparkQuery]:
-    return {name: q.spark for name, q in QUERIES.items()}
+    """The public query surface, in check-window order: reads the
+    committed ``CORRECTNESS_r*.json`` and ``QUERY_HASHES.json`` and
+    fingerprints every query (``rotation_order``)."""
+    hash_green, rows_only_green = _driver_correctness_rows()
+    modified = modified_since_green(QUERIES, _stored_query_hashes())
+    order = rotation_order(
+        list(QUERIES),
+        {n: q.oracle is not None for n, q in QUERIES.items()},
+        hash_green,
+        rows_only_green,
+        modified,
+    )
+    return {name: QUERIES[name].spark for name in order}
 
 
 def oracle_sql_map() -> dict[str, str]:

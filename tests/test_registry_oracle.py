@@ -192,24 +192,30 @@ class TestRotationOrder:
         precede a staler one within its tier, and no unmodified green
         may precede a modified one."""
         from steam_data_pipeline_spark.plans.registry import (
-            _MODIFIED,
-            PRIORITY_RECHECK,
             QUERIES,
-            _verified_round,
+            _driver_correctness_rows,
+            _stored_query_hashes,
+            modified_since_green,
+            query_map,
+            verified_round,
         )
 
+        hash_green, rows_only = _driver_correctness_rows()
+        modified = modified_since_green(QUERIES, _stored_query_hashes())
+        order = list(query_map())
+        assert sorted(order) == sorted(QUERIES)
         tiers = []
-        for n in QUERIES:
-            r = _verified_round(n)
+        for n in order:
+            r = verified_round(
+                n, QUERIES[n].oracle is not None, hash_green, rows_only
+            )
             if r is None:
                 tiers.append((0, 0))
-            elif n in PRIORITY_RECHECK:
-                tiers.append((1, 0))
             else:
-                tiers.append((2 if _MODIFIED.get(n) else 3, r))
+                tiers.append((1 if modified[n] else 2, r))
         assert tiers == sorted(tiers), (
-            "rotation must be (never-verified, priority-pinned, "
-            "modified-stalest, unmodified-stalest) in that order"
+            "rotation must be (never-verified, modified-stalest, "
+            "unmodified-stalest) in that order"
         )
 
     def test_fingerprint_tracks_transitive_helpers(self):
@@ -220,9 +226,9 @@ class TestRotationOrder:
         from steam_data_pipeline_spark.plans.fingerprint import (
             query_fingerprint,
         )
-        from steam_data_pipeline_spark.plans.registry import _ALL
+        from steam_data_pipeline_spark.plans.registry import QUERIES
 
-        q = _ALL["llm_dedup_near"]
+        q = QUERIES["llm_dedup_near"]
         base = query_fingerprint(q.spark, q.oracle)
         assert base == query_fingerprint(q.spark, q.oracle)  # stable
         # the registered function reaches llm.dedup helpers; its
@@ -237,6 +243,62 @@ class TestRotationOrder:
                    for m, _ in out), "transitive helper sources missing"
         # and the oracle participates: same fn, different oracle -> new hash
         assert query_fingerprint(q.spark, (q.oracle or "") + " -- x") != base
+
+
+def _fresh_python(script: str) -> str:
+    """Run ``script`` in a new interpreter at the repo root; its stdout."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    return p.stdout
+
+
+def test_registry_import_fingerprints_nothing():
+    """Importing the registry must not read the correctness files or
+    fingerprint any query: only ``query_map()`` needs the check-window
+    order, and every other importer (bench set-up, tools, test
+    collection) would pay for it."""
+    out = _fresh_python(
+        "import steam_data_pipeline_spark.plans.registry\n"
+        "from steam_data_pipeline_spark.plans import fingerprint\n"
+        "print(len(fingerprint._SOURCE_CACHE))\n"
+    )
+    assert out.strip() == "0"
+
+
+def test_fingerprint_independent_of_imported_modules():
+    """``from pkg import submod`` inside a query resolves through the
+    package attribute, which is missing until something imports the
+    submodule. The fingerprint must not depend on that: each query's
+    hash in a fresh interpreter equals its hash once the submodule it
+    imports locally has been imported."""
+    out = _fresh_python(
+        "import importlib, json\n"
+        "from steam_data_pipeline_spark.plans import fingerprint as fp\n"
+        "from steam_data_pipeline_spark.plans.registry import QUERIES\n"
+        "pairs = {'llm_semdedup': 'llm.pca', 'llm_bpe_encode': 'llm.bpe',\n"
+        "         'agg_heavy_hitters': 'llm.sketches',\n"
+        "         'stream_trigger_schedule': 'streaming.scheduler'}\n"
+        "def fps():\n"
+        "    fp._SOURCE_CACHE.clear()\n"
+        "    return {n: fp.query_fingerprint(QUERIES[n].spark, QUERIES[n].oracle)\n"
+        "            for n in pairs}\n"
+        "fresh = fps()\n"
+        "for m in pairs.values():\n"
+        "    importlib.import_module('steam_data_pipeline_spark.' + m)\n"
+        "print(json.dumps([fresh, fps()]))\n"
+    )
+    import json
+
+    fresh, warm = json.loads(out)
+    assert fresh == warm
 
 
 def test_observe_does_not_poison_session(spark):
@@ -265,15 +327,21 @@ def test_query_hashes_artifact_covers_verified_queries():
     import os
 
     from steam_data_pipeline_spark.plans.registry import (
-        _ALL,
-        _verified_round,
+        QUERIES,
+        _driver_correctness_rows,
         _stored_query_hashes,
+        verified_round,
     )
+
+    greens = _driver_correctness_rows()
+
+    def latest_green(name):
+        return verified_round(name, QUERIES[name].oracle is not None, *greens)
 
     stored = _stored_query_hashes()
     assert stored, "QUERY_HASHES.json missing or empty"
     missing = {
-        n for n in _ALL if _verified_round(n) is not None and n not in stored
+        n for n in QUERIES if latest_green(n) is not None and n not in stored
     }
     assert not missing, (
         f"driver-verified queries without a recorded green-time hash: "
@@ -281,6 +349,6 @@ def test_query_hashes_artifact_covers_verified_queries():
     )
     for name, ent in stored.items():
         assert set(ent) == {"hash", "round"} and isinstance(ent["round"], int)
-        rnd = _verified_round(name)
+        rnd = latest_green(name)
         if rnd is not None:
             assert ent["round"] <= rnd

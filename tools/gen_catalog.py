@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from steam_data_pipeline_spark.plans.registry import QUERIES  # noqa: E402
 

@@ -1,7 +1,7 @@
 """Maintain ``QUERY_HASHES.json`` — per-query source fingerprints
 recorded at the code state of each query's LAST DRIVER GREEN, which
-feed the registry's modified-since-green rotation tier
-(``plans/registry.py``, round-11 verdict item 2).
+feed the modified-since-green tier of the check-window order
+(``plans/registry.py::query_map``).
 
 The driver tests the working tree as it stands when it runs, i.e. the
 PARENT commit of its own ``round N: verdict/correctness/...`` commit.
@@ -19,9 +19,10 @@ at round start (it is also correct mid-round: fingerprints come from
 the historical worktree, never the current tree).
 
 ``snapshot <repo_path> <out_json>`` is the subprocess worker: it
-imports the registry FROM ``repo_path`` (old code) but the fingerprint
-algorithm from THIS checkout's ``plans/fingerprint.py`` (stdlib-only,
-loaded by file path), so every round is hashed by the same rule.
+imports the registry's ``QUERIES`` FROM ``repo_path`` (old code; every
+historical tree defines it) but the fingerprint algorithm from THIS
+checkout's ``plans/fingerprint.py`` (stdlib-only, loaded by file path),
+so every correctness run is hashed by the same rule.
 """
 
 from __future__ import annotations
@@ -55,10 +56,12 @@ def snapshot(repo_path: str, out_json: str) -> None:
     ``repo_path`` and write ``{name: hash}``."""
     query_fingerprint = _load_fingerprint_fn()
     sys.path.insert(0, repo_path)
-    from steam_data_pipeline_spark.plans.registry import _ALL  # noqa: PLC0415
+    from steam_data_pipeline_spark.plans.registry import (  # noqa: PLC0415
+        QUERIES,
+    )
 
     fps = {}
-    for name, q in _ALL.items():
+    for name, q in QUERIES.items():
         try:
             fps[name] = query_fingerprint(q.spark, q.oracle)
         except Exception as e:  # noqa: BLE001 - record the miss, keep going
@@ -116,9 +119,8 @@ def _snapshot_round(round_no: int) -> dict[str, str] | None:
 def update() -> None:
     sys.path.insert(0, REPO)
     from steam_data_pipeline_spark.plans.registry import (  # noqa: PLC0415
-        _ALL,
-        _HASH_GREEN,
-        _ROWS_ONLY_GREEN,
+        QUERIES,
+        _driver_correctness_rows,
         verified_round,
     )
 
@@ -128,11 +130,10 @@ def update() -> None:
     except (OSError, ValueError):
         stored = {}
 
+    greens = _driver_correctness_rows()
     latest: dict[str, int] = {}
-    for name, q in _ALL.items():
-        rnd = verified_round(
-            name, q.oracle is not None, _HASH_GREEN, _ROWS_ONLY_GREEN
-        )
+    for name, q in QUERIES.items():
+        rnd = verified_round(name, q.oracle is not None, *greens)
         if rnd is not None:
             latest[name] = rnd
 
