@@ -304,6 +304,9 @@ def main() -> None:
     # job that finishes last must START first. Costs below are the
     # measured solo walls (sf0.1, this host) — anything unknown gets a
     # middling default so new warmups neither jump the queue nor sink.
+    # Submitting fixtures first and then warm_fns as listed instead made
+    # startup 11% slower at sf0.01 (median of 3 interleaved runs, 4-core
+    # VM: 37.7 -> 42.0 s) while the host canary moved -3%.
     _measured_cost = {
         "fixture:_prepare_ivf_index": 17.8,
         "fixture:_prepare_lsh_index": 16.6,
