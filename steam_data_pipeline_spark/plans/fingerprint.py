@@ -26,6 +26,13 @@ direction. The result does not depend on which package modules the
 process has already imported: a function-local ``from pkg import
 submod`` imports the submodule itself.
 
+The result does not depend on which module a function lives in
+either: each recorded function is hashed by its qualified name and
+source alone, so moving a query or helper verbatim from one module to
+another keeps every fingerprint. The walk still keys functions by
+(module, qualified name), so same-named functions in two modules are
+both recorded.
+
 STDLIB-ONLY module by design: ``tools/query_hashes.py`` loads this
 file standalone (``importlib.util.spec_from_file_location``) and
 applies it to registries imported from historical git worktrees, so it
@@ -81,7 +88,7 @@ def _source_of(obj, key: tuple[str, str]) -> str:
     try:
         src = inspect.getsource(obj)
     except (OSError, TypeError):  # builtins / exec'd code: stable token
-        src = f"<nosource:{key[0]}:{key[1]}>"
+        src = f"<nosource:{key[1]}>"
     _SOURCE_CACHE[key] = src
     return src
 
@@ -245,13 +252,15 @@ def _walk_local_imports(
 
 def query_fingerprint(spark_fn, oracle: str | None) -> str:
     """Deterministic hex digest of a query's Spark leg (transitive
-    package-local source closure) and oracle SQL."""
+    package-local source closure) and oracle SQL. Each recorded
+    function enters as (qualified name, source), sorted without its
+    module, so moving code verbatim between modules keeps the digest."""
     out: dict[tuple[str, str], str] = {}
     _walk(spark_fn, out)
     h = hashlib.sha256()
-    for (mod, qual) in sorted(out):
-        h.update(f"{mod}:{qual}\n".encode("utf-8", "replace"))
-        h.update(out[(mod, qual)].encode("utf-8", "replace"))
+    for qual, src in sorted((qual, src) for (_, qual), src in out.items()):
+        h.update(f"{qual}\n".encode("utf-8", "replace"))
+        h.update(src.encode("utf-8", "replace"))
         h.update(b"\x00")
     h.update(b"\x01")
     h.update((oracle or "").encode("utf-8", "replace"))

@@ -301,6 +301,35 @@ def test_fingerprint_independent_of_imported_modules():
     assert fresh == warm
 
 
+def test_fingerprint_survives_verbatim_move(tmp_path, monkeypatch):
+    """Moving a query and its helper verbatim to another module keeps
+    the fingerprint, so a file split does not re-flag every moved query
+    as modified since green; editing a body still changes it."""
+    import importlib
+
+    from steam_data_pipeline_spark.plans.fingerprint import query_fingerprint
+
+    src = (
+        "def _helper(x):\n"
+        "    return x + {n}\n"
+        "\n"
+        "\n"
+        "def query(spark, sf_dir):\n"
+        "    return _helper(1)\n"
+    )
+    for mod, n in (("a", 1), ("b", 1), ("c", 2)):
+        (tmp_path / f"steam_data_pipeline_spark_fp_{mod}.py").write_text(
+            src.format(n=n)
+        )
+    monkeypatch.syspath_prepend(str(tmp_path))
+    a, b, c = (
+        importlib.import_module(f"steam_data_pipeline_spark_fp_{m}").query
+        for m in "abc"
+    )
+    assert query_fingerprint(a, "SELECT 1") == query_fingerprint(b, "SELECT 1")
+    assert query_fingerprint(a, "SELECT 1") != query_fingerprint(c, "SELECT 1")
+
+
 def test_observe_does_not_poison_session(spark):
     """Observation registers with the session's ObservationManager,
     which is NOT serializable — a lingering registration on the shared
