@@ -1,448 +1,28 @@
-"""Extension queries: LLM-pipeline operators (§2.10) and streaming
-semantics (§2.8).
+"""Helpers shared by more than one query-family module.
 
-Oracle notes:
-* Cosine similarity is oracle-checked at FULL float precision: Spark's
-  ``aggregate`` fold and DuckDB's ``list_reduce`` are both strict
-  sequential left folds over the same float64 values, verified
-  bit-identical.
-* Approximate operators (MinHash/SimHash LSH, SRP buckets, IVF) hash
-  with seeded ``xxhash64``/numpy, which DuckDB cannot reproduce — so
-  their oracles check exactly-computable INVARIANTS instead: the
-  detected pair set against the exact Jaccard truth (the fixture's
-  margin makes them provably equal), recall bounds against in-query
-  brute force, planted-duplicate recovery, collision structure, or
-  the output contract (ALS). Every registered query is oracle-checked.
-* Streaming queries execute a real Structured Streaming query
-  (``availableNow`` trigger, memory sink) and return the final result
-  table — their oracles are the batch-equivalent SQL, which is exactly
-  the late-binding guarantee Structured Streaming gives.
+The on-disk layout cache (``_cached_layout``), the storage-layout
+fixtures bench startup pre-builds (``BENCH_FIXTURES``; family modules
+append their own), the exact-Jaccard truth, the ANN probe set, the
+stopword and BM25 helpers, and the bench-only operator legs
+(``OPERATOR_ONLY``). No query is registered here.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
-from contextlib import contextmanager as _contextmanager
-
-import pandas as pd
 
 from pyspark.sql import functions as F
 
 from steam_data_pipeline_spark.llm import dedup as D
 from steam_data_pipeline_spark.llm import simsearch as S
 from steam_data_pipeline_spark.llm import textstats as TS
-from steam_data_pipeline_spark.plans.base import Registry, ops_time_domain, t
+from steam_data_pipeline_spark.plans.base import ops_time_domain, t
 
-EXT = Registry()
 
 _STOPWORD_SQL_LIST = "['" + "', '".join(
     w for ws in TS._STOPWORDS.values() for w in ws
 ) + "']"
-
-# DuckDB-side exact cosine: list_reduce is a strict sequential left
-# fold, bit-identical to Spark's ``aggregate`` fold over the same
-# float64 values (verified by llm_sim_search).
-_COS_SQL = """
-  list_reduce(list_transform(list_zip({a}, {b}),
-              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)),
-              (acc, v) -> acc + v)
-  / (sqrt(list_reduce(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                      (acc, v) -> acc + v))
-     * sqrt(list_reduce(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                        (acc, v) -> acc + v)))
-"""
-
-# ---------------------------------------------------------------------------
-# §2.10 dedup
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "llm_dedup_exact",
-    oracle="""
-    SELECT doc_id, lang, source, n_chars FROM documents
-    WHERE text IS NULL OR doc_id IN (SELECT MIN(doc_id) FROM documents WHERE text IS NOT NULL GROUP BY text)
-    """,
-    doc="Exact dedup: content-hash groupBy, min-id survivor (SURVEY §2.10).",
-    tags=("llm", "dedup"),
-)
-def llm_dedup_exact(spark, sf_dir):
-    return D.exact_dedup(t(spark, sf_dir, "documents")).select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-
-
-def _jaccard_ctes(where: str = "") -> str:
-    return _JACCARD_CTES_TEMPLATE.format(where=where)
-
-
-_JACCARD_CTES_TEMPLATE = """
-    sh AS (
-      SELECT doc_id,
-             list_distinct(
-               list_transform(
-                 range(1, greatest(len(regexp_split_to_array(lower(text), '\\s+')) - 1, 2)),
-                 i -> array_to_string(regexp_split_to_array(lower(text), '\\s+')[i:i+2], ' ')
-               )
-             ) AS shingles
-      FROM documents {where}
-    ),
-    posting AS (
-      SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS s FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS a, b.doc_id AS b,
-             ANY_VALUE(a.n_sh) AS na, ANY_VALUE(b.n_sh) AS nb,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM posting a JOIN posting b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-"""
-
-
-@EXT.add(
-    "llm_dedup_jaccard",
-    oracle=f"""
-    WITH {_jaccard_ctes()}
-    SELECT a, b, CAST(n_common AS DOUBLE) / (na + nb - n_common) AS jaccard
-    FROM pairs
-    WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.5
-    """,
-    doc=(
-        "Exact 3-gram Jaccard near-dup pairs via inverted-index self-join "
-        "(the truth MinHash approximates)."
-    ),
-    tags=("llm", "dedup"),
-)
-def llm_dedup_jaccard(spark, sf_dir):
-    # session-memoized: this exact pair set is also the verification
-    # truth for llm_dedup_simhash / llm_dedup_cluster — computed once
-    # per session (eager checkpoint), reused by whichever runs later.
-    pairs = _exact_jaccard_truth(spark, sf_dir)
-    return pairs.select(
-        "a", "b", F.col("jaccard").alias("jaccard")
-    )
-
-
-_CLUSTER_SURVIVOR_CTES = """
-    jp AS (
-      SELECT a, b FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.6
-    ),
-    cedges AS (
-      SELECT a AS src, b AS dst FROM jp
-      UNION SELECT b AS src, a AS dst FROM jp
-    ),
-    reach AS (
-      SELECT src AS node, src AS label FROM cedges
-      UNION
-      SELECT e.src AS node, r.label FROM cedges e JOIN reach r ON e.dst = r.node
-    ),
-    losers AS (
-      SELECT node FROM reach GROUP BY node HAVING node != MIN(label)
-    )
-"""
-
-
-@EXT.add(
-    "llm_dedup_near",
-    oracle=f"""
-    WITH RECURSIVE {_jaccard_ctes()},
-    {_CLUSTER_SURVIVOR_CTES}
-    SELECT doc_id, lang, source FROM documents
-    WHERE doc_id NOT IN (SELECT node FROM losers)
-    """,
-    doc=(
-        "MinHash(32)+LSH(8 bands) near-duplicate removal with "
-        "cluster-correct survivors: detected pairs -> connected "
-        "components -> min-id per component (SURVEY §2.10 "
-        "llm_dedup_near). Oracle = transitive closure over the EXACT "
-        "3-gram Jaccard >= 0.6 pair graph: the fixture's pair margin "
-        "(true pairs est >= 0.69, noise < 0.3 at 32 hashes) makes the "
-        "LSH-detected set provably equal the exact set at sf0.01 and "
-        "sf0.1, so the approximate path is held to the exact answer. "
-        "At 100 TB this hand-rolled banding engine is the DEFAULT "
-        "dedup path (see the catalog's 'Near-dedup at 100 TB' note): "
-        "its 30x structure-preserving rehearsal measured exponent "
-        "0.89 (sublinear — band-bucket candidate generation, SCALE.md "
-        "round 11) vs the MLlib path's 1.03, and its band count "
-        "tightens PRECISION without the OR-construction recall trade. "
-        "r13: the operator EXACT-COLLAPSES byte-identical texts to "
-        "one representative before banding, deleting the Theta(m^2) "
-        "candidate blowup an identical-text block of m docs otherwise "
-        "causes (measured 502 s at m=8k pre-fix vs 20 s post-fix, "
-        "SCALE.md dup-block; output provably unchanged)."
-    ),
-    tags=("llm", "dedup", "flagship"),
-)
-def llm_dedup_near(spark, sf_dir):
-    return D.minhash_dedup(
-        t(spark, sf_dir, "documents"), threshold=0.6
-    ).select("doc_id", "lang", "source")
-
-
-@EXT.add(
-    "llm_dedup_near_ml",
-    oracle=f"""
-    WITH {_jaccard_ctes()}
-    SELECT a, b FROM pairs
-    WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.6
-    """,
-    doc=(
-        "MinHashLSH near-dup pair detection via the pyspark.ml path "
-        "(HashingTF + approxSimilarityJoin, 3 hash tables) — "
-        "interchangeable with the hand-rolled banding engine. Oracle = "
-        "the EXACT 3-gram Jaccard >= 0.6 pair set (ml distance 0.4 = "
-        "similarity 0.6), which the ml path detects exactly on the "
-        "fixture at both sf0.01 and sf0.1 (measured). At 100 TB "
-        "prefer llm_dedup_near's hand-rolled bands (see the catalog's "
-        "'Near-dedup at 100 TB' note): this MLlib path measured "
-        "exponent 1.03 at the 30x tier — honest linear, driven by "
-        "linear-in-corpus duplicate pairs (SCALE.md round 12), but "
-        "its recall knob is an OR-construction (more hash tables = "
-        "more candidates), so it cannot be tightened at scale without "
-        "trading recall; use it when the MLlib pipeline integration "
-        "(Pipeline stages, persisted models) is worth that trade."
-    ),
-    tags=("llm", "dedup", "ml"),
-)
-def llm_dedup_near_ml(spark, sf_dir):
-    return D.minhash_pairs_ml(t(spark, sf_dir, "documents")).select("a", "b")
-
-
-@EXT.add(
-    "udf_recommender_als",
-    oracle="""
-    SELECT LEAST(1000, (
-             SELECT CAST(COUNT(DISTINCT o.o_custkey) AS BIGINT)
-             FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           )) AS n_users,
-           LEAST(1000, (
-             SELECT CAST(COUNT(DISTINCT o.o_custkey) AS BIGINT)
-             FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-           )) * 3 AS n_recs,
-           TRUE AS ranks_ok,
-           TRUE AS items_known
-    """,
-    doc=(
-        "Collaborative-filtering recommendations (PLAN:70): implicit ALS "
-        "on the customer×part interaction matrix, top-3 for the 1000 "
-        "most active users. Factor VALUES are numeric-iteration "
-        "dependent (no engine can replay them in SQL), so the oracle "
-        "checks the exactly-computable contract instead: the scored "
-        "user count equals min(1000, interacting customers), every "
-        "user gets exactly ranks {1,2,3}, and every recommended item "
-        "exists in the interaction matrix - the "
-        "agg_distinct_pool_approx invariant pattern applied to ML "
-        "output. The full ALS fit + scoring still executes."
-    ),
-    tags=("ml", "recommender", "invariant"),
-)
-def udf_recommender_als(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.recommend import (
-        als_recommendations,
-        interaction_matrix,
-    )
-
-    # one interaction matrix serves the ALS fit, the active-user
-    # ranking AND the items_known check — the orders⋈lineitem join
-    # runs once per query
-    inter = interaction_matrix(spark, sf_dir).cache()
-    recs = als_recommendations(spark, sf_dir, k=3, interactions=inter).localCheckpoint(
-        eager=True
-    )
-    items = inter.select("item").distinct().localCheckpoint(eager=True)
-    inter.unpersist(blocking=False)
-    n_users = recs.select("user").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_users")
-    )
-    n_recs = recs.agg(F.count(F.lit(1)).cast("long").alias("n_recs"))
-    ranks_ok = (
-        recs.groupBy("user")
-        .agg(F.sort_array(F.collect_list("rank")).alias("rs"))
-        .agg(
-            F.min(F.col("rs") == F.array(F.lit(1).cast("long"), F.lit(2).cast("long"), F.lit(3).cast("long")))
-            .alias("ranks_ok")
-        )
-    )
-    items_known = recs.join(items, on="item", how="left_anti").agg(
-        (F.count(F.lit(1)) == 0).alias("items_known")
-    )
-    return (
-        n_users.crossJoin(n_recs).crossJoin(ranks_ok).crossJoin(items_known)
-    )
-
-
-@EXT.add(
-    "udf_recommender_minhash",
-    oracle="""
-    WITH toks AS (
-      SELECT p_partkey, UNNEST(list_distinct(string_split(p_name, ' '))) AS tok,
-             LEN(list_distinct(string_split(p_name, ' '))) AS n_tok
-      FROM part
-    ),
-    pairs AS (
-      SELECT a.p_partkey AS a, b.p_partkey AS b,
-             CAST(COUNT(*) AS BIGINT) AS n_common,
-             ANY_VALUE(a.n_tok) AS na, ANY_VALUE(b.n_tok) AS nb
-      FROM toks a JOIN toks b
-        ON a.tok = b.tok AND a.p_partkey <= 100 AND a.p_partkey <> b.p_partkey
-      GROUP BY 1, 2
-    ),
-    sims AS (
-      SELECT a, b, CAST(n_common AS DOUBLE) / (na + nb - n_common) AS similarity
-      FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.5
-    )
-    SELECT a, b,
-           CAST(row_number() OVER (
-             PARTITION BY a ORDER BY similarity DESC, b) AS INT) AS rn,
-           similarity
-    FROM sims QUALIFY rn <= 3
-    """,
-    doc=(
-        "Content-based recommender over tag SETS via MinHashLSH "
-        "approxSimilarityJoin (PLAN:69; the §2.9 udf_recommender "
-        "set-similarity variant): tags = distinct p_name words, "
-        "candidates from the LSH bucket join (cost tracks bucket "
-        "occupancy, never items²), then EXACT tag-set Jaccard re-rank "
-        "on candidates only — integer intersect/union counts, one "
-        "double division, (sim DESC, b) tie-break — so the output "
-        "equals the exact top-3 per query item and value-hash-oracles. "
-        "8 hash tables measured oracle-exact on the fixtures (every "
-        "J >= 0.5 pair surfaces at sf0.001/0.01/0.1, seed 42); "
-        "per-pair miss probability at the 0.5 threshold is (1-J)^8 "
-        "<= 0.4 %. Scale: query side is a bounded key slice, catalog "
-        "side explodes to 8 (table, minhash) keys — the "
-        "llm_dedup_near_ml candidate economics applied to "
-        "recommendation."
-    ),
-    tags=("ml", "recommender", "similarity"),
-)
-def udf_recommender_minhash(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.recommend import (
-        minhash_recommendations,
-    )
-
-    return minhash_recommendations(spark, sf_dir)
-
-
-@EXT.add(
-    "llm_dedup_simhash",
-    oracle=f"""
-    WITH {_jaccard_ctes()}
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_docs,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs
-            WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.5
-           ) AS n_exact_pairs,
-           TRUE AS recall_ok,
-           TRUE AS precision_ok
-    """,
-    doc=(
-        "SimHash-64 near-dup candidates over 3-gram SHINGLE features "
-        "(4-band pigeonhole blocking, hamming <= 8 verification) held "
-        "to exact-oracle invariants vs the EXACT Jaccard >= 0.5 pair "
-        "set: recall >= 0.7 AND precision >= 0.9 (measured 0.79/0.76/"
-        "0.84 recall and 1.0 precision at sf0.001/0.01/0.1). The "
-        "earlier unigram-token fingerprint managed recall 0.66 at "
-        "precision 0.002 (777 k candidates at sf0.1) — shingle "
-        "features decorrelate unrelated documents, so the same "
-        "blocking emits 3600x fewer candidates and catches more true "
-        "pairs. n_docs and n_exact_pairs anchor the row."
-    ),
-    tags=("llm", "dedup", "invariant"),
-)
-def llm_dedup_simhash(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    # both pair tables are referenced by two aggregate legs below
-    # (counts + the intersection join); shingle blocking keeps cand
-    # small (~1e2 rows at sf0.1), so each pipeline is materialized
-    # once and the crossJoin legs read cheap checkpointed blocks
-    cand = (
-        D.simhash_near_pairs(docs, max_hamming=8)
-        .select("a", "b")
-        .localCheckpoint(eager=True)
-    )
-    # verification truth, session-memoized (already checkpointed): the
-    # operator under test is simhash_near_pairs above, never cached.
-    # dropDuplicates guards the left-join fan-out invariant below:
-    # __n_cand is only a candidate COUNT while exact is unique on
-    # (a, b) — jaccard_pairs already dedups today, but a future
-    # duplicate would silently inflate __n_cand, so pin it here.
-    exact = (
-        _exact_jaccard_truth(spark, sf_dir)
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    n_exact = exact.agg(F.count(F.lit(1)).cast("long").alias("n_exact_pairs"))
-    # one pass over cand for BOTH candidate-side stats: a left join with
-    # a hit marker folds the former separate count + left_semi-count
-    # legs into a single job over the (tiny, checkpointed) pair tables
-    cand_stats = (
-        cand.join(
-            exact.withColumn("__hit", F.lit(1)), on=["a", "b"], how="left"
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("__n_cand"),
-            F.count("__hit").cast("long").alias("__n_found"),
-        )
-    )
-    return (
-        n_docs.crossJoin(n_exact)
-        .crossJoin(cand_stats)
-        .select(
-            "n_docs",
-            "n_exact_pairs",
-            (
-                F.col("__n_found").cast("double")
-                >= 0.7 * F.col("n_exact_pairs").cast("double")
-            ).alias("recall_ok"),
-            (
-                F.col("__n_found").cast("double")
-                >= 0.9 * F.col("__n_cand").cast("double")
-            ).alias("precision_ok"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_dedup_embedding",
-    oracle=f"""
-    WITH u AS (
-      SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id, embedding
-      FROM embeddings WHERE vec_id < 32 AND embedding IS NOT NULL AND len(embedding) > 0
-    ),
-    scored AS (
-      SELECT a.vec_id AS a, b.vec_id AS b,
-             {_COS_SQL.format(a="a.embedding", b="b.embedding")} AS cosine
-      FROM u a JOIN u b ON a.vec_id < b.vec_id
-    )
-    SELECT a, b, cosine FROM scored WHERE cosine >= 0.95
-    """,
-    doc=(
-        "Embedding-cosine near-dup pairs via sign-random-projection LSH "
-        "buckets + exact cosine verify, exercised on the fixture corpus "
-        "plus 32 planted exact-duplicate vectors (vec_id + 1e6). The "
-        "oracle is the brute-force all-pairs cosine >= 0.95 truth: "
-        "identical vectors co-bucket with probability 1 under SRP, and "
-        "the fixture's max organic off-diagonal cosine is ~0.6, so the "
-        "LSH path must emit exactly the planted pairs, bit-exact cosine "
-        "included (sequential-fold arithmetic on both engines). This "
-        "replaces the previous vacuously-green 0-row form."
-    ),
-    tags=("llm", "dedup", "similarity"),
-)
-def llm_dedup_embedding(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planted = emb.filter(F.col("vec_id") < 32).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    return D.embedding_near_pairs(
-        emb.union(planted), min_cosine=0.95, n_planes=8
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -460,1446 +40,6 @@ def _ann_probes(emb):
         & F.col("embedding").isNotNull()
         & (F.size("embedding") > 0)
     ).select(F.col("vec_id").alias("query_id"), "embedding")
-
-
-@EXT.add(
-    "llm_sim_search",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5 AND embedding IS NOT NULL AND len(embedding) > 0
-    ),
-    scored AS (
-      SELECT q.query_id, e.vec_id,
-             {_COS_SQL.format(a="e.embedding", b="q.qv")} AS cosine
-      FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0) e CROSS JOIN q
-    )
-    SELECT query_id, vec_id, cosine FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, vec_id) AS rn
-      FROM scored
-    ) WHERE rn <= 10
-    """,
-    doc=(
-        "Brute-force cosine top-10 per query vector (SURVEY §2.10 "
-        "llm_sim_search) — bit-exact sequential-fold arithmetic on both "
-        "engines."
-    ),
-    tags=("llm", "similarity", "flagship"),
-)
-def llm_sim_search(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings")
-    return S.brute_force_topk(emb, _ann_probes(emb), k=10)
-
-
-_ANN_RECALL_ORACLE = """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(COUNT(*) * 10 AS BIGINT) AS n_results,
-           TRUE AS recall_ok
-    FROM embeddings WHERE vec_id < 5 AND embedding IS NOT NULL AND len(embedding) > 0
-"""
-
-
-def _ann_recall_invariant(spark, sf_dir, ann_fn, recall_bound: float, **ann_kwargs):
-    """Run an ANN top-10 AND the in-query brute-force truth; emit one
-    exactly-checkable row: (n_queries, n_results, recall_ok) — the
-    agg_distinct_pool_approx pattern applied to recall@10. The approx
-    path still fully executes; the oracle asserts the recall bound."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = _ann_probes(emb)
-    # materialize both top-k sets once (|Q|·k rows each): the three
-    # single-row aggregates below reference them across crossJoin legs,
-    # which Spark plans as independent subtrees — without the
-    # checkpoint the ANN and brute-force pipelines would each execute
-    # more than once
-    ann = (
-        ann_fn(emb, queries, k=10, **ann_kwargs)
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
-    )
-    truth = (
-        S.brute_force_topk(emb, queries, k=10)
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)
-    )
-    n_queries = queries.agg(F.count(F.lit(1)).cast("long").alias("n_queries"))
-    n_results = ann.agg(F.count(F.lit(1)).cast("long").alias("n_results"))
-    n_hits = ann.join(truth, on=["query_id", "vec_id"], how="left_semi").agg(
-        F.count(F.lit(1)).cast("long").alias("__n_hits")
-    )
-    return (
-        n_queries.crossJoin(n_results)
-        .crossJoin(n_hits)
-        .select(
-            "n_queries",
-            "n_results",
-            (
-                F.col("__n_hits").cast("double")
-                >= F.lit(recall_bound) * F.col("n_results").cast("double")
-            ).alias("recall_ok"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_sim_ivf",
-    oracle=_ANN_RECALL_ORACLE,
-    doc=(
-        "IVF-partitioned approximate top-10 (16 seeded-KMeans centroids, "
-        "6 probes — touches n_probe/C of the corpus per query) verified "
-        "against in-query brute-force truth: recall@10 must be >= 0.70 "
-        "(measured 0.72 / 0.82 / 0.74 at sf0.001 / 0.01 / 0.1 on the "
-        "worst-case near-uniform fixture geometry; deterministic via "
-        "seeded KMeans). n_queries/n_results anchor the row; the recall "
-        "bound is the exactly-checkable invariant."
-    ),
-    tags=("llm", "similarity", "invariant"),
-)
-def llm_sim_ivf(spark, sf_dir):
-    return _ann_recall_invariant(
-        spark, sf_dir, S.ivf_topk, recall_bound=0.70, n_probe=6
-    )
-
-
-@EXT.add(
-    "llm_sim_quantized",
-    oracle=_ANN_RECALL_ORACLE,
-    doc=(
-        "Int8-quantized cosine top-10 (llm/simsearch.py quantized_topk): "
-        "symmetric per-vector quantization to [-127,127] cuts corpus "
-        "vector bytes 4-8x (the scan-dominating cost at 100 TB) and "
-        "turns the per-pair work into an exact integer zip-fold + one "
-        "float divide. Scales cancel in the cosine, so the score is "
-        "the exact cosine of the quantized representation; recall@10 "
-        "vs the in-query float brute-force truth must be >= 0.9 "
-        "(int8 keeps ~2 decimal digits per coordinate at dim 64 - "
-        "measured 0.96 at sf0.01). Same recall-invariant oracle "
-        "pattern as llm_sim_ivf."
-    ),
-    tags=("llm", "similarity", "invariant"),
-)
-def llm_sim_quantized(spark, sf_dir):
-    return _ann_recall_invariant(
-        spark, sf_dir, S.quantized_topk, recall_bound=0.90
-    )
-
-
-@EXT.add(
-    "llm_sim_ivf_persisted",
-    oracle=_ANN_RECALL_ORACLE,
-    doc=(
-        "The PRODUCTION ANN calling convention end-to-end, driver-"
-        "checked: build the IVF index once, persist it (centroid table "
-        "+ assignments PARTITIONED BY centroid_id + build params), "
-        "reload, probe. Probing the reloaded index partition-prunes "
-        "the assignment scan to the probed inverted lists (a static "
-        "touched-list IN predicate collected from the bounded probe "
-        "set — plan-contracted PartitionFilters) — at 100 TB each "
-        "query batch reads ~n_probe/C of the index, never all of it. "
-        "Same recall contract as llm_sim_ivf (>= 0.70 vs "
-        "in-query brute-force truth); the persisted index carries its "
-        "build parameters, so probe sizing needs no count() job and "
-        "parameter-mismatched reloads are structurally impossible "
-        "(llm/simsearch.py save_ivf_index/load_ivf_index)."
-    ),
-    tags=("llm", "similarity", "invariant", "persistence"),
-)
-def llm_sim_ivf_persisted(spark, sf_dir):
-    def _probe(emb, queries, k):
-        idx = S.load_ivf_index(spark, _prepare_ivf_index(spark, sf_dir))
-        return S.ivf_topk(emb, queries, k=k, index=idx, n_probe=6)
-
-    return _ann_recall_invariant(spark, sf_dir, _probe, recall_bound=0.70)
-
-
-@EXT.add(
-    "llm_sim_lsh_persisted",
-    oracle=_ANN_RECALL_ORACLE,
-    doc=(
-        "LSH sibling of llm_sim_ivf_persisted: build the SRP bucket "
-        "index once, persist it (per-table assignments partitioned by "
-        "bucket GROUP with bucket-sorted files + the build "
-        "parameters), reload, probe. The reloaded index carries its "
-        "own (n_planes, seed_base, bgrp_shift), so the probe planes "
-        "match the build by construction — the mismatched/"
-        "out-of-order-reload failure ADVICE r4 flagged is structurally "
-        "impossible through this path — and bucket probes prune the "
-        "scan two-level via a static touched-set predicate: directory "
-        "pruning on the probed groups (plan-contracted "
-        "PartitionFilters; DPP does not fire for this join shape) "
-        "plus parquet-stats pruning on the probed-bucket IN "
-        "(PushedFilters). Same recall contract as llm_sim_lsh "
-        "(>= 0.75 vs in-query brute force)."
-    ),
-    tags=("llm", "similarity", "invariant", "persistence"),
-)
-def llm_sim_lsh_persisted(spark, sf_dir):
-    def _probe(emb, queries, k):
-        idx = S.load_lsh_index(spark, _prepare_lsh_index(spark, sf_dir))
-        return S.lsh_topk(emb, queries, k=k, index=idx)
-
-    return _ann_recall_invariant(spark, sf_dir, _probe, recall_bound=0.75)
-
-
-@EXT.add(
-    "llm_sim_lsh",
-    oracle=_ANN_RECALL_ORACLE,
-    doc=(
-        "SRP-LSH bucketed approximate top-10 (8 planes, 2 tables, "
-        "Hamming-3 multiprobe) verified against in-query brute-force "
-        "truth: recall@10 must be >= 0.75 (measured 0.92 / 0.88 / 0.84 "
-        "at sf0.001 / 0.01 / 0.1 — the measured sweet spot of the "
-        "(tables, radius) grid on worst-case uniform geometry)."
-    ),
-    tags=("llm", "similarity", "invariant"),
-)
-def llm_sim_lsh(spark, sf_dir):
-    return _ann_recall_invariant(spark, sf_dir, S.lsh_topk, recall_bound=0.75)
-
-
-@EXT.add(
-    "llm_ngram_freq",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), t -> len(t) > 0) AS ts
-      FROM documents
-    ),
-    bigrams AS (
-      SELECT UNNEST(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i + 1])) AS bigram
-      FROM toks
-    )
-    SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
-    FROM bigrams GROUP BY bigram
-    ORDER BY n DESC, bigram LIMIT 20
-    """,
-    doc=(
-        "Corpus n-gram analysis: top-20 word bigrams (deterministic "
-        "count-desc/lexicographic order) — tokenize once, bigrams via "
-        "index transform, map-side-combined count, TakeOrderedAndProject "
-        "top-k; the frequency-profile pass of corpus QA."
-    ),
-    tags=("llm", "text", "topk"),
-)
-def llm_ngram_freq(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.col("text")), " "), lambda s: F.length(s) > 0
-        ).alias("ts")
-    )
-    bigrams = toks.select(
-        F.explode(
-            F.when(
-                F.size("ts") > 1,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ts") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("ts", i), F.element_at("ts", i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bigram")
-    )
-    return (
-        bigrams.groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("bigram"))
-        .limit(20)
-    )
-
-
-@EXT.add(
-    "llm_sample_stratified",
-    oracle="""
-    SELECT doc_id, lang, source, n_chars
-    FROM documents
-    WHERE doc_id % 10 < CASE WHEN lang = 'en' THEN 4 ELSE 10 END
-    """,
-    doc=(
-        "Stratified corpus rebalancing: deterministic per-language keep "
-        "rates (downsample the dominant 'en' to 40 %, keep the rest) via "
-        "key modulus — the language-rebalance pass of a training-data "
-        "pipeline, reproducible across runs/partitionings unlike "
-        "TABLESAMPLE."
-    ),
-    tags=("llm", "sample", "filter"),
-)
-def llm_sample_stratified(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    rate = F.when(F.col("lang") == "en", F.lit(4)).otherwise(F.lit(10))
-    return docs.filter(F.pmod(F.col("doc_id"), F.lit(10)) < rate).select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-
-
-@EXT.add(
-    "llm_quota_per_source",
-    oracle="""
-    SELECT doc_id, source, lang, n_chars, CAST(rn AS BIGINT) AS rn FROM (
-      SELECT doc_id, source, lang, n_chars,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY n_chars DESC, doc_id) AS rn
-      FROM documents
-    ) WHERE rn <= 5
-    """,
-    doc=(
-        "Per-source quota: keep the 5 longest documents per source — the "
-        "source-capping pass of corpus curation (quota sampling), grouped "
-        "top-N via WindowGroupLimit."
-    ),
-    tags=("llm", "sample", "topk"),
-)
-def llm_quota_per_source(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.windows import topn_per_key
-
-    docs = t(spark, sf_dir, "documents")
-    top = topn_per_key(
-        docs, "source", [F.col("n_chars").desc(), F.col("doc_id")], 5
-    )
-    return top.select(
-        "doc_id", "source", "lang", "n_chars", F.col("rn").cast("long").alias("rn")
-    )
-
-
-@EXT.add(
-    "llm_embedding_stats",
-    oracle="""
-    -- NULL/empty vectors carry no norm (DuckDB's list_reduce ERRORS on
-    -- an empty list) — the profile covers measurable vectors only
-    SELECT label,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           -- TRY_CAST: an extreme-component vector's norm (~1e31)
-           -- overflows the 6 integer digits of DECIMAL(18,12) — it
-           -- contributes NULL to the mean numerator (r12 contract)
-           CAST(SUM(TRY_CAST(
-             sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                             (acc, v) -> acc + v))
-             AS DECIMAL(18,12))) AS DOUBLE) / COUNT(*) AS avg_norm
-    FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) > 0
-    GROUP BY label
-    """,
-    doc="Per-label embedding profile: counts + exact-decimal mean L2 norm.",
-    tags=("llm", "agg"),
-)
-def llm_embedding_stats(spark, sf_dir):
-    emb = S.drop_null_vectors(
-        t(spark, sf_dir, "embeddings"), "embedding"
-    )
-    norm = S.norm_expr("embedding")
-    return emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        (
-            F.sum(norm.try_cast("decimal(18,12)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avg_norm"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.10 text analysis
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "llm_text_stats",
-    oracle="""
-    SELECT lang, source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS total_tokens,
-           MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars,
-           quantile_cont(n_chars, 0.5) AS median_chars
-    FROM documents GROUP BY lang, source
-    """,
-    doc="Corpus profile per (lang, source): docs, tokens, length distribution.",
-    tags=("llm", "text"),
-)
-def llm_text_stats(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    return (
-        docs.withColumn("n_tokens", TS.token_count("text"))
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-            F.expr("percentile(n_chars, 0.5)").alias("median_chars"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_token_count",
-    oracle="""
-    SELECT doc_id,
-           CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS ws_tokens,
-           CAST(len(regexp_split_to_array(trim(text), '\\s+'))
-                + length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS BIGINT) AS bpe_ish_tokens
-    FROM documents
-    """,
-    doc="Per-doc token counting: whitespace + BPE-ish (punct-splitting) estimate.",
-    tags=("llm", "text"),
-)
-def llm_token_count(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TS.token_count("text").cast("long").alias("ws_tokens"),
-        TS.bpe_ish_token_count("text").cast("long").alias("bpe_ish_tokens"),
-    )
-
-
-@EXT.add(
-    "llm_langid_quality",
-    oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, text,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'), x -> lower(x)) AS toks,
-             length(text) AS nc,
-             length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS nalpha,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS ntok
-      FROM documents
-    ),
-    lang_scores AS (
-      SELECT doc_id, nc, nalpha, ntok,
-             len(list_intersect(toks, ['the','a','of','and','to'])) AS s_en,
-             len(list_intersect(toks, ['der','die','das','und','ist'])) AS s_de,
-             len(list_intersect(toks, ['le','la','et','les','des'])) AS s_fr,
-             len(list_intersect(toks, ['el','la','que','de','y'])) AS s_es,
-             len(list_intersect(toks, {_STOPWORD_SQL_LIST})) AS stop_hits
-      FROM scored
-    )
-    SELECT doc_id,
-           CASE WHEN s_en = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'en'
-                WHEN s_de = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'de'
-                WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'fr'
-                WHEN s_es = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'es'
-                ELSE 'und' END AS lang_guess,
-           least(CAST(ntok AS DOUBLE) / 50.0, 1.0)
-             * (CAST(nalpha AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE))
-             * (0.5 + 0.5 * least(CAST(stop_hits AS DOUBLE) / 2.0, 1.0)) AS quality
-    FROM lang_scores
-    """,
-    doc=(
-        "Heuristic language-ID (stopword-profile argmax) + quality score "
-        "(length × alpha-ratio × stopword factors) per document."
-    ),
-    tags=("llm", "text"),
-)
-def llm_langid_quality(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TS.language_id("text").alias("lang_guess"),
-        TS.quality_score("text").alias("quality"),
-    )
-
-
-@EXT.add(
-    "llm_media_features",
-    oracle="""
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           sha256(text) AS content_hash
-    FROM documents
-    """,
-    doc=(
-        "Multimodal feature-extraction plumbing end-to-end: documents "
-        "materialized as opaque binary media rows, streamed through the "
-        "Arrow-batched mapInPandas extractor (llm.multimodal); byte counts "
-        "and content hashes are oracle-checked, the decode-derived feature "
-        "vector is the stubbed portion."
-    ),
-    tags=("llm", "multimodal"),
-)
-def llm_media_features(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import extract_features
-
-    docs = t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("doc_id").alias("doc_id"),
-        F.lit("image").alias("modality"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.named_struct(
-            F.lit("mime"), F.lit("application/octet-stream"),
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.lit(None).cast("int"),
-            F.lit("duration_ms"), F.lit(None).cast("long"),
-        ).alias("meta"),
-    )
-    return extract_features(media).select("media_id", "n_bytes", "content_hash")
-
-
-@EXT.add(
-    "llm_media_decode",
-    oracle="""
-    WITH dims AS (
-      SELECT CAST(n_nationkey AS BIGINT) AS media_id,
-             CAST(4 + n_nationkey % 4 AS BIGINT) AS w,
-             CAST(3 + n_nationkey % 3 AS BIGINT) AS h
-      FROM nation
-    )
-    SELECT media_id,
-           TRUE AS decoded,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(w*h*media_id + h*(w*(w-1)//2) + w*(h*(h-1)//2) AS DOUBLE) / (w*h) AS mean_r,
-           CAST(w*h*2*media_id + h*(w*(w-1)//2) AS DOUBLE) / (w*h) AS mean_g,
-           CAST(w*h*3*media_id + w*(h*(h-1)//2) AS DOUBLE) / (w*h) AS mean_b
-    FROM dims
-    """,
-    doc=(
-        "REAL image decode through the multimodal extractor: one tiny "
-        "RGB PNG per nation key (width 4+n%4, height 3+n%3, pixel "
-        "(x,y) = (n+x+y, 2n+x, 3n+y), per-row PNG filter type (n+y)%5 "
-        "so all five unfilter paths run), encoded by the pure-stdlib "
-        "codec (llm.png), decoded back to pixels inside the Arrow "
-        "mapInPandas extractor. The oracle derives each image's "
-        "channel means ANALYTICALLY from the pixel formula — a decoder "
-        "bug cannot cancel out — and means are exact integer sums "
-        "divided once on both sides, so doubles match bit-identically. "
-        "decoded=true is part of the checked output: the real-pixel "
-        "path, not the histogram fallback, must have fired. Closes the "
-        "round-4 'decode is a stub' gap (VERDICT r4 task 2)."
-    ),
-    tags=("llm", "multimodal", "decode"),
-)
-def llm_media_decode(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import extract_features
-    from steam_data_pipeline_spark.llm.png import encode_png
-
-    # nation is a fixed 25-row dimension: a bounded driver-side collect
-    # (same posture as the nation fixture writes elsewhere in this file)
-    keys = sorted(
-        r[0] for r in t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    rows = []
-    for n in keys:
-        w, h = 4 + n % 4, 3 + n % 3
-        px = bytes(
-            v & 0xFF
-            for y in range(h)
-            for x in range(w)
-            for v in (n + x + y, 2 * n + x, 3 * n + y)
-        )
-        png = encode_png(w, h, 3, px, row_filters=[(n + y) % 5 for y in range(h)])
-        rows.append((int(n), int(n), "image", bytearray(png)))
-    media = spark.createDataFrame(
-        rows, "media_id long, doc_id long, modality string, content binary"
-    ).withColumn(
-        "meta",
-        F.named_struct(
-            F.lit("mime"), F.lit("image/png"),
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.lit(None).cast("int"),
-            F.lit("duration_ms"), F.lit(None).cast("long"),
-        ),
-    )
-    feats = extract_features(media)
-    return feats.select(
-        "media_id",
-        "decoded",
-        F.element_at("feature", 1).cast("int").alias("width"),
-        F.element_at("feature", 2).cast("int").alias("height"),
-        F.element_at("feature", 4).alias("mean_r"),
-        F.element_at("feature", 5).alias("mean_g"),
-        F.element_at("feature", 6).alias("mean_b"),
-    )
-
-
-@EXT.add(
-    "llm_media_decode_frames",
-    oracle="""
-    WITH k AS (
-      SELECT CAST(n_nationkey AS BIGINT) AS n,
-             CAST(4 + n_nationkey % 4 AS BIGINT) AS w,
-             CAST(3 + n_nationkey % 3 AS BIGINT) AS h,
-             CAST(2 + n_nationkey % 3 AS BIGINT) AS nf
-      FROM nation
-    ),
-    fr AS (
-      SELECT k.*, r.f FROM k, LATERAL (SELECT UNNEST(range(k.nf)) AS f) r
-    )
-    SELECT n AS media_id,
-           CAST(f AS INT) AS frame_idx,
-           CAST(20 * f * (f + 1) AS BIGINT) AS ts_ms,
-           CAST(40 * (f + 1) AS BIGINT) AS delay_ms,
-           CAST(w*h*(n+f) + h*(w*(w-1)//2) + w*(h*(h-1)//2) AS DOUBLE) / (w*h) AS mean_r,
-           CAST(w*h*(2*n+3*f) + h*(w*(w-1)//2) AS DOUBLE) / (w*h) AS mean_g,
-           CAST(w*h*(3*n+5*f) + w*(h*(h-1)//2) AS DOUBLE) / (w*h) AS mean_b
-    FROM fr
-    """,
-    doc=(
-        "REAL video-frame decode through the multimodal extractor — "
-        "the animation sibling of llm_media_decode: one APNG (animated "
-        "PNG, a real public format) per nation key with 2+n%3 "
-        "full-canvas frames, frame f's pixels (n+f+x+y, 2n+3f+x, "
-        "3n+5f+y) and delay 40(f+1) ms, encoded by the pure-stdlib "
-        "codec (llm.png acTL/fcTL/fdAT path), decoded frame-by-frame "
-        "inside Arrow mapInPandas (llm.multimodal.extract_frames). "
-        "Output is one row per frame with its cumulative timeline "
-        "timestamp and channel means; the oracle derives every value "
-        "ANALYTICALLY from the generating formulas (bit-exact integer-"
-        "sum/single-division means, closed-form ts_ms = 20f(f+1)), so "
-        "a frame-ordering or unfilter bug cannot cancel out."
-    ),
-    tags=("llm", "multimodal", "decode"),
-)
-def llm_media_decode_frames(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import extract_frames
-    from steam_data_pipeline_spark.llm.png import encode_apng
-
-    keys = sorted(
-        r[0] for r in t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    rows = []
-    for n in keys:
-        w, h, nf = 4 + n % 4, 3 + n % 3, 2 + n % 3
-        frames = []
-        for f in range(nf):
-            px = bytes(
-                v & 0xFF
-                for y in range(h)
-                for x in range(w)
-                for v in (n + f + x + y, 2 * n + 3 * f + x, 3 * n + 5 * f + y)
-            )
-            frames.append((40 * (f + 1), px))
-        apng = encode_apng(
-            w, h, 3, frames, row_filters=[(n + y) % 5 for y in range(h)]
-        )
-        rows.append((int(n), int(n), "video", bytearray(apng)))
-    media = spark.createDataFrame(
-        rows, "media_id long, doc_id long, modality string, content binary"
-    )
-    return extract_frames(media)
-
-
-@EXT.add(
-    "llm_media_dedup_perceptual",
-    oracle="""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 100)
-    SELECT MIN(doc_id) AS keeper,
-           CAST(COUNT(*) AS BIGINT) AS n_media
-    FROM d GROUP BY doc_id % 20
-    """,
-    doc=(
-        "PERCEPTUAL image dedup over decoded pixels — the multimodal "
-        "near-dup operator (every production media pipeline dedups "
-        "re-encoded/re-exposed images by dHash, not byte hash, which "
-        "llm_media_dedup covers). Each doc_id<100 gets a real 9x8 "
-        "grayscale PNG whose dHash bits encode doc_id%20 exactly (a "
-        "staircase image: each row walks +/-5 per hash bit), and "
-        "doc_id//20 adds a uniform +7 brightness shift per replica — "
-        "so the five exposure variants of each group are DIFFERENT "
-        "bytes (different sha2, different content) but the SAME "
-        "perceptual identity. A planted undecodable row is excluded "
-        "(no perceptual identity without pixels). The oracle derives "
-        "the group structure analytically; a decoder or hash bug "
-        "collapses/splits groups and cannot cancel out. Scale shape: "
-        "narrow decode + groupBy on an 8-byte hash — the shuffle "
-        "carries hashes, never pixels."
-    ),
-    tags=("llm", "multimodal", "dedup", "decode"),
-)
-def llm_media_dedup_perceptual(spark, sf_dir):
-    from pyspark.sql.functions import pandas_udf
-
-    from steam_data_pipeline_spark.llm.multimodal import perceptual_dedup
-
-    @pandas_udf("binary")
-    def synth_png(ids: pd.Series) -> pd.Series:
-        # encode on the EXECUTORS (Arrow-batched) from the bounded key
-        # spine — the pixel formula is identical to the old driver-side
-        # loop (round-10 verdict item 7: no collected row-builder left
-        # in any registered query body)
-        from steam_data_pipeline_spark.llm.png import encode_png
-
-        out = []
-        for d in ids:
-            d = int(d)
-            g, shift = d % 20, 7 * (d // 20)
-            px = []
-            for y in range(8):
-                v = 90 + shift
-                px.append(v)
-                for x in range(8):
-                    v += 5 if (g >> ((y * 8 + x) % 5)) & 1 else -5
-                    px.append(v)
-            out.append(bytes(encode_png(9, 8, 1, bytes(px))))
-        return pd.Series(out)
-
-    keys = (
-        t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").cast("long").alias("media_id"))
-        .filter("media_id < 100")
-    )
-    media = keys.select("media_id", synth_png("media_id").alias("content"))
-    bad = spark.createDataFrame(
-        [(1_000_000, bytearray(b"not an image at all"))],
-        "media_id long, content binary",
-    )
-    return perceptual_dedup(media.unionByName(bad)).select(
-        "keeper", "n_media"
-    )
-
-
-@EXT.add(
-    "llm_media_frame_sample",
-    oracle="""
-    WITH k AS (
-      SELECT CAST(n_nationkey AS BIGINT) AS n,
-             CAST(4 + n_nationkey % 4 AS BIGINT) AS w,
-             CAST(3 + n_nationkey % 3 AS BIGINT) AS h,
-             CAST(2 + n_nationkey % 3 AS BIGINT) AS nf
-      FROM nation
-    ),
-    frames AS (
-      SELECT k.n, k.w, k.h, r.f,
-             CAST(20 * r.f * (r.f + 1) AS BIGINT) AS ts_ms,
-             CAST(40 * (r.f + 1) AS BIGINT) AS delay_ms
-      FROM k, LATERAL (SELECT UNNEST(range(k.nf)) AS f) r
-    ),
-    samples AS (
-      SELECT k.n, s.t
-      FROM k, LATERAL (
-        SELECT UNNEST(range(0, 20 * k.nf * (k.nf + 1), 30)) AS t
-      ) s
-    )
-    SELECT s.n AS media_id,
-           CAST(s.t AS BIGINT) AS sample_ts,
-           CAST(fr.f AS INT) AS frame_idx,
-           CAST(fr.w*fr.h*(s.n+fr.f) + fr.h*(fr.w*(fr.w-1)//2)
-                + fr.w*(fr.h*(fr.h-1)//2) AS DOUBLE) / (fr.w*fr.h) AS mean_r
-    FROM samples s
-    JOIN frames fr
-      ON fr.n = s.n AND s.t >= fr.ts_ms AND s.t < fr.ts_ms + fr.delay_ms
-    """,
-    doc=(
-        "Frame SAMPLING end-to-end — the composition the multimodal "
-        "plumbing exists for: sample timestamps every 30 ms from the "
-        "metadata duration (sample_frames, pure JVM sequence+explode), "
-        "REAL per-frame decode of the same APNGs as "
-        "llm_media_decode_frames (extract_frames), then a RANGE JOIN "
-        "assigning each sample instant the frame displayed at that "
-        "time (ts_ms <= t < ts_ms + delay) — broadcast range join "
-        "here; at 100 TB the same plan binds sample times to frames "
-        "with the frames side partitioned by media. The oracle builds "
-        "the frame table analytically from the generating formulas and "
-        "replays the identical interval join in SQL, so decode, "
-        "timeline accumulation, and join semantics are all checked "
-        "bit-exactly."
-    ),
-    tags=("llm", "multimodal", "decode", "range-join"),
-)
-def llm_media_frame_sample(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import (
-        extract_frames,
-        sample_frames,
-    )
-    from steam_data_pipeline_spark.llm.png import encode_apng
-
-    keys = sorted(
-        r[0] for r in t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    rows = []
-    for n in keys:
-        w, h, nf = 4 + n % 4, 3 + n % 3, 2 + n % 3
-        frames = []
-        for f in range(nf):
-            px = bytes(
-                v & 0xFF
-                for y in range(h)
-                for x in range(w)
-                for v in (n + f + x + y, 2 * n + 3 * f + x, 3 * n + 5 * f + y)
-            )
-            frames.append((40 * (f + 1), px))
-        apng = encode_apng(w, h, 3, frames)
-        rows.append(
-            (int(n), "video", bytearray(apng), 20 * nf * (nf + 1))
-        )
-    media = spark.createDataFrame(
-        rows, "media_id long, modality string, content binary, dur long"
-    ).select(
-        "media_id",
-        "modality",
-        "content",
-        F.named_struct(
-            F.lit("mime"), F.lit("image/apng"),
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.lit(None).cast("int"),
-            F.lit("duration_ms"), F.col("dur"),
-        ).alias("meta"),
-    )
-    samples = sample_frames(media, every_ms=30).withColumnRenamed(
-        "frame_ts_ms", "sample_ts"
-    )
-    frames = extract_frames(media)
-    return samples.join(
-        frames,
-        on=[
-            samples["media_id"] == frames["media_id"],
-            samples["sample_ts"] >= frames["ts_ms"],
-            samples["sample_ts"] < frames["ts_ms"] + frames["delay_ms"],
-        ],
-    ).select(
-        samples["media_id"],
-        "sample_ts",
-        "frame_idx",
-        "mean_r",
-    )
-
-
-@EXT.add(
-    "llm_media_decode_audio",
-    oracle="""
-    WITH k AS (
-      SELECT CAST(n_nationkey AS BIGINT) AS n,
-             CAST(16 + n_nationkey AS BIGINT) AS num
-      FROM nation
-    ),
-    s AS (
-      SELECT k.n, k.num, r.i,
-             ((r.i * (k.n + 3)) % 201) - 100 AS v
-      FROM k, LATERAL (SELECT UNNEST(range(k.num)) AS i) r
-    ),
-    lagged AS (
-      SELECT *, LAG(v) OVER (PARTITION BY n ORDER BY i) AS pv FROM s
-    ),
-    st AS (
-      SELECT n, num,
-             SUM(v) AS total, SUM(v * v) AS sumsq, MAX(ABS(v)) AS peak,
-             SUM(CASE WHEN pv IS NOT NULL AND v * pv < 0 THEN 1 ELSE 0 END) AS zcr
-      FROM lagged GROUP BY n, num
-    )
-    SELECT n AS media_id,
-           TRUE AS decoded,
-           8000 AS sample_rate,
-           CAST(num AS INT) AS n_frames,
-           CAST(total AS DOUBLE) / num AS mean_sample,
-           sqrt(CAST(sumsq AS DOUBLE) / num) AS rms,
-           CAST(peak AS INT) AS peak,
-           CAST(zcr AS INT) AS zcr
-    FROM st
-    """,
-    doc=(
-        "REAL audio decode through the multimodal extractor — the WAV "
-        "sibling of llm_media_decode: one mono 16-bit PCM WAV per "
-        "nation key (8 kHz, 16+n samples, sample i = ((i*(n+3)) % 201) "
-        "- 100), encoded by the pure-stdlib RIFF codec (llm.wav), "
-        "decoded back to samples inside the Arrow mapInPandas "
-        "extractor. The oracle derives mean/rms/peak/zero-crossings "
-        "ANALYTICALLY from the generating formula (exact integer sums "
-        "divided once, IEEE sqrt on identical doubles — bit-exact), "
-        "and asserts decoded=true so the real-sample path, not the "
-        "histogram fallback, must have fired."
-    ),
-    tags=("llm", "multimodal", "decode"),
-)
-def llm_media_decode_audio(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import extract_features
-    from steam_data_pipeline_spark.llm.wav import encode_wav
-
-    keys = sorted(
-        r[0] for r in t(spark, sf_dir, "nation").select("n_nationkey").collect()
-    )
-    rows = []
-    for n in keys:
-        num = 16 + n
-        samples = [((i * (n + 3)) % 201) - 100 for i in range(num)]
-        rows.append(
-            (int(n), int(n), "audio", bytearray(encode_wav(8000, 1, samples)))
-        )
-    media = spark.createDataFrame(
-        rows, "media_id long, doc_id long, modality string, content binary"
-    ).withColumn(
-        "meta",
-        F.named_struct(
-            F.lit("mime"), F.lit("audio/wav"),
-            F.lit("width"), F.lit(None).cast("int"),
-            F.lit("height"), F.lit(None).cast("int"),
-            F.lit("duration_ms"), F.lit(None).cast("long"),
-        ),
-    )
-    return extract_features(media).select(
-        "media_id",
-        "decoded",
-        F.element_at("feature", 1).cast("int").alias("sample_rate"),
-        F.element_at("feature", 3).cast("int").alias("n_frames"),
-        F.element_at("feature", 5).alias("mean_sample"),
-        F.element_at("feature", 6).alias("rms"),
-        F.element_at("feature", 7).cast("int").alias("peak"),
-        F.element_at("feature", 8).cast("int").alias("zcr"),
-    )
-
-
-@EXT.add(
-    "llm_corpus_clean",
-    oracle=f"""
-    WITH deduped AS (
-      SELECT * FROM documents
-      WHERE text IS NULL OR doc_id IN (SELECT MIN(doc_id) FROM documents WHERE text IS NOT NULL GROUP BY text)
-    ),
-    scored AS (
-      SELECT doc_id, lang, source, n_chars,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'), x -> lower(x)) AS toks,
-             length(text) AS nc,
-             length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS nalpha,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS ntok
-      FROM deduped
-    ),
-    quality AS (
-      SELECT doc_id, lang, source, n_chars, ntok,
-             least(CAST(ntok AS DOUBLE) / 50.0, 1.0)
-               * (CAST(nalpha AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE))
-               * (0.5 + 0.5 * least(CAST(len(list_intersect(toks, {_STOPWORD_SQL_LIST})) AS DOUBLE) / 2.0, 1.0))
-               AS q
-      FROM scored
-    )
-    SELECT lang, source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(ntok AS BIGINT)) AS BIGINT) AS total_tokens
-    FROM quality
-    WHERE q >= 0.3
-    GROUP BY lang, source
-    """,
-    doc=(
-        "Composed training-data cleanup pipeline: exact dedup → quality "
-        "filter (≥ 0.3) → per-(lang, source) corpus accounting — the "
-        "C4-style pre-training sweep as one Catalyst plan."
-    ),
-    tags=("llm", "pipeline", "flagship"),
-)
-def llm_corpus_clean(spark, sf_dir):
-    docs = D.exact_dedup(t(spark, sf_dir, "documents"))
-    kept = docs.withColumn("q", TS.quality_score("text")).filter(F.col("q") >= 0.3)
-    return (
-        kept.withColumn("ntok", TS.token_count("text"))
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("ntok").cast("long")).alias("total_tokens"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_fingerprint",
-    oracle=r"""
-    SELECT doc_id, md5(text) AS fp_md5,
-           COUNT(*) OVER (
-             PARTITION BY array_to_string(
-               regexp_split_to_array(trim(text), '\s+'), ' ')
-           ) > 1 AS fp_shared
-    FROM documents
-    """,
-    doc=(
-        "Document fingerprinting, both tiers exactly checked: fp_md5 is "
-        "the content hash (bit-identical md5 on both engines), and "
-        "fp_shared verifies the COLLISION STRUCTURE of the xxhash64 "
-        "rolling token-fold fingerprint — two docs share a rolling "
-        "fingerprint iff their whitespace-token sequences are equal "
-        "(the oracle partitions by the normalized token string; an "
-        "engine-side hash collision or a broken fold would flip the "
-        "flag). Upgraded from rows-only."
-    ),
-    tags=("llm", "text"),
-)
-def llm_fingerprint(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    w = Window.partitionBy(TS.fingerprint("text"))
-    return docs.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("fp_md5"),
-        (F.count(F.lit(1)).over(w) > 1).alias("fp_shared"),
-    )
-
-
-@EXT.add(
-    "llm_multimodal_cols",
-    oracle="""
-    SELECT d.doc_id, d.lang, d.source, d.n_chars, e.label,
-           CAST(len(e.embedding) AS INTEGER) AS embedding_dim
-    FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-    """,
-    doc="Multimodal row: documents ⋈ embeddings (text + vector columns).",
-    tags=("llm", "join"),
-)
-def llm_multimodal_cols(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.multimodal import multimodal_join
-
-    return multimodal_join(
-        t(spark, sf_dir, "documents"), t(spark, sf_dir, "embeddings")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.8 streaming semantics (real Structured Streaming executions)
-# ---------------------------------------------------------------------------
-
-
-def _join_state_partitions(spark) -> int:
-    """State partitions for the stream-stream joins. Each partition
-    carries FOUR state-store instances per join (left/right ×
-    keyToNumValues/keyWithIndex), so the per-batch commit cost is 4×
-    the single-operator queries' — and the watermark-flush no-data
-    batch pays it again on empty input. Measured interleaved at
-    local[32], sf0.1 (round 14): ss_join 1.97 → 1.82 s, ss_full_join
-    1.75 → 1.56 s, ss_left_join 1.81 → 1.77 s median at 2 vs the
-    default 4. Scale-adaptive (cores/16, floor 2) rather than a pinned
-    constant so a cluster-sized session grows the join state
-    parallelism with it."""
-    return max(2, spark.sparkContext.defaultParallelism // 16)
-
-
-def _python_state_partitions(spark) -> int:
-    """State partitions for applyInPandasWithState queries whose
-    per-key PYTHON compute dominates (stream_islands_stateful: ~100 k
-    replayed rows/batch through pandas folds): worker parallelism sets
-    the wall, not store commits. Measured curve at local[32], sf0.1
-    (round 14, interleaved medians): 8 → 4.7 s, 16 → 3.45 s,
-    24 → 3.19 s, 32 → 3.54 s — flat past half the cores, regressing at
-    full cores (commit + task overhead). Half the session parallelism,
-    floor 8, tracks that optimum at any core count (at 8 cores it
-    reproduces round 13's measured winner, 8)."""
-    return max(8, spark.sparkContext.defaultParallelism // 2)
-
-
-def _run_stream_to_memory(
-    sdf,
-    name_prefix: str,
-    spark,
-    output_mode: str = "complete",
-    partitions: int | None = None,
-):
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    # Streaming state cost on the finite fixture is per (partition ×
-    # store commit), not per row — run with fewer state partitions.
-    # The partition count is a per-checkpoint property, so this scopes
-    # to this query's fresh checkpoint, it is an execution detail
-    # (results are oracle-value-exact at any setting). Measured on the
-    # progress metrics (stream_stream_join, sf0.1): addBatch +
-    # queryPlanning scale with the state-store instance count, 4.0 s
-    # at 8 partitions → 2.3 s at 2; the 4 default keeps a multi-task
-    # exchange in every stateful stage while shedding most of that.
-    # Callers whose per-key PYTHON compute dominates
-    # (applyInPandasWithState over many keys) pass a higher
-    # ``partitions`` — for those the worker parallelism, not the store
-    # commit count, sets the wall (stream_islands_stateful interleaved
-    # A/B: 5.97 s at 8 vs 8.37 s at 4, median-of-3).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", partitions or 4)
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # Detach the result from the memory-sink temp view before dropping
-    # it (localCheckpoint truncates lineage), so repeated registry runs
-    # in one session leak no temp views and can't collide on names.
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
-
-
-def _read_events_stream(spark, sf_dir):
-    from steam_data_pipeline_spark.sources.tables import read_events_stream
-
-    return read_events_stream(spark, sf_dir)
-
-
-@EXT.add(
-    "stream_tumbling_daily",
-    oracle="""
-    SELECT date_trunc('day', ts) AS day, CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM events GROUP BY 1
-    """,
-    doc=(
-        "Structured Streaming tumbling 1-day window count (PLAN:25; SURVEY "
-        "§2.8), availableNow trigger, complete mode — result equals the "
-        "batch daily heartbeat."
-    ),
-    tags=("streaming",),
-)
-def stream_tumbling_daily(spark, sf_dir):
-    ev = _read_events_stream(spark, sf_dir)
-    agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    out = _run_stream_to_memory(agg, "tumbling_daily", spark)
-    return out.select(F.col("w.start").alias("day"), "n_events")
-
-
-@EXT.add(
-    "stream_sliding_window",
-    oracle="""
-    WITH starts AS (
-      SELECT make_timestamp(
-               (CAST(floor(epoch(ts) / 43200) AS BIGINT) - offs) * 43200 * 1000000
-             ) AS win_start
-      FROM events, (VALUES (0), (1)) AS o(offs)
-    )
-    SELECT win_start, CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM starts GROUP BY win_start
-    """,
-    doc=(
-        "Structured Streaming sliding window (1 day every 12 h), "
-        "availableNow trigger, complete mode — completes the streaming "
-        "window family (tumbling/session/sliding); result equals the batch "
-        "agg_sliding_window grid."
-    ),
-    tags=("streaming", "sliding"),
-)
-def stream_sliding_window(spark, sf_dir):
-    ev = _read_events_stream(spark, sf_dir)
-    agg = ev.groupBy(F.window("ts", "1 day", "12 hours").alias("w")).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    out = _run_stream_to_memory(agg, "sliding_12h", spark)
-    return out.select(F.col("w.start").alias("win_start"), "n_events")
-
-
-@EXT.add(
-    "stream_dedup_inpool",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_distinct_pairs FROM (
-      SELECT DISTINCT user_id, event_type FROM events
-    )
-    """,
-    doc=(
-        "Streaming dropDuplicates over the candidate pool key (main.py:421 "
-        "cross-source dedup as a stream), counted in complete mode."
-    ),
-    tags=("streaming", "dedup"),
-)
-def stream_dedup_inpool(spark, sf_dir):
-    ev = _read_events_stream(spark, sf_dir)
-    deduped = ev.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"]
-    )
-    agg = deduped.groupBy().agg(F.count(F.lit(1)).alias("n_distinct_pairs"))
-    return _run_stream_to_memory(agg, "dedup_pool", spark)
-
-
-@EXT.add(
-    "stream_dedup_watermarked",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_distinct_events FROM (
-      -- operational time domain (r12 ts-extremes contract): the
-      -- stream leg gates before withWatermark — one far-future event
-      -- would otherwise evict the dedup state and drop every older row
-      SELECT DISTINCT event_id FROM events
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-    )
-    """,
-    doc=(
-        "State-BOUNDED streaming dedup via dropDuplicatesWithinWatermark "
-        "— the 100 TB posture for stream_dedup_inpool's unbounded "
-        "dropDuplicates: dedup state for an event id is evicted once "
-        "the watermark passes its event time + delay, so state size "
-        "follows the delay window, not the stream's lifetime. On the "
-        "finite fixture the delay (31 days) covers the whole event "
-        "span, making the result equal batch COUNT(DISTINCT event_id) "
-        "— the oracle; in production the delay is the dedup horizon "
-        "(e.g. hours) and state stays bounded forever."
-    ),
-    tags=("streaming", "dedup", "watermark"),
-)
-def stream_dedup_watermarked(spark, sf_dir):
-    ev = (
-        _read_events_stream(spark, sf_dir)
-        # operational time domain before the watermark (see oracle)
-        .filter(
-            (F.col("ts") >= F.lit("1970-01-01").cast("timestamp"))
-            & (F.col("ts") < F.lit("2100-01-01").cast("timestamp"))
-        )
-        .withWatermark("ts", "31 days")
-    )
-    deduped = ev.select("event_id", "ts").dropDuplicatesWithinWatermark(["event_id"])
-    agg = deduped.groupBy().agg(F.count(F.lit(1)).alias("n_distinct_events"))
-    return _run_stream_to_memory(agg, "dedup_wm", spark)
-
-
-@EXT.add(
-    "stream_session_window",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    tagged AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM seq
-    )
-    SELECT user_id, MIN(ts) AS session_start,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM tagged GROUP BY user_id, session_id
-    """,
-    doc=(
-        "Session windows (30-min gap) per key via Structured Streaming "
-        "session_window (SURVEY §2.8 stream_session_window); oracle is the "
-        "equivalent batch gaps-and-islands sessionization."
-    ),
-    tags=("streaming", "window"),
-)
-def stream_session_window(spark, sf_dir):
-    ev = _read_events_stream(spark, sf_dir)
-    agg = (
-        ev.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
-        ).agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    out = _run_stream_to_memory(agg, "session_win", spark)
-    return out.select(
-        "user_id", F.col("w.start").alias("session_start"), "n_events"
-    )
-
-
-@EXT.add(
-    "stream_microbatch_upsert",
-    oracle="""
-    SELECT user_id AS app_id, value AS latest_value, ts AS latest_ts FROM (
-      SELECT user_id, value, ts,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    ) WHERE rn = 1
-    """,
-    doc=(
-        "foreachBatch micro-batch MERGE upsert into a versioned parquet "
-        "table store (main.py:432-457 batch loop + upsert); final table = "
-        "latest row per key regardless of batching — the exactly-once/"
-        "idempotence property, checked against the batch latest-per-key SQL."
-    ),
-    tags=("streaming", "merge"),
-)
-def stream_microbatch_upsert(spark, sf_dir):
-    import tempfile
-
-    from steam_data_pipeline_spark.operators.upsert import ParquetTableStore
-
-    ev = _read_events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="sdp_upsert_")
-    store = ParquetTableStore(spark, root)
-
-    def apply_batch(batch_df, batch_id):
-        rows = batch_df.select(
-            F.col("user_id").alias("app_id"),
-            F.col("value").alias("latest_value"),
-            F.col("ts").alias("latest_ts"),
-            F.col("event_id").alias("__version"),
-        )
-        store.upsert(
-            "latest_state", rows, key="app_id", version_cols=["latest_ts", "__version"]
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    return store.read("latest_state").select("app_id", "latest_value", "latest_ts")
-
-
-# ---------------------------------------------------------------------------
-# corpus curation: PII, quality gates, domain mixing, packing,
-# contamination, and a non-parquet source-format demo (round 2)
-# ---------------------------------------------------------------------------
-
-_STOPWORDS_FLAT = [w for ws in TS._STOPWORDS.values() for w in ws]
-
-
-@EXT.add(
-    "llm_pii_scrub",
-    oracle="""
-    SELECT c_custkey,
-           regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
-           CAST(length(c_name)
-                - length(regexp_replace(c_name, '[0-9]', '', 'g')) AS BIGINT)
-             AS n_redacted
-    FROM customer
-    """,
-    doc=(
-        "PII scrubbing pass: mask every digit of the identifying column "
-        "and count redactions (fixture: customer.c_name carries the "
-        "numeric identity). One regexp_replace per PII class, fused "
-        "into a single codegen stage — the shape of a real "
-        "email/phone/SSN battery."
-    ),
-    tags=("llm", "curation"),
-)
-def llm_pii_scrub(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import pii_scrub
-
-    return pii_scrub(t(spark, sf_dir, "customer"), "c_custkey", "c_name")
-
-
-@EXT.add(
-    "llm_quality_gopher",
-    oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             string_split_regex(trim(text), '\\s+') AS words,
-             length(regexp_replace(text, '\\s+', '', 'g')) AS n_chars
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(len(words) AS BIGINT) AS n_words,
-           n_chars / len(words) AS mean_word_len,
-           len(list_distinct(words)) / len(words) AS distinct_frac,
-           len(list_filter(words, x -> list_contains({_STOPWORD_SQL_LIST}, x)))
-             / len(words) AS stop_frac,
-           (len(words) >= 10
-            AND n_chars / len(words) BETWEEN 2.0 AND 10.0
-            AND len(list_distinct(words)) / len(words) > 0.3) AS quality_ok
-    FROM w
-    """,
-    doc=(
-        "Gopher-style quality signals (length, mean word length, "
-        "repetition via distinct fraction, stopword fraction) plus the "
-        "composite keep/drop gate. Pure JVM expressions; every ratio is "
-        "one exact-integer division, bit-exact vs the oracle."
-    ),
-    tags=("llm", "curation", "quality"),
-)
-def llm_quality_gopher(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import quality_signals
-
-    return quality_signals(
-        t(spark, sf_dir, "documents"), stopwords=_STOPWORDS_FLAT
-    )
-
-
-@EXT.add(
-    "llm_domain_mix",
-    oracle="""
-    WITH per AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
-               AS n_tokens
-      FROM documents GROUP BY source
-    ), tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM per),
-    sh AS (
-      SELECT source, n_docs, n_tokens,
-             n_tokens / total AS token_share,
-             sqrt(n_tokens / total) AS w_raw
-      FROM per, tot
-    ), nrm AS (
-      SELECT list_reduce(list_sort(list(w_raw)), (a, b) -> a + b) AS norm
-      FROM sh
-    )
-    SELECT source, n_docs, n_tokens, token_share,
-           w_raw / norm AS mix_weight
-    FROM sh, nrm
-    """,
-    doc=(
-        "Temperature-weighted domain sampling mix: weight ∝ "
-        "token_share^0.5 (T=2; sqrt is correctly rounded, so the "
-        "oracle matches bit-exactly). Normalizer folds the per-domain "
-        "raws in sorted order — the repo's bit-identical-sum recipe."
-    ),
-    tags=("llm", "curation", "sampling"),
-)
-def llm_domain_mix(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import domain_mix_weights
-
-    return domain_mix_weights(t(spark, sf_dir, "documents"))
-
-
-@EXT.add(
-    "llm_seq_pack",
-    oracle="""
-    WITH RECURSIVE d AS (
-      SELECT source, doc_id,
-             CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-               AS n_tokens,
-             row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-      FROM documents WHERE text IS NOT NULL
-    ),
-    pack AS (
-      SELECT source, doc_id, rn, n_tokens, n_tokens AS fill,
-             CAST(0 AS BIGINT) AS bin_id
-      FROM d WHERE rn = 1
-      UNION ALL
-      SELECT d.source, d.doc_id, d.rn, d.n_tokens,
-             CASE WHEN p.fill + d.n_tokens > 512
-                  THEN d.n_tokens ELSE p.fill + d.n_tokens END,
-             CASE WHEN p.fill + d.n_tokens > 512
-                  THEN p.bin_id + 1 ELSE p.bin_id END
-      -- null-safe group match: a NULL source is a real packing group
-      -- (groupBy semantics on the Spark leg); plain = would drop it
-      FROM d JOIN pack p
-        ON d.source IS NOT DISTINCT FROM p.source AND d.rn = p.rn + 1
-    )
-    SELECT source, doc_id, n_tokens, bin_id FROM pack
-    """,
-    doc=(
-        "Next-fit sequence packing into 512-token bins per source — the "
-        "greedy packer that turns a document stream into fixed-budget "
-        "training sequences. Spark side: grouped applyInPandas with a "
-        "bin-level searchsorted loop; oracle: recursive CTE replaying "
-        "the same recurrence. Exact-checkable stateful operator."
-    ),
-    tags=("llm", "curation", "packing"),
-)
-def llm_seq_pack(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import pack_sequences
-
-    return pack_sequences(t(spark, sf_dir, "documents"), capacity=512)
-
-
-@EXT.add(
-    "llm_contamination",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents
-    ),
-    g AS (
-      SELECT doc_id,
-             list_distinct([array_to_string(words[i:i+4], ' ')
-                            for i in range(1, len(words) - 3)]) AS grams
-      FROM w WHERE len(words) >= 5
-    ),
-    bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 50),
-    dg AS (SELECT doc_id, unnest(grams) AS gram FROM g)
-    SELECT dg.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_matched,
-           SUM(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) / COUNT(*)
-             AS contamination
-    FROM dg LEFT JOIN bench b ON dg.gram = b.gram
-    GROUP BY dg.doc_id
-    """,
-    doc=(
-        "Benchmark-contamination check: fraction of each document's "
-        "distinct word 5-grams that appear in the benchmark set "
-        "(fixture: doc_id < 50 plays the eval suite). Benchmark n-gram "
-        "set broadcasts (bounded by the suite, not the corpus); corpus "
-        "side is explode → broadcast-join → groupBy."
-    ),
-    tags=("llm", "curation", "decontamination"),
-)
-def llm_contamination(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import contamination
-
-    docs = t(spark, sf_dir, "documents")
-    return contamination(docs, docs.filter(F.col("doc_id") < 50), n=5)
 
 
 #: session-scoped memo of the exact-Jaccard truth pair set. Three
@@ -1930,29 +70,6 @@ def _exact_jaccard_truth(spark, sf_dir, shingle_n=3, min_jaccard=0.5):
         ).localCheckpoint(eager=True)
         _JACCARD_TRUTH_CACHE[key] = df
     return df
-
-
-_BPE_CACHE: dict[tuple, tuple] = {}
-_EDQ_CACHE: dict[str, int] = {}
-
-
-def _trained_bpe(spark, sf_dir: str, n_merges: int):
-    """Per-process cache of the trained BPE (merges, vocab): in
-    production the tokenizer is trained ONCE and reused by every
-    encode/decode job, so the encode/round-trip queries should not
-    re-pay the iterative merge loop. The vocab DataFrame is
-    localCheckpointed so the cached plan is a leaf scan."""
-    from steam_data_pipeline_spark.llm import bpe as B
-
-    import os as _os
-
-    key = (_os.path.abspath(sf_dir), n_merges)
-    if key not in _BPE_CACHE:
-        merges, vocab = B.train_bpe(
-            t(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-        _BPE_CACHE[key] = (merges, vocab.localCheckpoint(eager=True))
-    return _BPE_CACHE[key]
 
 
 _LAYOUT_CACHE: dict[tuple, str] = {}
@@ -2177,3790 +294,6 @@ BENCH_FIXTURES = [
 ]
 
 
-@EXT.add(
-    "src_jsonl_roundtrip",
-    oracle="""
-    SELECT doc_id, text, lang, source, n_chars FROM documents
-    """,
-    doc=(
-        "Non-parquet source-format connector demo: the documents table "
-        "round-trips through JSON-lines (write → schema-pinned read) "
-        "and must come back value-identical. The explicit read schema "
-        "is the production posture — schema inference on JSONL is a "
-        "full extra pass at 100 TB."
-    ),
-    tags=("source", "format"),
-)
-def src_jsonl_roundtrip(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    out = _cached_layout(
-        "jsonl", sf_dir, lambda d: docs.write.mode("overwrite").json(d)
-    )
-    return spark.read.schema(docs.schema).json(out)
-
-
-@EXT.add(
-    "src_csv_roundtrip",
-    oracle="""
-    SELECT r_regionkey, r_name FROM region
-    """,
-    doc=(
-        "CSV source-format connector demo: region round-trips through "
-        "quoted-CSV (write → schema-pinned read with header) and must "
-        "come back value-identical. Explicit schema, as on any 100 TB "
-        "read — inference is a full extra pass."
-    ),
-    tags=("source", "format"),
-)
-def src_csv_roundtrip(spark, sf_dir):
-    region = t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = _cached_layout(
-        "csv", sf_dir,
-        lambda d: region.write.mode("overwrite").option("header", "true").csv(d),
-    )
-    return (
-        spark.read.schema(region.schema)
-        .option("header", "true")
-        .csv(out)
-    )
-
-
-@EXT.add(
-    "src_xml_roundtrip",
-    oracle="""
-    SELECT n_nationkey, n_name, n_regionkey FROM nation
-    """,
-    doc=(
-        "XML source-format connector demo (Spark 4's BUILT-IN xml "
-        "datasource): nation round-trips through row-tagged XML "
-        "(write -> schema-pinned read) and must come back value-"
-        "identical — completes the format-connector family "
-        "(parquet/orc/csv/jsonl/xml). Explicit schema, as on any "
-        "100 TB read."
-    ),
-    tags=("source", "format"),
-)
-def src_xml_roundtrip(spark, sf_dir):
-    nation = t(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    out = _cached_layout(
-        "xml", sf_dir,
-        lambda d: nation.write.mode("overwrite")
-        .option("rowTag", "nation")
-        .format("xml")
-        .save(d),
-    )
-    return (
-        spark.read.schema(nation.schema)
-        .option("rowTag", "nation")
-        .format("xml")
-        .load(out)
-    )
-
-
-@EXT.add(
-    "src_orc_roundtrip",
-    oracle="""
-    SELECT n_nationkey, n_name, n_regionkey FROM nation
-    """,
-    doc=(
-        "ORC source-format connector demo: nation round-trips through "
-        "ORC (the columnar alternative to parquet Spark reads natively) "
-        "and must come back value-identical."
-    ),
-    tags=("source", "format"),
-)
-def src_orc_roundtrip(spark, sf_dir):
-    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    out = _cached_layout(
-        "orc", sf_dir, lambda d: nation.write.mode("overwrite").orc(d)
-    )
-    return spark.read.schema(nation.schema).orc(out)
-
-
-@EXT.add(
-    "src_partition_pruned",
-    oracle="""
-    SELECT date_trunc('day', ts) AS day,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(TRY_CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events
-    WHERE CAST(date_trunc('day', ts) AS DATE)
-          IN (DATE '2024-01-05', DATE '2024-01-06', DATE '2024-01-07')
-    GROUP BY 1
-    """,
-    doc=(
-        "Partition-pruned scan demo: events re-laid-out as a "
-        "day=…-partitioned table, then read with a literal day "
-        "predicate — the plan prunes to 3 of 30 partition directories "
-        "(PartitionFilters, plan-contract tested). At 100 TB this "
-        "layout+predicate pair is the difference between scanning 3 "
-        "days and scanning three years."
-    ),
-    tags=("source", "partitioning"),
-)
-def src_partition_pruned(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.aggregates import dec_sum
-
-    out = _prepare_day_partitioned(spark, sf_dir)
-    back = spark.read.parquet(out)
-    days = [F.lit(d).cast("date") for d in ("2024-01-05", "2024-01-06", "2024-01-07")]
-    sel = back.filter(F.col("day").isin(*days))
-    return sel.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        dec_sum("value").cast("double").alias("sum_value"),
-    ).select(
-        F.col("day").cast("timestamp").alias("day"), "n_events", "sum_value"
-    )
-
-
-@EXT.add(
-    "stream_stream_join",
-    oracle="""
-    SELECT p.user_id, p.event_id AS p_id, e.event_id AS e_id,
-           p.ts AS p_ts, e.ts AS e_ts
-    FROM events p JOIN events e
-      ON p.user_id = e.user_id
-     AND p.event_type = 'purchase' AND e.event_type = 'error'
-     AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL 1 HOUR
-    WHERE p.ts < TIMESTAMP '2024-01-04' AND e.ts < TIMESTAMP '2024-01-04'
-    """,
-    doc=(
-        "Stream-stream inner join: purchases joined to errors from the "
-        "same user within the following hour, both sides watermarked so "
-        "state is evicted after the interval at scale. availableNow "
-        "over the finite fixture makes the result equal the batch "
-        "time-range join — the oracle. The demo runs a 3-day slice: "
-        "stream-state joins pay per-row state-store writes, so the "
-        "fixture cost is bounded while the plan (symmetric hash join "
-        "with watermark-scoped state) is the real thing."
-    ),
-    tags=("streaming", "join"),
-)
-def stream_stream_join(spark, sf_dir):
-    cutoff = F.lit("2024-01-04").cast("timestamp")
-    left = (
-        _read_events_stream(spark, sf_dir)
-        .filter((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
-        .select("user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("p_id"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    right = (
-        _read_events_stream(spark, sf_dir)
-        .filter((F.col("event_type") == "error") & (F.col("ts") < cutoff))
-        .select(
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("event_id").alias("e_id"),
-        )
-        .withWatermark("e_ts", "1 hour")
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            "user_id = r_user_id AND e_ts > p_ts "
-            "AND e_ts <= p_ts + interval 1 hour"
-        ),
-    ).select("user_id", "p_id", "e_id", "p_ts", "e_ts")
-    return _run_stream_to_memory(
-        joined,
-        "ss_join",
-        spark,
-        output_mode="append",
-        partitions=_join_state_partitions(spark),
-    )
-
-
-@EXT.add(
-    "src_dynamic_pruning",
-    oracle="""
-    WITH dim AS (
-      SELECT (DATE '2024-01-01' + INTERVAL (d-1) DAY) AS day,
-             CASE WHEN d <= 6 THEN 'keep' ELSE 'drop' END AS tag
-      FROM range(1, 31) t(d)
-    )
-    SELECT date_trunc('day', e.ts) AS day, dim.tag,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM events e
-    JOIN dim ON CAST(date_trunc('day', e.ts) AS DATE) = CAST(dim.day AS DATE)
-    WHERE dim.tag = 'keep'
-    GROUP BY 1, 2
-    """,
-    doc=(
-        "Dynamic partition pruning demo: the day-partitioned fact table "
-        "joined to a filtered parquet dim — the scan's PartitionFilters "
-        "gains a dynamicpruningexpression, so only the dim's surviving "
-        "days are read, decided at runtime (plan-contract tested). The "
-        "runtime twin of src_partition_pruned's static literal pruning."
-    ),
-    tags=("source", "partitioning", "dpp"),
-)
-def src_dynamic_pruning(spark, sf_dir):
-    # shares the day-partitioned copy with src_partition_pruned
-    fact = spark.read.parquet(_prepare_day_partitioned(spark, sf_dir))
-    dim = spark.read.parquet(_prepare_dpp_dim(spark, sf_dir)).filter(
-        F.col("tag") == "keep"
-    )
-
-    return (
-        fact.join(dim, on="day")
-        .groupBy("day", "tag")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("day").cast("timestamp").alias("day"), "tag", "n_events")
-    )
-
-
-@EXT.add(
-    "llm_word_rarity",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS word
-      FROM documents
-    ),
-    wc AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM w GROUP BY word
-    )
-    SELECT w.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-           CAST(SUM(wc.freq) AS BIGINT) AS sum_freq,
-           SUM(wc.freq) / COUNT(*) AS mean_word_freq
-    FROM w JOIN wc USING (word)
-    GROUP BY w.doc_id
-    """,
-    doc=(
-        "Word-rarity quality signal: mean corpus frequency of a "
-        "document's words (low = rare-word-dense, high = boilerplate) — "
-        "the integer-exact stand-in for unigram perplexity (log-prob "
-        "sums are not bit-reproducible across engines; counts are). "
-        "Two shuffles: global word counts, then per-doc aggregation; "
-        "the frequency table is Zipf-bounded at scale."
-    ),
-    tags=("llm", "curation", "quality"),
-)
-def llm_word_rarity(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    w = docs.withColumn(
-        "word", F.explode(F.split(F.trim(F.col("text")), r"\s+"))
-    ).select("doc_id", "word")
-    wc = w.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    return (
-        w.join(wc, on="word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("freq").cast("long").alias("sum_freq"),
-        )
-        .withColumn("mean_word_freq", F.col("sum_freq") / F.col("n_words"))
-    )
-
-
-@EXT.add(
-    "llm_dedup_cluster",
-    oracle=f"""
-    WITH RECURSIVE {_jaccard_ctes()},
-    jp AS (
-      SELECT a, b FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.5
-    ),
-    edges AS (
-      SELECT a AS src, b AS dst FROM jp
-      UNION SELECT b AS src, a AS dst FROM jp
-    ),
-    reach AS (
-      SELECT src AS node, src AS label FROM edges
-      UNION
-      SELECT e.src AS node, r.label FROM edges e JOIN reach r ON e.dst = r.node
-    )
-    SELECT node AS doc_id, CAST(MIN(label) AS BIGINT) AS component
-    FROM reach GROUP BY node
-    """,
-    doc=(
-        "Near-duplicate CLUSTERING: connected components over the exact "
-        "Jaccard pair graph (min-label propagation to fixpoint, early "
-        "exit when a round changes nothing) — the step between pair "
-        "detection and survivor selection, since near-dups are "
-        "transitive. Component id = min doc_id in the cluster; oracle "
-        "is a recursive-CTE transitive closure over the same pairs "
-        "(near-dups span sources, so the graph is corpus-wide). "
-        "The iterative-fixpoint surface of the engine."
-    ),
-    tags=("llm", "dedup", "iterative"),
-)
-def llm_dedup_cluster(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    # edge set = the session-memoized exact-Jaccard truth; the operator
-    # under test here is the connected-components fixpoint.
-    pairs = _exact_jaccard_truth(spark, sf_dir).select("a", "b")
-    comps = D.connected_components(pairs)
-    return comps.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# training-data export + skew handling (round-3 additions)
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "llm_shuffle_shard",
-    oracle="""
-    SELECT doc_id,
-           CAST(((doc_id * 2654435761) % 4294967296) % 8 AS INTEGER) AS shard,
-           CAST(row_number() OVER (
-             PARTITION BY ((doc_id * 2654435761) % 4294967296) % 8
-             ORDER BY (doc_id * 2654435761) % 4294967296, doc_id
-           ) AS BIGINT) AS pos
-    FROM documents
-    """,
-    doc=(
-        "Deterministic global shuffle + shard assignment for training "
-        "export: Knuth multiplicative hash scrambles doc order, hash "
-        "mod 8 picks the shard, row_number over the scrambled order "
-        "gives the within-shard position. Pure 64-bit integer "
-        "arithmetic so both engines agree bit-for-bit (seeded-hash "
-        "shuffles are not SQL-portable). At 100 TB this is one "
-        "hash-partitioned exchange + per-partition sort — exactly a "
-        "shuffle write; reruns are byte-identical, which is what makes "
-        "training-data exports reproducible."
-    ),
-    tags=("llm", "export", "shuffle"),
-)
-def llm_shuffle_shard(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    h = (F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296)
-    shard = (h % 8).cast("int")
-    w = Window.partitionBy(shard).orderBy(h, F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        shard.alias("shard"),
-        F.row_number().over(w).cast("long").alias("pos"),
-    )
-
-
-@EXT.add(
-    "llm_vocab_build",
-    oracle="""
-    WITH w AS (
-      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS token
-      FROM documents
-    ),
-    wc AS (
-      SELECT token, CAST(COUNT(*) AS BIGINT) AS freq FROM w GROUP BY token
-    ),
-    ranked AS (
-      SELECT token, freq,
-             CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT) AS rank,
-             CAST(SUM(freq) OVER (ORDER BY freq DESC, token
-               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_freq,
-             CAST(SUM(freq) OVER () AS BIGINT) AS total_freq
-      FROM wc
-    )
-    SELECT token, freq, rank, cum_freq,
-           CAST(cum_freq AS DOUBLE) / total_freq AS coverage
-    FROM ranked WHERE rank <= 100
-    """,
-    doc=(
-        "Tokenizer vocabulary construction: top-100 whitespace tokens "
-        "by corpus frequency with cumulative coverage fraction — the "
-        "decide-the-vocab-size pass of tokenizer training "
-        "(coverage(rank) tells you what a 32k/64k vocab buys). "
-        "Deterministic (freq desc, token) total order; integer "
-        "cum_freq keeps the fraction bit-exact. One token-count "
-        "shuffle + one single-partition top-100 window — the global "
-        "window only ever sees the vocabulary, never the corpus, and "
-        "a Zipf vocabulary is millions of rows at 100 TB, not "
-        "billions."
-    ),
-    tags=("llm", "text", "vocab"),
-)
-def llm_vocab_build(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    w = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
-    )
-    wc = w.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    order = Window.orderBy(F.col("freq").desc(), F.col("token"))
-    ranked = wc.select(
-        "token",
-        "freq",
-        F.row_number().over(order).cast("long").alias("rank"),
-        F.sum("freq").over(order.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long")
-        .alias("cum_freq"),
-        F.sum("freq").over(Window.partitionBy()).cast("long").alias("total_freq"),
-    )
-    return ranked.filter(F.col("rank") <= 100).select(
-        "token",
-        "freq",
-        "rank",
-        "cum_freq",
-        (F.col("cum_freq").cast("double") / F.col("total_freq")).alias("coverage"),
-    )
-
-
-@EXT.add(
-    "join_skew_salted",
-    oracle="""
-    SELECT c.c_nationkey AS nation, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(TRY_CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events e JOIN customer c ON e.user_id % 1500 = c.c_custkey % 1500
-    WHERE c.c_custkey < 1500
-    GROUP BY 1
-    """,
-    doc=(
-        "SALTED fact-dim join — the hand-rolled skew escape hatch "
-        "(AQE skew-join's static twin): the dim side is replicated "
-        "SALT_N times with an explicit salt column, the fact side "
-        "computes salt = pmod(xxhash64(event_id), SALT_N), and the "
-        "join key becomes (key, salt) so one hot key's rows spread "
-        "over SALT_N tasks instead of one straggler. A shuffle_hash "
-        "hint pins the shuffle-join path the pattern exists for — on "
-        "the fixture Spark would happily broadcast the dim, and a "
-        "broadcast join has no shuffle skew to mitigate; at 100 TB "
-        "the dim that skews you is the one too big to broadcast "
-        "(plan-contract tested: ShuffledHashJoin on (k, salt), no "
-        "broadcast of the salted dim). The oracle is the plain "
-        "unsalted join — salting is provably semantics-preserving. "
-        "Exact decimal sums."
-    ),
-    tags=("join", "skew"),
-)
-def join_skew_salted(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.aggregates import dec_sum
-
-    SALT_N = 8
-    ev = t(spark, sf_dir, "events").select(
-        (F.col("user_id") % 1500).alias("k"),
-        F.col("value"),
-        F.pmod(F.xxhash64("event_id"), F.lit(SALT_N)).cast("int").alias("salt"),
-    )
-    cust = (
-        t(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") < 1500)
-        .select((F.col("c_custkey") % 1500).alias("k"), "c_nationkey")
-    )
-    salted_dim = cust.crossJoin(
-        F.broadcast(
-            cust.sparkSession.range(SALT_N).select(F.col("id").cast("int").alias("salt"))
-        )
-    )
-    joined = ev.join(salted_dim.hint("shuffle_hash"), on=["k", "salt"])
-    return joined.groupBy(F.col("c_nationkey").alias("nation")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        dec_sum("value").cast("double").alias("sum_value"),
-    )
-
-
-@EXT.add(
-    "llm_dedup_embedding_cluster",
-    oracle=f"""
-    WITH RECURSIVE u AS (
-      SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id, embedding
-      FROM embeddings WHERE vec_id < 32 AND embedding IS NOT NULL AND len(embedding) > 0
-      UNION ALL
-      SELECT vec_id + 2000000 AS vec_id, embedding
-      FROM embeddings WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0
-    ),
-    ep AS (
-      SELECT a.vec_id AS a, b.vec_id AS b
-      FROM u a JOIN u b ON a.vec_id < b.vec_id
-      WHERE {_COS_SQL.format(a="a.embedding", b="b.embedding")} >= 0.95
-    ),
-    eedges AS (
-      SELECT a AS src, b AS dst FROM ep
-      UNION SELECT b AS src, a AS dst FROM ep
-    ),
-    ereach AS (
-      SELECT src AS node, src AS label FROM eedges
-      UNION
-      SELECT e.src AS node, r.label FROM eedges e JOIN ereach r ON e.dst = r.node
-    )
-    SELECT node AS vec_id, CAST(MIN(label) AS BIGINT) AS component
-    FROM ereach GROUP BY node
-    """,
-    doc=(
-        "Embedding near-dup CLUSTERING — the multimodal twin of "
-        "llm_dedup_cluster: SRP-bucketed cosine pairs (>= 0.95) over "
-        "the corpus plus planted duplicate chains (32 copies at +1e6, "
-        "16 second copies at +2e6, so true clusters of size 3 exist) "
-        "-> connected components -> min-vec_id component labels. "
-        "Oracle = recursive-CTE closure over brute-force all-pairs "
-        "cosine truth; identical vectors co-bucket with probability 1, "
-        "so detection is provably complete on this geometry."
-    ),
-    tags=("llm", "dedup", "iterative", "similarity"),
-)
-def llm_dedup_embedding_cluster(spark, sf_dir):
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    p1 = emb.filter(F.col("vec_id") < 32).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    p2 = emb.filter(F.col("vec_id") < 16).select(
-        (F.col("vec_id") + 2_000_000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.union(p1).union(p2)
-    pairs = D.embedding_near_pairs(corpus, min_cosine=0.95, n_planes=8).select("a", "b")
-    comps = D.connected_components(pairs)
-    return comps.select(
-        F.col("node").cast("long").alias("vec_id"),
-        F.col("component").cast("long").alias("component"),
-    )
-
-
-# shared by llm_dedup_incremental and its persisted-index sibling —
-# identical two-stage semantics, different index acquisition path
-_INCR_DEDUP_ORACLE = f"""
-    WITH RECURSIVE {_jaccard_ctes()},
-    jp AS (
-      SELECT a, b FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / (na + nb - n_common) >= 0.6
-    ),
-    dropped_vs_corpus AS (
-      SELECT DISTINCT CASE WHEN a % 4 = 0 THEN a ELSE b END AS d
-      FROM jp WHERE (a % 4 = 0) <> (b % 4 = 0)
-    ),
-    stage1 AS (
-      SELECT doc_id FROM documents
-      WHERE doc_id % 4 = 0
-        AND doc_id NOT IN (SELECT d FROM dropped_vs_corpus)
-    ),
-    nn AS (
-      SELECT a, b FROM jp
-      WHERE a IN (SELECT doc_id FROM stage1)
-        AND b IN (SELECT doc_id FROM stage1)
-    ),
-    nedges AS (
-      SELECT a AS src, b AS dst FROM nn
-      UNION SELECT b AS src, a AS dst FROM nn
-    ),
-    nreach AS (
-      SELECT src AS node, src AS label FROM nedges
-      UNION
-      SELECT e.src AS node, r.label FROM nedges e JOIN nreach r ON e.dst = r.node
-    ),
-    nlosers AS (
-      SELECT node FROM nreach GROUP BY node HAVING node != MIN(label)
-    )
-    SELECT doc_id, lang, source FROM documents
-    WHERE doc_id IN (SELECT doc_id FROM stage1)
-      AND doc_id NOT IN (SELECT node FROM nlosers)
-    """
-
-
-def _prepare_corpus_signatures(spark, sf_dir: str) -> str:
-    """The standing corpus's PLAIN banded-signature table, persisted
-    once — the warmed store ``llm_dedup_incremental`` consumes (the
-    build-once/probe-per-batch path the dedup-amortized rehearsal
-    proved flat; SCALE.md round 9). The bucketed/partition-pruned
-    sibling of this fixture is ``_prepare_minhash_index`` below —
-    that one exercises probe-time partition pruning, this one the
-    prebuilt-signatures calling convention alone."""
-    corpus = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 != 0)
-
-    def _write(d):
-        D.banded_signatures(corpus).write.mode("overwrite").parquet(d)
-
-    return _cached_layout("corpsigs", sf_dir, _write)
-
-
-BENCH_FIXTURES.append(_prepare_corpus_signatures)
-
-
-@EXT.add(
-    "llm_dedup_incremental",
-    oracle=_INCR_DEDUP_ORACLE,
-    doc=(
-        "INCREMENTAL near-dedup — the ingestion-path shape: the batch "
-        "(doc_id % 4 = 0, a quarter of the corpus standing in for an "
-        "incoming day) is deduped against the standing corpus (the "
-        "other three quarters). A new doc matching any corpus doc is "
-        "dropped; survivors then cluster among themselves (CC over "
-        "survivor-survivor pairs, min-id per component). Per-batch "
-        "cost probes only LSH buckets containing a new doc — never "
-        "corpus x corpus; the corpus's banded_signatures table IS a "
-        "persisted store here (warmed bench fixture, the production "
-        "build-once path), so the query's timing is probe-plus-verify "
-        "only — re-shingling the standing corpus per batch was the "
-        "one place the bench shape diverged from the amortization "
-        "rehearsal's. Oracle = the same two-stage rule over the "
-        "exact Jaccard pair graph via recursive CTE."
-    ),
-    tags=("llm", "dedup", "incremental"),
-)
-def llm_dedup_incremental(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 4 == 0)
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    sigs = spark.read.parquet(_prepare_corpus_signatures(spark, sf_dir))
-    return D.minhash_dedup_incremental(
-        corpus, new, threshold=0.6, corpus_signatures=sigs
-    ).select("doc_id", "lang", "source")
-
-
-_EXACT_DEDUP_WHERE = (
-    "WHERE text IS NULL OR doc_id IN (SELECT MIN(doc_id) FROM documents WHERE text IS NOT NULL GROUP BY text)"
-)
-
-
-@EXT.add(
-    "llm_corpus_export",
-    oracle=f"""
-    WITH RECURSIVE {_jaccard_ctes(_EXACT_DEDUP_WHERE)},
-    {_CLUSTER_SURVIVOR_CTES}
-    , nd AS (
-      SELECT * FROM documents
-      {_EXACT_DEDUP_WHERE}
-        AND doc_id NOT IN (SELECT node FROM losers)
-    ),
-    scored AS (
-      SELECT doc_id,
-             CAST(((doc_id * 2654435761) % 4294967296) % 4 AS INTEGER) AS shard,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'), x -> lower(x)) AS toks,
-             length(text) AS nc,
-             length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS nalpha,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS ntok
-      FROM nd
-    ),
-    quality AS (
-      SELECT doc_id, shard, ntok,
-             least(CAST(ntok AS DOUBLE) / 50.0, 1.0)
-               * (CAST(nalpha AS DOUBLE) / CAST(greatest(nc, 1) AS DOUBLE))
-               * (0.5 + 0.5 * least(CAST(len(list_intersect(toks, {_STOPWORD_SQL_LIST})) AS DOUBLE) / 2.0, 1.0))
-               AS q
-      FROM scored
-    )
-    SELECT shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CAST(ntok AS BIGINT)) AS BIGINT) AS total_tokens
-    FROM quality
-    WHERE q >= 0.3
-    GROUP BY shard
-    """,
-    doc=(
-        "The END-TO-END training-data export pipeline as one program: "
-        "exact dedup (content-hash) -> near-dedup with cluster-correct "
-        "survivors (MinHash LSH -> connected components -> min-id) -> "
-        "Gopher-style quality gate (>= 0.3) -> deterministic shard "
-        "assignment (Knuth hash % 4) -> per-shard corpus accounting. "
-        "Every stage is individually oracle-checked elsewhere; this "
-        "query checks their COMPOSITION against a single recursive-CTE "
-        "replica. Plan: one scan feeds dedup hashing, LSH banding and "
-        "quality scoring; only the pair self-join, the CC fixpoint and "
-        "the final per-shard aggregate shuffle."
-    ),
-    tags=("llm", "pipeline", "flagship", "export"),
-)
-def llm_corpus_export(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    d1 = D.exact_dedup(docs)
-    # collapse_identical=False: d1 is exact_dedup output, so non-NULL
-    # texts are already pairwise distinct — the in-operator exact
-    # collapse would be the identity computed at the cost of an eager
-    # materialization + a shuffle + two joins (interleaved min-of-3
-    # A/B at sf0.1, cold session: 14.1 s with the redundant collapse
-    # vs 12.4 s without; rows identical)
-    nd = D.minhash_dedup(d1, threshold=0.6, collapse_identical=False)
-    q = nd.withColumn("__q", TS.quality_score("text")).filter(F.col("__q") >= 0.3)
-    shard = (
-        ((F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296)) % 4
-    ).cast("int")
-    return (
-        q.withColumn("shard", shard)
-        .withColumn("__ntok", TS.token_count("text"))
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("__ntok").cast("long")).alias("total_tokens"),
-        )
-    )
-
-
-@EXT.add(
-    "src_schema_evolution",
-    oracle="""
-    SELECT n_nationkey, n_name,
-           CASE WHEN n_nationkey >= 13 THEN upper(n_name) END AS n_alias
-    FROM nation
-    """,
-    doc=(
-        "Schema-evolution read demo: an older parquet generation "
-        "(n_nationkey < 13) written WITHOUT the n_alias column sits "
-        "next to a newer generation that has it; reading the directory "
-        "pair with mergeSchema=true yields the union schema with NULLs "
-        "for the missing column - the additive-column evolution every "
-        "long-lived 100 TB table goes through. (Production posture: "
-        "evolve via the explicit declared schema, since mergeSchema "
-        "costs a footer fan-out; the demo verifies Spark's merge "
-        "semantics match the declared-schema expectation.)"
-    ),
-    tags=("source", "schema"),
-)
-def src_schema_evolution(spark, sf_dir):
-    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-    def _write(d):
-        import os as _os
-
-        old = nation.filter(F.col("n_nationkey") < 13)
-        new = nation.filter(F.col("n_nationkey") >= 13).withColumn(
-            "n_alias", F.upper(F.col("n_name"))
-        )
-        old.write.mode("overwrite").parquet(_os.path.join(d, "gen=old"))
-        new.write.mode("overwrite").parquet(_os.path.join(d, "gen=new"))
-
-    out = _cached_layout("schemaevo", sf_dir, _write)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .option("recursiveFileLookup", "true")
-        .parquet(out)
-        .select("n_nationkey", "n_name", "n_alias")
-    )
-
-
-@EXT.add(
-    "src_corrupt_records",
-    oracle="""
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nation) AS n_clean,
-           CAST(3 AS BIGINT) AS n_corrupt
-    """,
-    doc=(
-        "Malformed-input resilience demo: a JSONL feed of the nation "
-        "table with 3 planted corrupt lines, read in PERMISSIVE mode "
-        "with a _corrupt_record column - bad lines land in the "
-        "quarantine column instead of failing the job (the only "
-        "tenable posture for a 100 TB feed of third-party data). "
-        "Returns (n_clean, n_corrupt); the oracle knows the plant."
-    ),
-    tags=("source", "robustness"),
-)
-def src_corrupt_records(spark, sf_dir):
-    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-    def _write(d):
-        import json as _json
-        import os as _os
-
-        rows = sorted(
-            (r.n_nationkey, r.n_name) for r in nation.collect()
-        )  # driver-side: 25-row dim, fixture construction only
-        with open(_os.path.join(d, "feed.jsonl"), "w") as f:
-            for k, name in rows:
-                f.write(_json.dumps({"n_nationkey": k, "n_name": name}) + "\n")
-            f.write('{"n_nationkey": 900, "n_name": unquoted}\n')
-            f.write("not json at all\n")
-            f.write('{"n_nationkey": "}\n')
-
-    out = _cached_layout("corrupt", sf_dir, _write)
-    parsed = spark.read.schema(
-        "n_nationkey long, n_name string, _corrupt_record string"
-    ).json(out)
-    # materializing is the documented contract for referencing the
-    # internal _corrupt_record column together with parsed columns;
-    # localCheckpoint (vs cache) leaves no storage-cache entry behind
-    # across repeated registry runs
-    parsed = parsed.localCheckpoint(eager=True)
-    return parsed.agg(
-        F.count(F.when(F.col("_corrupt_record").isNull(), 1)).cast("long").alias("n_clean"),
-        F.count(F.col("_corrupt_record")).cast("long").alias("n_corrupt"),
-    )
-
-
-@EXT.add(
-    "llm_dedup_url",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, doc_id % 100 AS grp FROM documents
-    )
-    SELECT 'https://h' || CAST(grp % 7 AS VARCHAR) || '.example.com/articles/'
-             || CAST(grp AS VARCHAR) || '?id=' || CAST(grp AS VARCHAR)
-             || '&lang=en' AS canonical_url,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           MIN(doc_id) AS keeper
-    FROM g GROUP BY grp
-    """,
-    doc=(
-        "URL-identity dedup — the FIRST dedup stage of every web-corpus "
-        "pipeline (crawls revisit the same page under cosmetically "
-        "different URLs). Each doc gets a deterministically MESSY url "
-        "(doc_id%4 picks: clean | UPPERCASE host + trailing slash + "
-        "reordered params | utm_* tracking junk | :443 default port + "
-        "#fragment), all variants of the identity doc_id%100. The "
-        "operator genuinely parses and canonicalizes (parse_url + "
-        "lowercase scheme/host, strip trailing slash, drop fragment, "
-        "strip tracking params, SORT survivors — one codegen stage, no "
-        "Python); the ORACLE derives each group's canonical string "
-        "analytically from the identity, so a parser bug cannot cancel "
-        "itself out. 100 groups at every SF; keeper = min doc_id."
-    ),
-    tags=("llm", "dedup", "url"),
-)
-def llm_dedup_url(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import url_dedup
-
-    g = (F.col("doc_id") % 100).cast("string")
-    host = F.concat(F.lit("h"), ((F.col("doc_id") % 100) % 7).cast("string"), F.lit(".example.com"))
-    base_path = F.concat(F.lit("/articles/"), g)
-    messy = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("https://"), host, base_path, F.lit("?id="), g, F.lit("&lang=en")),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.concat(
-                F.lit("HTTPS://"), F.upper(host), base_path, F.lit("/"),
-                F.lit("?lang=en&id="), g,
-            ),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.lit("https://"), host, base_path,
-                F.lit("?utm_source=feed&id="), g, F.lit("&utm_campaign=promo&lang=en"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://"), host, F.lit(":443"), base_path,
-                F.lit("?lang=en&id="), g, F.lit("#frag"),
-            )
-        )
-    )
-    docs = t(spark, sf_dir, "documents").select("doc_id", messy.alias("url"))
-    return url_dedup(docs)
-
-
-@EXT.add(
-    "llm_media_dedup",
-    oracle="""
-    WITH m AS (
-      SELECT doc_id AS media_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000 AS media_id, text
-      FROM documents WHERE doc_id < 20
-    )
-    SELECT media_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-    FROM m
-    WHERE media_id IN (SELECT MIN(media_id) FROM m GROUP BY text)
-    """,
-    doc=(
-        "Exact dedup over an opaque BINARY media column (plus 20 "
-        "planted duplicate rows so the pass provably fires): group by "
-        "JVM-side sha2-256 of the bytes, min media_id survives. The "
-        "100 TB property: the shuffle carries 64-byte digests, never "
-        "media payloads - for image/video corpora that is a ~10^5 "
-        "reduction in dedup shuffle volume. Swap the text-derived "
-        "bytes for real image/audio content and nothing changes."
-    ),
-    tags=("llm", "multimodal", "dedup"),
-)
-def llm_media_dedup(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("content"),
-    )
-    planted = docs.filter(F.col("doc_id") < 20).select(
-        (F.col("doc_id") + 1_000_000).alias("media_id"),
-        F.encode("text", "UTF-8").alias("content"),
-    )
-    media = base.union(planted)
-    keep = (
-        media.groupBy(F.sha2("content", 256).alias("__h"))
-        .agg(F.min("media_id").alias("media_id"))
-        .select("media_id")
-    )
-    return media.join(keep, on="media_id", how="left_semi").select(
-        "media_id", F.octet_length("content").cast("long").alias("n_bytes")
-    )
-
-
-@EXT.add(
-    "agg_rolling_distinct",
-    oracle="""
-    WITH days AS (
-      SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day FROM events
-    )
-    SELECT CAST(d.day AS TIMESTAMP) AS day,
-           CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS u7
-    FROM days d
-    JOIN events e
-      ON CAST(date_trunc('day', e.ts) AS DATE)
-         BETWEEN d.day - INTERVAL 6 DAY AND d.day
-    GROUP BY d.day
-    """,
-    doc=(
-        "Trailing 7-day DISTINCT users per day (the rolling-uniques "
-        "dashboard ask) via contribution expansion: each event row "
-        "explodes to the <= 7 window-end days it contributes to, then "
-        "one groupBy(day) count-distinct — a map-side x7 expand plus "
-        "ONE shuffle, instead of a per-row range window holding a "
-        "distinct-set state (which Spark windows cannot express "
-        "anyway). At 100 TB the swap is approx_count_distinct per "
-        "day-bucket or an HLL-sketch union; the expansion shape is "
-        "unchanged. Only days that exist in the data are emitted, "
-        "matching the oracle's days table."
-    ),
-    tags=("agg", "window", "distinct"),
-)
-def agg_rolling_distinct(spark, sf_dir):
-    ev = t(spark, sf_dir, "events").select(
-        F.to_date(F.col("ts")).alias("eday"), "user_id"
-    )
-    days = ev.select(F.col("eday").alias("day")).distinct()
-    contrib = ev.select(
-        F.explode(
-            F.sequence(F.col("eday"), F.date_add(F.col("eday"), 6))
-        ).alias("day"),
-        "user_id",
-    )
-    out = (
-        contrib.join(days, on="day", how="left_semi")
-        .groupBy("day")
-        .agg(F.countDistinct("user_id").cast("long").alias("u7"))
-    )
-    return out.select(F.col("day").cast("timestamp").alias("day"), "u7")
-
-
-@EXT.add(
-    "src_custom_datasource",
-    oracle="""
-    SELECT d AS app_id, printf('app-%06d', d) AS name,
-           CAST(d // 100 AS INTEGER) AS page
-    FROM range(1000) t(d)
-    """,
-    doc=(
-        "Custom Python DataSource (Spark 4 DataSource API) modeling "
-        "the reference's paginated API catalog fetch: one input "
-        "partition per page, so page fetches parallelize across "
-        "executors and retry as tasks; each fetch additionally runs "
-        "the reference's bounded-retry contract in-process (a "
-        "synthetic 503 on every page's first attempt is recovered by "
-        "call_with_retry - the flaky option is ON here). The page "
-        "payload is a deterministic function of (page, page_size), "
-        "making the whole source oracle-checkable; swap the fetch for "
-        "real HTTP and the partition planning, schema, and retry "
-        "stand unchanged."
-    ),
-    tags=("source", "datasource", "retry"),
-)
-def src_custom_datasource(spark, sf_dir):
-    from steam_data_pipeline_spark.sources.paginated import register
-
-    register(spark)
-    return (
-        spark.read.format("paginated_api")
-        .option("total", "1000")
-        .option("page_size", "100")
-        .option("flaky", "true")
-        .load()
-    )
-
-
-@EXT.add(
-    "stream_parquet_sink",
-    oracle="""
-    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-    FROM events WHERE event_type IN ('purchase', 'error')
-    GROUP BY event_type
-    """,
-    doc=(
-        "Structured Streaming to a real PARQUET FILE SINK (append mode "
-        "+ checkpoint - the exactly-once file sink production streams "
-        "use, not the memory sink the other stream queries verify "
-        "semantics with): filtered events stream to parquet, the files "
-        "are read back and aggregated, and the result must equal the "
-        "batch aggregate. The sink's _spark_metadata transaction log "
-        "is what makes concurrent readers see only committed files - "
-        "the same idea as the store's generation pointer."
-    ),
-    tags=("streaming", "sink"),
-)
-def stream_parquet_sink(spark, sf_dir):
-    import os as _os
-
-    def _run(out_dir: str) -> None:
-        ev = _read_events_stream(spark, sf_dir).filter(
-            F.col("event_type").isin("purchase", "error")
-        ).select("event_id", "event_type")
-        q = (
-            ev.writeStream.format("parquet")
-            .option("path", _os.path.join(out_dir, "data"))
-            .option("checkpointLocation", _os.path.join(out_dir, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # one sink directory per (process, sf_dir): _cached_layout makes a
-    # re-invocation within this process a no-op (the stream ran once;
-    # later calls just read the committed output back). The sink's
-    # checkpoint-resume path would only execute if the same directory
-    # were reused across processes — each new process gets a fresh
-    # mkdtemp and re-runs the stream from scratch. No temp-dir
-    # accretion within a registry run either way.
-    out_dir = _cached_layout("psink", sf_dir, _run, disk=False)
-    back = spark.read.parquet(_os.path.join(out_dir, "data"))
-    return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-
-
-@EXT.add(
-    "stream_quality_gate",
-    oracle="""
-    WITH d AS (
-      SELECT strftime(ts, '%Y-%m-%d') AS day,
-             CAST(COUNT(*) AS BIGINT) AS n_rows,
-             CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_bad
-      FROM events WHERE day(ts) <= 12 GROUP BY 1
-    )
-    SELECT day, n_rows, n_bad,
-           CASE WHEN n_bad * 5 > n_rows THEN 'quarantined'
-                ELSE 'accepted' END AS status
-    FROM d
-    """,
-    doc=(
-        "BATCH-level streaming quality gate (the qa layer on the "
-        "ingest path): events arrive as one file per day "
-        "(maxFilesPerTrigger=1 makes each micro-batch exactly one "
-        "day), foreachBatch computes the batch's error fraction in ONE "
-        "aggregate job and routes the WHOLE batch — error rate > 20% "
-        "(integer compare n_bad*5 > n_rows, no float threshold) goes "
-        "to the quarantine sink, otherwise to accepted; both are real "
-        "parquet appends. This is the reject-bad-ingest semantics a "
-        "row filter cannot express (a batch with too many errors is "
-        "suspect IN TOTAL - its clean-looking rows are quarantined "
-        "too). 6 of 12 days quarantine at sf0.01 - both paths "
-        "non-vacuous. The result re-reads BOTH sinks and must "
-        "reproduce the per-day truth DuckDB computes from raw events."
-    ),
-    tags=("streaming", "qa"),
-)
-def stream_quality_gate(spark, sf_dir):
-    import os as _os
-
-    def _build(out_dir: str) -> None:
-        ev = (
-            t(spark, sf_dir, "events")
-            .filter(F.dayofmonth("ts") <= 12)
-            .select(
-                "event_id",
-                "event_type",
-                "value",
-                F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            )
-        )
-        # one FILE per day: repartition by the partition column, then
-        # partitionBy — each micro-batch below is exactly one day
-        ev.repartition(F.col("day")).write.mode("overwrite").partitionBy(
-            "day"
-        ).parquet(_os.path.join(out_dir, "in"))
-
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, value double, day string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(_os.path.join(out_dir, "in"))
-        )
-
-        def _gate(batch_df, _bid):
-            row = batch_df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(F.col("event_type") == "error", 1).otherwise(0)
-                ).alias("bad"),
-            ).first()
-            if not row["n"]:
-                return
-            target = (
-                "quarantined" if row["bad"] * 5 > row["n"] else "accepted"
-            )
-            batch_df.write.mode("append").parquet(
-                _os.path.join(out_dir, target)
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(_gate)
-            .option(
-                "checkpointLocation", _os.path.join(out_dir, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    out_dir = _cached_layout("qgate", sf_dir, _build, disk=False)
-
-    def _summarize(sub: str):
-        # degenerate-shape contract (r13 skew axis): if every batch
-        # routed to the OTHER sink (or the day filter matched nothing),
-        # this sink's directory was never created — an empty sink is an
-        # empty summary, not a PATH_NOT_FOUND crash
-        path = _os.path.join(out_dir, sub)
-        if not _os.path.isdir(path):
-            return spark.createDataFrame(
-                [], "day string, n_rows long, n_bad long, status string"
-            )
-        return (
-            spark.read.parquet(path)
-            .groupBy("day")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(
-                    F.when(F.col("event_type") == "error", 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_bad"),
-            )
-            .withColumn("status", F.lit(sub))
-        )
-
-    return _summarize("accepted").unionByName(_summarize("quarantined"))
-
-
-@EXT.add(
-    "proj_variant_props",
-    oracle="""
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           -- malformed-JSON contract (r13 axis f): corrupt props = NULL k
-           CAST(SUM(TRY_CAST(CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(MAX(TRY_CAST(CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END AS BIGINT)) AS BIGINT) AS max_k
-    FROM events
-    GROUP BY event_type
-    """,
-    doc=(
-        "Semi-structured props via VariantType (Spark 4): parse_json "
-        "once into a variant column, typed try_variant_get extraction, "
-        "then aggregate - the open-schema path for the reference's "
-        "JSON detail blobs. Variant stores a parsed binary encoding, "
-        "so repeated field extraction skips re-parsing the JSON text "
-        "(the at-scale argument vs get_json_object per field); "
-        "shredded variant columns also support pushdown in newer "
-        "parquet readers. Oracle = DuckDB json_extract on the same "
-        "strings."
-    ),
-    tags=("projection", "variant", "json"),
-)
-def proj_variant_props(spark, sf_dir):
-    # try_parse_json (r13 malformed-JSON contract): parse_json is
-    # FAILFAST — one truncated record kills the whole aggregate
-    ev = t(spark, sf_dir, "events").withColumn(
-        "v", F.try_parse_json("props")
-    )
-    return (
-        ev.select(
-            "event_type",
-            F.try_variant_get("v", "$.k", "long").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-@EXT.add(
-    "fn_collated_group",
-    oracle="""
-    SELECT lower(p_name) AS name_ci, CAST(COUNT(*) AS BIGINT) AS n
-    FROM part GROUP BY lower(p_name)
-    """,
-    doc=(
-        "Case-insensitive grouping via Spark 4 COLLATIONS "
-        "(UTF8_LCASE) instead of lower() normalization: the collation "
-        "travels with the column through comparisons, joins and "
-        "aggregation, so the engine applies it inside hash/sort "
-        "operators (no derived normalization column to maintain, and "
-        "collation-aware codegen). Output is projected back through "
-        "lower() only to give both engines a common representative "
-        "string for the hash compare."
-    ),
-    tags=("function", "collation"),
-)
-def fn_collated_group(spark, sf_dir):
-    part = t(spark, sf_dir, "part")
-    grouped = (
-        part.select(F.collate(F.col("p_name"), "UTF8_LCASE").alias("name"))
-        .groupBy("name")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return grouped.select(
-        F.lower(F.col("name")).cast("string").alias("name_ci"), "n"
-    )
-
-
-@EXT.add(
-    "agg_retention_cohort",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, MIN(CAST(date_trunc('day', ts) AS DATE)) AS cohort_day
-      FROM events GROUP BY user_id
-    )
-    SELECT CAST(f.cohort_day AS TIMESTAMP) AS cohort_day,
-           CAST(CAST(date_trunc('day', e.ts) AS DATE) - f.cohort_day AS BIGINT) AS day_offset,
-           CAST(COUNT(DISTINCT e.user_id) AS BIGINT) AS n_active
-    FROM events e JOIN firsts f USING (user_id)
-    WHERE CAST(date_trunc('day', e.ts) AS DATE) - f.cohort_day <= 7
-    GROUP BY f.cohort_day, day_offset
-    """,
-    doc=(
-        "Cohort retention matrix: users grouped by first-seen day, "
-        "distinct-active counts per (cohort, day offset <= 7) - the "
-        "standard retention triangle. Two shuffles (first-seen "
-        "aggregate, cohort-offset aggregate) joined on user_id; the "
-        "firsts table is |users| rows, broadcast-eligible when users "
-        "are dim-sized and hash-joined otherwise - never a scan of "
-        "events x events."
-    ),
-    tags=("agg", "analytics", "cohort"),
-)
-def agg_retention_cohort(spark, sf_dir):
-    ev = t(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("day")
-    )
-    firsts = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    joined = ev.join(firsts, on="user_id").withColumn(
-        "day_offset", F.datediff(F.col("day"), F.col("cohort_day")).cast("long")
-    )
-    return (
-        joined.filter(F.col("day_offset") <= 7)
-        .groupBy("cohort_day", "day_offset")
-        .agg(F.countDistinct("user_id").cast("long").alias("n_active"))
-        .select(
-            F.col("cohort_day").cast("timestamp").alias("cohort_day"),
-            "day_offset",
-            "n_active",
-        )
-    )
-
-
-@EXT.add(
-    "win_funnel_steps",
-    oracle="""
-    WITH purchases AS (
-      SELECT user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    converted AS (
-      SELECT DISTINCT p.user_id
-      FROM purchases p JOIN events e
-        ON e.user_id = p.user_id
-       AND e.event_type = 'play'
-       AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL 1 DAY
-    )
-    SELECT (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM purchases) AS n_purchasers,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM converted) AS n_converted
-    """,
-    doc=(
-        "Two-step funnel: users who 'purchase' and then 'play' within "
-        "24 h - the conversion-rate primitive. Spark side sessionizes "
-        "per user with one window over (user, ts): for each purchase, "
-        "the MIN following play timestamp within the horizon via a "
-        "range-frame window, then two distinct-count aggregates - one "
-        "shuffle on user_id, no self-join blowup (the oracle's "
-        "time-range self-join is the semantics spec; the window plan "
-        "is the scale shape)."
-    ),
-    tags=("window", "analytics", "funnel"),
-)
-def win_funnel_steps(spark, sf_dir):
-    from pyspark.sql import Window
-
-    # microsecond-precision epoch for the range frame: a seconds cast
-    # would truncate sub-second gaps and disagree with the oracle's
-    # exact ts comparison at the boundary
-    ev = t(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.unix_micros("ts").alias("tsu")
-    ).filter(F.col("event_type").isin("purchase", "play"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tsu")
-        .rangeBetween(1, 24 * 3600 * 1_000_000)
-    )
-    flagged = ev.withColumn(
-        "play_follows",
-        F.max(F.when(F.col("event_type") == "play", F.lit(1)).otherwise(F.lit(0))).over(w),
-    ).filter(F.col("event_type") == "purchase")
-    n_purch = flagged.agg(
-        F.countDistinct("user_id").cast("long").alias("n_purchasers")
-    )
-    n_conv = flagged.filter(F.col("play_follows") == 1).agg(
-        F.countDistinct("user_id").cast("long").alias("n_converted")
-    )
-    return n_purch.crossJoin(n_conv)
-
-
-@EXT.add(
-    "agg_hll_mergeable",
-    oracle="""
-    SELECT (SELECT CAST(COUNT(DISTINCT date_trunc('day', ts)) AS BIGINT) FROM events) AS n_days,
-           (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM events) AS n_users_exact,
-           TRUE AS union_within_5pct
-    """,
-    doc=(
-        "MERGEABLE distinct-count sketches (Datasketches HLL, Spark "
-        "4 hll_sketch_agg/hll_union_agg): per-day user sketches are "
-        "built once, then UNIONED into the global estimate without "
-        "touching raw data again - the pre-aggregation pattern that "
-        "makes 100 TB dashboards answer 'distinct users any date "
-        "range' from day-grain sketch tables instead of re-scanning "
-        "facts. Invariant oracle: exact day and user counts anchor "
-        "the row; the sketch-union estimate must land within 5% of "
-        "the exact distinct (the agg_distinct_pool_approx pattern "
-        "for mergeable sketches)."
-    ),
-    tags=("agg", "approx", "sketch"),
-)
-def agg_hll_mergeable(spark, sf_dir):
-    ev = t(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("day"), "user_id"
-    )
-    daily = ev.groupBy("day").agg(F.hll_sketch_agg("user_id").alias("sk"))
-    merged = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__est"),
-    )
-    exact = ev.agg(F.countDistinct("user_id").cast("long").alias("n_users_exact"))
-    return merged.crossJoin(exact).select(
-        "n_days",
-        "n_users_exact",
-        (
-            F.abs(F.col("__est") - F.col("n_users_exact"))
-            <= 0.05 * F.col("n_users_exact")
-        ).alias("union_within_5pct"),
-    )
-
-
-@EXT.add(
-    "llm_dedup_containment",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(
-               list_transform(
-                 range(1, greatest(len(regexp_split_to_array(lower(text), '\\s+')) - 1, 2)),
-                 i -> array_to_string(regexp_split_to_array(lower(text), '\\s+')[i:i+2], ' ')
-               )
-             ) AS shingles
-      FROM documents
-    ),
-    posting AS (
-      SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS s FROM sh
-    ),
-    pairs AS (
-      SELECT a.doc_id AS a, b.doc_id AS b,
-             ANY_VALUE(a.n_sh) AS na,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM posting a JOIN posting b ON a.s = b.s AND a.doc_id != b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT a, b, CAST(n_common AS DOUBLE) / na AS containment
-    FROM pairs
-    WHERE CAST(n_common AS DOUBLE) / na >= 0.8
-    """,
-    doc=(
-        "Asymmetric CONTAINMENT pairs C(A->B) = |A∩B|/|A| >= 0.8 over "
-        "3-gram shingles - the excerpt-duplicate detector (a short doc "
-        "quoted inside a long one has high containment but low "
-        "Jaccard, so symmetric near-dedup misses it; Broder's "
-        "resemblance vs containment split applied to training-data "
-        "excerpt scrubbing). Directional: both orientations appear "
-        "when both qualify. Exact value-level oracle."
-    ),
-    tags=("llm", "dedup", "containment"),
-)
-def llm_dedup_containment(spark, sf_dir):
-    return D.containment_pairs(
-        t(spark, sf_dir, "documents"), shingle_n=3, min_containment=0.8
-    )
-
-
-# ---------------------------------------------------------------------------
-# round 4: semi-structured HTML extraction (the one declared reference
-# behavior with no engine analog until now)
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "src_html_extract",
-    oracle=r"""
-    WITH top AS (
-      SELECT p_partkey, p_name, p_retailprice FROM part
-      ORDER BY p_retailprice DESC, p_partkey LIMIT 25
-    ),
-    page AS (
-      SELECT string_agg(
-        '<a href="/app/' || CAST(p_partkey AS VARCHAR)
-        || '" class="search_result_row" data-ds-appid="'
-        || CAST(p_partkey AS VARCHAR) || '"><span class="title">'
-        || p_name || '</span></a>',
-        '' ORDER BY p_retailprice DESC, p_partkey) AS html
-      FROM top
-    ),
-    ids AS (SELECT regexp_extract_all(html, 'data-ds-appid="(\d+)"', 1) AS l FROM page)
-    SELECT CAST(generate_subscripts(l, 1) AS BIGINT) AS rank,
-           CAST(unnest(l) AS BIGINT) AS appid
-    FROM ids
-    """,
-    doc=(
-        "Ranked-listing keys extracted from a raw HTML-shaped STRING "
-        "column - the engine analog of the reference's search-page "
-        "scrape (reference main.py:233-234 parses pages with "
-        "soup.select('a.search_result_row') and main.py:270-272 reads "
-        "the data-ds-appid attribute per row; main.py:282-284 does the "
-        "same for tr rows with data-appid). A search-results page is "
-        "synthesized deterministically from the part table (top-25 by "
-        "retail price, one anchor per game in rank order), then the "
-        "app ids are pulled back out of the markup with "
-        "regexp_extract_all in document order: (rank, appid). "
-        "Exact value-level oracle. At scale the page column is one "
-        "row per fetched page and the extraction is a scan-only "
-        "projection - no shuffle, no UDF."
-    ),
-    tags=("source", "html", "regexp"),
-)
-def src_html_extract(spark, sf_dir):
-    top = (
-        t(spark, sf_dir, "part")
-        .select("p_partkey", "p_name", "p_retailprice")
-        .orderBy(F.desc("p_retailprice"), "p_partkey")
-        .limit(25)
-    )
-    row_html = F.concat(
-        F.lit('<a href="/app/'),
-        F.col("p_partkey").cast("string"),
-        F.lit('" class="search_result_row" data-ds-appid="'),
-        F.col("p_partkey").cast("string"),
-        F.lit('"><span class="title">'),
-        F.col("p_name"),
-        F.lit("</span></a>"),
-    )
-    # ordered page assembly: collect_list gives no order guarantee
-    # after a shuffle, so sort the collected structs (price desc via
-    # negated key, then partkey) and only then concatenate
-    page = top.agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("p_retailprice")).alias("negprice"),
-                            F.col("p_partkey").alias("k"),
-                            row_html.alias("h"),
-                        )
-                    )
-                ),
-                lambda r: r["h"],
-            ),
-        ).alias("html")
-    )
-    ids = F.regexp_extract_all(F.col("html"), F.lit(r'data-ds-appid="(\d+)"'), F.lit(1))
-    return page.select(F.posexplode(ids).alias("pos", "appid_s")).select(
-        (F.col("pos") + 1).cast("long").alias("rank"),
-        F.col("appid_s").cast("long").alias("appid"),
-    )
-
-
-@EXT.add(
-    "stream_trigger_schedule",
-    oracle="""
-    SELECT CAST(3 AS BIGINT) AS n_runs, TRUE AS skip_gate_ok,
-           TRUE AS jitter_ok, TRUE AS stopped_ok, TRUE AS work_ok
-    """,
-    doc=(
-        "Driver-visible run of the daily-trigger scheduler loop "
-        "(reference runner.py:22-97): a ScheduledRunner with an "
-        "injected fake clock executes THREE real Spark jobs (per-day "
-        "event counts) as its ticks, honoring the '[skip-run]' "
-        "first-run gate (runner.py:33-42), seeded 0-120 min jitter "
-        "(runner.py:62-80), and SIGTERM-style graceful stop between "
-        "runs (runner.py:93-97, exercised with a real timer against a "
-        "second runner). Emits the executed contract as booleans - "
-        "constant-oracle pattern (d): n_runs, skip_gate_ok, jitter_ok, "
-        "stopped_ok, work_ok."
-    ),
-    tags=("streaming", "scheduler", "invariant"),
-)
-def stream_trigger_schedule(spark, sf_dir):
-    import threading
-    import time as _time
-    from datetime import datetime, timedelta, timezone
-
-    from steam_data_pipeline_spark.streaming import scheduler as SCH
-
-    ev = t(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
-    day0 = ev.agg(F.min("day").alias("d")).collect()[0]["d"]  # 1 driver row
-
-    counts: list[int] = []
-
-    def run_fn():  # each scheduler tick is a REAL Spark job
-        d = day0 + timedelta(days=len(counts))
-        counts.append(ev.filter(F.col("day") == F.lit(d)).count())
-
-    # fake clock: +1 day per observation, so every wait computes <= 0
-    # and the loop never sleeps for real
-    clock = [datetime(2024, 1, 1, 0, 0, tzinfo=timezone.utc)]
-
-    def now_fn():
-        v = clock[0]
-        clock[0] = v + timedelta(days=1)
-        return v
-
-    runner = SCH.ScheduledRunner(run_fn=run_fn, run_hour_utc=17, jitter_seed=11)
-    n_runs = runner.run_loop(
-        max_runs=3,
-        now_fn=now_fn,
-        skip_first=SCH.should_skip_first_run("release 1.2 [skip-run] hotfix"),
-    )
-
-    # jitter bound: seeded target lands in [17:00, 19:00) of its day
-    probe = SCH.next_run_at(
-        datetime(2024, 1, 1, 0, 0, tzinfo=timezone.utc), run_hour_utc=17, jitter_seed=11
-    )
-    jitter_ok = probe.hour in (17, 18) and probe.day == 1
-
-    # graceful stop: a second runner on the REAL clock gets stopped
-    # 0.2 s into its between-runs wait instead of sleeping to tomorrow
-    r2 = SCH.ScheduledRunner(run_fn=lambda: None, jitter_seed=1)
-    t0 = _time.time()
-    threading.Timer(0.2, r2.stop).start()
-    stopped_runs = r2.run_loop(max_runs=5)
-    stopped_ok = (_time.time() - t0) < 5 and stopped_runs == 1
-
-    skip_gate_ok = (
-        SCH.should_skip_first_run("x [skip-run] y")
-        and not SCH.should_skip_first_run("normal commit")
-        and n_runs == 3
-    )
-    return spark.createDataFrame(
-        [
-            (
-                n_runs,
-                bool(skip_gate_ok),
-                bool(jitter_ok),
-                bool(stopped_ok),
-                len(counts) == 3 and sum(counts) > 0,
-            )
-        ],
-        "n_runs long, skip_gate_ok boolean, jitter_ok boolean, stopped_ok boolean, work_ok boolean",
-    )
-
-
-@EXT.add(
-    "llm_dedup_substring",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents
-    ), eligible AS (
-      SELECT doc_id, w FROM toks WHERE len(w) >= 8
-    ), pos AS (
-      SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
-      FROM eligible
-    ), grams AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-             array_to_string(w[i:i+7], ' ') AS g
-      FROM pos
-    ), dup AS (
-      SELECT g FROM grams GROUP BY g HAVING COUNT(*) >= 2
-    ), dw AS (
-      SELECT doc_id, pos FROM grams JOIN dup USING (g)
-    ), m AS (
-      SELECT doc_id, pos,
-             MAX(pos + 7) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-      FROM dw
-    ), isl AS (
-      SELECT doc_id, pos,
-             SUM(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY doc_id ORDER BY pos) AS island
-      FROM m
-    )
-    SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-           CAST(MAX(pos) + 7 AS BIGINT) AS span_end,
-           CAST(COUNT(*) AS BIGINT) AS n_windows
-    FROM isl GROUP BY doc_id, island
-    """,
-    doc=(
-        "EXACT duplicated-substring spans (Lee et al. arXiv:2107.06499 "
-        "suffix-array dedup, Spark-shaped): every maximal token span "
-        "whose every 8-token window occurs >= 2 times in the corpus. "
-        "The suffix-array sort becomes a groupBy on 8-byte window "
-        "hashes (the only shuffle payload), repeated windows semi-join "
-        "back, and a per-doc window merge yields maximal spans — all "
-        "JVM built-ins. Oracle recomputes with real window strings, so "
-        "a hash collision would surface as a mismatch. Complements the "
-        "document-level dedup family: this finds duplicated PASSAGES "
-        "inside otherwise-distinct documents (boilerplate, quotes)."
-    ),
-    tags=("llm", "dedup", "substring"),
-)
-def llm_dedup_substring(spark, sf_dir):
-    return D.duplicated_spans(t(spark, sf_dir, "documents"), k=8)
-
-
-@EXT.add(
-    "llm_quality_model",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(*) FILTER (doc_id % 2 = 0) AS BIGINT) AS n_train,
-           CAST(COUNT(*) FILTER (doc_id % 2 = 1) AS BIGINT) AS n_eval,
-           TRUE AS acc_ok,
-           TRUE AS auc_ok
-    FROM documents WHERE text IS NOT NULL
-    """,
-    doc=(
-        "Model-based quality filter (fastText/linear-classifier shape): "
-        "logistic regression over HashingTF token features, trained on "
-        "weak heuristic labels (quality_score >= exact corpus median), "
-        "deterministic even/odd doc_id train/holdout split. Contract "
-        "oracle (ALS posture): held-out accuracy >= 0.75 and AUC >= 0.8 "
-        "asserted in-query; exact integer counts anchor the row. "
-        "Measured 0.82 acc / 0.91 AUC at sf0.01 — weak labels are "
-        "learnable from hashed unigrams, which is the production "
-        "premise of classifier-based corpus filtering."
-    ),
-    tags=("llm", "curation", "ml", "invariant"),
-)
-def llm_quality_model(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import quality_model_report
-
-    # max_iter=8: measured equal to the library's 25-iteration default
-    # on this fixture at sf0.01 and sf0.1 (see quality_model_report)
-    return quality_model_report(t(spark, sf_dir, "documents"), max_iter=8)
-
-
-def _bloom_join_plan(spark, sf_dir):
-    """The UNEXECUTED runtime-bloom-filter join plan — shared by the
-    registered query (which materializes it under the conf overrides)
-    and the plan-contract test (which asserts ``might_contain`` is
-    injected on the lineitem scan side)."""
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    orders = (
-        t(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= "1995-02-01")
-            & (F.col("o_orderdate") < "1995-04-01")
-        )
-        .select("o_orderkey")
-    )
-    # try_cast: a price outside decimal(18,6)'s 12 integer digits is
-    # out of the revenue domain -> NULL, not an ANSI crash (r12
-    # numeric-extremes contract; TRY_CAST mirrored in the oracle)
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).try_cast(
-        "decimal(18,6)"
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(revenue).cast("double").alias("revenue"),
-        )
-    )
-
-
-#: conf overrides that make InjectRuntimeFilter fire on the small local
-#: fixture: at 100 TB the DEFAULT thresholds (application side > 10 GB,
-#: creation side < 10 MB post-filter) fire on exactly this plan shape
-#: with no overrides — the demo shrinks the thresholds, not the rule.
-_BLOOM_OVERRIDES = {
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-}
-
-
-@_contextmanager
-def _conf_overrides(spark, overrides: dict):
-    """Set session confs for a scope and restore (or unset) on exit —
-    the single implementation both the bloom query and its
-    plan-contract test run through."""
-    old = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-@EXT.add(
-    "join_bloom_pruned",
-    oracle="""
-    SELECT o.o_orderkey,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(TRY_CAST(l.l_extendedprice * (1 - l.l_discount)
-                             AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_orderdate >= TIMESTAMP '1995-02-01'
-      AND o.o_orderdate <  TIMESTAMP '1995-04-01'
-    GROUP BY o.o_orderkey
-    """,
-    doc=(
-        "Runtime BLOOM-FILTER join pruning (Spark InjectRuntimeFilter): "
-        "a selective filter on the orders side builds a bloom filter "
-        "subquery that is pushed into the LINEITEM SCAN as a "
-        "might_contain predicate, discarding non-qualifying fact rows "
-        "BEFORE the shuffle — the row-level sibling of dynamic "
-        "partition pruning (src_dynamic_pruning) for joins where the "
-        "big side is too large to shuffle unfiltered and the small "
-        "side is too large to broadcast. Fixture-scale thresholds are "
-        "overridden (application-side 10 GB default -> 0, broadcast "
-        "disabled) because at sf0.01 the scan is KBs and the join "
-        "would broadcast; at 100 TB the default thresholds fire on "
-        "this exact plan unmodified. Plan-contract-tested: "
-        "might_contain on the scan filter."
-    ),
-    tags=("join", "runtime-filter"),
-)
-def join_bloom_pruned(spark, sf_dir):
-    # build FIRST: t() re-applies the session's runtime confs (incl.
-    # the 64 MB broadcast threshold), so overrides must come after
-    df = _bloom_join_plan(spark, sf_dir)
-    with _conf_overrides(spark, _BLOOM_OVERRIDES):
-        # materialize while the overrides are active — the returned
-        # DataFrame would otherwise optimize lazily after restore
-        return df.localCheckpoint(eager=True)
-
-
-@EXT.add(
-    "stream_custom_datasource",
-    oracle="""
-    SELECT d AS app_id, printf('app-%06d', d) AS name,
-           CAST(d // 100 AS INTEGER) AS page
-    FROM range(250) t(d)
-    """,
-    doc=(
-        "STREAMING Python DataSource (Spark 4 SimpleDataSourceStream"
-        "Reader): the paginated API fetch as a real Structured "
-        "Streaming source — each micro-batch ingests ONE page, the "
-        "committed offset is the next page index, and readBetween"
-        "Offsets replays deterministically for recovery (exactly-once "
-        "over the offset log). 250 rows arrive across 3 micro-batches "
-        "into a memory sink; result must equal the batch page "
-        "contents. The streaming sibling of src_custom_datasource: "
-        "same page math, same schema, offset-tracked instead of "
-        "partition-planned."
-    ),
-    tags=("streaming", "source", "datasource"),
-)
-def stream_custom_datasource(spark, sf_dir):
-    from steam_data_pipeline_spark.sources.paginated import register
-
-    register(spark)
-    sdf = (
-        spark.readStream.format("paginated_api")
-        .option("total", "250")
-        .option("page_size", "100")
-        .load()
-    )
-    name = f"pstream_{uuid.uuid4().hex[:8]}"
-    # processingTime + processAllAvailable, not availableNow: a simple
-    # stream reader advances one page per batch, and availableNow
-    # snapshots only the first offset range
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
-
-
-@EXT.add(
-    "udtf_text_chunks",
-    oracle="""
-    WITH toks AS (
-      -- no tokens, no chunks: the UDTF emits nothing for NULL or
-      -- empty/whitespace-only text; DuckDB's split of '' yields ['']
-      -- and would fabricate a phantom 1-token chunk
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-    ), starts AS (
-      SELECT doc_id, w,
-             UNNEST(generate_series(0, greatest(len(w) - 1, 0), 8)) AS s
-      FROM toks
-    ), valid AS (
-      SELECT doc_id, w, s FROM starts WHERE s = 0 OR s + 8 < len(w)
-    )
-    SELECT doc_id, CAST(s / 8 AS INT) AS chunk_idx,
-           array_to_string(w[s + 1 : s + 16], ' ') AS chunk,
-           CAST(least(16, len(w) - s) AS INT) AS n_tokens
-    FROM valid
-    """,
-    doc=(
-        "REAL Python UDTF (Spark 4 @udtf, LATERAL join — not a "
-        "grouped-map stand-in): overlapping 16-token chunks every 8 "
-        "tokens per document, the RAG/embedding-prep chunking shape. "
-        "One row fans out to ~n/8 rows with per-row state only, so the "
-        "table function runs inside the scan stage with no shuffle; "
-        "string-exact DuckDB oracle replays the same stride/stop rule "
-        "with list slicing."
-    ),
-    tags=("udtf", "llm", "chunking"),
-)
-def udtf_text_chunks(spark, sf_dir):
-    from steam_data_pipeline_spark.functions.udtfs import ChunkText
-
-    spark.udtf.register("chunk_text", ChunkText)
-    docs = t(spark, sf_dir, "documents")
-    view = f"docs_chunks_{uuid.uuid4().hex[:8]}"
-    docs.createOrReplaceTempView(view)
-    try:
-        # checkpoint before dropping the view: the result must stay
-        # executable after this function returns
-        return spark.sql(
-            f"SELECT d.doc_id, t.chunk_idx, t.chunk, t.n_tokens "
-            f"FROM {view} d, LATERAL chunk_text(d.text) t"
-        ).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(view)
-
-
-@EXT.add(
-    "llm_dedup_substring_clean",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents
-    ), pos AS (
-      SELECT doc_id, w, UNNEST(generate_series(1, len(w) - 7)) AS i
-      FROM toks WHERE len(w) >= 8
-    ), grams AS (
-      SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-             array_to_string(w[i:i+7], ' ') AS g
-      FROM pos
-    ), dup0 AS (
-      SELECT g FROM grams GROUP BY g HAVING COUNT(*) >= 2
-    ), docc AS (
-      SELECT doc_id, pos,
-             ROW_NUMBER() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rk
-      FROM grams JOIN dup0 USING (g)
-    ), removals AS (
-      SELECT doc_id, pos FROM docc WHERE rk > 1
-    ), covered AS (
-      SELECT DISTINCT doc_id,
-             pos + UNNEST(generate_series(0, 7)) AS tpos
-      FROM removals
-    ), tokens AS (
-      SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-             CAST(UNNEST(generate_series(1, len(w))) AS BIGINT) - 1 AS tpos,
-             w
-      FROM toks
-    ), tok2 AS (
-      SELECT doc_id, n_tokens, tpos, w[CAST(tpos + 1 AS INT)] AS tok
-      FROM tokens
-    ), kept AS (
-      SELECT t.doc_id, t.n_tokens, t.tpos, t.tok
-      FROM tok2 t LEFT JOIN covered c
-        ON t.doc_id = c.doc_id AND t.tpos = c.tpos
-      WHERE c.doc_id IS NULL
-    )
-    , surv AS (
-      SELECT doc_id, COUNT(*) AS n_kept,
-             string_agg(tok, ' ' ORDER BY tpos) AS cleaned
-      FROM kept GROUP BY doc_id
-    )
-    SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-           CAST(len(t.w) - COALESCE(s.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(s.cleaned, '') AS cleaned
-    FROM toks t LEFT JOIN surv s USING (doc_id)
-    """,
-    doc=(
-        "Substring dedup's REMOVAL step (Lee et al. 2107.06499): every "
-        "corpus-repeated 8-token window occurrence is cut except the "
-        "lexicographically-first (doc, pos) keeper, and surviving "
-        "tokens are reassembled in order — the op that actually "
-        "produces the deduplicated training corpus from the spans "
-        "llm_dedup_substring detects. Exact string oracle on the "
-        "cleaned text; every input doc gets exactly ONE output row — a "
-        "fully-duplicated non-keeper reports (n, n, '') instead of "
-        "vanishing (round-9 module-review fix). "
-        "One checkpointed window-hash scan, min_by keeper election "
-        "with map-side partial agg, covered-position expansion bounded "
-        "by k, ordered per-doc reassembly."
-    ),
-    tags=("llm", "dedup", "substring"),
-)
-def llm_dedup_substring_clean(spark, sf_dir):
-    return D.remove_duplicated_spans(t(spark, sf_dir, "documents"), k=8)
-
-
-@EXT.add(
-    "llm_corpus_overlap",
-    oracle="""
-    WITH toks AS (
-      SELECT source, string_split_regex(lower(text), '\\s+') AS w
-      FROM documents
-    ), doc_sh AS (
-      SELECT source,
-             UNNEST(list_distinct([array_to_string(w[i:i+2], ' ')
-                    for i in range(1, greatest(len(w) - 1, 2))])) AS g
-      FROM toks
-    ), sh AS (
-      SELECT DISTINCT source, g FROM doc_sh
-    ), sizes AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY source
-    ), common AS (
-      SELECT x.source AS sa, y.source AS sb, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh x JOIN sh y ON x.g = y.g AND x.source < y.source
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT sa.source AS source_a, sb.source AS source_b,
-             sa.n_sh AS n_a, sb.n_sh AS n_b,
-             COALESCE(c.n_common, 0) AS n_common
-      FROM sizes sa JOIN sizes sb ON sa.source < sb.source
-      LEFT JOIN common c ON c.sa = sa.source AND c.sb = sb.source
-    )
-    SELECT source_a, source_b, n_a, n_b, n_common,
-           CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard,
-           TRUE AS est_ok
-    FROM pairs
-    """,
-    doc=(
-        "Cross-corpus overlap matrix: for every source pair, the EXACT "
-        "Jaccard of their distinct 3-gram shingle sets (one shuffle "
-        "keyed by 8-byte shingle hash; per-shingle HOF pair expansion "
-        "bounded by |sources|^2, never a corpus self-join) PLUS a "
-        "mergeable 128-seed MinHash sketch per source (map-side partial "
-        "min, component-wise mergeable across dumps/days) whose "
-        "estimate is asserted within 0.25 of the exact value in-query "
-        "(est_ok) — the sketch is the 100 TB production shape, the "
-        "exact leg makes its error a verified invariant."
-    ),
-    tags=("llm", "overlap", "sketch", "invariant"),
-)
-def llm_corpus_overlap(spark, sf_dir):
-    return D.corpus_overlap(t(spark, sf_dir, "documents"))
-
-
-@EXT.add(
-    "stream_islands_stateful",
-    oracle="""
-    WITH f AS (
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      SELECT user_id, event_id, ts, (value > 100) AS flag FROM events
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-    ), r AS (
-      SELECT user_id, ts, flag,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           - ROW_NUMBER() OVER (PARTITION BY user_id, flag
-                                ORDER BY ts, event_id) AS grp
-      FROM f
-    ), isl AS (
-      SELECT user_id, grp, MIN(ts) AS start_ts, MAX(ts) AS end_ts,
-             CAST(COUNT(*) AS BIGINT) AS n_obs
-      FROM r WHERE flag GROUP BY user_id, grp
-    ), last_ev AS (
-      SELECT user_id, flag FROM (
-        SELECT user_id, flag,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM f
-      ) WHERE rn = 1
-    ), numbered AS (
-      -- the temporally-LAST island per key is the open candidate;
-      -- grp (the run id) encodes event order exactly, so this stays
-      -- correct even under tied timestamps where start_ts can't
-      -- distinguish islands
-      SELECT user_id, start_ts, end_ts, n_obs,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY grp DESC) AS rni
-      FROM isl
-    )
-    SELECT n.user_id, n.start_ts, n.end_ts, n.n_obs
-    FROM numbered n JOIN last_ev le ON n.user_id = le.user_id
-    -- COALESCE: a NULL-flag last event (value NULL) is NOT flagged —
-    -- it CLOSED the island in the stream, so the island must be kept;
-    -- bare le.flag makes the predicate NULL and drops it (round-11
-    -- adversarial NULL sweep)
-    WHERE NOT (n.rni = 1 AND COALESCE(le.flag, FALSE))
-    """,
-    doc=(
-        "Custom stateful streaming operator (applyInPandasWithState, "
-        "SURVEY §2.8): cross-batch gaps-and-islands. The events table "
-        "is split into 3 time-ordered files replayed as 3 micro-batches "
-        "(maxFilesPerTrigger=1), so islands genuinely span batch "
-        "boundaries and per-key state (the OPEN island: start/end/"
-        "count, O(1) per key) carries across them; closed islands are "
-        "emitted append-mode. Oracle: the batch gaps-and-islands "
-        "windows minus each key's final island when the series ends "
-        "mid-island (the one still open) — the exact equivalence the "
-        "module contract states (streaming/stateful.py)."
-    ),
-    tags=("streaming", "stateful"),
-)
-def stream_islands_stateful(spark, sf_dir):
-    from steam_data_pipeline_spark.streaming.stateful import streaming_islands
-
-    out_dir = _prepare_islands_stream_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(out_dir)
-    )
-    out = _run_stream_to_memory(
-        streaming_islands(stream),
-        "islands_stateful",
-        spark,
-        output_mode="append",
-        # per-key Python compute dominates here (~3 M replayed rows
-        # through applyInPandasWithState): worker parallelism beats
-        # store-commit savings — sized by the measured curve in
-        # _python_state_partitions
-        partitions=_python_state_partitions(spark),
-    )
-    return out.select("user_id", "start_ts", "end_ts", "n_obs")
-
-
-# ---------------------------------------------------------------------------
-# frequency sketches: heavy hitters / count-min / bloom decontamination
-# (round 6 — llm/sketches.py)
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "agg_heavy_hitters",
-    oracle="""
-    SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS token
-          FROM documents)
-    WHERE token <> ''
-    GROUP BY token
-    ORDER BY cnt DESC, token ASC
-    LIMIT 20
-    """,
-    doc=(
-        "Two-pass heavy hitters (top-20 tokens): bounded-memory "
-        "per-partition space-saving summaries (mapInPandas, O(capacity) "
-        "state) produce <= partitions x capacity candidates, then ONE "
-        "exact recount restricted to the candidate set. The full token "
-        "frequency table is never shuffled - the Misra-Gries union "
-        "guarantee makes candidates a provable superset of every token "
-        "with count >= N/capacity, so with margin the result IS the "
-        "exact top-k, which the DuckDB oracle checks outright."
-    ),
-    tags=("agg", "sketch", "llm"),
-)
-def agg_heavy_hitters(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import sketches as SK
-
-    return SK.heavy_hitters_sketched(
-        t(spark, sf_dir, "documents"), k=20, capacity=128
-    )
-
-
-@EXT.add(
-    "agg_countmin_tokens",
-    oracle="""
-    WITH tok AS (
-      SELECT unnest(string_split_regex(lower(text), '\\s+')) AS token
-      FROM documents
-    ),
-    exact AS (
-      SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM tok
-      WHERE token <> '' GROUP BY token
-    )
-    SELECT token, exact_cnt,
-           TRUE AS est_ge_exact, TRUE AS est_within_bound
-    FROM exact
-    ORDER BY exact_cnt DESC, token ASC
-    LIMIT 10
-    """,
-    doc=(
-        "MERGEABLE count-min sketch in its distributed-native sparse "
-        "form (d, bucket, cnt): one map-side-combined aggregation "
-        "builds it, union+re-sum merges shards, and point estimates "
-        "broadcast the <= depth x width sketch. Invariant oracle (the "
-        "agg_hll_mergeable pattern): exact counts for the top-10 "
-        "probe tokens anchor the row; the CMS estimate must satisfy "
-        "est >= exact (always, by construction) and est <= exact + "
-        "4N/width (w.p. >= 1-2^-depth per probe; deterministic for "
-        "the fixed seed, verified at sf0.001/0.01/0.1)."
-    ),
-    tags=("agg", "approx", "sketch"),
-)
-def agg_countmin_tokens(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import sketches as SK
-
-    WIDTH, DEPTH = 4096, 4
-    toks = SK.tokens(t(spark, sf_dir, "documents"))
-    exact = toks.groupBy("token").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_cnt")
-    )
-    probes = exact.orderBy(F.col("exact_cnt").desc(), F.col("token").asc()).limit(10)
-    sketch = SK.countmin_build(toks, "token", width=WIDTH, depth=DEPTH)
-    est = SK.countmin_estimate(sketch, probes, "token", width=WIDTH, depth=DEPTH)
-    n_total = toks.count()  # one scalar: the error-bound scale 4N/width
-    return (
-        probes.join(est.withColumnRenamed("item", "token"), "token")
-        .select(
-            "token",
-            "exact_cnt",
-            (F.col("est") >= F.col("exact_cnt")).alias("est_ge_exact"),
-            (
-                F.col("est") <= F.col("exact_cnt") + F.lit(4.0 * n_total / WIDTH)
-            ).alias("est_within_bound"),
-        )
-        .orderBy(F.col("exact_cnt").desc(), F.col("token").asc())
-    )
-
-
-@EXT.add(
-    "llm_decontam_bloom",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words
-      FROM documents
-    ),
-    g AS (
-      SELECT doc_id,
-             list_distinct([array_to_string(words[i:i+4], ' ')
-                            for i in range(1, len(words) - 3)]) AS grams
-      FROM w WHERE len(words) >= 5
-    ),
-    bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id < 50),
-    dg AS (SELECT doc_id, unnest(grams) AS gram FROM g)
-    SELECT dg.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_matched,
-           SUM(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) / COUNT(*)
-             AS contamination
-    FROM dg LEFT JOIN bench b ON dg.gram = b.gram
-    GROUP BY dg.doc_id
-    """,
-    doc=(
-        "Bloom-gated benchmark decontamination: the benchmark 5-gram "
-        "set is packed into a fixed-size bloom filter (one bit_or "
-        "aggregation; the dense word array is bounded by construction "
-        "at n_bits/64 int64s, so it embeds MAP-SIDE in the scan "
-        "expression - no join, no shuffle to discard the overwhelming "
-        "clean majority). Only bloom candidates (true matches + FPR) "
-        "reach the exact verification join, so the output equals "
-        "llm_contamination exactly (bloom has no false negatives) - "
-        "checked by the full-value oracle. The 100 TB shape: when the "
-        "eval-suite gram set outgrows a broadcast join, the bloom "
-        "stays kilobytes-to-megabytes and the exact join's probe side "
-        "shrinks from the corpus to the candidates."
-    ),
-    tags=("llm", "curation", "decontamination", "sketch"),
-)
-def llm_decontam_bloom(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import decontam_bloom
-
-    docs = t(spark, sf_dir, "documents")
-    return decontam_bloom(docs, docs.filter(F.col("doc_id") < 50), n=5)
-
-
-@EXT.add(
-    "llm_repetition_filter",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, length(text) AS len,
-             string_split_regex(trim(text), '\\s+') AS words
-      FROM documents
-    ),
-    c2 AS (
-      SELECT doc_id, gram, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id,
-                   unnest([array_to_string(words[i:i+1], ' ')
-                           for i in range(1, len(words))]) AS gram
-            FROM w WHERE len(words) >= 2)
-      GROUP BY doc_id, gram
-    ),
-    top2 AS (
-      SELECT doc_id, gram AS top_2gram, cnt AS top_2gram_cnt
-      FROM c2
-      QUALIFY row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY cnt DESC, gram ASC) = 1
-    ),
-    c5 AS (
-      SELECT doc_id, gram, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id,
-                   unnest([array_to_string(words[i:i+4], ' ')
-                           for i in range(1, len(words) - 3)]) AS gram
-            FROM w WHERE len(words) >= 5)
-      GROUP BY doc_id, gram
-    ),
-    dup5 AS (
-      SELECT doc_id, CAST(SUM(cnt * length(gram)) AS BIGINT) AS dup5_chars
-      FROM c5 WHERE cnt > 1 GROUP BY doc_id
-    )
-    SELECT w.doc_id,
-           t.top_2gram,
-           CAST(COALESCE(t.top_2gram_cnt, 0) AS BIGINT) AS top_2gram_cnt,
-           COALESCE(t.top_2gram_cnt * length(t.top_2gram), 0) / w.len
-             AS top_2gram_frac,
-           COALESCE(d.dup5_chars, 0) / w.len AS dup_5gram_frac,
-           (COALESCE(t.top_2gram_cnt * length(t.top_2gram), 0) / w.len <= 0.20
-            AND COALESCE(d.dup5_chars, 0) / w.len <= 0.30) AS keep
-    FROM w LEFT JOIN top2 t USING (doc_id) LEFT JOIN dup5 d USING (doc_id)
-    """,
-    doc=(
-        "Within-document repetition filter (the Gopher repetition "
-        "gates, Rae et al. 2021 SA1.1): characters covered by the most "
-        "frequent word 2-gram and by all duplicated 5-grams, as "
-        "fractions of document length, with the keep gate at "
-        "(0.20, 0.30). Two explode->groupBy legs keyed (doc_id, gram) "
-        "- map-side combined, never cross-document; the per-doc top-1 "
-        "compiles to WindowGroupLimit. Full-value DuckDB oracle."
-    ),
-    tags=("llm", "curation", "quality"),
-)
-def llm_repetition_filter(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.curation import repetition_signals
-
-    return repetition_signals(t(spark, sf_dir, "documents"))
-
-
-@EXT.add(
-    "samp_reservoir_per_key",
-    oracle="""
-    SELECT source, doc_id,
-           CAST(row_number() OVER (
-             PARTITION BY source
-             ORDER BY md5('seed42:' || CAST(doc_id AS VARCHAR)) ASC,
-                      doc_id ASC) AS BIGINT) AS rank
-    FROM documents
-    QUALIFY rank <= 5
-    """,
-    doc=(
-        "Deterministic per-key uniform k-sample (the distributed "
-        "reservoir-sampling equivalent): rank every row by a seeded "
-        "cryptographic hash of its id and keep the k smallest per key. "
-        "Same sample every run and on every re-execution over the same "
-        "data (unlike rand()-based reservoirs), so downstream stages "
-        "can re-derive it; changing the seed redraws. Scale shape: the "
-        "row_number()<=k filter compiles to WindowGroupLimit, so each "
-        "task keeps at most k rows per key BEFORE the single per-key "
-        "shuffle - no full sort of the corpus. md5 on both engines "
-        "makes the oracle value-exact."
-    ),
-    tags=("sampling", "llm"),
-)
-def samp_reservoir_per_key(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    docs = t(spark, sf_dir, "documents")
-    key = F.md5(F.concat(F.lit("seed42:"), F.col("doc_id").cast("string")))
-    rn = F.row_number().over(
-        Window.partitionBy("source").orderBy(key.asc(), F.col("doc_id").asc())
-    )
-    return (
-        docs.select("source", "doc_id", rn.cast("long").alias("rank"))
-        .filter(F.col("rank") <= 5)
-    )
-
-
-def _prepare_zorder_layout(spark, sf_dir: str) -> str:
-    """The z-ordered copy of ``orders`` that ``src_zorder_scan`` reads
-    — a STORAGE layout (like the day-partitioned events copy), so its
-    one-time write belongs to bench startup, not to the scan query."""
-    from steam_data_pipeline_spark.operators.layout import write_zordered
-
-    orders = t(spark, sf_dir, "orders").withColumn(
-        "o_day",
-        F.datediff(F.to_date("o_orderdate"), F.to_date(F.lit("1995-01-01"))),
-    )
-    return _cached_layout(
-        "zorder",
-        sf_dir,
-        lambda d: write_zordered(
-            orders, d, "o_custkey", "o_day", n_files=16
-        ),
-    )
-
-
-BENCH_FIXTURES.append(_prepare_zorder_layout)
-
-
-@EXT.add(
-    "src_zorder_scan",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_orderdate, o_orderstatus
-    FROM orders
-    WHERE o_custkey BETWEEN 100 AND 200
-      AND o_orderdate >= TIMESTAMP '1995-01-01'
-      AND o_orderdate < TIMESTAMP '1995-07-01'
-    """,
-    doc=(
-        "Z-ORDER clustered storage layout (operators/layout.py - the "
-        "OPTIMIZE ZORDER BY technique): orders rewritten with the "
-        "Morton interleave of (o_custkey, day(o_orderdate)) as the "
-        "range-partition + in-file sort key, so file-level min/max "
-        "statistics are tight in BOTH dimensions: the probe a "
-        "date-sorted layout cannot prune at all (custkey range) "
-        "touches 6/16 files instead of 16/16, while the 2-D box stays "
-        "at-or-below the date-sort's count (footer audit in "
-        "tests/test_layout.py). The scan itself is a plain "
-        "pushed-down parquet read of the clustered copy; results must "
-        "equal the unclustered table - pruning may never change "
-        "answers. Interleave is pure JVM expression work (getbit + "
-        "aggregate HOF); normalization bounds are one 2-scalar agg."
-    ),
-    tags=("source", "layout", "pruning"),
-)
-def src_zorder_scan(spark, sf_dir):
-    path = _prepare_zorder_layout(spark, sf_dir)
-    df = spark.read.parquet(path)
-    return df.filter(
-        (F.col("o_custkey") >= 100)
-        & (F.col("o_custkey") <= 200)
-        & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1995-07-01").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus")
-
-
-@EXT.add(
-    "llm_bpe_train",
-    oracle="""
-    WITH words AS (
-      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
-      FROM documents
-    ),
-    wf AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM words
-      WHERE word <> '' GROUP BY word
-    ),
-    sym AS (
-      SELECT word, freq, list_append(string_split(word, ''), chr(1) || 'w') AS s
-      FROM wf
-    ),
-    pc AS (
-      SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq,
-               unnest([s[i] || chr(2) || s[i+1] for i in range(1, len(s))]) AS pair
-        FROM sym
-      ) GROUP BY pair
-    )
-    SELECT (SELECT pair FROM pc ORDER BY cnt DESC, pair ASC LIMIT 1)
-             AS first_pair,
-           (SELECT cnt FROM pc ORDER BY cnt DESC, pair ASC LIMIT 1)
-             AS first_cnt,
-           CAST(16 AS BIGINT) AS n_merges,
-           TRUE AS counts_nonincreasing,
-           TRUE AS roundtrip_ok,
-           TRUE AS compressed
-    """,
-    doc=(
-        "Distributed BPE vocabulary induction (Sennrich et al. 2016, "
-        "llm/bpe.py): the merge loop runs over the word-frequency "
-        "table - the corpus is scanned once for word counts and once "
-        "for tokenization, never per merge. Each iteration: pair-count "
-        "aggregation (map-side combined), a ONE-ROW argmax collect, a "
-        "JVM-side aggregate-fold replacement, localCheckpoint every 6 "
-        "merges to bound lineage. Invariant oracle (approximate-op "
-        "pattern): DuckDB independently computes merge #1 - the exact "
-        "argmax char pair with the same (count desc, pair asc) "
-        "tie-break - anchoring the learned sequence; the remaining "
-        "columns are proved in-query: 16 merges learned, weighted "
-        "merge counts non-increasing (a BPE theorem: new pairs count "
-        "<= the chosen pair), every vocab word reassembles exactly "
-        "from its final symbols, and total symbol count strictly "
-        "shrank."
-    ),
-    tags=("llm", "tokenizer", "iterative"),
-)
-def llm_bpe_train(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import bpe as B
-
-    merges, vocab = B.train_bpe(t(spark, sf_dir, "documents"), n_merges=16)
-    noninc = all(
-        merges[i].count >= merges[i + 1].count for i in range(len(merges) - 1)
-    )
-    rt_bad = vocab.filter(
-        F.concat_ws("", "syms") != F.concat(F.col("word"), F.lit(B.END))
-    ).count()
-    sizes = vocab.agg(
-        F.sum(F.col("freq") * (F.length("word") + 1)).alias("init_syms"),
-        F.sum(F.col("freq") * F.size("syms")).alias("final_syms"),
-    ).collect()[0]
-    return spark.range(1).select(
-        F.lit(merges[0].a + B.PAIR_SEP + merges[0].b).alias("first_pair"),
-        F.lit(merges[0].count).cast("long").alias("first_cnt"),
-        F.lit(len(merges)).cast("long").alias("n_merges"),
-        F.lit(noninc).alias("counts_nonincreasing"),
-        F.lit(rt_bad == 0).alias("roundtrip_ok"),
-        F.lit(int(sizes["final_syms"]) < int(sizes["init_syms"])).alias(
-            "compressed"
-        ),
-    )
-
-
-@EXT.add(
-    "llm_bpe_encode",
-    oracle="""
-    WITH words AS (
-      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
-      FROM documents
-      WHERE text IS NOT NULL
-    ),
-    w AS (SELECT word FROM words WHERE word <> ''),
-    docs AS (
-      SELECT COUNT(*) AS n_docs FROM documents
-      WHERE text IS NOT NULL AND trim(text) <> ''
-    )
-    SELECT CAST((SELECT n_docs FROM docs) AS BIGINT) AS n_docs,
-           CAST(COUNT(*) AS BIGINT) AS total_words,
-           CAST(SUM(LENGTH(word) + 1) AS BIGINT) AS chars_plus_words,
-           TRUE AS vocab_consistent,
-           TRUE AS bounded,
-           TRUE AS compressed
-    FROM w
-    """,
-    doc=(
-        "Corpus tokenization with the learned BPE merges (llm/bpe.py "
-        "tokenize): the merge loop never touches the corpus - encoding "
-        "is ONE broadcast join of the final word->symbols table onto "
-        "posexploded corpus words, reassembled in word order. Verified "
-        "by distributed equivalence: the corpus-side token total "
-        "(explode -> join -> flatten -> sum) must equal the vocab-side "
-        "weighted total (sum freq*|syms| over the word-frequency "
-        "table) - two independent plans over different tables agreeing "
-        "on the same number. DuckDB anchors n_docs / total_words / "
-        "chars_plus_words exactly; bounds (words <= tokens <= "
-        "chars+words) and strict compression are proved in-query."
-    ),
-    tags=("llm", "tokenizer"),
-)
-def llm_bpe_encode(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import bpe as B
-
-    docs = t(spark, sf_dir, "documents")
-    merges, vocab = _trained_bpe(spark, sf_dir, 8)
-    toks = B.tokenize(docs, vocab)
-    corpus = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size("tokens")).cast("long").alias("total_tokens"),
-    ).collect()[0]
-    vside = vocab.agg(
-        F.sum("freq").cast("long").alias("total_words"),
-        F.sum(F.col("freq") * F.size("syms")).cast("long").alias("vocab_tokens"),
-        F.sum(F.col("freq") * (F.length("word") + 1))
-        .cast("long")
-        .alias("chars_plus_words"),
-    ).collect()[0]
-    total_tokens = int(corpus["total_tokens"])
-    total_words = int(vside["total_words"])
-    cpw = int(vside["chars_plus_words"])
-    return spark.range(1).select(
-        F.lit(int(corpus["n_docs"])).cast("long").alias("n_docs"),
-        F.lit(total_words).cast("long").alias("total_words"),
-        F.lit(cpw).cast("long").alias("chars_plus_words"),
-        F.lit(total_tokens == int(vside["vocab_tokens"])).alias(
-            "vocab_consistent"
-        ),
-        F.lit(total_words <= total_tokens <= cpw).alias("bounded"),
-        F.lit(total_tokens < cpw).alias("compressed"),
-    )
-
-
-@EXT.add(
-    "llm_bigram_pmi",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    bi AS (
-      SELECT w[i] AS a, w[i + 1] AS b
-      FROM toks, UNNEST(generate_series(1, greatest(len(w) - 1, 0))) s(i)
-    ),
-    bc AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-           FROM bi GROUP BY a, b),
-    uni AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS c FROM (
-        SELECT unnest(w) AS word FROM toks
-      ) GROUP BY word
-    ),
-    tot AS (SELECT CAST(SUM(c_ab) AS BIGINT) AS n2 FROM bc),
-    tot1 AS (SELECT CAST(SUM(c) AS BIGINT) AS n1 FROM uni),
-    pmi AS (
-      SELECT bc.a, bc.b, bc.c_ab,
-             ROUND(LN((CAST(bc.c_ab AS DOUBLE) / n2)
-                      / ((CAST(ua.c AS DOUBLE) / n1)
-                         * (CAST(ub.c AS DOUBLE) / n1))), 9) AS pmi
-      FROM bc
-      JOIN uni ua ON ua.word = bc.a
-      JOIN uni ub ON ub.word = bc.b
-      CROSS JOIN tot CROSS JOIN tot1
-      WHERE bc.c_ab >= 5
-    )
-    SELECT a, b, c_ab, pmi FROM pmi
-    ORDER BY pmi DESC, a ASC, b ASC LIMIT 50
-    """,
-    doc=(
-        "Collocation mining: top-50 adjacent-word bigrams by PMI "
-        "(min count 5) — the phrase-detection pass of a tokenizer/"
-        "vocab pipeline (word2vec-style phrase merging). "
-        "PMI = ln(p(a,b) / p(a)p(b)) with bigram and unigram "
-        "probability spaces kept distinct; integers everywhere except "
-        "the final ln, rounded to 9 decimals BEFORE the top-k so "
-        "cross-engine ties rank identically, (a,b) as the tie-break. "
-        "Plan: one tokenized scan feeds both bigram and unigram "
-        "counts; unigram totals re-join by word (Zipf-keyed join with "
-        "the count side pre-aggregated to one row/word); totals are "
-        "1-row broadcasts; TakeOrderedAndProject for the limit."
-    ),
-    tags=("llm", "text"),
-)
-def llm_bigram_pmi(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = docs.select(
-        F.filter(
-            F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != ""
-        ).alias("w")
-    )
-    bi = (
-        toks.filter(F.size("w") >= 2)  # ANSI: w[i] out of range throws
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(w) - 1),"
-                    " i -> struct(w[i-1] AS a, w[i] AS b))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-    )
-    bc = bi.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
-    uni = (
-        toks.select(F.explode("w").alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    n2 = bc.agg(F.sum("c_ab").cast("long").alias("n2"))
-    n1 = uni.agg(F.sum("c").cast("long").alias("n1"))
-    pmi = (
-        bc.filter(F.col("c_ab") >= 5)
-        .join(uni.select(F.col("word").alias("a"), F.col("c").alias("ca")), "a")
-        .join(uni.select(F.col("word").alias("b"), F.col("c").alias("cb")), "b")
-        .crossJoin(F.broadcast(n2))
-        .crossJoin(F.broadcast(n1))
-        .select(
-            "a",
-            "b",
-            "c_ab",
-            F.round(
-                F.log(
-                    (F.col("c_ab").cast("double") / F.col("n2"))
-                    / (
-                        (F.col("ca").cast("double") / F.col("n1"))
-                        * (F.col("cb").cast("double") / F.col("n1"))
-                    )
-                ),
-                9,
-            ).alias("pmi"),
-        )
-    )
-    return pmi.orderBy(
-        F.col("pmi").desc(), F.col("a").asc(), F.col("b").asc()
-    ).limit(50)
-
-
-@EXT.add(
-    "llm_quality_adaptive",
-    oracle="""
-    WITH q AS (
-      SELECT doc_id, lang,
-             least(CAST(len(regexp_split_to_array(trim(text), '\\s+'))
-                        AS DOUBLE) / 50.0, 1.0)
-               * (CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                       AS DOUBLE)
-                  / CAST(greatest(length(text), 1) AS DOUBLE))
-               * (0.5 + 0.5 * least(
-                    CAST(len(list_intersect(
-                      list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                                     x -> lower(x)),
-                      ['the','a','of','and','to','der','die','das','und','ist',
-                       'le','la','et','les','des','el','que','de','y']))
-                      AS DOUBLE) / 2.0, 1.0)) AS score
-      -- no text, no quality score (round-11 NULL sweep; the engines
-      -- also order NULL scores at opposite ends of the rank window)
-      FROM documents WHERE text IS NOT NULL
-    ),
-    ranked AS (
-      SELECT lang, score,
-             ROW_NUMBER() OVER (PARTITION BY lang ORDER BY score) AS rn,
-             COUNT(*) OVER (PARTITION BY lang) AS n
-      FROM q
-    ),
-    thr AS (
-      SELECT lang, score AS thr, CAST(n AS BIGINT) AS n_docs
-      FROM ranked WHERE rn = CAST(CEIL(0.25 * n) AS BIGINT)
-    )
-    SELECT t.lang, t.n_docs, ROUND(t.thr, 9) AS thr_r,
-           CAST(SUM(CASE WHEN q.score >= t.thr THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_kept
-    FROM thr t JOIN q ON q.lang = t.lang
-    GROUP BY t.lang, t.n_docs, t.thr
-    """,
-    doc=(
-        "Per-language ADAPTIVE quality gating (the BLOOM/ROOTS-style "
-        "fix for global quality thresholds biasing against low-"
-        "resource languages): each language keeps its own top-75% by "
-        "quality score. The threshold is the DISCRETE p25 order "
-        "statistic (the value at rank ceil(0.25*n) ascending) - never "
-        "an interpolated quantile, whose (1-f)*lo+f*hi vs lo+f*(hi-lo) "
-        "arithmetic differs between engines in the last ulp; an order "
-        "statistic is one of the actual score values, which both "
-        "engines compute bit-identically (proven by llm_langid_"
-        "quality's value-hash green). Tie order inside ROW_NUMBER is "
-        "engine-dependent but the VALUE at rank k is the k-th smallest "
-        "either way. Plan: one scored scan, per-lang rank window, "
-        "lang-count join broadcast (languages are a bounded "
-        "dimension), threshold broadcast back for the kept count."
-    ),
-    tags=("llm", "curation", "quality"),
-)
-def llm_quality_adaptive(spark, sf_dir):
-    from pyspark.sql.window import Window as W
-
-    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    scored = docs.select(
-        "lang", TS.quality_score("text").alias("score")
-    )
-    ranked = scored.select(
-        "lang",
-        "score",
-        F.row_number()
-        .over(W.partitionBy("lang").orderBy("score"))
-        .alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("lang")).alias("n"),
-    )
-    thr = ranked.filter(
-        F.col("rn") == F.ceil(F.lit(0.25) * F.col("n")).cast("long")
-    ).select(
-        "lang",
-        F.col("score").alias("thr"),
-        F.col("n").cast("long").alias("n_docs"),
-    )
-    return (
-        scored.join(F.broadcast(thr), on="lang")
-        .groupBy("lang", "n_docs", "thr")
-        .agg(
-            F.sum(F.when(F.col("score") >= F.col("thr"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_kept")
-        )
-        .select("lang", "n_docs", F.round("thr", 9).alias("thr_r"), "n_kept")
-    )
-
-
-@EXT.add(
-    "llm_bpe_roundtrip",
-    oracle="""
-    WITH norm AS (
-      SELECT doc_id,
-             array_to_string(string_split_regex(trim(text), '\\s+'), ' ')
-               AS ntext
-      FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(LENGTH(ntext)) AS BIGINT) AS total_chars,
-           TRUE AS roundtrip_exact
-    FROM norm
-    """,
-    doc=(
-        "Tokenizer closure property (llm/bpe.py detokenize): "
-        "detokenize(tokenize(text)) must equal the whitespace-"
-        "normalized original for EVERY document — BPE merges only glue "
-        "adjacent symbols, so symbols concatenate back to the original "
-        "characters, and a non-printable end-of-word sentinel (immune "
-        "to corpus-text collision) marks word boundaries. "
-        "roundtrip_exact is computed in-query (per-doc string "
-        "equality, all-doc AND); DuckDB anchors n_docs and the total "
-        "normalized char count exactly, so the reconstruction length "
-        "can neither drop nor invent characters."
-    ),
-    tags=("llm", "tokenizer"),
-)
-def llm_bpe_roundtrip(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import bpe as B
-
-    docs = t(spark, sf_dir, "documents")
-    merges, vocab = _trained_bpe(spark, sf_dir, 8)
-    detok = B.detokenize(B.tokenize(docs, vocab))
-    norm = docs.filter(
-        F.col("text").isNotNull() & (F.trim("text") != "")
-    ).select(
-        "doc_id",
-        F.concat_ws(
-            " ", F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
-        ).alias("ntext"),
-    )
-    cmp = norm.join(detok, on="doc_id")
-    return cmp.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.length("ntext")).cast("long").alias("total_chars"),
-        F.every(F.col("ntext") == F.col("text")).alias("roundtrip_exact"),
-    )
-
-
-@EXT.add(
-    "llm_dedup_editdist",
-    oracle="""
-    WITH k AS (
-      SELECT doc_id, substring(text, 1, 40) AS s FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000,
-             concat(substring(substring(text, 1, 40), 1, 6), 'Z',
-                    substring(substring(text, 1, 40), 8, 33))
-      -- text IS NOT NULL: DuckDB's concat() SKIPS NULL args (Spark's
-      -- returns NULL), so a NULL-text source would plant the 1-char
-      -- string 'Z' here and nothing on the Spark leg
-      FROM documents WHERE doc_id % 5 = 0 AND text IS NOT NULL
-    )
-    SELECT a.doc_id AS a, b.doc_id AS b,
-           -- DuckDB levenshtein is UTF-8 BYTE-based; the Spark leg
-           -- byte-expands its keys to match (r12 Unicode axis) — the
-           -- strlen band is in the same byte units and is implied by
-           -- dist <= 2, so it stays a pure pruning step
-           CAST(levenshtein(a.s, b.s) AS INT) AS dist
-    FROM k a JOIN k b ON a.doc_id < b.doc_id
-    WHERE abs(strlen(a.s) - strlen(b.s)) <= 2
-      AND levenshtein(a.s, b.s) <= 2
-    """,
-    doc=(
-        "Edit-distance near-dup join, Ed-Join style (llm/dedup.py "
-        "editdist_pairs; Xiao/Wang/Lin PVLDB'08): candidates from a "
-        "rarest-first positional-q-gram prefix inverted index (the "
-        "count-filter lemma — one edit destroys <= q grams, so "
-        "d-close strings share an element in their first q*d+1 "
-        "ordered gram elements), length-filtered, verified with "
-        "Spark's JVM levenshtein(threshold) — NEVER an all-pairs "
-        "join; a separate length-banded leg is exact for the "
-        "sub-q*(d+1)-char strings the lemma cannot cover. q is SELF-SIZED per corpus "
-        "by suggest_editdist_q (cached per sf_dir; the one-time "
-        "index-sizing job): the fixture vocabulary is ~40 words, so "
-        "3-grams are dense (689 values over 6600 keys) - the helper "
-        "picks q=5 at bench scale (candidates 7.6M -> 2.0M vs q=3) "
-        "and q=9 at 10x volume, where fixed q=5 went superlinear "
-        "(exponent 1.25 -> ~0.4, identical output). Fixture "
-        "plants a 1-substitution copy of every 5th doc's 40-char key "
-        "('Z' is outside the corpus alphabet, so planted dist is "
-        "exactly 1); the DuckDB oracle is the full quadratic "
-        "levenshtein truth over the same keys, so the banded "
-        "candidate generation is proven LOSSLESS, recovering the 25 "
-        "natural ED<=2 pairs plus every planted one."
-    ),
-    tags=("llm", "dedup"),
-)
-def llm_dedup_editdist(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    k40 = F.substring("text", 1, 40)
-    base = docs.select("doc_id", k40.alias("s"))
-    planted = docs.filter(
-        ((F.col("doc_id") % 5) == 0) & F.col("text").isNotNull()
-    ).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(
-            F.substring(k40, 1, 6), F.lit("Z"), F.substring(k40, 8, 33)
-        ).alias("s"),
-    )
-    corpus = base.unionByName(planted)
-    # BYTE-based distance contract (r12 Unicode axis): DuckDB's
-    # levenshtein counts UTF-8 BYTES where Spark's counts chars — on
-    # multi-byte text the two silently diverge (a CJK substitution is
-    # 3 byte-edits). The operator is pinned to byte-level Ed-Join:
-    # each key is byte-expanded via decode(encode(s, UTF-8),
-    # ISO-8859-1) (one char per byte, pure JVM), so the q-gram prefix
-    # lemma, the length band and levenshtein(threshold) all run over
-    # the byte alphabet — exactly DuckDB's semantics.
-    corpus = corpus.select(
-        "doc_id", F.decode(F.encode("s", "UTF-8"), "ISO-8859-1").alias("s")
-    )
-    import os as _os
-
-    ck = _os.path.abspath(sf_dir)
-    if ck not in _EDQ_CACHE:
-        _EDQ_CACHE[ck] = D.suggest_editdist_q(corpus, text_col="s", max_d=2)
-    return D.editdist_pairs(
-        corpus, key="doc_id", text_col="s", max_d=2, q=_EDQ_CACHE[ck]
-    ).select(
-        "a", "b", F.col("dist").cast("int").alias("dist")
-    )
-
-
-@EXT.add(
-    "llm_tfidf_keywords",
-    oracle="""
-    WITH w0 AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
-      FROM documents WHERE text IS NOT NULL
-    ),
-    w AS (SELECT doc_id, lower(term) AS term FROM w0 WHERE term <> ''),
-    tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM w GROUP BY doc_id, term),
-    df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents WHERE text IS NOT NULL),
-    scored AS (
-      SELECT tf.doc_id, tf.term, tf.tf, df.df,
-             ROUND(tf.tf * LN(CAST(n_docs AS DOUBLE) / CAST(df.df AS DOUBLE)),
-                   9) AS score
-      FROM tf JOIN df USING (term), n
-    ),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                                       ORDER BY score DESC, term ASC) AS rk
-          FROM scored)
-    SELECT doc_id, term, tf, df, score, CAST(rk AS BIGINT) AS rk
-    FROM r WHERE rk <= 3
-    """,
-    doc=(
-        "Per-document top-3 keywords by TF-IDF (llm/textstats.py "
-        "tfidf_topk) — the keyword-extraction/topic-tagging pass of a "
-        "curation pipeline. Score = tf*ln(N/df) rounded to 9 decimals "
-        "BEFORE ranking (ln is not correctly-rounded IEEE; ranking on "
-        "the raw double could order cross-engine ties differently), "
-        "ties broken on the term string, so the top-k is a "
-        "deterministic SET. Plan: groupBy(doc,term) -> groupBy(term) "
-        "-> tf-join-df on term (df pre-aggregated to one row/term so "
-        "only the tf side fans out on the Zipf key) -> WindowGroupLimit "
-        "top-k per doc; N is a 1-row broadcast; zero UDFs."
-    ),
-    tags=("llm", "text"),
-)
-def llm_tfidf_keywords(spark, sf_dir):
-    return TS.tfidf_topk(t(spark, sf_dir, "documents"), k=3)
-
-
-def _pagerank_oracle():
-    from steam_data_pipeline_spark.operators.graph import pagerank_oracle_sql
-
-    return pagerank_oracle_sql(
-        "SELECT c_custkey AS node FROM customer",
-        "SELECT o_custkey AS src,"
-        " o_orderkey % (SELECT COUNT(*) FROM customer) AS dst"
-        " FROM orders WHERE o_orderpriority = '1-URGENT'",
-        n_iter=4,
-    )
-
-
-@EXT.add(
-    "llm_graph_triangles",
-    oracle="""
-    WITH e AS (
-      SELECT o_custkey AS src,
-             o_orderkey % (SELECT COUNT(*) FROM customer) AS dst
-      FROM orders WHERE o_orderpriority = '1-URGENT'
-    ),
-    und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-            FROM e WHERE src <> dst),
-    deg AS (
-      SELECT v, CAST(COUNT(*) AS BIGINT) AS d
-      FROM (SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-      GROUP BY v
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM und) AS n_edges,
-           (SELECT CAST(SUM(d * (d - 1)) / 2 AS BIGINT) FROM deg) AS n_wedges,
-           (SELECT CAST(COUNT(*) AS BIGINT)
-            FROM und e1
-            JOIN und e2 ON e1.a = e2.a AND e1.b < e2.b
-            JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b) AS n_triangles,
-           3.0 * (SELECT COUNT(*)
-                  FROM und e1
-                  JOIN und e2 ON e1.a = e2.a AND e1.b < e2.b
-                  JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b)
-             / (SELECT SUM(d * (d - 1)) / 2 FROM deg) AS clustering
-    """,
-    doc=(
-        "Exact triangle count + global clustering coefficient "
-        "(operators/graph.py triangle_stats) over the same "
-        "customer/orders link graph as llm_graph_pagerank. "
-        "Degree-ordered orientation: every triangle counted once at "
-        "its lowest-(deg,id) vertex, and oriented out-degree is "
-        "O(sqrt(m)) on ANY graph, so the wedge join is O(m^1.5) "
-        "instead of hub-degree-squared — the standard distributed "
-        "triangle-count shape. The (deg,id) rank is compared as a "
-        "struct tuple, never a global row_number (that would be a "
-        "one-partition sort at scale). All-integer outputs plus one "
-        "IEEE division; the DuckDB oracle counts a<b<c ID-ordered "
-        "triangles — a different orientation whose TOTAL must agree "
-        "exactly."
-    ),
-    tags=("llm", "graph"),
-)
-def llm_graph_triangles(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.graph import triangle_stats
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    n_cust = cust.agg(F.count(F.lit(1)).alias("nc"))
-    edges = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .crossJoin(F.broadcast(n_cust))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("o_orderkey") % F.col("nc")).alias("dst"),
-        )
-    )
-    return triangle_stats(edges)
-
-
-def _kcore_oracle():
-    from steam_data_pipeline_spark.operators.graph import kcore_oracle_sql
-
-    return kcore_oracle_sql(
-        "SELECT o_custkey AS src,"
-        " o_orderkey % (SELECT COUNT(*) FROM customer) AS dst"
-        " FROM orders WHERE o_orderpriority = '1-URGENT'",
-        k=3,
-        # 40 unrolled peels: the fixtures converge in 9-13 rounds, but
-        # the round-11 adversarial corpus (4% of the URGENT edges
-        # nulled away) needs >18 — at 18 the oracle under-peeled and
-        # reported a phantom 10-node "core" that the Spark fixpoint
-        # loop correctly peels to empty (it converges by 30).
-        # Converged rounds are no-op MATERIALIZED CTEs, so the margin
-        # is cheap.
-        rounds=40,
-    )
-
-
-@EXT.add(
-    "llm_graph_kcore",
-    oracle=_kcore_oracle(),
-    doc=(
-        "3-core of the link graph (operators/graph.py kcore): the "
-        "graph-hygiene peel that strips low-connectivity fringe "
-        "before community/centrality work. Iterative peeling with "
-        "DATA-dependent termination (the real implementation loops to "
-        "a fixpoint with a convergence check + localCheckpoint; the "
-        "fixture converges in 9 rounds at sf0.01 / 13 at sf0.1, peeling "
-        "1500 nodes to a 1008-node core at sf0.01). The DuckDB oracle "
-        "unrolls a fixed 18 rounds - converged rounds are no-ops and "
-        "MATERIALIZED CTEs make them cheap, so overshooting the "
-        "measured depths is safe at both correctness SFs. Per round: two semi-joins of the cached symmetric edge "
-        "table against the active set + one map-side degree aggregate "
-        "+ one anti-join; all integer, matched with no tolerance."
-    ),
-    tags=("llm", "graph", "iterative"),
-)
-def llm_graph_kcore(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.graph import kcore
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    n_cust = cust.agg(F.count(F.lit(1)).alias("nc"))
-    edges = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .crossJoin(F.broadcast(n_cust))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("o_orderkey") % F.col("nc")).alias("dst"),
-        )
-    )
-    return kcore(edges, k=3)
-
-
-@EXT.add(
-    "llm_graph_pagerank",
-    oracle=_pagerank_oracle(),
-    doc=(
-        "Link-graph centrality for document quality weighting "
-        "(operators/graph.py pagerank): 4 iterations of fixed-point "
-        "INTEGER PageRank — probability mass in 10^12 micro-units, "
-        "only BIGINT add/multiply/floor-divide, so the result is "
-        "bit-identical on any engine/partitioning and the DuckDB "
-        "oracle (same iterations unrolled as CTEs by "
-        "pagerank_oracle_sql) matches with NO float tolerance; a "
-        "float PageRank could never be value-hash-oracled. Fixture "
-        "graph: customers as nodes, 1-URGENT orders as edges "
-        "(o_custkey -> o_orderkey mod |customer|), which leaves 203 "
-        "dangling nodes at sf0.01 so the dangling-mass redistribution "
-        "path is non-vacuous. The (src, dst, deg) adjacency and the "
-        "node spine with its dangling flag are checkpointed once; per "
-        "iteration: ranks joined onto the adjacency, one "
-        "map-side-combined groupBy(dst) of the shares, a global sum of "
-        "the dangling nodes' mass, and a left join back onto the "
-        "spine; the ranks are localCheckpointed every iteration, so "
-        "the plan never doubles."
-    ),
-    tags=("llm", "graph", "quality"),
-)
-def llm_graph_pagerank(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.graph import pagerank
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    nodes = cust.select(F.col("c_custkey").alias("node"))
-    n_cust = cust.agg(F.count(F.lit(1)).alias("nc"))
-    edges = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .crossJoin(F.broadcast(n_cust))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("o_orderkey") % F.col("nc")).alias("dst"),
-        )
-    )
-    return pagerank(nodes, edges, n_iter=4)
-
-
-# ---------------------------------------------------------------------------
-# data-quality layer (operators/profile.py)
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "qa_profile",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang,
-             source, n_chars
-      FROM documents
-    )
-    SELECT 'doc_id' AS col, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(doc_id) AS BIGINT) AS n_nonnull,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_distinct,
-           CAST(MIN(doc_id) AS DOUBLE) AS min_num,
-           CAST(MAX(doc_id) AS DOUBLE) AS max_num,
-           CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-    FROM d
-    UNION ALL
-    SELECT 'lang', COUNT(*), COUNT(lang), COUNT(DISTINCT lang),
-           NULL, NULL, MIN(lang), MAX(lang) FROM d
-    UNION ALL
-    SELECT 'source', COUNT(*), COUNT(source), COUNT(DISTINCT source),
-           NULL, NULL, MIN(source), MAX(source) FROM d
-    UNION ALL
-    SELECT 'n_chars', COUNT(*), COUNT(n_chars), COUNT(DISTINCT n_chars),
-           CAST(MIN(n_chars) AS DOUBLE), CAST(MAX(n_chars) AS DOUBLE),
-           NULL, NULL FROM d
-    """,
-    doc=(
-        "Single-scan table profiler (operators/profile.py): per-column "
-        "rows/nonnull/EXACT distinct/min/max via a melt (one explode "
-        "projection) into two map-side-combined hash aggregates — "
-        "deliberately NOT k COUNT(DISTINCT) aggs in one agg (Spark's "
-        "Expand plan multiplies the scan k-fold) and NOT a "
-        "one-job-per-column driver loop. Cost is one scan + two "
-        "shuffles regardless of column count; shuffle volume after "
-        "stage 1 is bounded by distinct values, not rows. NULLs are "
-        "injected deterministically (doc_id %% 7) on both sides so the "
-        "null-accounting path is non-vacuous. Reference analog: the "
-        "ad-hoc inline validation in steam-data-pipeline main.py's ETL "
-        "loop, promoted to a first-class deequ-style surface."
-    ),
-    tags=("qa",),
-)
-def qa_profile(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import ColSpec, profile
-
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 7 == 0, F.lit(None))
-        .otherwise(F.col("lang"))
-        .alias("lang"),
-        "source",
-        "n_chars",
-    )
-    return profile(
-        d,
-        [
-            ColSpec("doc_id", "num"),
-            ColSpec("lang", "str"),
-            ColSpec("source", "str"),
-            ColSpec("n_chars", "num"),
-        ],
-    )
-
-
-@EXT.add(
-    "qa_check",
-    oracle="""
-    WITH raw AS (
-      SELECT 'custkey_complete' AS check_name,
-             CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS violations
-      FROM orders
-      UNION ALL
-      SELECT 'price_positive',
-             CAST(SUM(CASE WHEN o_totalprice > 0 THEN 0 ELSE 1 END) AS BIGINT)
-      FROM orders
-      UNION ALL
-      SELECT 'price_under_100k',
-             CAST(SUM(CASE WHEN o_totalprice < 100000 THEN 0 ELSE 1 END) AS BIGINT)
-      FROM orders
-      UNION ALL
-      SELECT 'orderkey_unique', CAST(COALESCE(SUM(cnt - 1), 0) AS BIGINT)
-      FROM (SELECT COUNT(*) AS cnt FROM orders GROUP BY o_orderkey)
-      UNION ALL
-      SELECT 'custkey_in_customer', CAST(COUNT(*) AS BIGINT)
-      FROM orders o
-      WHERE NOT EXISTS (SELECT 1 FROM customer c
-                        WHERE c.c_custkey = o.o_custkey)
-    )
-    SELECT check_name, violations, violations = 0 AS passed FROM raw
-    """,
-    doc=(
-        "Declarative expectations (operators/profile.py check): all "
-        "row-local constraints (completeness, predicates — NULL "
-        "predicate counts as violation) fold into ONE conditional-"
-        "aggregate pass over the fact table; uniqueness is a two-stage "
-        "hash aggregate (sum of per-key count-1, NULL keys included, "
-        "matching GROUP BY); referential integrity is a broadcast "
-        "left-anti join against the distinct dimension keys (NULL FK = "
-        "orphan, matching NOT EXISTS). price_under_100k fails on "
-        "purpose so the violation-counting path is non-vacuous. The "
-        "boolean passed column is derived, not compared-away."
-    ),
-    tags=("qa",),
-)
-def qa_check(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import Expect, check
-
-    orders = t(spark, sf_dir, "orders")
-    customer = t(spark, sf_dir, "customer")
-    out = check(
-        orders,
-        [
-            Expect("custkey_complete", "complete", col="o_custkey"),
-            Expect(
-                "price_positive",
-                "predicate",
-                predicate=F.col("o_totalprice") > 0,
-            ),
-            Expect(
-                "price_under_100k",
-                "predicate",
-                predicate=F.col("o_totalprice") < 100000,
-            ),
-            Expect("orderkey_unique", "unique", col="o_orderkey"),
-            Expect(
-                "custkey_in_customer",
-                "ref",
-                col="o_custkey",
-                ref_df=customer,
-                ref_col="c_custkey",
-            ),
-        ],
-    )
-    return out.select(
-        F.col("constraint").alias("check_name"), "violations", "passed"
-    )
-
-
-@EXT.add(
-    "win_ntile_bands",
-    oracle="""
-    WITH r AS (
-      SELECT o_orderpriority,
-             NTILE(10) OVER (PARTITION BY o_orderpriority
-                             ORDER BY o_totalprice, o_orderkey) AS decile,
-             PERCENT_RANK() OVER (PARTITION BY o_orderpriority
-                                  ORDER BY o_totalprice, o_orderkey) AS pr,
-             o_totalprice
-      -- NULL price has no engine-stable rank position (Spark sorts
-      -- NULLs first, DuckDB last) — excluded from the deciles
-      FROM orders WHERE o_totalprice IS NOT NULL
-    )
-    SELECT o_orderpriority, CAST(decile AS BIGINT) AS decile,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi,
-           ROUND(MIN(pr), 9) AS min_pr, ROUND(MAX(pr), 9) AS max_pr
-    FROM r GROUP BY 1, 2
-    """,
-    doc=(
-        "Price decile bands per priority class: NTILE(10) + "
-        "PERCENT_RANK with an (o_totalprice, o_orderkey) total order - "
-        "the tie-break makes both rank functions deterministic; "
-        "without it NTILE's bucket boundaries inside a tie run would "
-        "be partition-order-dependent and could never value-hash. "
-        "PARTITION BY keeps the sort distributed (one hash shuffle on "
-        "the class key, never a global single-partition sort); "
-        "percent_rank is (rank-1)/(n-1), an integer-over-integer IEEE "
-        "division, rounded to 9 only for display symmetry. The "
-        "equi-depth band edges (lo/hi per decile) are the "
-        "histogram-calibration shape dashboards consume."
-    ),
-    tags=("window", "analytics"),
-)
-def win_ntile_bands(spark, sf_dir):
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    r = t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    ).select(
-        "o_orderpriority",
-        F.ntile(10).over(w).alias("decile"),
-        F.percent_rank().over(w).alias("pr"),
-        "o_totalprice",
-    )
-    return r.groupBy(
-        "o_orderpriority", F.col("decile").cast("long").alias("decile")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("o_totalprice").alias("lo"),
-        F.max("o_totalprice").alias("hi"),
-        F.round(F.min("pr"), 9).alias("min_pr"),
-        F.round(F.max("pr"), 9).alias("max_pr"),
-    )
-
-
-@EXT.add(
-    "join_asof_cogrouped",
-    oracle="""
-    -- operational time domain (r13 pandas-path Arrow-ns contract)
-    WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
-               FROM events WHERE event_type = 'purchase'
-                 AND ts >= TIMESTAMP '1970-01-01'
-                 AND ts < TIMESTAMP '2100-01-01'),
-    c AS (SELECT user_id, ts, event_id, value
-          FROM events WHERE event_type = 'click'
-            AND ts >= TIMESTAMP '1970-01-01'
-            AND ts < TIMESTAMP '2100-01-01'),
-    cand AS (
-      SELECT p.purchase_id, c.ts, c.value,
-             row_number() OVER (PARTITION BY p.purchase_id
-                                ORDER BY c.ts DESC, c.event_id DESC) AS rn
-      FROM p JOIN c ON c.user_id = p.user_id AND c.ts <= p.p_ts
-    )
-    SELECT p.purchase_id, p.user_id, p.p_ts,
-           cand.ts AS asof_ts, cand.value AS asof_value
-    FROM p LEFT JOIN cand
-      ON cand.purchase_id = p.purchase_id AND cand.rn = 1
-    """,
-    doc=(
-        "Click attribution as-of join through cogroup().applyInPandas "
-        "(operators/asof.py asof_backward_cogrouped): each purchase "
-        "gets the same user's latest at-or-before click, ties at equal "
-        "timestamps resolved by max event_id - bit-identical to the "
-        "SQL row_number pick. The Arrow cogroup path: one shuffle per "
-        "side co-partitions both frames by user, then a per-key "
-        "pandas merge_asof (linear two-pointer over sorted frames) "
-        "replaces the JVM window machinery - the path you take when "
-        "per-key logic outgrows expressions (custom staleness, "
-        "interpolation). Purchases with no prior click keep NULL "
-        "attribution through pandas masked dtypes."
-    ),
-    tags=("join", "asof", "udf"),
-)
-def join_asof_cogrouped(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.asof import (
-        asof_backward_cogrouped,
-    )
-
-    # operational time domain: cogrouped pandas asof (r13 contract)
-    ev = ops_time_domain(t(spark, sf_dir, "events"))
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("p_ts"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    return asof_backward_cogrouped(
-        purchases,
-        clicks,
-        key="user_id",
-        left_ts="p_ts",
-        right_ts="ts",
-        right_cols=["ts", "value"],
-        tiebreak="event_id",
-    )
-
-
-@EXT.add(
-    "agg_pivot_daily",
-    oracle="""
-    SELECT date_trunc('day', ts) AS day,
-           CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-           CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-           CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-    FROM events GROUP BY 1
-    """,
-    doc=(
-        "Wide daily matrix via groupBy().pivot() with DECLARED pivot "
-        "values - the dashboard-table shape. Declaring the value list "
-        "is the scale-correct form: without it Spark runs an extra "
-        "distinct-collect job over the pivot column before planning, "
-        "and an unbounded value set would mint unbounded columns. "
-        "Compiles to one pass of conditional aggregates (the same "
-        "plan as the oracle's CASE columns), map-side combined, one "
-        "shuffle on day."
-    ),
-    tags=("agg", "pivot"),
-)
-def agg_pivot_daily(spark, sf_dir):
-    types = ["click", "view", "purchase", "signup", "error"]
-    return (
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .fillna(0, subset=types)
-        .select(
-            "day", *[F.col(c).cast("long").alias(c) for c in types]
-        )
-    )
-
-
-@EXT.add(
-    "agg_markov_transitions",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM events
-    ),
-    c AS (
-      SELECT event_type AS from_type, next_type AS to_type,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM seq WHERE next_type IS NOT NULL
-      GROUP BY 1, 2
-    ),
-    tot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS row_total
-            FROM c GROUP BY 1)
-    SELECT c.from_type, c.to_type, c.n,
-           CAST(c.n AS DOUBLE) / CAST(t.row_total AS BIGINT) AS prob
-    FROM c JOIN tot t USING (from_type)
-    """,
-    doc=(
-        "User-journey Markov transition matrix: per-user event "
-        "sequences (ordered by (ts, event_id) — the event_id tie-break "
-        "makes same-timestamp ordering deterministic, without which "
-        "LEAD would be partition-order-dependent), lead-paired into "
-        "(from, to) transitions, normalized per source state. prob is "
-        "one integer-over-integer IEEE division — exact cross-engine. "
-        "Plan: one shuffle on user_id for the sequence window, then "
-        "type-pair aggregation over a bounded state space; row totals "
-        "re-join broadcast (states are a dimension)."
-    ),
-    tags=("agg", "analytics"),
-)
-def agg_markov_transitions(spark, sf_dir):
-    from pyspark.sql.window import Window as W
-
-    ev = t(spark, sf_dir, "events")
-    seq = ev.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type")
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .alias("next_type"),
-    )
-    c = (
-        seq.filter(F.col("next_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = c.groupBy("from_type").agg(
-        F.sum("n").cast("long").alias("row_total")
-    )
-    return c.join(F.broadcast(tot), on="from_type").select(
-        "from_type",
-        "to_type",
-        "n",
-        (F.col("n").cast("double") / F.col("row_total")).alias("prob"),
-    )
-
-
-@EXT.add(
-    "qa_snapshot_diff",
-    oracle="""
-    WITH v2 AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text,
-             lang
-      FROM documents WHERE doc_id % 11 <> 0
-      UNION ALL
-      SELECT doc_id + 1000000, text, lang FROM documents WHERE doc_id % 13 = 0
-    ),
-    o AS (SELECT doc_id, md5(concat_ws(chr(31), text, lang)) AS h_old
-          FROM documents),
-    n AS (SELECT doc_id, md5(concat_ws(chr(31), text, lang)) AS h_new
-          FROM v2)
-    SELECT doc_id,
-           CASE WHEN h_old IS NULL THEN 'added'
-                WHEN h_new IS NULL THEN 'removed'
-                WHEN h_old = h_new THEN 'unchanged'
-                ELSE 'changed' END AS status
-    FROM o FULL JOIN n USING (doc_id)
-    """,
-    doc=(
-        "Corpus version diff (operators/profile.py snapshot_diff): "
-        "added/removed/changed/unchanged per key between two table "
-        "versions. Content equality via md5(concat_ws(US, cols)) — a "
-        "digest Spark and DuckDB compute identically, and the scale "
-        "reason for the shape: the full-outer join shuffles (key, "
-        "32-byte digest), never the row payload. Fixture v2 drops "
-        "doc_id%11 (removed), appends ' v2' for doc_id%7 (changed), "
-        "plants doc_id%13 copies at +1e6 (added) — all four statuses "
-        "non-vacuous at sf0.01."
-    ),
-    tags=("qa",),
-)
-def qa_snapshot_diff(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import snapshot_diff
-
-    docs = t(spark, sf_dir, "documents")
-    v1 = docs.select("doc_id", "text", "lang")
-    kept = docs.filter(F.col("doc_id") % 11 != 0).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" v2"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-        "lang",
-    )
-    added = docs.filter(F.col("doc_id") % 13 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    v2 = kept.unionByName(added)
-    return snapshot_diff(v1, v2, "doc_id", ["text", "lang"])
-
-
-def _psi_multi_oracle(cols: tuple[str, ...], n_bins: int = 8) -> str:
-    """One UNION ALL block per column, each the single-column PSI
-    pattern — the oracle pays k passes; the Spark side is the point
-    (one melt scan for all k)."""
-    blocks = []
-    for c in cols:
-        blocks.append(f"""
-    SELECT '{c}' AS col, bin, cnt_ref, cnt_cur,
-           ROUND((CAST(cnt_ref + 1 AS DOUBLE) / CAST(tr + {n_bins} AS DOUBLE)
-                  - CAST(cnt_cur + 1 AS DOUBLE) / CAST(tc + {n_bins} AS DOUBLE))
-                 * LN((CAST(cnt_ref + 1 AS DOUBLE) / CAST(tr + {n_bins} AS DOUBLE))
-                      / (CAST(cnt_cur + 1 AS DOUBLE) / CAST(tc + {n_bins} AS DOUBLE))),
-                 9) AS contrib
-    FROM (
-      WITH r_{c} AS (SELECT CAST({c} AS DOUBLE) AS x FROM events
-                     WHERE day(ts) <= 15 AND {c} IS NOT NULL
-                       AND ABS({c}) < 1e150),
-      c_{c} AS (SELECT CAST({c} AS DOUBLE) AS x FROM events
-                WHERE day(ts) > 15 AND {c} IS NOT NULL
-                  AND ABS({c}) < 1e150),
-      bounds AS (SELECT MIN(x) AS vmin, MAX(x) AS vmax
-                 FROM (SELECT x FROM r_{c} UNION ALL SELECT x FROM c_{c})),
-      spine AS (SELECT CAST(g AS BIGINT) AS bin
-                FROM generate_series(0, {n_bins - 1}) s(g)),
-      br AS (SELECT LEAST(CAST(FLOOR((x - vmin) / GREATEST((vmax - vmin) / {n_bins}.0, 1e-12))
-                          AS BIGINT), {n_bins - 1}) AS bin, COUNT(*) AS c
-             FROM r_{c}, bounds GROUP BY 1),
-      bc AS (SELECT LEAST(CAST(FLOOR((x - vmin) / GREATEST((vmax - vmin) / {n_bins}.0, 1e-12))
-                          AS BIGINT), {n_bins - 1}) AS bin, COUNT(*) AS c
-             FROM c_{c}, bounds GROUP BY 1),
-      j AS (SELECT spine.bin,
-                   CAST(COALESCE(br.c, 0) AS BIGINT) AS cnt_ref,
-                   CAST(COALESCE(bc.c, 0) AS BIGINT) AS cnt_cur
-            FROM spine LEFT JOIN br USING (bin) LEFT JOIN bc USING (bin)),
-      tot AS (SELECT SUM(cnt_ref) AS tr, SUM(cnt_cur) AS tc FROM j)
-      SELECT j.bin, cnt_ref, cnt_cur, tr, tc FROM j, tot
-    )""")
-    return "\n    UNION ALL\n".join(blocks)
-
-
-@EXT.add(
-    "qa_psi_multi",
-    oracle=_psi_multi_oracle(("value", "user_id", "event_id")),
-    doc=(
-        "Wide-table drift report (operators/profile.py psi_drift_multi): "
-        "per-column PSI for value/user_id/event_id between the two "
-        "half-months of events, computed in ONE melted scan per "
-        "population + one groupBy - k columns never cost k jobs (the "
-        "profile melt trick applied to drift monitoring). Per-bin "
-        "contribs are emitted instead of a per-column float sum "
-        "(summing doubles across bins would be partition-order-"
-        "dependent); bins/counts exact, contrib rounded to 9 decimals "
-        "under the module's ln() convention. The DuckDB oracle pays "
-        "one pass per column - the Spark plan shape is the point."
-    ),
-    tags=("qa",),
-)
-def qa_psi_multi(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import psi_drift_multi
-
-    ev = t(spark, sf_dir, "events")
-    ref = ev.filter(F.dayofmonth("ts") <= 15)
-    cur = ev.filter(F.dayofmonth("ts") > 15)
-    return psi_drift_multi(ref, cur, ["value", "user_id", "event_id"])
-
-
-@EXT.add(
-    "qa_observe_metrics",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-           CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-           CAST(MAX(n_chars) AS BIGINT) AS max_chars,
-           CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_en
-    FROM documents
-    """,
-    doc=(
-        "Pipeline telemetry via Dataset.observe(): named aggregate "
-        "metrics collected AS A SIDE EFFECT of the pass that already "
-        "scans the data (here a corpus pass forced by a count) - at "
-        "100 TB the ingest job gets its row/byte/quality accounting "
-        "for free instead of paying a second scan, which is how "
-        "production pipelines feed their freshness dashboards. The "
-        "Observation handle blocks until the action finishes and "
-        "returns the exact aggregate values; the query re-emits them "
-        "as a 1-row frame the oracle recomputes directly."
-    ),
-    tags=("qa", "observability"),
-)
-def qa_observe_metrics(spark, sf_dir):
-    from pyspark.sql import Observation
-
-    # The observed pass runs on a CLONED session (same SparkContext,
-    # separate session state): Observation registers itself with the
-    # session's ObservationManager, which is not serializable, and a
-    # lingering registration poisons ANY later RDD-closure
-    # serialization on that session (observed live: llm_quality_model's
-    # localCheckpoint failing with NotSerializableException:
-    # ObservationManager after this query ran). Isolating the
-    # registration on a throwaway session confines the hazard; the
-    # returned metrics are plain Python scalars.
-    obs_spark = spark.newSession()
-    obs = Observation()
-    docs = t(obs_spark, sf_dir, "documents").observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("n_en"),
-    )
-    docs.write.format("noop").mode("overwrite").save()  # the real pass
-    m = obs.get
-    return spark.range(1).select(
-        F.lit(int(m["n_rows"])).cast("long").alias("n_rows"),
-        F.lit(int(m["total_chars"])).cast("long").alias("total_chars"),
-        F.lit(int(m["min_chars"])).cast("long").alias("min_chars"),
-        F.lit(int(m["max_chars"])).cast("long").alias("max_chars"),
-        F.lit(int(m["n_en"])).cast("long").alias("n_en"),
-    )
-
-
-@EXT.add(
-    "qa_table_checksum",
-    oracle="""
-    SELECT 'orders' AS tbl, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(CAST(SUM(CAST(concat('0x',
-             substring(md5(concat_ws(chr(31),
-               CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
-               o_orderstatus,
-               -- float columns enter as exact integer CENTS: the raw
-               -- double->string form diverges per engine beyond 1e7
-               -- (Spark switches to scientific notation, DuckDB never
-               -- does) — invisible until the r12 extremes corpus
-               CAST(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                    AS VARCHAR),
-               CAST(o_orderdate AS VARCHAR), o_orderpriority)), 1, 15))
-             AS BIGINT)) AS DECIMAL(38,0)) AS VARCHAR) AS checksum
-    FROM orders
-    UNION ALL
-    SELECT 'documents', CAST(COUNT(*) AS BIGINT),
-           CAST(CAST(SUM(CAST(concat('0x',
-             substring(md5(concat_ws(chr(31),
-               CAST(doc_id AS VARCHAR), text, lang, source,
-               CAST(n_chars AS VARCHAR))), 1, 15))
-             AS BIGINT)) AS DECIMAL(38,0)) AS VARCHAR)
-    FROM documents
-    """,
-    doc=(
-        "Order-insensitive table content checksum - the cheap "
-        "replication/migration integrity check (compare checksums, "
-        "not tables): per-row md5 of the unit-separated column "
-        "payload, first 15 hex chars as a 60-bit integer (verified "
-        "identical Spark conv vs DuckDB 0x-cast), SUMMED as "
-        "DECIMAL(38,0) - addition is commutative so the checksum is "
-        "partitioning/order-invariant, and 38 digits hold 10^12 rows "
-        "x 2^60 without overflow (ANSI would throw on BIGINT "
-        "overflow; decimal sums are exact). One scan, one map-side-"
-        "combined aggregate per table; float columns enter via their "
-        "canonical string form (same cast both engines, proven by "
-        "qa_profile's ts parity)."
-    ),
-    tags=("qa",),
-)
-def qa_table_checksum(spark, sf_dir):
-    def one(tbl: str, cols: list[str]):
-        df = t(spark, sf_dir, tbl)
-
-        def col_str(c: str):
-            # money doubles enter as exact integer cents: Spark's
-            # double->string turns scientific at >=1e7 where DuckDB
-            # never does (r12 extremes contract; NULL out-of-domain,
-            # skipped by concat_ws on both engines)
-            if c == "o_totalprice":
-                return (
-                    F.round(F.col(c) * 100).try_cast("long").cast("string")
-                )
-            return F.col(c).cast("string")
-
-        payload = F.concat_ws("\x1f", *[col_str(c) for c in cols])
-        rowsum = F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast(
-            "decimal(38,0)"
-        )
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(rowsum).cast("decimal(38,0)").cast("string").alias("checksum"),
-        ).select(F.lit(tbl).alias("tbl"), "n_rows", "checksum")
-
-    return one(
-        "orders",
-        [
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-            "o_orderpriority",
-        ],
-    ).unionByName(
-        one("documents", ["doc_id", "text", "lang", "source", "n_chars"])
-    )
-
-
-@EXT.add(
-    "qa_anomaly_days",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', o_orderdate) AS day,
-             CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM orders GROUP BY 1
-    ),
-    m AS (SELECT median(cnt) AS med FROM d),
-    m2 AS (SELECT median(abs(cnt - med)) AS mad FROM d, m)
-    SELECT day, cnt, med, mad,
-           abs(cnt - med) > 4.4478 * mad AS is_outlier
-    FROM d, m, m2
-    """,
-    doc=(
-        "Robust ingest-volume anomaly detection (operators/profile.py "
-        "mad_outliers): flag days whose order count deviates from the "
-        "median by > 4.4478 x MAD (3 x 1.4826, the 3-sigma-equivalent "
-        "consistency constant). Median/MAD instead of mean/stddev "
-        "because a spike inflates the stddev enough to mask itself; "
-        "MAD has a 50% breakdown point. 5 natural outlier days at "
-        "sf0.01 keep the flag non-vacuous. Exact-integer counts; the "
-        "median of integers is exact in double; both engines parse "
-        "the same 4.4478 literal to the identical double. After the "
-        "map-side day-count aggregate everything is dimension-sized; "
-        "med/mad re-join as 1-row broadcasts."
-    ),
-    tags=("qa",),
-)
-def qa_anomaly_days(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import mad_outliers
-
-    return mad_outliers(t(spark, sf_dir, "orders"), "o_orderdate")
-
-
-@EXT.add(
-    "qa_psi_drift",
-    oracle="""
-    -- x IS NOT NULL: DuckDB's LEAST *skips* NULL args, so binning via
-    -- LEAST(FLOOR(NULL), k) silently routes every NULL row into the
-    -- LAST bin — the trap the Spark operators' isNotNull filter avoids
-    -- (round-11 adversarial NULL sweep)
-    WITH ref AS (SELECT value AS x FROM events
-                 WHERE day(ts) <= 15 AND value IS NOT NULL
-                   AND ABS(value) < 1e150),
-    cur AS (SELECT value AS x FROM events
-            WHERE day(ts) > 15 AND value IS NOT NULL
-              AND ABS(value) < 1e150),
-    bounds AS (
-      SELECT MIN(x) AS vmin, MAX(x) AS vmax
-      FROM (SELECT x FROM ref UNION ALL SELECT x FROM cur)
-    ),
-    spine AS (SELECT CAST(g AS BIGINT) AS bin
-              FROM generate_series(0, 7) s(g)),
-    br AS (
-      SELECT LEAST(CAST(FLOOR((x - vmin) / GREATEST((vmax - vmin) / 8.0, 1e-12)) AS BIGINT),
-                   7) AS bin, COUNT(*) AS c
-      FROM ref, bounds GROUP BY 1
-    ),
-    bc AS (
-      SELECT LEAST(CAST(FLOOR((x - vmin) / GREATEST((vmax - vmin) / 8.0, 1e-12)) AS BIGINT),
-                   7) AS bin, COUNT(*) AS c
-      FROM cur, bounds GROUP BY 1
-    ),
-    j AS (
-      SELECT spine.bin,
-             CAST(COALESCE(br.c, 0) AS BIGINT) AS cnt_ref,
-             CAST(COALESCE(bc.c, 0) AS BIGINT) AS cnt_cur
-      FROM spine LEFT JOIN br USING (bin) LEFT JOIN bc USING (bin)
-    ),
-    tot AS (SELECT SUM(cnt_ref) AS tr, SUM(cnt_cur) AS tc FROM j)
-    SELECT bin, cnt_ref, cnt_cur,
-           ROUND((CAST(cnt_ref + 1 AS DOUBLE) / CAST(tr + 8 AS DOUBLE)
-                  - CAST(cnt_cur + 1 AS DOUBLE) / CAST(tc + 8 AS DOUBLE))
-                 * LN((CAST(cnt_ref + 1 AS DOUBLE) / CAST(tr + 8 AS DOUBLE))
-                      / (CAST(cnt_cur + 1 AS DOUBLE) / CAST(tc + 8 AS DOUBLE))),
-                 9) AS contrib
-    FROM j, tot
-    """,
-    doc=(
-        "Population-Stability-Index drift (operators/profile.py "
-        "psi_drift) between the first and second half-month of "
-        "events.value: fixed-width bins over the GLOBAL min/max "
-        "(deterministic under any partitioning — quantile/ntile bin "
-        "edges are partition-order-dependent and would not oracle), "
-        "Laplace-smoothed per-bin contributions. Bin assignment is "
-        "pure IEEE float64 (sub, div, floor) so Spark and DuckDB agree "
-        "bit-exactly; ln() is not correctly-rounded IEEE, so contrib "
-        "is rounded to 9 decimals on both sides. Plan: one scan per "
-        "population + broadcast 1-row bounds — no collect of data "
-        "rows, no quantile pass."
-    ),
-    tags=("qa",),
-)
-def qa_psi_drift(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.profile import psi_drift
-
-    ev = t(spark, sf_dir, "events")
-    ref = ev.filter(F.dayofmonth("ts") <= 15)
-    cur = ev.filter(F.dayofmonth("ts") > 15)
-    return psi_drift(ref, cur, "value", n_bins=8)
-
-
 # ---------------------------------------------------------------------------
 # bench-only operator legs
 # ---------------------------------------------------------------------------
@@ -6018,882 +351,6 @@ OPERATOR_ONLY = {
     "llm_sim_ivf_persisted": _ivf_persisted_operator_only,
     "llm_sim_lsh_persisted": _lsh_persisted_operator_only,
 }
-
-
-# ---------------------------------------------------------------------------
-# Round-7: statistical-LM curation (CCNet fluency scoring, DSIR
-# importance weights) and weighted reservoir sampling — the data-
-# SELECTION layer that runs between dedup and domain mixing.
-# ---------------------------------------------------------------------------
-
-@EXT.add(
-    "llm_lm_score",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    bi AS (
-      SELECT doc_id, w[i] AS a, w[i + 1] AS b
-      FROM toks, UNNEST(generate_series(1, greatest(len(w) - 1, 0))) s(i)
-    ),
-    bc AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-           FROM bi GROUP BY a, b),
-    ctx AS (SELECT a, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM bc GROUP BY a),
-    vocab AS (
-      SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS v
-      FROM (SELECT unnest(w) AS word FROM toks)
-    ),
-    lp AS (
-      SELECT bc.a, bc.b,
-             CAST(ROUND(LN((CAST(c_ab AS DOUBLE) + 0.5)
-                           / (CAST(c_a AS DOUBLE)
-                              + 0.5 * CAST(v AS DOUBLE))), 9)
-                  AS DECIMAL(20,9)) AS lp
-      FROM bc JOIN ctx USING (a) CROSS JOIN vocab
-    ),
-    dm AS (SELECT doc_id, a, b, CAST(COUNT(*) AS BIGINT) AS m
-           FROM bi GROUP BY doc_id, a, b)
-    SELECT dm.doc_id,
-           CAST(SUM(m) AS BIGINT) AS n_bigrams,
-           ROUND(CAST(SUM(CAST(lp * CAST(m AS DECIMAL(10,0))
-                               AS DECIMAL(38,9))) AS DOUBLE)
-                 / SUM(m), 6) AS avg_logprob
-    FROM dm JOIN lp USING (a, b)
-    GROUP BY dm.doc_id
-    """,
-    doc=(
-        "CCNet-style LM fluency scoring (Wenzek et al. 2020): train an "
-        "add-1/2-smoothed bigram LM on the corpus, score every document "
-        "by mean bigram log-probability — the gibberish/boilerplate "
-        "gate of a curation pipeline. Determinism: every ln takes exact-"
-        "integer-ratio operands and is rounded to 9 dp + cast to "
-        "DECIMAL before the per-document sum (exact, partitioning-"
-        "invariant); one final float division rounded to 6. Plan: one "
-        "tokenized scan feeds model and document sides; the model re-"
-        "join is Zipf-keyed on bigram TYPES with the LM side pre-"
-        "aggregated; V is a 1-row broadcast. See llm/lm.py."
-    ),
-    tags=("llm", "curation", "quality", "lm"),
-)
-def llm_lm_score(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import lm as LM
-
-    return LM.lm_score(t(spark, sf_dir, "documents"))
-
-
-@EXT.add(
-    "llm_dsir_weights",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    tflag AS (
-      SELECT doc_id, (lang = 'en') AS t
-      FROM documents WHERE text IS NOT NULL
-    ),
-    words AS (
-      SELECT u.doc_id, tflag.t,
-             list_reduce(list_prepend(CAST(7 AS BIGINT),
-                 list_transform(string_split(u.word, ''),
-                                c -> CAST(unicode(c) AS BIGINT))),
-                 (acc, cp) -> (acc * 31 + cp) % 1000003) % 256 AS bucket
-      FROM (SELECT doc_id, unnest(w) AS word FROM toks) u
-      JOIN tflag USING (doc_id)
-    ),
-    lm AS (
-      SELECT bucket,
-             CAST(COUNT(*) AS BIGINT) AS c_b,
-             CAST(COUNT(*) FILTER (WHERE t) AS BIGINT) AS c_t
-      FROM words GROUP BY bucket
-    ),
-    tot AS (SELECT CAST(SUM(c_b) AS BIGINT) AS n_b,
-                   CAST(SUM(c_t) AS BIGINT) AS n_t FROM lm),
-    ratio AS (
-      SELECT bucket,
-             CAST(ROUND(LN(((CAST(c_t AS DOUBLE) + 0.5)
-                            / (CAST(n_t AS DOUBLE) + 0.5 * 256.0))
-                           / ((CAST(c_b AS DOUBLE) + 0.5)
-                              / (CAST(n_b AS DOUBLE) + 0.5 * 256.0))), 9)
-                  AS DECIMAL(20,9)) AS lr
-      FROM lm CROSS JOIN tot
-    ),
-    dm AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS m
-           FROM words GROUP BY doc_id, bucket)
-    SELECT dm.doc_id,
-           CAST(SUM(m) AS BIGINT) AS n_tokens,
-           ROUND(CAST(SUM(CAST(lr * CAST(m AS DECIMAL(10,0))
-                               AS DECIMAL(38,9))) AS DOUBLE), 6)
-             AS dsir_logweight
-    FROM dm JOIN ratio USING (bucket)
-    GROUP BY dm.doc_id
-    """,
-    doc=(
-        "DSIR importance weights (Xie et al. 2023): log-likelihood "
-        "ratio of each document's hashed-unigram bag under the TARGET "
-        "domain LM (lang='en' slice) vs the background (whole-pool) LM "
-        "— resample ∝ exp(weight) to tilt the mix toward the target. "
-        "Feature hash is a Horner-mod codepoint roll (portable integer "
-        "SQL — Spark aggregate() and DuckDB list_reduce() agree by "
-        "value, unlike built-in hash()). Both LMs are 256-row tables "
-        "built in ONE conditional-count pass and broadcast into the "
-        "per-document join — model side is O(n_buckets) at any corpus "
-        "size. Same ln→round→decimal-sum determinism as llm_lm_score. "
-        "See llm/lm.py (dsir_weights)."
-    ),
-    tags=("llm", "curation", "sampling", "lm"),
-)
-def llm_dsir_weights(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import lm as LM
-
-    return LM.dsir_weights(
-        t(spark, sf_dir, "documents"), target=F.col("lang") == "en"
-    )
-
-
-@EXT.add(
-    "samp_weighted_reservoir",
-    oracle="""
-    WITH s AS (
-      SELECT source, doc_id, n_chars,
-             ROUND(LN((((doc_id % 1000003) * 48271) % 1000003 + 1)
-                      / 1000004.0)
-                   / CAST(n_chars AS DOUBLE), 9) AS es_key
-      FROM documents WHERE n_chars > 0
-    )
-    SELECT source, doc_id, n_chars, es_key, rk
-    FROM (SELECT *, CAST(ROW_NUMBER() OVER (
-                      PARTITION BY source
-                      ORDER BY es_key DESC, doc_id) AS BIGINT) AS rk
-          FROM s)
-    WHERE rk <= 5
-    """,
-    doc=(
-        "Weighted reservoir sample WITHOUT replacement, 5 docs per "
-        "source, inclusion probability proportional to n_chars — "
-        "Efraimidis–Spirakis A-ES: rank by u^(1/w) and keep the top-k, "
-        "expressed in log space (ln(u)/w, monotone-equivalent) so the "
-        "key is one ln + one division from exact-integer operands. u "
-        "comes from a SEEDED minstd roll on doc_id ((id*48271) mod "
-        "1000003 — portable integer SQL, not rand()), so the sample is "
-        "reproducible across engines, retries and partitionings — the "
-        "property that makes a weighted sample usable as a pinned "
-        "training subset. Plan: one scan, one hash-partitioned window "
-        "per source (no global sort); at 100 TB swap the window for "
-        "the per-partition-top-k + merge the rehearsal tool uses."
-    ),
-    tags=("sampling", "window"),
-)
-def samp_weighted_reservoir(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    r = ((F.col("doc_id") % F.lit(1000003)) * F.lit(48271)) % F.lit(1000003)
-    u = (r + F.lit(1)).cast("double") / F.lit(1000004.0)
-    s = docs.select(
-        "source",
-        "doc_id",
-        "n_chars",
-        F.round(F.log(u) / F.col("n_chars").cast("double"), 9).alias("es_key"),
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("es_key").desc(), F.col("doc_id").asc()
-    )
-    return (
-        s.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-    )
-
-
-@EXT.add(
-    "llm_embedding_pca",
-    oracle="""
-    WITH q AS (
-      SELECT list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-      FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0
-        -- micro-quantization domain (pca.QUANT_BOUND upper edge, r12;
-        -- pca.QUANT_EPS lower edge, r13 combined axis)
-        AND len(list_filter(embedding, x -> x IS NULL OR ABS(CAST(x AS DOUBLE)) > 9e12)) = 0 AND list_max(list_transform(embedding, x -> ABS(CAST(x AS DOUBLE)))) >= 5e-7
-    ),
-    e AS (SELECT unnest(qv) AS qi, generate_subscripts(qv, 1) AS i FROM q),
-    s AS (SELECT i,
-                 SUM(CAST(qi AS HUGEINT) * qi) AS sq2,
-                 SUM(CAST(qi AS HUGEINT)) AS s1
-          FROM e GROUP BY i),
-    agg AS (SELECT SUM(sq2) AS tot2, SUM(s1 * s1) AS ss FROM s),
-    nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-                  CAST(MAX(len(qv)) AS BIGINT) AS d FROM q)
-    SELECT CAST(t.k AS BIGINT) AS component,
-           CAST(nn.n AS BIGINT) AS n_vecs,
-           nn.d AS d,
-           CAST(nn.n * agg.tot2 - agg.ss AS VARCHAR) AS trace_num,
-           TRUE AS eigsum_ok, TRUE AS ordered_ok,
-           TRUE AS orthonormal_ok, TRUE AS bounds_ok
-    FROM range(1, 9) t(k), agg, nn
-    """,
-    doc=(
-        "Distributed PCA over the embedding column (SemDeDup's "
-        "reduction step): quantize components to exact integers, "
-        "per-partition int64 partial Gramians via mapInPandas (the "
-        "tree-aggregate shape — shuffle carries O(partitions*d^2) "
-        "tiny rows), exact DECIMAL final reduce, then a driver "
-        "eigensolve on the bounded d x d collect (2 145 values at "
-        "d=64, corpus-size-independent). Oracle: the EXACT integer "
-        "trace numerator (n*SUM q_i^2 - SUM(S_i)^2, HUGEINT in DuckDB "
-        "vs python-int on the Spark side) pins the whole distributed "
-        "phase value-exactly; the eigensolve is pinned by spectral "
-        "invariants (eigenvalue sum = trace, descending order, "
-        "orthonormal basis, Rayleigh bounds) — the invariant-oracle "
-        "pattern of agg_hll_mergeable. See llm/pca.py."
-    ),
-    tags=("llm", "embedding", "pca", "approx-free"),
-)
-def llm_embedding_pca(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import pca as P
-
-    return P.pca_invariants(t(spark, sf_dir, "embeddings"))
-
-
-@EXT.add(
-    "sink_cdc_diff",
-    oracle="""
-    WITH v1 AS (
-      SELECT p_partkey, p_name, p_retailprice
-      FROM part WHERE p_partkey % 3 = 0
-    ),
-    v2 AS (
-      SELECT p_partkey, p_name,
-             CASE WHEN p_partkey % 2 = 0 THEN p_retailprice + 1.0
-                  ELSE p_retailprice END AS p_retailprice
-      FROM part WHERE p_partkey % 3 = 0 AND p_partkey % 5 <> 0
-      UNION ALL
-      SELECT p_partkey, p_name, p_retailprice
-      FROM part WHERE p_partkey % 3 = 1 AND p_partkey % 7 = 0
-    ),
-    j AS (
-      SELECT COALESCE(v1.p_partkey, v2.p_partkey) AS p_partkey,
-             v1.p_name AS old_p_name,
-             v1.p_retailprice AS old_p_retailprice,
-             v2.p_name AS new_p_name,
-             v2.p_retailprice AS new_p_retailprice,
-             v1.p_partkey IS NOT NULL AS in_old,
-             v2.p_partkey IS NOT NULL AS in_new
-      FROM v1 FULL OUTER JOIN v2 ON v1.p_partkey = v2.p_partkey
-    )
-    SELECT p_partkey, old_p_name, old_p_retailprice,
-           new_p_name, new_p_retailprice, change_type
-    FROM (
-      SELECT *,
-             CASE WHEN NOT in_old THEN 'insert'
-                  WHEN NOT in_new THEN 'delete'
-                  WHEN old_p_name IS DISTINCT FROM new_p_name
-                    OR old_p_retailprice IS DISTINCT FROM new_p_retailprice
-                  THEN 'update' END AS change_type
-      FROM j
-    ) WHERE change_type IS NOT NULL
-    """,
-    doc=(
-        "Change-data-capture from store time travel: two overwrite "
-        "generations of a part-derived table (deletes = %15 keys, "
-        "updates = even-key price bump, inserts = a disjoint key "
-        "slice), then cdc_diff(read_at(g1), read_at(g2)) classifies "
-        "every key as insert/update/delete with old/new images - "
-        "Delta-style CHANGE DATA FEED computed post hoc from retained "
-        "generations (operators/upsert.py cdc_diff). The diff is ONE "
-        "full-outer join hash-partitioned on the key; unchanged keys "
-        "drop out. Exercises the REAL on-disk store (pointer flip + "
-        "immutable generations), not a logical twin; the oracle "
-        "replays both snapshot definitions in SQL."
-    ),
-    tags=("sink", "store", "cdc"),
-)
-def sink_cdc_diff(spark, sf_dir):
-    import tempfile
-
-    from steam_data_pipeline_spark.operators.upsert import (
-        ParquetTableStore,
-        cdc_diff,
-    )
-
-    part = t(spark, sf_dir, "part").select(
-        "p_partkey", "p_name", "p_retailprice"
-    )
-    v1 = part.filter(F.col("p_partkey") % 3 == 0)
-    v2 = (
-        part.filter(
-            (F.col("p_partkey") % 3 == 0) & (F.col("p_partkey") % 5 != 0)
-        )
-        .withColumn(
-            "p_retailprice",
-            F.when(
-                F.col("p_partkey") % 2 == 0, F.col("p_retailprice") + F.lit(1.0)
-            ).otherwise(F.col("p_retailprice")),
-        )
-        .unionByName(
-            part.filter(
-                (F.col("p_partkey") % 3 == 1) & (F.col("p_partkey") % 7 == 0)
-            )
-        )
-    )
-    root = tempfile.mkdtemp(prefix="sdp_cdc_")
-    store = ParquetTableStore(spark, root)
-    store.overwrite("meta", v1)
-    store.overwrite("meta", v2)
-    g1, g2 = store.generations("meta")[-2:]
-    return cdc_diff(
-        store.read_at("meta", g1), store.read_at("meta", g2), key="p_partkey"
-    )
-
-
-@EXT.add(
-    "llm_semdedup",
-    oracle=f"""
-    WITH RECURSIVE u AS (
-      -- micro-quantization domain (pca.QUANT_BOUND, r12 contract):
-      -- the Spark corpus drops unquantizable vectors at ingestion
-      SELECT vec_id, embedding FROM embeddings
-      WHERE embedding IS NOT NULL AND len(embedding) > 0 AND len(list_filter(embedding, x -> x IS NULL OR ABS(CAST(x AS DOUBLE)) > 9e12)) = 0 AND list_max(list_transform(embedding, x -> ABS(CAST(x AS DOUBLE)))) >= 5e-7
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id, embedding
-      FROM embeddings WHERE vec_id < 32 AND embedding IS NOT NULL AND len(embedding) > 0 AND len(list_filter(embedding, x -> x IS NULL OR ABS(CAST(x AS DOUBLE)) > 9e12)) = 0 AND list_max(list_transform(embedding, x -> ABS(CAST(x AS DOUBLE)))) >= 5e-7
-      UNION ALL
-      SELECT vec_id + 2000000 AS vec_id, embedding
-      FROM embeddings WHERE vec_id < 16 AND embedding IS NOT NULL AND len(embedding) > 0 AND len(list_filter(embedding, x -> x IS NULL OR ABS(CAST(x AS DOUBLE)) > 9e12)) = 0 AND list_max(list_transform(embedding, x -> ABS(CAST(x AS DOUBLE)))) >= 5e-7
-    ),
-    ep AS (
-      SELECT a.vec_id AS a, b.vec_id AS b
-      FROM u a JOIN u b ON a.vec_id < b.vec_id
-      WHERE {_COS_SQL.format(a="a.embedding", b="b.embedding")} >= 0.95
-    ),
-    eedges AS (
-      SELECT a AS src, b AS dst FROM ep
-      UNION SELECT b AS src, a AS dst FROM ep
-    ),
-    ereach AS (
-      SELECT src AS node, src AS label FROM eedges
-      UNION
-      SELECT e.src AS node, r.label FROM eedges e JOIN ereach r ON e.dst = r.node
-    ),
-    comp AS (
-      SELECT node, CAST(MIN(label) AS BIGINT) AS keeper
-      FROM ereach GROUP BY node
-    )
-    SELECT CAST(node AS BIGINT) AS vec_id, keeper
-    FROM comp WHERE keeper < node
-    """,
-    doc=(
-        "SemDeDup (Abbas et al. 2023) end-to-end: PCA-reduce the "
-        "embeddings (llm/pca.py, top-8 of 64 dims), k-means-cluster "
-        "the REDUCED vectors (the IVF centroid machinery reused as "
-        "the clustering step), generate candidate pairs ONLY within "
-        "clusters, verify with exact cosine on the ORIGINAL vectors "
-        "(>= 0.95), connected-components the verified pairs, drop "
-        "every member but the min-id keeper. Output = (dropped "
-        "vec_id, keeper). Candidate generation is within-cluster "
-        "only — the published algorithm's cost shape: k ~ sqrt(n) "
-        "clusters keep per-cluster all-pairs bounded while identical "
-        "vectors land in the same cluster with probability 1 "
-        "(identical embedding => identical projection => same nearest "
-        "centroid), so the planted duplicate chains (32 copies, 16 "
-        "second copies) are provably detected and the output equals "
-        "the brute-force transitive-closure truth the recursive-CTE "
-        "oracle computes. Exactness never depends on WHERE k-means "
-        "put the cluster boundaries — only completeness for identical "
-        "vectors does."
-    ),
-    tags=("llm", "dedup", "embedding", "pca", "iterative"),
-)
-def llm_semdedup(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import pca as P
-
-    from steam_data_pipeline_spark.llm.pca import quantizable_components
-
-    emb = (
-        t(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        # vector ingestion contract (r12): unquantizable vectors are
-        # dropped corpus-wide so the moments, clusters and verify legs
-        # all see the same row set (oracle u CTE mirrors)
-        .filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") > 0)
-            & quantizable_components(F.col("embedding"))
-        )
-    )
-    p1 = emb.filter(F.col("vec_id") < 32).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    p2 = emb.filter(F.col("vec_id") < 16).select(
-        (F.col("vec_id") + 2_000_000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.union(p1).union(p2).localCheckpoint(eager=True)
-    # self-size the cluster count at sqrt(n) (SemDeDup's published
-    # sizing): per-cluster all-pairs stays ~n total as the corpus grows
-    k = max(16, int(corpus.count() ** 0.5))
-    red = P.pca_project(corpus, key="vec_id", vec_col="embedding", top_k=8)
-    # cheap clustering budget (random init, 2 Lloyd rounds). What is
-    # guaranteed under ANY centroid set: candidates are verified with
-    # exact cosine (no false pairs), and EXACTLY IDENTICAL embeddings
-    # share a PC projection and hence a cosine-argmax cell
-    # (deterministic centroid_id tie-break), so they are always found
-    # — the fixture generator's planted chains are exactly that shape,
-    # which is why this pipeline equals the brute-force oracle. What
-    # is NOT guaranteed (by SemDeDup itself, under any budget): any
-    # OTHER cos>=0.95 pair — non-parallel, or even a scaled copy (the
-    # projection is mean-centered, so s*x-mean is not parallel to
-    # x-mean) — that straddles a cell boundary is missed;
-    # within-cluster candidate generation is the published
-    # approximation. Measured (round 14, 5 seeded non-parallel
-    # corpora, 36 planted pairs each): this budget finds 31-35/36 vs
-    # k-means||/5's 33-35/36, each beating the other on some seeds —
-    # the budget moves candidate volume, not systematic recall
-    # (pinned by tests/test_llm_ops.py::TestSemdedupClusterBudget)
-    idx = S.build_ivf_index(
-        red.select("vec_id", F.col("pc").alias("embedding")),
-        n_centroids=k,
-        max_iter=2,
-        init_mode="random",
-    )
-    # materialize the cluster assignments once: build_ivf_index returns
-    # a LAZY assignment plan (corpus x broadcast-centroids scoring +
-    # per-key argmax) and both legs of the within-cluster self-join
-    # reference it (measured ~10% on the candidate stage at sf0.1 —
-    # AQE already reuses part of the exchange; the checkpoint also
-    # keeps the verify leg's lineage bounded)
-    asg = idx.assignments.select("vec_id", "centroid_id").localCheckpoint(
-        eager=True
-    )
-    cand = (
-        asg.alias("x")
-        .join(
-            asg.alias("y"),
-            (F.col("x.centroid_id") == F.col("y.centroid_id"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(
-            F.col("x.vec_id").alias("a"), F.col("y.vec_id").alias("b")
-        )
-    )
-    ea = corpus.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    eb = corpus.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    ver = (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .filter(S.cosine_expr("va", "vb") >= 0.95)
-        .select("a", "b")
-    )
-    comps = D.connected_components(ver)
-    return comps.filter(F.col("component") < F.col("node")).select(
-        F.col("node").cast("long").alias("vec_id"),
-        F.col("component").cast("long").alias("keeper"),
-    )
-
-
-@EXT.add(
-    "llm_chunking",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    sized AS (
-      SELECT doc_id, w, len(w) AS n,
-             1 + greatest(0, (len(w) - 9) // 24) AS n_chunks
-      FROM toks WHERE len(w) > 0
-    )
-    SELECT doc_id,
-           CAST(j AS BIGINT) AS chunk_id,
-           CAST(len(w[(1 + 24 * j):(24 * j + 32)]) AS BIGINT)
-             AS n_words_chunk,
-           array_to_string(w[(1 + 24 * j):(24 * j + 32)], ' ')
-             AS chunk_text
-    FROM sized, UNNEST(generate_series(0, n_chunks - 1)) s(j)
-    """,
-    doc=(
-        "RAG/embedding-prep chunking: overlapping 32-word windows with "
-        "stride 24 (8-word overlap), stable (doc_id, chunk_id) keys — "
-        "the retrieval-corpus preparation step between curation and "
-        "embedding. Chunk count = 1 + max(0, ceil((n-32)/24)) in pure "
-        "integer arithmetic (no float sizing), so the last chunk "
-        "always covers the tail and short docs yield exactly one "
-        "chunk. Pure JVM: one scan, transform(sequence)+explode+slice "
-        "— a narrow map, no shuffle at all; at 100 TB chunking is "
-        "embarrassingly parallel and this plan keeps it that way."
-    ),
-    tags=("llm", "text", "chunking"),
-)
-def llm_chunking(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != ""
-        ).alias("w"),
-    ).filter(F.size("w") > 0)
-    sized = toks.withColumn(
-        "n_chunks",
-        F.lit(1)
-        + F.greatest(
-            F.lit(0), F.floor((F.size("w") - F.lit(9)) / F.lit(24)).cast("int")
-        ),
-    )
-    return (
-        sized.select(
-            "doc_id",
-            "w",
-            F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("j"),
-        )
-        .select(
-            "doc_id",
-            F.col("j").cast("long").alias("chunk_id"),
-            F.size(F.slice("w", F.lit(1) + F.lit(24) * F.col("j"), F.lit(32)))
-            .cast("long")
-            .alias("n_words_chunk"),
-            F.concat_ws(
-                " ", F.slice("w", F.lit(1) + F.lit(24) * F.col("j"), F.lit(32))
-            ).alias("chunk_text"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_ccnet_buckets",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    bi AS (
-      SELECT doc_id, w[i] AS a, w[i + 1] AS b
-      FROM toks, UNNEST(generate_series(1, greatest(len(w) - 1, 0))) s(i)
-    ),
-    bc AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-           FROM bi GROUP BY a, b),
-    ctx AS (SELECT a, CAST(SUM(c_ab) AS BIGINT) AS c_a FROM bc GROUP BY a),
-    vocab AS (
-      SELECT CAST(COUNT(DISTINCT word) AS BIGINT) AS v
-      FROM (SELECT unnest(w) AS word FROM toks)
-    ),
-    lp AS (
-      SELECT bc.a, bc.b,
-             CAST(ROUND(LN((CAST(c_ab AS DOUBLE) + 0.5)
-                           / (CAST(c_a AS DOUBLE)
-                              + 0.5 * CAST(v AS DOUBLE))), 9)
-                  AS DECIMAL(20,9)) AS lp
-      FROM bc JOIN ctx USING (a) CROSS JOIN vocab
-    ),
-    dm AS (SELECT doc_id, a, b, CAST(COUNT(*) AS BIGINT) AS m
-           FROM bi GROUP BY doc_id, a, b),
-    scores AS (
-      SELECT dm.doc_id,
-             CAST(SUM(m) AS BIGINT) AS n_bigrams,
-             ROUND(CAST(SUM(CAST(lp * CAST(m AS DECIMAL(10,0))
-                                 AS DECIMAL(38,9))) AS DOUBLE)
-                   / SUM(m), 6) AS avg_logprob
-      FROM dm JOIN lp USING (a, b)
-      GROUP BY dm.doc_id
-    ),
-    bucketed AS (
-      SELECT d.lang, s.n_bigrams, s.avg_logprob,
-             NTILE(3) OVER (PARTITION BY d.lang
-                            ORDER BY s.avg_logprob DESC, s.doc_id)
-               AS bucket
-      FROM scores s JOIN documents d USING (doc_id)
-    )
-    SELECT lang,
-           CAST(bucket AS BIGINT) AS bucket,
-           CASE bucket WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                       ELSE 'tail' END AS label,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_bigrams) AS BIGINT) AS sum_tokens,
-           MIN(avg_logprob) AS lo, MAX(avg_logprob) AS hi,
-           CASE bucket WHEN 1 THEN 1.0 WHEN 2 THEN 0.5
-                       ELSE 0.1 END AS sample_rate,
-           CAST(round(SUM(n_bigrams)
-                      * CASE bucket WHEN 1 THEN 1.0 WHEN 2 THEN 0.5
-                                    ELSE 0.1 END) AS BIGINT)
-             AS expected_tokens
-    FROM bucketed GROUP BY lang, bucket
-    """,
-    doc=(
-        "CCNet's per-language perplexity bucketing (Wenzek et al. "
-        "2020 section 4.3): within each language, rank documents by "
-        "LM score (llm_lm_score's model) and cut head/middle/tail "
-        "terciles, then per-bucket doc/token accounting plus the "
-        "head-heavy sampling rate (1.0/0.5/0.1) and expected token "
-        "yield — the table a curation run reads to decide what "
-        "actually enters training. PARTITION BY lang keeps the ntile "
-        "sort distributed (the win_ntile_bands contract — languages "
-        "shuffle-hash, no global single-partition sort); the "
-        "(avg_logprob desc, doc_id) total order makes tercile edges "
-        "deterministic. Scores are exact-decimal (llm_lm_score), so "
-        "the whole composition value-hashes."
-    ),
-    tags=("llm", "curation", "quality", "lm", "window"),
-)
-def llm_ccnet_buckets(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.llm import lm as LM
-
-    docs = t(spark, sf_dir, "documents")
-    scores = LM.lm_score(docs).join(docs.select("doc_id", "lang"), "doc_id")
-    w = Window.partitionBy("lang").orderBy(
-        F.col("avg_logprob").desc(), F.col("doc_id")
-    )
-    bucketed = scores.select(
-        "lang",
-        "n_bigrams",
-        "avg_logprob",
-        F.ntile(3).over(w).alias("bucket"),
-    )
-    return (
-        bucketed.groupBy("lang", F.col("bucket").cast("long").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_bigrams").cast("long").alias("sum_tokens"),
-            F.min("avg_logprob").alias("lo"),
-            F.max("avg_logprob").alias("hi"),
-        )
-        .select(
-            "lang",
-            "bucket",
-            F.when(F.col("bucket") == 1, F.lit("head"))
-            .when(F.col("bucket") == 2, F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("label"),
-            "n_docs",
-            "sum_tokens",
-            "lo",
-            "hi",
-            F.when(F.col("bucket") == 1, F.lit(1.0))
-            .when(F.col("bucket") == 2, F.lit(0.5))
-            .otherwise(F.lit(0.1))
-            .alias("sample_rate"),
-            F.round(
-                F.col("sum_tokens")
-                * F.when(F.col("bucket") == 1, F.lit(1.0))
-                .when(F.col("bucket") == 2, F.lit(0.5))
-                .otherwise(F.lit(0.1))
-            )
-            .cast("long")
-            .alias("expected_tokens"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_dsir_resample",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    tflag AS (
-      SELECT doc_id, (lang = 'en') AS t
-      FROM documents WHERE text IS NOT NULL
-    ),
-    words AS (
-      SELECT u.doc_id, tflag.t,
-             list_reduce(list_prepend(CAST(7 AS BIGINT),
-                 list_transform(string_split(u.word, ''),
-                                c -> CAST(unicode(c) AS BIGINT))),
-                 (acc, cp) -> (acc * 31 + cp) % 1000003) % 256 AS bucket
-      FROM (SELECT doc_id, unnest(w) AS word FROM toks) u
-      JOIN tflag USING (doc_id)
-    ),
-    lm AS (
-      SELECT bucket,
-             CAST(COUNT(*) AS BIGINT) AS c_b,
-             CAST(COUNT(*) FILTER (WHERE t) AS BIGINT) AS c_t
-      FROM words GROUP BY bucket
-    ),
-    tot AS (SELECT CAST(SUM(c_b) AS BIGINT) AS n_b,
-                   CAST(SUM(c_t) AS BIGINT) AS n_t FROM lm),
-    ratio AS (
-      SELECT bucket,
-             CAST(ROUND(LN(((CAST(c_t AS DOUBLE) + 0.5)
-                            / (CAST(n_t AS DOUBLE) + 0.5 * 256.0))
-                           / ((CAST(c_b AS DOUBLE) + 0.5)
-                              / (CAST(n_b AS DOUBLE) + 0.5 * 256.0))), 9)
-                  AS DECIMAL(20,9)) AS lr
-      FROM lm CROSS JOIN tot
-    ),
-    dm AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS m
-           FROM words GROUP BY doc_id, bucket),
-    weights AS (
-      SELECT dm.doc_id,
-             CAST(SUM(m) AS BIGINT) AS n_tokens,
-             ROUND(CAST(SUM(CAST(lr * CAST(m AS DECIMAL(10,0))
-                                 AS DECIMAL(38,9))) AS DOUBLE), 6)
-               AS dsir_logweight
-      FROM dm JOIN ratio USING (bucket)
-      GROUP BY dm.doc_id
-    ),
-    keyed AS (
-      SELECT doc_id, n_tokens, dsir_logweight,
-             ROUND(dsir_logweight
-                   - LN(-LN((((doc_id % 1000003) * 16807 + 12345)
-                             % 1000003 + 1) / 1000004.0)), 9) AS gkey
-      FROM weights
-    )
-    SELECT doc_id, n_tokens, dsir_logweight, gkey
-    FROM keyed ORDER BY gkey DESC, doc_id LIMIT 100
-    """,
-    doc=(
-        "DSIR importance RESAMPLING — the step llm_dsir_weights feeds: "
-        "draw 100 documents without replacement with probability "
-        "proportional to exp(logweight) via the Gumbel-top-k trick "
-        "(argmax_k of logweight + Gumbel(0,1) is exactly a PPSWOR "
-        "sample — the log-space twin of the A-ES reservoir key). The "
-        "Gumbel comes from a SEEDED minstd roll on doc_id (different "
-        "multiplier/offset than samp_weighted_reservoir, so the two "
-        "samples decorrelate), -ln(-ln u) rounded to 9 with the "
-        "logweight before ranking; (gkey desc, doc_id) total order -> "
-        "deterministic sample set, TakeOrderedAndProject top-k (no "
-        "global sort materialization). The pinned-sample property is "
-        "what makes an importance-resampled training mix reproducible "
-        "across retries and cluster sizes."
-    ),
-    tags=("llm", "curation", "sampling", "lm"),
-)
-def llm_dsir_resample(spark, sf_dir):
-    from steam_data_pipeline_spark.llm import lm as LM
-
-    docs = t(spark, sf_dir, "documents")
-    weights = LM.dsir_weights(docs, target=F.col("lang") == "en")
-    r = (
-        (F.col("doc_id") % F.lit(1000003)) * F.lit(16807) + F.lit(12345)
-    ) % F.lit(1000003)
-    u = (r + F.lit(1)).cast("double") / F.lit(1000004.0)
-    keyed = weights.withColumn(
-        "gkey", F.round(F.col("dsir_logweight") - F.log(-F.log(u)), 9)
-    )
-    return keyed.orderBy(F.col("gkey").desc(), F.col("doc_id")).limit(100)
-
-
-@EXT.add(
-    "join_lateral_topk",
-    oracle="""
-    SELECT n.n_name, t.c_custkey, t.c_acctbal
-    FROM nation n,
-    LATERAL (
-      SELECT c_custkey, c_acctbal FROM customer c
-      WHERE c.c_nationkey = n.n_nationkey
-      ORDER BY c_acctbal DESC, c_custkey LIMIT 3
-    ) t
-    """,
-    doc=(
-        "Correlated LATERAL subquery: top-3 customers by balance PER "
-        "NATION written as the per-row subquery a SQL user reaches "
-        "for - and Catalyst DE-CORRELATES it into the distributed "
-        "top-N plan (WindowGroupLimit partial+final around one hash "
-        "exchange + broadcast dim join; verified by plan contract), "
-        "identical physical shape to the hand-written window top-N "
-        "(win_topn_per_key). The point for the API surface: the naive "
-        "formulation is NOT executed naively - no per-outer-row "
-        "subquery execution survives optimization. Uses templated "
-        "spark.sql({df}) binding, no temp-view namespace pollution. "
-        "(c_acctbal desc, c_custkey) total order makes the pick "
-        "deterministic."
-    ),
-    tags=("join", "lateral", "sql-api"),
-)
-def join_lateral_topk(spark, sf_dir):
-    nation = t(spark, sf_dir, "nation")
-    customer = t(spark, sf_dir, "customer")
-    return spark.sql(
-        """
-        SELECT n.n_name, t.c_custkey, t.c_acctbal
-        FROM {nation} n,
-        LATERAL (
-          SELECT c_custkey, c_acctbal FROM {customer} c
-          WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey LIMIT 3
-        ) t
-        """,
-        nation=nation,
-        customer=customer,
-    )
-
-
-@EXT.add(
-    "llm_bm25_search",
-    oracle="""
-    WITH terms(term) AS (VALUES ('table'), ('spark'), ('window')),
-    toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    dl AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl FROM toks
-           WHERE len(w) > 0),
-    stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                     CAST(SUM(dl) AS BIGINT) AS total_len FROM dl),
-    tf AS (
-      SELECT u.doc_id, u.word AS term, CAST(COUNT(*) AS BIGINT) AS tf
-      FROM (SELECT doc_id, unnest(w) AS word FROM toks) u
-      JOIN terms ON terms.term = u.word
-      GROUP BY u.doc_id, u.word
-    ),
-    dft AS (SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-            FROM tf GROUP BY term),
-    contrib AS (
-      SELECT tf.doc_id,
-             CAST(ROUND(
-               ROUND(LN((CAST(n_docs AS DOUBLE) - df + 0.5)
-                        / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9)
-               * (CAST(tf AS DOUBLE)
-                  / (CAST(tf AS DOUBLE)
-                     + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE)
-                              / (CAST(total_len AS DOUBLE) / n_docs))))),
-               9) AS DECIMAL(20,9)) AS c
-      FROM tf
-      JOIN dft USING (term)
-      JOIN dl ON dl.doc_id = tf.doc_id
-      CROSS JOIN stats
-    )
-    SELECT doc_id,
-           ROUND(CAST(SUM(c) AS DOUBLE), 6) AS bm25
-    FROM contrib GROUP BY doc_id
-    ORDER BY bm25 DESC, doc_id LIMIT 20
-    """,
-    doc=(
-        "BM25 ranked keyword retrieval (Robertson-Sparck Jones, "
-        "k1=1.2, b=0.75; the +1 idf keeps scores positive a la "
-        "Lucene): top-20 documents for a 3-term query - the "
-        "lexical-retrieval sibling of the ANN family (hybrid search "
-        "pairs exactly these two). Plan: the terms list is a 3-row "
-        "broadcast into the token stream (the inverted-index probe "
-        "shape - only matching postings leave the scan); doc-length "
-        "and corpus stats are 1-row broadcasts; per-term "
-        "contributions round to 9 and sum as DECIMAL per doc (order-"
-        "invariant), final score rounds to 6 under a (score desc, "
-        "doc_id) total order into TakeOrderedAndProject. At 100 TB "
-        "the tf table IS the inverted index - persist it partitioned "
-        "by term and the probe prunes at file level."
-    ),
-    tags=("llm", "text", "retrieval"),
-)
-def llm_bm25_search(spark, sf_dir):
-    return (
-        _bm25_scores(spark, sf_dir)
-        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
-        .limit(20)
-    )
 
 
 def _bm25_scores(spark, sf_dir):
@@ -6956,10324 +413,3 @@ def _bm25_scores(spark, sf_dir):
     return contrib.groupBy("doc_id").agg(
         F.round(F.sum("c").cast("double"), 6).alias("bm25")
     )
-
-
-@EXT.add(
-    "llm_hybrid_search",
-    oracle=f"""
-    WITH terms(term) AS (VALUES ('table'), ('spark'), ('window')),
-    toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    dl AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl FROM toks
-           WHERE len(w) > 0),
-    stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                     CAST(SUM(dl) AS BIGINT) AS total_len FROM dl),
-    tf AS (
-      SELECT u.doc_id, u.word AS term, CAST(COUNT(*) AS BIGINT) AS tf
-      FROM (SELECT doc_id, unnest(w) AS word FROM toks) u
-      JOIN terms ON terms.term = u.word
-      GROUP BY u.doc_id, u.word
-    ),
-    dft AS (SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-            FROM tf GROUP BY term),
-    contrib AS (
-      SELECT tf.doc_id,
-             CAST(ROUND(
-               ROUND(LN((CAST(n_docs AS DOUBLE) - df + 0.5)
-                        / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9)
-               * (CAST(tf AS DOUBLE)
-                  / (CAST(tf AS DOUBLE)
-                     + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE)
-                              / (CAST(total_len AS DOUBLE) / n_docs))))),
-               9) AS DECIMAL(20,9)) AS c
-      FROM tf
-      JOIN dft USING (term)
-      JOIN dl ON dl.doc_id = tf.doc_id
-      CROSS JOIN stats
-    ),
-    lex AS (
-      SELECT doc_id,
-             CAST(row_number() OVER (
-               ORDER BY ROUND(CAST(SUM(c) AS DOUBLE), 6) DESC, doc_id)
-               AS BIGINT) AS r_lex
-      FROM contrib GROUP BY doc_id
-      ORDER BY ROUND(CAST(SUM(c) AS DOUBLE), 6) DESC, doc_id LIMIT 20
-    ),
-    qv AS (SELECT embedding AS v FROM embeddings
-           WHERE vec_id = 0 AND embedding IS NOT NULL AND len(embedding) > 0),
-    dense AS (
-      SELECT vec_id AS doc_id,
-             CAST(row_number() OVER (ORDER BY cosine DESC, vec_id)
-               AS BIGINT) AS r_dense
-      FROM (
-        SELECT e.vec_id,
-               {_COS_SQL.format(a="e.embedding", b="qv.v")} AS cosine
-        FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0) e CROSS JOIN qv
-      ) ORDER BY cosine DESC, vec_id LIMIT 20
-    )
-    SELECT COALESCE(lex.doc_id, dense.doc_id) AS doc_id,
-           r_lex, r_dense,
-           ROUND(COALESCE(1.0 / (60 + r_lex), 0.0)
-                 + COALESCE(1.0 / (60 + r_dense), 0.0), 9) AS rrf
-    FROM lex FULL OUTER JOIN dense ON lex.doc_id = dense.doc_id
-    ORDER BY rrf DESC, doc_id LIMIT 10
-    """,
-    doc=(
-        "HYBRID retrieval: BM25 lexical top-20 (shared scorer with "
-        "llm_bm25_search) fused with exact dense-cosine top-20 for "
-        "the doc-0 query vector via Reciprocal Rank Fusion "
-        "(Cormack et al. 2009, k=60) — the standard two-leg retrieval "
-        "stack (Lucene+ANN) as one declarative plan. RRF needs only "
-        "RANKS, which are deterministic under each leg's (score desc, "
-        "id) total order, so the fusion is exactly reproducible even "
-        "though the two legs' score scales are incomparable; the "
-        "final score adds exactly two fixed-order terms (no float "
-        "SUM aggregation), rounded to 9. Both leg top-20s are "
-        "TakeOrderedAndProject; each leg is independently "
-        "scale-shaped (BM25 = inverted-index probe, dense = the ANN "
-        "family's exact baseline, swappable for IVF/LSH at scale)."
-    ),
-    tags=("llm", "retrieval", "similarity", "flagship"),
-)
-def llm_hybrid_search(spark, sf_dir):
-    from pyspark.sql import Window
-
-    lex = (
-        _bm25_scores(spark, sf_dir)
-        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
-        .limit(20)
-        .withColumn(
-            "r_lex",
-            F.row_number()
-            .over(Window.orderBy(F.col("bm25").desc(), F.col("doc_id")))
-            .cast("long"),
-        )
-        .select("doc_id", "r_lex")
-    )
-    emb = t(spark, sf_dir, "embeddings")
-    # a NULL probe or NULL corpus vector carries no dense signal: drop
-    # both (matching simsearch.drop_null_vectors and the oracle's
-    # embedding IS NOT NULL) — otherwise every cosine is NULL and the
-    # "ranking" degrades to vec_id order, differently per engine
-    qv = emb.filter(
-        (F.col("vec_id") == 0)
-        & F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-    ).select(F.col("embedding").alias("v"))
-    dense = (
-        emb.filter(
-            F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-        )
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", S.cosine_expr("embedding", "v").alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(20)
-        .withColumn(
-            "r_dense",
-            F.row_number()
-            .over(Window.orderBy(F.col("cosine").desc(), F.col("vec_id")))
-            .cast("long"),
-        )
-        .select(F.col("vec_id").alias("doc_id"), "r_dense")
-    )
-    fused = lex.join(dense, "doc_id", "full_outer").select(
-        "doc_id",
-        "r_lex",
-        "r_dense",
-        F.round(
-            F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-            + F.coalesce(
-                F.lit(1.0) / (F.lit(60) + F.col("r_dense")), F.lit(0.0)
-            ),
-            9,
-        ).alias("rrf"),
-    )
-    return fused.orderBy(F.col("rrf").desc(), F.col("doc_id")).limit(10)
-
-
-# ---------------------------------------------------------------------------
-# Incremental materialized-view maintenance: a late/correcting batch
-# arrives, only the partitions it touches are recomputed, and the
-# refreshed view must equal a from-scratch rebuild. The reference
-# rebuilds its daily aggregates from the full table every run
-# (main.py:421-447 recreates the summary on each scrape cycle); at
-# 100 TB a full rebuild per arriving batch is the canonical
-# anti-pattern, so the Spark-first form is partition-scoped refresh.
-# ---------------------------------------------------------------------------
-
-@EXT.add(
-    "sink_mv_refresh",
-    oracle="""
-    WITH agg AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-      FROM events GROUP BY 1
-    )
-    SELECT day, n_events, n_users,
-           EXTRACT(day FROM day) IN (5, 17, 29) AS refreshed
-    FROM agg
-    """,
-    doc=(
-        "Incremental materialized-view refresh: the daily-counts MV is "
-        "built from the base load (everything except the late half of "
-        "three days' events), then a late batch arrives and ONLY the "
-        "days present in that batch are recomputed — a broadcast "
-        "left-anti join drops the stale MV rows and the recompute leg "
-        "reads the day-partitioned stored layout through a broadcast "
-        "SEMI join on the partition column, so dynamic partition "
-        "pruning limits the rebuild scan to the affected partitions "
-        "(3 of 30 here; the same 3-of-N at 100 TB — refresh cost "
-        "scales with the batch's day span, never with table size). "
-        "The oracle is a FULL recompute over base+batch: incremental "
-        "maintenance must be indistinguishable from rebuild. The "
-        "refreshed flag marks which rows came through the recompute "
-        "leg, so a vacuous no-op refresh cannot pass. Reference "
-        "parity: main.py:421-447 rebuilds its summary table on every "
-        "cycle; this is that operation made batch-incremental."
-    ),
-    tags=("sink", "store", "incremental"),
-)
-def sink_mv_refresh(spark, sf_dir):
-    part_dir = _prepare_day_partitioned(spark, sf_dir)
-    ev = t(spark, sf_dir, "events")
-    # Deterministic late-arrival scenario: for three days spread across
-    # the month, half the events (odd event_id) arrive AFTER the MV was
-    # first built.
-    is_late = F.dayofmonth("ts").isin(5, 17, 29) & (
-        F.col("event_id") % 2 == 1
-    )
-    base, batch = ev.filter(~is_late), ev.filter(is_late)
-
-    def daily(df, day_expr):
-        return df.groupBy(day_expr.alias("d")).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-
-    mv0 = daily(base, F.to_date("ts"))
-    # Affected-day set comes from the BATCH (bounded by its day span),
-    # not from any static rule — the general maintenance contract.
-    aff_days = batch.select(F.to_date("ts").alias("d")).distinct()
-    kept = mv0.join(F.broadcast(aff_days), "d", "left_anti").withColumn(
-        "refreshed", F.lit(False)
-    )
-    # Recompute leg: the stored day-partitioned table (base+batch all
-    # present on disk) joined semi against the affected days — DPP
-    # prunes the scan to those partitions.
-    stored = spark.read.parquet(part_dir)
-    recomputed = daily(
-        stored.join(
-            F.broadcast(aff_days.withColumnRenamed("d", "day")),
-            "day",
-            "left_semi",
-        ),
-        F.col("day"),
-    ).withColumn("refreshed", F.lit(True))
-    return kept.unionByName(recomputed).select(
-        F.col("d").cast("timestamp").alias("day"),
-        "n_events",
-        "n_users",
-        "refreshed",
-    )
-
-
-@EXT.add(
-    "llm_mix_interleave",
-    oracle="""
-    WITH d AS (
-      -- a NULL source has no mix domain (and NULL sorts at opposite
-      -- ends of the schedule's ORDER BY on the two engines) — excluded
-      SELECT doc_id, source,
-             -- TRY_CAST (r13 skew axis): a source name with no numeric
-             -- suffix ('web') must schedule as the default class, not
-             -- crash the cast; NULL cls falls to each CASE's ELSE arm
-             TRY_CAST(substr(source, 4, 10) AS INT) % 3 AS cls,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-      FROM documents WHERE source IS NOT NULL
-    ),
-    vt AS (
-      SELECT doc_id, source,
-             rn * (CASE cls WHEN 0 THEN 6 WHEN 1 THEN 3 ELSE 2 END) AS vtime
-      FROM d
-    ),
-    head AS (SELECT * FROM vt ORDER BY vtime, source, doc_id LIMIT 200)
-    SELECT CAST(ROW_NUMBER() OVER (ORDER BY vtime, source, doc_id) AS BIGINT)
-             AS pos,
-           doc_id, source, CAST(vtime AS BIGINT) AS vtime,
-           TRUE AS mix_ok
-    FROM head
-    """,
-    doc=(
-        "Deterministic domain-mix interleaving by stride scheduling — "
-        "the data-ORDERING operator a training pipeline needs after "
-        "quotas are set: source s with weight w emits its i-th doc at "
-        "virtual time i/w, and reading the schedule in vtime order "
-        "yields every prefix mixed proportionally to the weights "
-        "(measured max deviation 1.23 docs at k=200; checked in-query "
-        "per row with tolerance 3 against pos*w/sum(w) — the oracle "
-        "pins mix_ok TRUE, so a broken interleave hash-mismatches, "
-        "never silently passes). Virtual times are exact BIGINTs "
-        "(rank * LCM/w, LCM(1,2,3)=6) so cross-engine float division "
-        "never enters the sort key. Scale: per-source ranks are a "
-        "hash-partitioned window; the driver-checked schedule head is "
-        "a k-bounded TakeOrderedAndProject, and the FULL schedule at "
-        "100 TB is the same sort key handed to repartitionByRange + "
-        "sortWithinPartitions (the llm_shuffle_shard export shape) — "
-        "no global single-partition window over the corpus."
-    ),
-    tags=("llm", "curation", "invariant"),
-)
-def llm_mix_interleave(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents").filter(F.col("source").isNotNull())
-    # try_cast (r13 skew axis): suffix-less source names ('web') take
-    # the default class via the when-chains' otherwise, never a crash
-    cls = F.substring("source", 4, 10).try_cast("int") % 3
-    stride = F.when(cls == 0, 6).when(cls == 1, 3).otherwise(2)
-    rn = F.row_number().over(Window.partitionBy("source").orderBy("doc_id"))
-    sched = docs.select(
-        "doc_id", "source", (rn * stride).cast("long").alias("vtime")
-    )
-    head = sched.orderBy("vtime", "source", "doc_id").limit(200)
-    # Everything below operates on the k-bounded head: the pos window
-    # is single-partition by construction but over <= k rows.
-    weight = (F.when(cls == 0, 1).when(cls == 1, 2).otherwise(3)).cast(
-        "double"
-    )
-    # total schedule weight computed from the LIVE source domain, not
-    # a fixture constant (r13 skew axis: a single-source collapse has
-    # W = that source's own weight and the mix check must still hold;
-    # on the pristine fixtures this sums to the old hard-coded 39)
-    wsum = (
-        docs.select("source")
-        .distinct()
-        .agg(F.sum(weight).alias("w_total"))
-    )
-    pos_w = Window.orderBy("vtime", "source", "doc_id")
-    run_w = Window.partitionBy("source").orderBy("pos")
-    return (
-        head.withColumn("pos", F.row_number().over(pos_w).cast("long"))
-        .withColumn("running", F.count(F.lit(1)).over(run_w))
-        .crossJoin(F.broadcast(wsum))
-        .select(
-            "pos",
-            "doc_id",
-            "source",
-            "vtime",
-            (
-                F.abs(
-                    F.col("running")
-                    - F.col("pos") * weight / F.col("w_total")
-                )
-                <= F.lit(3.0)
-            ).alias("mix_ok"),
-        )
-    )
-
-
-@EXT.add(
-    "agg_decay_halflife",
-    oracle="""
-    WITH mx AS (SELECT max(date_trunc('day', ts)) AS ref FROM events),
-    ev AS (
-      SELECT event_type,
-             date_diff('day', date_trunc('day', ts), ref) AS age,
-             TRY_CAST(ROUND(value, 6) AS DECIMAL(16,6)) AS val
-      FROM events, mx
-    ),
-    w AS (
-      SELECT event_type, val,
-             CAST(ROUND(EXP(-age * LN(2) / 7.0), 9) AS DECIMAL(10,9)) AS wt
-      FROM ev
-    )
-    SELECT event_type,
-           ROUND(CAST(SUM(wt * val) AS DOUBLE), 6) AS decay_score,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM w GROUP BY event_type
-    """,
-    doc=(
-        "Half-life time-decay scoring (7-day half-life): the trending "
-        "metric behind every 'hot right now' ranking — recent activity "
-        "dominates, old activity fades exponentially, and the score is "
-        "a plain one-pass aggregate (no per-day recursion). Numeric "
-        "discipline for cross-engine exactness: the transcendental is "
-        "rounded to 9 decimals and pinned to DECIMAL(10,9) BEFORE any "
-        "arithmetic, values quantized to DECIMAL(16,6), the sum runs "
-        "in exact decimal and only the FINAL result is cast to double "
-        "and rounded — partitioning-invariant (no float summation "
-        "order dependence), so the same number comes out at any "
-        "shuffle width. Scale: map-side partial aggregation into 5 "
-        "groups; the 1-row global max broadcasts; ref-day join is a "
-        "BroadcastNestedLoopJoin over a single row."
-    ),
-    tags=("agg", "decay"),
-)
-def agg_decay_halflife(spark, sf_dir):
-    ev = t(spark, sf_dir, "events")
-    ref = ev.agg(F.max(F.date_trunc("day", "ts")).alias("ref"))
-    e = ev.crossJoin(F.broadcast(ref)).select(
-        "event_type",
-        F.datediff(F.to_date("ref"), F.to_date("ts")).alias("age"),
-        F.round("value", 6).try_cast("decimal(16,6)").alias("val"),
-    )
-    w = e.select(
-        "event_type",
-        "val",
-        F.round(
-            F.exp(-F.col("age") * F.log(F.lit(2.0)) / F.lit(7.0)),
-            9,
-        ).cast("decimal(10,9)").alias("wt"),
-    )
-    return w.groupBy("event_type").agg(
-        F.round(F.sum(F.col("wt") * F.col("val")).cast("double"), 6).alias(
-            "decay_score"
-        ),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-@EXT.add(
-    "stream_mv_refresh",
-    oracle="""
-    SELECT date_trunc('day', ts) AS day,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM events
-    -- operational time domain (r13: the replay fixture is a pandas
-    -- materialization; the stream sees only in-domain rows)
-    WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-    GROUP BY 1
-    """,
-    doc=(
-        "Streaming sibling of sink_mv_refresh: the daily-counts MV is "
-        "MAINTAINED per micro-batch instead of rebuilt per run. Each "
-        "foreachBatch (3 time-sliced replay batches, maxFilesPerTrigger"
-        "=1) does the full maintenance protocol: (1) idempotent base "
-        "append via append_batch — a replayed batch_id is a no-op, so "
-        "checkpoint-replay cannot double-count; (2) the batch's "
-        "affected-DAY set (bounded by its time span, never table "
-        "size) broadcast-semi-joins the accumulated base to recompute "
-        "just those days — a day straddling a batch boundary is simply "
-        "recomputed again by the next batch, converging by "
-        "construction; (3) keyed MERGE into the MV store replaces the "
-        "stale day rows. Oracle = one-shot daily aggregate over all "
-        "events: batch-incremental maintenance must land on the exact "
-        "same table. At 100 TB the base store is the day-partitioned "
-        "layout sink_mv_refresh DPP-prunes; this query pins the "
-        "protocol (idempotence, affected-set recompute, keyed merge) "
-        "on a real checkpointed stream."
-    ),
-    tags=("streaming", "merge", "incremental"),
-)
-def stream_mv_refresh(spark, sf_dir):
-    import tempfile
-
-    from steam_data_pipeline_spark.operators.upsert import ParquetTableStore
-
-    fdir = _prepare_islands_stream_fixture(spark, sf_dir)
-    ev = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(fdir)
-    )
-    root = tempfile.mkdtemp(prefix="sdp_mvr_")
-    store = ParquetTableStore(spark, root)
-
-    def apply_batch(batch_df, batch_id):
-        # The batch-id marker makes the base append exactly-once; the
-        # REFRESH must still run on a replayed batch — a crash between
-        # the append commit and the MV merge would otherwise leave the
-        # MV stale forever (the refresh is a deterministic recompute +
-        # keyed replace, so re-running it is idempotent by
-        # construction; tests/test_stateful_streaming.py kills the
-        # process inside exactly that window to pin this).
-        store.append_batch("base", batch_df, batch_id)
-        aff = batch_df.select(F.to_date("ts").alias("day")).distinct()
-        base = store.read("base").withColumn("day", F.to_date("ts"))
-        recomputed = (
-            base.join(F.broadcast(aff), "day", "left_semi")
-            .groupBy("day")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.countDistinct("user_id").alias("n_users"),
-            )
-        )
-        store.upsert("mv_daily", recomputed, key="day")
-
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    return store.read("mv_daily").select(
-        F.col("day").cast("timestamp").alias("day"), "n_events", "n_users"
-    )
-
-
-@EXT.add(
-    "win_ewma_recursive",
-    oracle="""
-    WITH RECURSIVE daily AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-      FROM daily
-    ),
-    r AS (
-      SELECT event_type, day, n, i, CAST(n AS DECIMAL(20,9)) AS ewma
-      FROM idx WHERE i = 1
-      UNION ALL
-      SELECT idx.event_type, idx.day, idx.n, idx.i,
-             CAST(ROUND(CAST(0.25 AS DECIMAL(3,2)) * idx.n
-                        + CAST(0.75 AS DECIMAL(3,2)) * r.ewma, 9)
-                  AS DECIMAL(20,9))
-      FROM idx JOIN r
-        ON idx.event_type IS NOT DISTINCT FROM r.event_type
-       AND idx.i = r.i + 1
-    )
-    SELECT event_type, day, n, CAST(ewma AS DOUBLE) AS ewma FROM r
-    """,
-    doc=(
-        "Per-key exponential smoothing (EWMA, alpha=0.25) — the "
-        "RECURSIVE window family no built-in window frame expresses "
-        "(each output depends on the previous OUTPUT, not a previous "
-        "input range). Spark form: hash-partitioned daily pre-agg, "
-        "then applyInPandas per key walking days in order with O(1) "
-        "state — same shape as the stateful islands op, keys scale "
-        "out, days per key stay bounded. Numeric contract: the whole "
-        "recursion runs in EXACT decimal (alpha as DECIMAL(3,2), "
-        "per-step ROUND half-up to 9 frac digits bounds scale growth "
-        "exactly where the oracle's DECIMAL(20,9) does), and only the "
-        "final value is converted to double — a single correctly-"
-        "rounded conversion both engines share, so 30 chained steps "
-        "hash-match bit-exactly. Oracle is a true WITH RECURSIVE "
-        "rebuild of the same recurrence."
-    ),
-    tags=("win", "stateful", "udf"),
-)
-def win_ewma_recursive(spark, sf_dir):
-    import pandas as pd
-
-    daily = (
-        # operational time domain: this day series feeds a pandas fold
-        # (r13 ts-extremes contract, plans/base.py)
-        ops_time_domain(t(spark, sf_dir, "events"))
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        alpha, beta = Decimal("0.25"), Decimal("0.75")
-        quantum = Decimal("0.000000001")
-        out, prev = [], None
-        for nval in pdf["n"]:
-            x = Decimal(int(nval))
-            prev = (
-                x
-                if prev is None
-                else (alpha * x + beta * prev).quantize(
-                    quantum, rounding=ROUND_HALF_UP
-                )
-            )
-            out.append(float(prev))
-        pdf["ewma"] = out
-        return pdf[["event_type", "day", "n", "ewma"]]
-
-    return daily.groupBy("event_type").applyInPandas(
-        smooth, "event_type string, day timestamp, n long, ewma double"
-    )
-
-
-@EXT.add(
-    "qa_k_anonymity",
-    oracle="""
-    WITH g AS (
-      SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n
-      FROM customer GROUP BY 1, 2
-    )
-    SELECT c_nationkey, c_mktsegment, n
-    FROM g WHERE n < 8
-    """,
-    doc=(
-        "k-anonymity audit over the quasi-identifier pair (nation, "
-        "market segment): every cohort smaller than k=8 is a "
-        "re-identification risk — rows in it must be suppressed or "
-        "generalized before the table can be released, the standard "
-        "privacy gate next to llm_pii_scrub's masking pass. One "
-        "partial-agg shuffle on the quasi-identifier key (125 cohorts "
-        "regardless of row count), then a post-agg filter — the same "
-        "plan at 100 TB. 11 risky cohorts at sf0.01, so the gate is "
-        "non-vacuous."
-    ),
-    tags=("qa", "privacy"),
-)
-def qa_k_anonymity(spark, sf_dir):
-    g = (
-        t(spark, sf_dir, "customer")
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return g.filter(F.col("n") < 8)
-
-
-@EXT.add(
-    "win_resample_ffill",
-    oracle="""
-    WITH daily AS (
-      -- operational time domain (r12 ts-extremes contract): a dense
-      -- per-key daily fill across one corrupt 1905/2260 timestamp is
-      -- a 130k-row-per-key spine — out-of-window rows are a
-      -- data-quality finding, not a resample observation
-      SELECT user_id, date_trunc('day', ts) AS day,
-             SUM(TRY_CAST(value AS DECIMAL(18,2))) AS v
-      FROM events
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-    ),
-    bounds AS (
-      SELECT user_id, MIN(day) AS d0, MAX(day) AS d1 FROM daily GROUP BY 1
-    ),
-    spine AS (
-      SELECT user_id, unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS day
-      FROM bounds
-    ),
-    j AS (
-      SELECT s.user_id, s.day, d.v
-      FROM spine s LEFT JOIN daily d
-        ON d.user_id = s.user_id AND d.day = s.day
-    )
-    SELECT user_id, day,
-           CAST(v AS DOUBLE) AS v,
-           CAST(last_value(v IGNORE NULLS) OVER (
-                  PARTITION BY user_id ORDER BY day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DOUBLE) AS v_filled,
-           v IS NULL AS was_gap
-    FROM j
-    """,
-    doc=(
-        "Time-series resampling: per-key daily spine (min..max day, "
-        "sequence+explode) with forward fill over gaps — the gap-"
-        "filling every downstream window/forecast op assumes away. "
-        "Spark shape: exact-decimal daily agg, then ONE groupBy(key) "
-        "collecting the (day, v) map + bounds, spine exploded from "
-        "sequence(), per-day lookup via map access, forward fill via "
-        "last(ignorenulls) over rows-unbounded — the window runs on "
-        "the groupBy's own hash partitioning (no extra exchange; "
-        "per-key spine length is bounded by the calendar, not rows). "
-        "v is summed as DECIMAL so the fill is partitioning-"
-        "independent; one final CAST to double per column."
-    ),
-    tags=("win", "timeseries"),
-)
-def win_resample_ffill(spark, sf_dir):
-    from pyspark.sql import Window
-
-    daily = (
-        t(spark, sf_dir, "events")
-        # operational time domain (r12 ts-extremes contract): dense
-        # fill across a corrupt far-out timestamp is an unbounded
-        # spine; out-of-window rows are excluded on both legs
-        .filter(
-            (F.col("ts") >= F.lit("1970-01-01").cast("timestamp"))
-            & (F.col("ts") < F.lit("2100-01-01").cast("timestamp"))
-        )
-        .groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.sum(F.col("value").try_cast("decimal(18,2)")).alias("v"))
-    )
-    # map_from_entries over structs, NOT map_from_arrays over two
-    # collect_lists: collect_list SKIPS NULLs, so an all-NULL day (v
-    # NULL) shortens the value array and MapData crashes on the length
-    # mismatch (round-11 adversarial NULL sweep); a struct entry is
-    # non-null even when its v field is NULL, and a NULL map value is
-    # exactly the gap the ffill must skip
-    per_user = daily.groupBy("user_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("day"), F.col("v")))
-        ).alias("vm"),
-        F.min("day").alias("d0"),
-        F.max("day").alias("d1"),
-    )
-    spine = per_user.select(
-        "user_id",
-        F.explode(
-            F.sequence("d0", "d1", F.expr("interval 1 day"))
-        ).alias("day"),
-        "vm",
-    ).select("user_id", "day", F.col("vm")[F.col("day")].alias("vdec"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return spine.select(
-        "user_id",
-        "day",
-        F.col("vdec").cast("double").alias("v"),
-        F.last("vdec", ignorenulls=True).over(w).cast("double").alias("v_filled"),
-        F.col("vdec").isNull().alias("was_gap"),
-    )
-
-
-@EXT.add(
-    "win_cusum_drift",
-    oracle="""
-    WITH RECURSIVE daily AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT *,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i,
-             FIRST_VALUE(n) OVER (PARTITION BY event_type ORDER BY day) AS n1
-      FROM daily
-    ),
-    r AS (
-      SELECT event_type, day, n, i, n1, CAST(0 AS BIGINT) AS cusum
-      FROM idx WHERE i = 1
-      UNION ALL
-      SELECT idx.event_type, idx.day, idx.n, idx.i, idx.n1,
-             GREATEST(CAST(0 AS BIGINT), r.cusum + idx.n - idx.n1 - 2)
-      FROM idx JOIN r
-        ON idx.event_type IS NOT DISTINCT FROM r.event_type
-       AND idx.i = r.i + 1
-    )
-    SELECT event_type, day, n, cusum, cusum > 10 AS alarm FROM r
-    """,
-    doc=(
-        "One-sided CUSUM change detection on per-key daily counts "
-        "(Page 1954): s_i = max(0, s_{i-1} + n_i - baseline - k) with "
-        "the key's first-day count as baseline, slack k=2, alarm at "
-        "h=10 — the sequential drift detector qa_anomaly_days' "
-        "pointwise MAD rule can't express (a slow upward drift never "
-        "trips a pointwise threshold but accumulates here). Recursive "
-        "window family (output depends on previous OUTPUT): same "
-        "applyInPandas-per-key shape as win_ewma_recursive, but the "
-        "entire recursion is INTEGER arithmetic, so no rounding "
-        "contract is needed at all. Oracle is a WITH RECURSIVE rebuild."
-    ),
-    tags=("win", "stateful", "qa"),
-)
-def win_cusum_drift(spark, sf_dir):
-    import pandas as pd
-
-    daily = (
-        # operational time domain: this day series feeds a pandas fold
-        # (r13 ts-extremes contract, plans/base.py)
-        ops_time_domain(t(spark, sf_dir, "events"))
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    def cusum(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        ns = [int(x) for x in pdf["n"]]
-        base = ns[0]
-        s, out = 0, []
-        for i, n in enumerate(ns):
-            if i > 0:
-                s = max(0, s + n - base - 2)
-            out.append(s)
-        pdf["cusum"] = out
-        pdf["alarm"] = [x > 10 for x in out]
-        return pdf[["event_type", "day", "n", "cusum", "alarm"]]
-
-    return daily.groupBy("event_type").applyInPandas(
-        cusum, "event_type string, day timestamp, n long, cusum long, alarm boolean"
-    )
-
-
-@EXT.add(
-    "qa_l_diversity",
-    oracle="""
-    WITH g AS (
-      SELECT c_nationkey, c_mktsegment,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(COUNT(DISTINCT CAST(FLOOR(c_acctbal / 4000) AS BIGINT))
-                  AS BIGINT) AS n_sensitive
-      FROM customer GROUP BY 1, 2
-    )
-    SELECT c_nationkey, c_mktsegment, n, n_sensitive
-    FROM g WHERE n_sensitive < 4
-    """,
-    doc=(
-        "l-diversity audit (Machanavajjhala et al. 2007) — the "
-        "companion gate to qa_k_anonymity: a cohort can be large "
-        "enough to pass k-anonymity yet still leak if every member "
-        "shares the same sensitive value. Per quasi-identifier cohort "
-        "(nation, segment), count DISTINCT sensitive bands (account-"
-        "balance bands of width 4000); cohorts with < 4 distinct "
-        "bands fail (64 at sf0.01, so the gate is non-vacuous at the "
-        "driver's correctness scale). Same single partial-agg shuffle as k-anonymity "
-        "(distinct-count partials merge map-side); cohort count is "
-        "fixed, so the plan is scale-free."
-    ),
-    tags=("qa", "privacy"),
-)
-def qa_l_diversity(spark, sf_dir):
-    g = (
-        t(spark, sf_dir, "customer")
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct(
-                F.floor(F.col("c_acctbal") / 4000).cast("long")
-            ).alias("n_sensitive"),
-        )
-    )
-    return g.filter(F.col("n_sensitive") < 4)
-
-
-@EXT.add(
-    "qa_referential_integrity",
-    oracle="""
-    SELECT 'customer' AS child_table, 'c_nationkey' AS fk_col,
-           'nation' AS parent_table,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM customer) AS n_rows,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM customer ch
-             WHERE ch.c_nationkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM nation p WHERE p.n_nationkey = ch.c_nationkey)
-           ) AS n_orphans
-    UNION ALL
-    SELECT 'lineitem', 'l_orderkey', 'orders',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem ch
-             WHERE ch.l_orderkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM orders p WHERE p.o_orderkey = ch.l_orderkey))
-    UNION ALL
-    SELECT 'lineitem', 'l_partkey', 'part',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem ch
-             WHERE ch.l_partkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM part p WHERE p.p_partkey = ch.l_partkey))
-    UNION ALL
-    SELECT 'lineitem', 'l_suppkey', 'supplier',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem ch
-             WHERE ch.l_suppkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM supplier p WHERE p.s_suppkey = ch.l_suppkey))
-    UNION ALL
-    SELECT 'nation', 'n_regionkey', 'region',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM nation),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM nation ch
-             WHERE ch.n_regionkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM region p WHERE p.r_regionkey = ch.n_regionkey))
-    UNION ALL
-    SELECT 'orders', 'o_custkey', 'customer',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders ch
-             WHERE ch.o_custkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM customer p WHERE p.c_custkey = ch.o_custkey))
-    UNION ALL
-    SELECT 'supplier', 's_nationkey', 'nation',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier ch
-             WHERE ch.s_nationkey IS NOT NULL AND NOT EXISTS
-               (SELECT 1 FROM nation p WHERE p.n_nationkey = ch.s_nationkey))
-    """,
-    doc=(
-        "Referential-integrity audit across the whole foreign-key "
-        "graph (7 edges over the TPC-H-shaped tables): per edge, total "
-        "child rows and ORPHANS — non-null FK values with no parent "
-        "(the dbt 'relationships' test, run as one query). Each edge "
-        "is a left-anti join on the key; dimension parents broadcast "
-        "(nation/region/customer/supplier), fact-fact edges "
-        "(lineitem→orders/part) shuffle once on the key with AQE "
-        "choosing the strategy. The per-edge outputs are 1-row "
-        "aggregates unioned driver-free."
-    ),
-    tags=("qa", "join"),
-)
-def qa_referential_integrity(spark, sf_dir):
-    edges = [
-        ("customer", "c_nationkey", "nation", "n_nationkey"),
-        ("lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("nation", "n_regionkey", "region", "r_regionkey"),
-        ("orders", "o_custkey", "customer", "c_custkey"),
-        ("supplier", "s_nationkey", "nation", "n_nationkey"),
-    ]
-    outs = []
-    for child, fk, parent, pk in edges:
-        ch = t(spark, sf_dir, child)
-        pa = t(spark, sf_dir, parent).select(F.col(pk).alias(fk)).distinct()
-        n_rows = ch.agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-        orphans = (
-            ch.filter(F.col(fk).isNotNull())
-            .join(F.broadcast(pa), on=fk, how="left_anti")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orphans"))
-        )
-        outs.append(
-            n_rows.crossJoin(orphans).select(
-                F.lit(child).alias("child_table"),
-                F.lit(fk).alias("fk_col"),
-                F.lit(parent).alias("parent_table"),
-                "n_rows",
-                "n_orphans",
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-@EXT.add(
-    "sink_cdc_apply",
-    oracle="""
-    WITH feed AS (
-      SELECT user_id, event_id AS seq,
-             CASE event_type WHEN 'error' THEN 'D'
-                  WHEN 'signup' THEN 'I' ELSE 'U' END AS op,
-             value, event_type
-      FROM events
-    ),
-    latest AS (
-      SELECT user_id, seq, op, value, event_type,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY seq DESC) AS rn
-      FROM feed
-    )
-    SELECT user_id, value AS last_value, event_type AS last_type
-    FROM latest WHERE rn = 1 AND op <> 'D'
-    """,
-    doc=(
-        "Ordered CDC feed applied to a keyed table — inserts/updates "
-        "plus DELETE tombstones (operators/upsert.py apply_cdc, the "
-        "delete-aware superset of the reference upsert at "
-        "main.py:451-457 and the consumer half of sink_cdc_diff). The "
-        "change feed is derived from events (op from event_type, "
-        "'error' = tombstone, seq = event_id) and applied as THREE "
-        "sequential batches split on seq ranges; the oracle applies "
-        "the whole feed at once — equality proves the batch fold is "
-        "associative (exactly the replay-from-checkpoint guarantee a "
-        "streaming CDC consumer needs). Per batch: one window on the "
-        "small change set + one key-partitioned anti join."
-    ),
-    tags=("sink", "cdc", "upsert"),
-)
-def sink_cdc_apply(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.upsert import apply_cdc
-
-    feed = t(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("event_id").alias("seq"),
-        F.when(F.col("event_type") == "error", F.lit("D"))
-        .when(F.col("event_type") == "signup", F.lit("I"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.col("value").alias("last_value"),
-        F.col("event_type").alias("last_type"),
-    )
-    hi = feed.agg(F.max("seq")).first()[0]
-    cut1, cut2 = hi // 3, 2 * hi // 3
-    state = None
-    for lo, up in ((None, cut1), (cut1, cut2), (cut2, None)):
-        batch = feed
-        if lo is not None:
-            batch = batch.filter(F.col("seq") > lo)
-        if up is not None:
-            batch = batch.filter(F.col("seq") <= up)
-        state = apply_cdc(state, batch, "user_id", "seq")
-        # bound lineage across the fold (3 batches here, unbounded in
-        # production where each batch would come off a checkpoint)
-        state = state.localCheckpoint(eager=False)
-    return state
-
-
-@EXT.add(
-    "win_holt_linear",
-    oracle="""
-    WITH RECURSIVE daily AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-      FROM daily
-    ),
-    r AS (
-      SELECT event_type, day, n, i,
-             CAST(n AS DECIMAL(20,9)) AS lvl,
-             CAST(0 AS DECIMAL(20,9)) AS trd
-      FROM idx WHERE i = 1
-      UNION ALL
-      SELECT idx.event_type, idx.day, idx.n, idx.i,
-             CAST(ROUND(CAST(0.5 AS DECIMAL(3,2)) * idx.n
-                        + CAST(0.5 AS DECIMAL(3,2)) * (r.lvl + r.trd), 9)
-                  AS DECIMAL(20,9)),
-             CAST(ROUND(CAST(0.25 AS DECIMAL(3,2))
-                          * (CAST(ROUND(CAST(0.5 AS DECIMAL(3,2)) * idx.n
-                                 + CAST(0.5 AS DECIMAL(3,2)) * (r.lvl + r.trd), 9)
-                             AS DECIMAL(20,9)) - r.lvl)
-                        + CAST(0.75 AS DECIMAL(3,2)) * r.trd, 9)
-                  AS DECIMAL(20,9))
-      FROM idx JOIN r
-        ON idx.event_type IS NOT DISTINCT FROM r.event_type
-       AND idx.i = r.i + 1
-    )
-    SELECT event_type, day, n,
-           CAST(lvl AS DOUBLE) AS level,
-           CAST(trd AS DOUBLE) AS trend,
-           CAST(lvl + trd AS DOUBLE) AS fc1
-    FROM r
-    """,
-    doc=(
-        "Holt's linear (double) exponential smoothing per key — the "
-        "TWO-state recursive window (level + trend, each step depends "
-        "on both previous OUTPUTS): l_t = α·x_t + (1−α)(l_{t−1} + "
-        "b_{t−1}), b_t = β(l_t − l_{t−1}) + (1−β)b_{t−1}, α=0.5 "
-        "β=0.25, 1-step forecast l+b. Extends win_ewma_recursive's "
-        "numeric contract to a state VECTOR: both components quantize "
-        "half-up to 9 frac digits each step in exact decimal, so the "
-        "30-step chained recursion hash-matches the WITH RECURSIVE "
-        "oracle bit-exactly; the only doubles are the three final "
-        "casts. Same applyInPandas shape: keys scale out, per-key "
-        "days bounded by the calendar."
-    ),
-    tags=("win", "stateful", "forecast"),
-)
-def win_holt_linear(spark, sf_dir):
-    import pandas as pd
-
-    daily = (
-        # operational time domain: this day series feeds a pandas fold
-        # (r13 ts-extremes contract, plans/base.py)
-        ops_time_domain(t(spark, sf_dir, "events"))
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    def holt(pdf: pd.DataFrame) -> pd.DataFrame:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        a, one_a = Decimal("0.5"), Decimal("0.5")
-        b, one_b = Decimal("0.25"), Decimal("0.75")
-        quantum = Decimal("0.000000001")
-        lvls, trds, fc1s = [], [], []
-        lvl = trd = None
-        for nval in pdf["n"]:
-            x = Decimal(int(nval))
-            if lvl is None:
-                lvl, trd = x, Decimal(0)
-            else:
-                new_lvl = (a * x + one_a * (lvl + trd)).quantize(
-                    quantum, rounding=ROUND_HALF_UP
-                )
-                trd = (b * (new_lvl - lvl) + one_b * trd).quantize(
-                    quantum, rounding=ROUND_HALF_UP
-                )
-                lvl = new_lvl
-            lvls.append(float(lvl))
-            trds.append(float(trd))
-            fc1s.append(float(lvl + trd))
-        pdf["level"], pdf["trend"], pdf["fc1"] = lvls, trds, fc1s
-        return pdf[["event_type", "day", "n", "level", "trend", "fc1"]]
-
-    return daily.groupBy("event_type").applyInPandas(
-        holt,
-        "event_type string, day timestamp, n long, "
-        "level double, trend double, fc1 double",
-    )
-
-
-@EXT.add(
-    "agg_quantile_histogram",
-    oracle="""
-    WITH b AS (
-      -- finite sketch domain (r12 extremes contract): a bin index is
-      -- a BIGINT, so |value| must stay under 4.5e18*5; wilder values
-      -- are a data-quality finding, not a quantile observation
-      SELECT CAST(FLOOR(value / 5.0) AS BIGINT) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM events WHERE value IS NOT NULL AND ABS(value) < 4.5e18
-      GROUP BY 1
-    ),
-    cum AS (
-      SELECT bin, c,
-             SUM(c) OVER (ORDER BY bin
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
-      FROM b
-    ),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM events
-            WHERE value IS NOT NULL AND ABS(value) < 4.5e18),
-    pcts AS (SELECT CAST(g AS BIGINT) AS pct
-             FROM (VALUES (50), (90), (99)) v(g))
-    SELECT p.pct, t.n,
-           (t.n * p.pct + 99) // 100 AS k,
-           MIN(cum.bin) AS est_bin,
-           CAST((MIN(cum.bin) + 1) * 5 AS DOUBLE) AS est
-    FROM pcts p
-    CROSS JOIN tot t
-    JOIN cum ON cum.cm >= (t.n * p.pct + 99) // 100
-    GROUP BY p.pct, t.n
-    """,
-    doc=(
-        "Mergeable quantile sketch as a fixed-width histogram (w=5 "
-        "over the value domain): per-partition bin counts are the "
-        "partials (map-side combined — the shuffle carries ≤100 tiny "
-        "rows per partition, never data), merge = SUM per bin, "
-        "estimate(p) = upper edge of the first bin whose cumulative "
-        "count reaches ⌈p·n⌉ — deterministic with a PROVEN error "
-        "bound (±w), unlike percentile_approx's opaque GK sketch "
-        "(agg_percentiles_approx), and mergeable across days/shards "
-        "like the HLL/count-min family. All arithmetic integer "
-        "(⌈p·n/100⌉ as (n·pct+99) div 100); the cumulative window "
-        "runs over ≤100 bins — a deliberate SinglePartition on sketch "
-        "cells, not data."
-    ),
-    tags=("agg", "sketch"),
-)
-def agg_quantile_histogram(spark, sf_dir):
-    from pyspark.sql import Window
-
-    # NULL values must be excluded BEFORE binning (round-10 module
-    # review): a NULL bin's position in the cumulative window differs
-    # between engines (Spark sorts NULLS FIRST ascending, DuckDB NULLS
-    # LAST), so on real data with NULLs the quantile estimate would
-    # silently diverge — the fixture has none, which is exactly why
-    # the differential harness could never catch it.
-    ev = t(spark, sf_dir, "events").filter(
-        # finite sketch domain, mirrored in the oracle (r12 contract)
-        F.col("value").isNotNull() & (F.abs("value") < F.lit(4.5e18))
-    )
-    hist = (
-        ev.select(F.floor(F.col("value") / 5.0).cast("long").alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    cum = hist.withColumn(
-        "cm",
-        F.sum("c").over(
-            Window.orderBy("bin").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ),
-    )
-    tot = ev.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    pcts = spark.createDataFrame([(50,), (90,), (99,)], "pct long")
-    k = F.expr("(n * pct + 99) div 100")
-    return (
-        pcts.crossJoin(F.broadcast(tot))
-        .crossJoin(cum)
-        .filter(F.col("cm") >= k)
-        .groupBy("pct", "n")
-        .agg(F.min("bin").alias("est_bin"))
-        .select(
-            "pct",
-            "n",
-            k.alias("k"),
-            "est_bin",
-            ((F.col("est_bin") + 1) * 5).cast("double").alias("est"),
-        )
-    )
-
-
-@EXT.add(
-    "qa_seasonal_residual_anomaly",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    dowd AS (
-      SELECT *,
-             date_diff('day', TIMESTAMP '2024-01-01', day) % 7 AS dow
-      FROM daily
-    ),
-    season AS (
-      SELECT event_type, dow,
-             CAST(COUNT(*) AS BIGINT) AS g,
-             CAST(SUM(n) AS BIGINT) AS sum_n
-      FROM dowd GROUP BY 1, 2
-    ),
-    resid AS (
-      SELECT d.event_type, d.day, d.n, d.dow,
-             d.n * s.g - s.sum_n AS r, s.g
-      FROM dowd d JOIN season s
-        ON s.event_type = d.event_type AND s.dow = d.dow
-    ),
-    spread AS (
-      SELECT event_type, dow, CAST(SUM(ABS(r)) AS BIGINT) AS sum_abs
-      FROM resid GROUP BY 1, 2
-    )
-    SELECT r.event_type, r.day, r.n, r.dow, r.r,
-           ABS(r.r) * r.g > 2 * sp.sum_abs AS flag
-    FROM resid r JOIN spread sp
-      ON sp.event_type = r.event_type AND sp.dow = r.dow
-    """,
-    doc=(
-        "Seasonality-aware anomaly flags: remove the weekly cycle "
-        "(per (key, day-of-week) mean) and flag days whose residual "
-        "exceeds 2x the cohort's mean absolute residual (4 flagged days at every fixture scale) — the drift "
-        "detector qa_anomaly_days' pointwise MAD rule misfires on "
-        "weekly-periodic series (every weekend looks anomalous); "
-        "deseasonalizing first is the STL-shaped fix. ENTIRELY "
-        "integer arithmetic: residuals are scaled by the cohort size "
-        "(r = n·g − Σn) and the threshold cross-multiplied "
-        "(|r|·g > 2·Σ|r|), so no division or rounding contract "
-        "exists at all. Day-of-week from an epoch-anchored datediff "
-        "mod 7 (engine-independent, unlike dayofweek()). Two "
-        "groupBys over key+dow cohorts (70 cells), one fact-side "
-        "broadcast join each — scale-free report."
-    ),
-    tags=("qa", "anomaly", "timeseries"),
-)
-def qa_seasonal_residual_anomaly(spark, sf_dir):
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    dowd = daily.withColumn(
-        "dow",
-        F.datediff(F.col("day"), F.lit("2024-01-01").cast("timestamp")) % 7,
-    )
-    season = dowd.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).alias("g"), F.sum("n").alias("sum_n")
-    )
-    resid = dowd.join(F.broadcast(season), on=["event_type", "dow"]).select(
-        "event_type",
-        "day",
-        "n",
-        "dow",
-        (F.col("n") * F.col("g") - F.col("sum_n")).alias("r"),
-        "g",
-    )
-    spread = resid.groupBy("event_type", "dow").agg(
-        F.sum(F.abs("r")).alias("sum_abs")
-    )
-    return resid.join(F.broadcast(spread), on=["event_type", "dow"]).select(
-        "event_type",
-        "day",
-        F.col("n").cast("long").alias("n"),
-        F.col("dow").cast("long").alias("dow"),
-        F.col("r").cast("long").alias("r"),
-        (F.abs("r") * F.col("g") > 2 * F.col("sum_abs")).alias("flag"),
-    )
-
-
-@EXT.add(
-    "join_record_linkage",
-    oracle="""
-    WITH dirty AS (
-      SELECT c_custkey + 1000000 AS k, lower(c_name) || '.' AS name,
-             c_nationkey AS nat, c_acctbal + 50 AS bal, c_mktsegment AS seg
-      FROM customer WHERE c_custkey < 40
-    ),
-    uni AS (
-      SELECT c_custkey AS k, c_name AS name, c_nationkey AS nat,
-             c_acctbal AS bal, c_mktsegment AS seg
-      FROM customer
-      UNION ALL SELECT k, name, nat, bal, seg FROM dirty
-    ),
-    pairs AS (
-      SELECT a.k AS a_key, b.k AS b_key,
-             CAST(CASE WHEN regexp_replace(a.name, '[^0-9]', '', 'g')
-                            = regexp_replace(b.name, '[^0-9]', '', 'g')
-                       THEN 4 ELSE 0 END
-                  + CASE WHEN ABS(a.bal - b.bal) <= 100 THEN 2 ELSE 0 END
-                  + CASE WHEN a.seg = b.seg THEN 1 ELSE 0 END
-                  AS BIGINT) AS score
-      FROM uni a JOIN uni b ON a.nat = b.nat AND a.k < b.k
-    )
-    SELECT a_key, b_key, score FROM pairs WHERE score >= 6
-    """,
-    doc=(
-        "Record linkage (Fellegi-Sunter shape): block on the nation "
-        "key, score within-block pairs with deterministic per-field "
-        "agreement weights (name-digit identity 4, balance within 100 "
-        "= 2, same segment 1), link at score >= 6 — so a link REQUIRES "
-        "the name evidence plus one corroborating field, never "
-        "coincidental segment+balance agreement alone. Exercised on "
-        "planted dirty duplicates (case/punctuation-mangled names, "
-        "balance drift +50): exactly the planted pairs link; organic "
-        "same-nation pairs top out at score 3. Scale: blocking bounds "
-        "the quadratic strictly to within-block pairs — at 100 TB the "
-        "block key widens (nation x name-prefix) to keep blocks "
-        "bounded, the same plan shape otherwise; the scorer is pure "
-        "JVM expression (no UDF)."
-    ),
-    tags=("join", "dedup", "entity"),
-)
-def join_record_linkage(spark, sf_dir):
-    cust = t(spark, sf_dir, "customer")
-    clean = cust.select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").alias("nat"),
-        F.col("c_acctbal").alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    dirty = cust.filter(F.col("c_custkey") < 40).select(
-        (F.col("c_custkey") + 1000000).alias("k"),
-        F.concat(F.lower("c_name"), F.lit(".")).alias("name"),
-        F.col("c_nationkey").alias("nat"),
-        (F.col("c_acctbal") + 50).alias("bal"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    uni = clean.unionByName(dirty).withColumn(
-        "digits", F.regexp_replace("name", "[^0-9]", "")
-    )
-    a = uni.select(*[F.col(c).alias(f"a_{c}") for c in uni.columns])
-    b = uni.select(*[F.col(c).alias(f"b_{c}") for c in uni.columns])
-    score = (
-        F.when(F.col("a_digits") == F.col("b_digits"), 4).otherwise(0)
-        + F.when(F.abs(F.col("a_bal") - F.col("b_bal")) <= 100, 2).otherwise(0)
-        + F.when(F.col("a_seg") == F.col("b_seg"), 1).otherwise(0)
-    ).cast("long")
-    return (
-        a.join(b, (F.col("a_nat") == F.col("b_nat")) & (F.col("a_k") < F.col("b_k")))
-        .select(
-            F.col("a_k").alias("a_key"),
-            F.col("b_k").alias("b_key"),
-            score.alias("score"),
-        )
-        .filter(F.col("score") >= 6)
-    )
-
-
-@EXT.add(
-    "qa_pseudonymize",
-    oracle="""
-    WITH tok AS (
-      SELECT c_custkey,
-             list_reduce(list_prepend(CAST(7 AS BIGINT),
-                 list_transform(string_split('s7:' || c_name, ''),
-                                c -> CAST(unicode(c) AS BIGINT))),
-                 (acc, cp) -> (acc * 31 + cp) % 1000003) AS tok
-      FROM customer
-    ),
-    oc AS (
-      SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_ord
-      FROM orders GROUP BY 1
-    )
-    SELECT t.tok,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(COALESCE(oc.n_ord, 0)) AS BIGINT) AS n_orders
-    FROM tok t LEFT JOIN oc ON oc.o_custkey = t.c_custkey
-    GROUP BY t.tok
-    """,
-    doc=(
-        "Keyed pseudonymization with referential consistency: replace "
-        "the direct identifier (customer name) by a salted Horner-mod "
-        "token (the cross-engine-portable hash, llm/lm.py "
-        "portable_word_bucket) and prove joins still work by "
-        "aggregating order counts per PSEUDONYM — the release-"
-        "pipeline step between llm_pii_scrub's masking and the "
-        "k-anonymity/l-diversity gates: analysts keep join keys, "
-        "identities leave the table. Deterministic tokens (same salt "
-        "+ name -> same token on every engine/run) are what make the "
-        "pseudonymized extract re-joinable across tables; one scalar "
-        "JVM fold per row, one broadcastable dim join, one groupBy."
-    ),
-    tags=("qa", "privacy"),
-)
-def qa_pseudonymize(spark, sf_dir):
-    from steam_data_pipeline_spark.llm.lm import portable_word_bucket
-
-    cust = t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        portable_word_bucket(
-            F.concat(F.lit("s7:"), F.col("c_name")), 1000003
-        ).alias("tok"),
-    )
-    oc = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ord"))
-    )
-    return (
-        cust.join(oc, cust["c_custkey"] == oc["o_custkey"], "left")
-        .groupBy("tok")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.sum(F.coalesce(F.col("n_ord"), F.lit(0)))
-            .cast("long")
-            .alias("n_orders"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# feat_* — feature-engineering operators for model-training pipelines.
-# The reference stops at ingest + SQL analytics (main.py:1-548, runner.py:1-107); these are
-# the downstream steps a training pipeline bolts onto the same tables.
-# --------------------------------------------------------------------------
-
-from steam_data_pipeline_spark.llm.lm import (  # noqa: E402
-    dsir_oracle_bucket_sql as _bucket_sql,
-    portable_word_bucket as _pbucket,
-)
-
-
-@EXT.add(
-    "feat_target_encode_loo",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderkey, o_orderpriority AS prio,
-             TRY_CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-      FROM orders
-    ),
-    s AS (
-      SELECT prio, CAST(SUM(cents) AS BIGINT) AS sum_c,
-             CAST(COUNT(*) AS BIGINT) AS n_c
-      FROM o GROUP BY 1
-    )
-    SELECT o.o_orderkey, o.prio,
-           -- HUGEINT: in-domain cents SUMS still overflow BIGINT once
-           -- scaled x10000 (r12 extremes contract); exact wide integer
-           -- math, final TRY_CAST back to the BIGINT output type
-           TRY_CAST((CAST(s.sum_c AS HUGEINT) - o.cents) * 10000
-                    // (s.n_c - 1) AS BIGINT) AS enc_micro
-    FROM o JOIN s USING (prio)
-    """,
-    doc=(
-        "Leave-one-out target encoding of a categorical feature "
-        "(order priority) against the order value: each row's encoding "
-        "is the category mean EXCLUDING that row, (sum_c - y) / "
-        "(n_c - 1), the standard leakage-free encoding for training "
-        "tables. Exact integer arithmetic end to end: dollars to "
-        "cents, micro-scaled truncating division (Spark `div` == "
-        "DuckDB `//` for positive operands), no float drift. Scale: "
-        "one map-side-combined agg over the tiny category domain, "
-        "broadcast back onto the fact — the fact table is scanned "
-        "once and never shuffled."
-    ),
-    tags=("feat", "ml"),
-)
-def feat_target_encode_loo(spark, sf_dir):
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("prio"),
-        F.round(F.col("o_totalprice") * 100).try_cast("long").alias("cents"),
-    )
-    s = o.groupBy("prio").agg(
-        F.sum("cents").cast("long").alias("sum_c"),
-        F.count(F.lit(1)).cast("long").alias("n_c"),
-    )
-    return o.join(F.broadcast(s), "prio").select(
-        "o_orderkey",
-        "prio",
-        # decimal(38,0): the micro-scaled numerator overflows BIGINT
-        # for in-domain cents sums (r12 extremes contract); exact wide
-        # decimal math, final try_cast back to the BIGINT output type
-        F.expr(
-            "try_cast(((CAST(sum_c AS DECIMAL(38,0)) - cents) * 10000)"
-            " div (n_c - 1) AS BIGINT)"
-        ).alias("enc_micro"),
-    )
-
-
-# COALESCE the group key into the salted hash: NULL source is a real
-# group, but '||' yields NULL in DuckDB while Spark's xxhash64 hashes
-# a null field to a seed-derived value — the two engines would send
-# the NULL group to DIFFERENT splits (round-11 adversarial NULL sweep)
-_SPLIT_BUCKET_SQL = _bucket_sql("'split:' || COALESCE(source, '')", 100)
-
-
-@EXT.add(
-    "feat_split_groupwise",
-    oracle=f"""
-    WITH d AS (
-      SELECT source, n_chars, {_SPLIT_BUCKET_SQL} AS b
-      FROM documents
-    ),
-    lab AS (
-      SELECT source, n_chars,
-             CASE WHEN b < 80 THEN 'train'
-                  WHEN b < 90 THEN 'valid'
-                  ELSE 'test' END AS split
-      FROM d
-    ),
-    grp AS (
-      SELECT source, MIN(split) AS split,
-             CAST(COUNT(DISTINCT split) AS BIGINT) AS n_splits,
-             CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-      FROM lab GROUP BY 1
-    )
-    SELECT split,
-           CAST(COUNT(*) AS BIGINT) AS n_groups,
-           CAST(SUM(n_docs) AS BIGINT) AS n_docs,
-           CAST(SUM(sum_chars) AS BIGINT) AS n_chars,
-           CAST(MAX(n_splits) AS BIGINT) AS max_splits_per_group
-    FROM grp GROUP BY 1
-    """,
-    doc=(
-        "Group-aware deterministic train/valid/test split: the split "
-        "is assigned by a salted portable hash of the GROUP key (the "
-        "document's source domain), not the row, so correlated "
-        "documents — near-duplicates, same-crawl pages — can never "
-        "straddle a split boundary (the classic train/test leakage "
-        "bug). 80/10/10 by hash bucket; deterministic across engines, "
-        "runs, and cluster sizes (no rand()). The output carries its "
-        "own audit: max_splits_per_group == 1 per split row proves "
-        "leakage-freedom. Scale: one narrow map + two map-side-"
-        "combined aggs keyed on the group key; no fact-table shuffle "
-        "beyond the group rollup."
-    ),
-    tags=("feat", "ml", "split"),
-)
-def feat_split_groupwise(spark, sf_dir):
-    d = t(spark, sf_dir, "documents").select(
-        "source",
-        "n_chars",
-        _pbucket(
-            F.concat(F.lit("split:"), F.coalesce(F.col("source"), F.lit(""))),
-            100,
-        ).alias("b"),
-    )
-    lab = d.select(
-        "source",
-        "n_chars",
-        F.when(F.col("b") < 80, "train")
-        .when(F.col("b") < 90, "valid")
-        .otherwise("test")
-        .alias("split"),
-    )
-    grp = lab.groupBy("source").agg(
-        F.min("split").alias("split"),
-        F.countDistinct("split").cast("long").alias("n_splits"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-    return grp.groupBy("split").agg(
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_chars").cast("long").alias("n_chars"),
-        F.max("n_splits").cast("long").alias("max_splits_per_group"),
-    )
-
-
-_FEATHASH_TOK_SQL = _bucket_sql("tok", 512)
-
-
-@EXT.add(
-    "feat_hashing_vectorize",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, t AS tok FROM (
-        SELECT doc_id,
-               unnest(string_split_regex(lower(text), '[^a-z]+')) AS t
-        FROM documents WHERE doc_id % 5 = 0
-      ) WHERE t <> ''
-    )
-    SELECT doc_id, CAST({_FEATHASH_TOK_SQL} AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM tok GROUP BY 1, 2
-    """,
-    doc=(
-        "Hashing-trick vectorization (feature hashing): tokens map "
-        "straight to a fixed 512-dim sparse index by portable hash — "
-        "no vocabulary build, no dictionary broadcast, no OOV "
-        "handling, the standard trick for streaming/large-cardinality "
-        "feature spaces. Output is the sparse COO triple (doc_id, "
-        "bucket, cnt); a 1:20 deterministic doc sample bounds the "
-        "fixture output. Scale: tokenize + hash is a narrow map "
-        "(pure JVM expressions, no UDF); the only shuffle is the "
-        "(doc_id, bucket) count agg, map-side combined, and doc_id "
-        "is the natural partition key so the combine is near-total. "
-        "Contrast llm_vocab_build, which pays a dictionary pass for "
-        "an exact vocabulary; this is the fixed-memory alternative."
-    ),
-    tags=("feat", "ml", "text"),
-)
-def feat_hashing_vectorize(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    return (
-        toks.select("doc_id", _pbucket(F.col("tok"), 512).alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-@EXT.add(
-    "feat_negative_sampling",
-    oracle="""
-    WITH custs AS (SELECT c_custkey AS ck FROM customer WHERE c_custkey <= 100),
-    parts AS (SELECT p_partkey AS pk FROM part WHERE p_partkey <= 50),
-    bought AS (
-      SELECT DISTINCT o.o_custkey AS ck, l.l_partkey AS pk
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    cand AS (
-      SELECT c.ck, p.pk,
-             (c.ck * 2654435761 + p.pk * 40503 + 97) % 1000003 AS h
-      FROM custs c CROSS JOIN parts p
-      WHERE NOT EXISTS (SELECT 1 FROM bought b
-                        WHERE b.ck = c.ck AND b.pk = p.pk)
-    )
-    SELECT ck AS c_custkey, pk AS p_partkey, CAST(h AS BIGINT) AS h,
-           CAST(rk AS BIGINT) AS rk
-    FROM (SELECT *, row_number() OVER (PARTITION BY ck ORDER BY h, pk) AS rk
-          FROM cand)
-    WHERE rk <= 3
-    """,
-    doc=(
-        "Deterministic negative sampling for implicit-feedback "
-        "recommender training (the companion to udf_recommender_als): "
-        "for each user, draw k=3 items they did NOT interact with, "
-        "ranked by a portable integer hash of the (user, item) pair — "
-        "reproducible across engines, runs, and partitionings, unlike "
-        "rand()-based sampling. Shape: candidate pool = bounded item "
-        "broadcast x users, minus observed pairs by anti join, then a "
-        "per-user hash-ranked top-k (partial sort per key, "
-        "WindowGroupLimit prunes to k before the shuffle). Scale: the "
-        "item side is the broadcast dim; the anti join hashes on the "
-        "(user, item) pair; at full catalog size the pool switches to "
-        "hash-bucketed candidate generation (sample buckets, not the "
-        "cross product) with the same ranking contract."
-    ),
-    tags=("feat", "ml", "sampling"),
-)
-def feat_negative_sampling(spark, sf_dir):
-    custs = (
-        t(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") <= 100)
-        .select(F.col("c_custkey").alias("ck"))
-    )
-    parts = (
-        t(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") <= 50)
-        .select(F.col("p_partkey").alias("pk"))
-    )
-    bought = (
-        t(spark, sf_dir, "lineitem")
-        .join(
-            t(spark, sf_dir, "orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    cand = (
-        custs.crossJoin(F.broadcast(parts))
-        .join(bought, ["ck", "pk"], "left_anti")
-        .withColumn(
-            "h",
-            (
-                F.col("ck") * F.lit(2654435761)
-                + F.col("pk") * F.lit(40503)
-                + F.lit(97)
-            )
-            % F.lit(1000003),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("ck").orderBy("h", "pk")
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.col("ck").alias("c_custkey"),
-            F.col("pk").alias("p_partkey"),
-            F.col("h").cast("long").alias("h"),
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
-
-
-@EXT.add(
-    "feat_woe_encode",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderpriority AS prio,
-             CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-      FROM orders
-    ),
-    cat AS (
-      SELECT prio,
-             CAST(SUM(y) AS BIGINT) AS pos_c,
-             CAST(COUNT(*) - SUM(y) AS BIGINT) AS neg_c
-      FROM o GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(SUM(pos_c) AS BIGINT) AS pos_t,
-             CAST(SUM(neg_c) AS BIGINT) AS neg_t,
-             CAST(COUNT(*) AS BIGINT) AS ncat
-      FROM cat
-    )
-    SELECT prio, pos_c, neg_c,
-           ROUND(LN(CAST((pos_c + 1) * (neg_t + ncat) AS DOUBLE)
-                    / CAST((neg_c + 1) * (pos_t + ncat) AS DOUBLE)),
-                 9) AS woe
-    FROM cat, tot
-    """,
-    doc=(
-        "Weight-of-evidence encoding of a categorical feature against "
-        "a binary label (order fulfilled): WOE = ln((pos_c/pos_t) / "
-        "(neg_c/neg_t)) with per-cell Laplace smoothing (+1 per cell, "
-        "+ncat to each total) so empty cells stay finite — the "
-        "standard credit-scoring/feature-engineering encoding that, "
-        "unlike one-hot, carries the label signal in one monotone "
-        "column. Numeric discipline: the odds ratio is assembled as a "
-        "single division of two EXACT bigint products, so the only "
-        "engine-sensitive step is one ln(), rounded to 9 decimals on "
-        "both sides (same contract as qa_psi_drift). Scale: one "
-        "map-side-combined agg over the tiny category domain, a 1-row "
-        "totals broadcast, zero fact-table shuffles."
-    ),
-    tags=("feat", "ml"),
-)
-def feat_woe_encode(spark, sf_dir):
-    o = t(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("prio"),
-        (F.col("o_orderstatus") == "F").cast("int").alias("y"),
-    )
-    cat = o.groupBy("prio").agg(
-        F.sum("y").cast("long").alias("pos_c"),
-        (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("neg_c"),
-    )
-    tot = cat.agg(
-        F.sum("pos_c").cast("long").alias("pos_t"),
-        F.sum("neg_c").cast("long").alias("neg_t"),
-        F.count(F.lit(1)).cast("long").alias("ncat"),
-    )
-    return cat.crossJoin(F.broadcast(tot)).select(
-        "prio",
-        "pos_c",
-        "neg_c",
-        F.round(
-            F.log(
-                ((F.col("pos_c") + 1) * (F.col("neg_t") + F.col("ncat"))).cast("double")
-                / ((F.col("neg_c") + 1) * (F.col("pos_t") + F.col("ncat"))).cast(
-                    "double"
-                )
-            ),
-            9,
-        ).alias("woe"),
-    )
-
-
-@EXT.add(
-    "feat_mutual_info",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderpriority AS x, o_orderstatus AS y FROM orders
-    ),
-    cell AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS c FROM o GROUP BY 1, 2),
-    mx AS (SELECT x, CAST(SUM(c) AS BIGINT) AS cx FROM cell GROUP BY 1),
-    my AS (SELECT y, CAST(SUM(c) AS BIGINT) AS cy FROM cell GROUP BY 1),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cell)
-    SELECT cell.x, cell.y, c,
-           ROUND((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                 * LN(CAST(c * n AS DOUBLE) / CAST(cx * cy AS DOUBLE)),
-                 9) AS mi_contrib
-    FROM cell JOIN mx USING (x) JOIN my USING (y), tot
-    """,
-    doc=(
-        "Per-cell mutual-information contributions between two "
-        "categorical columns (order priority x order status): "
-        "MI = sum over cells of p(x,y) * ln(p(x,y) / (p(x)p(y))) — the "
-        "standard feature-selection relevance score; emitting the "
-        "per-cell terms (not just the scalar) keeps the output "
-        "auditable and the query a pure relation. Numeric discipline: "
-        "the log argument is one division of two EXACT bigint products "
-        "(c*n / cx*cy — every count is exact, products stay well under "
-        "2^53), so only the ln() is engine-sensitive — rounded to 9 "
-        "decimals on both sides. Scale: the cell/marginal/total aggs "
-        "all live on the tiny category domain after one "
-        "map-side-combined fact scan; marginals broadcast back onto "
-        "cells, no fact re-shuffle."
-    ),
-    tags=("feat", "ml"),
-)
-def feat_mutual_info(spark, sf_dir):
-    o = t(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
-    )
-    cell = o.groupBy("x", "y").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    mx = cell.groupBy("x").agg(F.sum("c").cast("long").alias("cx"))
-    my = cell.groupBy("y").agg(F.sum("c").cast("long").alias("cy"))
-    tot = cell.agg(F.sum("c").cast("long").alias("n"))
-    return (
-        cell.join(F.broadcast(mx), "x")
-        .join(F.broadcast(my), "y")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "x",
-            "y",
-            "c",
-            F.round(
-                (F.col("c").cast("double") / F.col("n").cast("double"))
-                * F.log(
-                    (F.col("c") * F.col("n")).cast("double")
-                    / (F.col("cx") * F.col("cy")).cast("double")
-                ),
-                9,
-            ).alias("mi_contrib"),
-        )
-    )
-
-
-@EXT.add(
-    "qa_benford_digits",
-    oracle="""
-    WITH v AS (
-      SELECT CAST(LEFT(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
-                            AS VARCHAR), 1) AS BIGINT) AS digit
-      FROM orders WHERE o_totalprice > 0
-    ),
-    obs AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS cnt FROM v GROUP BY 1),
-    tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM obs),
-    spine AS (SELECT CAST(g AS BIGINT) AS digit FROM generate_series(1, 9) s(g))
-    SELECT spine.digit,
-           CAST(COALESCE(obs.cnt, 0) AS BIGINT) AS cnt,
-           ROUND(LN(1.0 + 1.0 / CAST(spine.digit AS DOUBLE)) / LN(10.0), 9)
-             AS expected_p,
-           ROUND(POW(CAST(COALESCE(obs.cnt, 0) AS DOUBLE)
-                     - CAST(n AS DOUBLE)
-                       * (LN(1.0 + 1.0 / CAST(spine.digit AS DOUBLE)) / LN(10.0)),
-                     2)
-                 / (CAST(n AS DOUBLE)
-                    * (LN(1.0 + 1.0 / CAST(spine.digit AS DOUBLE)) / LN(10.0))),
-                 9) AS chi_contrib
-    FROM spine LEFT JOIN obs USING (digit), tot
-    """,
-    doc=(
-        "Benford's-law first-digit audit of the order-value column: "
-        "observed first-significant-digit counts vs the log10(1+1/d) "
-        "expectation, with per-digit chi-square contributions — a "
-        "standard forensic/data-quality screen for fabricated or "
-        "truncated numeric columns. The first digit is extracted by "
-        "STRING head of the exact integer cents (log10/pow-based "
-        "extraction is float-unsafe exactly at powers of ten); the "
-        "9-row digit spine left-join keeps absent digits visible as "
-        "zero rows. ln()-derived expectations rounded to 9 decimals "
-        "(same contract as qa_psi_drift). Scale: one narrow map + one "
-        "9-key map-side-combined agg; the spine and totals are "
-        "broadcast literals."
-    ),
-    tags=("qa",),
-)
-def qa_benford_digits(spark, sf_dir):
-    v = (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 0)
-        .select(
-            F.substring(
-                F.round(F.col("o_totalprice") * 100).try_cast("long").cast("string"),
-                1,
-                1,
-            )
-            .cast("long")
-            .alias("digit")
-        )
-    )
-    obs = v.groupBy("digit").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    tot = obs.agg(F.sum("cnt").cast("long").alias("n"))
-    spine = spark.range(1, 10).select(F.col("id").alias("digit"))
-    exp_p = F.log(F.lit(1.0) + F.lit(1.0) / F.col("digit").cast("double")) / F.log(
-        F.lit(10.0)
-    )
-    cnt = F.coalesce(F.col("cnt"), F.lit(0)).cast("long")
-    expected = F.col("n").cast("double") * exp_p
-    return (
-        spine.join(obs, "digit", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            cnt.alias("cnt"),
-            F.round(exp_p, 9).alias("expected_p"),
-            F.round(
-                F.pow(cnt.cast("double") - expected, F.lit(2.0)) / expected, 9
-            ).alias("chi_contrib"),
-        )
-    )
-
-
-@EXT.add(
-    "samp_balanced_classes",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, label,
-             (vec_id * 2654435761 + label * 97) % 1000003 AS h
-      FROM embeddings
-    ),
-    k AS (
-      SELECT CAST(MIN(c) AS BIGINT) AS kmin
-      FROM (SELECT COUNT(*) AS c FROM e GROUP BY label)
-    ),
-    r AS (
-      SELECT vec_id, label, CAST(h AS BIGINT) AS h,
-             row_number() OVER (PARTITION BY label ORDER BY h, vec_id) AS rk
-      FROM e
-    )
-    SELECT vec_id, label, h, CAST(rk AS BIGINT) AS rk
-    FROM r, k WHERE rk <= kmin
-    """,
-    doc=(
-        "Class-balanced downsampling for training-set construction: "
-        "every label class is cut to the size of the SMALLEST class, "
-        "rows chosen by a portable integer hash of (vec_id, label) — "
-        "deterministic across engines, runs, and partitionings, unlike "
-        "rand()-based class rebalancing, and reproducible row-for-row "
-        "when the pipeline re-runs. Shape: one count-per-class agg "
-        "collapses to a 1-row broadcast min; the per-class hash rank "
-        "is a single window shuffle on label. Scale: with a bounded "
-        "label domain the rank-window partitions are the skew risk — "
-        "at 100 TB swap the exact rank for a per-class hash-threshold "
-        "cut (keep h < kmin/class_count quantile of the hash space), "
-        "which needs no sort at all; the exact-rank fixture pins the "
-        "row-level contract that variant must reproduce."
-    ),
-    tags=("samp", "ml"),
-)
-def samp_balanced_classes(spark, sf_dir):
-    from pyspark.sql import Window
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        ((F.col("vec_id") * F.lit(2654435761) + F.col("label") * F.lit(97)) % F.lit(
-            1000003
-        )).alias("h"),
-    )
-    k = (
-        e.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.min("c").cast("long").alias("kmin"))
-    )
-    w = Window.partitionBy("label").orderBy("h", "vec_id")
-    r = e.withColumn("rk", F.row_number().over(w))
-    return (
-        r.crossJoin(F.broadcast(k))
-        .filter(F.col("rk") <= F.col("kmin"))
-        .select(
-            "vec_id",
-            "label",
-            F.col("h").cast("long").alias("h"),
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
-
-
-@EXT.add(
-    "join_asof_nearest",
-    oracle="""
-    WITH purchases AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'purchase'
-    ),
-    views AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'view'
-    )
-    SELECT p.event_id, p.user_id, p.ts, p.value,
-           CASE WHEN b.ts IS NULL AND f.ts IS NULL THEN NULL
-                WHEN f.ts IS NULL THEN b.ts
-                WHEN b.ts IS NULL THEN f.ts
-                WHEN epoch_us(p.ts) - epoch_us(b.ts)
-                     <= epoch_us(f.ts) - epoch_us(p.ts) THEN b.ts
-                ELSE f.ts END AS near_ts,
-           CASE WHEN b.ts IS NULL AND f.ts IS NULL THEN NULL
-                WHEN f.ts IS NULL THEN b.value
-                WHEN b.ts IS NULL THEN f.value
-                WHEN epoch_us(p.ts) - epoch_us(b.ts)
-                     <= epoch_us(f.ts) - epoch_us(p.ts) THEN b.value
-                ELSE f.value END AS near_value,
-           CASE WHEN b.ts IS NULL AND f.ts IS NULL THEN 'none'
-                WHEN f.ts IS NULL THEN 'backward'
-                WHEN b.ts IS NULL THEN 'forward'
-                WHEN epoch_us(p.ts) - epoch_us(b.ts)
-                     <= epoch_us(f.ts) - epoch_us(p.ts) THEN 'backward'
-                ELSE 'forward' END AS direction
-    FROM purchases p
-    LEFT JOIN LATERAL (
-      SELECT v.ts, v.value FROM views v
-      WHERE v.user_id = p.user_id AND v.ts <= p.ts
-      ORDER BY v.ts DESC, v.event_id DESC LIMIT 1
-    ) b ON TRUE
-    LEFT JOIN LATERAL (
-      SELECT v.ts, v.value FROM views v
-      WHERE v.user_id = p.user_id AND v.ts >= p.ts
-      ORDER BY v.ts ASC, v.event_id ASC LIMIT 1
-    ) f ON TRUE
-    """,
-    doc=(
-        "Nearest-in-time as-of join (operators/asof.py asof_nearest; "
-        "pandas merge_asof direction='nearest' semantics, which Spark "
-        "has no native operator for): each purchase gets the view "
-        "CLOSEST in time either direction, ties to the earlier side, "
-        "equal-timestamp ties among right rows broken on the right id "
-        "via struct max/min — fully deterministic where "
-        "last(ignorenulls) would be partition-order-dependent. Plan: "
-        "ONE union-tag pass, two RANGE-framed windows sharing a single "
-        "(key, ts) exchange+sort; never a range join. The DuckDB "
-        "oracle uses two LATERAL top-1 probes with the same "
-        "tie-breaks."
-    ),
-    tags=("join", "asof", "window"),
-)
-def join_asof_nearest(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.asof import asof_nearest
-
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    return asof_nearest(
-        purchases, views, key="user_id", ts="ts",
-        value_col="value", right_id="event_id",
-    )
-
-
-@EXT.add(
-    "win_attribution_last_touch",
-    oracle="""
-    WITH conv AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'purchase'
-    ),
-    touch AS (
-      SELECT event_id, user_id, ts, event_type FROM events
-      WHERE event_type IN ('view', 'click')
-    )
-    SELECT c.event_id, c.user_id, c.ts, c.value,
-           a.event_type AS touch_type, a.ts AS touch_ts
-    FROM conv c
-    LEFT JOIN LATERAL (
-      SELECT t.event_type, t.ts FROM touch t
-      WHERE t.user_id = c.user_id
-        AND t.ts <= c.ts
-        AND t.ts >= c.ts - INTERVAL 7 DAY
-      ORDER BY t.ts DESC, t.event_id DESC LIMIT 1
-    ) a ON TRUE
-    """,
-    doc=(
-        "Last-touch marketing attribution: every conversion (purchase) "
-        "is attributed to the most recent view/click by the same user "
-        "within a 7-day lookback window — the standard attribution "
-        "primitive, which is a BOUNDED backward as-of join (plain "
-        "asof_backward has no lookback cutoff). Plan: one union-tag "
-        "pass, one RANGE-framed window ([-7 days, 0] on integer "
-        "microseconds) over a single (user, ts) exchange — never a "
-        "range join; the attributed touch is a struct max so "
-        "equal-timestamp ties resolve deterministically on the touch "
-        "event id. Conversions with no in-window touch surface as "
-        "NULL-attributed rows (the unattributed-spend line every "
-        "attribution report needs). At 100 TB the 7-day bound is the "
-        "scale feature: window state per key is capped by the lookback "
-        "horizon, so the operator streams (it is the batch twin of a "
-        "watermarked stream-stream interval join)."
-    ),
-    tags=("win", "asof", "attribution"),
-)
-def win_attribution_last_touch(spark, sf_dir):
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    conv = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    touch = ev.filter(F.col("event_type").isin("view", "click")).select(
-        "event_id", "user_id", "ts", "event_type"
-    )
-    tagged_conv = conv.select(
-        "event_id", "user_id", "ts", "value",
-        F.lit(1).alias("__is_conv"),
-        F.lit(None).cast("string").alias("__t_type"),
-        F.lit(None).cast("long").alias("__t_id"),
-    )
-    tagged_touch = touch.select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        "ts",
-        F.lit(None).cast("double").alias("value"),
-        F.lit(0).alias("__is_conv"),
-        F.col("event_type").alias("__t_type"),
-        F.col("event_id").alias("__t_id"),
-    )
-    u = tagged_conv.unionByName(tagged_touch).withColumn(
-        "__ts_us", F.unix_micros("ts")
-    )
-    lookback_us = 7 * 86400 * 1_000_000
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("__ts_us")
-        .rangeBetween(-lookback_us, 0)
-    )
-    pick = F.when(
-        F.col("__is_conv") == 0,
-        F.struct(
-            F.col("__ts_us").alias("t"),
-            F.col("__t_id").alias("i"),
-            F.col("__t_type").alias("y"),
-        ),
-    )
-    return (
-        u.select(
-            "event_id", "user_id", "ts", "value", "__is_conv",
-            F.max(pick).over(w).alias("__a"),
-        )
-        .filter(F.col("__is_conv") == 1)
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            "value",
-            F.col("__a.y").alias("touch_type"),
-            F.timestamp_micros(F.col("__a.t")).alias("touch_ts"),
-        )
-    )
-
-
-def _communities_oracle():
-    from steam_data_pipeline_spark.operators.graph import (
-        label_propagation_oracle_sql,
-    )
-
-    return label_propagation_oracle_sql(
-        "SELECT o_custkey AS src,"
-        " o_orderkey % (SELECT COUNT(*) FROM customer) AS dst"
-        " FROM orders WHERE o_orderpriority = '1-URGENT'",
-        rounds=4,
-    )
-
-
-@EXT.add(
-    "llm_graph_communities",
-    oracle=_communities_oracle(),
-    doc=(
-        "Label-propagation community detection (operators/graph.py "
-        "label_propagation) over the same customer/orders link graph "
-        "as llm_graph_pagerank — the domain-clustering pass a crawl "
-        "pipeline runs to group related hosts before per-community "
-        "quota sampling. SYNCHRONOUS LPA with most-frequent-neighbor "
-        "adoption and smallest-label tie-break: async LPA is run-order "
-        "dependent and could never be value-hash-oracled; this "
-        "variant is a pure dataflow recurrence, bit-identical on any "
-        "partitioning (DuckDB oracle unrolls the same 4 rounds as "
-        "MATERIALIZED CTEs). Per round: one shuffle join of the "
-        "persisted symmetric edge table against the label frontier + "
-        "a map-side-combined (node, label) count + an argmax struct "
-        "agg — never a global sort; localCheckpoint every 2 rounds "
-        "bounds lineage exactly as pagerank does."
-    ),
-    tags=("llm", "graph", "iterative"),
-)
-def llm_graph_communities(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.graph import label_propagation
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    n_cust = cust.agg(F.count(F.lit(1)).alias("nc"))
-    edges = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .crossJoin(F.broadcast(n_cust))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("o_orderkey") % F.col("nc")).alias("dst"),
-        )
-    )
-    return label_propagation(edges, rounds=4)
-
-
-@EXT.add(
-    "feat_discretize_quantile",
-    oracle="""
-    WITH o AS (
-      -- NULL price excluded: a NULL has no quantile position and the
-      -- engines order NULLs at opposite ends (round-11 NULL sweep)
-      SELECT o_orderpriority AS prio,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-      FROM orders WHERE o_totalprice IS NOT NULL
-    ),
-    g AS (SELECT prio, cents, CAST(COUNT(*) AS BIGINT) AS c
-          FROM o GROUP BY 1, 2),
-    cum AS (
-      SELECT prio, cents, c,
-             SUM(c) OVER (PARTITION BY prio ORDER BY cents
-                          ROWS UNBOUNDED PRECEDING) AS cm
-      FROM g
-    ),
-    n AS (SELECT prio, CAST(SUM(c) AS BIGINT) AS n FROM g GROUP BY 1),
-    q AS (SELECT CAST(g AS BIGINT) AS q FROM generate_series(1, 3) s(g))
-    SELECT cum.prio, q.q,
-           CAST(MIN(cum.cents) AS BIGINT) AS edge_cents, n.n
-    FROM cum JOIN n USING (prio) CROSS JOIN q
-    WHERE cum.cm * 4 >= q.q * n.n
-    GROUP BY 1, 2, 4
-    """,
-    doc=(
-        "Distributed exact quantile edges for feature discretization: "
-        "per-category quartile cut points (percentile_disc semantics — "
-        "smallest value whose cumulative count reaches q*n) computed "
-        "WITHOUT sorting the fact table: collapse to a per-(category, "
-        "value) count histogram first, cumulative-sum the histogram "
-        "(distinct values << rows, the window sort is over the "
-        "histogram not the data), and take the integer-threshold min "
-        "per quartile. All-integer comparisons (cum*4 >= q*n) — no "
-        "float quantile interpolation, so the edges value-hash-oracle "
-        "exactly. This is the scale path quantile binning needs at "
-        "100 TB: ntile/percentile over raw rows is a per-group full "
-        "sort; the histogram shape shrinks the sorted relation by the "
-        "value-duplication factor and every other step is a map-side "
-        "combined agg or broadcast."
-    ),
-    tags=("feat", "ml"),
-)
-def feat_discretize_quantile(spark, sf_dir):
-    from pyspark.sql import Window
-
-    o = t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice").isNotNull()
-    ).select(
-        F.col("o_orderpriority").alias("prio"),
-        F.round(F.col("o_totalprice") * 100).try_cast("long").alias("cents"),
-    )
-    g = o.groupBy("prio", "cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    w = (
-        Window.partitionBy("prio")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = g.select("prio", "cents", "c", F.sum("c").over(w).alias("cm"))
-    n = g.groupBy("prio").agg(F.sum("c").cast("long").alias("n"))
-    q = spark.range(1, 4).select(F.col("id").alias("q"))
-    return (
-        cum.join(F.broadcast(n), "prio")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("cm") * 4 >= F.col("q") * F.col("n"))
-        .groupBy("prio", "q", "n")
-        .agg(F.min("cents").cast("long").alias("edge_cents"))
-        .select("prio", "q", "edge_cents", "n")
-    )
-
-
-@EXT.add(
-    "join_point_in_time",
-    oracle="""
-    WITH c AS (
-      SELECT user_id, event_type, ts, event_id,
-             lag(event_type) OVER w AS prev,
-             row_number() OVER w AS rn
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), scd AS (
-      -- null-safe version test (matches operators/windows.scd2_history:
-      -- NULL is a distinct state; rn=1 keeps a NULL-state first row)
-      SELECT user_id, event_type AS state, ts AS valid_from
-      FROM c WHERE rn = 1 OR prev IS DISTINCT FROM event_type
-    ),
-    probes AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'purchase'
-    )
-    SELECT p.event_id, p.user_id, p.ts, p.value,
-           a.state AS state_asof, a.valid_from AS state_since
-    FROM probes p
-    LEFT JOIN LATERAL (
-      SELECT s.state, s.valid_from FROM scd s
-      WHERE s.user_id = p.user_id AND s.valid_from < p.ts
-      ORDER BY s.valid_from DESC, s.state DESC LIMIT 1
-    ) a ON TRUE
-    """,
-    doc=(
-        "Point-in-time (PIT) feature-store join: each label event "
-        "(purchase) is joined to the dimension version that was valid "
-        "STRICTLY BEFORE its timestamp — the leakage-free temporal "
-        "join every feature store (Feast/Tecton-style) is built "
-        "around; an inclusive as-of here would leak the label row's "
-        "own state transition into its features. Composition: "
-        "operators/windows.py scd2_history collapses the event stream "
-        "into state versions (one shuffle), then ONE union-tag RANGE "
-        "window ((-inf, -1] on integer microseconds — the strict "
-        "inequality is the frame bound, not a post-filter) attaches "
-        "the latest prior version; equal-valid_from ties resolve "
-        "deterministically via struct max on (ts, state). Two "
-        "shuffles total, both on the same user key — at scale the "
-        "second reuses the first's partitioning; never a range join. "
-        "Rows with no prior version surface NULL (the cold-start "
-        "case a training pipeline must see, not drop)."
-    ),
-    tags=("join", "asof", "scd2", "ml"),
-)
-def join_point_in_time(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.windows import scd2_history
-
-    ev = t(spark, sf_dir, "events")
-    dim = scd2_history(
-        ev, key="user_id", state="event_type", order=["ts", "event_id"]
-    ).select("user_id", "state", "valid_from")
-    probes = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    tagged_p = probes.select(
-        "event_id", "user_id", "ts", "value",
-        F.lit(1).alias("__is_probe"),
-        F.lit(None).cast("string").alias("__state"),
-    )
-    tagged_d = dim.select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        F.col("valid_from").alias("ts"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(0).alias("__is_probe"),
-        F.col("state").alias("__state"),
-    )
-    u = tagged_p.unionByName(tagged_d).withColumn(
-        "__ts_us", F.unix_micros("ts")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("__ts_us")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    pick = F.when(
-        F.col("__is_probe") == 0,
-        F.struct(F.col("__ts_us").alias("t"), F.col("__state").alias("s")),
-    )
-    return (
-        u.select(
-            "event_id", "user_id", "ts", "value", "__is_probe",
-            F.max(pick).over(w).alias("__a"),
-        )
-        .filter(F.col("__is_probe") == 1)
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            "value",
-            F.col("__a.s").alias("state_asof"),
-            F.timestamp_micros(F.col("__a.t")).alias("state_since"),
-        )
-    )
-
-
-@EXT.add(
-    "feat_standard_scale",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderkey, o_orderpriority AS prio,
-             CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS HUGEINT)
-               AS cents
-      FROM orders
-    ),
-    s AS (
-      SELECT prio, CAST(COUNT(*) AS HUGEINT) AS n,
-             SUM(cents) AS sm, SUM(cents * cents) AS ss
-      FROM o GROUP BY 1
-    )
-    SELECT o.o_orderkey, o.prio, CAST(o.cents AS BIGINT) AS cents,
-           ROUND(CAST(s.n * o.cents - s.sm AS DOUBLE)
-                 / SQRT(CAST(NULLIF(s.n * s.ss - s.sm * s.sm, 0) AS DOUBLE)),
-                 9) AS zn
-    FROM o JOIN s USING (prio)
-    """,
-    doc=(
-        "Per-category z-score standardization with EXACT moment "
-        "arithmetic: the naive mean/std path computes two "
-        "order-dependent float sums and could never value-hash-"
-        "oracle; here the numerator (n*x - sum) and the radicand "
-        "(n*sumsq - sum^2) are exact wide-integer values (DECIMAL(38) "
-        "on the Spark side, HUGEINT in DuckDB — cents^2 sums overflow "
-        "int64 at sf0.1, which is exactly why engines silently "
-        "float-degrade here), so the only engine-sensitive steps are "
-        "one correctly-rounded IEEE sqrt and one division, rounded to "
-        "9 decimals. zn is the population z-score scaled by n (same "
-        "ranking/threshold semantics, no 1/n float step). Scale: one "
-        "map-side-combined agg over the tiny category domain broadcast "
-        "back onto the fact — single scan, no fact shuffle; constant "
-        "columns surface NULL via the NULLIF(radicand) guard instead "
-        "of an ANSI divide-by-zero."
-    ),
-    tags=("feat", "ml"),
-)
-def feat_standard_scale(spark, sf_dir):
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("prio"),
-        F.round(F.col("o_totalprice") * 100)
-        .cast("decimal(18,0)")
-        .alias("cents"),
-    )
-    s = o.groupBy("prio").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("cents").cast("decimal(38,0)").alias("sm"),
-        F.sum(F.col("cents") * F.col("cents")).cast("decimal(38,0)").alias("ss"),
-    )
-    num = (F.col("n") * F.col("cents") - F.col("sm")).cast("double")
-    rad = F.nullif(
-        (F.col("n") * F.col("ss") - F.col("sm") * F.col("sm")),
-        F.lit(0).cast("decimal(38,0)"),
-    ).cast("double")
-    return o.join(F.broadcast(s), "prio").select(
-        "o_orderkey",
-        "prio",
-        F.col("cents").cast("long").alias("cents"),
-        F.round(num / F.sqrt(rad), 9).alias("zn"),
-    )
-
-
-@EXT.add(
-    "samp_neyman_alloc",
-    oracle="""
-    WITH c AS (
-      SELECT c_mktsegment AS seg,
-             CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-      FROM customer
-    ),
-    strata AS (
-      SELECT seg, CAST(COUNT(*) AS BIGINT) AS nh,
-             CAST(MAX(cents) - MIN(cents) AS BIGINT) AS range_c
-      FROM c GROUP BY 1
-    ),
-    wtot AS (
-      -- HUGEINT weights: nh * range_c of in-domain extreme-cents
-      -- ranges scaled x1000 overflows BIGINT (r12 extremes contract)
-      SELECT SUM(CAST(nh AS HUGEINT) * range_c) AS w FROM strata
-    ),
-    base AS (
-      SELECT seg, nh, range_c,
-             CAST((1000 * CAST(nh AS HUGEINT) * range_c) // w AS BIGINT)
-               AS alloc0,
-             CAST((1000 * CAST(nh AS HUGEINT) * range_c) % w AS BIGINT)
-               AS rem
-      FROM strata, wtot
-    ),
-    extras AS (
-      SELECT CAST(1000 - SUM(alloc0) AS BIGINT) AS e FROM base
-    )
-    SELECT seg, nh, range_c,
-           CAST(alloc0 + CASE WHEN rk <= e THEN 1 ELSE 0 END AS BIGINT)
-             AS alloc
-    FROM (SELECT *, row_number() OVER (ORDER BY rem DESC, seg ASC) AS rk
-          FROM base), extras
-    """,
-    doc=(
-        "Neyman-style optimal stratified-sample allocation with "
-        "largest-remainder apportionment, ALL-INTEGER: a 1000-row "
-        "budget is split across customer segments proportional to "
-        "N_h * spread_h (spread = exact account-balance range in "
-        "cents — the float stddev of textbook Neyman would be "
-        "order-dependent and unoracleable), floor-divided exactly, "
-        "and the rounding shortfall is apportioned to the largest "
-        "exact remainders (Hamilton's method, ties to the smaller "
-        "segment name) so the allocations sum to the budget EXACTLY — "
-        "the property proportional rounding always breaks. Scale: one "
-        "map-side-combined agg over the fact, then all arithmetic on "
-        "the 5-row strata table (the rank window is over strata, "
-        "never data rows)."
-    ),
-    tags=("samp", "ml"),
-)
-def samp_neyman_alloc(spark, sf_dir):
-    from pyspark.sql import Window
-
-    c = t(spark, sf_dir, "customer").select(
-        F.col("c_mktsegment").alias("seg"),
-        F.round(F.col("c_acctbal") * 100).try_cast("long").alias("cents"),
-    )
-    strata = c.groupBy("seg").agg(
-        F.count(F.lit(1)).cast("long").alias("nh"),
-        (F.max("cents") - F.min("cents")).cast("long").alias("range_c"),
-    )
-    # decimal(38,0) weights: nh * range_c of in-domain extreme-cents
-    # ranges scaled x1000 overflows BIGINT (r12 extremes contract)
-    wtot = strata.agg(
-        F.sum(F.col("nh").cast("decimal(38,0)") * F.col("range_c")).alias("w")
-    )
-    base = strata.crossJoin(F.broadcast(wtot)).select(
-        "seg",
-        "nh",
-        "range_c",
-        F.expr(
-            "cast((1000 * CAST(nh AS DECIMAL(38,0)) * range_c) div w"
-            " AS BIGINT)"
-        ).alias("alloc0"),
-        F.expr(
-            "cast((1000 * CAST(nh AS DECIMAL(38,0)) * range_c) % w"
-            " AS BIGINT)"
-        ).alias("rem"),
-    )
-    extras = base.agg((1000 - F.sum("alloc0")).cast("long").alias("e"))
-    rk = F.row_number().over(Window.orderBy(F.col("rem").desc(), F.col("seg")))
-    return (
-        base.withColumn("rk", rk)
-        .crossJoin(F.broadcast(extras))
-        .select(
-            "seg",
-            "nh",
-            "range_c",
-            (F.col("alloc0") + F.when(F.col("rk") <= F.col("e"), 1).otherwise(0))
-            .cast("long")
-            .alias("alloc"),
-        )
-    )
-
-
-@EXT.add(
-    "win_survival_km",
-    oracle="""
-    WITH mx AS (SELECT MAX(l_shipdate) AS mts FROM lineitem),
-    u AS (
-      SELECT l_orderkey, MAX(l_shipdate) AS last_ship
-      FROM lineitem GROUP BY 1
-    ),
-    lif AS (
-      SELECT CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-                            CAST(u.last_ship AS DATE)) AS BIGINT) AS t,
-             CASE WHEN date_diff('day', CAST(u.last_ship AS DATE),
-                                 CAST(mts AS DATE)) < 30
-                  THEN 0 ELSE 1 END AS churned
-      FROM u JOIN orders o ON u.l_orderkey = o.o_orderkey, mx
-    ),
-    byt AS (
-      SELECT t, CAST(SUM(churned) AS BIGINT) AS d,
-             CAST(COUNT(*) AS BIGINT) AS total
-      FROM lif WHERE t >= 0 GROUP BY 1
-    ),
-    risk AS (
-      SELECT t, d,
-             CAST(SUM(total) OVER (ORDER BY t DESC
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS n_risk
-      FROM byt
-    ),
-    ev AS (
-      SELECT t, d, n_risk,
-             CAST(ROUND(LN(CAST(n_risk - d AS DOUBLE)
-                           / CAST(n_risk AS DOUBLE)), 9)
-                  AS DECIMAL(28,9)) AS lnf
-      FROM risk WHERE d > 0
-    )
-    SELECT t, d, n_risk,
-           ROUND(EXP(CAST(SUM(lnf) OVER (ORDER BY t
-                                         ROWS UNBOUNDED PRECEDING)
-                          AS DOUBLE)), 9) AS surv
-    FROM ev
-    """,
-    doc=(
-        "Kaplan-Meier survival curve over order-fulfillment durations "
-        "(orderdate to last shipment, in days), with orders still "
-        "shipping in the final 30 days of the observation window "
-        "treated as CENSORED — the standard time-to-event estimator "
-        "(churn, fulfillment, failure), which no plain SQL aggregate "
-        "expresses. Numeric discipline: S(t) is a running PRODUCT of "
-        "exact rationals (1 - d/n); float cumprod is association-"
-        "order-dependent, so each factor's ln (one ln of an exact "
-        "rational) is rounded to 9 decimals, fixed into DECIMAL(28,9), "
-        "and the running sum is an EXACT decimal window sum — "
-        "order-independent by construction — with one exp + round at "
-        "the end. Negative synthetic durations (this fixture's ship "
-        "dates are independent of order dates) are excluded as "
-        "ill-formed subjects. Scale: one per-order shipment agg "
-        "(co-partitioned with the orders join on the order key), then "
-        "every window runs over the DISTINCT-duration table (bounded "
-        "by the observation span in DAYS — ~1.8k rows here, invariant "
-        "in the fact count), never over orders; the reverse-cumulative "
-        "n_risk is the same histogram-cumsum trick as "
-        "feat_discretize_quantile."
-    ),
-    tags=("win", "survival", "ml"),
-)
-def win_survival_km(spark, sf_dir):
-    from pyspark.sql import Window
-
-    li = t(spark, sf_dir, "lineitem")
-    orders = t(spark, sf_dir, "orders")
-    mx = li.agg(F.max("l_shipdate").alias("mts"))
-    u = li.groupBy("l_orderkey").agg(F.max("l_shipdate").alias("last_ship"))
-    lif = (
-        u.join(orders, u.l_orderkey == orders.o_orderkey)
-        .crossJoin(F.broadcast(mx))
-        .select(
-            F.datediff(F.to_date("last_ship"), F.to_date("o_orderdate"))
-            .cast("long")
-            .alias("t"),
-            F.when(
-                F.datediff(F.to_date("mts"), F.to_date("last_ship")) < 30, 0
-            )
-            .otherwise(1)
-            .alias("churned"),
-        )
-    )
-    byt = lif.filter(F.col("t") >= 0).groupBy("t").agg(
-        F.sum("churned").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("total"),
-    )
-    w_desc = (
-        Window.orderBy(F.col("t").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    risk = byt.select(
-        "t", "d", F.sum("total").over(w_desc).cast("long").alias("n_risk")
-    )
-    evr = risk.filter(F.col("d") > 0).withColumn(
-        "lnf",
-        F.round(
-            F.log(
-                (F.col("n_risk") - F.col("d")).cast("double")
-                / F.col("n_risk").cast("double")
-            ),
-            9,
-        ).cast("decimal(28,9)"),
-    )
-    w_asc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    return evr.select(
-        "t",
-        "d",
-        "n_risk",
-        F.round(F.exp(F.sum("lnf").over(w_asc).cast("double")), 9).alias(
-            "surv"
-        ),
-    )
-
-
-@EXT.add(
-    "qa_ks_drift",
-    oracle="""
-    -- x IS NOT NULL: DuckDB's LEAST *skips* NULL args, so binning via
-    -- LEAST(FLOOR(NULL), k) silently routes every NULL row into the
-    -- LAST bin — the trap the Spark operators' isNotNull filter avoids
-    -- (round-11 adversarial NULL sweep)
-    WITH ref AS (SELECT value AS x FROM events
-                 WHERE day(ts) <= 15 AND value IS NOT NULL
-                   AND ABS(value) < 1e150),
-    cur AS (SELECT value AS x FROM events
-            WHERE day(ts) > 15 AND value IS NOT NULL
-              AND ABS(value) < 1e150),
-    bounds AS (
-      SELECT MIN(x) AS vmin, MAX(x) AS vmax
-      FROM (SELECT x FROM ref UNION ALL SELECT x FROM cur)
-    ),
-    br AS (
-      SELECT LEAST(CAST(FLOOR((x - vmin)
-                         / GREATEST((vmax - vmin) / 256.0, 1e-12))
-                        AS BIGINT), 255) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM ref, bounds GROUP BY 1
-    ),
-    bc AS (
-      SELECT LEAST(CAST(FLOOR((x - vmin)
-                         / GREATEST((vmax - vmin) / 256.0, 1e-12))
-                        AS BIGINT), 255) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM cur, bounds GROUP BY 1
-    ),
-    spine AS (SELECT CAST(g AS BIGINT) AS bin
-              FROM generate_series(0, 255) s(g)),
-    j AS (
-      SELECT spine.bin,
-             CAST(COALESCE(br.c, 0) AS BIGINT) AS c1,
-             CAST(COALESCE(bc.c, 0) AS BIGINT) AS c2
-      FROM spine LEFT JOIN br USING (bin) LEFT JOIN bc USING (bin)
-    ),
-    cum AS (
-      SELECT bin,
-             SUM(c1) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS m1,
-             SUM(c2) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS m2
-      FROM j
-    ),
-    tot AS (SELECT CAST(SUM(c1) AS BIGINT) AS n1,
-                   CAST(SUM(c2) AS BIGINT) AS n2 FROM j)
-    SELECT n1, n2,
-           CAST(MAX(ABS(m1 * n2 - m2 * n1)) AS BIGINT) AS d_num,
-           -- degenerate-shape contract (r13 skew axis): single-day
-           -- collapse empties one sample — KS against an empty sample
-           -- is NULL, never a zero divide
-           CASE WHEN n1 > 0 AND n2 > 0 THEN
-             ROUND(CAST(MAX(ABS(m1 * n2 - m2 * n1)) AS DOUBLE)
-                   / CAST(n1 * n2 AS DOUBLE), 9)
-           END AS ks
-    FROM cum, tot GROUP BY n1, n2
-    """,
-    doc=(
-        "Two-sample Kolmogorov-Smirnov drift statistic between the "
-        "first and second half-month of events.value, EXACT over a "
-        "256-bin ecdf: the supremum |F1 - F2| is computed as "
-        "max|cum1*n2 - cum2*n1| in pure BIGINT cross-multiplication — "
-        "no float ecdf, so the statistic value-hash-oracles to the "
-        "last bit (the final ks double is one division, rounded 9). "
-        "Bin assignment is the same global-min/max fixed-width IEEE "
-        "float64 path as qa_psi_drift (deterministic under any "
-        "partitioning, unlike rank-based exact KS which needs a "
-        "global sort). Complements PSI: KS is the sup-norm test "
-        "(sensitive to the single worst ecdf gap), PSI the "
-        "expectation test. Scale: two map-side-combined bin aggs + a "
-        "cumsum over the FIXED 256-row spine (never data rows) + one "
-        "max — the fact table is scanned once per population and "
-        "never shuffled."
-    ),
-    tags=("qa", "drift"),
-)
-def qa_ks_drift(spark, sf_dir):
-    from pyspark.sql import Window
-
-    # single-pass tagged binning (scan-amplification study): the old
-    # per-sample binned() legs re-derived the events scan 12x across
-    # plan branches (ref/cur each rebuilt bounds and their own
-    # groupBy; j was re-derived for totals). One tagged projection +
-    # one conditional-count groupBy + full-frame window totals = TWO
-    # events scans (bounds, counts) and one shuffle instead of two.
-    # NULL x dropped BEFORE least(): Spark's least also skips NULL args
-    # and would route every NULL row into the last bin (the psi_drift
-    # filter, applied here too — round-11 adversarial NULL sweep)
-    ev = t(spark, sf_dir, "events").filter(
-        # finite-domain bound, same as psi_drift (r12 contract)
-        F.col("value").isNotNull() & (F.abs("value") < F.lit(1e150))
-    ).select(
-        F.col("value").alias("x"),
-        (F.dayofmonth("ts") <= 15).alias("is_ref"),
-    )
-    bounds = ev.agg(F.min("x").alias("vmin"), F.max("x").alias("vmax"))
-    n_bins = 256
-    w = F.greatest(
-        (F.col("vmax") - F.col("vmin")) / F.lit(float(n_bins)),
-        F.lit(1e-12),
-    )
-    b = F.least(
-        F.floor((F.col("x") - F.col("vmin")) / w), F.lit(n_bins - 1)
-    ).cast("long")
-    counts = (
-        ev.crossJoin(F.broadcast(bounds))
-        .select(b.alias("bin"), "is_ref")
-        .groupBy("bin")
-        .agg(
-            F.count_if(F.col("is_ref")).cast("long").alias("c1"),
-            F.count_if(~F.col("is_ref")).cast("long").alias("c2"),
-        )
-    )
-    spine = spark.range(n_bins).select(F.col("id").alias("bin"))
-    j = spine.join(counts, "bin", "left").fillna(0, subset=["c1", "c2"])
-    wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    w_full = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = j.select(
-        "bin",
-        F.sum("c1").over(wc).alias("m1"),
-        F.sum("c2").over(wc).alias("m2"),
-        F.sum("c1").over(w_full).cast("long").alias("n1"),
-        F.sum("c2").over(w_full).cast("long").alias("n2"),
-    )
-    return (
-        cum
-        .groupBy("n1", "n2")
-        .agg(
-            F.max(F.abs(F.col("m1") * F.col("n2") - F.col("m2") * F.col("n1")))
-            .cast("long")
-            .alias("d_num")
-        )
-        .select(
-            "n1",
-            "n2",
-            "d_num",
-            # degenerate-shape contract (r13 skew axis): empty sample
-            # (single-day collapse) -> NULL KS, never DIVIDE_BY_ZERO
-            F.when(
-                (F.col("n1") > 0) & (F.col("n2") > 0),
-                F.round(
-                    F.col("d_num").cast("double")
-                    / (F.col("n1") * F.col("n2")).cast("double"),
-                    9,
-                ),
-            ).alias("ks"),
-        )
-    )
-
-
-@EXT.add(
-    "agg_gini_segment",
-    oracle="""
-    WITH c AS (
-      SELECT c_mktsegment AS seg,
-             CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-      FROM customer WHERE c_acctbal IS NOT NULL  -- no rank position for NULL (round-11 NULL sweep)
-    ),
-    mn AS (SELECT seg, CAST(MIN(cents) AS BIGINT) AS vmin
-           FROM c GROUP BY 1),
-    s AS (
-      SELECT c.seg, c.cents - mn.vmin AS v
-      FROM c JOIN mn ON c.seg = mn.seg
-    ),
-    g AS (SELECT seg, v, CAST(COUNT(*) AS BIGINT) AS cnt
-          FROM s GROUP BY 1, 2),
-    cum AS (
-      SELECT seg, v, cnt,
-             SUM(cnt) OVER (PARTITION BY seg ORDER BY v
-                            ROWS UNBOUNDED PRECEDING) AS cm
-      FROM g
-    ),
-    agg AS (
-      SELECT seg,
-             CAST(SUM(cnt) AS BIGINT) AS n,
-             CAST(SUM(v * cnt) AS BIGINT) AS s1,
-             CAST(SUM(v * (2 * (cm - cnt) * cnt + cnt * (cnt + 1)))
-                  AS BIGINT) AS s2x2
-      FROM cum GROUP BY 1
-    )
-    SELECT seg, n, s1,
-           ROUND(CAST(s2x2 - (n + 1) * s1 AS DOUBLE)
-                 / CAST(NULLIF(n * s1, 0) AS DOUBLE), 9) AS gini
-    FROM agg
-    """,
-    doc=(
-        "Per-segment Gini concentration coefficient of (min-shifted) "
-        "account balances, EXACT via the value-histogram rank "
-        "identity: for sorted values with duplicates, "
-        "sum(i*x_i) collapses to sum over distinct v of "
-        "v*(c*C_prev + c(c+1)/2) — every term a BIGINT, so "
-        "G = (2*sum(i*x) - (n+1)*sum(x)) / (n*sum(x)) is one exact "
-        "integer ratio, rounded 9 at the single final division. The "
-        "shift to min makes the support non-negative (Gini's domain) "
-        "deterministically. Scale: same histogram-cumsum shape as "
-        "feat_discretize_quantile — the rank window sorts DISTINCT "
-        "values per segment, never customer rows; a naive "
-        "sort-and-rank Gini is a per-segment full data sort. "
-        "Degenerate all-equal segments surface NULL via "
-        "NULLIF(n*s1), not a divide error."
-    ),
-    tags=("agg", "stats"),
-)
-def agg_gini_segment(spark, sf_dir):
-    from pyspark.sql import Window
-
-    c = t(spark, sf_dir, "customer").filter(
-        F.col("c_acctbal").isNotNull()
-    ).select(
-        F.col("c_mktsegment").alias("seg"),
-        F.round(F.col("c_acctbal") * 100).try_cast("long").alias("cents"),
-    )
-    mn = c.groupBy("seg").agg(F.min("cents").cast("long").alias("vmin"))
-    s = c.join(F.broadcast(mn), "seg").select(
-        "seg", (F.col("cents") - F.col("vmin")).alias("v")
-    )
-    g = s.groupBy("seg", "v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    wc = (
-        Window.partitionBy("seg")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = g.select("seg", "v", "cnt", F.sum("cnt").over(wc).alias("cm"))
-    agg = cum.groupBy("seg").agg(
-        F.sum("cnt").cast("long").alias("n"),
-        F.sum(F.col("v") * F.col("cnt")).cast("long").alias("s1"),
-        F.sum(
-            F.col("v")
-            * (
-                2 * (F.col("cm") - F.col("cnt")) * F.col("cnt")
-                + F.col("cnt") * (F.col("cnt") + 1)
-            )
-        )
-        .cast("long")
-        .alias("s2x2"),
-    )
-    return agg.select(
-        "seg",
-        "n",
-        "s1",
-        F.round(
-            (F.col("s2x2") - (F.col("n") + 1) * F.col("s1")).cast("double")
-            / F.nullif(F.col("n") * F.col("s1"), F.lit(0)).cast("double"),
-            9,
-        ).alias("gini"),
-    )
-
-
-@EXT.add(
-    "agg_ohlc_bars",
-    oracle="""
-    WITH e AS (
-      SELECT user_id, date_trunc('day', ts) AS day, ts, event_id, value
-      FROM events WHERE event_type = 'purchase'
-    ),
-    w AS (
-      SELECT user_id, day, value,
-             first_value(value) OVER (PARTITION BY user_id, day
-                                      ORDER BY ts, event_id) AS o,
-             first_value(value) OVER (PARTITION BY user_id, day
-                                      ORDER BY ts DESC, event_id DESC) AS c
-      FROM e
-    )
-    SELECT user_id, day,
-           MAX(o) AS open, MAX(value) AS high, MIN(value) AS low,
-           MAX(c) AS close, CAST(COUNT(*) AS BIGINT) AS n_trades
-    FROM w GROUP BY 1, 2
-    """,
-    doc=(
-        "Daily OHLC (open/high/low/close) bars per user over purchase "
-        "values — the canonical time-series downsampling primitive "
-        "(market bars, metric rollups). Open/close are argmin/argmax "
-        "by (ts, event_id) expressed as ONE struct min/max per group — "
-        "no window, no sort: the whole query is a single "
-        "map-side-combined groupBy, because struct ordering makes "
-        "first/last-by-time an ordinary commutative aggregate (the "
-        "tie-break on event_id makes it deterministic where "
-        "first_value over a partial order is not). Values pass "
-        "through untouched (no float arithmetic), so doubles match "
-        "bit-exactly. Scale: one shuffle on (user, day) with near-"
-        "total map-side combine; the oracle's window formulation is "
-        "the shape this op deliberately avoids."
-    ),
-    tags=("agg", "timeseries"),
-)
-def agg_ohlc_bars(spark, sf_dir):
-    e = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.date_trunc("day", F.col("ts")).alias("day"),
-            "ts",
-            "event_id",
-            "value",
-        )
-    )
-    ost = F.min(F.struct("ts", "event_id", "value")).alias("o")
-    cst = F.max(F.struct("ts", "event_id", "value")).alias("c")
-    return (
-        e.groupBy("user_id", "day")
-        .agg(
-            ost,
-            cst,
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.count(F.lit(1)).cast("long").alias("n_trades"),
-        )
-        .select(
-            "user_id",
-            "day",
-            F.col("o.value").alias("open"),
-            "high",
-            "low",
-            F.col("c.value").alias("close"),
-            "n_trades",
-        )
-    )
-
-
-@EXT.add(
-    "agg_entropy_source",
-    oracle="""
-    WITH d AS (
-      SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS c
-      FROM documents GROUP BY 1, 2
-    ),
-    n AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM d GROUP BY 1),
-    term AS (
-      SELECT d.source, d.c, n.n,
-             CAST(ROUND(LN(CAST(d.c AS DOUBLE) / CAST(n.n AS DOUBLE)), 9)
-                  AS DECIMAL(18,9)) AS lnp
-      FROM d JOIN n USING (source)
-    )
-    SELECT source, CAST(MAX(n) AS BIGINT) AS n,
-           CAST(COUNT(*) AS BIGINT) AS n_langs,
-           ROUND(-CAST(SUM(CAST(c AS DECIMAL(12,0)) * lnp) AS DOUBLE)
-                 / CAST(MAX(n) AS DOUBLE), 9)
-             AS entropy
-    FROM term GROUP BY 1
-    """,
-    doc=(
-        "Shannon entropy of the language mix per document source — "
-        "the diversity metric a corpus-mixing pipeline monitors per "
-        "domain (a source collapsing to one language is a crawl "
-        "regression). Numeric discipline: H = -(1/n) * sum(c*ln(c/n)) "
-        "with each ln (of an exact count ratio) rounded to 9 decimals "
-        "and fixed into DECIMAL(18,9); the weighted product uses "
-        "DECIMAL(12,0) counts so the result precision (31,9) stays "
-        "under the 38-digit cap — wider operands would make Spark "
-        "silently SHED SCALE to fit, a 1e-8-scale error this query's "
-        "first draft actually hit — and the sum is then an EXACT "
-        "decimal aggregate, order-independent under any partitioning, "
-        "same contract as win_survival_km's log-sum, "
-        "with one division + round at the end. Scale: two map-side-"
-        "combined aggs on the (source, lang) domain; the fact table "
-        "is scanned once."
-    ),
-    tags=("agg", "stats", "llm"),
-)
-def agg_entropy_source(spark, sf_dir):
-    d = t(spark, sf_dir, "documents").groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    n = d.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    term = d.join(F.broadcast(n), "source").select(
-        "source",
-        "c",
-        "n",
-        F.round(
-            F.log(F.col("c").cast("double") / F.col("n").cast("double")), 9
-        )
-        .cast("decimal(18,9)")
-        .alias("lnp"),
-    )
-    return term.groupBy("source").agg(
-        F.max("n").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_langs"),
-        F.round(
-            -F.sum(F.col("c").cast("decimal(12,0)") * F.col("lnp"))
-            .cast("double")
-            / F.max("n").cast("double"),
-            9,
-        ).alias("entropy"),
-    )
-
-
-@EXT.add(
-    "agg_mwu_auc",
-    oracle="""
-    -- finite-domain bound (r12 extremes contract): keep the r11 NULL
-    -- convention (NULL routes to the last bin on BOTH engines via
-    -- LEAST's null-skip) but exclude |v| >= 1e150, where the bin
-    -- width overflows and the bin expression turns NaN
-    WITH x AS (SELECT value AS v FROM events WHERE event_type = 'purchase'
-               AND (value IS NULL OR ABS(value) < 1e150)),
-    y AS (SELECT value AS v FROM events WHERE event_type = 'view'
-          AND (value IS NULL OR ABS(value) < 1e150)),
-    bounds AS (
-      SELECT MIN(v) AS vmin, MAX(v) AS vmax
-      FROM (SELECT v FROM x UNION ALL SELECT v FROM y)
-    ),
-    bx AS (
-      SELECT LEAST(CAST(FLOOR((v - vmin)
-                         / GREATEST((vmax - vmin) / 256.0, 1e-12))
-                        AS BIGINT), 255) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM x, bounds GROUP BY 1
-    ),
-    by_ AS (
-      SELECT LEAST(CAST(FLOOR((v - vmin)
-                         / GREATEST((vmax - vmin) / 256.0, 1e-12))
-                        AS BIGINT), 255) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS c
-      FROM y, bounds GROUP BY 1
-    ),
-    spine AS (SELECT CAST(g AS BIGINT) AS bin
-              FROM generate_series(0, 255) s(g)),
-    j AS (
-      SELECT spine.bin,
-             CAST(COALESCE(bx.c, 0) AS BIGINT) AS c1,
-             CAST(COALESCE(by_.c, 0) AS BIGINT) AS c2
-      FROM spine LEFT JOIN bx USING (bin) LEFT JOIN by_ USING (bin)
-    ),
-    cum AS (
-      SELECT bin, c1, c2,
-             SUM(c1 + c2) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING)
-               - (c1 + c2) AS cprev
-      FROM j
-    ),
-    agg AS (
-      SELECT CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2,
-             CAST(SUM(c1 * (2 * cprev + (c1 + c2) + 1)) AS BIGINT) AS r1x2
-      FROM cum
-    )
-    SELECT n1, n2,
-           CAST(r1x2 - n1 * (n1 + 1) AS BIGINT) AS u1x2,
-           ROUND(CAST(r1x2 - n1 * (n1 + 1) AS DOUBLE)
-                 / CAST(2 * n1 * n2 AS DOUBLE), 9) AS auc
-    FROM agg
-    """,
-    doc=(
-        "Mann-Whitney rank-sum statistic between two event populations "
-        "(purchase vs view values) over the same 256-bin ecdf grid as "
-        "qa_ks_drift, with midrank tie handling — U/(n1*n2) is exactly "
-        "the AUC (the probability a random purchase value exceeds a "
-        "random view value), making this both the standard "
-        "nonparametric drift test AND the label-free model-score "
-        "separability metric. All-integer: ranks arrive through the "
-        "doubled-midrank identity (2*rank_avg = 2*C_prev + c + 1), so "
-        "R1, U1 are exact BIGINTs and only the final AUC division is "
-        "IEEE, rounded 9. Completes the drift battery: PSI "
-        "(expectation), KS (sup-norm), MWU (rank shift). Scale: two "
-        "map-side-combined bin aggs + a cumsum over the fixed 256-row "
-        "spine; the fact table is never shuffled."
-    ),
-    tags=("agg", "stats", "drift"),
-)
-def agg_mwu_auc(spark, sf_dir):
-    from pyspark.sql import Window
-
-    # single-pass tagged binning (scan-amplification study): one
-    # pushed-filter scan feeds bounds, a second the conditional-count
-    # groupBy — the old per-sample binned() legs re-derived the events
-    # scan 6x across branches
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        # finite-domain bound; NULL v keeps its r11 last-bin convention
-        .filter(F.col("value").isNull() | (F.abs("value") < F.lit(1e150)))
-        .select(
-            F.col("value").alias("v"),
-            (F.col("event_type") == "purchase").alias("is_x"),
-        )
-    )
-    bounds = ev.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
-    n_bins = 256
-    w = F.greatest(
-        (F.col("vmax") - F.col("vmin")) / F.lit(float(n_bins)),
-        F.lit(1e-12),
-    )
-    b = F.least(
-        F.floor((F.col("v") - F.col("vmin")) / w), F.lit(n_bins - 1)
-    ).cast("long")
-    counts = (
-        ev.crossJoin(F.broadcast(bounds))
-        .select(b.alias("bin"), "is_x")
-        .groupBy("bin")
-        .agg(
-            F.count_if(F.col("is_x")).cast("long").alias("c1"),
-            F.count_if(~F.col("is_x")).cast("long").alias("c2"),
-        )
-    )
-    spine = spark.range(n_bins).select(F.col("id").alias("bin"))
-    j = spine.join(counts, "bin", "left").fillna(0, subset=["c1", "c2"])
-    wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = j.select(
-        "bin",
-        "c1",
-        "c2",
-        (F.sum(F.col("c1") + F.col("c2")).over(wc) - (F.col("c1") + F.col("c2")))
-        .alias("cprev"),
-    )
-    agg = cum.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum(
-            F.col("c1") * (2 * F.col("cprev") + F.col("c1") + F.col("c2") + 1)
-        )
-        .cast("long")
-        .alias("r1x2"),
-    )
-    u1x2 = (F.col("r1x2") - F.col("n1") * (F.col("n1") + 1)).cast("long")
-    return agg.select(
-        "n1",
-        "n2",
-        u1x2.alias("u1x2"),
-        F.round(
-            u1x2.cast("double")
-            / (2 * F.col("n1") * F.col("n2")).cast("double"),
-            9,
-        ).alias("auc"),
-    )
-
-
-@EXT.add(
-    "agg_autocorr_daily",
-    oracle="""
-    WITH d AS (
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(COUNT(*) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2
-    ),
-    lagd AS (
-      SELECT event_type, x,
-             lead(x) OVER (PARTITION BY event_type ORDER BY day) AS xn
-      FROM d
-    ),
-    m AS (
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS BIGINT) AS s
-      FROM d GROUP BY 1
-    )
-    SELECT l.event_type, m.n,
-           ROUND(CAST(SUM((m.n * l.x - m.s) * (m.n * l.xn - m.s))
-                      FILTER (WHERE l.xn IS NOT NULL) AS DOUBLE)
-                 / CAST(NULLIF(SUM((m.n * l.x - m.s) * (m.n * l.x - m.s)),
-                               0) AS DOUBLE), 9) AS r1
-    FROM lagd l JOIN m USING (event_type)
-    GROUP BY 1, 2
-    """,
-    doc=(
-        "Lag-1 autocorrelation of the daily event-count series per "
-        "event type — the ingest-health signal that distinguishes "
-        "steady load (r1 near 0 for Poisson arrivals) from trending "
-        "or oscillating volume, feeding the same monitoring layer as "
-        "qa_anomaly_days. EXACT integer moments: every deviation is "
-        "n-scaled ((n*x - S) instead of x - S/n), so numerator and "
-        "denominator are exact BIGINT sums and only the final ratio "
-        "is IEEE, rounded 9 — the float-mean formulation would be "
-        "partition-order-dependent. Scale: the fact collapses to the "
-        "(type, day) domain in one map-side-combined agg; the lead "
-        "window and moment sums run over the BOUNDED daily series "
-        "(days x types), never data rows."
-    ),
-    tags=("agg", "timeseries", "qa"),
-)
-def agg_autocorr_daily(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagd = d.select(
-        "event_type", "x", F.lead("x").over(w).alias("xn")
-    )
-    m = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    dev = F.col("n") * F.col("x") - F.col("s")
-    devn = F.col("n") * F.col("xn") - F.col("s")
-    return (
-        lagd.join(F.broadcast(m), "event_type")
-        .groupBy("event_type", "n")
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("xn").isNotNull(), dev * devn))
-                .cast("double")
-                / F.nullif(F.sum(dev * dev), F.lit(0)).cast("double"),
-                9,
-            ).alias("r1")
-        )
-        .select("event_type", "n", "r1")
-    )
-
-
-@EXT.add(
-    "agg_bootstrap_ci",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderkey AS i,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS x
-      FROM orders
-    ),
-    b AS (SELECT CAST(g AS BIGINT) AS b FROM generate_series(0, 39) s(g)),
-    w AS (
-      SELECT b.b, o.x,
-             (o.i * 2654435761 + b.b * 40503 + 11) % 1000003 AS u
-      FROM o CROSS JOIN b
-    ),
-    pw AS (
-      SELECT b, x,
-             CASE WHEN u < 367880 THEN 0
-                  WHEN u < 735760 THEN 1
-                  WHEN u < 919701 THEN 2
-                  WHEN u < 981014 THEN 3
-                  WHEN u < 996342 THEN 4
-                  WHEN u < 999408 THEN 5
-                  ELSE 6 END AS wt
-      FROM w
-    ),
-    means AS (
-      -- HUGEINT micro means; a replicate whose micro mean overflows
-      -- BIGINT leaves the rank spine (r12 extremes contract) — the CI
-      -- is then over the finite replicates, deterministically
-      SELECT b,
-             TRY_CAST((SUM(CAST(wt AS HUGEINT) * x) // SUM(wt)) * 1000000
-                  + ((SUM(CAST(wt AS HUGEINT) * x) % SUM(wt)) * 1000000)
-                    // SUM(wt)
-                  AS BIGINT) AS mean_micro
-      FROM pw GROUP BY b HAVING SUM(wt) > 0
-    ),
-    ranked AS (
-      SELECT b, mean_micro,
-             row_number() OVER (ORDER BY mean_micro, b) AS rk,
-             COUNT(*) OVER () AS nb
-      FROM means WHERE mean_micro IS NOT NULL
-    )
-    SELECT CAST(MAX(nb) AS BIGINT) AS n_boot,
-           CAST(MAX(CASE WHEN rk = 2 THEN mean_micro END) AS BIGINT)
-             AS lo_micro,
-           CAST(MAX(CASE WHEN rk = nb - 1 THEN mean_micro END) AS BIGINT)
-             AS hi_micro
-    FROM ranked
-    """,
-    doc=(
-        "Deterministic Poisson-bootstrap confidence interval for the "
-        "mean order value: 40 bootstrap replicates where each row's "
-        "multiplicity in replicate b is Poisson(1)-distributed via an "
-        "integer inverse-CDF over a portable hash of (row, replicate) "
-        "— THE distributed bootstrap (no resample materialization, "
-        "one pass, map-side combinable), made reproducible across "
-        "engines/runs/partitionings where rand()-based bootstrap "
-        "never is. All-integer: weights from fixed hash thresholds, "
-        "replicate means as micro-scaled floor divisions, CI bounds = "
-        "rank-picked order statistics (drop one low/one high of 40 "
-        "= central ~95%), ties broken on replicate id. Scale: the "
-        "40x weight expansion collapses immediately into the per-"
-        "replicate agg (partial rows per partition = 40), so shuffle "
-        "volume is O(replicates), not O(rows); the rank window runs "
-        "over 40 rows."
-    ),
-    tags=("agg", "stats", "udaf"),
-)
-def agg_bootstrap_ci(spark, sf_dir):
-    from pyspark.sql import Window
-
-    o = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("i"),
-        F.round(F.col("o_totalprice") * 100).try_cast("long").alias("x"),
-    )
-    b = spark.range(0, 40).select(F.col("id").alias("b"))
-    w = o.crossJoin(F.broadcast(b)).select(
-        "b",
-        "x",
-        (
-            (F.col("i") * F.lit(2654435761) + F.col("b") * F.lit(40503) + 11)
-            % F.lit(1000003)
-        ).alias("u"),
-    )
-    wt = (
-        F.when(F.col("u") < 367880, 0)
-        .when(F.col("u") < 735760, 1)
-        .when(F.col("u") < 919701, 2)
-        .when(F.col("u") < 981014, 3)
-        .when(F.col("u") < 996342, 4)
-        .when(F.col("u") < 999408, 5)
-        .otherwise(6)
-    )
-    means = (
-        w.select("b", "x", wt.alias("wt"))
-        .groupBy("b")
-        .agg(
-            F.sum(F.col("wt") * F.col("x")).alias("sx"),
-            F.sum("wt").alias("sw"),
-        )
-        .filter(F.col("sw") > 0)
-        .select(
-            "b",
-            # DECIMAL(38,0) micro means (the long-division identity's
-            # documented escalation, triggered by the r12 extremes
-            # corpus): exact wide math, TRY_CAST back to BIGINT; a
-            # replicate whose micro mean overflows BIGINT leaves the
-            # rank spine below, deterministically on both engines
-            # Spark's `div` yields BIGINT even on decimal operands, so
-            # the quotient goes back through DECIMAL before the x1e6
-            F.expr(
-                "try_cast("
-                "CAST(CAST(sx AS DECIMAL(38,0)) div sw AS DECIMAL(38,0))"
-                " * 1000000"
-                " + ((CAST(sx AS DECIMAL(38,0)) % sw) * 1000000) div sw"
-                " AS BIGINT)"
-            ).alias("mean_micro"),
-        )
-        .filter(F.col("mean_micro").isNotNull())
-    )
-    wr = Window.orderBy("mean_micro", "b")
-    ranked = means.select(
-        "b",
-        "mean_micro",
-        F.row_number().over(wr).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("nb"),
-    )
-    return ranked.agg(
-        F.max("nb").cast("long").alias("n_boot"),
-        F.max(F.when(F.col("rk") == 2, F.col("mean_micro")))
-        .cast("long")
-        .alias("lo_micro"),
-        F.max(F.when(F.col("rk") == F.col("nb") - 1, F.col("mean_micro")))
-        .cast("long")
-        .alias("hi_micro"),
-    )
-
-
-def _prepare_bucketed_pair(spark, sf_dir):
-    """orders + lineitem persisted Hive-bucketed on the order key
-    (operators/upsert.py write_bucketed) — the pay-the-shuffle-once
-    layout; cached per (sf_dir) as catalog tables."""
-    import hashlib
-    import os
-
-    # pid-scoped names: the warehouse DIRECTORY outlives the in-memory
-    # catalog AND is shared by any concurrent process running from the
-    # same cwd — a shared name would make one process rmtree a location
-    # another is mid-read (observed as a sweep-vs-pytest flake). Each
-    # process owns its tables; stale dirs from dead processes are
-    # garbage-collected by age below, never deleted from under a
-    # concurrent reader.
-    tag = f"{hashlib.sha256(sf_dir.encode()).hexdigest()[:10]}_{os.getpid()}"
-    to, tl = f"sdp_bkt_orders_{tag}", f"sdp_bkt_lineitem_{tag}"
-    if not spark.catalog.tableExists(to):
-        import shutil
-        import time
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        if os.path.isdir(wh):
-            # GC stale pid-scoped dirs, but only when the owning
-            # process is actually DEAD: age alone is a bad liveness
-            # proxy (a >6h-old concurrent process could still be
-            # mid-read). The pid is the trailing name segment; kill(0)
-            # probes liveness without signalling. Everything is
-            # try/except'd — another process may GC the same entry
-            # between listdir and stat/rmtree.
-            cutoff = time.time() - 6 * 3600
-            for name in os.listdir(wh):
-                if not name.startswith("sdp_bkt_"):
-                    continue
-                try:
-                    pid = int(name.rsplit("_", 1)[-1])
-                except ValueError:
-                    pid = None
-                try:
-                    if pid is not None and pid != os.getpid():
-                        os.kill(pid, 0)  # raises if pid is dead
-                        continue  # owner alive — never delete
-                    elif pid == os.getpid():
-                        continue  # our own table (other sf_dir tag)
-                    # unparseable pid: fall back to the age cutoff
-                    if os.path.getmtime(os.path.join(wh, name)) >= cutoff:
-                        continue
-                except ProcessLookupError:
-                    pass  # owner dead — safe to GC regardless of age
-                except OSError:
-                    continue  # EPERM (not ours) / vanished dir: skip
-                shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
-        for name in (to, tl):
-            shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
-        from steam_data_pipeline_spark.operators.upsert import write_bucketed
-
-        write_bucketed(
-            spark,
-            t(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority"
-            ),
-            to,
-            "o_orderkey",
-            n_buckets=8,
-            sort_by="o_orderkey",
-        )
-        write_bucketed(
-            spark,
-            t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice"
-            ),
-            tl,
-            "l_orderkey",
-            n_buckets=8,
-            sort_by="l_orderkey",
-        )
-    return to, tl
-
-
-@EXT.add(
-    "join_bucket_colocated",
-    oracle="""
-    SELECT o.o_orderkey, o.o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                AS BIGINT) AS rev_cents
-    FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    GROUP BY 1, 2
-    """,
-    doc=(
-        "Co-located fact-fact join over Hive-bucketed tables "
-        "(operators/upsert.py write_bucketed): orders and lineitem are "
-        "persisted bucketed+sorted on the order key, so the join AND "
-        "the per-order rollup both run with ZERO exchanges — the "
-        "pay-the-shuffle-once-at-write-time layout that is the "
-        "standard answer to a repeated 100 TB fact join (plan-"
-        "contracted: no Exchange in the executed plan). The registry "
-        "entry makes the layout's CORRECTNESS driver-checked too: "
-        "results must equal the plain shuffled join bit-exactly "
-        "(exact cents sums). Bucket count is a layout constant (8 "
-        "here; thousands in production) — AQE cannot help a shuffle "
-        "that never happens."
-    ),
-    tags=("join", "layout", "bucketed"),
-)
-def join_bucket_colocated(spark, sf_dir):
-    to, tl = _prepare_bucketed_pair(spark, sf_dir)
-    # the merge hint pins the bucketed SMJ path (at fixture scale the
-    # small side would otherwise broadcast, which hides the layout
-    # property under test; at 100 TB merge IS the chosen strategy)
-    o = spark.table(to).hint("merge")
-    li = spark.table(tl)
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).try_cast("long"))
-            .cast("long")
-            .alias("rev_cents"),
-        )
-    )
-
-
-@EXT.add(
-    "win_rolling_corr",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
-                           THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                           ELSE 0 END) AS BIGINT) AS p,
-             CAST(SUM(CASE WHEN event_type = 'view'
-                           THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                           ELSE 0 END) AS BIGINT) AS v
-      FROM events WHERE event_type IN ('purchase', 'view')
-      GROUP BY 1
-    ),
-    w AS (
-      SELECT day, p, v,
-             CAST(COUNT(*) OVER fr AS BIGINT) AS n,
-             CAST(SUM(p) OVER fr AS BIGINT) AS sx,
-             CAST(SUM(v) OVER fr AS BIGINT) AS sy,
-             CAST(SUM(p * p) OVER fr AS BIGINT) AS sxx,
-             CAST(SUM(v * v) OVER fr AS BIGINT) AS syy,
-             CAST(SUM(p * v) OVER fr AS BIGINT) AS sxy
-      FROM d
-      WINDOW fr AS (ORDER BY day
-                    RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
-    )
-    SELECT day, n AS n_days,
-           ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
-                 / NULLIF(SQRT(CAST(n * sxx - sx * sx AS DOUBLE))
-                          * SQRT(CAST(n * syy - sy * sy AS DOUBLE)), 0),
-                 9) AS corr7
-    FROM w
-    """,
-    doc=(
-        "Trailing 7-day rolling Pearson correlation between the daily "
-        "purchase and view revenue series — the co-movement monitor "
-        "behind 'are views still converting' dashboards (a correlation "
-        "collapse flags a funnel break faster than either series "
-        "alone). EXACT moment discipline: both series are cent-scaled "
-        "BIGINTs, all six windowed moments (n, Sx, Sy, Sxx, Syy, Sxy) "
-        "are exact integer sums over the RANGE frame. At the FIXTURE "
-        "SFs the cross-multiplied numerator/variance terms stay < "
-        "2^53 so the double casts are exact; at larger SFs sx*sy ~ "
-        "(7d of daily cents)^2 exceeds 2^53 first (and eventually "
-        "BIGINT for sxy) — cross-engine equality still holds because "
-        "both engines run the identical exact-BIGINT-then-IEEE-cast "
-        "sequence, and the documented escape hatch is the DECIMAL(38) "
-        "moment swap agg_bootstrap_ci records. The final "
-        "num/(sqrt*sqrt) is the ONLY float arithmetic (rounded 9) — "
-        "the same correctly-rounded-op sequence in both engines, "
-        "bit-exact (a running float corr would be frame-order-"
-        "dependent). Zero-variance frames surface NULL via NULLIF. "
-        "Scale: the fact table collapses to the BOUNDED daily grain "
-        "in one map-side-combined agg; the unpartitioned RANGE window "
-        "runs over days-not-rows (the qa_ks_drift spine argument — at "
-        "100 TB it is still ~365 rows/yr; partition by year if ever "
-        "needed)."
-    ),
-    tags=("window", "timeseries", "stats"),
-)
-def win_rolling_corr(spark, sf_dir):
-    from pyspark.sql import Window
-
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", cents).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("p"),
-            F.sum(
-                F.when(F.col("event_type") == "view", cents).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("v"),
-        )
-    )
-    fr = Window.orderBy(F.unix_date(F.col("day").cast("date"))).rangeBetween(
-        -6, 0
-    )
-    w = d.select(
-        "day",
-        F.count(F.lit(1)).over(fr).cast("long").alias("n"),
-        F.sum("p").over(fr).cast("long").alias("sx"),
-        F.sum("v").over(fr).cast("long").alias("sy"),
-        F.sum(F.col("p") * F.col("p")).over(fr).cast("long").alias("sxx"),
-        F.sum(F.col("v") * F.col("v")).over(fr).cast("long").alias("syy"),
-        F.sum(F.col("p") * F.col("v")).over(fr).cast("long").alias("sxy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    )
-    den = F.nullif(
-        F.sqrt(
-            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-                "double"
-            )
-        )
-        * F.sqrt(
-            (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
-                "double"
-            )
-        ),
-        F.lit(0.0),
-    )
-    return w.select(
-        "day",
-        F.col("n").alias("n_days"),
-        F.round(num / den, 9).alias("corr7"),
-    )
-
-
-@EXT.add(
-    "proj_unpivot_melt",
-    oracle="""
-    WITH wide AS (
-      SELECT c_nationkey AS nationkey,
-             CAST(COUNT(*) AS BIGINT) AS n_custs,
-             CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-               AS bal_cents,
-             CAST(MAX(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-               AS max_cents
-      FROM customer GROUP BY 1
-    )
-    SELECT nationkey, 'n_custs' AS metric, n_custs AS value FROM wide
-    UNION ALL
-    SELECT nationkey, 'bal_cents', bal_cents FROM wide
-    UNION ALL
-    SELECT nationkey, 'max_cents', max_cents FROM wide
-    """,
-    doc=(
-        "Wide-to-long UNPIVOT/melt (DataFrame.unpivot, SQL stack()) — "
-        "the inverse of agg_pivot_daily and the shape every metrics "
-        "store ingests (one row per (entity, metric, value)). The "
-        "per-nation metric columns are exact cents BIGINTs so the "
-        "melted value column is one type with no float coercion "
-        "(unpivot requires a common value type — casting AFTER the "
-        "melt would be a correctness trap for mixed int/double "
-        "metrics). Plan shape: unpivot compiles to Expand, which "
-        "multiplies ROWS BY K — done here at the 25-row aggregate "
-        "grain where it is free; melting the raw fact table first and "
-        "aggregating after would scan-amplify k-fold at 100 TB (the "
-        "qa_profile melt pays it once deliberately; this op shows the "
-        "agg-then-melt order)."
-    ),
-    tags=("proj", "reshape"),
-)
-def proj_unpivot_melt(spark, sf_dir):
-    cents = F.round(F.col("c_acctbal") * 100).try_cast("long")
-    wide = (
-        t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_custs"),
-            F.sum(cents).cast("long").alias("bal_cents"),
-            F.max(cents).cast("long").alias("max_cents"),
-        )
-    )
-    return wide.unpivot(
-        ids=["nationkey"],
-        values=["n_custs", "bal_cents", "max_cents"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    )
-
-
-@EXT.add(
-    "qa_freshness_lag",
-    oracle="""
-    WITH m AS (
-      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-             MAX(ts) AS last_ts
-      FROM events GROUP BY 1
-    ),
-    g AS (SELECT MAX(ts) AS gmax FROM events)
-    SELECT event_type, n, last_ts,
-           CAST(epoch_us(gmax) - epoch_us(last_ts) AS BIGINT) AS lag_micros,
-           (epoch_us(gmax) - epoch_us(last_ts)) > 3600000000 AS stale
-    FROM m, g
-    """,
-    doc=(
-        "Per-stream freshness audit: each event type's latest arrival "
-        "vs the global high-water mark, exact in epoch MICROSECONDS "
-        "(BIGINT subtraction — a seconds-granularity float lag would "
-        "alias sub-second staleness), with a 1-hour stale flag — the "
-        "ingest-liveness gate every multi-source pipeline runs before "
-        "publishing (one silent-stalled source must fail the batch, "
-        "not dilute into an average). Scale: one map-side-combined "
-        "agg to the 5-row type grain; the 1-row global max broadcasts "
-        "back via BroadcastNestedLoopJoin (the agg_decay_halflife "
-        "ref-row pattern) — the fact table is scanned once."
-    ),
-    tags=("qa", "freshness", "observability"),
-)
-def qa_freshness_lag(spark, sf_dir):
-    ev = t(spark, sf_dir, "events")
-    m = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.max("ts").alias("last_ts"),
-    )
-    g = ev.agg(F.max("ts").alias("gmax"))
-    lag = F.unix_micros("gmax") - F.unix_micros("last_ts")
-    return m.crossJoin(F.broadcast(g)).select(
-        "event_type",
-        "n",
-        "last_ts",
-        lag.cast("long").alias("lag_micros"),
-        (lag > F.lit(3600000000)).alias("stale"),
-    )
-
-
-@EXT.add(
-    "agg_hll_intersection",
-    oracle="""
-    WITH a AS (
-      SELECT DISTINCT user_id * 100 + day(ts) AS k
-      FROM events WHERE event_type = 'purchase'
-    ),
-    b AS (
-      SELECT DISTINCT user_id * 100 + day(ts) AS k
-      FROM events WHERE event_type = 'view'
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM a) AS n_a,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM b) AS n_b,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM a JOIN b USING (k))
-             AS n_inter,
-           TRUE AS inter_ok
-    """,
-    doc=(
-        "Audience-overlap estimation from MERGEABLE sketches: "
-        "|A∩B| ≈ est(A) + est(B) − est(A∪B) by inclusion–exclusion "
-        "over Datasketches HLL (hll_union composes the stored "
-        "sketches; the raw keys are never rescanned) — the two-"
-        "segment overlap question every audience dashboard answers "
-        "from a sketch table because the exact distinct-join is a "
-        "full shuffle of both segments at 100 TB. Segments are "
-        "user-DAYS (purchase-days vs view-days), a genuine partial "
-        "overlap (557 of ~1610/side at sf0.01). Invariant oracle "
-        "(agg_hll_mergeable pattern): exact n_a/n_b/n_inter anchor "
-        "the row; inter_ok asserts the sketch estimate lands within "
-        "0.05·(n_a+n_b) — measured residual ≤ 0.39× that bound at "
-        "sf0.001/0.01/0.1 (inclusion–exclusion compounds three "
-        "sketch errors, hence the union-sized tolerance). The exact "
-        "legs exist only to anchor the oracle; the estimate path "
-        "touches sketches alone."
-    ),
-    tags=("agg", "approx", "sketch", "invariant"),
-)
-def agg_hll_intersection(spark, sf_dir):
-    # single-pass shape (scan-amplification study): the old per-side
-    # distincts were each re-derived by their count, the intersection
-    # join and their sketch — 6 events scans and 6 shuffles. One
-    # tagged groupBy(k) gives per-key membership flags; ONE global
-    # aggregate computes both exact counts, the exact intersection
-    # AND both HLL sketches (hll_sketch_agg skips the NULLs the
-    # when() leaves for the other side's keys) — 1 scan, 2 shuffles.
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select(
-            (F.col("user_id") * 100 + F.dayofmonth("ts")).alias("k"),
-            (F.col("event_type") == "purchase").alias("is_a"),
-        )
-    )
-    g = ev.groupBy("k").agg(
-        F.bool_or("is_a").alias("has_a"),
-        F.bool_or(~F.col("is_a")).alias("has_b"),
-    )
-    agg = g.agg(
-        F.count_if("has_a").cast("long").alias("n_a"),
-        F.count_if("has_b").cast("long").alias("n_b"),
-        F.count_if(F.col("has_a") & F.col("has_b"))
-        .cast("long")
-        .alias("n_inter"),
-        F.hll_sketch_agg(F.when(F.col("has_a"), F.col("k"))).alias("sa"),
-        F.hll_sketch_agg(F.when(F.col("has_b"), F.col("k"))).alias("sb"),
-    )
-    est = (
-        F.hll_sketch_estimate("sa")
-        + F.hll_sketch_estimate("sb")
-        - F.hll_sketch_estimate(F.hll_union("sa", "sb"))
-    )
-    return agg.select(
-        "n_a",
-        "n_b",
-        "n_inter",
-        (
-            F.abs(est - F.col("n_inter"))
-            <= 0.05 * (F.col("n_a") + F.col("n_b"))
-        ).alias("inter_ok"),
-    )
-
-
-@EXT.add(
-    "join_anti_window",
-    oracle="""
-    SELECT p.event_id, p.user_id, p.ts, p.value
-    FROM events p
-    WHERE p.event_type = 'purchase'
-      AND NOT EXISTS (
-        SELECT 1 FROM events v
-        WHERE v.event_type = 'view'
-          AND v.user_id = p.user_id
-          AND v.ts < p.ts
-          AND v.ts > p.ts - INTERVAL 1 HOUR
-      )
-    """,
-    doc=(
-        "Temporal ANTI join: purchases with NO view by the same user "
-        "in the strictly-preceding hour — the absence-of-precursor "
-        "primitive (fraud screens, attribution holdouts, broken-"
-        "tracking audits), which SQL states as a time-range NOT "
-        "EXISTS self-join. The Spark plan avoids the self-join "
-        "entirely: union-tag views and purchases, ONE window per "
-        "user over unix_micros with frame RANGE [t−3599999999, t−1] "
-        "(µs-exact open interval (t−1h, t), matching the oracle's "
-        "strict inequalities) counting view-tagged rows, keep "
-        "purchases where the count is 0 — one shuffle on user_id, "
-        "no join at all, where the range self-join is quadratic per "
-        "hot user. Non-vacuous both ways at every fixture SF (some "
-        "purchases have preceding views, some don't). Scale: the "
-        "single hash-partitioned window is the join_asof_nearest "
-        "shape; per-user event history bounds the sort run."
-    ),
-    tags=("join", "anti", "window", "temporal"),
-)
-def join_anti_window(spark, sf_dir):
-    from pyspark.sql import Window
-
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            "value",
-            (F.col("event_type") == "view").cast("long").alias("is_view"),
-        )
-    )
-    hour_us = 3600 * 1000 * 1000
-    fr = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-(hour_us - 1), -1)
-    )
-    return (
-        ev.withColumn("n_prior_views", F.sum("is_view").over(fr))
-        .filter(
-            (F.col("is_view") == 0)
-            & (
-                F.col("n_prior_views").isNull()
-                | (F.col("n_prior_views") == 0)
-            )
-        )
-        .select("event_id", "user_id", "ts", "value")
-    )
-
-
-@EXT.add(
-    "win_gap_fill_interpolate",
-    oracle="""
-    WITH obs AS (
-      SELECT user_id, date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-        -- operational time domain (r12 ts-extremes contract)
-        AND ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-    ),
-    b AS (SELECT user_id, MIN(day) AS mn, MAX(day) AS mx FROM obs GROUP BY 1),
-    spine AS (
-      SELECT user_id,
-             CAST(unnest(generate_series(mn, mx, INTERVAL 1 DAY))
-                  AS TIMESTAMP) AS day
-      FROM b
-    ),
-    j AS (
-      SELECT s.user_id, s.day, o.cents
-      FROM spine s LEFT JOIN obs o USING (user_id, day)
-    ),
-    f AS (
-      SELECT user_id, day, cents,
-             last_value(cents IGNORE NULLS) OVER
-               (PARTITION BY user_id ORDER BY day
-                ROWS UNBOUNDED PRECEDING) AS pv,
-             last_value(CASE WHEN cents IS NOT NULL THEN day END
-                        IGNORE NULLS) OVER
-               (PARTITION BY user_id ORDER BY day
-                ROWS UNBOUNDED PRECEDING) AS pd,
-             first_value(cents IGNORE NULLS) OVER
-               (PARTITION BY user_id ORDER BY day
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-             first_value(CASE WHEN cents IS NOT NULL THEN day END
-                         IGNORE NULLS) OVER
-               (PARTITION BY user_id ORDER BY day
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-      FROM j
-    ),
-    g AS (
-      -- EXACT 9-dp half-up interpolation (r13): the float form
-      -- (pv + (nv-pv)*frac rounded 9) diverged 1 ulp cross-engine at
-      -- extreme cents magnitudes (ROUND near-tie), and nv - pv can
-      -- overflow BIGINT at signed extremes; nano = half-up of
-      -- (pv*D + (nv-pv)*d1) * 1e9 / D in HUGEINT, one double cast +
-      -- one division at the end (the llm_embedding_centroid pattern)
-      SELECT user_id, day, cents, pv, nv,
-             (CAST(pv AS HUGEINT) * date_diff('day', pd, nd)
-              + (CAST(nv AS HUGEINT) - pv)
-                * date_diff('day', pd, day)) * 1000000000 AS nn,
-             CAST(date_diff('day', pd, nd) AS HUGEINT) AS dd
-      FROM f
-    )
-    SELECT user_id, day,
-           CASE WHEN cents IS NOT NULL THEN CAST(cents AS DOUBLE)
-                ELSE CAST(CASE WHEN nn >= 0
-                          THEN  (nn * 2 + dd) // (2 * dd)
-                          ELSE -(((-nn) * 2 + dd) // (2 * dd))
-                     END AS DOUBLE) / 1e9
-           END AS filled,
-           cents IS NULL AS is_interp
-    FROM g
-    """,
-    doc=(
-        "Per-key time-series gap fill with LINEAR interpolation — the "
-        "hypertable `interpolate()` companion to win_resample_ffill's "
-        "locf: each user's daily purchase series gets its missing "
-        "days minted from a per-key sequence() spine and filled as "
-        "prev + (next−prev)·frac. Determinism (r13): observed values "
-        "are exact cents BIGINTs and the fill is computed as an EXACT "
-        "9-dp half-up integer division in decimal(38,0)/HUGEINT "
-        "(nano = half-up((pv*D + (nv−pv)*d1)*1e9 / D); the float "
-        "form's ROUND(x,9) diverged 1 ulp cross-engine at extreme "
-        "cents magnitudes, and nv−pv can overflow BIGINT), with one "
-        "double cast + one division at the end. Boundary days are observed by "
-        "construction (spine spans min..max per key), so prev/next "
-        "always exist on interpolated rows. Scale: the spine explode "
-        "is bounded by per-key span (never a global calendar cross "
-        "join); both IGNORE-NULLS walks share ONE (user, day) "
-        "exchange+sort — the join_asof_nearest two-window shape."
-    ),
-    tags=("window", "timeseries", "gapfill"),
-)
-def win_gap_fill_interpolate(spark, sf_dir):
-    from pyspark.sql import Window
-
-    obs = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        # operational time domain (r12 ts-extremes contract)
-        .filter(
-            (F.col("ts") >= F.lit("1970-01-01").cast("timestamp"))
-            & (F.col("ts") < F.lit("2100-01-01").cast("timestamp"))
-        )
-        .groupBy("user_id", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
-    spine = (
-        obs.groupBy("user_id")
-        .agg(F.min("day").alias("mn"), F.max("day").alias("mx"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("mn", "mx", F.expr("INTERVAL 1 DAY"))
-            ).alias("day"),
-        )
-    )
-    j = spine.join(obs, ["user_id", "day"], "left")
-    back = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    fwd = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    obs_day = F.when(F.col("cents").isNotNull(), F.col("day"))
-    f = j.select(
-        "user_id",
-        "day",
-        "cents",
-        F.last("cents", ignorenulls=True).over(back).alias("pv"),
-        F.last(obs_day, ignorenulls=True).over(back).alias("pd"),
-        F.first("cents", ignorenulls=True).over(fwd).alias("nv"),
-        F.first(obs_day, ignorenulls=True).over(fwd).alias("nd"),
-    )
-    # EXACT 9-dp half-up interpolation (r13): the float form diverged
-    # 1 ulp cross-engine at extreme cents (ROUND near-tie), and the
-    # raw nv - pv BIGINT subtraction can ANSI-overflow at signed
-    # extremes. nano = half-up((pv*D + (nv-pv)*d1) * 1e9 / D) in
-    # decimal(38,0) via the exact (a - a%b)/b quotient (remainder
-    # removed -> decimal division exact), one double cast + one final
-    # /1e9 — the llm_embedding_centroid discipline. |N| <= ~5e32 and
-    # the quotient <= ~9.3e27 both fit decimal(38).
-    g = f.withColumn(
-        "dd", F.datediff(F.col("nd"), F.col("pd")).cast("long")
-    ).withColumn(
-        "nn",
-        (
-            F.col("pv").cast("decimal(38,0)") * F.col("dd")
-            + (
-                F.col("nv").cast("decimal(38,0)")
-                - F.col("pv").cast("decimal(38,0)")
-            )
-            * F.datediff(F.col("day"), F.col("pd")).cast("long")
-        )
-        * F.lit(1000000000).cast("decimal(38,0)"),
-    )
-    _q = (
-        "(({s} * 2 + dd) - ({s} * 2 + dd) % (2 * dd)) / (2 * dd)"
-    )
-    nano = F.expr(
-        "CASE WHEN nn >= 0 THEN "
-        + _q.format(s="nn")
-        + " ELSE -(" + _q.format(s="(-nn)") + ") END"
-    )
-    return g.select(
-        "user_id",
-        "day",
-        F.when(F.col("cents").isNotNull(), F.col("cents").cast("double"))
-        .otherwise(nano.cast("double") / F.lit(1e9))
-        .alias("filled"),
-        F.col("cents").isNull().alias("is_interp"),
-    )
-
-
-@EXT.add(
-    "win_drawdown",
-    oracle="""
-    WITH flows AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN event_type = 'purchase'
-                  THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                  ELSE -TRY_CAST(ROUND(value * 100) AS BIGINT) END AS flow
-      FROM events WHERE event_type IN ('purchase', 'error')
-    ),
-    c1 AS (
-      SELECT user_id, ts, event_id,
-             SUM(flow) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS bal
-      FROM flows
-    ),
-    c AS (
-      SELECT user_id, bal,
-             MAX(bal) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS UNBOUNDED PRECEDING) AS peak
-      FROM c1
-    )
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_flows,
-           CAST(MAX(peak) AS BIGINT) AS peak_cents,
-           CAST(MAX(peak - bal) AS BIGINT) AS max_drawdown_cents
-    FROM c GROUP BY 1
-    """,
-    doc=(
-        "Maximum drawdown per user over the running net-revenue "
-        "balance (purchases credit, error events reverse — the "
-        "refund-shaped series): drawdown_t = running_peak − balance_t, "
-        "reported as its per-user maximum — the risk metric every "
-        "balance/equity monitor computes, and a genuinely ORDER-"
-        "dependent window op (no commutative-aggregate rewrite "
-        "exists: the answer depends on the path, not the multiset). "
-        "All arithmetic is exact BIGINT cents — cumsum, running max, "
-        "and their difference — so the result value-hashes bit-exactly; "
-        "(ts, event_id) ordering makes same-timestamp flows "
-        "deterministic. Scale: ONE hash-partitioned window "
-        "exchange+sort on user_id computes both the cumsum and the "
-        "running max (same frame), then a map-side-combined per-user "
-        "agg; per-user history bounds the sort run — the "
-        "win_ewma_recursive skew story applies."
-    ),
-    tags=("window", "timeseries", "finance"),
-)
-def win_drawdown(spark, sf_dir):
-    from pyspark.sql import Window
-
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    flows = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "error"))
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(F.col("event_type") == "purchase", cents)
-            .otherwise(-cents)
-            .alias("flow"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    c1 = flows.select(
-        "user_id", "ts", "event_id", F.sum("flow").over(w).alias("bal")
-    )
-    c = c1.select("user_id", "bal", F.max("bal").over(w).alias("peak"))
-    return c.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_flows"),
-        F.max("peak").cast("long").alias("peak_cents"),
-        F.max(F.col("peak") - F.col("bal"))
-        .cast("long")
-        .alias("max_drawdown_cents"),
-    )
-
-
-@EXT.add(
-    "qa_outlier_mad",
-    oracle="""
-    WITH v AS (
-      -- c IS NOT NULL: out-of-domain cents (r12 extremes contract)
-      -- leave the rank spine like NULLs do (engine-opposite order)
-      SELECT event_type, c FROM (
-        SELECT event_type, TRY_CAST(ROUND(value * 100) AS BIGINT) AS c
-        FROM events WHERE value IS NOT NULL
-      ) WHERE c IS NOT NULL
-    ),
-    r1 AS (
-      SELECT event_type, c,
-             row_number() OVER (PARTITION BY event_type ORDER BY c) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM v
-    ),
-    med AS (
-      SELECT event_type, MAX(n) AS n, MAX(c) AS med
-      FROM r1 WHERE rn = (n + 1) // 2 GROUP BY 1
-    ),
-    dev AS (
-      SELECT v.event_type, v.c, ABS(v.c - m.med) AS ad, m.med, m.n
-      FROM v JOIN med m USING (event_type)
-    ),
-    r2 AS (
-      SELECT event_type, ad, med, n,
-             row_number() OVER (PARTITION BY event_type ORDER BY ad) AS rn
-      FROM dev
-    ),
-    mad AS (
-      SELECT event_type, MAX(med) AS med, MAX(n) AS n, MAX(ad) AS mad
-      FROM r2 WHERE rn = (n + 1) // 2 GROUP BY 1
-    )
-    SELECT d.event_type, CAST(MAX(d.n) AS BIGINT) AS n,
-           CAST(MAX(m.med) AS BIGINT) AS med_cents,
-           CAST(MAX(m.mad) AS BIGINT) AS mad_cents,
-           CAST(SUM(CASE WHEN d.ad > 5 * m.mad THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_outliers
-    FROM dev d JOIN mad m USING (event_type)
-    GROUP BY 1
-    """,
-    doc=(
-        "Robust outlier audit per event type via MEDIAN ABSOLUTE "
-        "DEVIATION: flag values with |x − median| > 5·MAD (≈3.4σ "
-        "under normality) — the screen that survives the heavy tails "
-        "and contamination that wreck mean/stddev z-scores "
-        "(qa_anomaly_days' moment-based sibling; a single 1e9 glitch "
-        "row shifts a mean gate, but not this one). Both medians are "
-        "EXACT lower-median order statistics ((n+1)//2 by "
-        "row_number — the agg_percentiles_exact pattern), every "
-        "comparison exact BIGINT cents: no float enters the query at "
-        "all. Scale: two window sorts partitioned by the 5-value "
-        "type column + one broadcast of the 5-row median/MAD dims "
-        "back onto the fact; the documented 100 TB swap is "
-        "percentile_approx for both medians (agg_percentiles_approx's "
-        "rank-error contract), keeping the gate one scan + sketches."
-    ),
-    tags=("qa", "outlier", "robust"),
-)
-def qa_outlier_mad(spark, sf_dir):
-    from pyspark.sql import Window
-
-    v = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.round(F.col("value") * 100).try_cast("long").alias("c"),
-        )
-        # out-of-domain cents leave the rank spine (r12 contract)
-        .filter(F.col("c").isNotNull())
-    )
-    wt = Window.partitionBy("event_type")
-    r1 = v.select(
-        "event_type",
-        "c",
-        F.row_number().over(wt.orderBy("c")).alias("rn"),
-        F.count(F.lit(1)).over(wt).alias("n"),
-    )
-    med = (
-        r1.filter(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .groupBy("event_type")
-        .agg(F.max("n").alias("n"), F.max("c").alias("med"))
-    )
-    dev = v.join(F.broadcast(med), "event_type").select(
-        "event_type",
-        "c",
-        F.abs(F.col("c") - F.col("med")).alias("ad"),
-        "med",
-        "n",
-    )
-    r2 = dev.select(
-        "event_type",
-        "ad",
-        "med",
-        "n",
-        F.row_number().over(wt.orderBy("ad")).alias("rn"),
-    )
-    mad = (
-        r2.filter(F.col("rn") == F.floor((F.col("n") + 1) / 2))
-        .groupBy("event_type")
-        .agg(F.max("med").alias("med"), F.max("n").alias("n"), F.max("ad").alias("mad"))
-    )
-    return (
-        dev.select("event_type", "ad", "n")
-        .join(F.broadcast(mad.select("event_type", "med", "mad")), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.max("n").cast("long").alias("n"),
-            F.max("med").cast("long").alias("med_cents"),
-            F.max("mad").cast("long").alias("mad_cents"),
-            F.sum(
-                F.when(F.col("ad") > 5 * F.col("mad"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("n_outliers"),
-        )
-    )
-
-
-@EXT.add(
-    "feat_ols_normal_eq",
-    oracle="""
-    WITH m AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(ROUND(l_quantity) AS BIGINT)) AS BIGINT) AS s1,
-             CAST(SUM(CAST(ROUND(l_discount * 100) AS BIGINT)) AS BIGINT)
-               AS s2,
-             CAST(SUM(TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-                  AS BIGINT) AS sy,
-             -- HUGEINT second moments: an in-domain extreme row's
-             -- qty*price_cents product alone passes 2^63 (r12
-             -- extremes contract); the double casts downstream are
-             -- correctly rounded from the exact wide integers on
-             -- both engines
-             SUM(CAST(ROUND(l_quantity) AS HUGEINT)
-                 * CAST(ROUND(l_quantity) AS BIGINT)) AS s11,
-             SUM(CAST(ROUND(l_quantity) AS HUGEINT)
-                 * CAST(ROUND(l_discount * 100) AS BIGINT)) AS s12,
-             SUM(CAST(ROUND(l_discount * 100) AS HUGEINT)
-                 * CAST(ROUND(l_discount * 100) AS BIGINT)) AS s22,
-             SUM(CAST(ROUND(l_quantity) AS HUGEINT)
-                 * TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS s1y,
-             SUM(CAST(ROUND(l_discount * 100) AS HUGEINT)
-                 * TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT))
-               AS s2y
-      FROM lineitem
-    ),
-    c AS (
-      SELECT n,
-             CAST(n AS DOUBLE) * s11 - CAST(s1 AS DOUBLE) * s1 AS a11,
-             CAST(n AS DOUBLE) * s12 - CAST(s1 AS DOUBLE) * s2 AS a12,
-             CAST(n AS DOUBLE) * s22 - CAST(s2 AS DOUBLE) * s2 AS a22,
-             CAST(n AS DOUBLE) * s1y - CAST(s1 AS DOUBLE) * sy AS b1,
-             CAST(n AS DOUBLE) * s2y - CAST(s2 AS DOUBLE) * sy AS b2,
-             CAST(s1 AS DOUBLE) AS d1, CAST(s2 AS DOUBLE) AS d2,
-             CAST(sy AS DOUBLE) AS dy
-      FROM m
-    )
-    SELECT n,
-           ROUND((b1 * a22 - b2 * a12) / (a11 * a22 - a12 * a12), 9)
-             AS beta_qty,
-           ROUND((b2 * a11 - b1 * a12) / (a11 * a22 - a12 * a12), 9)
-             AS beta_disc,
-           ROUND((dy - ((b1 * a22 - b2 * a12) / (a11 * a22 - a12 * a12)) * d1
-                     - ((b2 * a11 - b1 * a12) / (a11 * a22 - a12 * a12)) * d2)
-                 / CAST(n AS DOUBLE), 9) AS intercept
-    FROM c
-    """,
-    doc=(
-        "Two-feature OLS (revenue_cents ~ quantity + discount_pct) "
-        "solved by the NORMAL EQUATIONS over distributed moment sums — "
-        "'ML as aggregation': the entire fit is ONE map-side-combined "
-        "aggregate producing 9 exact BIGINT moments (all < 2^53 at "
-        "every fixture SF, so their double casts are value-exact), "
-        "then a closed-form 2×2 Cramer solve as one pinned-order "
-        "float expression, rounded 9 — bit-identical cross-engine, "
-        "the same discipline as agg_autocorr_daily's n-scaled "
-        "deviations (a float running mean would be partition-order-"
-        "dependent). This is how linear models actually fit at "
-        "100 TB: the data-size-dependent work is embarrassingly "
-        "parallel partial sums, the solve is O(d³) on the driver "
-        "(here, in the expression) — no gradient iterations, no "
-        "per-row Python. Reference analog: the price/discount ROI "
-        "analysis of agg_roi_discount, upgraded to a fitted model."
-    ),
-    tags=("feat", "ml", "regression"),
-)
-def feat_ols_normal_eq(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    x1 = F.round(F.col("l_quantity")).cast("long")
-    x2 = F.round(F.col("l_discount") * 100).cast("long")
-    y = F.round(F.col("l_extendedprice") * 100).try_cast("long")
-    m = li.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(x1).cast("long").alias("s1"),
-        F.sum(x2).cast("long").alias("s2"),
-        F.sum(y).cast("long").alias("sy"),
-        # decimal(38,0) second moments: an in-domain extreme row's
-        # qty*price_cents product alone passes 2^63 (r12 contract)
-        F.sum(x1.cast("decimal(38,0)") * x1).alias("s11"),
-        F.sum(x1.cast("decimal(38,0)") * x2).alias("s12"),
-        F.sum(x2.cast("decimal(38,0)") * x2).alias("s22"),
-        F.sum(x1.cast("decimal(38,0)") * y).alias("s1y"),
-        F.sum(x2.cast("decimal(38,0)") * y).alias("s2y"),
-    )
-    nd = F.col("n").cast("double")
-    a11 = nd * F.col("s11") - F.col("s1").cast("double") * F.col("s1")
-    a12 = nd * F.col("s12") - F.col("s1").cast("double") * F.col("s2")
-    a22 = nd * F.col("s22") - F.col("s2").cast("double") * F.col("s2")
-    b1 = nd * F.col("s1y") - F.col("s1").cast("double") * F.col("sy")
-    b2 = nd * F.col("s2y") - F.col("s2").cast("double") * F.col("sy")
-    det = a11 * a22 - a12 * a12
-    beta1 = (b1 * a22 - b2 * a12) / det
-    beta2 = (b2 * a11 - b1 * a12) / det
-    return m.select(
-        "n",
-        F.round(beta1, 9).alias("beta_qty"),
-        F.round(beta2, 9).alias("beta_disc"),
-        F.round(
-            (
-                F.col("sy").cast("double")
-                - beta1 * F.col("s1").cast("double")
-                - beta2 * F.col("s2").cast("double")
-            )
-            / nd,
-            9,
-        ).alias("intercept"),
-    )
-
-
-@EXT.add(
-    "stream_stream_left_join",
-    oracle="""
-    SELECT p.user_id, p.event_id AS p_id, e.event_id AS e_id,
-           p.ts AS p_ts, e.ts AS e_ts
-    FROM events p LEFT JOIN events e
-      ON p.user_id = e.user_id
-     AND e.event_type = 'error'
-     AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL 1 HOUR
-     AND e.ts < TIMESTAMP '2024-01-04'
-     -- operational time domain (r12 ts-extremes contract): the
-     -- streaming leg filters out-of-window rows BEFORE withWatermark
-     -- (a single far-future event would otherwise advance the
-     -- watermark past the whole stream and evict every in-flight row)
-     AND e.ts >= TIMESTAMP '1970-01-01'
-    WHERE p.event_type = 'purchase' AND p.ts < TIMESTAMP '2024-01-04'
-      AND p.ts >= TIMESTAMP '1970-01-01'
-    """,
-    doc=(
-        "Stream-stream LEFT OUTER join with watermark-bounded state — "
-        "the completion of stream_stream_join's inner variant: "
-        "purchases with no error in the following hour must STILL be "
-        "emitted (null-padded) once the watermark passes their join "
-        "window, which is exactly the semantics a production alerting "
-        "join needs (absence of a match is the signal). Mechanics "
-        "under test: the watermark is attached to the RAW ts BEFORE "
-        "the type/date filters, so the no-data batch availableNow "
-        "appends after the final data batch carries the watermark "
-        "past every pending left row and flushes the outer nulls — "
-        "watermarking the filtered slice instead would leave the last "
-        "hour of purchases stuck in state forever (a real production "
-        "footgun this entry pins). availableNow over the finite "
-        "fixture = the batch LEFT JOIN, which is the oracle, "
-        "unmatched rows and all. Scale: symmetric hash join state "
-        "scoped to 1 h of both streams per the watermark; the demo "
-        "runs a 3-day slice for bounded state-store commits."
-    ),
-    tags=("streaming", "join", "outer"),
-)
-def stream_stream_left_join(spark, sf_dir):
-    return _run_stream_to_memory(
-        _build_stream_stream_left_join(spark, sf_dir),
-        "ss_left_join",
-        spark,
-        output_mode="append",
-        partitions=_join_state_partitions(spark),
-    )
-
-
-def _build_stream_stream_left_join(spark, sf_dir):
-    """Streaming-plan builder split out of the registry entry so the
-    plan-contract test can assert the TWO EventTimeWatermark nodes and
-    the state-eviction range condition on the unstarted streaming
-    DataFrame (``tests/test_plan_contracts.py``)."""
-    cutoff = F.lit("2024-01-04").cast("timestamp")
-    # operational time domain BEFORE the watermark (r12 ts-extremes
-    # contract): one far-future event would advance the event-time
-    # watermark past the whole stream and silently evict every
-    # in-flight row — watermark POISONING, the event-time-skew hazard
-    # every production pipeline bounds at ingest. The in-domain max
-    # (2024-01-31) still clears the cutoff, so outer rows flush.
-    dom = (F.col("ts") >= F.lit("1970-01-01").cast("timestamp")) & (
-        F.col("ts") < F.lit("2100-01-01").cast("timestamp")
-    )
-    left = (
-        _read_events_stream(spark, sf_dir)
-        .filter(dom)
-        .withWatermark("ts", "1 hour")
-        .filter((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
-        .select(
-            "user_id",
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_id"),
-        )
-    )
-    right = (
-        _read_events_stream(spark, sf_dir)
-        .filter(dom)
-        .withWatermark("ts", "1 hour")
-        .filter((F.col("event_type") == "error") & (F.col("ts") < cutoff))
-        .select(
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("event_id").alias("e_id"),
-        )
-    )
-    return left.join(
-        right,
-        F.expr(
-            "user_id = r_user_id AND e_ts > p_ts "
-            "AND e_ts <= p_ts + interval 1 hour"
-        ),
-        "leftOuter",
-    ).select("user_id", "p_id", "e_id", "p_ts", "e_ts")
-
-
-@EXT.add(
-    "agg_wilson_ci",
-    oracle="""
-    WITH s AS (
-      SELECT source,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS k
-      FROM documents GROUP BY 1
-    )
-    SELECT source, n, k,
-           ROUND(((CAST(k AS DOUBLE) / n) + (1.96 * 1.96) / (2 * n)
-                  - 1.96 * SQRT(((CAST(k AS DOUBLE) / n)
-                                 * (1 - CAST(k AS DOUBLE) / n)) / n
-                                + (1.96 * 1.96) / (4.0 * n * n)))
-                 / (1 + (1.96 * 1.96) / n), 9) AS wilson_lo,
-           ROUND(((CAST(k AS DOUBLE) / n) + (1.96 * 1.96) / (2 * n)
-                  + 1.96 * SQRT(((CAST(k AS DOUBLE) / n)
-                                 * (1 - CAST(k AS DOUBLE) / n)) / n
-                                + (1.96 * 1.96) / (4.0 * n * n)))
-                 / (1 + (1.96 * 1.96) / n), 9) AS wilson_hi
-    FROM s
-    """,
-    doc=(
-        "Wilson score interval per source for the long-document rate "
-        "(n_chars ≥ 200) — the CI that stays valid at small n and "
-        "extreme p where the naive normal interval fails, and whose "
-        "LOWER bound is the standard ranking key for rate-sorted "
-        "lists (quality league tables, review scores): a source with "
-        "3/3 must not outrank one with 95/100. Inputs are two exact "
-        "BIGINT counts per source (one map-side-combined agg); the "
-        "interval is ONE pinned-order float expression over them — "
-        "every subterm written identically in both engines (z² as "
-        "the literal product 1.96*1.96, the same parenthesization), "
-        "so the correctly-rounded IEEE ops reproduce bit-exactly, "
-        "rounded 9 (the feat_ols_normal_eq discipline). Scale: the "
-        "fact scan is the whole cost; the interval math runs on the "
-        "5-row source domain."
-    ),
-    tags=("agg", "stats", "ci"),
-)
-def agg_wilson_ci(spark, sf_dir):
-    s = (
-        t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.when(F.col("n_chars") >= 200, 1).otherwise(0))
-            .cast("long")
-            .alias("k"),
-        )
-    )
-    z2 = F.lit(1.96) * F.lit(1.96)
-    n = F.col("n")
-    p = F.col("k").cast("double") / n
-    half = F.lit(1.96) * F.sqrt(
-        (p * (1 - p)) / n + z2 / (F.lit(4.0) * n * n)
-    )
-    center = p + z2 / (2 * n)
-    denom = 1 + z2 / n
-    return s.select(
-        "source",
-        "n",
-        "k",
-        F.round((center - half) / denom, 9).alias("wilson_lo"),
-        F.round((center + half) / denom, 9).alias("wilson_hi"),
-    )
-
-
-@EXT.add(
-    "qa_chisq_categorical",
-    oracle="""
-    WITH cells AS (
-      SELECT lang, doc_id % 2 AS half, CAST(COUNT(*) AS BIGINT) AS o
-      FROM documents GROUP BY 1, 2
-    ),
-    rt AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS rt FROM cells GROUP BY 1),
-    ct AS (SELECT half, CAST(SUM(o) AS BIGINT) AS ct FROM cells GROUP BY 1),
-    n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-    spine AS (
-      SELECT rt.lang, ct.half, rt.rt, ct.ct, n.n FROM rt, ct, n
-    ),
-    term AS (
-      SELECT s.lang, s.half,
-             CAST(COALESCE(c.o, 0) AS BIGINT) AS o, s.rt, s.ct, s.n,
-             CAST(ROUND(
-               CAST((COALESCE(c.o, 0) * s.n - s.rt * s.ct)
-                    * (COALESCE(c.o, 0) * s.n - s.rt * s.ct) AS DOUBLE)
-               / (CAST(s.n AS DOUBLE) * s.rt * s.ct), 9)
-             AS DECIMAL(18,9)) AS contrib
-      FROM spine s LEFT JOIN cells c USING (lang, half)
-    )
-    SELECT lang, half, o, CAST(contrib AS DOUBLE) AS contrib,
-           CAST(SUM(contrib) OVER () AS DOUBLE) AS chi2
-    FROM term
-    """,
-    doc=(
-        "Chi-square homogeneity test of the language mix between the "
-        "two doc_id-parity halves of the corpus — the CATEGORICAL "
-        "drift gate completing the numeric battery (PSI expectation / "
-        "KS sup-norm / MWU rank): a shard whose lang distribution "
-        "diverges from its sibling flags a partitioning or ingest "
-        "bug. Each cell contribution uses the cleared-denominator "
-        "identity (o·n − rt·ct)²/(n·rt·ct): numerator exact BIGINT "
-        "(≤ ~6e14 at sf0.1 — 2^63-safe with 4 orders of headroom), "
-        "ONE float division rounded 9 and pinned to DECIMAL(18,9), "
-        "then chi2 is an EXACT decimal sum over the bounded "
-        "(lang × 2) cell spine — partitioning-invariant, the "
-        "agg_entropy_source contract. Absent cells surface as o=0 "
-        "rows via the spine left join (their contribution is the "
-        "full expected mass, which a naive GROUP BY would silently "
-        "drop). Scale: one map-side-combined cell agg; everything "
-        "after runs on the ~12-row cell domain."
-    ),
-    tags=("qa", "drift", "stats"),
-)
-def qa_chisq_categorical(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.caching import spine_cache
-
-    cells = spine_cache(
-        t(spark, sf_dir, "documents")
-        .groupBy("lang", (F.col("doc_id") % 2).alias("half"))
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        # bounded contingency frame (|langs| x 2 rows) referenced by
-        # every marginal/total/spine branch — uncached, each branch
-        # re-derives the full documents scan (scan-amplification
-        # study); caching a bounded spine is the study's always-wins
-        # case; registered so release_spines() frees it
-    )
-    rt = cells.groupBy("lang").agg(F.sum("o").cast("long").alias("rt"))
-    ct = cells.groupBy("half").agg(F.sum("o").cast("long").alias("ct"))
-    nn = cells.agg(F.sum("o").cast("long").alias("n"))
-    spine = rt.crossJoin(F.broadcast(ct)).crossJoin(F.broadcast(nn))
-    o = F.coalesce(F.col("o"), F.lit(0)).cast("long")
-    diff = o * F.col("n") - F.col("rt") * F.col("ct")
-    term = spine.join(cells, ["lang", "half"], "left").select(
-        "lang",
-        "half",
-        o.alias("o_filled"),
-        F.round(
-            (diff * diff).cast("double")
-            / (
-                F.col("n").cast("double")
-                * F.col("rt").cast("double")
-                * F.col("ct").cast("double")
-            ),
-            9,
-        )
-        .cast("decimal(18,9)")
-        .alias("contrib_dec"),
-    )
-    return term.select(
-        "lang",
-        "half",
-        F.col("o_filled").alias("o"),
-        F.col("contrib_dec").cast("double").alias("contrib"),
-        F.sum("contrib_dec")
-        .over(Window.partitionBy())
-        .cast("double")
-        .alias("chi2"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# round 8: experimentation battery + robust stats + streaming join family
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "feat_cuped_adjust",
-    oracle="""
-    WITH u AS (
-      SELECT user_id, user_id % 2 AS variant,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                       AND ts < TIMESTAMP '2024-01-16'
-                       THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS pre,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                       AND ts >= TIMESTAMP '2024-01-16'
-                       THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS post
-      FROM events GROUP BY 1
-    ),
-    pooled AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(pre) AS HUGEINT) AS sp,
-             CAST(SUM(post) AS HUGEINT) AS so,
-             CAST(SUM(CAST(pre AS HUGEINT) * pre) AS HUGEINT) AS spp,
-             CAST(SUM(CAST(pre AS HUGEINT) * post) AS HUGEINT) AS spo
-      FROM u
-    ),
-    th AS (
-      SELECT n,
-             CAST(n * spo - sp * so AS DOUBLE)
-               / CAST(n * spp - sp * sp AS DOUBLE) AS theta,
-             CAST(sp AS DOUBLE) / n AS mean_pre_pooled
-      FROM pooled
-    ),
-    v AS (
-      SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_users,
-             CAST(SUM(pre) AS BIGINT) AS sp_v,
-             CAST(SUM(post) AS BIGINT) AS so_v
-      FROM u GROUP BY 1
-    )
-    SELECT v.variant, v.n_users,
-           ROUND(CAST(so_v AS DOUBLE) / n_users, 9) AS mean_post_cents,
-           ROUND(CAST(so_v AS DOUBLE) / n_users
-                 - th.theta * (CAST(sp_v AS DOUBLE) / n_users
-                               - th.mean_pre_pooled), 9) AS mean_cuped_cents,
-           ROUND(th.theta, 9) AS theta
-    FROM v, th
-    """,
-    doc=(
-        "CUPED variance reduction for the A/B post-period revenue "
-        "metric (variant = user_id parity, pre/post split at Jan 16): "
-        "theta = pooled cov(pre, post)/var(pre) via the cleared-"
-        "denominator identity over EXACT integer moments (per-user "
-        "cent sums BIGINT, cross moments HUGEINT/DECIMAL(38) — "
-        "pre*post ~ 1e14-scale at sf1, 24 digits of headroom), then "
-        "the adjusted mean per variant is the standard "
-        "mean_post - theta*(mean_pre - pooled_mean_pre), every float "
-        "op written in the same pinned order in both engines, rounded "
-        "9. This is the pre-period covariate adjustment every "
-        "experimentation platform applies before reading a revenue "
-        "experiment — typically halving CI width at zero extra data "
-        "cost. Scale: one per-user agg (map-side combined), pooled + "
-        "per-variant moments on user rows, theta broadcast back onto "
-        "the 2-row variant domain."
-    ),
-    tags=("feat", "experiment", "stats"),
-)
-def feat_cuped_adjust(spark, sf_dir):
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    split = F.lit("2024-01-16").cast("timestamp")
-    is_p = F.col("event_type") == "purchase"
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(is_p & (F.col("ts") < split), cents)), F.lit(0)
-            )
-            .cast("long")
-            .alias("pre"),
-            F.coalesce(
-                F.sum(F.when(is_p & (F.col("ts") >= split), cents)), F.lit(0)
-            )
-            .cast("long")
-            .alias("post"),
-        )
-        .select(
-            "user_id", (F.col("user_id") % 2).alias("variant"), "pre", "post"
-        )
-    )
-    d38 = "decimal(38,0)"
-    pooled = u.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pre").cast(d38).alias("sp"),
-        F.sum("post").cast(d38).alias("so"),
-        F.sum(F.col("pre").cast(d38) * F.col("pre")).cast(d38).alias("spp"),
-        F.sum(F.col("pre").cast(d38) * F.col("post")).cast(d38).alias("spo"),
-    )
-    th = pooled.select(
-        "n",
-        (
-            (F.col("n") * F.col("spo") - F.col("sp") * F.col("so")).cast(
-                "double"
-            )
-            / (F.col("n") * F.col("spp") - F.col("sp") * F.col("sp")).cast(
-                "double"
-            )
-        ).alias("theta"),
-        (F.col("sp").cast("double") / F.col("n")).alias("mean_pre_pooled"),
-    )
-    v = u.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("pre").cast("long").alias("sp_v"),
-        F.sum("post").cast("long").alias("so_v"),
-    )
-    return v.crossJoin(F.broadcast(th)).select(
-        "variant",
-        "n_users",
-        F.round(F.col("so_v").cast("double") / F.col("n_users"), 9).alias(
-            "mean_post_cents"
-        ),
-        F.round(
-            F.col("so_v").cast("double") / F.col("n_users")
-            - F.col("theta")
-            * (
-                F.col("sp_v").cast("double") / F.col("n_users")
-                - F.col("mean_pre_pooled")
-            ),
-            9,
-        ).alias("mean_cuped_cents"),
-        F.round("theta", 9).alias("theta"),
-    )
-
-
-@EXT.add(
-    "agg_delta_method_ci",
-    oracle="""
-    WITH u AS (
-      SELECT user_id, user_id % 2 AS variant,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                       THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS x,
-             CAST(COUNT(*) AS BIGINT) AS n_ev
-      FROM events GROUP BY 1
-    ),
-    m AS (
-      SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx,
-             CAST(SUM(n_ev) AS HUGEINT) AS sn,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-             CAST(SUM(CAST(n_ev AS HUGEINT) * n_ev) AS HUGEINT) AS snn,
-             CAST(SUM(CAST(x AS HUGEINT) * n_ev) AS HUGEINT) AS sxn
-      FROM u GROUP BY 1
-    ),
-    s AS (
-      SELECT variant, n,
-             CAST(sx AS DOUBLE) / CAST(sn AS DOUBLE) AS r,
-             CAST(sn AS DOUBLE) / n AS mean_n,
-             CAST(n * sxx - sx * sx AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS var_x,
-             CAST(n * snn - sn * sn AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS var_n,
-             CAST(n * sxn - sx * sn AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) AS cov_xn
-      FROM m
-    )
-    SELECT variant, n AS n_users, ROUND(r, 9) AS ratio_cents_per_event,
-           ROUND(SQRT((var_x - 2 * r * cov_xn + r * r * var_n)
-                      / (CAST(n AS DOUBLE) * mean_n * mean_n)), 9) AS se,
-           ROUND(r - 1.96 * SQRT((var_x - 2 * r * cov_xn + r * r * var_n)
-                      / (CAST(n AS DOUBLE) * mean_n * mean_n)), 9) AS lo,
-           ROUND(r + 1.96 * SQRT((var_x - 2 * r * cov_xn + r * r * var_n)
-                      / (CAST(n AS DOUBLE) * mean_n * mean_n)), 9) AS hi
-    FROM s
-    """,
-    doc=(
-        "Delta-method CI for the RATIO metric revenue-per-event by "
-        "variant — the correct interval for ratio-of-sums metrics "
-        "where the naive per-user-mean variance is simply wrong "
-        "(users contribute unequal denominators): Var(X̄/N̄) ≈ "
-        "(var_x - 2R·cov + R²·var_n)/(n·mean_n²), every moment an "
-        "EXACT integer sum (BIGINT per user, HUGEINT/DECIMAL(38) "
-        "cross products — x² ~ 2.5e17 at sf0.1, 20 digits of "
-        "headroom at 10x), cleared-denominator variance identities, "
-        "then one pinned-order float expression per bound, rounded 9 "
-        "(the agg_wilson_ci discipline applied to the two-moment "
-        "case). Scale: one per-user agg, one 2-row variant agg; "
-        "interval math on the variant domain."
-    ),
-    tags=("agg", "experiment", "stats", "ci"),
-)
-def agg_delta_method_ci(spark, sf_dir):
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("event_type") == "purchase", cents)),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("x"),
-            F.count(F.lit(1)).cast("long").alias("n_ev"),
-        )
-        .select((F.col("user_id") % 2).alias("variant"), "x", "n_ev")
-    )
-    d38 = "decimal(38,0)"
-    m = u.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum("n_ev").cast(d38).alias("sn"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
-        F.sum(F.col("n_ev").cast(d38) * F.col("n_ev")).cast(d38).alias("snn"),
-        F.sum(F.col("x").cast(d38) * F.col("n_ev")).cast(d38).alias("sxn"),
-    )
-    nD = F.col("n").cast("double")
-    r = F.col("sx").cast("double") / F.col("sn").cast("double")
-    mean_n = F.col("sn").cast("double") / F.col("n")
-    var_x = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    ) / (nD * (F.col("n") - 1))
-    var_n = (F.col("n") * F.col("snn") - F.col("sn") * F.col("sn")).cast(
-        "double"
-    ) / (nD * (F.col("n") - 1))
-    cov_xn = (F.col("n") * F.col("sxn") - F.col("sx") * F.col("sn")).cast(
-        "double"
-    ) / (nD * (F.col("n") - 1))
-    s = m.select(
-        "variant",
-        "n",
-        r.alias("r"),
-        mean_n.alias("mean_n"),
-        var_x.alias("var_x"),
-        var_n.alias("var_n"),
-        cov_xn.alias("cov_xn"),
-    )
-    var_r = (
-        F.col("var_x")
-        - 2 * F.col("r") * F.col("cov_xn")
-        + F.col("r") * F.col("r") * F.col("var_n")
-    ) / (F.col("n").cast("double") * F.col("mean_n") * F.col("mean_n"))
-    return s.select(
-        "variant",
-        F.col("n").alias("n_users"),
-        F.round("r", 9).alias("ratio_cents_per_event"),
-        F.round(F.sqrt(var_r), 9).alias("se"),
-        F.round(F.col("r") - 1.96 * F.sqrt(var_r), 9).alias("lo"),
-        F.round(F.col("r") + 1.96 * F.sqrt(var_r), 9).alias("hi"),
-    )
-
-
-@EXT.add(
-    "stream_stream_full_join",
-    oracle="""
-    WITH p AS (
-      -- operational time domain: see stream_stream_left_join
-      SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-      WHERE event_type = 'purchase' AND ts < TIMESTAMP '2024-01-04'
-        AND ts >= TIMESTAMP '1970-01-01'
-    ),
-    e AS (
-      SELECT user_id AS e_user, event_id AS e_id, ts AS e_ts FROM events
-      WHERE event_type = 'error' AND ts < TIMESTAMP '2024-01-04'
-        AND ts >= TIMESTAMP '1970-01-01'
-    )
-    SELECT COALESCE(p.user_id, e.e_user) AS user_id,
-           p.p_id, e.e_id, p.p_ts, e.e_ts
-    FROM p FULL JOIN e
-      ON p.user_id = e.e_user
-     AND e.e_ts > p.p_ts AND e.e_ts <= p.p_ts + INTERVAL 1 HOUR
-    """,
-    doc=(
-        "Stream-stream FULL OUTER join with watermark-bounded state — "
-        "completes the inner/left family: unmatched PURCHASES null-pad "
-        "on the error side (the left variant's alerting signal) AND "
-        "unmatched ERRORS null-pad on the purchase side (errors with "
-        "no prior purchase in the hour — the orphan-failure feed an "
-        "incident pipeline tails). Same mechanics as "
-        "stream_stream_left_join: both raw streams watermarked 1 h "
-        "BEFORE the type/date filters so availableNow's final no-data "
-        "batch carries the watermark past every pending row on BOTH "
-        "sides; the two-sided range condition bounds join state to "
-        "1 h of each stream. availableNow over the finite fixture = "
-        "the batch FULL JOIN (the oracle), orphans included."
-    ),
-    tags=("streaming", "join", "outer"),
-)
-def stream_stream_full_join(spark, sf_dir):
-    cutoff = F.lit("2024-01-04").cast("timestamp")
-    # operational time domain BEFORE the watermark — watermark
-    # poisoning guard, see _build_stream_stream_left_join
-    dom = (F.col("ts") >= F.lit("1970-01-01").cast("timestamp")) & (
-        F.col("ts") < F.lit("2100-01-01").cast("timestamp")
-    )
-    left = (
-        _read_events_stream(spark, sf_dir)
-        .filter(dom)
-        .withWatermark("ts", "1 hour")
-        .filter((F.col("event_type") == "purchase") & (F.col("ts") < cutoff))
-        .select(
-            "user_id",
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("p_id"),
-        )
-    )
-    right = (
-        _read_events_stream(spark, sf_dir)
-        .filter(dom)
-        .withWatermark("ts", "1 hour")
-        .filter((F.col("event_type") == "error") & (F.col("ts") < cutoff))
-        .select(
-            F.col("user_id").alias("r_user_id"),
-            F.col("ts").alias("e_ts"),
-            F.col("event_id").alias("e_id"),
-        )
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            "user_id = r_user_id AND e_ts > p_ts "
-            "AND e_ts <= p_ts + interval 1 hour"
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce("user_id", "r_user_id").alias("user_id"),
-        "p_id",
-        "e_id",
-        "p_ts",
-        "e_ts",
-    )
-    return _run_stream_to_memory(
-        joined,
-        "ss_full_join",
-        spark,
-        output_mode="append",
-        partitions=_join_state_partitions(spark),
-    )
-
-
-@EXT.add(
-    "win_theil_sen",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    slopes AS (
-      SELECT a.day AS d1, b.day AS d2,
-             CAST(b.c - a.c AS DOUBLE)
-               / DATE_DIFF('day', a.day, b.day) AS slope
-      FROM d a JOIN d b ON a.day < b.day
-    ),
-    ranked AS (
-      SELECT slope, row_number() OVER (ORDER BY slope, d1, d2) AS rn,
-             COUNT(*) OVER () AS np
-      FROM slopes
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM d) AS n_days,
-           CAST(np AS BIGINT) AS n_pairs,
-           ROUND(slope, 9) AS sen_slope_cents_per_day
-    FROM ranked WHERE rn = CAST(FLOOR((np + 1) / 2.0) AS BIGINT)
-    """,
-    doc=(
-        "Theil-Sen robust trend slope of the daily purchase-revenue "
-        "series: the (lower) median of all pairwise day-to-day slopes "
-        "— the estimator that shrugs off the outlier days that wreck "
-        "an OLS fit (feat_ols_normal_eq's robust sibling; up to ~29% "
-        "contamination tolerated). Slopes are exact-cent differences "
-        "over integer day gaps (one double division each, identical "
-        "IEEE in both engines); the median is the deterministic "
-        "rank-statistic row_number = floor((n+1)/2) over "
-        "(slope, d1, d2) ordering — percentile_disc semantics, no "
-        "engine-dependent midpoint averaging. Scale: the fact "
-        "collapses to the bounded daily grain first (map-side "
-        "combined), so the pairwise self-join is spine x spine "
-        "(~435 pairs for a 30-day window, ~66k for a year) — "
-        "never fact x fact; partition the spine by year if the "
-        "window ever grows unbounded."
-    ),
-    tags=("window", "timeseries", "stats", "robust"),
-)
-def win_theil_sen(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("c")
-        )
-    )
-    a = d.select(F.col("day").alias("d1"), F.col("c").alias("c1"))
-    b = d.select(F.col("day").alias("d2"), F.col("c").alias("c2"))
-    slopes = (
-        a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
-        .select(
-            "d1",
-            "d2",
-            (
-                (F.col("c2") - F.col("c1")).cast("double")
-                / F.datediff("d2", "d1")
-            ).alias("slope"),
-        )
-    )
-    w = Window.orderBy("slope", "d1", "d2")
-    ranked = slopes.select(
-        "slope",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("np"),
-    )
-    n_days = d.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
-    return (
-        ranked.filter(
-            F.col("rn") == F.floor((F.col("np") + 1) / F.lit(2.0)).cast("int")
-        )
-        .crossJoin(F.broadcast(n_days))
-        .select(
-            "n_days",
-            F.col("np").cast("long").alias("n_pairs"),
-            F.round("slope", 9).alias("sen_slope_cents_per_day"),
-        )
-    )
-
-
-@EXT.add(
-    "agg_winsorized_mean",
-    oracle="""
-    WITH h AS (
-      -- NULL value has no rank position (engine-opposite NULL order)
-      SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS f
-      FROM (
-        SELECT event_type, TRY_CAST(ROUND(value * 100) AS BIGINT) AS cents
-        FROM events WHERE value IS NOT NULL
-      ) WHERE cents IS NOT NULL GROUP BY 1, 2
-    ),
-    c AS (
-      SELECT event_type, cents, f,
-             SUM(f) OVER (PARTITION BY event_type ORDER BY cents
-                          ROWS UNBOUNDED PRECEDING) AS cum,
-             SUM(f) OVER (PARTITION BY event_type) AS n
-      FROM h
-    ),
-    edges AS (
-      SELECT event_type,
-             MIN(CASE WHEN 20 * cum >= n THEN cents END) AS lo,
-             MIN(CASE WHEN 20 * cum >= 19 * n THEN cents END) AS hi,
-             ANY_VALUE(n) AS n
-      FROM c GROUP BY 1
-    )
-    SELECT h.event_type, CAST(e.n AS BIGINT) AS n,
-           e.lo AS lo_cents, e.hi AS hi_cents,
-           ROUND(CAST(SUM(LEAST(GREATEST(h.cents, e.lo), e.hi) * h.f)
-                      AS DOUBLE) / e.n, 9) AS winsorized_mean_cents
-    FROM h JOIN edges e USING (event_type)
-    GROUP BY 1, 2, 3, 4, e.n
-    """,
-    doc=(
-        "Winsorized mean (5%/95%) of event value per event type — the "
-        "robust center that caps rather than drops tails (the "
-        "complement of qa_outlier_mad's flag-and-audit): percentile "
-        "edges are percentile_disc on the VALUE HISTOGRAM with pure "
-        "INTEGER threshold tests (20*cum >= n, 20*cum >= 19*n — no "
-        "float quantile math at all), clipping and the clipped sum "
-        "run ON the histogram too, so the only float op is the final "
-        "mean division (rounded 9). Scale: one map-side-combined "
-        "(type, cents) histogram agg — the cents domain is bounded "
-        "(~49k values) regardless of row count — then cumsum/edges/"
-        "clipped-mean all on the histogram; the fact table is "
-        "scanned exactly once and never sorted "
-        "(feat_discretize_quantile's argument, extended to the "
-        "estimator itself)."
-    ),
-    tags=("agg", "stats", "robust"),
-)
-def agg_winsorized_mean(spark, sf_dir):
-    from pyspark.sql import Window
-
-    h = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.round(F.col("value") * 100).try_cast("long").alias("cents"),
-        )
-        # out-of-domain cents leave the histogram spine (r12 contract)
-        .filter(F.col("cents").isNotNull())
-        .groupBy("event_type", "cents")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-    )
-    wc = (
-        Window.partitionBy("event_type")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("event_type")
-    c = h.select(
-        "event_type",
-        "cents",
-        "f",
-        F.sum("f").over(wc).alias("cum"),
-        F.sum("f").over(wt).alias("n"),
-    )
-    edges = c.groupBy("event_type").agg(
-        F.min(F.when(20 * F.col("cum") >= F.col("n"), F.col("cents"))).alias(
-            "lo"
-        ),
-        F.min(
-            F.when(20 * F.col("cum") >= 19 * F.col("n"), F.col("cents"))
-        ).alias("hi"),
-        F.any_value("n").alias("n"),
-    )
-    clipped = F.least(F.greatest(F.col("cents"), F.col("lo")), F.col("hi"))
-    return (
-        h.join(F.broadcast(edges), "event_type")
-        .groupBy(
-            "event_type",
-            F.col("n").cast("long").alias("n"),
-            F.col("lo").alias("lo_cents"),
-            F.col("hi").alias("hi_cents"),
-        )
-        .agg(
-            F.round(
-                F.sum(clipped * F.col("f")).cast("double") / F.any_value("n"),
-                9,
-            ).alias("winsorized_mean_cents")
-        )
-    )
-
-
-@EXT.add(
-    "agg_ttest_welch",
-    oracle="""
-    WITH u AS (
-      SELECT user_id, user_id % 2 AS variant,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                       THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS x
-      FROM events GROUP BY 1
-    ),
-    m AS (
-      SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-      FROM u GROUP BY 1
-    ),
-    s AS (
-      SELECT variant, n,
-             CAST(sx AS DOUBLE) / n AS mean,
-             CAST(n * sxx - sx * sx AS DOUBLE)
-               / (CAST(n AS DOUBLE) * (n - 1)) / n AS vm
-      FROM m
-    ),
-    w AS (
-      SELECT a.n AS n0, b.n AS n1, a.mean AS mean0, b.mean AS mean1,
-             a.vm AS vm0, b.vm AS vm1
-      FROM s a JOIN s b ON a.variant = 0 AND b.variant = 1
-    )
-    SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-           ROUND(mean0, 9) AS mean0_cents, ROUND(mean1, 9) AS mean1_cents,
-           ROUND((mean1 - mean0) / SQRT(vm0 + vm1), 9) AS t_stat,
-           ROUND((vm0 + vm1) * (vm0 + vm1)
-                 / (vm0 * vm0 / (n0 - 1) + vm1 * vm1 / (n1 - 1)), 9)
-             AS df_welch
-    FROM w
-    """,
-    doc=(
-        "Welch two-sample t-test of per-user purchase revenue between "
-        "the parity variants — the unequal-variance test every "
-        "experiment readout starts from (the z/t gap in the battery "
-        "next to Wilson / bootstrap / chi-square / MWU / delta-method). "
-        "Per-variant mean and variance-of-mean come from EXACT integer "
-        "moments (BIGINT per-user cents, HUGEINT/DECIMAL(38) squares, "
-        "cleared-denominator sample variance); the t statistic and the "
-        "Welch-Satterthwaite df are one pinned-order float expression "
-        "each, rounded 9 — df is emitted rather than a p-value because "
-        "the t CDF is engine-specific math (the caller thresholds "
-        "|t| >= 1.96 at these df). Scale: one per-user agg, one 2-row "
-        "variant agg, final math on a self-joined 1-row spine."
-    ),
-    tags=("agg", "experiment", "stats"),
-)
-def agg_ttest_welch(spark, sf_dir):
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("event_type") == "purchase", cents)),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("x")
-        )
-        .select((F.col("user_id") % 2).alias("variant"), "x")
-    )
-    d38 = "decimal(38,0)"
-    m = u.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
-    )
-    s = m.select(
-        "variant",
-        "n",
-        (F.col("sx").cast("double") / F.col("n")).alias("mean"),
-        (
-            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-                "double"
-            )
-            / (F.col("n").cast("double") * (F.col("n") - 1))
-            / F.col("n")
-        ).alias("vm"),
-    )
-    a = s.filter(F.col("variant") == 0).select(
-        F.col("n").alias("n0"), F.col("mean").alias("mean0"),
-        F.col("vm").alias("vm0"),
-    )
-    b = s.filter(F.col("variant") == 1).select(
-        F.col("n").alias("n1"), F.col("mean").alias("mean1"),
-        F.col("vm").alias("vm1"),
-    )
-    w = a.crossJoin(F.broadcast(b))
-    pooled = F.col("vm0") + F.col("vm1")
-    return w.select(
-        F.col("n0").cast("long").alias("n0"),
-        F.col("n1").cast("long").alias("n1"),
-        F.round("mean0", 9).alias("mean0_cents"),
-        F.round("mean1", 9).alias("mean1_cents"),
-        F.round((F.col("mean1") - F.col("mean0")) / F.sqrt(pooled), 9).alias(
-            "t_stat"
-        ),
-        F.round(
-            pooled
-            * pooled
-            / (
-                F.col("vm0") * F.col("vm0") / (F.col("n0") - 1)
-                + F.col("vm1") * F.col("vm1") / (F.col("n1") - 1)
-            ),
-            9,
-        ).alias("df_welch"),
-    )
-
-
-@EXT.add(
-    "agg_mann_kendall",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    s AS (
-      SELECT CAST(SUM(CASE WHEN b.c > a.c THEN 1
-                           WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s,
-             CAST(COUNT(*) AS BIGINT) AS n_pairs
-      FROM d a JOIN d b ON a.day < b.day
-    ),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM d),
-    ties AS (
-      SELECT CAST(COALESCE(SUM(tf * (tf - 1) * (2 * tf + 5)), 0) AS BIGINT)
-               AS tie_term
-      FROM (SELECT CAST(COUNT(*) AS BIGINT) AS tf FROM d GROUP BY c)
-      WHERE tf > 1
-    )
-    SELECT n.n AS n_days, s.s AS s_stat, s.n_pairs,
-           -- degenerate-shape contract (r13 skew axis): a single-day
-           -- or all-tied series has zero MK variance — z is NULL,
-           -- not a crash (Spark) or NaN (DuckDB IEEE division)
-           CASE WHEN (CAST(n.n AS DOUBLE) * (n.n - 1) * (2 * n.n + 5)
-                      - ties.tie_term) > 0 THEN
-             ROUND((CASE WHEN s.s > 0 THEN s.s - 1
-                         WHEN s.s < 0 THEN s.s + 1
-                         ELSE 0 END)
-                   / SQRT((CAST(n.n AS DOUBLE) * (n.n - 1) * (2 * n.n + 5)
-                           - ties.tie_term) / 18.0), 9)
-           END AS z_mk
-    FROM s, n, ties
-    """,
-    doc=(
-        "Mann-Kendall trend test on the daily purchase-revenue series "
-        "— the nonparametric is-there-a-monotone-trend gate that pairs "
-        "with win_theil_sen (MK decides IF a trend exists, Theil-Sen "
-        "says how steep): S = sum of pairwise sign comparisons (pure "
-        "INTEGER arithmetic over the bounded day spine), variance with "
-        "the standard tie correction sum tf(tf-1)(2tf+5) (also exact "
-        "integers), and the continuity-corrected z statistic is the "
-        "single float expression, rounded 9. Scale: the fact collapses "
-        "to the daily grain map-side first; the sign join is "
-        "spine x spine (~435 pairs / 30 days), tie counts come from "
-        "one groupBy on the spine's value domain — the fact table is "
-        "scanned once and never self-joined."
-    ),
-    tags=("agg", "timeseries", "stats", "robust"),
-)
-def agg_mann_kendall(spark, sf_dir):
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("c")
-        )
-        .localCheckpoint(eager=True)
-    )
-    a = d.select(F.col("day").alias("d1"), F.col("c").alias("c1"))
-    b = d.select(F.col("day").alias("d2"), F.col("c").alias("c2"))
-    s = (
-        a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
-        .agg(
-            F.sum(
-                F.when(F.col("c2") > F.col("c1"), 1)
-                .when(F.col("c2") < F.col("c1"), -1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("s"),
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        )
-    )
-    n = d.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ties = (
-        d.groupBy("c")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .filter(F.col("tf") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.col("tf") * (F.col("tf") - 1) * (2 * F.col("tf") + 5)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("tie_term")
-        )
-    )
-    corrected = (
-        F.when(F.col("s") > 0, F.col("s") - 1)
-        .when(F.col("s") < 0, F.col("s") + 1)
-        .otherwise(0)
-    )
-    var = (
-        F.col("n").cast("double")
-        * (F.col("n") - 1)
-        * (2 * F.col("n") + 5)
-        - F.col("tie_term")
-    ) / 18.0
-    return (
-        s.crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(ties))
-        .select(
-            F.col("n").alias("n_days"),
-            F.col("s").alias("s_stat"),
-            "n_pairs",
-            # degenerate-shape contract (r13 skew axis): zero variance
-            # (single day / all tied) -> NULL, never DIVIDE_BY_ZERO
-            F.when(var > 0, F.round(corrected / F.sqrt(var), 9)).alias(
-                "z_mk"
-            ),
-        )
-    )
-
-
-@EXT.add(
-    "win_forecast_ar2",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    r AS (
-      SELECT c, row_number() OVER (ORDER BY day) AS rn,
-             lag(c, 1) OVER (ORDER BY day) AS l1,
-             lag(c, 2) OVER (ORDER BY day) AS l2,
-             COUNT(*) OVER () AS n
-      FROM d
-    ),
-    mo AS (
-      SELECT CAST(ANY_VALUE(n) AS BIGINT) AS n,
-             CAST(SUM(c) AS BIGINT) AS s,
-             CAST(SUM(CAST(c AS HUGEINT) * c) AS HUGEINT) AS p0,
-             CAST(SUM(CASE WHEN l1 IS NOT NULL
-                      THEN CAST(c AS HUGEINT) * l1 END) AS HUGEINT) AS p1,
-             CAST(SUM(CASE WHEN l2 IS NOT NULL
-                      THEN CAST(c AS HUGEINT) * l2 END) AS HUGEINT) AS p2,
-             CAST(SUM(CASE WHEN rn > 1 THEN c END) AS BIGINT) AS tail1,
-             CAST(SUM(CASE WHEN rn > 2 THEN c END) AS BIGINT) AS tail2,
-             CAST(SUM(CASE WHEN rn <= n - 1 THEN c END)
-                  AS BIGINT) AS head1,
-             CAST(SUM(CASE WHEN rn <= n - 2 THEN c END)
-                  AS BIGINT) AS head2,
-             CAST(MAX(CASE WHEN rn = n THEN c END) AS BIGINT)
-               AS x_last,
-             CAST(MAX(CASE WHEN rn = n - 1 THEN c END) AS BIGINT)
-               AS x_prev
-      FROM r
-    ),
-    hm AS (
-      SELECT n, s, x_last, x_prev, p0, p1, p2,
-             CAST(n AS HUGEINT) AS nh, CAST(s AS HUGEINT) AS sh,
-             CAST(tail1 AS HUGEINT) AS t1, CAST(tail2 AS HUGEINT) AS t2,
-             CAST(head1 AS HUGEINT) AS h1, CAST(head2 AS HUGEINT) AS h2
-      FROM mo
-    ),
-    ac AS (
-      SELECT n, s, x_last, x_prev,
-             CAST(nh * nh * p0 - nh * sh * sh AS DOUBLE) AS a0,
-             CAST(nh * nh * p1 - nh * sh * (t1 + h1)
-                  + (nh - 1) * sh * sh AS DOUBLE) AS a1,
-             CAST(nh * nh * p2 - nh * sh * (t2 + h2)
-                  + (nh - 2) * sh * sh AS DOUBLE) AS a2
-      FROM hm
-    ),
-    ph AS (
-      SELECT n, s, x_last, x_prev,
-             (a1 / a0) * (1 - a2 / a0) / (1 - (a1 / a0) * (a1 / a0))
-               AS phi1,
-             (a2 / a0 - (a1 / a0) * (a1 / a0))
-               / (1 - (a1 / a0) * (a1 / a0)) AS phi2,
-             CAST(s AS DOUBLE) / n AS m
-      FROM ac
-    ),
-    f0 AS (SELECT *, x_last - m AS dv0, x_prev - m AS dvm1 FROM ph),
-    f1 AS (SELECT *, phi1 * dv0 + phi2 * dvm1 AS f1 FROM f0),
-    f2 AS (SELECT *, phi1 * f1 + phi2 * dv0 AS f2 FROM f1),
-    f3 AS (SELECT *, phi1 * f2 + phi2 * f1 AS f3 FROM f2),
-    f4 AS (SELECT *, phi1 * f3 + phi2 * f2 AS f4 FROM f3),
-    f5 AS (SELECT *, phi1 * f4 + phi2 * f3 AS f5 FROM f4),
-    f6 AS (SELECT *, phi1 * f5 + phi2 * f4 AS f6 FROM f5),
-    f7 AS (SELECT *, phi1 * f6 + phi2 * f5 AS f7 FROM f6)
-    SELECT h, ROUND(m + dev, 3) AS forecast_cents,
-           ROUND(phi1, 9) AS phi1, ROUND(phi2, 9) AS phi2
-    FROM f7, (VALUES (1), (2), (3), (4), (5), (6), (7)) AS hs(h),
-         LATERAL (SELECT CASE h WHEN 1 THEN f1 WHEN 2 THEN f2
-                                WHEN 3 THEN f3 WHEN 4 THEN f4
-                                WHEN 5 THEN f5 WHEN 6 THEN f6
-                                ELSE f7 END AS dev) dd
-    """,
-    doc=(
-        "AR(2) Yule-Walker forecast of daily purchase revenue, 7 days "
-        "ahead — the second-order autoregression that captures the "
-        "oscillatory/momentum dynamics AR(1) (udtf_forecast) and Holt "
-        "(win_holt_linear) cannot, closing more of the reference's "
-        "VISUALIZATION_PLAN.md:71 model-menu gap with exact-"
-        "arithmetic discipline: demeaned autocovariances come from "
-        "the n²-cleared identity n²·A_k = n²·P_k - n·S·(tail_k + "
-        "head_k) + (n-k)·S² over pure INTEGER lag-product moments "
-        "(HUGEINT/DECIMAL(38); ~6.8e17 at 10x volume, 20 digits of "
-        "headroom), phi1/phi2 are the closed-form Yule-Walker "
-        "solutions in r1 = A1/A0, r2 = A2/A0, and the 7-step "
-        "recursion f_k = phi1·f_{k-1} + phi2·f_{k-2} is UNROLLED as "
-        "the same chained float expressions in both engines (no "
-        "iterative driver loop), rounded 3 — daily totals are ~1e6 "
-        "cents at sf0.1, so 3 decimals keeps the rounded value inside "
-        "double's ~15.95 significant digits (9 would not be "
-        "representable and the engines' rounding paths diverge at "
-        "1 ULP). Scale: the fact collapses "
-        "map-side to the bounded daily grain; lag moments are one "
-        "window pass over the spine; everything after is 1-row math."
-    ),
-    tags=("window", "timeseries", "forecast"),
-)
-def win_forecast_ar2(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("c")
-        )
-    )
-    wo = Window.orderBy("day")
-    wall = Window.partitionBy()
-    r = d.select(
-        "c",
-        F.row_number().over(wo).alias("rn"),
-        F.lag("c", 1).over(wo).alias("l1"),
-        F.lag("c", 2).over(wo).alias("l2"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-    )
-    d38 = "decimal(38,0)"
-    mo = r.agg(
-        F.any_value("n").cast("long").alias("n"),
-        F.sum("c").cast("long").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).cast(d38).alias("p0"),
-        F.sum(F.col("c").cast(d38) * F.col("l1")).cast(d38).alias("p1"),
-        F.sum(F.col("c").cast(d38) * F.col("l2")).cast(d38).alias("p2"),
-        F.sum(F.when(F.col("rn") > 1, F.col("c"))).cast("long").alias("tail1"),
-        F.sum(F.when(F.col("rn") > 2, F.col("c"))).cast("long").alias("tail2"),
-        F.sum(F.when(F.col("rn") <= F.col("n") - 1, F.col("c")))
-        .cast("long")
-        .alias("head1"),
-        F.sum(F.when(F.col("rn") <= F.col("n") - 2, F.col("c")))
-        .cast("long")
-        .alias("head2"),
-        F.max(F.when(F.col("rn") == F.col("n"), F.col("c")))
-        .cast("long")
-        .alias("x_last"),
-        F.max(F.when(F.col("rn") == F.col("n") - 1, F.col("c")))
-        .cast("long")
-        .alias("x_prev"),
-    )
-    # DECIMAL(38,0) operands BEFORE any product: the cleared-identity
-    # terms n*S*(tail+head) and n*S^2 overflow BIGINT at 10x volume
-    # (caught by the round-8 scale rehearsal, like agg_bootstrap_ci's
-    # micro-mean in round 7); 38 digits leaves ~13 digits of headroom
-    # at 100x.
-    n = F.col("n").cast(d38)
-    s = F.col("s").cast(d38)
-    ac = mo.select(
-        "n",
-        "s",
-        "x_last",
-        "x_prev",
-        (n * n * F.col("p0") - n * s * s).cast("double").alias("a0"),
-        (
-            n * n * F.col("p1")
-            - n * s * (F.col("tail1").cast(d38) + F.col("head1"))
-            + (n - 1) * s * s
-        )
-        .cast("double")
-        .alias("a1"),
-        (
-            n * n * F.col("p2")
-            - n * s * (F.col("tail2").cast(d38) + F.col("head2"))
-            + (n - 2) * s * s
-        )
-        .cast("double")
-        .alias("a2"),
-    )
-    r1 = F.col("a1") / F.col("a0")
-    r2 = F.col("a2") / F.col("a0")
-    ph = ac.select(
-        "n",
-        "s",
-        "x_last",
-        "x_prev",
-        (r1 * (1 - r2) / (1 - r1 * r1)).alias("phi1"),
-        ((r2 - r1 * r1) / (1 - r1 * r1)).alias("phi2"),
-        (F.col("s").cast("double") / F.col("n")).alias("m"),
-    )
-    f = ph.withColumn("dv0", F.col("x_last") - F.col("m")).withColumn(
-        "dvm1", F.col("x_prev") - F.col("m")
-    )
-    f = f.withColumn(
-        "f1", F.col("phi1") * F.col("dv0") + F.col("phi2") * F.col("dvm1")
-    )
-    prev2, prev1 = "dv0", "f1"
-    for k in range(2, 8):
-        f = f.withColumn(
-            f"f{k}",
-            F.col("phi1") * F.col(prev1) + F.col("phi2") * F.col(prev2),
-        )
-        prev2, prev1 = prev1, f"f{k}"
-    stack = F.expr(
-        "stack(7, 1, f1, 2, f2, 3, f3, 4, f4, 5, f5, 6, f6, 7, f7) "
-        "AS (h, dev)"
-    )
-    return f.select("m", "phi1", "phi2", stack).select(
-        F.col("h").cast("int").alias("h"),
-        F.round(F.col("m") + F.col("dev"), 3).alias("forecast_cents"),
-        F.round("phi1", 9).alias("phi1"),
-        F.round("phi2", 9).alias("phi2"),
-    )
-
-
-@EXT.add(
-    "win_bollinger_bands",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    w AS (
-      SELECT day, c,
-             CAST(COUNT(*) OVER fr AS BIGINT) AS n,
-             CAST(SUM(c) OVER fr AS BIGINT) AS s,
-             CAST(SUM(CAST(c AS HUGEINT) * c) OVER fr AS HUGEINT) AS ss
-      FROM d
-      WINDOW fr AS (ORDER BY day
-                    RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
-    )
-    SELECT day, n AS n_window, c AS cents,
-           ROUND(CAST(s AS DOUBLE) / n, 3) AS mid,
-           ROUND(CAST(s AS DOUBLE) / n
-                 + 2 * SQRT(CAST(n * ss - s * s AS DOUBLE)) / n, 3) AS upper,
-           ROUND(CAST(s AS DOUBLE) / n
-                 - 2 * SQRT(CAST(n * ss - s * s AS DOUBLE)) / n, 3) AS lower
-    FROM w
-    """,
-    doc=(
-        "Bollinger bands (trailing 7-day mean ± 2 population sd) over "
-        "daily purchase revenue — the volatility envelope that turns "
-        "win_rolling_corr's moment discipline into an anomaly band "
-        "(a day breaching ±2sd is the alert win_cusum_drift confirms): "
-        "windowed n/S/SS are EXACT integer sums over the RANGE frame "
-        "(HUGEINT/DECIMAL(38) squares), sd uses the n-cleared identity "
-        "sqrt(n·SS - S²)/n so the only float ops are one sqrt and two "
-        "divisions per row, written in the same pinned order in both "
-        "engines, rounded 3 (daily totals are ~1e6 cents at sf0.1; "
-        "3 decimals keeps the result representable in a double — "
-        "round 9 at this magnitude exceeds 15.95 significant digits "
-        "and flakes at 1 ULP, measured). Scale: fact collapses map-side to the "
-        "bounded daily grain; the RANGE window runs over days-not-rows "
-        "(partition by year if the spine ever grows unbounded)."
-    ),
-    tags=("window", "timeseries", "stats"),
-)
-def win_bollinger_bands(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("c")
-        )
-    )
-    day_s = F.unix_timestamp("day")
-    fr = (
-        Window.orderBy(day_s)
-        .rangeBetween(-6 * 86400, 0)
-    )
-    d38 = "decimal(38,0)"
-    w = d.select(
-        "day",
-        "c",
-        F.count(F.lit(1)).over(fr).cast("long").alias("n"),
-        F.sum("c").over(fr).cast("long").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).over(fr).cast(d38).alias("ss"),
-    )
-    mid = F.col("s").cast("double") / F.col("n")
-    spread = (
-        2
-        * F.sqrt((F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double"))
-        / F.col("n")
-    )
-    return w.select(
-        "day",
-        F.col("n").alias("n_window"),
-        F.col("c").alias("cents"),
-        F.round(mid, 3).alias("mid"),
-        F.round(mid + spread, 3).alias("upper"),
-        F.round(mid - spread, 3).alias("lower"),
-    )
-
-
-@EXT.add(
-    "feat_isotonic_calibrate",
-    oracle="""
-    WITH bins AS (
-      SELECT LEAST(19, CAST(FLOOR(n_chars / 50) AS BIGINT)) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS w,
-             CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS s
-      FROM documents GROUP BY 1
-    ),
-    pre AS (
-      SELECT bin, w, s,
-             SUM(w) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cw,
-             SUM(s) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cs
-      FROM bins
-    ),
-    pairs AS (
-      SELECT j.bin AS j, k.bin AS k,
-             CAST(k.cs - (j.cs - j.s) AS DOUBLE)
-               / (k.cw - (j.cw - j.w)) AS m
-      FROM pre j JOIN pre k ON j.bin <= k.bin
-    ),
-    tri AS (
-      SELECT i.bin AS i, p.j, p.k, p.m
-      FROM pre i JOIN pairs p ON p.j <= i.bin AND p.k >= i.bin
-    ),
-    inner_min AS (
-      SELECT i, j, MIN(m) AS mn FROM tri GROUP BY 1, 2
-    ),
-    iso AS (
-      SELECT i AS bin, MAX(mn) AS iso FROM inner_min GROUP BY 1
-    )
-    SELECT b.bin, b.w AS n_docs,
-           ROUND(CAST(b.s AS DOUBLE) / b.w, 9) AS raw_rate,
-           ROUND(iso.iso, 9) AS iso_rate
-    FROM bins b JOIN iso ON iso.bin = b.bin
-    """,
-    doc=(
-        "Isotonic (PAVA-equivalent) probability calibration of a "
-        "binary outcome against a score — the calibration layer every "
-        "ranking/quality model needs before its raw scores can be "
-        "read as probabilities (fixture: en-rate vs 50-char length "
-        "bins). Instead of the sequential pool-adjacent-violators "
-        "loop, this uses the CLOSED-FORM minimax identity "
-        "iso_i = max_{j<=i} min_{k>=i} mean(y_j..y_k) — a pure "
-        "dataflow over the BOUNDED bin spine (B=20: ~210 interval "
-        "means, ~1.5k (i,j,k) triples), so it needs no recursion, no "
-        "driver loop, and value-hash-oracles exactly: interval means "
-        "are double divisions of exact BIGINT prefix sums, identical "
-        "IEEE in both engines, and min/max over doubles is a total "
-        "order. Output is per bin: weight, raw rate, calibrated "
-        "monotone rate (rounded 9; rates are O(1) magnitudes). "
-        "Scale: ONE map-side-combined histogram agg touches the fact "
-        "table; the minimax runs entirely on the B-row spine "
-        "(B³ work only in the bounded bin count — at B=100 still "
-        "~1.7e5 spine rows). The sequential-PAVA-in-applyInPandas "
-        "alternative is only needed when B itself is unbounded."
-    ),
-    tags=("feat", "ml", "calibration", "stats"),
-)
-def feat_isotonic_calibrate(spark, sf_dir):
-    from pyspark.sql import Window
-
-    bins = (
-        t(spark, sf_dir, "documents")
-        .groupBy(
-            F.least(F.lit(19), F.floor(F.col("n_chars") / 50))
-            .cast("long")
-            .alias("bin")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("w"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-            .cast("long")
-            .alias("s"),
-        )
-    )
-    wo = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    pre = bins.select(
-        "bin",
-        "w",
-        "s",
-        F.sum("w").over(wo).alias("cw"),
-        F.sum("s").over(wo).alias("cs"),
-    ).localCheckpoint(eager=True)
-    j = pre.select(
-        F.col("bin").alias("j"),
-        (F.col("cs") - F.col("s")).alias("cs_jm1"),
-        (F.col("cw") - F.col("w")).alias("cw_jm1"),
-    )
-    k = pre.select(
-        F.col("bin").alias("k"), F.col("cs").alias("cs_k"),
-        F.col("cw").alias("cw_k"),
-    )
-    pairs = j.join(F.broadcast(k), F.col("j") <= F.col("k")).select(
-        "j",
-        "k",
-        (
-            (F.col("cs_k") - F.col("cs_jm1")).cast("double")
-            / (F.col("cw_k") - F.col("cw_jm1"))
-        ).alias("m"),
-    )
-    i = pre.select(F.col("bin").alias("i"))
-    tri = i.join(
-        F.broadcast(pairs),
-        (F.col("j") <= F.col("i")) & (F.col("k") >= F.col("i")),
-    )
-    inner_min = tri.groupBy("i", "j").agg(F.min("m").alias("mn"))
-    iso = inner_min.groupBy("i").agg(F.max("mn").alias("iso"))
-    return (
-        bins.join(F.broadcast(iso), bins.bin == iso.i)
-        .select(
-            "bin",
-            F.col("w").alias("n_docs"),
-            F.round(F.col("s").cast("double") / F.col("w"), 9).alias(
-                "raw_rate"
-            ),
-            F.round("iso", 9).alias("iso_rate"),
-        )
-    )
-
-
-@EXT.add(
-    "agg_power_mde",
-    oracle="""
-    WITH u AS (
-      SELECT user_id,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                       THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS x
-      FROM events GROUP BY 1
-    ),
-    m AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx,
-             CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-      FROM u
-    )
-    SELECT n AS n_users, CAST(FLOOR(n / 2) AS BIGINT) AS n_per_arm,
-           ROUND(CAST(sx AS DOUBLE) / n, 9) AS mean_cents,
-           ROUND(SQRT(CAST(n * sxx - sx * sx AS DOUBLE)
-                      / (CAST(n AS DOUBLE) * (n - 1))), 9) AS sd_cents,
-           ROUND((1.96 + 0.8416) * SQRT(2 * (CAST(n * sxx - sx * sx AS DOUBLE)
-                      / (CAST(n AS DOUBLE) * (n - 1)))
-                      / CAST(FLOOR(n / 2) AS BIGINT)), 9)
-             AS mde_cents,
-           ROUND((1.96 + 0.8416) * SQRT(2 * (CAST(n * sxx - sx * sx AS DOUBLE)
-                      / (CAST(n AS DOUBLE) * (n - 1)))
-                      / CAST(FLOOR(n / 2) AS BIGINT))
-                 / (CAST(sx AS DOUBLE) / n), 9) AS mde_rel
-    FROM m
-    """,
-    doc=(
-        "A/B power analysis: the minimum detectable effect at 80% "
-        "power / 5% two-sided alpha for a 50/50 split of the current "
-        "user base on per-user purchase revenue — the experiment-"
-        "DESIGN readout that precedes every agg_ttest_welch readout "
-        "(an experiment whose expected lift is below its MDE is not "
-        "worth launching). MDE = (z_{0.975} + z_{0.8})·sqrt(2s²/n_arm) "
-        "with the z constants as pinned literals (1.96, 0.8416) and "
-        "s² the cleared-denominator sample variance over EXACT integer "
-        "moments (BIGINT per-user cents, HUGEINT/DECIMAL(38) squares); "
-        "n_arm = n/2 in integer division, both engines. Scale: one "
-        "per-user agg (map-side combined), one 1-row moment agg, all "
-        "design math post-agg."
-    ),
-    tags=("agg", "experiment", "stats"),
-)
-def agg_power_mde(spark, sf_dir):
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    u = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("event_type") == "purchase", cents)),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("x")
-        )
-    )
-    d38 = "decimal(38,0)"
-    m = u.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast(d38).alias("sx"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).cast(d38).alias("sxx"),
-    )
-    var = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    ) / (F.col("n").cast("double") * (F.col("n") - 1))
-    n_arm = F.floor(F.col("n") / 2).cast("long")
-    mde = (F.lit(1.96) + F.lit(0.8416)) * F.sqrt(2 * var / n_arm)
-    mean = F.col("sx").cast("double") / F.col("n")
-    return m.select(
-        F.col("n").alias("n_users"),
-        n_arm.alias("n_per_arm"),
-        F.round(mean, 9).alias("mean_cents"),
-        F.round(F.sqrt(var), 9).alias("sd_cents"),
-        F.round(mde, 9).alias("mde_cents"),
-        F.round(mde / mean, 9).alias("mde_rel"),
-    )
-
-
-@EXT.add(
-    "win_backtest_ar1",
-    oracle="""
-    WITH d AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    lagged AS (
-      SELECT day, x, CAST(x AS HUGEINT) * lag(x) OVER (ORDER BY day) AS lp
-      FROM d
-    ),
-    r AS (
-      SELECT day, x,
-             row_number() OVER w AS t,
-             COUNT(*) OVER () AS n,
-             CAST(SUM(x) OVER cum AS HUGEINT) AS s,
-             CAST(SUM(CAST(x AS HUGEINT) * x) OVER cum AS HUGEINT) AS p0,
-             CAST(COALESCE(SUM(lp) OVER cum, 0) AS HUGEINT) AS p1,
-             CAST(first_value(x) OVER cum AS HUGEINT) AS x1,
-             lead(x) OVER w AS x_next,
-             lead(day) OVER w AS next_day
-      FROM lagged
-      WINDOW w AS (ORDER BY day),
-             cum AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
-    ),
-    fit AS (
-      SELECT day, next_day, x, x_next, t, n,
-             CAST(s AS DOUBLE) / t AS m,
-             CAST(CAST(t AS HUGEINT) * t * p1
-                  - t * s * (2 * s - x1 - CAST(x AS HUGEINT))
-                  + (t - 1) * s * s AS DOUBLE)
-               / CAST(CAST(t AS HUGEINT) * t * p0 - t * s * s AS DOUBLE)
-               AS phi
-      FROM r
-      WHERE t >= 8 AND t <= n - 1 AND t >= n - 10
-    )
-    SELECT next_day AS origin_day,
-           ROUND(m + phi * (x - m), 3) AS forecast_cents,
-           CAST(x_next AS BIGINT) AS actual_cents,
-           ROUND(ABS(ROUND(m + phi * (x - m), 3) - x_next), 3) AS abs_err,
-           ROUND(AVG(ROUND(ABS(ROUND(m + phi * (x - m), 3) - x_next), 3))
-                   OVER (), 4) AS mae
-    FROM fit
-    """,
-    doc=(
-        "Rolling-origin backtest of a one-step AR(1) forecast over the "
-        "last 10 days — the model-EVALUATION loop (fit on data < t, "
-        "predict t, score) expressed as pure window math with ZERO "
-        "driver-side refits: every origin's AR(1) fit comes from "
-        "PREFIX moments (cumulative S_t, sum-of-squares P0_t, lag "
-        "products P1_t over one (day) window pass), the demeaned "
-        "autocovariances use the t²-cleared identities "
-        "t²A1 = t²P1 - t·S·(2S - x_1 - x_t) + (t-1)·S² over exact "
-        "HUGEINT/DECIMAL(38) integers (the win_forecast_ar2 overflow "
-        "lesson applied from the start), and phi_t/forecast are one "
-        "pinned float expression per origin. Forecasts round to 3 "
-        "decimals BEFORE the error so each abs_err is an exact "
-        "multiple of 0.001 and the MAE sum is order-independent in "
-        "double (no float-accumulation nondeterminism). Scale: one "
-        "map-side-combined daily collapse; ALL backtest math is one "
-        "window pass over the bounded day spine — at 100 TB this "
-        "evaluates a year of origins without ever refitting."
-    ),
-    tags=("window", "timeseries", "forecast", "eval"),
-)
-def win_backtest_ar1(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("x")
-        )
-    )
-    d38 = "decimal(38,0)"
-    w = Window.orderBy("day")
-    cum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
-    lagged = d.select(
-        "day",
-        "x",
-        (F.col("x").cast(d38) * F.lag("x").over(w)).alias("lp"),
-    )
-    r = lagged.select(
-        "day",
-        "x",
-        F.row_number().over(w).alias("t"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-        F.sum("x").over(cum).cast(d38).alias("s"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).over(cum).cast(d38).alias("p0"),
-        F.coalesce(F.sum("lp").over(cum), F.lit(0)).cast(d38).alias("p1"),
-        F.first("x").over(cum).cast(d38).alias("x1"),
-        F.lead("x").over(w).alias("x_next"),
-        F.lead("day").over(w).alias("next_day"),
-    )
-    tt = F.col("t").cast(d38)
-    s, p0, p1 = F.col("s"), F.col("p0"), F.col("p1")
-    phi = (
-        (
-            tt * F.col("t") * p1
-            - F.col("t") * s * (2 * s - F.col("x1") - F.col("x").cast(d38))
-            + (F.col("t") - 1) * s * s
-        ).cast("double")
-        / (tt * F.col("t") * p0 - F.col("t") * s * s).cast("double")
-    )
-    fit = (
-        r.filter(
-            (F.col("t") >= 8)
-            & (F.col("t") <= F.col("n") - 1)
-            & (F.col("t") >= F.col("n") - 10)
-        )
-        .select(
-            "next_day",
-            "x",
-            "x_next",
-            (s.cast("double") / F.col("t")).alias("m"),
-            phi.alias("phi"),
-        )
-    )
-    fc = F.round(F.col("m") + F.col("phi") * (F.col("x") - F.col("m")), 3)
-    abs_err = F.round(F.abs(fc - F.col("x_next")), 3)
-    return fit.select(
-        F.col("next_day").alias("origin_day"),
-        fc.alias("forecast_cents"),
-        F.col("x_next").cast("long").alias("actual_cents"),
-        abs_err.alias("abs_err"),
-        F.round(F.avg(abs_err).over(wall), 4).alias("mae"),
-    )
-
-
-@EXT.add(
-    "agg_hill_tail_index",
-    oracle="""
-    WITH h AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-             CAST(COUNT(*) AS BIGINT) AS f
-      FROM orders GROUP BY 1
-    ),
-    c AS (
-      SELECT cents, f,
-             SUM(f) OVER (ORDER BY cents DESC ROWS UNBOUNDED PRECEDING)
-               AS cum,
-             SUM(f) OVER () AS n
-      FROM h
-    ),
-    topk AS (
-      SELECT cents, LEAST(f, 200 - (cum - f)) AS m, cum, n
-      FROM c WHERE cum - f < 200
-    ),
-    xk AS (SELECT MIN(cents) AS x_k FROM topk),
-    lns AS (
-      SELECT t.cents, t.m, t.n, xk.x_k,
-             CAST(ROUND(LN(CAST(t.cents AS DOUBLE)), 9)
-                  AS DECIMAL(20,9)) AS ln_x,
-             CAST(ROUND(LN(CAST(xk.x_k AS DOUBLE)), 9)
-                  AS DECIMAL(20,9)) AS ln_xk
-      FROM topk t CROSS JOIN xk
-    )
-    SELECT CAST(ANY_VALUE(n) AS BIGINT) AS n_orders,
-           CAST(200 AS BIGINT) AS k,
-           CAST(ANY_VALUE(x_k) AS BIGINT) AS x_k_cents,
-           ROUND(CAST(SUM(CAST(m AS DECIMAL(10,0))
-                          * (ln_x - ln_xk)) AS DOUBLE) / 200, 9) AS hill,
-           ROUND(200 / CAST(SUM(CAST(m AS DECIMAL(10,0))
-                          * (ln_x - ln_xk)) AS DOUBLE), 9) AS alpha
-    FROM lns
-    """,
-    doc=(
-        "Hill tail-index estimator over the top-200 order totals — "
-        "the heavy-tail diagnosis behind whale-spend risk models "
-        "(alpha < 2 means infinite variance: means/CIs from "
-        "agg_ttest_welch become untrustworthy and the winsorized/"
-        "trimmed battery takes over; this query is the gate that "
-        "decides). Hill = (1/k) Σ ln(x_(i)/x_(k)) over the k largest "
-        "values, computed from the VALUE HISTOGRAM with multiplicity "
-        "m at the boundary value (cum-from-top window, integer "
-        "threshold tests), ln per DISTINCT value rounded 9 and pinned "
-        "to DECIMAL(20,9) — the lm_score discipline for the one "
-        "engine-sensitive libm call — then exact decimal sums and two "
-        "final float divisions, rounded 9. Scale: one map-side-"
-        "combined histogram agg; the desc cumsum runs over the "
-        "bounded value domain, and only rows with cum < k survive to "
-        "the ln stage (top-k values, not top-k rows)."
-    ),
-    tags=("agg", "stats", "tail", "sketch"),
-)
-def agg_hill_tail_index(spark, sf_dir):
-    from pyspark.sql import Window
-
-    h = (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.round(F.col("o_totalprice") * 100).try_cast("long").alias("cents")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-    )
-    k = 200
-    wdesc = Window.orderBy(F.col("cents").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wall = Window.partitionBy()
-    c = h.select(
-        "cents",
-        "f",
-        F.sum("f").over(wdesc).alias("cum"),
-        F.sum("f").over(wall).alias("n"),
-    )
-    topk = c.filter(F.col("cum") - F.col("f") < k).select(
-        "cents",
-        F.least(F.col("f"), k - (F.col("cum") - F.col("f"))).alias("m"),
-        "n",
-    )
-    xk = topk.agg(F.min("cents").alias("x_k"))
-    ln9 = lambda col: F.round(F.log(col.cast("double")), 9).cast(
-        "decimal(20,9)"
-    )
-    lns = topk.crossJoin(F.broadcast(xk)).select(
-        "n",
-        "x_k",
-        (
-            F.col("m").cast("decimal(10,0)")
-            * (ln9(F.col("cents")) - ln9(F.col("x_k")))
-        ).alias("term"),
-    )
-    ssum = F.sum("term").cast("double")
-    return lns.agg(
-        F.any_value("n").cast("long").alias("n_orders"),
-        F.lit(k).cast("long").alias("k"),
-        F.any_value("x_k").cast("long").alias("x_k_cents"),
-        F.round(ssum / k, 9).alias("hill"),
-        F.round(k / ssum, 9).alias("alpha"),
-    )
-
-
-@EXT.add(
-    "udtf_forecast_hw",
-    oracle="""
-    WITH RECURSIVE d AS (
-      -- a day with no in-domain revenue leaves the series (r12
-      -- extremes contract): the Python fit's exact-cents recursion
-      -- skips what it cannot quantize, identically on both legs
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x
-      FROM events
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-      HAVING x IS NOT NULL
-    ),
-    r AS (
-      SELECT event_type, x,
-             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM d
-    ),
-    init AS (
-      SELECT event_type,
-             CAST(SUM(CASE WHEN rn <= 7 THEN x END) AS BIGINT) AS sum1,
-             CAST(SUM(CASE WHEN rn BETWEEN 8 AND 14 THEN x END) AS BIGINT)
-               AS sum2,
-             MAX(CASE WHEN rn = 1 THEN x END) AS x1,
-             MAX(CASE WHEN rn = 2 THEN x END) AS x2,
-             MAX(CASE WHEN rn = 3 THEN x END) AS x3,
-             MAX(CASE WHEN rn = 4 THEN x END) AS x4,
-             MAX(CASE WHEN rn = 5 THEN x END) AS x5,
-             MAX(CASE WHEN rn = 6 THEN x END) AS x6,
-             MAX(CASE WHEN rn = 7 THEN x END) AS x7
-      FROM r WHERE n >= 15 GROUP BY 1
-    ),
-    base AS (
-      SELECT event_type, CAST(7 AS BIGINT) AS t,
-             CAST(sum1 AS DOUBLE) / 7.0 AS L,
-             (CAST(sum2 AS DOUBLE) / 7.0 - CAST(sum1 AS DOUBLE) / 7.0)
-               / 7.0 AS B,
-             x1 - CAST(sum1 AS DOUBLE) / 7.0 AS s1,
-             x2 - CAST(sum1 AS DOUBLE) / 7.0 AS s2,
-             x3 - CAST(sum1 AS DOUBLE) / 7.0 AS s3,
-             x4 - CAST(sum1 AS DOUBLE) / 7.0 AS s4,
-             x5 - CAST(sum1 AS DOUBLE) / 7.0 AS s5,
-             x6 - CAST(sum1 AS DOUBLE) / 7.0 AS s6,
-             x7 - CAST(sum1 AS DOUBLE) / 7.0 AS s7
-      FROM init
-    ),
-    hw AS (
-      SELECT * FROM base
-      UNION ALL
-      SELECT hw.event_type, r.rn,
-             0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B),
-             0.1 * ((0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B)) - hw.L)
-               + 0.9 * hw.B,
-             hw.s2, hw.s3, hw.s4, hw.s5, hw.s6, hw.s7,
-             0.2 * (r.x - (0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B)))
-               + 0.8 * hw.s1
-      FROM hw JOIN r
-        ON r.event_type IS NOT DISTINCT FROM hw.event_type
-       AND r.rn = hw.t + 1
-    ),
-    fin AS (
-      SELECT hw.* FROM hw
-      JOIN (SELECT event_type, MAX(rn) AS n FROM r GROUP BY 1) nn
-        ON nn.event_type IS NOT DISTINCT FROM hw.event_type
-       AND hw.t = nn.n
-    )
-    SELECT event_type, CAST(h AS INT) AS h,
-           ROUND(L + h * B
-                 + CASE h WHEN 1 THEN s1 WHEN 2 THEN s2 WHEN 3 THEN s3
-                          WHEN 4 THEN s4 WHEN 5 THEN s5 WHEN 6 THEN s6
-                          ELSE s7 END, 3) AS forecast_cents,
-           ROUND(L, 3) AS level, ROUND(B, 3) AS trend
-    FROM fin, (VALUES (1), (2), (3), (4), (5), (6), (7)) AS hs(h)
-    """,
-    doc=(
-        "Additive Holt-Winters (triple exponential smoothing, m=7 "
-        "weekly season, alpha/beta/gamma = 0.3/0.1/0.2) 7-day "
-        "forecast of daily revenue per event type — the last classic "
-        "missing from the forecast menu (linear fit, AR(1), seasonal "
-        "AR, Holt linear, AR(2) Yule-Walker, and now level+trend+"
-        "season smoothing; reference VISUALIZATION_PLAN.md:71). "
-        "Spark side is the canonical grouped-map applyInPandas shape "
-        "(one shuffle on the key, sequential O(n) smoothing per "
-        "group — the win_ewma_recursive recursion pattern with a "
-        "3-component state); the oracle replays the IDENTICAL "
-        "recurrence as a recursive CTE carrying (L, B, s1..s7) with "
-        "every float expression written in the same order and the "
-        "smoothing constants as verbatim literals, so the state "
-        "trajectory is bit-identical and the query value-hashes. "
-        "Textbook init (level = week-1 mean, trend = week-over-week "
-        "mean diff / 7, seasonals = week-1 deviations); keys with "
-        "< 15 observed days are skipped in both engines. Rounded 3 "
-        "(daily-cent magnitude discipline)."
-    ),
-    tags=("udtf", "timeseries", "forecast", "streaming-state"),
-)
-def udtf_forecast_hw(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.forecast import (
-        holt_winters_per_key,
-    )
-
-    daily = (
-        # operational time domain: this day series feeds a pandas fold
-        # (r13 ts-extremes contract, plans/base.py)
-        ops_time_domain(t(spark, sf_dir, "events"))
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("value") * 100).try_cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        # a day with no in-domain revenue leaves the series (r12
-        # extremes contract; oracle HAVING mirrors)
-        .filter(F.col("cents").isNotNull())
-    )
-    return holt_winters_per_key(daily)
-
-
-@EXT.add(
-    "join_asof_tolerance",
-    oracle="""
-    WITH purchases AS (
-      SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'purchase'
-    ),
-    views AS (
-      SELECT user_id, ts, value FROM events WHERE event_type = 'view'
-    )
-    SELECT p.event_id, p.user_id, p.ts, p.value,
-           CASE WHEN v.ts >= p.ts - INTERVAL 1 HOUR THEN v.value END
-             AS asof_value,
-           CASE WHEN v.ts >= p.ts - INTERVAL 1 HOUR THEN v.ts END
-             AS asof_ts
-    FROM purchases p
-    ASOF LEFT JOIN views v
-      ON p.user_id = v.user_id AND v.ts <= p.ts
-    """,
-    doc=(
-        "Backward as-of join with a 1 h staleness tolerance (pandas "
-        "merge_asof(tolerance=...) parity; the missing knob of the "
-        "asof family): each purchase gets the latest prior view ONLY "
-        "if it is at most an hour old — the feature-store freshness "
-        "SLA gate (a stale feature silently joining is a "
-        "training-serving skew bug). Same single union-tag window as "
-        "join_asof_backward plus a post-fill null-out, which is EXACT "
-        "because the as-of pick is the nearest prior row: if it "
-        "misses the bound, every earlier row misses it too. Oracle = "
-        "DuckDB native ASOF JOIN with the same CASE gate. Scale: "
-        "identical to join_asof_backward (one (key, ts) exchange, no "
-        "range join)."
-    ),
-    tags=("join", "asof", "window", "feature-store"),
-)
-def join_asof_tolerance(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.asof import asof_backward
-
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value"
-    )
-    return asof_backward(
-        purchases,
-        views,
-        key="user_id",
-        ts="ts",
-        value_cols=["value"],
-        tolerance="1 hour",
-    )
-
-
-def _prepare_hw_stream_fixture(spark, sf_dir: str) -> str:
-    """Day-ordered 3-file replay of the per-type daily revenue series
-    for ``stream_forecast_hw_stateful`` (same arrival-layout rationale
-    as ``_prepare_islands_stream_fixture``)."""
-    import os as _os
-
-    def _write(out_dir: str) -> None:
-        pdf = (
-            # operational time domain (r13 contract; oracle mirrors)
-            ops_time_domain(t(spark, sf_dir, "events"))
-            .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-            .agg(
-                F.sum(F.round(F.col("value") * 100).try_cast("long"))
-                .cast("long")
-                .alias("cents")
-            )
-            # NULL-cents days leave the series (r12 extremes contract)
-            # — also keeps the parquet column int64: a NaN-bearing
-            # pandas column writes DOUBLE and the stream reader then
-            # fails on the bigint schema
-            .filter(F.col("cents").isNotNull())
-            .toPandas()
-            .sort_values(["day", "event_type"])
-        )
-        pdf["cents"] = pdf["cents"].astype("int64")
-        days = sorted(pdf["day"].unique())
-        b0, b1 = days[len(days) // 3], days[2 * len(days) // 3]
-        parts = [
-            pdf[pdf["day"] < b0],
-            pdf[(pdf["day"] >= b0) & (pdf["day"] < b1)],
-            pdf[pdf["day"] >= b1],
-        ]
-        for i, p in enumerate(parts):
-            path = _os.path.join(out_dir, f"part-{i}.parquet")
-            p.to_parquet(
-                path,
-                index=False,
-                coerce_timestamps="us",
-                allow_truncated_timestamps=True,
-            )
-            _os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    return _cached_layout("hw_stream", sf_dir, _write)
-
-
-BENCH_FIXTURES.append(_prepare_hw_stream_fixture)
-
-
-@EXT.add(
-    "stream_forecast_hw_stateful",
-    oracle="""
-    WITH RECURSIVE d AS (
-      -- a day with no in-domain revenue leaves the series (r12
-      -- extremes contract): the Python fit's exact-cents recursion
-      -- skips what it cannot quantize, identically on both legs
-      SELECT event_type, date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x
-      FROM events
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-      GROUP BY 1, 2
-      HAVING x IS NOT NULL
-    ),
-    r AS (
-      SELECT event_type, x,
-             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n
-      FROM d
-    ),
-    init AS (
-      SELECT event_type,
-             CAST(SUM(CASE WHEN rn <= 7 THEN x END) AS BIGINT) AS sum1,
-             CAST(SUM(CASE WHEN rn BETWEEN 8 AND 14 THEN x END) AS BIGINT)
-               AS sum2,
-             MAX(CASE WHEN rn = 1 THEN x END) AS x1,
-             MAX(CASE WHEN rn = 2 THEN x END) AS x2,
-             MAX(CASE WHEN rn = 3 THEN x END) AS x3,
-             MAX(CASE WHEN rn = 4 THEN x END) AS x4,
-             MAX(CASE WHEN rn = 5 THEN x END) AS x5,
-             MAX(CASE WHEN rn = 6 THEN x END) AS x6,
-             MAX(CASE WHEN rn = 7 THEN x END) AS x7
-      FROM r WHERE n >= 15 GROUP BY 1
-    ),
-    base AS (
-      SELECT event_type, CAST(7 AS BIGINT) AS t,
-             CAST(sum1 AS DOUBLE) / 7.0 AS L,
-             (CAST(sum2 AS DOUBLE) / 7.0 - CAST(sum1 AS DOUBLE) / 7.0)
-               / 7.0 AS B,
-             x1 - CAST(sum1 AS DOUBLE) / 7.0 AS s1,
-             x2 - CAST(sum1 AS DOUBLE) / 7.0 AS s2,
-             x3 - CAST(sum1 AS DOUBLE) / 7.0 AS s3,
-             x4 - CAST(sum1 AS DOUBLE) / 7.0 AS s4,
-             x5 - CAST(sum1 AS DOUBLE) / 7.0 AS s5,
-             x6 - CAST(sum1 AS DOUBLE) / 7.0 AS s6,
-             x7 - CAST(sum1 AS DOUBLE) / 7.0 AS s7
-      FROM init
-    ),
-    hw AS (
-      SELECT * FROM base
-      UNION ALL
-      SELECT hw.event_type, r.rn,
-             0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B),
-             0.1 * ((0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B)) - hw.L)
-               + 0.9 * hw.B,
-             hw.s2, hw.s3, hw.s4, hw.s5, hw.s6, hw.s7,
-             0.2 * (r.x - (0.3 * (r.x - hw.s1) + 0.7 * (hw.L + hw.B)))
-               + 0.8 * hw.s1
-      FROM hw JOIN r
-        ON r.event_type IS NOT DISTINCT FROM hw.event_type
-       AND r.rn = hw.t + 1
-    ),
-    fin AS (
-      SELECT hw.* FROM hw
-      JOIN (SELECT event_type, MAX(rn) AS n FROM r GROUP BY 1) nn
-        ON nn.event_type IS NOT DISTINCT FROM hw.event_type
-       AND hw.t = nn.n
-    )
-    SELECT event_type, CAST(t AS BIGINT) AS n_days, CAST(h AS INT) AS h,
-           ROUND(L + h * B
-                 + CASE h WHEN 1 THEN s1 WHEN 2 THEN s2 WHEN 3 THEN s3
-                          WHEN 4 THEN s4 WHEN 5 THEN s5 WHEN 6 THEN s6
-                          ELSE s7 END, 3) AS forecast_cents
-    FROM fin, (VALUES (1), (2), (3), (4), (5), (6), (7)) AS hs(h)
-    """,
-    doc=(
-        "Streaming stateful Holt-Winters: the udtf_forecast_hw model "
-        "maintained as CUSTOM STREAM STATE (applyInPandasWithState, "
-        "the stream_islands_stateful pattern upgraded from bookkeeping "
-        "to a real forecasting model). The per-type daily series "
-        "arrives as 3 day-ordered micro-batches; per-key state is the "
-        "O(1) smoothing triple (level, trend, 7 seasonals) plus a "
-        "14-day warmup buffer, every float expression VERBATIM the "
-        "batch operator's, and week 2 is replayed through the "
-        "recursion at init exactly as the batch init does — so the "
-        "streaming state trajectory is bit-identical to the batch "
-        "recurrence under ANY day-ordered batch decomposition. Each "
-        "batch emits the live 7-day forecast tagged n_days (what a "
-        "dashboard reads mid-stream); the query returns the final "
-        "batch's rows, which the batch-recurrence oracle reproduces "
-        "exactly — the streaming-equals-batch contract, value-hashed. "
-        "Scale: state is ~25 scalars per key; batches shuffle once on "
-        "the key."
-    ),
-    tags=("streaming", "stateful", "forecast"),
-)
-def stream_forecast_hw_stateful(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.streaming.stateful import (
-        streaming_holt_winters,
-    )
-
-    out_dir = _prepare_hw_stream_fixture(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_type string, day timestamp, cents long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(out_dir)
-    )
-    out = _run_stream_to_memory(
-        streaming_holt_winters(stream),
-        "hw_stateful",
-        spark,
-        output_mode="append",
-        # state keys = event_type values (single-digit domain), so
-        # state parallelism beyond the key count only multiplies
-        # store commits: 3 batches × 50 rows measured 1.88 → 1.75 s
-        # median at 2 vs 4 partitions (round-14 interleaved A/B)
-        partitions=2,
-    )
-    w = Window.partitionBy("event_type", "h").orderBy(
-        F.col("n_days").desc()
-    )
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("event_type", "n_days", "h", "forecast_cents")
-    )
-
-
-@EXT.add(
-    "agg_assoc_rules",
-    oracle="""
-    WITH b AS (
-      SELECT DISTINCT l_orderkey AS bid, l_partkey AS item FROM lineitem
-    ),
-    n AS (SELECT CAST(COUNT(DISTINCT bid) AS BIGINT) AS n_baskets FROM b),
-    ic AS (
-      SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY 1
-    ),
-    bf AS (
-      SELECT b.* FROM b
-      WHERE item IN (SELECT item FROM ic WHERE cnt >= 25)
-    ),
-    p AS (
-      SELECT x.item AS ia, y.item AS ib, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM bf x JOIN bf y ON x.bid = y.bid AND x.item < y.item
-      GROUP BY 1, 2
-    )
-    SELECT p.ia AS item_a, p.ib AS item_b, p.cnt AS pair_count,
-           a.cnt AS count_a, c.cnt AS count_b,
-           ROUND(CAST(p.cnt AS DOUBLE) / n.n_baskets, 9) AS support,
-           ROUND(CAST(p.cnt AS DOUBLE) / a.cnt, 9) AS conf_a_to_b,
-           ROUND(CAST(p.cnt AS DOUBLE) / c.cnt, 9) AS conf_b_to_a,
-           ROUND(CAST(n.n_baskets * p.cnt AS DOUBLE)
-                 / CAST(a.cnt * c.cnt AS DOUBLE), 9) AS lift
-    FROM p
-    JOIN ic a ON a.item = p.ia
-    JOIN ic c ON c.item = p.ib
-    CROSS JOIN n
-    WHERE p.cnt >= 2
-    """,
-    doc=(
-        "Market-basket association rules over order baskets "
-        "(lineitem as the basket-item fact): frequent item PAIRS with "
-        "support, both-direction confidence, and lift — the "
-        "bought-together engine behind bundle suggestions and the "
-        "co-play/co-purchase surfaces the reference's catalog "
-        "enrichment feeds (main.py:252-254 appid catalog as the item "
-        "dimension). The scale story is apriori antimonotonicity made "
-        "physical: a pair can only be frequent if BOTH items are, so "
-        "baskets are pruned to frequent singletons with a BROADCAST "
-        "semi-join BEFORE any pair is generated — at 100 TB the "
-        "quadratic step runs on the pruned per-basket arrays "
-        "(sort_array(collect_set) then a codegen'd slice/transform "
-        "pair expansion, never a basket self-join shuffle), and the "
-        "singleton counts re-attach by broadcast. All counts are "
-        "exact BIGINTs; support/confidence/lift are single divisions "
-        "of exact integers rounded 9 — bit-identical cross-engine. "
-        "min_item_support=25 baskets, min_pair_count=2."
-    ),
-    tags=("agg", "recommender", "stats"),
-)
-def agg_assoc_rules(spark, sf_dir):
-    li = t(spark, sf_dir, "lineitem")
-    # materialize the two reused spines ONCE: b feeds ic + the semi-join
-    # + the basket-count leg (3 re-derivations of the scan+dropDuplicates
-    # shuffle without the barrier) and ic feeds freq + both broadcast
-    # count legs. Round 13 A/B'd an item-bounded variant of this and
-    # declined it (3.11 vs 3.83 s); the round-14 re-measure of THIS
-    # simpler shape (checkpoint the spines verbatim, nothing else
-    # changes) wins at BOTH tiers — sf0.1 interleaved med 2.23 → 1.96 s
-    # (6 rounds, faster every round), 30× rehearsal med 71 → 53 s —
-    # so it is unconditional, not size-gated. Outputs identical
-    # (collected-set equality at sf0.1).
-    b = li.select(
-        F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item")
-    ).dropDuplicates(["bid", "item"]).localCheckpoint(eager=True)
-    ic = b.groupBy("item").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    ).localCheckpoint(eager=True)
-    freq = ic.filter(F.col("cnt") >= 25).select("item")
-    bf = b.join(F.broadcast(freq), "item", "left_semi")
-    arr = (
-        bf.groupBy("bid")
-        .agg(F.sort_array(F.collect_set("item")).alias("items"))
-        .filter(F.size("items") >= 2)
-    )
-    pairs = arr.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(items, (x, i) -> "
-                "transform(slice(items, i + 2, size(items)), "
-                "y -> struct(x AS ia, y AS ib))))"
-            )
-        ).alias("pr")
-    ).select("pr.ia", "pr.ib")
-    pc = (
-        pairs.groupBy("ia", "ib")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-    )
-    n = b.select(
-        F.countDistinct("bid").cast("long").alias("n_baskets")
-    )
-    a_cnt = ic.select(
-        F.col("item").alias("ia"), F.col("cnt").alias("count_a")
-    )
-    b_cnt = ic.select(
-        F.col("item").alias("ib"), F.col("cnt").alias("count_b")
-    )
-    out = (
-        pc.join(F.broadcast(a_cnt), "ia")
-        .join(F.broadcast(b_cnt), "ib")
-        .crossJoin(F.broadcast(n))
-    )
-    return out.select(
-        F.col("ia").alias("item_a"),
-        F.col("ib").alias("item_b"),
-        F.col("cnt").alias("pair_count"),
-        "count_a",
-        "count_b",
-        F.round(F.col("cnt").cast("double") / F.col("n_baskets"), 9).alias(
-            "support"
-        ),
-        F.round(F.col("cnt").cast("double") / F.col("count_a"), 9).alias(
-            "conf_a_to_b"
-        ),
-        F.round(F.col("cnt").cast("double") / F.col("count_b"), 9).alias(
-            "conf_b_to_a"
-        ),
-        F.round(
-            (F.col("n_baskets") * F.col("cnt")).cast("double")
-            / (F.col("count_a") * F.col("count_b")).cast("double"),
-            9,
-        ).alias("lift"),
-    )
-
-
-@EXT.add(
-    "agg_fdr_bh",
-    oracle="""
-    WITH cells AS (
-      SELECT event_type,
-             date_diff('day', TIMESTAMP '2024-01-01',
-                       date_trunc('day', ts)) % 7 AS dow,
-             user_id % 2 AS variant,
-             TRY_CAST(ROUND(value * 100) AS BIGINT) AS x
-      FROM events
-    ),
-    m AS (
-      SELECT event_type, dow,
-             CAST(COUNT(CASE WHEN variant = 0 THEN 1 END) AS BIGINT) AS n0,
-             CAST(COUNT(CASE WHEN variant = 1 THEN 1 END) AS BIGINT) AS n1,
-             CAST(SUM(CASE WHEN variant = 0 THEN x END) AS BIGINT) AS sx0,
-             CAST(SUM(CASE WHEN variant = 1 THEN x END) AS BIGINT) AS sx1,
-             CAST(SUM(CASE WHEN variant = 0
-                       THEN CAST(x AS HUGEINT) * x END) AS HUGEINT) AS sxx0,
-             CAST(SUM(CASE WHEN variant = 1
-                       THEN CAST(x AS HUGEINT) * x END) AS HUGEINT) AS sxx1
-      FROM cells GROUP BY 1, 2
-    ),
-    s AS (
-      SELECT event_type, dow, n0, n1,
-             CAST(sx1 AS DOUBLE) / n1 - CAST(sx0 AS DOUBLE) / n0 AS diff,
-             CAST(n0 * sxx0 - CAST(sx0 AS HUGEINT) * sx0 AS DOUBLE)
-               / (CAST(n0 AS DOUBLE) * (n0 - 1)) / n0
-             + CAST(n1 * sxx1 - CAST(sx1 AS HUGEINT) * sx1 AS DOUBLE)
-               / (CAST(n1 AS DOUBLE) * (n1 - 1)) / n1 AS vsum
-      FROM m WHERE n0 >= 2 AND n1 >= 2
-    ),
-    z AS (
-      SELECT event_type, dow, n0, n1,
-             ROUND(diff / SQRT(vsum), 9) AS z_stat
-      FROM s WHERE vsum > 0
-    ),
-    p AS (
-      SELECT *,
-             ROUND((1.0 / (1.0 + 0.3275911 * (ABS(z_stat) / 1.4142135623730951)))
-                   * (0.254829592
-                      + (1.0 / (1.0 + 0.3275911 * (ABS(z_stat) / 1.4142135623730951)))
-                      * (-0.284496736
-                         + (1.0 / (1.0 + 0.3275911 * (ABS(z_stat) / 1.4142135623730951)))
-                         * (1.421413741
-                            + (1.0 / (1.0 + 0.3275911 * (ABS(z_stat) / 1.4142135623730951)))
-                            * (-1.453152027
-                               + (1.0 / (1.0 + 0.3275911 * (ABS(z_stat) / 1.4142135623730951)))
-                               * 1.061405429))))
-                   * EXP(-(ABS(z_stat) / 1.4142135623730951)
-                         * (ABS(z_stat) / 1.4142135623730951)), 9) AS p_value
-      FROM z
-    ),
-    r AS (
-      SELECT *,
-             CAST(ROW_NUMBER() OVER
-               (ORDER BY p_value, event_type, dow) AS BIGINT) AS p_rank,
-             CAST(COUNT(*) OVER () AS BIGINT) AS m_tests
-      FROM p
-    ),
-    k AS (
-      SELECT *,
-             MAX(CASE WHEN p_value <= CAST(p_rank AS DOUBLE) * 0.10 / m_tests
-                      THEN p_rank END) OVER () AS kstar
-      FROM r
-    )
-    SELECT event_type, CAST(dow AS BIGINT) AS dow, n0, n1, z_stat, p_value,
-           p_rank, m_tests,
-           CAST(CASE WHEN p_rank <= COALESCE(kstar, 0)
-                     THEN 1 ELSE 0 END AS INT) AS rejected
-    FROM k
-    """,
-    doc=(
-        "Benjamini-Hochberg FDR control over a 35-cell multiple-testing "
-        "battery: per (event_type, day-of-week) cell, a two-sample z "
-        "test of per-event cents between the parity variants, then the "
-        "BH step-up at q=0.10 — the guardrail that keeps a 35-metric "
-        "experiment dashboard from 'discovering' 2 fake wins by chance "
-        "(the missing piece next to agg_ttest_welch / agg_wilson_ci / "
-        "qa_chisq_categorical, which each test ONE hypothesis). "
-        "Numeric discipline: per-cell moments are exact ints (BIGINT "
-        "cents, DECIMAL(38) squares, cleared-denominator variance); z "
-        "is one pinned float expression rounded 9; the normal tail is "
-        "the Abramowitz-Stegun 7.1.26 rational erfc (|err| < 1.5e-7, "
-        "SAME closed form both engines, fed the quantized z, rounded 9 "
-        "— the agg_decay_halflife transcendental discipline; like "
-        "agg_hill_tail_index's ln, the single exp carries a 1-ULP "
-        "cross-libm caveat absorbed by the rounding). The step-up "
-        "(rank p ascending, reject through the largest rank with "
-        "p <= rank*q/m) runs as windows over the 35-row spine with a "
-        "deterministic (p, key) tie-break. Scale: ONE map-side-"
-        "combined conditional agg collapses the fact to 35 cells; "
-        "everything after is spine math (the qa_ks_drift argument)."
-    ),
-    tags=("agg", "experiment", "stats"),
-)
-def agg_fdr_bh(spark, sf_dir):
-    from pyspark.sql import Window
-
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    d38 = "decimal(38,0)"
-    cells = t(spark, sf_dir, "events").select(
-        "event_type",
-        (
-            F.datediff(
-                F.date_trunc("day", "ts"),
-                F.lit("2024-01-01").cast("timestamp"),
-            )
-            % 7
-        ).alias("dow"),
-        (F.col("user_id") % 2).alias("variant"),
-        cents.alias("x"),
-    )
-    v0 = F.col("variant") == 0
-    v1 = F.col("variant") == 1
-    m = cells.groupBy("event_type", "dow").agg(
-        F.count(F.when(v0, 1)).cast("long").alias("n0"),
-        F.count(F.when(v1, 1)).cast("long").alias("n1"),
-        F.sum(F.when(v0, F.col("x"))).cast("long").alias("sx0"),
-        F.sum(F.when(v1, F.col("x"))).cast("long").alias("sx1"),
-        F.sum(F.when(v0, F.col("x").cast(d38) * F.col("x")))
-        .cast(d38)
-        .alias("sxx0"),
-        F.sum(F.when(v1, F.col("x").cast(d38) * F.col("x")))
-        .cast(d38)
-        .alias("sxx1"),
-    )
-
-    def _vm(n, sx, sxx):
-        # sx**2 can pass 2^63 long before sxx's DECIMAL(38) does —
-        # square in decimal too (exact, same doubles where both fit)
-        return (
-            (F.col(n) * F.col(sxx) - F.col(sx).cast(d38) * F.col(sx)).cast(
-                "double"
-            )
-            / (F.col(n).cast("double") * (F.col(n) - 1))
-            / F.col(n)
-        )
-
-    s = m.filter((F.col("n0") >= 2) & (F.col("n1") >= 2)).select(
-        "event_type",
-        "dow",
-        "n0",
-        "n1",
-        (
-            F.col("sx1").cast("double") / F.col("n1")
-            - F.col("sx0").cast("double") / F.col("n0")
-        ).alias("diff"),
-        (_vm("n0", "sx0", "sxx0") + _vm("n1", "sx1", "sxx1")).alias("vsum"),
-    )
-    z = s.filter(F.col("vsum") > 0).select(
-        "event_type",
-        "dow",
-        "n0",
-        "n1",
-        F.round(F.col("diff") / F.sqrt("vsum"), 9).alias("z_stat"),
-    )
-    # Abramowitz-Stegun 7.1.26 erfc at |z|/sqrt(2) == two-sided normal p
-    x = F.abs(F.col("z_stat")) / F.lit(1.4142135623730951)
-    tt = F.lit(1.0) / (F.lit(1.0) + F.lit(0.3275911) * x)
-    poly = tt * (
-        F.lit(0.254829592)
-        + tt
-        * (
-            F.lit(-0.284496736)
-            + tt
-            * (
-                F.lit(1.421413741)
-                + tt * (F.lit(-1.453152027) + tt * F.lit(1.061405429))
-            )
-        )
-    )
-    p = z.withColumn("p_value", F.round(poly * F.exp(-x * x), 9))
-    w_rank = Window.orderBy("p_value", "event_type", "dow")
-    w_all = Window.partitionBy()
-    r = p.select(
-        "*",
-        F.row_number().over(w_rank).cast("long").alias("p_rank"),
-        F.count(F.lit(1)).over(w_all).cast("long").alias("m_tests"),
-    )
-    k = r.withColumn(
-        "kstar",
-        F.max(
-            F.when(
-                F.col("p_value")
-                <= F.col("p_rank").cast("double")
-                * F.lit(0.10)
-                / F.col("m_tests"),
-                F.col("p_rank"),
-            )
-        ).over(w_all),
-    )
-    return k.select(
-        "event_type",
-        F.col("dow").cast("long").alias("dow"),
-        "n0",
-        "n1",
-        "z_stat",
-        "p_value",
-        "p_rank",
-        "m_tests",
-        F.when(F.col("p_rank") <= F.coalesce(F.col("kstar"), F.lit(0)), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("rejected"),
-    )
-
-
-@EXT.add(
-    "feat_split_time_purged",
-    oracle="""
-    WITH bounds AS (
-      SELECT epoch_us(MIN(ts)) AS mn, epoch_us(MAX(ts)) AS mx FROM events
-    ),
-    folds AS (
-      SELECT k, mn + k * ((mx - mn) // 4) AS b_us, (mx - mn) // 4 AS q
-      FROM bounds, (VALUES (1), (2), (3)) AS f(k)
-    ),
-    tagged AS (
-      SELECT f.k,
-             CASE WHEN e.e_us <= f.b_us - 86400000000 THEN 'train'
-                  WHEN e.e_us <= f.b_us THEN 'purged'
-                  WHEN e.e_us <= f.b_us + f.q THEN 'test' END AS split,
-             e.user_id, e.e_us
-      FROM (SELECT epoch_us(ts) AS e_us, user_id FROM events) e
-      CROSS JOIN folds f
-    )
-    SELECT CAST(k AS INT) AS fold, split,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           make_timestamp(MIN(e_us)) AS min_ts,
-           make_timestamp(MAX(e_us)) AS max_ts
-    FROM tagged WHERE split IS NOT NULL
-    GROUP BY 1, 2
-    """,
-    doc=(
-        "Purged walk-forward split with embargo: 3 expanding-window "
-        "folds over the event timeline, each fold's train set ending a "
-        "full 24 h EMBARGO before its test window opens and the rows "
-        "in between PURGED — the leakage-safe evaluation protocol for "
-        "time-series models (a random or group split silently leaks "
-        "label-adjacent rows across the boundary; the embargo also "
-        "kills lookahead through lagged/rolling features that span the "
-        "cut — the companion to feat_split_groupwise, which guards "
-        "entity leakage, not time leakage). Fold boundaries are pure "
-        "integer epoch-microsecond arithmetic (min + k*(span div 4), "
-        "engine-independent; no date rounding), so the emitted per-"
-        "(fold, split) min/max timestamps PROVE the gap: every fold's "
-        "train max_ts <= boundary - 24 h < test min_ts. Scale: the "
-        "2-value bounds agg broadcasts, the 3-row fold spine cross-"
-        "joins via broadcast nested loop (3x fact pass-through, no "
-        "shuffle), and the final (fold, split) agg is map-side "
-        "combined into 9 cells."
-    ),
-    tags=("feat", "split", "timeseries"),
-)
-def feat_split_time_purged(spark, sf_dir):
-    ev = t(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("e_us"), "user_id"
-    )
-    bounds = ev.agg(
-        F.min("e_us").alias("mn"), F.max("e_us").alias("mx")
-    )
-    folds = bounds.select(
-        F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k"),
-        "mn",
-        "mx",
-    ).select(
-        "k",
-        (F.col("mn") + F.col("k") * F.expr("(mx - mn) div 4")).alias("b_us"),
-        F.expr("(mx - mn) div 4").alias("q"),
-    )
-    tagged = ev.crossJoin(F.broadcast(folds)).select(
-        "k",
-        F.when(F.col("e_us") <= F.col("b_us") - 86_400_000_000, "train")
-        .when(F.col("e_us") <= F.col("b_us"), "purged")
-        .when(F.col("e_us") <= F.col("b_us") + F.col("q"), "test")
-        .alias("split"),
-        "user_id",
-        "e_us",
-    )
-    return (
-        tagged.filter(F.col("split").isNotNull())
-        .groupBy(F.col("k").cast("int").alias("fold"), "split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.timestamp_micros(F.min("e_us")).alias("min_ts"),
-            F.timestamp_micros(F.max("e_us")).alias("max_ts"),
-        )
-    )
-
-
-@EXT.add(
-    "win_sprt_always_valid",
-    oracle="""
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(COUNT(CASE WHEN user_id % 2 = 0 THEN 1 END) AS BIGINT)
-               AS n0,
-             CAST(COUNT(CASE WHEN user_id % 2 = 1 THEN 1 END) AS BIGINT)
-               AS n1,
-             CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 0
-                   THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS s0,
-             CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 1
-                   THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS BIGINT) AS s1,
-             CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 0
-                   THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                        * TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS HUGEINT) AS q0,
-             CAST(COALESCE(SUM(CASE WHEN user_id % 2 = 1
-                   THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                        * TRY_CAST(ROUND(value * 100) AS BIGINT) END), 0)
-                  AS HUGEINT) AS q1
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    cum AS (
-      SELECT day,
-             CAST(SUM(n0) OVER w AS BIGINT) AS cn0,
-             CAST(SUM(n1) OVER w AS BIGINT) AS cn1,
-             CAST(SUM(s0) OVER w AS BIGINT) AS cs0,
-             CAST(SUM(s1) OVER w AS BIGINT) AS cs1,
-             CAST(SUM(q0) OVER w AS HUGEINT) AS cq0,
-             CAST(SUM(q1) OVER w AS HUGEINT) AS cq1
-      FROM daily
-      WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW)
-    ),
-    f AS (
-      SELECT day, cn0, cn1,
-             CAST(cs1 AS DOUBLE) / cn1 - CAST(cs0 AS DOUBLE) / cn0
-               AS delta,
-             (CAST(cn0 * cq0 - CAST(cs0 AS HUGEINT) * cs0 AS DOUBLE) / cn0
-              + CAST(cn1 * cq1 - CAST(cs1 AS HUGEINT) * cs1 AS DOUBLE) / cn1)
-             / (cn0 + cn1 - 2) AS sig2
-      FROM cum WHERE cn0 >= 2 AND cn1 >= 2
-    ),
-    v AS (
-      SELECT day, cn0, cn1, delta,
-             sig2 * CAST(cn0 + cn1 AS DOUBLE)
-                  / CAST(cn0 * cn1 AS DOUBLE) AS vv
-      FROM f WHERE sig2 > 0
-    ),
-    lam AS (
-      SELECT day, cn0, cn1, delta,
-             0.5 * LN(vv / (vv + 250000.0))
-             + delta * delta * 250000.0 / (2.0 * vv * (vv + 250000.0))
-               AS log_lambda
-      FROM v
-    ),
-    run AS (
-      SELECT day, cn0, cn1, delta, log_lambda,
-             MAX(log_lambda) OVER (ORDER BY day ROWS BETWEEN
-               UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-      FROM lam
-    )
-    SELECT day, cn0 AS n0, cn1 AS n1,
-           ROUND(delta, 9) AS delta_cents,
-           ROUND(log_lambda, 9) AS log_lambda,
-           ROUND(LEAST(1.0, EXP(-peak)), 9) AS p_always_valid,
-           CAST(CASE WHEN LEAST(1.0, EXP(-peak)) <= 0.05
-                     THEN 1 ELSE 0 END AS INT) AS significant
-    FROM run
-    """,
-    doc=(
-        "Always-valid sequential test (mixture SPRT, normal mixture "
-        "prior tau = 500 cents): the running per-day monitor of the "
-        "variant revenue difference whose p-value is valid UNDER "
-        "CONTINUOUS PEEKING — the guard the fixed-horizon battery "
-        "(agg_ttest_welch / agg_wilson_ci / agg_fdr_bh) cannot give, "
-        "because checking a fixed-horizon test daily inflates false "
-        "positives ~5x (the 'peeking problem'). Per day: cumulative "
-        "EXACT integer moments (BIGINT cents, DECIMAL(38) squares) "
-        "via a running-sum window over the bounded day spine; pooled "
-        "variance, delta, and the mixture likelihood ratio are pinned "
-        "float sequences; Lambda lives in LOG SPACE (no overflow at "
-        "any horizon) and the always-valid p is exp(-running max), "
-        "clamped to 1 and rounded 9 (LN/EXP carry the documented "
-        "1-ULP cross-libm caveat, absorbed by rounding as in "
-        "agg_hill_tail_index / agg_fdr_bh). Scale: ONE map-side-"
-        "combined daily agg collapses the fact; every window runs on "
-        "the ~30-row day spine (the qa_ks_drift argument), never the "
-        "fact table."
-    ),
-    tags=("window", "experiment", "stats", "streaming-state"),
-)
-def win_sprt_always_valid(spark, sf_dir):
-    from pyspark.sql import Window
-
-    cents = F.round(F.col("value") * 100).try_cast("long")
-    d38 = "decimal(38,0)"
-    v0 = F.col("user_id") % 2 == 0
-    v1 = F.col("user_id") % 2 == 1
-    daily = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.count(F.when(v0, 1)).cast("long").alias("n0"),
-            F.count(F.when(v1, 1)).cast("long").alias("n1"),
-            F.coalesce(F.sum(F.when(v0, cents)), F.lit(0))
-            .cast("long")
-            .alias("s0"),
-            F.coalesce(F.sum(F.when(v1, cents)), F.lit(0))
-            .cast("long")
-            .alias("s1"),
-            F.coalesce(
-                F.sum(F.when(v0, cents.cast(d38) * cents)), F.lit(0)
-            )
-            .cast(d38)
-            .alias("q0"),
-            F.coalesce(
-                F.sum(F.when(v1, cents.cast(d38) * cents)), F.lit(0)
-            )
-            .cast(d38)
-            .alias("q1"),
-        )
-    )
-    w = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = daily.select(
-        "day",
-        F.sum("n0").over(w).cast("long").alias("cn0"),
-        F.sum("n1").over(w).cast("long").alias("cn1"),
-        F.sum("s0").over(w).cast("long").alias("cs0"),
-        F.sum("s1").over(w).cast("long").alias("cs1"),
-        F.sum("q0").over(w).cast(d38).alias("cq0"),
-        F.sum("q1").over(w).cast(d38).alias("cq1"),
-    )
-    f = cum.filter((F.col("cn0") >= 2) & (F.col("cn1") >= 2)).select(
-        "day",
-        "cn0",
-        "cn1",
-        (
-            F.col("cs1").cast("double") / F.col("cn1")
-            - F.col("cs0").cast("double") / F.col("cn0")
-        ).alias("delta"),
-        (
-            (
-                # cumulative sums square past 2^63 at lifetime-revenue
-                # horizons — square in DECIMAL(38), cast to double once
-                (
-                    F.col("cn0") * F.col("cq0")
-                    - F.col("cs0").cast(d38) * F.col("cs0")
-                ).cast("double")
-                / F.col("cn0")
-                + (
-                    F.col("cn1") * F.col("cq1")
-                    - F.col("cs1").cast(d38) * F.col("cs1")
-                ).cast("double")
-                / F.col("cn1")
-            )
-            / (F.col("cn0") + F.col("cn1") - 2)
-        ).alias("sig2"),
-    )
-    v = f.filter(F.col("sig2") > 0).select(
-        "day",
-        "cn0",
-        "cn1",
-        "delta",
-        (
-            F.col("sig2")
-            * (F.col("cn0") + F.col("cn1")).cast("double")
-            / (F.col("cn0") * F.col("cn1")).cast("double")
-        ).alias("vv"),
-    )
-    tau2 = F.lit(250000.0)
-    lam = v.select(
-        "day",
-        "cn0",
-        "cn1",
-        "delta",
-        (
-            F.lit(0.5) * F.log(F.col("vv") / (F.col("vv") + tau2))
-            + F.col("delta")
-            * F.col("delta")
-            * tau2
-            / (F.lit(2.0) * F.col("vv") * (F.col("vv") + tau2))
-        ).alias("log_lambda"),
-    )
-    run = lam.withColumn("peak", F.max("log_lambda").over(w))
-    p = F.least(F.lit(1.0), F.exp(-F.col("peak")))
-    return run.select(
-        "day",
-        F.col("cn0").alias("n0"),
-        F.col("cn1").alias("n1"),
-        F.round("delta", 9).alias("delta_cents"),
-        F.round("log_lambda", 9).alias("log_lambda"),
-        F.round(p, 9).alias("p_always_valid"),
-        F.when(p <= 0.05, 1).otherwise(0).cast("int").alias("significant"),
-    )
-
-
-@EXT.add(
-    "feat_target_encode_expanding",
-    oracle="""
-    WITH p AS (
-      SELECT event_id, user_id, ts,
-             TRY_CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-    ),
-    w AS (
-      SELECT event_id, user_id, ts, cents,
-             CAST(COUNT(*) OVER fr AS BIGINT) AS prior_n,
-             CAST(COALESCE(SUM(cents) OVER fr, 0) AS BIGINT)
-               AS prior_sum_cents
-      FROM p
-      WINDOW fr AS (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    )
-    SELECT event_id, user_id, ts, cents, prior_n, prior_sum_cents,
-           CASE WHEN prior_n > 0
-                THEN (prior_sum_cents * 10000) // prior_n END AS enc_micro
-    FROM w
-    """,
-    doc=(
-        "TIME-SAFE expanding target encoding: each purchase event is "
-        "encoded with the mean of that user's STRICTLY PRIOR purchases "
-        "(exclusive expanding frame, ROWS UNBOUNDED PRECEDING .. 1 "
-        "PRECEDING) — the production-correct variant of "
-        "feat_target_encode_loo, whose leave-one-out mean still mixes "
-        "FUTURE rows into a training feature and so train-serving-"
-        "skews any time-ordered deployment (at serving time only the "
-        "past exists; this encoding is exactly reproducible there, "
-        "and composes with feat_split_time_purged's embargoed splits). "
-        "First event per user encodes NULL (no history) rather than a "
-        "leaked global mean. Exact integer arithmetic end to end "
-        "(cents, micro-scaled truncating division, Spark `div` == "
-        "DuckDB `//` for non-negative operands); the deterministic "
-        "(ts, event_id) order key makes the running sums unique per "
-        "row. Scale: ONE (user) exchange + sort feeds both window "
-        "moments — the fact table is never joined or re-shuffled; "
-        "key cardinality grows with users, so parallelism scales "
-        "with data."
-    ),
-    tags=("feat", "ml", "window", "timeseries"),
-)
-def feat_target_encode_expanding(spark, sf_dir):
-    from pyspark.sql import Window
-
-    p = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            F.round(F.col("value") * 100).try_cast("long").alias("cents"),
-        )
-    )
-    fr = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w = p.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "cents",
-        F.count(F.lit(1)).over(fr).cast("long").alias("prior_n"),
-        F.coalesce(F.sum("cents").over(fr), F.lit(0))
-        .cast("long")
-        .alias("prior_sum_cents"),
-    )
-    return w.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "cents",
-        "prior_n",
-        "prior_sum_cents",
-        F.when(
-            F.col("prior_n") > 0,
-            F.expr("(prior_sum_cents * 10000) div prior_n"),
-        ).alias("enc_micro"),
-    )
-
-
-@EXT.add(
-    "pipeline_daily_run",
-    oracle="""
-    WITH ts_pool AS (
-      SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS app_id
-      FROM (SELECT o_custkey FROM orders
-            ORDER BY o_totalprice DESC, o_orderkey LIMIT 500)
-    ),
-    played AS (
-      SELECT l_partkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS tq
-      FROM lineitem GROUP BY l_partkey
-    ),
-    mp_pool AS (
-      SELECT CAST(l_partkey AS VARCHAR) AS app_id
-      FROM (SELECT l_partkey FROM played ORDER BY tq DESC, l_partkey LIMIT 100)
-    ),
-    pool AS (SELECT app_id FROM ts_pool UNION SELECT app_id FROM mp_pool),
-    yday_pool AS (
-      SELECT CAST(l_partkey AS VARCHAR) AS app_id
-      FROM (SELECT l_partkey FROM played ORDER BY tq DESC, l_partkey LIMIT 120)
-    ),
-    details AS (
-      SELECT CAST(p_partkey AS VARCHAR) AS app_id, TRIM(p_name) AS name,
-             p_brand AS developer, p_retailprice
-      FROM part
-    ),
-    dim_today AS (
-      SELECT d.app_id, d.name, d.developer,
-             -- TRY_CAST: a price past DECIMAL(10,2)'s 8 integer digits
-             -- is out of the money domain -> NULL (r12 contract)
-             CAST(TRY_CAST(d.p_retailprice AS DECIMAL(10,2)) AS DOUBLE) AS price_numeric
-      FROM details d JOIN pool USING (app_id)
-      WHERE d.name IS NOT NULL AND d.name <> ''
-    ),
-    dim_yday AS (
-      SELECT d.app_id, 'stale:' || d.name AS name, d.developer,
-             CAST(TRY_CAST(d.p_retailprice + 1 AS DECIMAL(10,2)) AS DOUBLE) AS price_numeric
-      FROM details d JOIN yday_pool USING (app_id)
-      WHERE d.name IS NOT NULL AND d.name <> ''
-    ),
-    merged AS (
-      SELECT COALESCE(td.app_id, yd.app_id) AS app_id,
-             COALESCE(td.name, yd.name) AS name,
-             COALESCE(td.developer, yd.developer) AS developer,
-             COALESCE(td.price_numeric, yd.price_numeric) AS price_numeric,
-             CASE WHEN td.app_id IS NOT NULL THEN TIMESTAMP '2024-01-02'
-                  ELSE TIMESTAMP '2024-01-01' END AS updated_day,
-             CAST((CASE WHEN td.app_id IS NOT NULL THEN 1 ELSE 0 END)
-                + (CASE WHEN yd.app_id IS NOT NULL THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_fact_rows
-      FROM dim_today td FULL JOIN dim_yday yd ON td.app_id = yd.app_id
-    ),
-    player AS (
-      SELECT CAST(l_partkey AS VARCHAR) AS app_id,
-             CAST(tq AS DOUBLE) AS player_qty
-      FROM played
-    ),
-    streams AS (
-      SELECT CAST(user_id AS VARCHAR) AS app_id,
-             CAST(LEAST(COUNT(*), 100) AS BIGINT) AS streamer_count
-      FROM events GROUP BY user_id
-    )
-    SELECT m.app_id, m.name, m.developer, m.price_numeric, m.updated_day,
-           m.n_fact_rows,
-           COALESCE(p.player_qty, 0.0) AS player_qty,
-           COALESCE(s.streamer_count, 0) AS streamer_count
-    FROM merged m
-    LEFT JOIN player p ON p.app_id = m.app_id
-    LEFT JOIN streams s ON s.app_id = m.app_id
-    """,
-    doc=(
-        "The reference's WHOLE main path (EP1, main.py:378-495) as one "
-        "oracle-checked program — the ingest-side sibling of "
-        "llm_corpus_export: candidate gather (two ranked scans, "
-        "main.py:411-416) -> union+distinct+sort (main.py:421) -> "
-        "details enrichment + validity filter (main.py:443-449) -> "
-        "versioned MERGE upsert of the dimension over YESTERDAY's "
-        "state (main.py:451-457; yesterday = the most-played scan "
-        "ranked deeper, rows stale-prefixed and price-perturbed so the "
-        "merge direction is value-visible) -> fact enrichment + append "
-        "accounting (main.py:464-477; n_fact_rows = 2 for keys "
-        "ingested both days, 1 for stale survivors and new arrivals). "
-        "Every stage is individually green elsewhere (src_top_selling, "
-        "src_most_played, set_union_distinct_sort, join_enrich_details, "
-        "sink_upsert_metadata, sink_append_timeseries); this query "
-        "pins their COMPOSITION against a single SQL replica, with "
-        "deterministic day stamps so the upsert's max-version rule is "
-        "hash-checkable. The lock/journal and empty-pool-abort arms "
-        "live in tests/test_pipeline.py (they gate execution, not "
-        "dataflow). Scale: both candidate scans are TakeOrderedAndProject "
-        "heaps; the pool is a few hundred keys, so every enrichment "
-        "join broadcasts the POOL side against the fact/dim scans; the "
-        "merge shuffles once on the key; fact legs are map-side-combined "
-        "aggregates joined back by key — no fact-x-fact join anywhere."
-    ),
-    tags=("pipeline", "flagship", "ingest", "upsert"),
-)
-def pipeline_daily_run(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.aggregates import (
-        capped_count_per_key,
-        dec_sum,
-    )
-    from steam_data_pipeline_spark.operators.relational import topk
-    from steam_data_pipeline_spark.operators.upsert import merge_upsert
-    from steam_data_pipeline_spark.streaming.ingest import (
-        build_metadata,
-        gather_candidates,
-    )
-
-    ts0 = F.lit("2024-01-01").cast("timestamp")
-    ts1 = F.lit("2024-01-02").cast("timestamp")
-    played = (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(dec_sum("l_quantity").alias("tq"))
-    )
-    # yesterday's stored state: the most-played scan ranked 20 deeper,
-    # so ranks 101-120 fall out of today's pool and must SURVIVE the
-    # merge as stale rows (the reference upsert never deletes)
-    yday_pool = topk(
-        played, [F.col("tq").desc(), F.col("l_partkey")], 120
-    ).select(F.col("l_partkey").cast("string").alias("app_id"))
-    yday_dim = build_metadata(spark, sf_dir, yday_pool, now=ts0).select(
-        "app_id",
-        F.concat(F.lit("stale:"), F.col("name")).alias("name"),
-        "developer",
-        (F.col("retail_price") + 1)
-        .try_cast("decimal(10,2)")
-        .cast("double")
-        .alias("price_numeric"),
-        "metadata_last_updated",
-    )
-    today_dim = build_metadata(
-        spark, sf_dir, gather_candidates(spark, sf_dir), now=ts1
-    ).select(
-        "app_id",
-        "name",
-        "developer",
-        F.col("retail_price")
-        .try_cast("decimal(10,2)")
-        .cast("double")
-        .alias("price_numeric"),
-        "metadata_last_updated",
-    )
-    merged = merge_upsert(
-        yday_dim, today_dim, key="app_id",
-        version_cols=["metadata_last_updated"],
-    )
-    # append accounting: one fact row per (day, dim row) — yesterday's
-    # run appended for yday_dim, today's for today_dim
-    fact_counts = (
-        yday_dim.select("app_id")
-        .unionByName(today_dim.select("app_id"))
-        .groupBy("app_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_fact_rows"))
-    )
-    player = played.select(
-        F.col("l_partkey").cast("string").alias("app_id"),
-        F.col("tq").cast("double").alias("player_qty"),
-    )
-    streams = capped_count_per_key(
-        t(spark, sf_dir, "events").withColumn(
-            "app_id", F.col("user_id").cast("string")
-        ),
-        "app_id",
-        100,
-        "streamer_count",
-    ).select("app_id", F.col("streamer_count").cast("long").alias("streamer_count"))
-    return (
-        merged.select(
-            "app_id",
-            "name",
-            "developer",
-            "price_numeric",
-            F.date_trunc("day", F.col("metadata_last_updated")).alias(
-                "updated_day"
-            ),
-        )
-        .join(fact_counts, on="app_id", how="inner")
-        .join(player, on="app_id", how="left")
-        .join(streams, on="app_id", how="left")
-        .select(
-            "app_id",
-            "name",
-            "developer",
-            "price_numeric",
-            "updated_day",
-            "n_fact_rows",
-            F.coalesce("player_qty", F.lit(0.0)).alias("player_qty"),
-            F.coalesce("streamer_count", F.lit(0).cast("long")).alias(
-                "streamer_count"
-            ),
-        )
-    )
-
-
-#: bucket count for the bench-fixture signature index. The helper
-#: default (4096) is the 100 TB posture; at sf<=1 the 40k-row index
-#: would pay 4096-directory listings per probe for no extra pruning
-#: (a quarter-corpus batch touches nearly every bucket either way), so
-#: the fixture sizes buckets to the data like production would.
-_MHIDX_BUCKETS = 256
-
-
-def _prepare_minhash_index(spark, sf_dir: str) -> str:
-    """The persisted band-signature index that
-    ``llm_dedup_incremental_persisted`` probes — the standing-corpus
-    posture rehearsed by ``tools/scale_rehearsal.py dedup-amortized``:
-    the index EXISTS on disk before any batch runs, so its one-time
-    build belongs to bench startup, not to the query timing (same
-    accounting as the IVF/LSH indexes above)."""
-    corpus = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 != 0)
-
-    def _write(d):
-        D.persist_signature_index(
-            D.banded_signatures(corpus), d, n_buckets=_MHIDX_BUCKETS
-        )
-
-    return _cached_layout("mhidx", sf_dir, _write)
-
-
-BENCH_FIXTURES.append(_prepare_minhash_index)
-
-
-@EXT.add(
-    "llm_dedup_incremental_persisted",
-    oracle=_INCR_DEDUP_ORACLE,
-    doc=(
-        "The PRODUCTION incremental-dedup calling convention end-to-"
-        "end, driver-checked: the standing corpus's band-signature "
-        "index is persisted ONCE (parquet partitioned by a bounded "
-        "GROUP of the band-coordinate bucket with bucket-sorted "
-        "files, llm/dedup.py persist_signature_index), and the "
-        "incoming batch (doc_id % 4 = 0) probes ONLY the partitions "
-        "its own band hashes touch (probe_signature_index — the "
-        "touched-bucket list is a bounded collect that IS the "
-        "pruning predicate: directory pruning on touched groups, "
-        "parquet-stats pruning on touched buckets, exact by "
-        "construction since colliding hashes share a bucket). Same "
-        "two-stage semantics and oracle as llm_dedup_incremental, "
-        "which recomputes the corpus signatures in-query; this "
-        "variant's timing is what each ingest batch pays at 100 TB — "
-        "flat in corpus size (SCALE.md round-9 table: exponent -0.01 "
-        "at 10x corpus; reference ingest loop main.py:432-477)."
-    ),
-    tags=("llm", "dedup", "incremental", "persistence"),
-)
-def llm_dedup_incremental_persisted(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 4 == 0)
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    path = _prepare_minhash_index(spark, sf_dir)
-    # checkpoint the batch signatures ONCE: the probe's touched-bucket
-    # collect and both probe sides inside the dedup reuse them
-    new_sigs = D.banded_signatures(new).localCheckpoint(eager=True)
-    pruned = D.probe_signature_index(
-        spark, path, new_sigs, n_buckets=_MHIDX_BUCKETS
-    )
-    return D.minhash_dedup_incremental(
-        corpus,
-        new,
-        threshold=0.6,
-        corpus_signatures=pruned,
-        new_signatures=new_sigs,
-    ).select("doc_id", "lang", "source")
-
-
-@EXT.add(
-    "llm_dataset_card",
-    oracle="""
-    WITH base AS (
-      SELECT source,
-             CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len(regexp_split_to_array(trim(text), '\\s+')))
-                  AS BIGINT) AS n_tokens,
-             CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-             CAST(COUNT(*) - COUNT(DISTINCT text) AS BIGINT) AS dup_docs,
-             CAST(SUM(n_chars) AS BIGINT) AS total_chars
-      FROM documents GROUP BY source
-    ),
-    lc AS (
-      SELECT source, lang, COUNT(*) AS c FROM documents GROUP BY source, lang
-    ),
-    top AS (
-      SELECT source, lang AS top_lang FROM (
-        SELECT source, lang,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY c DESC, lang) AS rn
-        FROM lc
-      ) WHERE rn = 1
-    )
-    SELECT b.source, b.n_docs, b.n_tokens,
-           ROUND(CAST(b.n_tokens AS DOUBLE) / b.n_docs, 9) AS avg_doc_tokens,
-           b.n_langs, t.top_lang, b.dup_docs, b.total_chars
-    FROM base b JOIN top t ON t.source = b.source
-    """,
-    doc=(
-        "The per-source DATASET CARD — the accounting table a training-"
-        "data pipeline publishes with every corpus drop (docs, token "
-        "volume, language spread, dominant language, exact-dup count, "
-        "char volume per source): the governance surface over the same "
-        "corpus llm_domain_mix/llm_quota_per_source sample from. One "
-        "scan feeds both aggregates (per-source and per-source-lang); "
-        "the dominant language is the deterministic rank-1 row of the "
-        "bounded (source x lang) spine (ties break to the min lang), "
-        "re-attached by key on a spine of |sources| rows. Scale: both "
-        "aggs map-side combine; nothing joins at fact grain; token "
-        "counts are the registry's standard whitespace convention."
-    ),
-    tags=("llm", "accounting", "quality"),
-)
-def llm_dataset_card(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = t(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    base = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(toks).cast("long").alias("n_tokens"),
-        F.countDistinct("lang").cast("long").alias("n_langs"),
-        (F.count(F.lit(1)) - F.countDistinct("text"))
-        .cast("long")
-        .alias("dup_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    )
-    lc = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
-    top = (
-        lc.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(
-                    F.col("c").desc(), F.col("lang")
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("source", F.col("lang").alias("top_lang"))
-    )
-    return base.join(top, on="source", how="inner").select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.round(F.col("n_tokens").cast("double") / F.col("n_docs"), 9).alias(
-            "avg_doc_tokens"
-        ),
-        "n_langs",
-        "top_lang",
-        "dup_docs",
-        "total_chars",
-    )
-
-
-@EXT.add(
-    "llm_ngram_novelty",
-    oracle="""
-    WITH words AS (
-      SELECT doc_id,
-             list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                            x -> lower(x)) AS w
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-      FROM words WHERE len(w) >= 3
-    ),
-    df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s)
-    SELECT sh.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shingles,
-           CAST(SUM(CASE WHEN df.df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_novel,
-           ROUND(CAST(SUM(CASE WHEN df.df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 9) AS novelty
-    FROM sh JOIN df ON df.s = sh.s
-    GROUP BY sh.doc_id
-    """,
-    doc=(
-        "Per-document n-gram NOVELTY — the memorization-risk / "
-        "boilerplate signal: the fraction of a doc's distinct word "
-        "3-grams that appear in NO other document. Low novelty = the "
-        "doc is assembled from corpus-common phrasing (template spam, "
-        "near-dup shards the pairwise detectors score individually); "
-        "high novelty = genuinely fresh text worth its training "
-        "tokens. Complements the PAIRWISE dedup family: containment/"
-        "jaccard score doc pairs, this scores each doc against the "
-        "whole corpus in one pass. Plan: explode distinct per-doc "
-        "shingles, one map-side-combined document-frequency agg over "
-        "the shingle domain, re-attach by shingle key, per-doc agg — "
-        "no doc-x-doc join anywhere; at 100 TB the shingle-domain agg "
-        "is the same Zipf-bounded shape as llm_ngram_freq and the "
-        "novelty ratio is one division of exact counts (ROUND 9)."
-    ),
-    tags=("llm", "dedup", "quality", "text"),
-)
-def llm_ngram_novelty(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id",
-        F.transform(
-            F.split(F.trim(F.col("text")), r"\s+"), lambda x: F.lower(x)
-        ).alias("w"),
-    ).filter(F.size("w") >= 3)
-    sh = words.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(w) - 3), "
-                    "i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-                )
-            )
-        ).alias("s"),
-    )
-    df_counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        sh.join(df_counts, on="s")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum((F.col("df") == 1).cast("long")).cast("long").alias("n_novel"),
-        )
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_shingles",
-        "n_novel",
-        F.round(
-            F.col("n_novel").cast("double") / F.col("n_shingles"), 9
-        ).alias("novelty"),
-    )
-
-
-@EXT.add(
-    "win_interval_coverage",
-    oracle="""
-    WITH cents AS (
-      -- out-of-domain durations (cents beyond 9e12: the us product
-      -- would overflow BIGINT) -> NULL, same flow as a NULL value
-      SELECT user_id, event_id, ts,
-             CASE WHEN ABS(TRY_CAST(ROUND(value * 100) AS BIGINT))
-                       < 9000000000000
-                  THEN TRY_CAST(ROUND(value * 100) AS BIGINT) END AS c
-      FROM events
-    ),
-    iv AS (
-      SELECT user_id, event_id,
-             epoch_us(ts) AS s_us,
-             epoch_us(ts) + c * 1000000 AS e_us
-      FROM cents
-    ),
-    marked AS (
-      SELECT user_id, s_us, e_us,
-             MAX(e_us) OVER (PARTITION BY user_id
-                             ORDER BY s_us, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING) AS prev_max
-      FROM iv
-    )
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_intervals,
-           CAST(SUM(GREATEST(0, e_us - GREATEST(s_us,
-                COALESCE(prev_max, s_us)))) AS BIGINT) AS covered_us,
-           CAST(MAX(e_us) - MIN(s_us) AS BIGINT) AS span_us,
-           ROUND(CAST(SUM(GREATEST(0, e_us - GREATEST(s_us,
-                 COALESCE(prev_max, s_us)))) AS DOUBLE)
-                 / (MAX(e_us) - MIN(s_us)), 9) AS utilization
-    FROM marked GROUP BY user_id
-    """,
-    doc=(
-        "Interval-union COVERAGE per user — total de-overlapped active "
-        "time from possibly-overlapping activity intervals (each event "
-        "opens [ts, ts + value-as-cents seconds]): the playtime-"
-        "accounting twin of win_islands (islands COUNT the merged "
-        "runs; this measures their union LENGTH, plus span and "
-        "utilization). The sweep is the classic sorted running-max: "
-        "one window partitioned by user ordered by (start, event_id), "
-        "each row contributes max(0, end - max(start, prev running "
-        "max end)) — exact integer microseconds via the epoch-micros "
-        "convention, union length provably order-independent under "
-        "ties. Scale: ONE keyed exchange + sort shared by the window "
-        "and the final per-user agg; no self-join (the naive "
-        "interval-merge via range self-join is quadratic in a user's "
-        "overlap depth; this is linear)."
-    ),
-    tags=("window", "timeseries", "islands"),
-)
-def win_interval_coverage(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    ev = t(spark, sf_dir, "events")
-    # duration cents via the domain-total try_cents contract, with the
-    # tighter bound this operator needs (cents*1e6 must fit signed-64
-    # microseconds) — out-of-domain == NULL value == open interval end,
-    # the flow the round-11 NULL sweep already pinned here
-    cents = try_cents("value")
-    dur = F.when(F.abs(cents) < F.lit(9_000_000_000_000), cents)
-    iv = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("s_us"),
-        (F.unix_micros("ts") + dur * F.lit(1_000_000)).alias("e_us"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("s_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    marked = iv.select(
-        "user_id",
-        "s_us",
-        "e_us",
-        F.max("e_us").over(w).alias("prev_max"),
-    )
-    inc = F.greatest(
-        F.lit(0).cast("long"),
-        F.col("e_us")
-        - F.greatest(F.col("s_us"), F.coalesce("prev_max", "s_us")),
-    )
-    return marked.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_intervals"),
-        F.sum(inc).cast("long").alias("covered_us"),
-        (F.max("e_us") - F.min("s_us")).cast("long").alias("span_us"),
-        F.round(
-            F.sum(inc).cast("double") / (F.max("e_us") - F.min("s_us")), 9
-        ).alias("utilization"),
-    )
-
-
-@EXT.add(
-    "win_debounce",
-    oracle="""
-    WITH RECURSIVE ev AS (
-      -- operational time domain (r13 pandas-path Arrow-ns contract)
-      SELECT DISTINCT user_id, ts FROM events
-      WHERE ts >= TIMESTAMP '1970-01-01' AND ts < TIMESTAMP '2100-01-01'
-    ),
-    acc AS (
-      SELECT user_id, MIN(ts) AS ts FROM ev GROUP BY user_id
-      UNION ALL
-      SELECT a.user_id,
-             (SELECT MIN(e.ts) FROM ev e
-              WHERE e.user_id = a.user_id
-                AND e.ts >= a.ts + INTERVAL 14400 SECOND) AS ts
-      FROM acc a
-      WHERE (SELECT MIN(e.ts) FROM ev e
-             WHERE e.user_id = a.user_id
-               AND e.ts >= a.ts + INTERVAL 14400 SECOND) IS NOT NULL
-    )
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_accepted,
-           MAX(ts) AS last_accepted
-    FROM acc GROUP BY user_id
-    """,
-    doc=(
-        "Per-user event DEBOUNCE — keep an event only if >= 4 h have "
-        "passed since the last KEPT event (visit-counting, alert "
-        "rate-limiting, session-start detection where the reference's "
-        "75-105 s batch pacing generalizes, main.py:480-482). "
-        "Genuinely recursive: whether an event survives depends on "
-        "which earlier events survived, so no fixed-frame window "
-        "expresses it (win_sessionize_gap keys on PREVIOUS-EVENT gaps; "
-        "debounce keys on previous-ACCEPTED gaps — a chain). "
-        "Implementation is the recursive grouped-map shape via "
-        "operators.grouped.sorted_grouped_map: key-clustered, "
-        "key-sorted partitions + ONE MapInPandas, so Python is "
-        "invoked per Arrow batch, not per group — applyInPandas "
-        "costs a measured ~4 ms/group of fixed overhead, which at "
-        "100 TB key grain (millions of users) dominates the O(1)-"
-        "state scan itself (identity fn: 3.4 s -> 0.9 s on the "
-        "fixture's 1500 groups). The oracle replays the accept chain "
-        "as a recursive CTE. State per group is ONE timestamp."
-    ),
-    tags=("window", "recursive", "pandas_gm", "timeseries"),
-)
-def win_debounce(spark, sf_dir):
-    import pandas as pd
-
-    # operational time domain: the fold runs in pandas (r13 contract)
-    ev = ops_time_domain(t(spark, sf_dir, "events")).select(
-        "user_id", "ts"
-    )
-
-    def _debounce(pdf: pd.DataFrame) -> pd.DataFrame:
-        # dedup + sort + chain-scan + per-user summary all inside the
-        # group: one keyed exchange total (a Spark-side distinct and a
-        # post-agg would each add another). The scan runs over int64
-        # microseconds, not boxed Timestamps — ~3x on long histories,
-        # and resolution-proof (explicit datetime64[us], the streaming
-        # islands discipline).
-        ts_us = (
-            pdf["ts"].drop_duplicates().sort_values()
-            .to_numpy().astype("datetime64[us]").astype("int64")
-        )
-        gap = 14400 * 1_000_000
-        n = 0
-        last = None
-        for ts in ts_us.tolist():
-            if last is None or ts >= last + gap:
-                n += 1
-                last = ts
-        return pd.DataFrame(
-            {"user_id": pdf["user_id"].iloc[:1].values,
-             "n_accepted": [n],
-             "last_accepted": [
-                 None if last is None else pd.Timestamp(last * 1000)
-             ]}
-        )
-
-    from steam_data_pipeline_spark.operators.grouped import sorted_grouped_map
-
-    return sorted_grouped_map(
-        ev,
-        keys=["user_id"],
-        order=["ts"],
-        fn=_debounce,
-        schema="user_id bigint, n_accepted bigint, last_accepted timestamp",
-    )
-
-
-@EXT.add(
-    "feat_target_encode_kfold",
-    oracle="""
-    WITH cells AS (
-      SELECT event_type, CAST(event_id % 5 AS BIGINT) AS fold,
-             CAST(COUNT(*) AS BIGINT) AS n_in,
-             -- TRY_CAST: out-of-domain cents -> NULL, excluded from
-             -- the target sum (counts still count rows) — r12 contract
-             SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS s
-      FROM events GROUP BY event_type, event_id % 5
-    )
-    SELECT event_type, fold, n_in,
-           CAST(SUM(n_in) OVER (PARTITION BY event_type) - n_in AS BIGINT)
-             AS n_out,
-           CAST(((SUM(s) OVER (PARTITION BY event_type) - s) * 10000)
-                // (SUM(n_in) OVER (PARTITION BY event_type) - n_in)
-                AS BIGINT) AS enc_micro
-    FROM cells
-    """,
-    doc=(
-        "K-FOLD (k=5) out-of-fold target encoding on the bounded "
-        "(event_type x fold) spine — the standard leakage-safe "
-        "encoder for cross-validated training, completing the family: "
-        "feat_target_encode_loo excludes one ROW, "
-        "feat_target_encode_expanding excludes the FUTURE, this "
-        "excludes the row's own FOLD (deterministic fold = event_id % "
-        "5). Each cell's encoding is (total - own-fold sum) / (total "
-        "- own-fold count) over exact integer cents, emitted in "
-        "micro-units by integer division — bit-identical cross-engine "
-        "with zero float accumulation. Scale: ONE map-side-combined "
-        "fact agg to the ~|types|x5 spine; the complement totals are "
-        "spine windows; rows would re-attach by broadcast of the "
-        "spine. No fact-grain window, no join."
-    ),
-    tags=("feature", "encoding", "stats"),
-)
-def feat_target_encode_kfold(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    ev = t(spark, sf_dir, "events")
-    cells = ev.groupBy(
-        "event_type", (F.col("event_id") % 5).cast("long").alias("fold")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_in"),
-        F.sum(try_cents("value")).alias("s"),
-    )
-    wt = Window.partitionBy("event_type")
-    return cells.select(
-        "event_type",
-        "fold",
-        "n_in",
-        (F.sum("n_in").over(wt) - F.col("n_in")).cast("long").alias("n_out"),
-        F.expr(
-            "((sum(s) over (partition by event_type) - s) * 10000) "
-            "div (sum(n_in) over (partition by event_type) - n_in)"
-        ).cast("long").alias("enc_micro"),
-    )
-
-
-@EXT.add(
-    "stream_static_enrich",
-    oracle="""
-    SELECT c.c_mktsegment, e.event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(TRY_CAST(ROUND(e.value * 100) AS BIGINT)) AS BIGINT)
-             AS cents
-    FROM events e JOIN customer c ON c.c_custkey = e.user_id
-    GROUP BY c.c_mktsegment, e.event_type
-    """,
-    doc=(
-        "STREAM-STATIC enrichment join — the one Structured Streaming "
-        "join primitive the registry didn't yet pin: the event stream "
-        "joined per micro-batch against a STATIC dimension (customer, "
-        "keyed user_id = c_custkey) with a complete-mode rollup per "
-        "(segment, event_type). This is the streaming form of the "
-        "reference's per-batch detail enrichment (main.py:443-449 — "
-        "each batch's rows look up the catalog as-of that batch): no "
-        "watermark, no join state — the static side is broadcast into "
-        "every micro-batch, so state is only the 25-cell aggregate. "
-        "availableNow over the finite fixture = the batch join "
-        "(the oracle). Cents are exact integers; at 100 TB the static "
-        "side is a snapshot-pinned dim table and re-broadcast per "
-        "restart, never per row."
-    ),
-    tags=("streaming", "join", "enrich"),
-)
-def stream_static_enrich(spark, sf_dir):
-    return _run_stream_to_memory(
-        _build_stream_static_enrich(spark, sf_dir), "ss_static_enrich", spark
-    )
-
-
-def _build_stream_static_enrich(spark, sf_dir):
-    """Pre-sink streaming plan, shared with the plan-contract test."""
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    dim = t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    ev = _read_events_stream(spark, sf_dir).select(
-        "user_id",
-        "event_type",
-        try_cents("value").alias("cents"),
-    )
-    joined = ev.join(F.broadcast(dim), on="user_id", how="inner")
-    return joined.groupBy("c_mktsegment", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
-
-
-@EXT.add(
-    "agg_lorenz_deciles",
-    oracle="""
-    WITH per_user AS (
-      SELECT user_id,
-             SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY user_id
-    ),
-    ranked AS (
-      -- NULL cents (user with no in-domain purchase) leave the rank
-      -- spine: engines order NULLs oppositely (r12 extremes contract)
-      SELECT cents,
-             row_number() OVER (ORDER BY cents, user_id) AS rk,
-             COUNT(*) OVER () AS n
-      FROM per_user WHERE cents IS NOT NULL
-    ),
-    dec AS (
-      SELECT CAST(((rk - 1) * 10) // n AS BIGINT) AS decile,
-             CAST(COUNT(*) AS BIGINT) AS n_users,
-             CAST(SUM(cents) AS BIGINT) AS cents
-      FROM ranked GROUP BY 1
-    )
-    SELECT decile, n_users, cents,
-           ROUND(CAST(SUM(cents) OVER (ORDER BY decile) AS DOUBLE)
-                 / SUM(cents) OVER (), 9) AS cum_share
-    FROM dec
-    """,
-    doc=(
-        "Lorenz-curve DECILES of per-user purchase revenue — the "
-        "concentration table behind agg_gini_segment's scalar: users "
-        "ranked by exact lifetime cents (ties broken by user_id, fully "
-        "deterministic), integer-partitioned into 10 equal-population "
-        "deciles, each reporting population, exact cents, and the "
-        "cumulative revenue share (one division of exact BIGINTs, "
-        "ROUND 9). Scale: the fact collapses to the user spine first "
-        "(map-side combined); the global rank is a range-partitioned "
-        "sort of the SPINE (users, not events), and everything after "
-        "runs on the 10-row decile spine. The whale-concentration "
-        "accounting every monetization dashboard ships."
-    ),
-    tags=("agg", "stats", "distribution"),
-)
-def agg_lorenz_deciles(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    per_user = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.sum(try_cents("value")).alias("cents"))
-        .filter(F.col("cents").isNotNull())
-    )
-    ranked = per_user.select(
-        "cents",
-        F.row_number()
-        .over(Window.orderBy("cents", "user_id"))
-        .alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-    )
-    dec = ranked.groupBy(
-        F.expr("((rk - 1) * 10) div n").cast("long").alias("decile")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
-    wcum = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy()
-    return dec.select(
-        "decile",
-        "n_users",
-        "cents",
-        F.round(
-            F.sum("cents").over(wcum).cast("double")
-            / F.sum("cents").over(wall),
-            9,
-        ).alias("cum_share"),
-    )
-
-
-@EXT.add(
-    "qa_event_id_gaps",
-    oracle="""
-    WITH ids AS (
-      SELECT event_type, event_id,
-             lag(event_id) OVER (PARTITION BY event_type
-                                 ORDER BY event_id) AS prev_id
-      FROM events
-    )
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_ids,
-           CAST(SUM(CASE WHEN event_id - prev_id > 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_gaps,
-           CAST(SUM(CASE WHEN event_id - prev_id > 1
-                         THEN event_id - prev_id - 1 ELSE 0 END)
-                AS BIGINT) AS missing_ids,
-           CAST(MAX(event_id - prev_id - 1) AS BIGINT) AS max_gap
-    FROM ids GROUP BY event_type
-    """,
-    doc=(
-        "Sequence-gap AUDIT per event type — the data-loss detector an "
-        "ingest pipeline runs after every load (the reference's "
-        "per-batch row-count logs, main.py:458/477, upgraded to "
-        "positional accounting): within each type's event_id sequence, "
-        "count the gaps, the total missing ids, and the largest hole. "
-        "The fixture's ids are globally contiguous, so each type's "
-        "subsequence has real, deterministic gaps to report. One "
-        "keyed exchange + sort feeds the lag window and the final agg "
-        "(the same shared-sort shape as win_islands); at 100 TB the "
-        "audit runs per ingest partition (type x day) so no single "
-        "sort exceeds a partition."
-    ),
-    tags=("qa", "audit", "window"),
-)
-def qa_event_id_gaps(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy("event_id")
-    ids = t(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.lag("event_id").over(w).alias("prev_id"),
-    )
-    gap = F.col("event_id") - F.col("prev_id") - 1
-    return ids.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_ids"),
-        F.sum((gap > 0).cast("long")).cast("long").alias("n_gaps"),
-        F.sum(F.when(gap > 0, gap).otherwise(0)).cast("long").alias("missing_ids"),
-        F.max(gap).cast("long").alias("max_gap"),
-    )
-
-
-@EXT.add(
-    "feat_rare_category_collapse",
-    oracle="""
-    WITH cat AS (
-      -- malformed-JSON contract (r13 axis f): corrupt props = NULL cat
-      SELECT CAST(FLOOR(SQRT(TRY_CAST(CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END AS BIGINT))) AS BIGINT) AS cat,
-             TRY_CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events
-    ),
-    counts AS (
-      SELECT cat, COUNT(*) AS n, SUM(cents) AS cents FROM cat GROUP BY cat
-    ),
-    tagged AS (
-      SELECT CASE WHEN CAST(n AS DOUBLE) / SUM(n) OVER () < 0.05
-                  THEN '__other__' ELSE CAST(cat AS VARCHAR) END AS category,
-             n, cents
-      FROM counts
-    )
-    SELECT category,
-           CAST(SUM(n) AS BIGINT) AS n_rows,
-           CAST(SUM(cents) AS BIGINT) AS cents,
-           ROUND(CAST(SUM(n) AS DOUBLE)
-                 / SUM(SUM(n)) OVER (), 9) AS share
-    FROM tagged GROUP BY category
-    """,
-    doc=(
-        "Rare-category COLLAPSE — the standard cardinality-control "
-        "step before one-hot/target encoding (categories below 5% "
-        "support fold into '__other__' so downstream encoders never "
-        "meet a category the training fold lacked). The category is a "
-        "deterministically SKEWED derivation from the event props JSON "
-        "(floor(sqrt(k)): category c holds (2c+1)% of rows, so cats "
-        "0-1 sit under the 5% threshold at every SF — the collapse is "
-        "scale-invariant, not a fixture accident). Also pins JSON "
-        "extraction parity (get_json_object vs json_extract). Scale: "
-        "one map-side-combined agg to the bounded category spine; the "
-        "share threshold and the re-collapse are spine windows + a "
-        "spine re-agg — the fact is scanned once, nothing joins."
-    ),
-    tags=("feature", "encoding", "json"),
-)
-def feat_rare_category_collapse(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    cat = t(spark, sf_dir, "events").select(
-        # try_cast (r13 malformed-JSON contract)
-        F.floor(
-            F.sqrt(F.get_json_object("props", "$.k").try_cast("long"))
-        ).cast("long").alias("cat"),
-        try_cents("value").alias("cents"),
-    )
-    counts = cat.groupBy("cat").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents")
-    )
-    wall = Window.partitionBy()
-    tagged = counts.select(
-        F.when(
-            F.col("n").cast("double") / F.sum("n").over(wall) < 0.05,
-            F.lit("__other__"),
-        )
-        .otherwise(F.col("cat").cast("string"))
-        .alias("category"),
-        "n",
-        "cents",
-    )
-    return tagged.groupBy("category").agg(
-        F.sum("n").cast("long").alias("n_rows"),
-        F.sum("cents").cast("long").alias("cents"),
-        F.round(
-            F.sum("n").cast("double")
-            / F.sum(F.sum("n")).over(Window.partitionBy()),
-            9,
-        ).alias("share"),
-    )
-
-
-@EXT.add(
-    "win_peak_concurrency",
-    oracle="""
-    WITH pts AS (
-      SELECT event_type, ts AS t, 1 AS delta FROM events
-      UNION ALL
-      SELECT event_type, ts + INTERVAL 30 MINUTE AS t, -1 AS delta
-      FROM events
-    ),
-    net AS (
-      SELECT event_type, t, CAST(SUM(delta) AS BIGINT) AS net
-      FROM pts GROUP BY event_type, t
-    ),
-    run AS (
-      SELECT event_type, t,
-             SUM(net) OVER (PARTITION BY event_type ORDER BY t
-                            ROWS UNBOUNDED PRECEDING) AS cur
-      FROM net
-    ),
-    peaked AS (
-      SELECT event_type, t, cur,
-             MAX(cur) OVER (PARTITION BY event_type) AS peak
-      FROM run
-    )
-    SELECT event_type,
-           CAST(MAX(peak) AS BIGINT) AS peak_concurrent,
-           MIN(t) AS peak_ts
-    FROM peaked WHERE cur = peak GROUP BY event_type
-    """,
-    doc=(
-        "Peak CONCURRENCY per event type via the classic sweep line — "
-        "every event opens a half-open 30-minute activity interval "
-        "[ts, ts+30min), and the answer is the maximum number of "
-        "simultaneously open intervals plus the first instant it is "
-        "attained (the 'peak concurrent players' number every live "
-        "dashboard headlines; the reference's player_count is the "
-        "polled version of exactly this). Shape: endpoints carry "
-        "+1/-1 deltas, deltas are SUMMED PER DISTINCT TIMESTAMP first "
-        "(map-side-combined groupBy — this also makes the half-open "
-        "boundary exact: an interval closing at t cancels one opening "
-        "at t), and the running sum over the per-type timestamp spine "
-        "is the step function's exact value on [t, next_t). The max "
-        "over spine rows equals the function's max, and the peak "
-        "instant is deterministic (MIN t attaining it). Scale: the "
-        "window runs on the DISTINCT-timestamp spine, not raw events, "
-        "after one keyed exchange; no self-join, no interval "
-        "materialization."
-    ),
-    tags=("window", "interval", "analytics"),
-)
-def win_peak_concurrency(spark, sf_dir):
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events").select("event_type", "ts")
-    pts = ev.select(
-        "event_type", F.col("ts").alias("t"), F.lit(1).alias("delta")
-    ).unionByName(
-        ev.select(
-            "event_type",
-            (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("t"),
-            F.lit(-1).alias("delta"),
-        )
-    )
-    net = pts.groupBy("event_type", "t").agg(
-        F.sum("delta").cast("long").alias("net")
-    )
-    wrun = (
-        Window.partitionBy("event_type")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = net.withColumn("cur", F.sum("net").over(wrun))
-    peaked = run.withColumn(
-        "peak", F.max("cur").over(Window.partitionBy("event_type"))
-    )
-    return (
-        peaked.filter(F.col("cur") == F.col("peak"))
-        .groupBy("event_type")
-        .agg(
-            F.max("peak").cast("long").alias("peak_concurrent"),
-            F.min("t").alias("peak_ts"),
-        )
-    )
-
-
-@EXT.add(
-    "win_rfm_segments",
-    oracle="""
-    WITH per_cust AS (
-      SELECT o_custkey,
-             MAX(o_orderdate) AS last_order,
-             CAST(COUNT(*) AS BIGINT) AS freq,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
-      FROM orders GROUP BY o_custkey
-    ),
-    scored AS (
-      SELECT cents,
-             CAST(ntile(5) OVER (ORDER BY last_order DESC, o_custkey)
-                  AS BIGINT) AS r_score,
-             CAST(ntile(5) OVER (ORDER BY freq DESC, o_custkey)
-                  AS BIGINT) AS f_score,
-             CAST(ntile(5) OVER (ORDER BY cents DESC, o_custkey)
-                  AS BIGINT) AS m_score
-      FROM per_cust
-    )
-    SELECT r_score, f_score, m_score,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(cents) AS BIGINT) AS cents
-    FROM scored GROUP BY 1, 2, 3
-    """,
-    doc=(
-        "RFM segmentation — the marketing-standard customer grid: per "
-        "customer, Recency (last order date), Frequency (order count) "
-        "and Monetary (exact lifetime cents) are each quintiled with "
-        "ntile(5) (score 1 = best, deterministic (metric, custkey) "
-        "tie-break; ntile's equal-fill-first-buckets division is "
-        "identical in Spark and DuckDB), then customers are counted "
-        "into the <=125 (r,f,m) cells with their exact revenue. "
-        "Scale: the fact table collapses to the customer SPINE first "
-        "(map-side-combined agg), and the three quintile scores are "
-        "computed by operators/ranks.py::scalable_ntile_desc_multi — "
-        "the two-level histogram rank (scalar-spine min/max broadcast, "
-        "<=4096-row bin histogram with a BOUNDED one-partition "
-        "running sum, then a hash-partitioned per-bin window) — "
-        "bit-identical to ntile but with NO unpartitioned sort of "
-        "the customer spine (the 0.38 10x exponent this query "
-        "carried through round 9); the final cell agg is bounded at "
-        "125 rows. Round 11: a Catalyst-estimate size gate "
-        "(SMALL_SPINE_BYTES) diverts toy/interactive inputs to the "
-        "plain window ntile — identical output by the property test "
-        "covering both gate sides — so small scales no longer pay "
-        "the at-scale plan's fixed cost (1.95s -> ~0.65s at sf0.1)."
-    ),
-    tags=("window", "segmentation", "analytics"),
-)
-def win_rfm_segments(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.ranks import (
-        scalable_ntile_desc_multi,
-    )
-
-    per_cust = (
-        t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.max("o_orderdate").alias("last_order"),
-            F.count(F.lit(1)).cast("long").alias("freq"),
-            F.sum(F.round(F.col("o_totalprice") * 100).try_cast("long")).alias(
-                "cents"
-            ),
-        )
-        # integral recency axis: epoch micros order exactly like the
-        # timestamp itself (the ntz->tz cast and unix_micros are both
-        # monotone); (range+1)*4096 stays far inside int64
-        .withColumn(
-            "r_axis",
-            F.unix_micros(F.col("last_order").cast("timestamp")).cast("long"),
-        )
-    )
-    scored = scalable_ntile_desc_multi(
-        per_cust,
-        5,
-        [("r_axis", "r_score"), ("freq", "f_score"), ("cents", "m_score")],
-        key="o_custkey",
-    )
-    return scored.groupBy("r_score", "f_score", "m_score").agg(
-        F.count(F.lit(1)).cast("long").alias("n_customers"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
-
-
-@EXT.add(
-    "agg_cohort_ltv",
-    oracle="""
-    WITH purch AS (
-      SELECT user_id, date_trunc('week', ts) AS wk,
-             TRY_CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-    ),
-    cohort AS (
-      SELECT user_id, MIN(wk) AS cohort_wk FROM purch GROUP BY user_id
-    ),
-    sizes AS (
-      SELECT cohort_wk, CAST(COUNT(*) AS BIGINT) AS cohort_users
-      FROM cohort GROUP BY cohort_wk
-    ),
-    cells AS (
-      SELECT c.cohort_wk,
-             CAST((date_part('epoch', p.wk)
-                   - date_part('epoch', c.cohort_wk)) // 604800
-                  AS BIGINT) AS age_wk,
-             CAST(SUM(p.cents) AS BIGINT) AS cents
-      FROM purch p JOIN cohort c ON p.user_id = c.user_id
-      GROUP BY 1, 2
-    )
-    SELECT cells.cohort_wk, age_wk, cohort_users, cents,
-           CAST(SUM(cents) OVER (PARTITION BY cells.cohort_wk
-                                 ORDER BY age_wk
-                                 ROWS UNBOUNDED PRECEDING)
-                AS BIGINT) AS cum_cents,
-           ROUND(CAST(SUM(cents) OVER (PARTITION BY cells.cohort_wk
-                                       ORDER BY age_wk
-                                       ROWS UNBOUNDED PRECEDING)
-                      AS DOUBLE) / cohort_users, 9) AS ltv_per_user
-    FROM cells JOIN sizes ON cells.cohort_wk = sizes.cohort_wk
-    """,
-    doc=(
-        "Cohort LTV CURVE — the revenue companion of "
-        "agg_retention_cohort: users are cohorted by first-purchase "
-        "week, every purchase lands in a (cohort, age-in-weeks) cell "
-        "with exact cents, and a running sum over each cohort's age "
-        "axis yields the cumulative lifetime value, per cohort and "
-        "per user (one division of exact BIGINTs, ROUND 9; the week "
-        "age is exact integer epoch-seconds arithmetic on "
-        "week-truncated timestamps, never float date math). Scale: "
-        "purchases collapse to the (user, week) grain map-side, the "
-        "cohort join shuffles on user_id, and the window plus final "
-        "join run on the weeks x weeks cell spine — bounded by the "
-        "calendar, not the data."
-    ),
-    tags=("agg", "cohort", "analytics"),
-)
-def agg_cohort_ltv(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    purch = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.date_trunc("week", F.col("ts")).alias("wk"),
-            try_cents("value").alias("cents"),
-        )
-    )
-    cohort = purch.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
-    sizes = cohort.groupBy("cohort_wk").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_users")
-    )
-    cells = (
-        purch.join(cohort, on="user_id")
-        .groupBy(
-            "cohort_wk",
-            (
-                (F.unix_timestamp("wk") - F.unix_timestamp("cohort_wk"))
-                / F.lit(604800)
-            )
-            .cast("long")
-            .alias("age_wk"),
-        )
-        .agg(F.sum("cents").cast("long").alias("cents"))
-    )
-    wcum = (
-        Window.partitionBy("cohort_wk")
-        .orderBy("age_wk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("cents").over(wcum).cast("long")
-    return (
-        cells.join(F.broadcast(sizes), on="cohort_wk")
-        .select(
-            "cohort_wk",
-            "age_wk",
-            "cohort_users",
-            "cents",
-            cum.alias("cum_cents"),
-            F.round(
-                cum.cast("double") / F.col("cohort_users"), 9
-            ).alias("ltv_per_user"),
-        )
-    )
-
-
-@EXT.add(
-    "llm_mix_temperature",
-    oracle="""
-    WITH counts AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
-      FROM documents GROUP BY source
-    ),
-    tot AS (
-      SELECT CAST(SUM(CAST(POWER(CAST(n_docs AS DOUBLE), 0.7)
-                           AS DECIMAL(38,18))) AS DOUBLE) AS z,
-             CAST(SUM(n_docs) AS BIGINT) AS n
-      FROM counts
-    )
-    SELECT source, n_docs,
-           ROUND(POWER(CAST(n_docs AS DOUBLE), 0.7) / z, 9) AS weight,
-           ROUND((POWER(CAST(n_docs AS DOUBLE), 0.7) / z)
-                 / (CAST(n_docs AS DOUBLE) / n), 9) AS boost
-    FROM counts, tot
-    """,
-    doc=(
-        "TEMPERATURE-scaled domain mixing weights (alpha = 0.7) — the "
-        "multilingual-LM sampling scheme (mBERT/XLM-R style): each "
-        "source's sampling weight is n^0.7 normalized over sources, "
-        "which upsamples small domains and downsamples dominant ones; "
-        "``boost`` = weight / natural share is the per-source up/down "
-        "sampling factor a mixer applies (the knob llm_domain_mix's "
-        "fixed proportions come from). Determinism: the normalizer Z "
-        "sums the pow() terms as DECIMAL(38,18) — order-independent "
-        "under any partitioning, unlike a double sum — and the two "
-        "emitted ratios are rounded to 9 decimals (pow(), like ln(), "
-        "is not IEEE-correctly-rounded across engines). Scale: one "
-        "map-side-combined count per source, then arithmetic on the "
-        "source spine; the weights table broadcasts back to the "
-        "sampler."
-    ),
-    tags=("llm", "curation", "mixing"),
-)
-def llm_mix_temperature(spark, sf_dir):
-    counts = (
-        t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    pw = F.pow(F.col("n_docs").cast("double"), F.lit(0.7))
-    tot = counts.agg(
-        F.sum(pw.cast("decimal(38,18)")).cast("double").alias("z"),
-        F.sum("n_docs").cast("long").alias("n"),
-    )
-    return counts.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        F.round(pw / F.col("z"), 9).alias("weight"),
-        F.round(
-            (pw / F.col("z"))
-            / (F.col("n_docs").cast("double") / F.col("n")),
-            9,
-        ).alias("boost"),
-    )
-
-
-@EXT.add(
-    "agg_conversion_lag",
-    oracle="""
-    WITH first_purchase AS (
-      SELECT user_id, MIN(ts) AS pts
-      FROM events WHERE event_type = 'purchase' GROUP BY user_id
-    ),
-    lags AS (
-      SELECT p.user_id,
-             epoch_us(MIN(e.ts)) - epoch_us(p.pts) AS lag_us
-      FROM first_purchase p
-      JOIN events e
-        ON e.user_id = p.user_id
-       AND e.event_type = 'play'
-       AND e.ts > p.pts
-      GROUP BY p.user_id, p.pts
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_converted,
-           CAST(MIN(lag_us) AS BIGINT) AS min_lag_us,
-           CAST(MAX(lag_us) AS BIGINT) AS max_lag_us,
-           CAST(MEDIAN(lag_us) AS DOUBLE) AS median_lag_us
-    FROM lags
-    """,
-    doc=(
-        "Conversion-LAG distribution — win_funnel_steps tells how MANY "
-        "purchasers go on to play; this tells how FAST: per user, the "
-        "time from first purchase to the first play after it, "
-        "summarized as count / min / max / exact median in integer "
-        "microseconds (median of BIGINTs interpolates to x.0 or x.5 — "
-        "exact in double on both engines; no float time math "
-        "anywhere). Shape: purchases collapse to the user spine "
-        "map-side; plays join that spine on user_id (shuffle join — "
-        "the spine is user-sized, not broadcastable at 100 TB) with "
-        "the ts > pts predicate applied as the join residual, then a "
-        "per-user MIN and one global 4-scalar agg. No window over raw "
-        "events, no self-join of the full fact table."
-    ),
-    tags=("agg", "funnel", "analytics"),
-)
-def agg_conversion_lag(spark, sf_dir):
-    ev = t(spark, sf_dir, "events")
-    first_purchase = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("pts"))
-    )
-    plays = ev.filter(F.col("event_type") == "play").select(
-        "user_id", F.col("ts").alias("play_ts")
-    )
-    lags = (
-        plays.join(first_purchase, on="user_id")
-        .filter(F.col("play_ts") > F.col("pts"))
-        .groupBy("user_id", "pts")
-        .agg(F.min("play_ts").alias("fts"))
-        .select(
-            (F.unix_micros("fts") - F.unix_micros("pts")).alias("lag_us")
-        )
-    )
-    return lags.agg(
-        F.count(F.lit(1)).cast("long").alias("n_converted"),
-        F.min("lag_us").cast("long").alias("min_lag_us"),
-        F.max("lag_us").cast("long").alias("max_lag_us"),
-        F.median("lag_us").cast("double").alias("median_lag_us"),
-    )
-
-
-@EXT.add(
-    "agg_skyline_pareto",
-    oracle="""
-    WITH p AS (
-      -- a NULL dimension cannot be dominance-compared: skyline rows
-      -- need both axes (the operator contract; round-11 NULL sweep)
-      SELECT p_partkey,
-             CAST(ROUND(p_retailprice * 100) AS BIGINT) AS price_cents,
-             CAST(p_size AS BIGINT) AS size
-      FROM part
-      WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
-    ),
-    w AS (
-      SELECT p_partkey, price_cents, size,
-             MAX(size) OVER (ORDER BY price_cents
-                             RANGE BETWEEN UNBOUNDED PRECEDING
-                                       AND 1 PRECEDING) AS smax_lower,
-             MAX(size) OVER (PARTITION BY price_cents) AS smax_equal
-      FROM p
-    )
-    SELECT p_partkey, price_cents, size
-    FROM w
-    WHERE (smax_lower IS NULL OR smax_lower < size)
-      AND smax_equal = size
-    """,
-    doc=(
-        "Pareto SKYLINE (minimize price, maximize size) — the "
-        "dominance query behind every 'best value' product surface: a "
-        "part survives iff no other part is at-most-as-expensive AND "
-        "at-least-as-big with one strict inequality. Expressed as two "
-        "windows over ONE price-ordered sort: a RANGE frame to "
-        "1 PRECEDING gives the max size among STRICTLY cheaper rows "
-        "(range, not rows — price ties must not leak into the frame), "
-        "and a same-price partition max handles the equal-price "
-        "strict-size case; ties on BOTH axes are mutually "
-        "non-dominating and all survive, exactly the dominance "
-        "definition. All-integer comparisons (exact cents/size). "
-        "Scale: no self-join (the naive skyline is O(n^2) pairs), and "
-        "the global single-partition sort never sees the raw input — "
-        "a per-partition LOCAL skyline pre-prune runs first "
-        "(operators/skyline.py: partition-local sort + one vectorized "
-        "mapInPandas running-max scan, zero exchanges, the classic "
-        "block-nested-loop refinement), so only each partition's "
-        "Pareto frontier reaches the global pass. Sound by dominator-"
-        "chaining; the exact two-window filter over the survivors is "
-        "provably the same skyline (plan-contracted: the single-"
-        "partition exchange sits ABOVE the pre-prune)."
-    ),
-    tags=("agg", "window", "analytics"),
-)
-def agg_skyline_pareto(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.skyline import (
-        local_skyline_preprune,
-    )
-
-    p = local_skyline_preprune(
-        t(spark, sf_dir, "part")
-        .filter(
-            # both axes non-null: the pre-prune contract (a NULL
-            # dimension cannot be dominance-compared)
-            F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull()
-        )
-        .select(
-            "p_partkey",
-            F.round(F.col("p_retailprice") * 100)
-            .cast("long")
-            .alias("price_cents"),
-            F.col("p_size").cast("long").alias("size"),
-        ),
-        minimize="price_cents",
-        maximize="size",
-    )
-    w_lower = (
-        Window.orderBy("price_cents")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_eq = Window.partitionBy("price_cents")
-    tagged = p.select(
-        "p_partkey",
-        "price_cents",
-        "size",
-        F.max("size").over(w_lower).alias("smax_lower"),
-        F.max("size").over(w_eq).alias("smax_equal"),
-    )
-    return tagged.filter(
-        (F.col("smax_lower").isNull() | (F.col("smax_lower") < F.col("size")))
-        & (F.col("smax_equal") == F.col("size"))
-    ).select("p_partkey", "price_cents", "size")
-
-
-@EXT.add(
-    "feat_calibration_bins",
-    oracle="""
-    WITH scored AS (
-      SELECT (TRY_CAST(ROUND(value * 100) AS BIGINT) % 1000) / 1000.0 AS score,
-             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label
-      FROM events
-    ),
-    binned AS (
-      SELECT LEAST(CAST(FLOOR(score * 10) AS BIGINT), 9) AS bin,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(score AS DECIMAL(18,4))) AS DOUBLE) AS s_sum,
-             CAST(SUM(label) AS BIGINT) AS pos
-      FROM scored GROUP BY 1
-    )
-    SELECT bin, n,
-           ROUND(s_sum / n, 9) AS mean_score,
-           ROUND(CAST(pos AS DOUBLE) / n, 9) AS pos_rate,
-           ROUND(ABS(s_sum / n - CAST(pos AS DOUBLE) / n), 9) AS gap
-    FROM binned
-    """,
-    doc=(
-        "Calibration RELIABILITY table — the evaluation companion of "
-        "feat_isotonic_calibrate: a deterministic model score in "
-        "[0, 1) (exact-cents modulus, a rational with a finite "
-        "denominator, so its DECIMAL(18,4) sums are exact and "
-        "order-independent) is 10-binned against the binary 'purchase' "
-        "label; each bin reports population, exact mean score, "
-        "positive rate, and the |gap| whose weighted sum is the "
-        "expected calibration error (ECE). Three float divisions per "
-        "bin from exact sums, each rounded 9. Scale: one map-side-"
-        "combined agg to a 10-row spine; the fact table is scanned "
-        "once, never sorted."
-    ),
-    tags=("feat", "ml", "evaluation"),
-)
-def feat_calibration_bins(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    scored = t(spark, sf_dir, "events").select(
-        ((try_cents("value") % 1000) / F.lit(1000.0)).alias("score"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
-    )
-    binned = scored.groupBy(
-        F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("long").alias("bin")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("score").cast("decimal(18,4)")).cast("double").alias("s_sum"),
-        F.sum("label").cast("long").alias("pos"),
-    )
-    mean_score = F.col("s_sum") / F.col("n")
-    pos_rate = F.col("pos").cast("double") / F.col("n")
-    return binned.select(
-        "bin",
-        "n",
-        F.round(mean_score, 9).alias("mean_score"),
-        F.round(pos_rate, 9).alias("pos_rate"),
-        F.round(F.abs(mean_score - pos_rate), 9).alias("gap"),
-    )
-
-
-@EXT.add(
-    "agg_dow_seasonality",
-    oracle="""
-    WITH d AS (
-      SELECT event_type,
-             (CAST(FLOOR(date_part('epoch', ts) / 86400) AS BIGINT) + 3) % 7
-               + 1 AS dow_iso,
-             TRY_CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events
-    ),
-    per AS (
-      SELECT event_type, dow_iso,
-             CAST(COUNT(*) AS BIGINT) AS n_events,
-             CAST(SUM(cents) AS BIGINT) AS cents
-      FROM d GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT event_type, CAST(SUM(cents) AS BIGINT) AS total
-      FROM per GROUP BY 1
-    )
-    SELECT per.event_type, dow_iso, n_events, per.cents,
-           ROUND(7.0 * per.cents / total, 9) AS seasonal_index
-    FROM per JOIN tot ON per.event_type = tot.event_type
-    """,
-    doc=(
-        "Day-of-week SEASONALITY index per event type — the weekly "
-        "profile behind qa_seasonal_residual_anomaly's de-seasonalizer "
-        "and the HW forecasts' period-7 assumption, surfaced directly: "
-        "index = revenue share of the weekday x 7 (1.0 = flat week). "
-        "The weekday derives from PURE INTEGER epoch-day arithmetic "
-        "((epoch_day + 3) % 7 + 1, ISO Monday=1) rather than each "
-        "engine's dayofweek() — Spark and DuckDB disagree on weekday "
-        "numbering conventions, integer math cannot. Exact cents "
-        "everywhere; one division per (type, dow) cell, rounded 9. "
-        "Scale: map-side-combined agg to a <=|types|x7 spine, spine "
-        "arithmetic after."
-    ),
-    tags=("agg", "timeseries", "seasonality"),
-)
-def agg_dow_seasonality(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    d = t(spark, sf_dir, "events").select(
-        "event_type",
-        (
-            (F.floor(F.unix_timestamp("ts") / 86400).cast("long") + 3) % 7 + 1
-        ).alias("dow_iso"),
-        try_cents("value").alias("cents"),
-    )
-    per = d.groupBy("event_type", "dow_iso").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
-    tot = per.groupBy("event_type").agg(
-        F.sum("cents").cast("long").alias("total")
-    )
-    return per.join(F.broadcast(tot), on="event_type").select(
-        "event_type",
-        "dow_iso",
-        "n_events",
-        "cents",
-        F.round(F.lit(7.0) * F.col("cents") / F.col("total"), 9).alias(
-            "seasonal_index"
-        ),
-    )
-
-
-@EXT.add(
-    "llm_embedding_centroid",
-    oracle="""
-    WITH e AS (
-      SELECT label, u.d AS dim, u.q AS q
-      FROM embeddings,
-           UNNEST(list_transform(range(1, len(embedding) + 1),
-                  i -> {'d': i - 1,
-                        'q': TRY_CAST(ROUND(CAST(embedding[i] AS DOUBLE)
-                                            * 1000000)
-                                      AS BIGINT)})) AS t(u)
-    )
-    SELECT label, CAST(dim AS BIGINT) AS dim,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(q) AS BIGINT) AS sum_micro,
-           -- 9-dp mean via EXACT integer half-up division: ROUND of the
-           -- double quotient lands on ties whose half-up/half-even
-           -- resolution differs per engine (r12 extremes sweep, 1-ulp)
-           -- TRY_CAST to BIGINT mirrors the Spark leg's nano domain
-           -- (HUGEINT would answer where Spark NULLs; r12 ADVICE)
-           TRY_CAST(CASE WHEN SUM(q) >= 0
-                THEN  (SUM(q) * 2000 + COUNT(*)) // (2 * COUNT(*))
-                ELSE -((-SUM(q) * 2000 + COUNT(*)) // (2 * COUNT(*)))
-           END AS BIGINT) / 1e9 AS centroid
-    FROM e GROUP BY 1, 2
-    """,
-    doc=(
-        "Per-label embedding CENTROIDS as a distributed vector "
-        "aggregate — the class prototype table behind semantic-drift "
-        "monitors and nearest-centroid classifiers (and the exact "
-        "sibling of the seeded k-means means inside llm_semdedup). "
-        "Determinism: a float sum per dimension would be partition-"
-        "order-dependent, so each component is micro-quantized "
-        "(round(v x 1e6) — the cents discipline applied to unit-norm "
-        "floats) and summed as exact BIGINTs; one division per "
-        "(label, dim) cell at the end, rounded 9. Shape: posexplode "
-        "to (label, dim, q) then ONE map-side-combined agg — the "
-        "shuffle carries |labels| x 64 partial sums, never vectors; "
-        "the centroid table is broadcast-sized at any corpus scale."
-    ),
-    tags=("llm", "embedding", "agg"),
-)
-def llm_embedding_centroid(spark, sf_dir):
-    e = t(spark, sf_dir, "embeddings").select(
-        "label", F.posexplode("embedding").alias("dim", "v")
-    ).select(
-        "label",
-        F.col("dim").cast("long").alias("dim"),
-        # float32 -> double FIRST (exact), then scale in double: a
-        # float-precision multiply rounds differently per engine
-        F.round(F.col("v").cast("double") * 1000000)
-        .try_cast("long")
-        .alias("q"),
-    )
-    agged = e.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.sum("q").cast("long").alias("sum_micro"),
-    )
-    # 9-dp mean via EXACT integer half-up division: ROUND of the double
-    # quotient lands on ties whose half-up vs half-even resolution
-    # differs per engine (r12 extremes sweep). The scaling runs in
-    # decimal(38,0) — BIGINT sum_micro * 2000 overflows for
-    # |sum_micro| > ~4.6e15 (ANSI crash where DuckDB's HUGEINT answers;
-    # r12 ADVICE) and Spark's `div` on decimals silently WRAPS
-    # out-of-long quotients, so the quotient is built exactly as
-    # (a - a % b) / b (remainder removed -> decimal division exact)
-    # and try_cast back to BIGINT, the feat_target_encode_loo pattern.
-    _q = (
-        "(({s} * 2000 + n_vecs)"
-        " - ({s} * 2000 + n_vecs) % (2 * n_vecs))"
-        " / (2 * n_vecs)"
-    )
-    # negation AFTER the decimal cast: -LONG_MIN overflows in BIGINT
-    nano = F.expr(
-        "try_cast(CASE WHEN sum_micro >= 0 THEN "
-        + _q.format(s="cast(sum_micro as decimal(38,0))")
-        + " ELSE -("
-        + _q.format(s="(-cast(sum_micro as decimal(38,0)))")
-        + ") END as bigint)"
-    )
-    return agged.select(
-        "label", "dim", "n_vecs", "sum_micro",
-        (nano / F.lit(1e9)).alias("centroid"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# round 10: fact-scale skyline (the new pre-prune operator, driver-checked
-# at fact grain), engagement/robust-timeseries/effect-size/funnel/survival
-# additions
-# ---------------------------------------------------------------------------
-
-
-@EXT.add(
-    "agg_skyline_pareto_fact",
-    oracle="""
-    WITH p AS (
-      -- both axes non-null (dominance contract; round-11 NULL sweep)
-      SELECT l_orderkey * 10 + l_linenumber AS li_id,
-             CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price_cents,
-             CAST(ROUND(l_quantity) AS BIGINT) AS qty
-      FROM lineitem
-      WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-    ),
-    w AS (
-      SELECT li_id, price_cents, qty,
-             MAX(qty) OVER (ORDER BY price_cents
-                            RANGE BETWEEN UNBOUNDED PRECEDING
-                                      AND 1 PRECEDING) AS qmax_lower,
-             MAX(qty) OVER (PARTITION BY price_cents) AS qmax_equal
-      FROM p
-    )
-    SELECT li_id, price_cents, qty
-    FROM w
-    WHERE (qmax_lower IS NULL OR qmax_lower < qty)
-      AND qmax_equal = qty
-    """,
-    doc=(
-        "The Pareto skyline at FACT grain — agg_skyline_pareto's "
-        "dominance semantics (minimize price, maximize quantity) run "
-        "over LINEITEM, the table where the bare two-window plan's "
-        "Exchange SinglePartition actually hurts: this entry exists "
-        "so the round-10 local pre-prune operator "
-        "(operators/skyline.py, Börzsönyi block-nested-loop "
-        "refinement) is driver-checked on a fact-sized input, not "
-        "just the dim-sized part table. Partition-local sort + one "
-        "vectorized MapInPandas running-max scan prunes each "
-        "partition to its Pareto frontier (measured 2.0% survivors "
-        "on these axes, SCALE.md round 10: bare 4.12 s vs pruned "
-        "0.11 s at 10x); only the survivors reach the exact global "
-        "two-window pass, which is unchanged and provably yields the "
-        "same skyline (dominator-chaining). All-integer comparisons; "
-        "plan-contracted: MapInPandas BELOW the single-partition "
-        "exchange."
-    ),
-    tags=("agg", "window", "analytics", "pandas_gm"),
-)
-def agg_skyline_pareto_fact(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.skyline import (
-        local_skyline_preprune,
-    )
-
-    p = local_skyline_preprune(
-        t(spark, sf_dir, "lineitem")
-        .filter(
-            F.col("l_extendedprice").isNotNull()
-            & F.col("l_quantity").isNotNull()
-        )
-        .select(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("li_id"),
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("long")
-            .alias("price_cents"),
-            F.round(F.col("l_quantity")).cast("long").alias("qty"),
-        ),
-        minimize="price_cents",
-        maximize="qty",
-    )
-    w_lower = (
-        Window.orderBy("price_cents")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_eq = Window.partitionBy("price_cents")
-    tagged = p.select(
-        "li_id",
-        "price_cents",
-        "qty",
-        F.max("qty").over(w_lower).alias("qmax_lower"),
-        F.max("qty").over(w_eq).alias("qmax_equal"),
-    )
-    return tagged.filter(
-        (F.col("qmax_lower").isNull() | (F.col("qmax_lower") < F.col("qty")))
-        & (F.col("qmax_equal") == F.col("qty"))
-    ).select("li_id", "price_cents", "qty")
-
-
-@EXT.add(
-    "agg_stickiness_dau_mau",
-    oracle="""
-    WITH ud AS (
-      SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-      FROM events
-    ),
-    days AS (SELECT DISTINCT day FROM ud),
-    dau AS (
-      SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM ud GROUP BY day
-    ),
-    mau AS (
-      SELECT d.day, CAST(COUNT(DISTINCT u.user_id) AS BIGINT) AS mau
-      FROM days d JOIN ud u
-        ON u.day BETWEEN d.day - INTERVAL 27 DAY AND d.day
-      GROUP BY d.day
-    )
-    SELECT CAST(dau.day AS TIMESTAMP) AS day, dau.dau, mau.mau,
-           ROUND(CAST(dau.dau AS DOUBLE) / mau.mau, 9) AS stickiness
-    FROM dau JOIN mau USING (day)
-    """,
-    doc=(
-        "DAU/MAU STICKINESS per day — the engagement headline metric "
-        "(what fraction of the trailing-28-day audience shows up "
-        "today). MAU is a trailing-window DISTINCT, which no window "
-        "frame expresses; the scale shape is agg_rolling_distinct's "
-        "contribution expansion: each (user, day) activity row "
-        "explodes to the <= 28 window-END days it contributes to "
-        "(map-side x28 on the already-deduped user-day grain, not raw "
-        "events), then ONE groupBy(day) count-distinct. Only days "
-        "that exist in the data are emitted (left-semi against the "
-        "day spine), matching the oracle. Stickiness is one division "
-        "of exact counts, rounded 9. At 100 TB the swap is per-day "
-        "HLL sketch union (agg_hll_mergeable), same expansion shape."
-    ),
-    tags=("agg", "engagement", "distinct", "analytics"),
-)
-def agg_stickiness_dau_mau(spark, sf_dir):
-    ud = (
-        t(spark, sf_dir, "events")
-        .select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-    )
-    days = ud.select("day").distinct()
-    dau = ud.groupBy("day").agg(
-        F.count(F.lit(1)).cast("long").alias("dau")
-    )
-    contrib = ud.select(
-        F.explode(
-            F.sequence(F.col("day"), F.date_add(F.col("day"), 27))
-        ).alias("day"),
-        "user_id",
-    )
-    mau = (
-        contrib.join(days, on="day", how="left_semi")
-        .groupBy("day")
-        .agg(F.countDistinct("user_id").cast("long").alias("mau"))
-    )
-    return dau.join(mau, on="day").select(
-        F.col("day").cast("timestamp").alias("day"),
-        "dau",
-        "mau",
-        F.round(F.col("dau").cast("double") / F.col("mau"), 9).alias(
-            "stickiness"
-        ),
-    )
-
-
-@EXT.add(
-    "win_rolling_median",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS c
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-      -- a day with no in-domain revenue leaves the median spine: the
-      -- Spark leg's collect_list skips NULL while rn/n here count it
-      HAVING c IS NOT NULL
-    ),
-    fr AS (
-      SELECT a.day, b.c AS v
-      FROM d a JOIN d b ON b.day BETWEEN a.day - INTERVAL 6 DAY AND a.day
-    ),
-    r AS (
-      SELECT day, v,
-             row_number() OVER (PARTITION BY day ORDER BY v) AS rn,
-             COUNT(*) OVER (PARTITION BY day) AS n
-      FROM fr
-    )
-    SELECT CAST(day AS TIMESTAMP) AS day,
-           CAST(MAX(n) AS BIGINT) AS n_window,
-           CAST(MAX(CASE WHEN rn = (n + 1) // 2 THEN v END) AS BIGINT)
-             AS median_cents
-    FROM r GROUP BY day
-    """,
-    doc=(
-        "Trailing 7-day rolling exact MEDIAN of daily purchase revenue "
-        "— the robust smoother that ignores the single-day spikes a "
-        "rolling mean (win_bollinger_bands' mid) chases: the "
-        "qa_outlier_mad philosophy applied to a moving window. The "
-        "median is the deterministic LOWER order statistic "
-        "((n+1)//2), never an interpolated midpoint (engine-dependent "
-        "averaging), and the values are exact cents BIGINTs — no "
-        "float enters the query. Spark shape: the frame is BOUNDED "
-        "(<= 7 rows) so the per-row sort is a collect_list over the "
-        "RANGE frame + array_sort + element_at — O(k log k) per spine "
-        "row, no self-join; the oracle replays it as a range "
-        "self-join + rank because portable SQL lacks a discrete "
-        "median window. Scale: the fact collapses map-side to the "
-        "bounded day spine first; the window runs over days, never "
-        "rows."
-    ),
-    tags=("window", "timeseries", "robust"),
-)
-def win_rolling_median(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    d = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.sum(try_cents("value")).cast("long").alias("c"))
-        .filter(F.col("c").isNotNull())
-    )
-    fr = Window.orderBy(F.unix_date("day")).rangeBetween(-6, 0)
-    w = d.select(
-        "day",
-        F.sort_array(F.collect_list("c").over(fr)).alias("vs"),
-    )
-    n = F.size("vs")
-    return w.select(
-        F.col("day").cast("timestamp").alias("day"),
-        n.cast("long").alias("n_window"),
-        F.element_at("vs", F.floor((n + 1) / 2).cast("int"))
-        .cast("long")
-        .alias("median_cents"),
-    )
-
-
-@EXT.add(
-    "agg_cramers_v",
-    oracle="""
-    WITH cells AS (
-      SELECT lang, doc_id % 2 AS half, CAST(COUNT(*) AS BIGINT) AS o
-      FROM documents GROUP BY 1, 2
-    ),
-    rt AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS rt FROM cells GROUP BY 1),
-    ct AS (SELECT half, CAST(SUM(o) AS BIGINT) AS ct FROM cells GROUP BY 1),
-    n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-    spine AS (SELECT rt.lang, ct.half, rt.rt, ct.ct, n.n FROM rt, ct, n),
-    term AS (
-      SELECT s.n,
-             CAST(ROUND(
-               CAST((COALESCE(c.o, 0) * s.n - s.rt * s.ct)
-                    * (COALESCE(c.o, 0) * s.n - s.rt * s.ct) AS DOUBLE)
-               / (CAST(s.n AS DOUBLE) * s.rt * s.ct), 9)
-             AS DECIMAL(18,9)) AS contrib
-      FROM spine s LEFT JOIN cells c USING (lang, half)
-    ),
-    dims AS (
-      SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM rt) AS r_levels,
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM ct) AS c_levels
-    )
-    SELECT CAST(ANY_VALUE(n) AS BIGINT) AS n,
-           ANY_VALUE(r_levels) AS r_levels,
-           ANY_VALUE(c_levels) AS c_levels,
-           CAST(SUM(contrib) AS DOUBLE) AS chi2,
-           -- degenerate-shape contract (r13 skew axis): a one-level
-           -- contingency axis (single-language collapse) has no
-           -- association to measure — V is NULL, never a zero divide
-           CASE WHEN LEAST(ANY_VALUE(r_levels), ANY_VALUE(c_levels)) > 1
-                THEN ROUND(SQRT(CAST(SUM(contrib) AS DOUBLE)
-                           / (ANY_VALUE(n)
-                              * (LEAST(ANY_VALUE(r_levels),
-                                       ANY_VALUE(c_levels)) - 1))), 9)
-           END AS v
-    FROM term, dims
-    """,
-    doc=(
-        "Cramér's V EFFECT SIZE for the lang x half contingency — the "
-        "companion qa_chisq_categorical needs to be actionable: chi2 "
-        "grows with n, so at 100 TB everything is 'significant'; V = "
-        "sqrt(chi2 / (n * (min(r,c) - 1))) is the scale-free [0,1] "
-        "association strength a drift gate can threshold. Same "
-        "numeric contract as the chi-square: per-cell contributions "
-        "from the cleared-denominator identity, rounded 9, pinned to "
-        "decimal, summed exactly (order-independent); V adds one "
-        "sqrt over a double/integer ratio, rounded 9. Scale: one "
-        "map-side-combined cell agg; everything after runs on the "
-        "bounded contingency spine."
-    ),
-    tags=("agg", "stats", "drift"),
-)
-def agg_cramers_v(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.caching import spine_cache
-
-    cells = spine_cache(
-        t(spark, sf_dir, "documents")
-        .groupBy("lang", (F.col("doc_id") % 2).alias("half"))
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        # bounded contingency frame (|langs| x 2 rows) referenced by
-        # every marginal/total/spine branch — uncached, each branch
-        # re-derives the full documents scan (scan-amplification
-        # study); caching a bounded spine is the study's always-wins
-        # case; registered so release_spines() frees it
-    )
-    rt = cells.groupBy("lang").agg(F.sum("o").cast("long").alias("rt"))
-    ct = cells.groupBy("half").agg(F.sum("o").cast("long").alias("ct"))
-    nn = cells.agg(F.sum("o").cast("long").alias("n"))
-    dims = rt.agg(F.count(F.lit(1)).cast("long").alias("r_levels")).crossJoin(
-        ct.agg(F.count(F.lit(1)).cast("long").alias("c_levels"))
-    )
-    spine = rt.crossJoin(F.broadcast(ct)).crossJoin(F.broadcast(nn))
-    o = F.coalesce(F.col("o"), F.lit(0)).cast("long")
-    diff = o * F.col("n") - F.col("rt") * F.col("ct")
-    term = spine.join(cells, ["lang", "half"], "left").select(
-        "n",
-        F.round(
-            (diff * diff).cast("double")
-            / (
-                F.col("n").cast("double")
-                * F.col("rt").cast("double")
-                * F.col("ct").cast("double")
-            ),
-            9,
-        )
-        .cast("decimal(18,9)")
-        .alias("contrib"),
-    )
-    agg = term.agg(
-        F.any_value("n").cast("long").alias("n"),
-        F.sum("contrib").cast("double").alias("chi2"),
-    )
-    return agg.crossJoin(F.broadcast(dims)).select(
-        "n",
-        "r_levels",
-        "c_levels",
-        "chi2",
-        # degenerate-shape contract (r13 skew axis): one-level axis
-        # (single-language collapse) -> NULL V, never DIVIDE_BY_ZERO
-        F.when(
-            F.least(F.col("r_levels"), F.col("c_levels")) > 1,
-            F.round(
-                F.sqrt(
-                    F.col("chi2")
-                    / (
-                        F.col("n")
-                        * (
-                            F.least(F.col("r_levels"), F.col("c_levels"))
-                            - 1
-                        )
-                    )
-                ),
-                9,
-            ),
-        ).alias("v"),
-    )
-
-
-@EXT.add(
-    "win_funnel_3step",
-    oracle="""
-    WITH viewers AS (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'view'
-    ),
-    qp AS (
-      SELECT DISTINCT p.user_id, p.ts
-      FROM events p
-      WHERE p.event_type = 'purchase'
-        AND EXISTS (
-          SELECT 1 FROM events v
-          WHERE v.event_type = 'view' AND v.user_id = p.user_id
-            AND v.ts < p.ts AND v.ts >= p.ts - INTERVAL 1 DAY
-        )
-    ),
-    q3 AS (
-      SELECT DISTINCT pl.user_id
-      FROM events pl
-      WHERE pl.event_type = 'play'
-        AND EXISTS (
-          SELECT 1 FROM qp
-          WHERE qp.user_id = pl.user_id
-            AND qp.ts < pl.ts AND qp.ts >= pl.ts - INTERVAL 1 DAY
-        )
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM viewers) AS n_viewers,
-           (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM qp)
-             AS n_step2,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM q3) AS n_step3
-    """,
-    doc=(
-        "THREE-step ordered funnel (view -> purchase within 24 h -> "
-        "play within 24 h of THAT purchase) — the multi-step "
-        "generalization of win_funnel_steps, where the middle step "
-        "must itself be qualified (a purchase with no preceding view "
-        "does not advance the funnel; naive pairwise funnels "
-        "overcount exactly this). Spark shape: NO self-joins — one "
-        "union of the three event slices, then two CHAINED range "
-        "windows over the SAME (user, ts-micros) exchange+sort "
-        "(Spark reuses the sort for same-spec windows): pass 1 "
-        "counts prior-24 h views at each purchase (qualifying it), "
-        "pass 2 counts prior-24 h QUALIFIED purchases at each play. "
-        "Strict/inclusive bounds are frame endpoints in exact "
-        "microseconds ([-86400e6, -1]), matching the oracle's "
-        "v.ts < p.ts AND v.ts >= p.ts - 24 h. The oracle is the "
-        "EXISTS-chain spec. Scale: one keyed shuffle total; per-user "
-        "history bounds the sort run."
-    ),
-    tags=("window", "funnel", "analytics"),
-)
-def win_funnel_3step(spark, sf_dir):
-    from pyspark.sql import Window
-
-    day_us = 86_400_000_000
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase", "play"))
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("tsu"),
-        )
-    )
-    fr = (
-        Window.partitionBy("user_id")
-        .orderBy("tsu")
-        .rangeBetween(-day_us, -1)
-    )
-    p1 = ev.withColumn(
-        "n_prior_views",
-        F.sum(
-            F.when(F.col("event_type") == "view", 1).otherwise(0)
-        ).over(fr),
-    ).withColumn(
-        "is_qp",
-        (
-            (F.col("event_type") == "purchase")
-            & (F.coalesce(F.col("n_prior_views"), F.lit(0)) > 0)
-        ).cast("long"),
-    )
-    p2 = p1.withColumn("n_prior_qp", F.sum("is_qp").over(fr))
-    n_viewers = (
-        ev.filter(F.col("event_type") == "view")
-        .agg(F.countDistinct("user_id").cast("long").alias("n_viewers"))
-    )
-    n_step2 = p1.filter(F.col("is_qp") == 1).agg(
-        F.countDistinct("user_id").cast("long").alias("n_step2")
-    )
-    n_step3 = p2.filter(
-        (F.col("event_type") == "play")
-        & (F.coalesce(F.col("n_prior_qp"), F.lit(0)) > 0)
-    ).agg(F.countDistinct("user_id").cast("long").alias("n_step3"))
-    return n_viewers.crossJoin(n_step2).crossJoin(n_step3)
-
-
-@EXT.add(
-    "agg_churn_hazard",
-    oracle="""
-    WITH spans AS (
-      SELECT user_id,
-             CAST((date_part('epoch', MAX(date_trunc('week', ts)))
-                   - date_part('epoch', MIN(date_trunc('week', ts))))
-                  // 604800 AS BIGINT) AS last_age
-      FROM events GROUP BY user_id
-    ),
-    d AS (
-      SELECT last_age, CAST(COUNT(*) AS BIGINT) AS churned
-      FROM spans GROUP BY last_age
-    )
-    SELECT last_age AS age_wk, churned,
-           CAST(SUM(churned) OVER (ORDER BY last_age DESC
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-             AS at_risk,
-           ROUND(CAST(churned AS DOUBLE)
-                 / SUM(churned) OVER (ORDER BY last_age DESC
-                                      ROWS UNBOUNDED PRECEDING), 9)
-             AS hazard
-    FROM d
-    """,
-    doc=(
-        "Discrete-time churn HAZARD curve on the user grain — the "
-        "companion of win_survival_km (which works order-fulfillment "
-        "durations): each user's observed lifetime is the whole weeks "
-        "between first and last activity week; hazard(a) = users "
-        "whose lifetime ENDED at age a / users still at risk at age a "
-        "(the reverse-cumulative count — the same histogram-cumsum "
-        "trick as the KM risk set, here on the bounded age spine). "
-        "Week ages are exact integer epoch arithmetic on "
-        "week-truncated timestamps; hazard is one division of exact "
-        "BIGINTs, rounded 9. Scale: one map-side-combined per-user "
-        "agg, then everything runs on the <= calendar-weeks age "
-        "spine; no window ever touches user rows."
-    ),
-    tags=("agg", "survival", "cohort", "analytics"),
-)
-def agg_churn_hazard(spark, sf_dir):
-    from pyspark.sql import Window
-
-    spans = (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            (
-                (
-                    F.unix_timestamp(F.max(F.date_trunc("week", "ts")))
-                    - F.unix_timestamp(F.min(F.date_trunc("week", "ts")))
-                )
-                / F.lit(604800)
-            )
-            .cast("long")
-            .alias("last_age")
-        )
-    )
-    d = spans.groupBy("last_age").agg(
-        F.count(F.lit(1)).cast("long").alias("churned")
-    )
-    w = Window.orderBy(F.col("last_age").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    at_risk = F.sum("churned").over(w)
-    return d.select(
-        F.col("last_age").alias("age_wk"),
-        "churned",
-        at_risk.cast("long").alias("at_risk"),
-        F.round(F.col("churned").cast("double") / at_risk, 9).alias("hazard"),
-    )
-
-
-@EXT.add(
-    "win_greedy_allocation",
-    oracle="""
-    WITH supply AS (
-      -- NULL size = undefined supply; NULL qty demands nothing; a NULL
-      -- ship date has no priority position (and LEAST/GREATEST skip
-      -- NULL args in DuckDB but propagate them in Spark — the
-      -- allocation caps would silently disagree): all excluded
-      SELECT p_partkey, CAST(p_size AS BIGINT) * 50 AS supply
-      FROM part WHERE p_size IS NOT NULL
-    ),
-    d AS (
-      SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-             COALESCE(CAST(SUM(CAST(l_quantity AS BIGINT)) OVER (
-               PARTITION BY l_partkey
-               ORDER BY l_shipdate, l_orderkey, l_linenumber
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS BIGINT), 0) AS cum_before
-      FROM lineitem
-      WHERE l_quantity IS NOT NULL AND l_shipdate IS NOT NULL
-    ),
-    a AS (
-      SELECT d.l_partkey AS partkey, qty,
-             LEAST(qty, GREATEST(s.supply - d.cum_before, 0)) AS alloc
-      FROM d JOIN supply s ON s.p_partkey = d.l_partkey
-    )
-    SELECT partkey,
-           CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CASE WHEN alloc = qty THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_filled,
-           CAST(SUM(qty) AS BIGINT) AS total_demand,
-           CAST(SUM(alloc) AS BIGINT) AS total_allocated,
-           CAST(SUM(qty - alloc) AS BIGINT) AS total_backorder,
-           ROUND(CAST(SUM(alloc) AS DOUBLE) / SUM(qty), 9) AS fill_rate
-    FROM a GROUP BY 1
-    """,
-    doc=(
-        "Greedy priority-order stock allocation: each part's finite "
-        "supply (p_size x 50 units) is handed out to its order lines "
-        "in ship-date priority until exhausted — the classic "
-        "inventory/quota waterfall that looks inherently sequential "
-        "but is ONE capped running sum: alloc = least(qty, "
-        "greatest(supply - cum_demand_before, 0)); a line is filled "
-        "iff the demand queue ahead of it left stock. (The same shape "
-        "meters LLM-corpus ingest quotas: per-source token budgets "
-        "consumed in arrival order, llm_quota_per_source's windowed "
-        "generalization.) Exact BIGINT throughout — TPC-H quantities "
-        "are integral. Scale: supply joins broadcast on the part dim; "
-        "the window and the final per-part rollup both run on the "
-        "SAME l_partkey hash partitioning, so the whole query is one "
-        "fact shuffle; deterministic total order (ship date, order, "
-        "line) makes the allocation reproducible run-to-run."
-    ),
-    tags=("win", "allocation", "inventory"),
-)
-def win_greedy_allocation(spark, sf_dir):
-    from pyspark.sql import Window
-
-    supply = t(spark, sf_dir, "part").filter(
-        F.col("p_size").isNotNull()
-    ).select(
-        F.col("p_partkey").alias("partkey"),
-        (F.col("p_size").cast("long") * 50).alias("supply"),
-    )
-    w = (
-        Window.partitionBy("partkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    d = (
-        t(spark, sf_dir, "lineitem")
-        .filter(
-            F.col("l_quantity").isNotNull() & F.col("l_shipdate").isNotNull()
-        )
-        .select(
-            F.col("l_partkey").alias("partkey"),
-            F.col("l_quantity").cast("long").alias("qty"),
-            "l_shipdate",
-            "l_orderkey",
-            "l_linenumber",
-        )
-        .join(F.broadcast(supply), "partkey")
-        .withColumn(
-            "cum_before",
-            F.coalesce(F.sum("qty").over(w), F.lit(0)).cast("long"),
-        )
-    )
-    a = d.select(
-        "partkey",
-        "qty",
-        F.least(
-            F.col("qty"),
-            F.greatest(F.col("supply") - F.col("cum_before"), F.lit(0)),
-        ).alias("alloc"),
-    )
-    return a.groupBy("partkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum(F.when(F.col("alloc") == F.col("qty"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_filled"),
-        F.sum("qty").cast("long").alias("total_demand"),
-        F.sum("alloc").cast("long").alias("total_allocated"),
-        F.sum(F.col("qty") - F.col("alloc")).cast("long").alias("total_backorder"),
-        F.round(
-            F.sum("alloc").cast("double") / F.sum("qty"), 9
-        ).alias("fill_rate"),
-    )
-
-
-@EXT.add(
-    "win_max_subarray",
-    oracle="""
-    WITH ev AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN event_type = 'purchase'
-                  THEN TRY_CAST(ROUND(value * 100) AS BIGINT)
-                  ELSE -TRY_CAST(ROUND(value * 100) AS BIGINT) END AS signed
-      FROM events WHERE event_type IN ('purchase', 'click')
-    ),
-    p0 AS (
-      SELECT user_id, ts, event_id, signed,
-             CAST(SUM(signed) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS BIGINT) AS pfx
-      FROM ev
-    ),
-    p AS (
-      SELECT user_id, signed, pfx,
-             CAST(MIN(pfx) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS BIGINT) AS min_before
-      FROM p0
-    )
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(signed) AS BIGINT) AS net_cents,
-           CAST(MAX(pfx - LEAST(COALESCE(min_before, 0), 0)) AS BIGINT)
-             AS best_run_cents
-    FROM p GROUP BY 1
-    """,
-    doc=(
-        "Per-user maximum-sum contiguous run (Kadane's max subarray) "
-        "over the signed event stream — purchases credit revenue "
-        "cents, clicks debit acquisition cost — surfacing each user's "
-        "best uninterrupted net-monetization streak. The O(n^2) "
-        "every-(start,end) definition collapses to prefix sums: the "
-        "best run ending at t is P_t - min(0, min_{s<t} P_s), so TWO "
-        "chained windows over ONE (user, ts, event_id) exchange+sort "
-        "(cumulative sum, then running min of its lag) compute what a "
-        "naive range self-join would shuffle quadratically. All "
-        "arithmetic is exact BIGINT cents; the per-user rollup reuses "
-        "the window's hash partitioning — one fact shuffle total. "
-        "Empty-prefix sentinel: LEAST(COALESCE(min_before,0),0) "
-        "admits runs starting at the first event without admitting "
-        "the empty run."
-    ),
-    tags=("win", "kadane", "sessions"),
-)
-def win_max_subarray(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    cents = try_cents("value")
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("purchase", "click"))
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(F.col("event_type") == "purchase", cents)
-            .otherwise(-cents)
-            .alias("signed"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_before = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    p = ev.withColumn("pfx", F.sum("signed").over(w).cast("long")).withColumn(
-        "min_before", F.min("pfx").over(w_before).cast("long")
-    )
-    return p.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("signed").cast("long").alias("net_cents"),
-        F.max(
-            F.col("pfx")
-            - F.least(F.coalesce(F.col("min_before"), F.lit(0)), F.lit(0))
-        )
-        .cast("long")
-        .alias("best_run_cents"),
-    )
-
-
-@EXT.add(
-    "win_changepoint_sse",
-    oracle="""
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day,
-             CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS rev
-      FROM events WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(rev) AS BIGINT) AS s,
-             CAST(SUM(CAST(rev AS HUGEINT) * rev) AS HUGEINT) AS s2
-      FROM daily
-    ),
-    cum AS (
-      SELECT day,
-             CAST(ROW_NUMBER() OVER (ORDER BY day) AS BIGINT) AS k,
-             CAST(SUM(rev) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                  PRECEDING AND CURRENT ROW) AS BIGINT) AS sl
-      FROM daily
-    ),
-    sc AS (
-      SELECT c.day, c.k, c.sl, t.n - c.k AS nr, t.s - c.sl AS sr,
-             t.n, t.s, t.s2,
-             CAST(c.sl AS DOUBLE) * CAST(c.sl AS DOUBLE)
-               / CAST(c.k AS DOUBLE)
-             + CAST(t.s - c.sl AS DOUBLE) * CAST(t.s - c.sl AS DOUBLE)
-               / CAST(t.n - c.k AS DOUBLE) AS gain
-      FROM cum c, tot t WHERE c.k < t.n
-    ),
-    best AS (SELECT * FROM sc ORDER BY gain DESC, k ASC LIMIT 1)
-    SELECT day AS split_day,
-           CAST(k AS BIGINT) AS n_left,
-           CAST(nr AS BIGINT) AS n_right,
-           ROUND(CAST(sl AS DOUBLE) / CAST(k AS DOUBLE), 9) AS mean_left,
-           ROUND(CAST(sr AS DOUBLE) / CAST(nr AS DOUBLE), 9) AS mean_right,
-           ROUND(CAST(s2 * n - CAST(s AS HUGEINT) * s AS DOUBLE)
-                 / CAST(n * n AS DOUBLE), 6) AS var_before,
-           ROUND(CAST(s2 * (k * nr) - CAST(sl AS HUGEINT) * sl * nr
-                      - CAST(sr AS HUGEINT) * sr * k AS DOUBLE)
-                 / CAST(k * nr * n AS DOUBLE), 6) AS var_after,
-           ROUND(1.0 - (CAST(s2 * (k * nr) - CAST(sl AS HUGEINT) * sl * nr
-                             - CAST(sr AS HUGEINT) * sr * k AS DOUBLE)
-                        / CAST(k * nr * n AS DOUBLE))
-                     / (CAST(s2 * n - CAST(s AS HUGEINT) * s AS DOUBLE)
-                        / CAST(n * n AS DOUBLE)), 9) AS var_reduction
-    FROM best
-    """,
-    doc=(
-        "Offline single changepoint in the daily-revenue series by "
-        "exact SSE minimization (binary segmentation's first split — "
-        "the regime-shift detector behind deploy/price-change "
-        "monitoring; the OFFLINE companion to win_cusum_drift's "
-        "online detector). Minimizing SSE_left+SSE_right is "
-        "equivalent to maximizing G(k) = SL^2/k + SR^2/(n-k), where "
-        "SL/SR are prefix/suffix sums — so ONE cumulative window over "
-        "the bounded day spine scores every split; no per-split "
-        "rescan. Numeric contract: SL, n are exact integers (cents), "
-        "double(SL) is exact below 2^53, and G(k) is the SAME "
-        "3-operation IEEE expression in both engines — bit-identical, "
-        "so the argmax (tie-broken on k) is engine-independent; the "
-        "reported variances use cleared-denominator HUGEINT/DECIMAL "
-        "identities with ONE final double division each (the SPRT "
-        "pattern). Scale: daily collapse is map-side-combined; "
-        "everything after runs on the bounded day spine (the "
-        "sanctioned bounded one-partition cumsum); the best split is "
-        "a TakeOrdered(1), not a global sort."
-    ),
-    tags=("win", "changepoint", "stats"),
-)
-def win_changepoint_sse(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from steam_data_pipeline_spark.operators.aggregates import try_cents
-
-    cents = try_cents("value")
-    daily = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.sum(cents).cast("long").alias("rev"))
-    )
-    # totals come from a FULL-frame window over the same bounded day
-    # spine (not a separate aggregate): one events scan, not two —
-    # the window exchange is already paid for the cumulative pass
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    w_full = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = daily.select(
-        "day",
-        F.row_number().over(Window.orderBy("day")).cast("long").alias("k"),
-        F.sum("rev").over(w).cast("long").alias("sl"),
-        F.count(F.lit(1)).over(w_full).cast("long").alias("n"),
-        F.sum("rev").over(w_full).cast("long").alias("s"),
-        F.sum(F.col("rev").cast("decimal(19,0)") * F.col("rev"))
-        .over(w_full)
-        .cast("decimal(38,0)")
-        .alias("s2"),
-    )
-    sc = (
-        cum
-        .filter(F.col("k") < F.col("n"))
-        .select(
-            "day",
-            "k",
-            "sl",
-            (F.col("n") - F.col("k")).alias("nr"),
-            (F.col("s") - F.col("sl")).alias("sr"),
-            "n",
-            "s",
-            "s2",
-            (
-                F.col("sl").cast("double") * F.col("sl").cast("double")
-                / F.col("k").cast("double")
-                + (F.col("s") - F.col("sl")).cast("double")
-                * (F.col("s") - F.col("sl")).cast("double")
-                / (F.col("n") - F.col("k")).cast("double")
-            ).alias("gain"),
-        )
-    )
-    best = sc.orderBy(F.col("gain").desc(), F.col("k").asc()).limit(1)
-    s2 = F.col("s2")
-    hsl = F.col("sl").cast("decimal(38,0)")
-    hsr = F.col("sr").cast("decimal(38,0)")
-    hs = F.col("s").cast("decimal(38,0)")
-    var_before = (s2 * F.col("n") - hs * F.col("s")).cast("double") / (
-        F.col("n") * F.col("n")
-    ).cast("double")
-    var_after = (
-        s2 * (F.col("k") * F.col("nr"))
-        - hsl * F.col("sl") * F.col("nr")
-        - hsr * F.col("sr") * F.col("k")
-    ).cast("double") / (F.col("k") * F.col("nr") * F.col("n")).cast("double")
-    return best.select(
-        F.col("day").alias("split_day"),
-        F.col("k").alias("n_left"),
-        F.col("nr").alias("n_right"),
-        F.round(F.col("sl").cast("double") / F.col("k").cast("double"), 9)
-        .alias("mean_left"),
-        F.round(F.col("sr").cast("double") / F.col("nr").cast("double"), 9)
-        .alias("mean_right"),
-        F.round(var_before, 6).alias("var_before"),
-        F.round(var_after, 6).alias("var_after"),
-        F.round(F.lit(1.0) - var_after / var_before, 9).alias("var_reduction"),
-    )
-
-
-@EXT.add(
-    "agg_runs_test",
-    oracle="""
-    WITH daily AS (
-      SELECT date_trunc('day', ts) AS day, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1
-    ),
-    med AS (
-      SELECT list_sort(LIST(cnt))[CAST((COUNT(*) + 1) // 2 AS INT)] AS m
-      FROM daily
-    ),
-    s AS (
-      SELECT day, CASE WHEN cnt > m THEN 1 ELSE 0 END AS sign
-      FROM daily, med WHERE cnt <> m
-    ),
-    r AS (
-      SELECT sign, LAG(sign) OVER (ORDER BY day) AS prev FROM s
-    ),
-    c AS (
-      SELECT CAST(1 + COALESCE(SUM(CASE WHEN prev IS NOT NULL
-                   AND sign <> prev THEN 1 ELSE 0 END), 0) AS BIGINT)
-               AS runs,
-             CAST(SUM(sign) AS BIGINT) AS n1,
-             CAST(COUNT(*) - SUM(sign) AS BIGINT) AS n2
-      FROM r
-    )
-    SELECT n1 AS n_above, n2 AS n_below, runs,
-           ROUND(1.0 + 2.0 * CAST(n1 * n2 AS DOUBLE)
-                 / CAST(n1 + n2 AS DOUBLE), 9) AS mu_runs,
-           CASE WHEN n1 > 0 AND n2 > 0 AND n1 + n2 > 1
-                AND 2 * n1 * n2 > n1 + n2 THEN
-             ROUND((CAST(runs AS DOUBLE)
-                    - (1.0 + 2.0 * CAST(n1 * n2 AS DOUBLE)
-                       / CAST(n1 + n2 AS DOUBLE)))
-                   / SQRT(CAST(2 * n1 * n2 * (2 * n1 * n2 - n1 - n2)
-                          AS DOUBLE)
-                          / CAST((n1 + n2) * (n1 + n2) * (n1 + n2 - 1)
-                            AS DOUBLE)), 9)
-           END AS z
-    FROM c
-    """,
-    doc=(
-        "Wald-Wolfowitz runs test on the daily event-count series: is "
-        "the sequence of above/below-median days random, or does it "
-        "cluster (trend / regime persistence)? The QA companion to "
-        "agg_mann_kendall: MK detects monotone trend, the runs test "
-        "detects ANY serial dependence symmetric around the median. "
-        "Days equal to the median are excluded (standard). Numeric "
-        "contract: R, n1, n2 are exact integers; mu and sigma^2 are "
-        "rational with numerators/denominators exact below 2^53 at "
-        "any plausible day count, so z is the same pinned IEEE "
-        "expression both engines round at 9. The median is the exact "
-        "lower median via one bounded sorted array (the house "
-        "rolling-median trick); guards NULL the z-score when either "
-        "side is empty or the variance is zero. Scale: one map-side "
-        "daily collapse; everything else is bounded day-spine math."
-    ),
-    tags=("agg", "stats", "qa"),
-)
-def agg_runs_test(spark, sf_dir):
-    from pyspark.sql import Window
-
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    med = daily.agg(
-        F.element_at(
-            F.array_sort(F.collect_list("cnt")),
-            F.floor((F.count(F.lit(1)) + 1) / 2).cast("int"),
-        ).alias("m")
-    )
-    s = (
-        daily.crossJoin(F.broadcast(med))
-        .filter(F.col("cnt") != F.col("m"))
-        .select(
-            "day", F.when(F.col("cnt") > F.col("m"), 1).otherwise(0).alias("sign")
-        )
-    )
-    r = s.select(
-        "sign", F.lag("sign").over(Window.orderBy("day")).alias("prev")
-    )
-    c = r.agg(
-        (
-            F.lit(1)
-            + F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("prev").isNotNull()
-                        & (F.col("sign") != F.col("prev")),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            )
-        )
-        .cast("long")
-        .alias("runs"),
-        F.sum("sign").cast("long").alias("n1"),
-        (F.count(F.lit(1)) - F.sum("sign")).cast("long").alias("n2"),
-    )
-    n1, n2, runs = F.col("n1"), F.col("n2"), F.col("runs")
-    mu = F.lit(1.0) + F.lit(2.0) * (n1 * n2).cast("double") / (n1 + n2).cast(
-        "double"
-    )
-    var = (2 * n1 * n2 * (2 * n1 * n2 - n1 - n2)).cast("double") / (
-        (n1 + n2) * (n1 + n2) * (n1 + n2 - 1)
-    ).cast("double")
-    return c.select(
-        n1.alias("n_above"),
-        n2.alias("n_below"),
-        "runs",
-        F.round(mu, 9).alias("mu_runs"),
-        F.when(
-            (n1 > 0) & (n2 > 0) & (n1 + n2 > 1) & (2 * n1 * n2 > n1 + n2),
-            F.round((runs.cast("double") - mu) / F.sqrt(var), 9),
-        ).alias("z"),
-    )
-
-
-@EXT.add(
-    "qa_outlier_ecod",
-    oracle="""
-    WITH p AS (
-      -- all three metrics non-null: the exact_cume_counts_multi contract
-      -- (non-null integral), and a NULL has no empirical tail mass
-      SELECT p_partkey,
-             CAST(ROUND(p_retailprice * 100) AS BIGINT) AS cents,
-             CAST(p_size AS BIGINT) AS sz,
-             CAST(LENGTH(p_name) AS BIGINT) AS nl
-      FROM part
-      WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
-        AND p_name IS NOT NULL
-    ),
-    c AS (
-      SELECT p_partkey,
-             LEAST(
-               CAST(COUNT(*) OVER (ORDER BY cents RANGE BETWEEN UNBOUNDED
-                    PRECEDING AND CURRENT ROW) AS BIGINT),
-               CAST(COUNT(*) OVER (ORDER BY cents DESC RANGE BETWEEN
-                    UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT))
-               AS tail_price,
-             LEAST(
-               CAST(COUNT(*) OVER (ORDER BY sz RANGE BETWEEN UNBOUNDED
-                    PRECEDING AND CURRENT ROW) AS BIGINT),
-               CAST(COUNT(*) OVER (ORDER BY sz DESC RANGE BETWEEN
-                    UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT))
-               AS tail_size,
-             LEAST(
-               CAST(COUNT(*) OVER (ORDER BY nl RANGE BETWEEN UNBOUNDED
-                    PRECEDING AND CURRENT ROW) AS BIGINT),
-               CAST(COUNT(*) OVER (ORDER BY nl DESC RANGE BETWEEN
-                    UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT))
-               AS tail_namelen
-      FROM p
-    )
-    SELECT p_partkey, tail_price, tail_size, tail_namelen,
-           CAST(tail_price AS DOUBLE) * CAST(tail_size AS DOUBLE)
-             * CAST(tail_namelen AS DOUBLE) AS score
-    FROM c ORDER BY score ASC, p_partkey ASC LIMIT 20
-    """,
-    doc=(
-        "ECOD multivariate outlier ranking over the part catalog "
-        "(price cents x size x name length): each row's score is the "
-        "product of its per-dimension two-sided empirical tail masses "
-        "min(#<=v, #>=v) — rows extreme in SEVERAL dimensions at once "
-        "float to the top, which one-dimensional gates (qa_outlier_mad) "
-        "miss. Parameter-free and rank-based, so it needs no "
-        "distributional fit — the standard unsupervised data-quality "
-        "screen before corpus stats. The tail masses are tie-AWARE "
-        "cumulative counts (a row_number-style rank is wrong under "
-        "ties), computed scale-safely by operators/ranks.py "
-        "exact_cume_counts_multi: the two-level histogram "
-        "decomposition — bounded 4096-bin prefix sums + RANGE-framed "
-        "within-bin windows on hash partitions — no unbounded "
-        "single-partition sort for ANY dimension. Scores are "
-        "exact-integer products converted once to double (identical "
-        "below 2^53, deterministic above); top-20 is a TakeOrdered with the "
-        "partkey tie-break, never a global sort."
-    ),
-    tags=("qa", "outlier", "stats"),
-)
-def qa_outlier_ecod(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.ranks import (
-        exact_cume_counts_multi,
-    )
-
-    p = t(spark, sf_dir, "part").filter(
-        F.col("p_retailprice").isNotNull()
-        & F.col("p_size").isNotNull()
-        & F.col("p_name").isNotNull()
-    ).select(
-        "p_partkey",
-        F.round(F.col("p_retailprice") * 100).try_cast("long").alias("cents"),
-        F.col("p_size").cast("long").alias("sz"),
-        F.length("p_name").cast("long").alias("nl"),
-    )
-    c = exact_cume_counts_multi(
-        p,
-        [
-            ("cents", "le_p", "ge_p"),
-            ("sz", "le_s", "ge_s"),
-            ("nl", "le_n", "ge_n"),
-        ],
-    )
-    scored = c.select(
-        "p_partkey",
-        F.least("le_p", "ge_p").alias("tail_price"),
-        F.least("le_s", "ge_s").alias("tail_size"),
-        F.least("le_n", "ge_n").alias("tail_namelen"),
-    ).withColumn(
-        "score",
-        F.col("tail_price").cast("double")
-        * F.col("tail_size").cast("double")
-        * F.col("tail_namelen").cast("double"),
-    )
-    return scored.orderBy(F.col("score").asc(), F.col("p_partkey").asc()).limit(
-        20
-    )
-
-
-def _bfs_oracle():
-    from steam_data_pipeline_spark.operators.graph import bfs_hops_oracle_sql
-
-    return bfs_hops_oracle_sql(
-        "SELECT o_custkey AS src,"
-        " o_orderkey % (SELECT COUNT(*) FROM customer) AS dst"
-        " FROM orders WHERE o_orderpriority = '1-URGENT'",
-        "SELECT c_custkey AS v FROM customer WHERE c_custkey % 97 = 0",
-        max_hops=4,
-    )
-
-
-@EXT.add(
-    "llm_graph_bfs_hops",
-    oracle=_bfs_oracle(),
-    doc=(
-        "Multi-source BFS reachability profile of the link graph "
-        "(operators/graph.py bfs_hops): minimum hop distance from a "
-        "trusted seed set (every 97th customer) for every node, "
-        "histogrammed per hop with id-sum/extrema — how far does "
-        "seed-anchored trust propagate before the crawl frontier goes "
-        "dark (nodes at hop -1 are unreachable within 4 hops: "
-        "isolation candidates for the quality gate, the reachability "
-        "companion to llm_graph_pagerank's stationary weighting). "
-        "Min-hop relaxation: the symmetric edge table plus one "
-        "zero-weight self-loop per node is checkpointed once, then "
-        "each of the 4 lazy rounds joins the distance table to it and "
-        "keeps min(hop + weight) per node, so every node ends at its "
-        "minimum hop with no per-round eager job. The "
-        "DuckDB oracle is a BOUNDED RECURSIVE CTE — min(hop) per node "
-        "over every <=4-hop walk endpoint — a fully independent "
-        "declarative formulation that must agree on every hop's "
-        "count, id-sum and extrema; all-integer, no tolerance."
-    ),
-    tags=("llm", "graph", "iterative"),
-)
-def llm_graph_bfs_hops(spark, sf_dir):
-    from steam_data_pipeline_spark.operators.graph import bfs_hops
-
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    n_cust = cust.agg(F.count(F.lit(1)).alias("nc"))
-    edges = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .crossJoin(F.broadcast(n_cust))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("o_orderkey") % F.col("nc")).alias("dst"),
-        )
-    )
-    seeds = cust.filter(F.col("c_custkey") % 97 == 0).select(
-        F.col("c_custkey").alias("v")
-    )
-    return bfs_hops(edges, seeds, max_hops=4)
-
-
-@EXT.add(
-    "sink_delete_propagate",
-    oracle="""
-    WITH tomb AS (
-      SELECT c_custkey FROM customer WHERE c_custkey % 29 = 0
-    ),
-    del_orders AS (
-      SELECT o_orderkey FROM orders
-      WHERE o_custkey IN (SELECT c_custkey FROM tomb)
-    ),
-    cust_left AS (
-      SELECT COUNT(*) AS n FROM customer
-      WHERE c_custkey NOT IN (SELECT c_custkey FROM tomb)
-    ),
-    ord_left AS (
-      SELECT COUNT(*) AS n FROM orders
-      WHERE o_custkey NOT IN (SELECT c_custkey FROM tomb)
-    ),
-    li_left AS (
-      SELECT COUNT(*) AS n FROM lineitem
-      WHERE l_orderkey NOT IN (SELECT o_orderkey FROM del_orders)
-    ),
-    orphans AS (
-      SELECT
-        (SELECT COUNT(*) FROM orders
-         WHERE o_custkey NOT IN (SELECT c_custkey FROM tomb)
-           AND o_custkey IN (SELECT c_custkey FROM tomb)) AS orphan_orders,
-        (SELECT COUNT(*) FROM lineitem
-         WHERE l_orderkey NOT IN (SELECT o_orderkey FROM del_orders)
-           AND l_orderkey IN (
-             SELECT o_orderkey FROM orders
-             WHERE o_custkey IN (SELECT c_custkey FROM tomb)
-           )) AS orphan_lineitems
-    )
-    SELECT
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM tomb) AS n_tombstones,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM customer)
-        - (SELECT CAST(n AS BIGINT) FROM cust_left) AS cust_deleted,
-      (SELECT CAST(n AS BIGINT) FROM cust_left) AS cust_left,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM orders)
-        - (SELECT CAST(n AS BIGINT) FROM ord_left) AS orders_deleted,
-      (SELECT CAST(n AS BIGINT) FROM ord_left) AS orders_left,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem)
-        - (SELECT CAST(n AS BIGINT) FROM li_left) AS lineitems_deleted,
-      (SELECT CAST(n AS BIGINT) FROM li_left) AS lineitems_left,
-      (SELECT CAST(orphan_orders AS BIGINT) FROM orphans) AS orphan_orders,
-      (SELECT CAST(orphan_lineitems AS BIGINT) FROM orphans)
-        AS orphan_lineitems
-    """,
-    doc=(
-        "Right-to-be-forgotten deletion propagation with PROOF: a "
-        "customer tombstone set cascades transitively (customer -> "
-        "their orders -> those orders' line items), and the result "
-        "row carries both the per-table deletion accounting AND the "
-        "orphan counts that must be zero — no surviving order "
-        "references a deleted customer, no surviving line item a "
-        "deleted order (the auditable deletion report a GDPR/CCPA "
-        "erasure job has to emit; the deletion-side complement of "
-        "sink_upsert_metadata's MERGE and qa_referential_integrity's "
-        "static check). Spark shape: the cascade is two left_semi "
-        "derivations + three left_anti survivors — hash joins on the "
-        "native keys, no row is ever rewritten to compute the "
-        "accounting; the orphan legs reuse the same tombstone/"
-        "deleted-order sets (semi then anti on the opposite side). "
-        "The 1-row accounting spines crossJoin broadcast (the "
-        "sanctioned scalar pattern). At 100 TB the counts pipeline "
-        "into the same MERGE DELETE the store's versioned upsert "
-        "executes; the tombstone side is always the small side and "
-        "broadcastable."
-    ),
-    tags=("sink", "delete", "governance"),
-)
-def sink_delete_propagate(spark, sf_dir):
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    tomb = cust.filter(F.col("c_custkey") % 29 == 0).select("c_custkey")
-    del_orders = orders.join(
-        tomb, orders.o_custkey == tomb.c_custkey, "left_semi"
-    ).select("o_orderkey")
-    cust_left = cust.join(tomb, "c_custkey", "left_anti")
-    ord_left = orders.join(
-        tomb, orders.o_custkey == tomb.c_custkey, "left_anti"
-    )
-    li_left = li.join(
-        del_orders, li.l_orderkey == del_orders.o_orderkey, "left_anti"
-    )
-    orphan_orders = ord_left.join(
-        tomb, ord_left.o_custkey == tomb.c_custkey, "left_semi"
-    )
-    orphan_li = li_left.join(
-        del_orders, li_left.l_orderkey == del_orders.o_orderkey, "left_semi"
-    )
-
-    def cnt(df, name):
-        return df.agg(F.count(F.lit(1)).cast("long").alias(name))
-
-    out = (
-        cnt(tomb, "n_tombstones")
-        .crossJoin(F.broadcast(cnt(cust, "n_cust")))
-        .crossJoin(F.broadcast(cnt(cust_left, "cust_left")))
-        .crossJoin(F.broadcast(cnt(orders, "n_ord")))
-        .crossJoin(F.broadcast(cnt(ord_left, "orders_left")))
-        .crossJoin(F.broadcast(cnt(li, "n_li")))
-        .crossJoin(F.broadcast(cnt(li_left, "lineitems_left")))
-        .crossJoin(F.broadcast(cnt(orphan_orders, "orphan_orders")))
-        .crossJoin(F.broadcast(cnt(orphan_li, "orphan_lineitems")))
-    )
-    return out.select(
-        "n_tombstones",
-        (F.col("n_cust") - F.col("cust_left")).alias("cust_deleted"),
-        "cust_left",
-        (F.col("n_ord") - F.col("orders_left")).alias("orders_deleted"),
-        "orders_left",
-        (F.col("n_li") - F.col("lineitems_left")).alias("lineitems_deleted"),
-        "lineitems_left",
-        "orphan_orders",
-        "orphan_lineitems",
-    )
-
-
-@EXT.add(
-    "qa_skew_report",
-    oracle="""
-    WITH kc AS (
-      SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM lineitem GROUP BY 1
-    ),
-    tot AS (
-      SELECT CAST(SUM(cnt) AS BIGINT) AS n,
-             CAST(COUNT(*) AS BIGINT) AS k,
-             CAST(MAX(cnt) AS BIGINT) AS max_cnt
-      FROM kc
-    ),
-    hist AS (
-      SELECT cnt, CAST(COUNT(*) AS BIGINT) AS n_keys FROM kc GROUP BY 1
-    ),
-    cum AS (
-      SELECT cnt,
-             CAST(SUM(n_keys) OVER (ORDER BY cnt ROWS BETWEEN UNBOUNDED
-                  PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_keys
-      FROM hist
-    ),
-    p99 AS (
-      SELECT MIN(cnt) AS p99_cnt FROM cum, tot
-      WHERE cum_keys * 100 >= 99 * tot.k
-    ),
-    top1 AS (
-      SELECT l_partkey AS top_key, cnt AS top_cnt FROM kc
-      ORDER BY cnt DESC, l_partkey ASC LIMIT 1
-    )
-    SELECT t.n, t.k, t.max_cnt,
-           CAST(p.p99_cnt AS BIGINT) AS p99_cnt,
-           ROUND(CAST(t.max_cnt AS DOUBLE) * t.k / t.n, 9) AS skew_ratio,
-           CAST(tp.top_key AS BIGINT) AS top_key,
-           CAST(tp.top_cnt AS BIGINT) AS top_cnt
-    FROM tot t, p99 p, top1 tp
-    """,
-    doc=(
-        "Join-key skew diagnostics for l_partkey — the operational "
-        "report you run BEFORE choosing a join strategy at 100 TB: "
-        "total rows, distinct keys, the max and exact-p99 per-key "
-        "cardinalities, the max-to-mean skew ratio (AQE's skew-join "
-        "threshold reasoning made visible), and the heaviest key "
-        "(deterministic tie-break). The p99 is EXACT without sorting "
-        "keys: per-key counts collapse to a count-of-counts histogram "
-        "(bounded by the distinct cardinality values, tiny in "
-        "practice) and one bounded cumulative window finds the "
-        "smallest count covering 99% of keys — the same bounded-spine "
-        "discipline as the quantile machinery. One fact shuffle "
-        "(the key collapse, map-side combined); top-1 is a "
-        "TakeOrdered; the scalar spines crossJoin broadcast."
-    ),
-    tags=("qa", "skew", "operations"),
-)
-def qa_skew_report(spark, sf_dir):
-    from pyspark.sql import Window
-
-    kc = (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    hist = kc.groupBy("cnt").agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
-    # totals AND the cumulative rank live on the same bounded
-    # count-of-counts spine via one cumulative + one full-frame window
-    # (n = Σ cnt·n_keys, k = Σ n_keys): every scalar a separate
-    # aggregate branch would re-derive the fact scan for rides the
-    # single histogram pass — 2 lineitem scans total (this chain +
-    # the TakeOrdered top-key), down from 4
-    w_cum = Window.orderBy("cnt").rowsBetween(Window.unboundedPreceding, 0)
-    w_full = Window.orderBy("cnt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "cnt",
-        F.sum("n_keys").over(w_cum).cast("long").alias("cum_keys"),
-        F.sum(F.col("cnt") * F.col("n_keys"))
-        .over(w_full)
-        .cast("long")
-        .alias("n"),
-        F.sum("n_keys").over(w_full).cast("long").alias("k"),
-        F.max("cnt").over(w_full).cast("long").alias("max_cnt"),
-    )
-    p99 = cum.filter(F.col("cum_keys") * 100 >= 99 * F.col("k")).agg(
-        F.min("cnt").alias("p99_cnt"),
-        F.any_value("n").alias("n"),
-        F.any_value("k").alias("k"),
-        F.any_value("max_cnt").alias("max_cnt"),
-    )
-    top1 = (
-        kc.orderBy(F.col("cnt").desc(), F.col("l_partkey").asc())
-        .limit(1)
-        .select(
-            F.col("l_partkey").alias("top_key"), F.col("cnt").alias("top_cnt")
-        )
-    )
-    return (
-        p99
-        .crossJoin(F.broadcast(top1))
-        .select(
-            "n",
-            "k",
-            "max_cnt",
-            F.col("p99_cnt").cast("long").alias("p99_cnt"),
-            F.round(
-                F.col("max_cnt").cast("double") * F.col("k") / F.col("n"), 9
-            ).alias("skew_ratio"),
-            "top_key",
-            "top_cnt",
-        )
-    )
-
-
-@EXT.add(
-    "llm_dedup_jaccard_weighted",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w
-      FROM documents WHERE text IS NOT NULL
-    ),
-    bags AS (
-      SELECT doc_id,
-             UNNEST(list_transform(
-               range(1, greatest(len(w) - 1, 2)),
-               i -> array_to_string(w[i:i+2], ' ')
-             )) AS g
-      FROM tok
-    ),
-    counts AS (
-      SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c
-      FROM bags GROUP BY 1, 2
-    ),
-    totals AS (
-      SELECT doc_id, CAST(SUM(c) AS BIGINT) AS tot FROM counts GROUP BY 1
-    ),
-    posting AS (
-      SELECT c.doc_id, c.g, c.c, t.tot
-      FROM counts c JOIN totals t USING (doc_id)
-    ),
-    pairs AS (
-      SELECT a.doc_id AS a, b.doc_id AS b,
-             ANY_VALUE(a.tot) AS ta, ANY_VALUE(b.tot) AS tb,
-             CAST(SUM(LEAST(a.c, b.c)) AS BIGINT) AS m
-      FROM posting a JOIN posting b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT a, b, ta, tb, m,
-           CAST(m AS DOUBLE) / (ta + tb - m) AS wjaccard
-    FROM pairs WHERE CAST(m AS DOUBLE) / (ta + tb - m) >= 0.4
-    """,
-    doc=(
-        "WEIGHTED (multiset) 3-gram Jaccard near-dup pairs: "
-        "sum-of-min over sum-of-max of per-document gram COUNTS — the "
-        "bag-semantics refinement of llm_dedup_jaccard for documents "
-        "with heavy internal repetition, where set-Jaccard saturates "
-        "(a doc that repeats one paragraph 50x has the same gram SET "
-        "as one copy; the multiset ratio sees the difference — the "
-        "repetition-aware dedup signal llm_repetition_filter gates "
-        "on, applied pairwise). Identity Σmax = T_a + T_b − Σmin "
-        "turns the denominator into per-doc totals, so only SHARED "
-        "grams ever join: the inverted-index self-join posts one row "
-        "per DISTINCT (doc, gram) — exactly the set version's posting "
-        "cardinality, counts riding along — never the bag expansion. "
-        "All-integer counts; one IEEE division (no rounding needed — "
-        "single correctly-rounded op, the set version's convention). "
-        "Same trigram tokenization as the whole dedup family "
-        "(lowercase, whitespace split). Scale: the posting join is "
-        "gram-keyed (Zipf skew on hot grams — the containment "
-        "operator's posting-cap treatment applies unchanged at "
-        "100 TB); candidates at threshold come from LSH banding in "
-        "production (llm_dedup_near), this query IS the exact truth."
-    ),
-    tags=("llm", "dedup", "weighted"),
-)
-def llm_dedup_jaccard_weighted(spark, sf_dir):
-    docs = (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id", F.split(F.lower(F.col("text")), r"\s+").alias("__toks")
-        )
-    )
-    toks = F.col("__toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(2), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
-    )
-    # The gram Generate + per-doc count aggregate is the dominant cost
-    # and fed FOUR plan references before this revision (each leg's
-    # counts plus a totals re-derivation inside each leg's posting
-    # join): 4 document scans, 4 tokenize+gram explosions, no exchange
-    # reuse (the leg projections differ, so the subtrees never
-    # canonicalize equal). localCheckpoint the counts posting ONCE —
-    # the inverted-index persisted intermediate at production scale —
-    # and attach the doc-bounded totals to the AGGREGATED pair rows at
-    # the end instead of riding `tot` through the gram-keyed join
-    # (narrower join rows). Output identical: any_value(per-doc tot)
-    # == the joined per-doc total. Plan: 4 scans -> 1, Generate x4 ->
-    # x1; measurements in OPTIMIZATION_r13.md.
-    counts = (
-        docs.select("doc_id", F.explode(grams).alias("g"))
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    totals = counts.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("tot")
-    )
-    a = counts.select(
-        F.col("doc_id").alias("a"), "g", F.col("c").alias("ca")
-    )
-    b = counts.select(
-        F.col("doc_id").alias("b"), "g", F.col("c").alias("cb")
-    )
-    pairs = (
-        a.join(b, "g")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum(F.least("ca", "cb")).cast("long").alias("m"))
-    )
-    out = pairs.join(
-        F.broadcast(
-            totals.select(F.col("doc_id").alias("a"), F.col("tot").alias("ta"))
-        ),
-        "a",
-    ).join(
-        F.broadcast(
-            totals.select(F.col("doc_id").alias("b"), F.col("tot").alias("tb"))
-        ),
-        "b",
-    )
-    wj = F.col("m").cast("double") / (F.col("ta") + F.col("tb") - F.col("m"))
-    return out.select(
-        "a", "b", "ta", "tb", "m", wj.alias("wjaccard")
-    ).filter(wj >= 0.4)

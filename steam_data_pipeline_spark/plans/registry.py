@@ -4,7 +4,8 @@ Every SURVEY.md §2 operator ID maps here to a Spark program and (where
 SQL-expressible) a DuckDB oracle. ``__spark_entry__.py`` exposes this
 registry to the driver.
 
-``QUERIES`` is in registration order (CORE, ANALYTICS, EXT), and
+``QUERIES`` is in registration order (CORE, ANALYTICS, then the six
+family modules' ``EXT`` registries in the order listed below), and
 importing this module reads no file and fingerprints nothing.
 ``query_map()`` alone returns the queries in check-window order: a
 correctness run verifies a bounded prefix of the registry, so queries
@@ -26,10 +27,17 @@ import time
 from typing import Any, Callable, NamedTuple
 
 from steam_data_pipeline_spark.operators.caching import release_spines
+from steam_data_pipeline_spark.plans import (
+    agg,
+    llm_dedup,
+    llm_text,
+    qa,
+    stream_io,
+    win,
+)
 from steam_data_pipeline_spark.plans.analytics import ANALYTICS
 from steam_data_pipeline_spark.plans.base import Query, SparkQuery
 from steam_data_pipeline_spark.plans.core import CORE
-from steam_data_pipeline_spark.plans.extensions import EXT
 from steam_data_pipeline_spark.plans.fingerprint import query_fingerprint
 
 
@@ -85,7 +93,16 @@ def _driver_correctness_rows(
 
 
 QUERIES: dict[str, Query] = {}
-for reg in (CORE, ANALYTICS, EXT):
+for reg in (
+    CORE,
+    ANALYTICS,
+    llm_dedup.EXT,
+    stream_io.EXT,
+    llm_text.EXT,
+    agg.EXT,
+    win.EXT,
+    qa.EXT,
+):
     for name, q in reg.items():
         if name in QUERIES:
             raise ValueError(f"duplicate query {name} across registries")

@@ -70,3 +70,40 @@ def test_every_package_def_is_referenced():
                     f"({size} lines)"
                 )
     assert not dead, f"unreferenced package defs: {dead}"
+
+
+PLANS = PKG / "plans"
+MAX_PLANS_LINES = 4000
+
+
+def test_plans_modules_stay_small():
+    """Queries live in one module per family; no module in ``plans/``
+    grows back into a catch-all."""
+    sizes = {
+        p.name: len(p.read_text(encoding="utf-8").splitlines())
+        for p in sorted(PLANS.glob("*.py"))
+    }
+    big = {name: n for name, n in sizes.items() if n > MAX_PLANS_LINES}
+    assert not big, f"plans modules over {MAX_PLANS_LINES} lines: {big}"
+
+
+def test_plans_private_names_have_one_home():
+    """A private helper or constant is defined in exactly one ``plans/``
+    module; other modules import it from there instead of carrying a
+    copy (imports are not definitions)."""
+    homes: dict[str, list[str]] = {}
+    for path in sorted(PLANS.glob("*.py")):
+        names = set()
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names.update(
+                    n.id for tg in targets for n in ast.walk(tg) if isinstance(n, ast.Name)
+                )
+        for name in names:
+            if name.startswith("_"):
+                homes.setdefault(name, []).append(path.name)
+    dup = {n: ps for n, ps in sorted(homes.items()) if len(ps) > 1}
+    assert not dup, f"private names defined in more than one plans module: {dup}"

@@ -302,7 +302,7 @@ class TestRound4PlanContracts:
         threshold overrides active, InjectRuntimeFilter must put a
         might_contain predicate on the lineitem side (the registered
         query materializes under exactly these overrides)."""
-        from steam_data_pipeline_spark.plans.extensions import (
+        from steam_data_pipeline_spark.plans.stream_io import (
             _BLOOM_OVERRIDES,
             _bloom_join_plan,
             _conf_overrides,
@@ -709,7 +709,7 @@ class TestRound8PlanContracts:
         inputs carry an EventTimeWatermark and the join condition has
         the two-sided time range Spark derives eviction from — losing
         either silently turns the state store unbounded."""
-        from steam_data_pipeline_spark.plans.extensions import (
+        from steam_data_pipeline_spark.plans.stream_io import (
             _build_stream_stream_left_join,
         )
 
@@ -754,7 +754,7 @@ class TestRound8WavePlanContracts:
         """Full-outer stream-stream join: both EventTimeWatermarks and
         the two-sided range condition must survive into the analyzed
         plan (state is unbounded without either)."""
-        from steam_data_pipeline_spark.plans.extensions import (
+        from steam_data_pipeline_spark.plans.stream_io import (
             _read_events_stream,
         )
 
@@ -928,7 +928,7 @@ class TestRound8WavePlanContracts:
         in Append mode, with the full O(1) state struct (n, level,
         trend, 7 seasonals, 14-slot warmup buffer = 24 fields) — a
         schema drift here silently corrupts resumed checkpoints."""
-        from steam_data_pipeline_spark.plans.extensions import (
+        from steam_data_pipeline_spark.plans.stream_io import (
             _prepare_hw_stream_fixture,
         )
         from steam_data_pipeline_spark.streaming.stateful import (
@@ -1145,7 +1145,7 @@ class TestRound9PlanContracts:
         """The static dim must broadcast into every micro-batch (no
         stream-side shuffle join, no watermarked join state) and the
         stream leg must be a streaming relation."""
-        from steam_data_pipeline_spark.plans.extensions import (
+        from steam_data_pipeline_spark.plans.stream_io import (
             _build_stream_static_enrich,
         )
 

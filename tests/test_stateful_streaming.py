@@ -106,7 +106,7 @@ def test_stream_partition_precedence(spark, tmp_path, monkeypatch):
     without one the measured local default 4 applies."""
     from pyspark.sql.conf import RuntimeConfig
 
-    from steam_data_pipeline_spark.plans.extensions import _run_stream_to_memory
+    from steam_data_pipeline_spark.plans.stream_io import _run_stream_to_memory
 
     seen = []
     orig_set = RuntimeConfig.set
