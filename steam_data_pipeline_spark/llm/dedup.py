@@ -1616,9 +1616,12 @@ def suggest_editdist_q(
     knob that keeps it linear in corpus size is gram selectivity: the
     q-gram space grows ~|charset|^q while corpus gram occurrences grow
     only linearly in q, so raising q shortens posting lists
-    exponentially. (Measured on the 10× rehearsal corpus: q=5 40.3 s /
-    exponent 1.31 superlinear, q=7 8.6 s, q=9 5.4 s / exponent ≈0.4 —
-    identical output all three.) This helper picks the SMALLEST q in
+    exponentially. (Historical measurement on the 10× rehearsal corpus:
+    q=5 40.3 s / exponent 1.31 superlinear, q=7 8.6 s, q=9 5.4 s /
+    exponent ≈0.4 — identical output all three. No mode of
+    ``tools/scale_rehearsal.py`` re-runs this sweep, so neither it nor
+    ``mean_df_cap`` can be re-checked from the repo.) This helper picks
+    the SMALLEST q in
     ``qs`` whose mean posting length (distinct doc-gram rows ÷
     distinct gram values) is ≤ ``mean_df_cap``; the prefix uses the
     RAREST grams, so the mean is a conservative upper bound on prefix

@@ -20,8 +20,8 @@ these extend the LLM-curation north star):
   (whole-corpus) LM — ``log w(x) = Σ_features log(p_t(f)/p_b(f))``.
   Documents are then resampled ∝ exp(weight) to tilt the mix toward
   the target domain; we emit the log-weight (the resampling itself is
-  :func:`~steam_data_pipeline_spark.plans.extensions` sampling ops'
-  job).
+  the ``llm_dsir_resample`` query's job, in
+  :mod:`steam_data_pipeline_spark.plans.llm_text`).
 
 Determinism discipline (the repo-wide oracle contract):
 

@@ -29,7 +29,7 @@ the engine a deequ-style quality surface built Spark-first:
   IEEE-correctly-rounded across engines (unlike sqrt).
 
 All outputs are value-exact against a DuckDB oracle; see the qa_*
-queries in plans/extensions.py.
+queries in plans/qa.py.
 """
 
 from __future__ import annotations

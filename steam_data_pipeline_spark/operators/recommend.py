@@ -50,9 +50,11 @@ def _als_num_blocks(spark: SparkSession, sf_dir: str) -> int:
     """Size ALS's factor blocks from the INTERACTION SOURCE size, not a
     constant: blocks are the unit of the alternating-solve shuffles, so
     too few serialize the solve at scale and too many drown a small fit
-    in task overhead. Measured on the 30× rehearsal tier (18 M
-    interactions, local[32]): blocks 4/8/16/32 → 13.4/9.5/8.0/11.3 s
-    fit+score; at fixture scale (600 k): 4/8/16 → 1.4/1.5/2.7 s. One
+    in task overhead. Historical measurement, round 14, on the 30×
+    rehearsal tier (18 M interactions, local[32]): blocks 4/8/16/32 →
+    13.4/9.5/8.0/11.3 s fit+score; at fixture scale (600 k): 4/8/16 →
+    1.4/1.5/2.7 s. No mode of ``tools/scale_rehearsal.py`` re-runs this
+    sweep, so these numbers cannot be reproduced from the repo. One
     8 MiB-of-lineitem per block tracks both optima (sf0.1 → 4 via the
     floor, 30× → ~13) and keeps growing with the input on a real
     cluster, capped at the session's parallelism. The size is

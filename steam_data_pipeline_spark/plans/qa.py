@@ -589,8 +589,7 @@ def qa_psi_drift(spark, sf_dir):
         "reproducible across engines, retries and partitionings — the "
         "property that makes a weighted sample usable as a pinned "
         "training subset. Plan: one scan, one hash-partitioned window "
-        "per source (no global sort); at 100 TB swap the window for "
-        "the per-partition-top-k + merge the rehearsal tool uses."
+        "per source (no global sort)."
     ),
     tags=("sampling", "window"),
 )

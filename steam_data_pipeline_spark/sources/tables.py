@@ -108,7 +108,7 @@ def _freshness_token(path: str) -> tuple:
 # clones share one applicationId but MUST NOT share DataFrames —
 # qa_observe_metrics isolates its Observation on a cloned session
 # precisely so the registration cannot poison the parent session's
-# closure serialization (see plans/extensions.py qa_observe_metrics),
+# closure serialization (see plans/qa.py qa_observe_metrics),
 # and an appId-keyed memo was observed to defeat that isolation
 # (llm_quality_model's localCheckpoint failing with
 # NotSerializableException: ObservationManager). Attribute lifetime ==
