@@ -93,16 +93,8 @@ def _driver_correctness_rows(
 
 
 QUERIES: dict[str, Query] = {}
-for reg in (
-    CORE,
-    ANALYTICS,
-    llm_dedup.EXT,
-    stream_io.EXT,
-    llm_text.EXT,
-    agg.EXT,
-    win.EXT,
-    qa.EXT,
-):
+for reg in (CORE, ANALYTICS, llm_dedup.EXT, stream_io.EXT, llm_text.EXT,
+            agg.EXT, win.EXT, qa.EXT):
     for name, q in reg.items():
         if name in QUERIES:
             raise ValueError(f"duplicate query {name} across registries")
